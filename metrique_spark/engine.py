@@ -117,6 +117,16 @@ def _is_swept_read_error(exc: BaseException) -> bool:
             or "FileNotFound" in s)
 
 
+def _old_format_error(path: str, what: str) -> ValueError:
+    """The one refusal for a cube in an older on-disk format. A
+    ValueError, so callers that rebuild on ValueError treat the cube
+    like any other unusable leftover."""
+    return ValueError(
+        f"cube at {path!r} is in an older on-disk format ({what}); this "
+        "engine reads only a format-2 _layout.json plus a manifest root "
+        "that carries a schema — rebuild the cube")
+
+
 class Engine:
     # sentinel default for compact()/compact_vector_index()'s
     # ``small_bytes``: "use the engine's compact_small_bytes threshold"
@@ -269,7 +279,8 @@ class Engine:
         # upsert's auto-compact runs inside the upsert's lock)
         self._held_locks: set[str] = set()
         # per-directory byte sizes measured by the fs.du FALLBACK for
-        # dirs a pre-upgrade manifest never sized. Token-keyed batch
+        # dirs whose size _record_sizes could not measure at commit
+        # time (it swallows du errors). Token-keyed batch
         # dirs are immutable once written, so caching is sound; the
         # next manifest flip backfills these into the persisted stats
         # (see _merged_stats) so the walk is paid once per dir EVER,
@@ -349,8 +360,9 @@ class Engine:
         silently mixing generations; the engine's materializing readers
         — ``count``/``find_one``/``find_scalar``/``get_last_field``/
         ``deptree`` — and the plan-time read below auto-retry ONCE from
-        a fresh manifest resolution, then fail loud.) Legacy cubes (no
-        manifest) fall back to the root-listing read.
+        a fresh manifest resolution, then fail loud.) A cube with no
+        committed generation raises ValueError; one in an older on-disk
+        format raises ``_cube_state``'s refusal.
 
         ``bucket_values`` prunes the DIRECTORY LIST handed to the
         reader to the dirs whose path-encoded ``__obucket`` value is in
@@ -366,19 +378,16 @@ class Engine:
         df = None
         for attempt in (0, 1):
             meta = self._manifest(path)
-            if generation is not None and meta is None:
-                raise ValueError(
-                    f"cube at {path!r} has no generation manifest — "
-                    "time-travel reads need a manifested cube")
             if meta is None:
-                df = self.spark.read.parquet(path)
-                break
+                self._cube_state(path)  # refuses an older on-disk format
+                raise ValueError(
+                    f"cube at {path!r} has no committed generation")
             if generation is None or generation == meta["gen"]:
-                dirs, schema = meta["dirs"], meta.get("schema")
+                dirs, schema = meta["dirs"], meta["schema"]
             else:
                 for h in meta.get("history", []):
                     if h["gen"] == generation:
-                        dirs, schema = h["dirs"], h.get("schema")
+                        dirs, schema = h["dirs"], h["schema"]
                         break
                 else:
                     have = [meta["gen"]] + [h["gen"]
@@ -393,22 +402,20 @@ class Engine:
                     f"cube manifest at {path!r} lists no data directories")
             dirs = self._prune_by_end_stats(meta, dirs, min_end,
                                             start_upper)
-            if bucket_values is not None and schema is not None:
-                # schema gate: the empty-prune shortcut needs an
-                # authoritative schema to build the zero-row frame from
+            if bucket_values is not None:
                 dirs = self._prune_dirs_by_bucket(dirs, bucket_values)
                 if not dirs:
                     df = self._empty_schema_frame(schema)
                     break
             try:
-                reader = self.spark.read.option("basePath", path)
-                if schema is not None:
-                    # the generation's authoritative schema: no footer
-                    # sampling at plan time, and files written before a
-                    # column evolved in read back as typed nulls
-                    from pyspark.sql.types import StructType
-                    reader = reader.schema(StructType.fromJson(schema))
-                df = reader.parquet(*[self.fs.join(path, d) for d in dirs])
+                # the generation's authoritative schema: no footer
+                # sampling at plan time, and files written before a
+                # column evolved in read back as typed nulls
+                from pyspark.sql.types import StructType
+
+                df = (self.spark.read.option("basePath", path)
+                      .schema(StructType.fromJson(schema))
+                      .parquet(*[self.fs.join(path, d) for d in dirs]))
                 break
             except Exception as e:
                 # the swept-generation race at PLAN time: our manifest
@@ -432,13 +439,11 @@ class Engine:
         uniquely. Same basePath/schema contract as ``_read_raw``; safe
         under the writer lease (no concurrent sweep can race the
         listed paths)."""
-        reader = self.spark.read.option("basePath", path)
-        schema = meta.get("schema")
-        if schema is not None:
-            from pyspark.sql.types import StructType
+        from pyspark.sql.types import StructType
 
-            reader = reader.schema(StructType.fromJson(schema))
-        df = reader.parquet(*[self.fs.join(path, d) for d in rels])
+        df = (self.spark.read.option("basePath", path)
+              .schema(StructType.fromJson(meta["schema"]))
+              .parquet(*[self.fs.join(path, d) for d in rels]))
         if "_current" in df.columns:
             df = df.withColumn("_current",
                                F.col("_current").cast("boolean"))
@@ -494,21 +499,17 @@ class Engine:
     def _manifest_oid_dtype(self, path: str,
                             generation: int | None = None):
         """The stored ``_oid`` dtype from the (cached) manifest schema
-        of the requested generation, or None when the cube predates
-        manifest schemas — lets a point lookup resolve its bucket
-        values BEFORE the read so the directory list itself prunes.
-        Unknown generations return None here; ``_read_raw`` raises the
-        canonical error."""
+        of the requested generation — lets a point lookup resolve its
+        bucket values BEFORE the read so the directory list itself
+        prunes. Unknown generations (and uncommitted cubes) return None
+        here; ``_read_raw`` raises the canonical error."""
         meta = self._manifest(path)
         if meta is None:
             return None
-        sch = meta.get("schema")
+        sch = meta["schema"]
         if generation is not None and generation != meta["gen"]:
-            sch = None
-            for h in meta.get("history", []):
-                if h["gen"] == generation:
-                    sch = h.get("schema")
-                    break
+            sch = next((h["schema"] for h in meta.get("history", [])
+                        if h["gen"] == generation), None)
         if sch is None:
             return None
         from pyspark.sql.types import StructType
@@ -538,8 +539,8 @@ class Engine:
         before L cannot contribute; when it requires ``_start < U``, a
         directory whose earliest ``_start`` is already >= U cannot
         either — skip them before the scan ever lists their files
-        (works on ANY manifested cube; the ``__stime`` layout adds the
-        same start prune at period granularity for legacy-stats cubes).
+        (the ``__stime`` layout adds the same start prune at period
+        granularity).
         Open directories without a max_end stat, directories without a
         recorded stat, and stats recorded under a different session
         timezone are always kept (skipped-not-wrong). If everything is
@@ -671,9 +672,7 @@ class Engine:
 
         The dropped name + type is recorded in a registry sidecar and
         the name may only ever be re-added at the SAME type (see
-        ``_check_redrop``). System/partition columns can't drop; legacy
-        (pre-manifest) cubes can't drop — their footer-inferred read
-        has no authoritative schema to edit."""
+        ``_check_redrop``). System/partition columns can't drop."""
         import json
 
         from pyspark.sql.types import StructType
@@ -689,17 +688,10 @@ class Engine:
         path = self._path(cube)
         with self._write_lock(cube):
             state, meta, raw = self._cube_state(path)
-            if state == "premanifest":
-                meta, raw = self._adopt_premanifest(path)
-            elif state != "manifest":
+            if state != "manifest":
                 raise ValueError(
                     f"cube {cube!r} is {state} — drop_column needs a "
-                    "generation-manifested cube with a recorded schema")
-            if meta.get("schema") is None:
-                raise ValueError(
-                    f"cube {cube!r}'s manifest predates per-generation "
-                    "schemas — run any commit (e.g. compact) to record "
-                    "one, then drop")
+                    "committed cube")
             sch = StructType.fromJson(meta["schema"])
             hit = [f for f in sch.fields if f.name == col]
             if not hit:
@@ -886,14 +878,11 @@ class Engine:
         with self._write_lock(cube):
             meta = self._manifest(path)
             if meta is None:
-                # staleness detection rides the generation pointer; a
-                # legacy in-place cube has none, so gen would stay None
-                # forever and the stale check could never fire — the
-                # silent-stale failure this API exists to prevent
+                # staleness detection rides the generation pointer: an
+                # index over an uncommitted cube has no gen to pin
                 raise ValueError(
-                    f"cube {cube!r} has no generation manifest — vector "
-                    "indexes need a manifested cube (any new commit "
-                    "adopts a pre-manifest cube automatically)")
+                    f"cube {cube!r} has no committed generation — build "
+                    "vector indexes after the first commit")
             gen = meta["gen"]
             # _current is the partition column (== _end IS NULL by
             # construction): filtering on it prunes every closed history
@@ -1110,11 +1099,7 @@ class Engine:
         Diffing against index content needs no retained generation and
         is self-healing: whatever state the index data is in (drift,
         duplicate ids from raw appends), one refresh converges it to
-        exactly the live (id, vector) set under the frozen model. Only
-        a legacy fingerprint-less PQ index falls back to time-traveling
-        the cube to its indexed generation (then
-        ``Engine(keep_generations=...)`` applies — or rebuild once to
-        gain the fingerprint layout).
+        exactly the live (id, vector) set under the frozen model.
 
         Removal-by-rewrite instead of read-side tombstone filtering is
         deliberate: a tombstone anti-join would tax EVERY future search
@@ -1159,22 +1144,15 @@ class Engine:
             # duplicate ids possible). Run the full diff anyway: it
             # converges either state and the intent is cleaned at the end.
             id_col, vec_col = m["id_col"], m["vec_col"]
-
-            def _cur(df: DataFrame) -> DataFrame:
-                if "_current" in df.columns:
-                    return df.where(F.col("_current"))
-                return df.where(F.col("_end").isNull())
-
-            newc = _cur(self._read(path)).select(id_col, vec_col)
+            newc = (self._read(path).where(F.col("_current"))
+                    .select(id_col, vec_col))
             apath0 = self._ann_path(cube, name)
             # diff the live corpus against the INDEX'S OWN CONTENT —
             # IVF stores raw vectors (compare directly); the PQ families
             # store a per-row vector fingerprint (__vh, see
             # similarity._vh) — so no retained generation is needed and
             # the refresh is self-healing (a drifted or double-appended
-            # id converges back to exactly the live row). Only a legacy
-            # fingerprint-less PQ index falls back to time-traveling the
-            # cube to the indexed generation.
+            # id converges back to exactly the live row)
             pmeta = None
             if m["kind"] == "ivf":
                 idx = (self.spark.read.parquet(apath0 + "/vectors")
@@ -1186,21 +1164,10 @@ class Engine:
             else:
                 codes, pmeta = _sim.read_pq_index(self.spark, apath0,
                                                   fs=self.fs)
-                if pmeta.get("vh"):
-                    idx = codes.select(F.col(id_col).alias("__iid"),
-                                       F.col("__vh").alias("__ivh"))
-                    same = ((F.col(id_col) == F.col("__iid"))
-                            & (_sim._vh(vec_col) == F.col("__ivh")))
-                else:
-                    # pre-fingerprint layout: codes can't be compared to
-                    # vectors, so diff against the retained generation —
-                    # raises with the keep_generations hint when swept
-                    # (rebuild once to gain the fingerprint layout)
-                    idx = (_cur(self._read(path, generation=m["gen"]))
-                           .select(F.col(id_col).alias("__iid"),
-                                   F.col(vec_col).alias("__iv")))
-                    same = ((F.col(id_col) == F.col("__iid"))
-                            & F.col(vec_col).eqNullSafe(F.col("__iv")))
+                idx = codes.select(F.col(id_col).alias("__iid"),
+                                   F.col("__vh").alias("__ivh"))
+                same = ((F.col(id_col) == F.col("__iid"))
+                        & (_sim._vh(vec_col) == F.col("__ivh")))
             # changed/new: live rows with no identical (id, vec) in the
             # index; superseded: indexed entries no longer matching a
             # live row — a changed id lands in both (remove + re-append)
@@ -1550,16 +1517,15 @@ class Engine:
 
     def _cube_layout(self, path: str) -> dict | None:
         """The cube's recorded layout sidecar (oid-bucket count + time
-        partition), or None for the legacy unsidecared
-        ``(_current, __batch)`` layout. Writers must use the RECORDED
-        values — bucketing with a different modulus or a different
-        period key would prune the wrong directories on a later
-        history import.
+        partition), or None when absent (no cube yet — or data in an
+        older format, which ``_cube_state`` refuses). Writers must use
+        the RECORDED values — bucketing with a different modulus or a
+        different period key would prune the wrong directories on a
+        later history import.
 
-        An unreadable sidecar raises instead of falling back to legacy:
-        a writer that silently treated a bucketed cube as legacy would
-        append mixed partition levels and corrupt the cube — only a
-        genuinely ABSENT sidecar means legacy layout."""
+        An unreadable sidecar raises instead of reading as absent: a
+        writer that silently treated a bucketed cube as unbucketed would
+        append mixed partition levels and corrupt the cube."""
         import json
 
         p = self.fs.join(path, self._LAYOUT_SIDECAR)
@@ -1570,14 +1536,13 @@ class Engine:
         except ValueError as e:
             raise RuntimeError(
                 f"unreadable layout sidecar {p!r}: {e} — refusing to "
-                "fall back to the legacy layout (mixed partition "
-                "levels would corrupt the cube); repair or remove "
-                "the sidecar explicitly") from e
+                "guess the layout (mixed partition levels would "
+                "corrupt the cube); repair the sidecar explicitly") from e
         if not isinstance(meta, dict):
             raise RuntimeError(
                 f"layout sidecar {p!r} is not a JSON object "
-                f"(got {type(meta).__name__}) — refusing legacy "
-                "fallback; repair or remove the sidecar explicitly")
+                f"(got {type(meta).__name__}) — refusing to guess the "
+                "layout; repair the sidecar explicitly")
         need = meta.get("min_format", 0)
         if need > self._SUPPORTED_LAYOUT_FORMAT:
             raise RuntimeError(
@@ -1636,15 +1601,7 @@ class Engine:
             for h in meta.get("history", []):
                 if h["gen"] == generation:
                     buckets = h.get("oid_buckets", sidecar)
-                    if "moduli" in h:
-                        mods = set(h["moduli"])
-                    else:
-                        # pre-blocks history entries recorded the whole
-                        # migration dict (single doubling)
-                        legacy = h.get("migration")
-                        if isinstance(legacy, dict):
-                            legacy = [legacy]
-                        mods = {b["from"] for b in (legacy or [])}
+                    mods = set(h.get("moduli", ()))
                     break
             else:
                 return None, []
@@ -1692,9 +1649,9 @@ class Engine:
         # "format": 2 marks a sidecar written under the generation-
         # pointer protocol, whose commit point is the MANIFEST flip — so
         # sidecar-without-manifest means a crashed (uncommitted) first
-        # write. A format-less sidecar predates the protocol: its data
-        # was committed by the data write itself and must be ADOPTED on
-        # the next write, never retried-as-new (which would sweep it).
+        # write. Data under a format-less sidecar is an older format:
+        # _cube_state refuses it, never retries it as new (which would
+        # sweep it).
         meta: dict = {"oid_buckets": buckets, "format": 2}
         if buckets:
             # bucketed cubes commit SEGMENTED manifests from the first
@@ -1714,8 +1671,8 @@ class Engine:
         before the manifest flip. Normally the NEXT commit sweeps them;
         ``vacuum`` does it on demand (e.g. after a failed bulk import
         on a rarely-written cube) without advancing the generation.
-        Runs under the writer lease; no-op on legacy cubes (their
-        listing IS the data). Also sweeps UNCOMMITTED vector-index
+        Runs under the writer lease; refuses a cube in an older on-disk
+        format (``_cube_state``). Also sweeps UNCOMMITTED vector-index
         directories — a ``_ann_*`` dir without its ``_ann.json`` marker
         is a crashed BUILD (the build writes its marker last), dead
         weight no search can ever use. A crashed REFRESH/compaction is
@@ -1757,13 +1714,12 @@ class Engine:
                         self.fs.delete_dir(self.fs.join(path, d))
             meta = self._manifest(path)
             if meta is None:
-                state, _, _ = self._cube_state(path)
-                if state == "new" and self.fs.isdir(path):
+                self._cube_state(path)  # refuses an older on-disk format
+                if self.fs.isdir(path):
                     # crashed FIRST write (format-2 sidecar, no
                     # manifest): nothing is committed, every data dir
                     # is stranded — sweep them all
                     self._sweep_unreferenced(path, set())
-                # legacy / premanifest: the listing IS the data
                 return
             self._sweep_unreferenced(path, self._retained_dirs(meta))
             root = self._manifest_root(path)
@@ -1995,12 +1951,10 @@ class Engine:
         with self._write_lock(cube):
             path = self._path(cube)
             state, meta, raw = self._cube_state(path)
-            if state == "premanifest":
-                meta, raw = self._adopt_premanifest(path)
-            elif state != "manifest":
+            if state != "manifest":
                 raise ValueError(
                     f"cube {cube!r} is {state} — rebucket needs a "
-                    "generation-manifested cube")
+                    "committed cube")
             layout = self._cube_layout(path) or {}
             if (self._live_buckets(meta, layout) == oid_buckets
                     and not meta.get("migration")):
@@ -2049,7 +2003,7 @@ class Engine:
                                 stats=self._merged_stats(
                                     meta, new_rels, dirs, hist,
                                     path=path),
-                                schema=meta.get("schema"),
+                                schema=meta["schema"],
                                 oid_buckets=oid_buckets,
                                 migration=None)
             self._sync_layout_after_rebucket(path, layout, oid_buckets)
@@ -2119,12 +2073,10 @@ class Engine:
         with self._write_lock(cube):
             path = self._path(cube)
             state, meta, raw = self._cube_state(path)
-            if state == "premanifest":
-                meta, raw = self._adopt_premanifest(path)
-            elif state != "manifest":
+            if state != "manifest":
                 raise ValueError(
                     f"cube {cube!r} is {state} — rebucket needs a "
-                    "generation-manifested cube")
+                    "committed cube")
             layout = self._cube_layout(path) or {}
             cur = self._live_buckets(meta, layout)
             blocks = meta.get("migration") or []
@@ -2161,7 +2113,7 @@ class Engine:
                 path, raw, gen, set(meta["dirs"]), hist,
                 stats=self._merged_stats(meta, None, set(meta["dirs"]),
                                          hist, path=path),
-                schema=meta.get("schema"),
+                schema=meta["schema"],
                 oid_buckets=oid_buckets,
                 migration=({"from": cur, "old_dirs": old_dirs}
                            if old_dirs else Engine._CARRY))
@@ -2274,7 +2226,7 @@ class Engine:
                                 stats=self._merged_stats(
                                     meta, new_rels, dirs, hist,
                                     path=path),
-                                schema=meta.get("schema"))
+                                schema=meta["schema"])
             self._sweep_dropped(
                 path, meta, dirs | {d for h in hist for d in h["dirs"]})
             self._auto_refresh_indexes(cube)
@@ -2331,8 +2283,8 @@ class Engine:
                        raw: str | None = None) -> dict | None:
         """Parse (only) the manifest ROOT sidecar — O(segments), not
         O(dirs): enough for describe()/metadata-count rollups and the
-        CAS protocol. ``_manifest`` assembles the full legacy-shaped
-        dict from it."""
+        CAS protocol. ``_manifest`` assembles the full flat dict from
+        it. A root without a ``schema`` is an older format: refused."""
         import json
 
         if raw is None:
@@ -2350,6 +2302,8 @@ class Engine:
             raise RuntimeError(
                 f"malformed cube manifest in {path!r} — refusing to fall "
                 "back to a listing read")
+        if root.get("schema") is None:
+            raise _old_format_error(path, "manifest root without a schema")
         return root
 
     @classmethod
@@ -2379,11 +2333,10 @@ class Engine:
         return seg
 
     def _assemble(self, path: str, root: dict) -> dict:
-        """The legacy-shaped manifest dict every consumer reads —
+        """The flat manifest dict every consumer reads —
         ``{gen, dirs, stats, schema, oid_buckets, history, migration}``
-        — assembled from a segmented root (or passed through for a
-        pre-segmentation monolithic one, with the single-block
-        ``migration`` dict normalized to the blocks list). Wall-clock
+        — assembled from a segmented root (or copied from a monolithic
+        one: unbucketed cubes have no segments). Wall-clock
         stats (``max_end``/``min_start``) are taken only from segments
         recorded under the root's commit timezone — same skipped-not-
         wrong contract as the monolithic ``stats.tz``; byte/row stats
@@ -2392,11 +2345,7 @@ class Engine:
         ``[{"from": N, "old_dirs": [...]}, ...]`` (oldest modulus
         first) — the shape every merge/drain path consumes."""
         if root.get("format", 0) < 4:
-            meta = dict(root)
-            mig = meta.get("migration")
-            if isinstance(mig, dict):
-                meta["migration"] = [mig]
-            return meta
+            return dict(root)
         tz = root.get("tz")
         dirs: list[str] = []
         me: dict = {}
@@ -2427,7 +2376,7 @@ class Engine:
 
         dirs = fold(root.get("segs") or {}, live=True)
         meta: dict = {"gen": root["gen"], "format": 4,
-                      "dirs": sorted(dirs)}
+                      "dirs": sorted(dirs), "schema": root["schema"]}
         hist_out: list[dict] = []
         for h in root.get("history", []):
             e = {k: h[k] for k in ("gen", "oid_buckets", "moduli",
@@ -2445,8 +2394,6 @@ class Engine:
             if rw:
                 st_out["rows"] = rw
             meta["stats"] = st_out
-        if "schema" in root:
-            meta["schema"] = root["schema"]
         if "oid_buckets" in root:
             meta["oid_buckets"] = root["oid_buckets"]
         if "rollup" in root:
@@ -2491,13 +2438,13 @@ class Engine:
             self._meta_cache[path] = (raw, meta)
             return meta
 
-    def _push_history(self, meta: dict | None, keep: int) -> list[dict]:
+    def _push_history(self, meta: dict, keep: int) -> list[dict]:
         """History entries for the NEXT manifest: the superseded current
         generation first, then the previously retained ones, truncated
         to ``keep`` — the CUBE's recorded retention (layout sidecar),
         not this writer's config, so a maintenance engine with default
         settings cannot silently truncate pinned snapshots."""
-        if not keep or meta is None:
+        if not keep:
             return []
         cur: dict = {"gen": meta["gen"], "dirs": meta["dirs"]}
         if "oid_buckets" in meta:
@@ -2514,12 +2461,11 @@ class Engine:
             # needed for reads — only the moduli)
             cur["moduli"] = sorted({b["from"]
                                     for b in meta["migration"]})
-        if meta.get("schema") is not None:
-            # each retained generation keeps ITS OWN read schema: after a
-            # schema evolution, a time-travel read of an old snapshot
-            # must reproduce exactly the frame a job saw then — not the
-            # union schema with phantom null columns
-            cur["schema"] = meta["schema"]
+        # each retained generation keeps ITS OWN read schema: after a
+        # schema evolution, a time-travel read of an old snapshot must
+        # reproduce exactly the frame a job saw then — not the union
+        # schema with phantom null columns
+        cur["schema"] = meta["schema"]
         # entry dicts are COPIED: callers may stamp fields into them
         # (_backfill_history_buckets), and the assembled manifest they
         # came from is cached and shared (see _manifest)
@@ -2527,12 +2473,10 @@ class Engine:
         return hist[:keep]
 
     @staticmethod
-    def _retained_dirs(meta: dict | None) -> set[str]:
+    def _retained_dirs(meta: dict) -> set[str]:
         """Directories referenced by any RETAINED generation (current +
         history) — the set no writer may overwrite and no sweep may
         delete."""
-        if meta is None:
-            return set()
         dirs = set(meta["dirs"])
         for h in meta.get("history", []):
             dirs.update(h["dirs"])
@@ -2578,8 +2522,8 @@ class Engine:
         retained = set(dirs) | {d for h in (history or [])
                                 for d in h["dirs"]}
         if path is not None:
-            # backfill du-fallback measurements for retained dirs a
-            # pre-upgrade manifest never sized — persisting them here
+            # backfill du-fallback measurements for retained dirs the
+            # manifest holds no size for — persisting them here
             # makes the fallback walk a once-per-dir cost, not
             # once-per-compaction-trigger
             for d in retained:
@@ -2610,8 +2554,8 @@ class Engine:
     def _manifest_flip(self, path: str, old_raw: str | None,
                        gen: int, dirs: set[str],
                        history: list[dict] | None = None,
-                       stats: dict | None = None,
-                       schema: dict | None = None,
+                       stats: dict | None = None, *,
+                       schema: dict,
                        oid_buckets: int | None | object = _CARRY,
                        migration: dict | None | object = _CARRY) -> None:
         """The commit point: ONE atomic pointer write. CAS against the
@@ -2707,8 +2651,7 @@ class Engine:
                 body["history"] = history
             if stats:
                 body["stats"] = stats
-            if schema is not None:
-                body["schema"] = schema
+            body["schema"] = schema
         new = json.dumps(body)
         p = self.fs.join(path, self._MANIFEST_SIDECAR)
         if old_raw is None:
@@ -2742,7 +2685,7 @@ class Engine:
     def _flip_build_segmented(self, path: str, prior_root: dict,
                               gen: int, dirs: set[str],
                               history: list[dict] | None,
-                              stats: dict | None, schema: dict | None,
+                              stats: dict | None, schema: dict,
                               stamps: dict[str, int],
                               body: dict) -> None:
         """Build the format-4 root ``body`` in place and write the
@@ -2807,8 +2750,7 @@ class Engine:
         body["format"] = 4
         body["tz"] = tz
         body["segs"] = seg_refs
-        if schema is not None:
-            body["schema"] = schema
+        body["schema"] = schema
         hist_out: list[dict] = []
         for h in history or []:
             e = {k: h[k] for k in ("gen", "oid_buckets", "moduli",
@@ -2821,8 +2763,8 @@ class Engine:
                         e["segs"] = ph["segs"]
                         break
                 else:
-                    # format upgrade / adopted cube: no prior segment
-                    # refs exist for this generation — inline its dirs
+                    # format upgrade: no prior segment refs exist for
+                    # this generation — inline its dirs
                     e["dirs"] = h["dirs"]
             hist_out.append(e)
         if hist_out:
@@ -2904,7 +2846,7 @@ class Engine:
                 self.fs.delete(full)
                 self._seg_cache.pop(full, None)
 
-    def _sweep_dropped(self, path: str, prior_meta: dict | None,
+    def _sweep_dropped(self, path: str, prior_meta: dict,
                        keep: set[str]) -> None:
         """Post-commit sweep WITHOUT LISTING: the directories this
         commit retired are exactly (what the prior manifest retained)
@@ -2935,9 +2877,9 @@ class Engine:
         """Delete data directories the live manifest does not reference
         — superseded OR stranded by crashed attempts. This is the
         LISTING sweep: it walks the cube's directory tree, so it runs
-        only where that is cheap or necessary (first write, premanifest
-        adoption, ``vacuum``); ordinary commits use ``_sweep_dropped``,
-        which needs no listing. Runs under the writer lease — only the
+        only where that is cheap or necessary (first write,
+        ``vacuum``); ordinary commits use ``_sweep_dropped``, which
+        needs no listing. Runs under the writer lease — only the
         writer lists; readers never do."""
         def walk(dirpath: str, rel: str) -> None:
             for d in self.fs.listdir(dirpath):
@@ -3103,26 +3045,6 @@ class Engine:
         return StructType(fields).jsonValue()
 
     @staticmethod
-    def _refuse_legacy_evolution(table: DataFrame, incoming: DataFrame,
-                                 meta: dict | None) -> None:
-        """Schema evolution needs the manifest's authoritative read
-        schema — on a legacy (listing-read) cube, files with different
-        footer schemas read back nondeterministically (Spark picks one
-        footer unless mergeSchema), so refuse new columns there instead
-        of silently writing an unreadable mix."""
-        if meta is not None:
-            return
-        new = [c for c in incoming.columns
-               if c not in table.columns and c != "_current"]
-        if new:
-            raise ValueError(
-                f"incoming batch adds column(s) {sorted(new)} but the "
-                "cube predates the generation manifest — legacy cubes "
-                "cannot evolve schema (their footer-inferred read would "
-                "be nondeterministic); drop the columns or rebuild the "
-                "cube under the manifested layout")
-
-    @staticmethod
     def _align_incoming(table: DataFrame, incoming: DataFrame,
                         evolve: bool) -> tuple[DataFrame, DataFrame, list[str]]:
         """Schema-align a write batch against the stored cube: missing
@@ -3202,19 +3124,13 @@ class Engine:
         return w
 
     def _write_partitioned(
-        self, df: DataFrame, path: str, mode: str, dynamic: bool = True,
-        buckets: int | None = None, open_batch: str = "open",
-        hist_batch: str = "hist", collect_dirs: bool = False,
-        timepart: str | None = None,
-    ) -> dict[str, dict[str, str | None]] | None:
+        self, df: DataFrame, path: str, buckets: int | None,
+        open_batch: str, hist_batch: str, timepart: str | None = None,
+    ) -> dict[str, dict[str, str | None]]:
         out = df.withColumn("_current", F.col("_end").isNull())
-        # second-level __batch partition key: open rows live in one fixed
-        # partition; closed (history) rows land in per-upsert-batch
-        # directories keyed by a content token, which is what makes the
-        # snapshot upsert's closed-row write idempotent (see upsert below).
-        # Manifested cubes pass generation-scoped batch names so every
-        # commit writes FRESH directories (never ones a live manifest
-        # references).
+        # second-level __batch partition key: callers pass
+        # generation-scoped batch names so every commit writes FRESH
+        # directories (never ones a live manifest references).
         out = out.withColumn(
             "__batch",
             F.when(F.col("_current"), F.lit(open_batch))
@@ -3225,13 +3141,12 @@ class Engine:
         if timepart:
             out = out.withColumn("__stime", self._stime_col(timepart))
         (
-            self._cube_writer(out).mode(mode)
+            self._cube_writer(out).mode("overwrite")
             .partitionBy(*self._partition_keys(buckets, timepart))
-            .option("partitionOverwriteMode", "dynamic" if dynamic else "static")
+            .option("partitionOverwriteMode", "dynamic")
             .parquet(path)
         )
-        return (self._written_dir_stats(out, buckets, timepart)
-                if collect_dirs else None)
+        return self._written_dir_stats(out, buckets, timepart)
 
     def _batch_token(self, closed: DataFrame) -> str | None:
         """Deterministic content token for a closed-row batch, or None
@@ -3252,20 +3167,20 @@ class Engine:
         return f"n{tok['n']}x{tok['s']}"
 
     def _write_closed_batch(
-        self, closed: DataFrame, path: str, buckets: int | None = None,
-        live: set[str] | None = None, timepart: str | None = None,
-    ) -> tuple[str | None, dict[str, dict[str, str | None]]]:
+        self, closed: DataFrame, path: str, buckets: int | None,
+        live: set[str], timepart: str | None = None,
+    ) -> dict[str, dict[str, str | None]]:
         """Write newly-closed rows into a history partition keyed by a
         deterministic content token: retrying the same merge overwrites the
-        SAME directory instead of appending duplicates. Returns the token
-        and the per-directory stats (relpath -> max(_end)) of the
-        directories holding it. When ``live`` manifest dirs are given and
-        the token's directories are ALREADY referenced (re-upserting
-        byte-identical content), the write is skipped — overwriting a
-        live directory would tear a concurrent reader."""
+        SAME directory instead of appending duplicates. Returns the
+        per-directory stats (relpath -> max(_end)) of the directories
+        holding it. When the token's directories are ALREADY among the
+        ``live`` (retained) manifest dirs (re-upserting byte-identical
+        content), the write is skipped — overwriting a live directory
+        would tear a concurrent reader."""
         token = self._batch_token(closed)
         if token is None:
-            return None, {}
+            return {}
         out = (closed.withColumn("_current", F.lit(False))
                .withColumn("__batch", F.lit(token)))
         if buckets:
@@ -3273,32 +3188,31 @@ class Engine:
         if timepart:
             out = out.withColumn("__stime", self._stime_col(timepart))
         rels = self._written_dir_stats(out, buckets, timepart)
-        if live is not None and rels:
+        if rels:
             if set(rels) <= live:
-                return token, rels
+                return rels
             if any(self._batch_dir_token(d) == token for d in live):
                 # identical content already committed under ANOTHER
                 # modulus's directories (re-upsert of a byte-identical
                 # batch during a doubling migration): keep the existing
                 # copy referenced instead of writing a second one the
                 # reads would double-count
-                return token, {}
+                return {}
         (
             self._cube_writer(out).mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*self._partition_keys(buckets, timepart))
             .parquet(path)
         )
-        return token, rels
+        return rels
 
     def _write_open(self, new_open: DataFrame, path: str,
-                    buckets: int | None = None,
-                    open_batch: str = "open",
+                    buckets: int | None, open_batch: str,
                     timepart: str | None = None
                     ) -> dict[str, dict[str, str | None]]:
-        """Dynamically overwrite the open partition(s). Manifested cubes
-        pass a generation-scoped batch name so the write lands in fresh
-        directories instead of mutating the live open partition. Returns
+        """Write the open rows under a generation-scoped batch name, so
+        the write lands in fresh directories instead of mutating the
+        live open partition. Returns
         the written directories' stats (min_start matters: open
         directories carry forward across bucket-granular commits, and
         the recorded min(_start) lets an as-of read skip open buckets
@@ -3347,11 +3261,10 @@ class Engine:
         batch merges — e.g. one final clustering pass with ``sort_by``
         before archiving).
         Per-batch sizes come from the manifest's recorded per-directory
-        byte stats (written at commit time; ``fs.du`` fallback for
-        pre-upgrade manifests), so tier selection costs no listing.
-        Returns the number of directories removed. Legacy (pre-manifest)
-        cubes always compact fully — tiering needs the manifest's
-        carry-forward.
+        byte stats (written at commit time; ``fs.du`` fallback for a
+        directory whose size could not be measured then), so tier
+        selection costs no listing. Returns the number of directories
+        removed.
 
         ``sort_by`` (e.g. ``["_start"]``) range-partitions and sorts the
         rewritten rows on the given columns, so each output file covers
@@ -3368,12 +3281,12 @@ class Engine:
         of them skip — lexicographic range sort only ever skips on the
         leading column.
 
-        Crash-safe under the engine's single-writer assumption: the
-        consolidated directory's name is the same order-insensitive
-        content checksum the upsert commit uses, and rows are deduped by
-        ``_id`` on read — so a crash between write and delete leaves
-        duplicates that the NEXT compact (or any retry) collapses back;
-        re-running with no new data converges to the same directory.
+        Crash-safe like every commit: the consolidated directory's name
+        is the same order-insensitive content checksum the upsert commit
+        uses, and it becomes visible only at the manifest flip — a crash
+        before the flip leaves an unreferenced directory the next commit
+        or ``vacuum`` sweeps; re-running with no new data converges to
+        the same directory.
         Consequence: re-compacting IDENTICAL content with a different
         ``sort_by`` is a no-op (same token, live directory, overwrite
         would tear readers) — cluster on the first compact, or after
@@ -3512,40 +3425,12 @@ class Engine:
                         cluster: str = "range") -> int:
         path = self._path(cube)
         state, meta, raw = self._cube_state(path)
-        if state == "premanifest":
-            meta, raw = self._adopt_premanifest(path)
+        if state == "new":
+            return 0
         layout = self._cube_layout(path)
         buckets = self._live_buckets(meta, layout)
         timepart = self._cube_timepart(path, for_write=True, layout=layout)
-        if meta is None:
-            # legacy in-place compact: always FULL (tiering needs the
-            # manifest's dir carry-forward). Can crash between write and
-            # delete, leaving visible duplicates — deduped by _id on the
-            # next compact's read; the manifested path can't (a stranded
-            # consolidated dir is never referenced).
-            batches = self._closed_batch_dirs(path)
-            if len({d.rsplit("/", 1)[-1] for d in batches}) <= 1:
-                return 0
-            closed = (self._read(path).where(~F.col("_current"))
-                      .drop("_current").dropDuplicates(["_id"]))
-            closed = self._sort_compacted(
-                closed, target_partitions, sort_by, cluster=cluster)
-            # localCheckpoint: the write below rewrites the directories
-            # this plan reads from
-            closed = closed.localCheckpoint(eager=True)
-            token, _ = self._write_closed_batch(closed, path,
-                                                buckets=buckets)
-            removed = 0
-            for full in batches:
-                # the consolidated dir may reuse one of the existing
-                # tokens (re-compacting identical content); never delete
-                # the one we just wrote
-                if (full.rsplit("/", 1)[-1] != f"__batch={token}"
-                        and self.fs.isdir(full)):
-                    self.fs.delete_dir(full)
-                    removed += 1
-            return removed
-        # manifested: size-tiered — the trickle of small batches merges
+        # size-tiered — the trickle of small batches merges
         # into one level, and ≥4 similar-sized larger levels fold into
         # the next level up (see compaction.tier_groups: bounded level
         # count AND bounded lifetime write amplification); every other
@@ -3579,7 +3464,7 @@ class Engine:
             # localCheckpoint: the write below rewrites the directories
             # this plan reads from
             closed = closed.localCheckpoint(eager=True)
-            _, grels = self._write_closed_batch(
+            grels = self._write_closed_batch(
                 closed, path, buckets=buckets,
                 live=self._retained_dirs(meta), timepart=timepart)
             rels.update(grels)
@@ -3593,7 +3478,7 @@ class Engine:
                             stats=self._merged_stats(
                                 meta, self._record_sizes(path, rels),
                                 dirs, hist, path=path),
-                            schema=meta.get("schema"))
+                            schema=meta["schema"])
         self._sweep_dropped(
             path, meta, dirs | {d for h in hist for d in h["dirs"]})
         # content is identical post-compact: the auto-refresh diff
@@ -3605,14 +3490,15 @@ class Engine:
         """(state, manifest, manifest_raw) where state is one of:
         ``new`` — no committed data (absent; or a crashed first write
         whose pointer never landed: format-2 sidecar, manifest absent);
-        ``manifest`` — committed generation-pointer cube;
-        ``premanifest`` — data committed by a pre-protocol writer under
-        a format-less layout sidecar (the old commit point was the data
-        write itself): COMMITTED data, must be adopted via
-        ``_adopt_premanifest``, never retried-as-new (a first-write
-        retry would flip a manifest naming only the new batch and sweep
-        every pre-existing directory — silent data loss);
-        ``legacy`` — unbucketed pre-sidecar data."""
+        ``manifest`` — committed generation-pointer cube.
+
+        The engine reads exactly one on-disk format: a format-2
+        ``_layout.json`` plus a manifest root that carries a schema.
+        Data under no sidecar, or under a format-less one, is COMMITTED
+        data from an older format — refused with ``_old_format_error``
+        and never swept (a first-write retry would flip a manifest
+        naming only the new batch and delete every existing directory).
+        A schema-less manifest root is refused by ``_manifest_root``."""
         if not self.fs.isdir(path):
             self._bloom_hint = None
             return "new", None, None
@@ -3626,50 +3512,15 @@ class Engine:
             self._bloom_hint = (sum(live) // len(live)) if live else None
             return "manifest", meta, raw
         layout = self._cube_layout(path)
-        if layout is not None:
-            if layout.get("format", 1) >= 2 or not self._has_data(path):
-                return "new", None, None
-            return "premanifest", None, None
-        return ("legacy" if self._has_data(path) else "new"), None, None
-
-    def _adopt_premanifest(self, path: str) -> tuple[dict, str]:
-        """Publish a gen-1 manifest for a cube written before the
-        generation-pointer protocol: under the writer lease, list the
-        existing partition directories (safe — no reader of this cube
-        resolves a manifest yet, and only the lease holder mutates) and
-        name them as generation 1, then stamp the sidecar to format 2.
-        Crash-safe: a crash after the flip leaves a valid manifest (the
-        retry sees state ``manifest``); a crash before it changes
-        nothing."""
-        import json
-
-        dirs: set[str] = set()
-
-        def walk(dirpath: str, rel: str) -> None:
-            for d in self.fs.listdir(dirpath):
-                full = self.fs.join(dirpath, d)
-                r = f"{rel}/{d}"
-                if d.startswith("__batch=") and self.fs.isdir(full):
-                    dirs.add(r)
-                elif (d.startswith(("__obucket=", "__stime="))
-                        and self.fs.isdir(full)):
-                    walk(full, r)
-
-        for cur in self.fs.listdir(path):
-            if cur.startswith("_current="):
-                walk(self.fs.join(path, cur), cur)
-        self._manifest_flip(path, None, 1, dirs)
-        layout = self._cube_layout(path) or {}
-        layout["format"] = 2
-        self.fs.write_text(self.fs.join(path, self._LAYOUT_SIDECAR),
-                           json.dumps(layout))
-        raw = self._manifest_raw(path)
-        return self._manifest(path), raw
+        if (layout or {}).get("format", 1) >= 2 or not self._has_data(path):
+            return "new", None, None
+        raise _old_format_error(
+            path, "data without a format-2 _layout.json sidecar")
 
     def _first_write(self, path: str, obj: DataFrame) -> None:
         """First committed generation. Layout sidecar FIRST (a crash
-        between data and sidecar would otherwise let the next writer
-        extend a bucketed cube with the legacy layout); the manifest PUT
+        between data and sidecar would otherwise leave data every later
+        operation refuses as an older format); the manifest PUT
         is the commit point — until it lands, readers see nothing and a
         retry rewrites the same gen-1 directories."""
         buckets = self.oid_buckets
@@ -3683,9 +3534,8 @@ class Engine:
         # would then delete the real ones
         obj = obj.localCheckpoint(eager=True)
         dirs = self._write_partitioned(
-            obj, path, "overwrite", buckets=buckets,
-            open_batch="open-g1", hist_batch="hist-g1", collect_dirs=True,
-            timepart=self.time_partition)
+            obj, path, buckets=buckets, open_batch="open-g1",
+            hist_batch="hist-g1", timepart=self.time_partition)
         if not dirs:
             # zero-row first batch: nothing landed — leave the cube in
             # the "new" state (no manifest) instead of committing an
@@ -3715,29 +3565,22 @@ class Engine:
             if state == "new":
                 self._first_write(path, obj)
                 return
-            if state == "premanifest":
-                meta, raw = self._adopt_premanifest(path)
             layout = self._cube_layout(path)
             buckets = self._live_buckets(meta, layout)
             timepart = self._cube_timepart(path, for_write=True,
                                            layout=layout)
             table = self._read(path)
             self._check_oid_type(table, obj)
-            self._refuse_legacy_evolution(table, obj, meta)
             self._check_redrop(path, obj, set(table.columns))
             _, obj, _ = self._align_incoming(table, obj, evolve)
-            if state == "legacy":
-                self._write_partitioned(obj, path, "append", buckets=buckets)
-                return
             gen = meta["gen"] + 1
             # checkpoint: the relpath distinct and the data write must
             # see the SAME rows (a nondeterministic source recomputed
             # between them could write a directory the manifest misses)
             obj = obj.localCheckpoint(eager=True)
             new_dirs = self._write_partitioned(
-                obj, path, "overwrite", buckets=buckets,
-                open_batch=f"ins-g{gen}", hist_batch=f"insh-g{gen}",
-                collect_dirs=True, timepart=timepart)
+                obj, path, buckets=buckets, open_batch=f"ins-g{gen}",
+                hist_batch=f"insh-g{gen}", timepart=timepart)
             dirs = set(meta["dirs"]) | set(new_dirs)
             hist = self._push_history(
                 meta, layout.get("keep_generations", 0) if layout else 0)
@@ -3792,12 +3635,10 @@ class Engine:
         if state == "new":
             self._first_write(path, incoming)
             return
-        if state == "premanifest":
-            meta, raw = self._adopt_premanifest(path)
         layout = self._cube_layout(path)
         buckets = self._live_buckets(meta, layout)
         timepart = self._cube_timepart(path, for_write=True, layout=layout)
-        if meta is not None and meta.get("schema") is not None and buckets:
+        if buckets:
             # every consumer of ``table`` on the bucketed manifested
             # path reads only its SCHEMA (oid-type / evolution / redrop
             # checks, column alignment) — the data reads below go
@@ -3812,15 +3653,13 @@ class Engine:
         else:
             table = self._read(path)
         self._check_oid_type(table, incoming)
-        self._refuse_legacy_evolution(table, incoming, meta)
         self._check_redrop(path, incoming, set(table.columns))
         table, incoming, cols = self._align_incoming(table, incoming, evolve)
         msch = self._manifest_schema(incoming.schema, buckets, timepart)
-        mig = meta.get("migration") if meta is not None else None
         if autosnap:
             hit_open: set[str] | None = None
             drop_open: set[str] | None = None
-            if meta is not None and buckets and mig:
+            if buckets and meta.get("migration"):
                 # MIGRATION-AWARE bucket-granular merge: the open rows
                 # an incoming oid can touch live in an open dir at ANY
                 # modulus still present (live count, plus each chained
@@ -3838,14 +3677,11 @@ class Engine:
                 if drop_open:
                     pruned = self._read_dirs(path, meta,
                                              sorted(drop_open))
-                elif meta.get("schema") is not None:
+                else:
                     # no existing open dir can hold these oids: merge
                     # against an empty open side (schema from the
                     # manifest — no O(cube) listing for a no-op read)
                     pruned = self._empty_schema_frame(meta["schema"])
-                else:
-                    # pre-schema manifest: the listing read's schema
-                    pruned = self._read_raw(path).where(F.lit(False))
                 pruned = pruned.drop(*[c for c in
                                        ("__batch", "__obucket", "__stime",
                                         "_current")
@@ -3857,7 +3693,7 @@ class Engine:
                         pruned = pruned.withColumn(
                             c, F.lit(None).cast(inc_types[c]))
                 open_rows = pruned.select(*cols)
-            elif meta is not None and buckets:
+            elif buckets:
                 # BUCKET-GRANULAR merge: the open snapshot is oid-bucket
                 # partitioned, and a snapshot batch can only touch open
                 # rows whose _oid it carries — so read, merge and rewrite
@@ -3896,10 +3732,8 @@ class Engine:
                     pruned = pruned.where(
                         F.col("_current")
                         & F.col("__obucket").isin(hit))
-                elif meta.get("schema") is not None:
-                    pruned = self._empty_schema_frame(meta["schema"])
                 else:
-                    pruned = self._read_raw(path).where(F.lit(False))
+                    pruned = self._empty_schema_frame(meta["schema"])
                 pruned = pruned.drop(*[c for c in
                                        ("__batch", "__obucket", "__stime",
                                         "_current")
@@ -3923,105 +3757,74 @@ class Engine:
             ).localCheckpoint(eager=True)
             closed = tagged.where(F.col("__closed")).drop("__closed")
             new_open = tagged.where(~F.col("__closed")).drop("__closed")
-            if meta is not None:
-                # snapshot-isolated commit: both writes land in
-                # directories no live manifest references; the pointer
-                # flip publishes them atomically. A crash anywhere before
-                # the flip leaves readers on the old generation and the
-                # retried batch rewrites the same directories (the token
-                # is content-keyed, the open dir is gen-keyed and the gen
-                # didn't advance).
-                gen = meta["gen"] + 1
-                live = set(meta["dirs"])
-                _, closed_rels = self._write_closed_batch(
-                    closed, path, buckets=buckets,
-                    live=self._retained_dirs(meta),  # history dirs too:
-                    # overwriting one would corrupt a retained snapshot
-                    timepart=timepart)
-                open_stats = self._write_open(
-                    new_open, path, buckets=buckets,
-                    open_batch=f"open-g{gen}", timepart=timepart)
-                open_rels = set(open_stats)
-                if drop_open is not None:
-                    # migration-aware merge: exactly the dirs read above
-                    dirs = (live - drop_open) | set(closed_rels) | open_rels
-                elif hit_open is not None:
-                    # drop only the open dirs of MERGED (hit) buckets;
-                    # untouched open-bucket dirs stay referenced
-                    drop = {d for d in live
-                            if d.startswith("_current=true")
-                            and d.split("/")[1] in hit_open}
-                    dirs = (live - drop) | set(closed_rels) | open_rels
-                else:
-                    dirs = ({d for d in live
-                             if not d.startswith("_current=true")}
-                            | set(closed_rels) | open_rels)
-                hist = self._push_history(
-                    meta,
-                    layout.get("keep_generations", 0) if layout else 0)
-                self._manifest_flip(path, raw, gen, dirs, hist,
-                                    stats=self._merged_stats(
-                                        meta,
-                                        self._record_sizes(
-                                            path,
-                                            {**closed_rels, **open_stats}),
-                                        dirs, hist, path=path),
-                                    schema=msch)
-                self._sweep_dropped(
-                    path, meta,
-                    dirs | {d for h in hist for d in h["dirs"]})
+            # snapshot-isolated commit: both writes land in
+            # directories no live manifest references; the pointer
+            # flip publishes them atomically. A crash anywhere before
+            # the flip leaves readers on the old generation and the
+            # retried batch rewrites the same directories (the token
+            # is content-keyed, the open dir is gen-keyed and the gen
+            # didn't advance).
+            gen = meta["gen"] + 1
+            live = set(meta["dirs"])
+            closed_rels = self._write_closed_batch(
+                closed, path, buckets=buckets,
+                live=self._retained_dirs(meta),  # history dirs too:
+                # overwriting one would corrupt a retained snapshot
+                timepart=timepart)
+            open_stats = self._write_open(
+                new_open, path, buckets=buckets,
+                open_batch=f"open-g{gen}", timepart=timepart)
+            open_rels = set(open_stats)
+            if drop_open is not None:
+                # migration-aware merge: exactly the dirs read above
+                dirs = (live - drop_open) | set(closed_rels) | open_rels
+            elif hit_open is not None:
+                # drop only the open dirs of MERGED (hit) buckets;
+                # untouched open-bucket dirs stay referenced
+                drop = {d for d in live
+                        if d.startswith("_current=true")
+                        and d.split("/")[1] in hit_open}
+                dirs = (live - drop) | set(closed_rels) | open_rels
             else:
-                # legacy in-place commit (no isolation): closed rows
-                # FIRST (idempotent token-keyed partition), open
-                # overwrite second — a crash between the two leaves old
-                # rows open alongside their closed copies; retrying the
-                # same batch converges.
-                self._write_closed_batch(closed, path, buckets=buckets)
-                self._write_open(new_open, path, buckets=buckets)
+                dirs = ({d for d in live
+                         if not d.startswith("_current=true")}
+                        | set(closed_rels) | open_rels)
+            hist = self._push_history(
+                meta,
+                layout.get("keep_generations", 0) if layout else 0)
+            self._manifest_flip(path, raw, gen, dirs, hist,
+                                stats=self._merged_stats(
+                                    meta,
+                                    self._record_sizes(
+                                        path,
+                                        {**closed_rels, **open_stats}),
+                                    dirs, hist, path=path),
+                                schema=msch)
+            self._sweep_dropped(
+                path, meta,
+                dirs | {d for h in hist for d in h["dirs"]})
             if self.auto_compact_batches:
-                if meta is not None:
-                    # count only SMALL tokens (manifest-recorded sizes,
-                    # no listing): consolidated levels above the tier
-                    # threshold are already compacted and must not
-                    # re-trigger an O(|history|) rewrite every commit
-                    fresh = self._manifest(path)
-                    n = sum(s <= self.compact_small_bytes for s in
-                            self._history_token_sizes(path, fresh)
-                            .values())
-                else:
-                    n = len({d.rsplit("/", 1)[-1]
-                             for d in self._closed_batch_dirs(path)})
+                # count only SMALL tokens (manifest-recorded sizes, no
+                # listing): consolidated levels above the tier threshold
+                # are already compacted and must not re-trigger an
+                # O(|history|) rewrite every commit
+                n = sum(s <= self.compact_small_bytes for s in
+                        self._history_token_sizes(path, self._manifest(path))
+                        .values())
                 if n > self.auto_compact_batches:
                     self.compact(cube)
-        elif meta is not None:
+        else:
             self._history_replace_manifested(
                 path, incoming.select(*cols), cols, buckets, meta, raw,
                 timepart=timepart,
                 keep=layout.get("keep_generations", 0) if layout else 0,
                 schema=msch)
-        else:
-            replaced = _upsert.history_replace(
-                table.select(*cols), incoming.select(*cols)
-            ).localCheckpoint(eager=True)
-            # legacy unbucketed layout: static overwrite — the history
-            # import must rewrite BOTH partitions (reference deletes ALL
-            # versions of the replaced oids, sqlalchemy.py:955-963) —
-            # dynamic mode would leave a _current partition absent from
-            # the result untouched on disk, letting stale versions
-            # survive. A static partitioned overwrite wipes EVERYTHING
-            # under the path including sidecars (verified), so preserve
-            # the advisory index registry across it.
-            ixp = self._index_meta_path(cube)
-            ix = self.fs.read_text(ixp) if self.fs.isfile(ixp) else None
-            self._write_partitioned(replaced, path, "overwrite", dynamic=False)
-            if ix is not None:
-                self.fs.write_text(ixp, ix)
 
     def _history_replace_manifested(
         self, path: str, incoming: DataFrame, cols: list[str],
         buckets: int | None, meta: dict, raw_manifest: str,
         timepart: str | None = None, keep: int = 0,
-        schema: dict | None = None,
+        *, schema: dict,
     ) -> None:
         """Bounded, snapshot-isolated history import: rewrite ONLY the
         oid-bucket directories containing incoming oids (reference
@@ -4114,31 +3917,9 @@ class Engine:
         self._manifest_flip(path, raw_manifest, gen, dirs, hist,
                             stats=self._merged_stats(meta, new_rels, dirs,
                                                      hist, path=path),
-                            schema=schema if schema is not None
-                            else meta.get("schema"))
+                            schema=schema)
         self._sweep_dropped(
             path, meta, dirs | {d for h in hist for d in h["dirs"]})
-
-    def _closed_batch_dirs(self, path: str) -> list[str]:
-        """Full paths of every history ``__batch=`` directory — from the
-        manifest when one exists (stranded crash leftovers are not part
-        of the cube), from a listing on legacy layouts."""
-        meta = self._manifest(path)
-        if meta is not None:
-            return [self.fs.join(path, d) for d in meta["dirs"]
-                    if d.startswith("_current=false")]
-        out = []
-        hist = self.fs.join(path, "_current=false")
-        for d in self.fs.listdir(hist):
-            full = self.fs.join(hist, d)
-            if d.startswith("__batch=") and self.fs.isdir(full):
-                out.append(full)
-            elif d.startswith("__obucket=") and self.fs.isdir(full):
-                out.extend(
-                    self.fs.join(full, b) for b in self.fs.listdir(full)
-                    if b.startswith("__batch=")
-                    and self.fs.isdir(self.fs.join(full, b)))
-        return out
 
     # -- queries (reference sqlalchemy.py:641-803) ---------------------------
 
@@ -4312,20 +4093,8 @@ class Engine:
                 start_upper=_norm_ts_bound(hi) if hi else None,
                 bucket_values=bvals)
             if bvals and "__obucket" in raw.columns:
-                # belt-and-braces value filter on the pruned read: also
-                # covers legacy premanifest cubes below
+                # belt-and-braces value filter on the pruned read
                 raw = raw.where(F.col("__obucket").isin(bvals))
-            elif (bvals is None and "__obucket" in raw.columns
-                    and buckets):
-                # premanifest bucketed cube (no stored dtype): the
-                # legacy post-read prune, keyed on the read schema
-                lookup = lookup_literals()
-                if lookup and self._prune_family_ok(
-                        raw.schema["_oid"].dataType, lookup):
-                    raw = raw.where(F.col("__obucket").isin(
-                        self._oid_bucket_values(
-                            lookup, moduli,
-                            dtype=raw.schema["_oid"].dataType)))
             if "__stime" in raw.columns:
                 # time-partitioned layout: the date spec's strict
                 # ``_start < U`` bound prunes periods AFTER period(U).

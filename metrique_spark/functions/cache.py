@@ -53,6 +53,18 @@ def _leaf_scan_bytes(df: DataFrame) -> int:
         return -1
 
 
+def _chunk_bytes(sess) -> int:
+    """``spark.metrique.cache.chunkBytes`` as a positive int — a
+    non-numeric, zero or negative setting falls back to the default
+    instead of raising inside a persist path."""
+    try:
+        chunk = int(sess.conf.get(_CACHE_CHUNK_CONF,
+                                  str(_CACHE_CHUNK_DEFAULT)))
+    except ValueError:
+        return _CACHE_CHUNK_DEFAULT
+    return chunk if chunk > 0 else _CACHE_CHUNK_DEFAULT
+
+
 def narrow_small(df: DataFrame) -> DataFrame:
     """Right-size a small frame that is about to be persisted and then
     re-read by several downstream passes: ``coalesce`` it to
@@ -74,7 +86,7 @@ def narrow_small(df: DataFrame) -> DataFrame:
     size = _leaf_scan_bytes(df)
     if size <= 0:
         return df
-    chunk = int(sess.conf.get(_CACHE_CHUNK_CONF, str(_CACHE_CHUNK_DEFAULT)))
+    chunk = _chunk_bytes(sess)
     target = max(1, -(-size // chunk))
     if target < cap:
         return df.coalesce(target)

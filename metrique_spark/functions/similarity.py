@@ -1808,7 +1808,6 @@ def write_pq_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     fs=None,
-    content_hash: bool = True,
     gbuckets: int = 16,
 ) -> list:
     """Train PQ codebooks on ``df`` and persist the index: codes to
@@ -1817,11 +1816,9 @@ def write_pq_index(
     code (compression, not pruning) — for a pruned stored layout use
     ``write_ivfpq_index``.
 
-    ``content_hash`` (default on) stores a per-row vector fingerprint
-    (``__vh``, see ``_vh``) alongside the codes, enabling
-    retention-free incremental refresh; search paths ignore the
-    column. Off reproduces the pre-fingerprint layout (refresh then
-    needs a retained generation to diff against). ``gbuckets``
+    A per-row vector fingerprint (``__vh``, see ``_vh``) is stored
+    alongside the codes, enabling retention-free incremental refresh;
+    search paths ignore the column. ``gbuckets``
     sub-partitions each batch directory by id hash (see ``_gbucket``)
     so removals rewrite only hit buckets — ~1/gbuckets of the codes
     per removed-id bucket instead of the whole base partition."""
@@ -1832,9 +1829,8 @@ def write_pq_index(
     books = pq_train(df, m=m, k=k, iters=iters, id_col=id_col,
                      vec_col=vec_col)
     codes = pq_encode(df, books, id_col=id_col, vec_col=vec_col)
-    if content_hash:
-        codes = codes.join(
-            df.select(F.col(id_col), _vh(vec_col).alias("__vh")), id_col)
+    codes = codes.join(
+        df.select(F.col(id_col), _vh(vec_col).alias("__vh")), id_col)
     (codes.withColumn("__gbucket", _gbucket(id_col, gbuckets))
      .withColumn("__abatch", F.lit("base"))
      .write.partitionBy("__gbucket", "__abatch").mode("overwrite")
@@ -1842,21 +1838,20 @@ def write_pq_index(
     meta = {"format": _PQ_FORMAT, "kind": "pq", "m": m, "k": k,
             "iters": iters, "id_col": id_col,
             "sub_len": len(books[0][0]), "books": books,
-            "vh": bool(content_hash), "gbuckets": gbuckets}
+            "vh": True, "gbuckets": gbuckets}
     fs.write_text(fs.join(path, _PQ_SIDECAR), json.dumps(meta))
     return books
 
 
-def read_pq_index(spark, path: str, fs=None) -> tuple[DataFrame, dict]:
-    """(codes, meta) back from ``write_pq_index``/``write_ivfpq_index``
-    output; ``meta`` carries the codebooks (JSON floats round-trip
-    doubles exactly) and, for IVF-PQ, the coarse centroids. Fails loud
-    on a missing or mismatched sidecar — codes without their codebooks
-    are meaningless, and silently retraining would score against the
-    wrong codewords."""
+def _read_pq_meta(fs, path: str) -> dict:
+    """The committed ``_pq.json`` sidecar of a PQ / IVF-PQ / SQ8 index.
+    Fails loud on a missing or mismatched sidecar — codes without their
+    codebooks are meaningless, and silently retraining would score
+    against the wrong codewords — and on a sidecar without vector
+    fingerprints (``vh``): incremental refresh diffs against them, so
+    that older layout must be rebuilt."""
     import json
 
-    fs = _default_fs(fs)
     side = fs.join(path, _PQ_SIDECAR)
     if not fs.isfile(side):
         raise ValueError(
@@ -1868,6 +1863,19 @@ def read_pq_index(spark, path: str, fs=None) -> tuple[DataFrame, dict]:
         raise ValueError(
             f"PQ index sidecar at {path!r} has format "
             f"{meta.get('format')!r}, reader supports {_PQ_FORMAT}")
+    if not meta.get("vh"):
+        raise ValueError(
+            f"PQ index at {path!r} has no vector fingerprints (an older "
+            "layout) — rebuild it")
+    return meta
+
+
+def read_pq_index(spark, path: str, fs=None) -> tuple[DataFrame, dict]:
+    """(codes, meta) back from ``write_pq_index``/``write_ivfpq_index``
+    output; ``meta`` carries the codebooks (JSON floats round-trip
+    doubles exactly) and, for IVF-PQ, the coarse centroids (see
+    ``_read_pq_meta`` for the sidecar checks)."""
+    meta = _read_pq_meta(_default_fs(fs), path)
     return spark.read.parquet(path + "/codes"), meta
 
 
@@ -1887,14 +1895,8 @@ def append_to_pq_index(
     the existing corpus is never re-read or re-encoded. Parameters
     drifting from the data distribution degrade recall, not
     correctness; re-run the writer when they do."""
-    import json
-
     fs = _default_fs(fs)
-    side = fs.join(path, _PQ_SIDECAR)
-    if not fs.isfile(side):
-        raise ValueError(
-            f"no committed index at {path!r} ({_PQ_SIDECAR} missing)")
-    meta = json.loads(fs.read_text(side))
+    meta = _read_pq_meta(fs, path)
     id_col = meta["id_col"]
     kind = meta.get("kind")
     if kind == "sq8":
@@ -1912,13 +1914,8 @@ def append_to_pq_index(
         codes = sq8_encode(batch, params, id_col=id_col, vec_col=vec_col)
     else:
         codes = pq_encode(batch, books, id_col=id_col, vec_col=vec_col)
-    if meta.get("vh"):
-        # fingerprint only when the stored layout already carries it —
-        # mixing footer schemas inside one parquet dir would make the
-        # reader's picked-footer schema roulette
-        codes = codes.join(
-            batch.select(F.col(id_col), _vh(vec_col).alias("__vh")),
-            id_col)
+    codes = codes.join(
+        batch.select(F.col(id_col), _vh(vec_col).alias("__vh")), id_col)
     token = _abatch_token(batch, id_col)
     out = codes.withColumn("__abatch", F.lit(token))
     part_cols = ["__abatch"]
@@ -2398,7 +2395,6 @@ def write_ivfpq_index(
     vec_col: str = "embedding",
     sim_decimals: int = 6,
     fs=None,
-    content_hash: bool = True,
 ) -> None:
     """Persist the composed IVF-PQ layout: deterministic coarse k-means
     routes every vector to an inverted list, codes land in parquet
@@ -2417,9 +2413,8 @@ def write_ivfpq_index(
                      vec_col=vec_col)
     codes = (pq_encode(df, books, id_col=id_col, vec_col=vec_col)
              .join(assigned.select(F.col(id_col), "cluster"), id_col))
-    if content_hash:
-        codes = codes.join(
-            df.select(F.col(id_col), _vh(vec_col).alias("__vh")), id_col)
+    codes = codes.join(
+        df.select(F.col(id_col), _vh(vec_col).alias("__vh")), id_col)
     (codes.withColumn("__abatch", F.lit("base"))
      .write.partitionBy("cluster", "__abatch").mode("overwrite")
      .parquet(path + "/codes"))
@@ -2433,7 +2428,7 @@ def write_ivfpq_index(
             "sim_decimals": sim_decimals,
             "sub_len": len(books[0][0]), "books": books,
             "centroids": [[cid, vec] for cid, vec in cent_rows],
-            "vh": bool(content_hash)}
+            "vh": True}
     fs.write_text(fs.join(path, _PQ_SIDECAR), json.dumps(meta))
 
 
@@ -2576,7 +2571,6 @@ def write_sq8_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     fs=None,
-    content_hash: bool = True,
     gbuckets: int = 16,
 ) -> list:
     """Persist an SQ8 index: codes to ``path/codes`` (8x smaller scan
@@ -2590,16 +2584,15 @@ def write_sq8_index(
     _invalidate_index(fs, path)
     params = sq8_train(df, vec_col=vec_col)
     codes = sq8_encode(df, params, id_col=id_col, vec_col=vec_col)
-    if content_hash:
-        codes = codes.join(
-            df.select(F.col(id_col), _vh(vec_col).alias("__vh")), id_col)
+    codes = codes.join(
+        df.select(F.col(id_col), _vh(vec_col).alias("__vh")), id_col)
     (codes.withColumn("__gbucket", _gbucket(id_col, gbuckets))
      .withColumn("__abatch", F.lit("base"))
      .write.partitionBy("__gbucket", "__abatch").mode("overwrite")
      .parquet(path + "/codes"))
     meta = {"format": _PQ_FORMAT, "kind": "sq8", "id_col": id_col,
             "params": [[mn, mx] for mn, mx in params],
-            "vh": bool(content_hash), "gbuckets": gbuckets}
+            "vh": True, "gbuckets": gbuckets}
     fs.write_text(fs.join(path, _PQ_SIDECAR), json.dumps(meta))
     return params
 

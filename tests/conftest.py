@@ -1,4 +1,5 @@
 import os
+import re
 import sys
 
 import pytest
@@ -25,27 +26,27 @@ def pytest_configure(config):
         "gate samples entries at this scale; run with -m oracle_sf01)")
 
 
+# long-running opt-in groups: the sf0.01 sweep (multi-minute at that
+# scale) and the slow fuzz/model/fault-injection suites (tens of minutes
+# combined) only run when the -m expression names them — a plain
+# `pytest tests/` must finish inside its verify window. Coverage is not
+# lost: the slow suites run via `pytest -m slow` and the sweep via
+# -m oracle_sf01.
+_OPT_IN = {"slow", "oracle_sf01"}
+
+
 def pytest_collection_modifyitems(config, items):
-    # long-running opt-in groups: the sf0.01 sweep (multi-minute at that
-    # scale) and the slow fuzz/model/fault-injection suites (tens of
-    # minutes combined) only run when the -m expression names them — a
-    # plain `pytest tests/` must finish inside the driver's verify
-    # window (r14 shipped with tests_ok:false purely because the ~1 h
-    # full suite was truncated). Coverage is not lost: the slow suites
-    # run per-round via `pytest -m slow` and the sweep via -m oracle_sf01.
-    expr = config.getoption("-m") or ""
-    if "oracle_sf01" not in expr:
-        skip01 = pytest.mark.skip(
-            reason="sf0.01 sweep is opt-in: pytest -m oracle_sf01")
-        for it in items:
-            if "oracle_sf01" in it.keywords:
-                it.add_marker(skip01)
-    if "slow" not in expr:
-        skipslow = pytest.mark.skip(
-            reason="slow fuzz/model suite is opt-in: pytest -m slow")
-        for it in items:
-            if "slow" in it.keywords:
-                it.add_marker(skipslow)
+    # an opt-in item is skipped only when the -m expression names NONE
+    # of its own markers — matched as whole identifiers, so `-m oracle`
+    # runs the (slow-marked) oracle sweep and does not count as naming
+    # oracle_sf01
+    named = set(re.findall(r"\w+", config.getoption("-m") or ""))
+    for it in items:
+        own = {m.name for m in it.iter_markers()}
+        opt_in = sorted(own & _OPT_IN)
+        if opt_in and not own & named:
+            it.add_marker(pytest.mark.skip(
+                reason=f"opt-in suite: pytest -m {opt_in[0]}"))
 
 
 @pytest.fixture(scope="session")

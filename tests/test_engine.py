@@ -137,8 +137,9 @@ def test_auto_compact_hook(spark, tmp_path):
         eng.upsert("c", df, oid="k",
                    start=F.to_timestamp(F.lit(f"2024-0{i + 1}-01")))
     def tokens(e, cube):
-        return {d.rsplit("/", 1)[-1]
-                for d in e._closed_batch_dirs(e._path(cube))}
+        return {e._batch_dir_token(d)
+                for d in e._manifest(e._path(cube))["dirs"]
+                if d.startswith("_current=false")}
 
     assert len(tokens(eng, "c")) <= 2
     # nothing lost: 4 closed versions per key + 1 open = 15 rows
@@ -264,8 +265,9 @@ def test_engine_full_protocol_on_object_store(spark, tmp_path):
 
     # compact consolidates history batch dirs through the fs backend
     def tokens():
-        return {d.rsplit("/", 1)[-1]
-                for d in eng._closed_batch_dirs(eng._path("c"))}
+        return {eng._batch_dir_token(d)
+                for d in eng._manifest(eng._path("c"))["dirs"]
+                if d.startswith("_current=false")}
 
     assert len(tokens()) == 2
     assert eng.compact("c") >= 1
@@ -323,30 +325,6 @@ def test_first_write_crash_between_sidecar_and_data_converges(spark, tmp_path):
                .withColumn("_start",
                            F.to_timestamp(F.lit("2024-02-01"))))
     assert eng.count("c", date="~") == 2
-
-
-def test_legacy_static_history_import_preserves_index_sidecar(spark, tmp_path):
-    """The legacy (unbucketed) history import statically overwrites the
-    whole cube path — which wipes non-partition files — so the advisory
-    index registry must be preserved across it."""
-    import os
-
-    from metrique_spark.engine import Engine
-
-    eng = Engine(spark, warehouse=str(tmp_path))
-    df = spark.createDataFrame(
-        [(1, "a", "2024-01-01", None)],
-        "_oid long, val string, _start string, _end string")
-    stamped = (df.withColumn("_start", F.col("_start").cast("timestamp"))
-               .withColumn("_end", F.col("_end").cast("timestamp")))
-    eng.upsert("lg", stamped)
-    eng.index("lg", ["val"])
-    # make the cube legacy: drop the layout sidecar
-    os.unlink(os.path.join(str(tmp_path), "lg", "_layout.json"))
-    eng.upsert("lg", stamped.withColumn("val", F.lit("h")),
-               autosnap=False)
-    assert eng.count("lg", date="~") == 1
-    assert [e["name"] for e in eng.index_list()["lg"]] == ["ix_lg_val"]
 
 
 def test_find_oids_prunes_to_bucket_partitions(spark, tmp_path):

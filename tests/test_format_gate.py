@@ -1,0 +1,77 @@
+"""The engine reads exactly one on-disk cube format: a format-2
+``_layout.json`` sidecar plus a manifest root that carries a schema.
+Every older state is refused with the one ValueError from
+``_cube_state`` — and refused WITHOUT touching the data: an older cube's
+directories are committed data, so no writer may sweep them as if they
+were a crashed first write."""
+
+import json
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
+from metrique_spark.engine import Engine
+from metrique_spark.objects import stamp
+
+REFUSAL = "older on-disk format"
+
+
+def _objs(spark, rows, start):
+    df = spark.createDataFrame(rows, "oid long, col_1 long")
+    return stamp(df, oid="oid", start=F.to_timestamp(F.lit(start)))
+
+
+def _parquet_files(path):
+    return sorted(os.path.join(d, f) for d, _, fs in os.walk(path)
+                  for f in fs if f.endswith(".parquet"))
+
+
+def _no_layout(path):
+    os.unlink(os.path.join(path, "_manifest.json"))
+    os.unlink(os.path.join(path, "_layout.json"))
+
+
+def _formatless_layout(path):
+    os.unlink(os.path.join(path, "_manifest.json"))
+    lp = os.path.join(path, "_layout.json")
+    with open(lp) as fh:
+        lay = json.load(fh)
+    lay.pop("format")
+    with open(lp, "w") as fh:
+        json.dump(lay, fh)
+
+
+def _schemaless_root(path):
+    mp = os.path.join(path, "_manifest.json")
+    with open(mp) as fh:
+        root = json.load(fh)
+    root.pop("schema")
+    with open(mp, "w") as fh:
+        json.dump(root, fh)
+
+
+@pytest.mark.parametrize("make_old", [_no_layout, _formatless_layout,
+                                      _schemaless_root])
+def test_older_format_refused_and_never_wiped(spark, tmp_path, make_old):
+    wh = str(tmp_path / "wh")
+    Engine(spark, warehouse=wh).upsert(
+        "old", _objs(spark, [(1, 10), (2, 20)], "2014-01-01"),
+        stamped=True)
+    path = os.path.join(wh, "old")
+    make_old(path)
+    files = _parquet_files(path)
+    assert files
+
+    eng = Engine(spark, warehouse=wh)
+    batch = _objs(spark, [(1, 11)], "2014-02-01")
+    ops = {
+        "upsert": lambda: eng.upsert("old", batch, stamped=True),
+        "insert": lambda: eng.insert("old", batch, stamped=True),
+        "compact": lambda: eng.compact("old"),
+        "table": lambda: eng.table("old"),
+    }
+    for name, op in ops.items():
+        with pytest.raises(ValueError, match=REFUSAL):
+            op()
+        assert _parquet_files(path) == files, name

@@ -23,6 +23,10 @@ def eng(spark, tmp_path):
     return e
 
 
+# every committed manifest root carries the generation's read schema
+_SCHEMA = {"type": "struct", "fields": []}
+
+
 def _mkcube(eng, cube, buckets):
     path = eng._path(cube)
     os.makedirs(path, exist_ok=True)
@@ -60,7 +64,7 @@ def test_flip_assemble_round_trip_fuzz(eng):
         dirs = _dirs_for(buckets, rng)
         stats = _stats_for(dirs, rng)
         eng._manifest_flip(path, None, 1, dirs, stats=stats,
-                           schema=None, oid_buckets=buckets)
+                           schema=_SCHEMA, oid_buckets=buckets)
         # a FRESH engine (cold caches) assembles the identical state
         clean = Engine(eng.spark, warehouse=eng.warehouse)
         meta = clean._manifest(path)
@@ -92,7 +96,7 @@ def test_second_flip_reuses_untouched_segments_and_sweeps(eng):
             for b in range(0, 256, 8)}
     stats = _stats_for(dirs, rng)
     eng._manifest_flip(path, None, 1, dirs, stats=stats,
-                       oid_buckets=buckets)
+                       schema=_SCHEMA, oid_buckets=buckets)
     root1 = eng._manifest_root(path)
     assert len(root1["segs"]) >= 3
     segdir = os.path.join(path, "_manifest_seg")
@@ -110,7 +114,7 @@ def test_second_flip_reuses_untouched_segments_and_sweeps(eng):
                                         "2014-02-01 00:00:00.000000",
                                     "bytes": 123, "rows": 1}},
                            dirs2, None),
-                       oid_buckets=buckets)
+                       schema=_SCHEMA, oid_buckets=buckets)
     root2 = eng._manifest_root(path)
     changed = {k for k in root2["segs"]
                if root1["segs"].get(k) != root2["segs"][k]}
@@ -133,11 +137,13 @@ def test_stamps_round_trip_as_migration_blocks(eng):
     dirs = _dirs_for(buckets, rng)
     bucketed = sorted(d for d in dirs if "/__obucket=" in d)
     eng._manifest_flip(path, None, 1, dirs,
-                       stats=_stats_for(dirs, rng), oid_buckets=16)
+                       stats=_stats_for(dirs, rng), schema=_SCHEMA,
+                       oid_buckets=16)
     raw = eng._manifest_raw(path)
     # start doubling: stamp every dir at modulus 16, live becomes 32
     eng._manifest_flip(path, raw, 2, dirs,
-                       stats=_stats_for(dirs, rng), oid_buckets=32,
+                       stats=_stats_for(dirs, rng), schema=_SCHEMA,
+                       oid_buckets=32,
                        migration={"from": 16, "old_dirs": bucketed})
     meta = eng._manifest(path)
     assert [b["from"] for b in meta["migration"]] == [16]
@@ -147,7 +153,8 @@ def test_stamps_round_trip_as_migration_blocks(eng):
     extra = "_current=true/__obucket=1/__batch=open-g3"
     dirs3 = set(dirs) | {extra}
     eng._manifest_flip(path, raw, 3, dirs3,
-                       stats=_stats_for(dirs3, rng), oid_buckets=64,
+                       stats=_stats_for(dirs3, rng), schema=_SCHEMA,
+                       oid_buckets=64,
                        migration={"from": 32, "old_dirs": [extra]})
     meta = eng._manifest(path)
     assert [b["from"] for b in meta["migration"]] == [16, 32]
@@ -157,13 +164,14 @@ def test_stamps_round_trip_as_migration_blocks(eng):
     gone = bucketed[0]
     dirs4 = dirs3 - {gone}
     eng._manifest_flip(path, raw, 4, dirs4,
-                       stats=_stats_for(dirs4, rng))
+                       stats=_stats_for(dirs4, rng), schema=_SCHEMA)
     meta = eng._manifest(path)
     assert gone not in meta["migration"][0]["old_dirs"]
     # explicit None clears every stamp and syncs the sidecar count
     raw = eng._manifest_raw(path)
     eng._manifest_flip(path, raw, 5, dirs4,
-                       stats=_stats_for(dirs4, rng), migration=None)
+                       stats=_stats_for(dirs4, rng), schema=_SCHEMA,
+                       migration=None)
     meta = eng._manifest(path)
     assert meta.get("migration") is None
     lay = json.loads(eng.fs.read_text(

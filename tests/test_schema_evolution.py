@@ -165,25 +165,6 @@ def test_compact_preserves_evolved_schema(spark, eng):
         assert after[_id]["score"] == r["score"]
 
 
-def test_legacy_cube_refuses_evolution(spark, wh):
-    # legacy layout: no manifest, no bucketing — the listing IS the read
-    eng = Engine(spark, warehouse=wh)
-    path = eng._path("c")
-    b = _batch(spark, [(1, "a")], "key long, name string", "2024-01-01")
-    eng._write_partitioned(b, path, "overwrite")
-    assert eng._cube_state(path)[0] == "legacy"
-    with pytest.raises(ValueError, match="legacy"):
-        eng.upsert("c", _batch(spark, [(2, 2.0)],
-                               "key long, score double", "2024-02-01"),
-                   stamped=True)
-    # subset batches (no new columns) still merge fine on legacy cubes
-    eng.upsert("c", _batch(spark, [(1,)], "key long", "2024-02-01"),
-               stamped=True)
-    cur = eng.table("c").where("_current").collect()
-    assert {r["_oid"] for r in cur} == {1}
-    assert cur[0]["name"] is None
-
-
 def test_manifest_schema_skips_footer_inference(spark, eng):
     """The manifested read passes the stored schema to the scan — the
     authoritative-schema contract: what the manifest records is exactly

@@ -26,10 +26,11 @@ def _objs(spark, rows, start):
 
 
 def _batch_tokens(engine, cube):
-    """Distinct history commit tokens on disk (one per un-compacted
-    upsert batch), layout-agnostic."""
-    return {d.rsplit("/", 1)[-1]
-            for d in engine._closed_batch_dirs(engine._path(cube))}
+    """Distinct history commit tokens of the live generation (one per
+    un-compacted upsert batch), layout-agnostic."""
+    return {engine._batch_dir_token(d)
+            for d in engine._manifest(engine._path(cube))["dirs"]
+            if d.startswith("_current=false")}
 
 
 def test_snapshot_upsert_lifecycle(spark, engine):
@@ -440,59 +441,10 @@ def test_manifest_cas_detects_zombie_writer(spark, engine, monkeypatch):
                       stamped=True)
 
 
-def test_premanifest_cube_adopted_not_wiped(spark, engine):
-    """A cube written before the generation-pointer protocol (layout
-    sidecar + data, no manifest, no format marker) holds COMMITTED
-    data: the next write must adopt it into a gen-1 manifest, never
-    retry it as a first write — whose sweep would silently delete every
-    pre-existing directory."""
-    import json
-
-    engine.upsert("pre", _objs(spark, [(1, 10), (2, 20)], "2014-01-01"),
-                  stamped=True)
-    path = engine._path("pre")
-    # strip the cube back to the pre-protocol on-disk state
-    engine.fs.delete(engine.fs.join(path, "_manifest.json"))
-    lp = engine.fs.join(path, "_layout.json")
-    meta = json.loads(engine.fs.read_text(lp))
-    meta.pop("format")
-    engine.fs.write_text(lp, json.dumps(meta))
-
-    engine.upsert("pre", _objs(spark, [(1, 11)], "2014-02-01"),
-                  stamped=True)
-    # old rows survived AND merged with the new batch
-    assert engine.count("pre", date="~") == 3
-    assert engine.count("pre") == 2
-    # adoption published a manifest and stamped the sidecar
-    assert engine.fs.isfile(engine.fs.join(path, "_manifest.json"))
-    assert json.loads(engine.fs.read_text(lp))["format"] == 2
-
-
-def test_premanifest_compact_adopts(spark, engine):
-    import json
-
-    engine.upsert("prc", _objs(spark, [(1, 10)], "2014-01-01"),
-                  stamped=True)
-    engine.upsert("prc", _objs(spark, [(1, 11)], "2014-02-01"),
-                  stamped=True)
-    engine.upsert("prc", _objs(spark, [(1, 12)], "2014-03-01"),
-                  stamped=True)
-    path = engine._path("prc")
-    engine.fs.delete(engine.fs.join(path, "_manifest.json"))
-    lp = engine.fs.join(path, "_layout.json")
-    meta = json.loads(engine.fs.read_text(lp))
-    meta.pop("format")
-    engine.fs.write_text(lp, json.dumps(meta))
-
-    assert engine.compact("prc") > 0
-    assert engine.count("prc", date="~") == 3
-    assert engine.fs.isfile(engine.fs.join(path, "_manifest.json"))
-
-
 def test_crashed_first_write_still_retries_as_new(spark, engine,
                                                   monkeypatch):
     """The format-2 sidecar distinguishes a crashed first write (safe
-    to retry) from a pre-protocol cube (must adopt): crash after the
+    to retry) from an older-format cube (refused): crash after the
     layout write, before the manifest flip — the retry must take the
     first-write path and succeed."""
     from metrique_spark.engine import Engine
@@ -537,7 +489,8 @@ def test_first_manifest_flip_is_cas(spark, engine):
                   stamped=True)
     path = engine._path("cas1")
     with _pytest.raises(ConcurrentWriteError, match="first writer"):
-        engine._manifest_flip(path, None, 1, {"_current=true/__batch=x"})
+        engine._manifest_flip(path, None, 1, {"_current=true/__batch=x"},
+                              schema=engine._manifest(path)["schema"])
 
 
 def test_time_travel_reads_exact_retained_snapshots(spark, tmp_path):

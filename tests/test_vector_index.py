@@ -261,21 +261,6 @@ def test_refresh_content_diff_needs_no_retention(spark, tmp_path):
         assert not eng.vector_index_list("vecs")[name]["stale"]
 
 
-def test_refresh_legacy_pq_requires_retained_generation(spark, tmp_path):
-    """A fingerprint-less PQ index (content_hash=False — the
-    pre-fingerprint layout) can only diff by time-traveling the cube to
-    its indexed generation; with keep_generations=0 that snapshot is
-    swept, so refresh fails loud with the retention hint."""
-    eng = Engine(spark, warehouse=str(tmp_path / "wh"))   # keep = 0
-    _emb_cube(spark, eng)
-    eng.build_vector_index("vecs", "px", vec_col="embedding",
-                           kind="pq", m=4, k=8, content_hash=False)
-    eng.upsert("vecs", _vrows(spark, [(1, [0.5] * 64, 0)],
-                              "2014-02-01"), stamped=True)
-    with pytest.raises(ValueError, match="keep_generations"):
-        eng.refresh_vector_index("vecs", "px")
-
-
 def test_refresh_converges_raw_append_duplicates(spark, tmp_path):
     """Self-healing: a raw append_to_pq_index that re-added an existing
     id left TWO rows for it in the codes; one refresh converges the
