@@ -29,7 +29,8 @@ from metrique_spark.mql import (compile_mql, date_end_lower_bound,
                                 date_range_predicate,
                                 date_start_upper_bound, oid_literal_set,
                                 parse_fields, to_timestamp_lit)
-from metrique_spark.objects import stamp, validate
+from metrique_spark.objects import (raise_invalid, stamp, validate,
+                                   validity_checks)
 
 import logging
 
@@ -279,7 +280,7 @@ class Engine:
         # upsert's auto-compact runs inside the upsert's lock)
         self._held_locks: set[str] = set()
         # per-directory byte sizes measured by the fs.du FALLBACK for
-        # dirs whose size _record_sizes could not measure at commit
+        # dirs whose size _write_dirs could not measure at commit
         # time (it swallows du errors). Token-keyed batch
         # dirs are immutable once written, so caching is sound; the
         # next manifest flip backfills these into the persisted stats
@@ -449,25 +450,20 @@ class Engine:
                                F.col("_current").cast("boolean"))
         return df
 
-    def _migration_hit_dirs(self, incoming: DataFrame, meta: dict,
+    def _migration_hit_dirs(self, hits: dict[int, set[int]], meta: dict,
                             buckets: int, dirs,
                             current_only: bool) -> set[str]:
         """The manifest directories a merge/import must read-and-drop
-        for ``incoming``'s oids during in-flight doubling migration(s):
-        an oid's rows live in a directory at modulus ``m`` only where
+        for a batch during in-flight doubling migration(s): an oid's
+        rows live in a directory at modulus ``m`` only where
         ``__obucket = hash % m`` — resolved per DIRECTORY vintage from
         the per-dir modulus blocks (a value-level predicate cannot tell
-        vintages apart). One tiny Spark job computes the hit bucket
-        values under EVERY live modulus at once — chained doublings
-        (3+ moduli) cost the same single job. Caller must have
-        checkpointed ``incoming`` first."""
+        vintages apart). ``hits`` maps every live modulus to the bucket
+        values the batch hashes into under it (the commit probe's
+        output, ``_probe``)."""
         blocks = meta.get("migration") or []
-        mods = [buckets] + [b["from"] for b in blocks]
-        sel = [self._obucket(m).alias(f"__b{i}")
-               for i, m in enumerate(mods)]
-        hitrows = incoming.select(*sel).distinct().collect()
-        hit = {m: {f"__obucket={r[f'__b{i}']}" for r in hitrows}
-               for i, m in enumerate(mods)}
+        hit = {m: {f"__obucket={v}" for v in vals}
+               for m, vals in hits.items()}
         dmod = {d: b["from"] for b in blocks for d in b["old_dirs"]}
         return {d for d in dirs
                 if (not current_only or d.startswith("_current=true"))
@@ -1971,31 +1967,15 @@ class Engine:
                                            layout=layout)
             keep = layout.get("keep_generations", 0)
             gen = meta["gen"] + 1
-            part_cols = self._partition_keys(oid_buckets, timepart)
             rows = self._read(path)  # internal keys dropped; re-derived
-            cols = [c for c in rows.columns if c != "_current"]
-            out = rows.withColumn("_current", F.col("_end").isNull())
-            out = out.withColumn(
-                "__batch",
-                F.when(F.col("_current"), F.lit(f"open-g{gen}"))
-                .otherwise(F.lit(f"rb-g{gen}")))
-            out = out.withColumn("__obucket", self._obucket(oid_buckets))
-            if timepart:
-                out = out.withColumn("__stime", self._stime_col(timepart))
             # localCheckpoint: the write lands under the same root the
             # plan reads from (fresh relpaths, but Spark's self-
             # overwrite check is path-based), and a retry must not
             # recompute from directories the write is mutating
-            out = out.select(*cols, *part_cols).localCheckpoint(
-                eager=True)
-            (
-                self._cube_writer(out).mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*part_cols)
-                .parquet(path)
-            )
-            new_rels = self._record_sizes(
-                path, self._written_dir_stats(out, oid_buckets, timepart))
+            rows = rows.drop("_current").localCheckpoint(eager=True)
+            new_rels = self._write_dirs(
+                rows, path, oid_buckets, timepart,
+                open_batch=f"open-g{gen}", closed_batch=f"rb-g{gen}")
             dirs = set(new_rels)
             hist = self._push_history(meta, keep)
             self._backfill_history_buckets(hist, meta, layout)
@@ -2194,32 +2174,15 @@ class Engine:
                     break
             gen = meta["gen"] + 1
             keep = layout.get("keep_generations", 0)
-            rows = self._read_dirs(path, meta, chunk)
-            cols = [c for c in rows.columns
-                    if c not in ("_current", "__batch", "__obucket",
-                                 "__stime")]
-            out = rows.withColumn("_current", F.col("_end").isNull())
-            out = out.withColumn(
-                "__batch",
-                F.when(F.col("_current"), F.lit(f"open-g{gen}"))
-                .otherwise(F.lit(f"mig-g{gen}")))
-            out = out.withColumn("__obucket", self._obucket(buckets))
-            if timepart:
-                out = out.withColumn("__stime", self._stime_col(timepart))
-            part_cols = self._partition_keys(buckets, timepart)
+            rows = self._read_dirs(path, meta, chunk).drop(
+                "_current", "__batch", "__obucket", "__stime")
             # localCheckpoint: the write lands under the same root the
             # plan reads from, and a retry must not recompute from
             # directories the write is mutating
-            out = out.select(*cols, *part_cols).localCheckpoint(
-                eager=True)
-            (
-                self._cube_writer(out).mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*part_cols)
-                .parquet(path)
-            )
-            new_rels = self._record_sizes(
-                path, self._written_dir_stats(out, buckets, timepart))
+            rows = rows.localCheckpoint(eager=True)
+            new_rels = self._write_dirs(
+                rows, path, buckets, timepart,
+                open_batch=f"open-g{gen}", closed_batch=f"mig-g{gen}")
             dirs = (live - set(chunk)) | set(new_rels)
             hist = self._push_history(meta, keep)
             self._manifest_flip(path, raw, gen, dirs, hist,
@@ -2901,34 +2864,67 @@ class Engine:
                 if not self.fs.listdir(full):
                     self.fs.delete_dir(full)
 
-    def _written_dir_stats(
-        self, out: DataFrame, buckets: int | None,
-        timepart: str | None = None,
-    ) -> dict[str, dict[str, str | None]]:
-        """Manifest-relative directory paths a partitioned write of
-        ``out`` produces, each with its ``max(_end)`` (None for open
-        directories) — computed from the DATA (one small aggregate over
-        the partition columns, the same shuffle the old relpath distinct
-        cost), not from a listing. The stats land in the manifest and
-        let as-of reads skip closed directories whose whole content
-        ended before the probe date (the lakehouse data-skipping
-        pattern, at directory granularity)."""
-        cols = self._partition_keys(buckets, timepart)
-        agg = (out.groupBy(*cols)
-               .agg(F.date_format(F.max("_end"), _END_STAT_FMT)
-                    .alias("__max_end"),
-                    F.date_format(F.min("_start"), _END_STAT_FMT)
-                    .alias("__min_start"),
-                    F.count(F.lit(1)).alias("__rows"))
-               .collect())
+    def _write_dirs(
+        self, rows: DataFrame, path: str, buckets: int | None,
+        timepart: str | None, *, open_batch: str | None = None,
+        closed_batch: str | None = None,
+        live: set[str] | frozenset[str] = frozenset(),
+    ) -> dict[str, dict[str, str | int | None]]:
+        """The one data write every commit kind makes: ONE stats-and-
+        token aggregate, then ONE partitioned write of open and closed
+        rows together. Returns the stats of each manifest-relative
+        directory the commit references for these rows: ``rows``,
+        ``min_start``, ``max_end`` (None for open directories) and
+        ``bytes``. The stats come from the DATA, not a listing; they
+        land in the manifest and let as-of reads skip closed
+        directories whose whole content ended before the probe date
+        (the lakehouse data-skipping pattern, at directory
+        granularity), and the sizes feed the size-tiered compaction.
+
+        ``rows`` must be deterministic (checkpointed by the caller): the
+        aggregate and the write must see the same rows. A ``_current``
+        column, when present, decides each row's side; otherwise
+        ``_end IS NULL`` does. Open rows land under ``open_batch``;
+        closed rows under ``closed_batch``, or — when None — under a
+        deterministic content token (``n{count}x{sum}`` of per-row
+        xxhash64s of ``(_id, _end)``, summed map-side with constant
+        memory per task: a collect_list token would hold every closed
+        ``_id`` in ONE aggregation buffer), so retrying the same merge
+        overwrites the SAME directory instead of appending duplicates.
+        A token's closed rows are left out of the write when its
+        directories are already among the ``live`` (retained) ones —
+        re-upserting byte-identical content; overwriting a live
+        directory would tear a concurrent reader — and dropped when the
+        same token is live under ANOTHER modulus's directories (a
+        byte-identical batch during a doubling migration: reads would
+        double-count a second copy)."""
+        out = rows
+        if "_current" not in out.columns:
+            out = out.withColumn("_current", F.col("_end").isNull())
+        if buckets:
+            out = out.withColumn("__obucket", self._obucket(buckets))
+        if timepart:
+            out = out.withColumn("__stime", self._stime_col(timepart))
+        keys = self._partition_keys(buckets, timepart)[:-1]  # no __batch
+        aggs = [F.date_format(F.max("_end"), _END_STAT_FMT).alias("__max_end"),
+                F.date_format(F.min("_start"), _END_STAT_FMT)
+                .alias("__min_start"),
+                F.count(F.lit(1)).alias("__rows")]
+        if closed_batch is None:
+            # decimal(38,0) can't overflow under ANSI until ~1e19 rows
+            aggs.append(F.sum(F.xxhash64("_id", F.col("_end").cast("string"))
+                              .cast("decimal(38,0)")).alias("__hsum"))
+        groups = out.groupBy(*keys).agg(*aggs).collect()
+        closed = [r for r in groups if not r["_current"]]
+        if closed_batch is None and closed:
+            # Python ints: Decimal arithmetic rounds at 28 digits
+            closed_batch = (f"n{sum(r['__rows'] for r in closed)}"
+                            f"x{sum(int(r['__hsum']) for r in closed)}")
         stats: dict[str, dict] = {}
-        for r in agg:
-            parts = []
-            for c in cols:
-                v = r[c]
-                if c == "_current":
-                    v = str(bool(v)).lower()
-                elif v is None:
+        for r in groups:
+            parts = [f"_current={str(bool(r['_current'])).lower()}"]
+            for c in keys[1:]:
+                if r[c] is None:
                     # a null partition value lands in the Hive default
                     # dir, which the period-prune predicate cannot
                     # reason about — refuse before the manifest flip
@@ -2936,23 +2932,44 @@ class Engine:
                     raise ValueError(
                         f"null {c} partition value (null _start?) — "
                         "time-partitioned cubes require non-null _start")
-                parts.append(f"{c}={v}")
-            stats["/".join(parts)] = {"max_end": r["__max_end"],
-                                      "min_start": r["__min_start"],
-                                      "rows": r["__rows"]}
-        return stats
-
-    def _record_sizes(
-        self, path: str, stats: dict[str, dict[str, str | int | None]],
-    ) -> dict[str, dict[str, str | int | None]]:
-        """Stamp each just-written directory's byte size into its stats
-        entry (``bytes``) so the manifest carries per-directory sizes —
-        the size-tiered compaction's level classifier then reads them
-        from the manifest instead of paying a listing walk over a
-        100 TB cube's directory tree. Cost is one recursive LIST per
-        directory THIS commit wrote (bounded by the commit, not the
-        cube); sizes for untouched dirs carry forward in
-        ``_merged_stats``."""
+                parts.append(f"{c}={r[c]}")
+            batch = open_batch if r["_current"] else closed_batch
+            stats["/".join(parts) + f"/__batch={batch}"] = {
+                "max_end": r["__max_end"], "min_start": r["__min_start"],
+                "rows": r["__rows"]}
+        skip: set[str] = set()
+        crels = {d for d in stats if d.startswith("_current=false")}
+        if crels and crels <= live:
+            skip = crels  # already live: stays referenced, not rewritten
+        elif crels and any(self._batch_dir_token(d) == closed_batch
+                           for d in live):
+            skip = crels
+            stats = {d: v for d, v in stats.items() if d not in crels}
+        if skip:
+            out = out.where(F.col("_current"))
+        if set(stats) - skip:
+            w = (out.withColumn(
+                "__batch", F.when(F.col("_current"), F.lit(open_batch))
+                .otherwise(F.lit(closed_batch))).write
+                .mode("overwrite").partitionBy(*keys, "__batch")
+                .option("partitionOverwriteMode", "dynamic"))
+            ndv = self.bloom_oid_ndv
+            if ndv == "auto":
+                # derived from the manifest row stats the current
+                # operation already resolved (see _cube_state); 1.5x
+                # headroom so the target FPP survives a growing bucket
+                # until the next write re-derives, floor 1024 so tiny
+                # cubes get a working bloom
+                ndv = (max(1024, int(self._bloom_hint * 1.5))
+                       if self._bloom_hint else 100_000)
+            if ndv:
+                w = (w.option("parquet.bloom.filter.enabled#_oid", "true")
+                     .option("parquet.bloom.filter.expected.ndv#_oid",
+                             str(ndv)))
+            w.parquet(path)
+        # one recursive LIST per directory this commit references for
+        # these rows (bounded by the commit, not the cube); sizes of
+        # untouched dirs carry forward in _merged_stats
         for rel, v in stats.items():
             try:
                 v["bytes"] = self.fs.du(self.fs.join(path, rel))
@@ -3101,136 +3118,6 @@ class Engine:
             table = table.withColumn(n, F.lit(None).cast(inc[n]))
         keep = cols + (["_current"] if "_current" in table.columns else [])
         return table.select(*keep), incoming.select(*cols), cols
-
-    def _cube_writer(self, out: DataFrame):
-        """``out.write`` with the engine's cube-file parquet options
-        applied — single choke point so every data write (first write,
-        open overwrite, closed batch, history import, compaction
-        rewrite) carries the same physical-file features (see
-        ``bloom_oid_ndv``)."""
-        w = out.write
-        ndv = self.bloom_oid_ndv
-        if ndv == "auto":
-            # derived from the manifest row stats the current operation
-            # already resolved (see _cube_state); 1.5x headroom so the
-            # target FPP survives a growing bucket until the next write
-            # re-derives, floor 1024 so tiny cubes get a working bloom
-            ndv = (max(1024, int(self._bloom_hint * 1.5))
-                   if self._bloom_hint else 100_000)
-        if ndv:
-            w = (w.option("parquet.bloom.filter.enabled#_oid", "true")
-                 .option("parquet.bloom.filter.expected.ndv#_oid",
-                         str(ndv)))
-        return w
-
-    def _write_partitioned(
-        self, df: DataFrame, path: str, buckets: int | None,
-        open_batch: str, hist_batch: str, timepart: str | None = None,
-    ) -> dict[str, dict[str, str | None]]:
-        out = df.withColumn("_current", F.col("_end").isNull())
-        # second-level __batch partition key: callers pass
-        # generation-scoped batch names so every commit writes FRESH
-        # directories (never ones a live manifest references).
-        out = out.withColumn(
-            "__batch",
-            F.when(F.col("_current"), F.lit(open_batch))
-            .otherwise(F.lit(hist_batch)),
-        )
-        if buckets:
-            out = out.withColumn("__obucket", self._obucket(buckets))
-        if timepart:
-            out = out.withColumn("__stime", self._stime_col(timepart))
-        (
-            self._cube_writer(out).mode("overwrite")
-            .partitionBy(*self._partition_keys(buckets, timepart))
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(path)
-        )
-        return self._written_dir_stats(out, buckets, timepart)
-
-    def _batch_token(self, closed: DataFrame) -> str | None:
-        """Deterministic content token for a closed-row batch, or None
-        when the batch is empty. Order-insensitive distributed checksum:
-        sum of per-row xxhash64 aggregates map-side with constant memory
-        per task (a collect_list token would hold every closed _id in ONE
-        aggregation buffer — gigabytes at a 100 TB-scale batch).
-        decimal(38,0) sum can't overflow under ANSI until ~1e19 rows."""
-        tok = closed.agg(
-            F.count("*").alias("n"),
-            F.sum(
-                F.xxhash64("_id", F.col("_end").cast("string"))
-                .cast("decimal(38,0)")
-            ).alias("s"),
-        ).first()
-        if not tok["n"]:
-            return None
-        return f"n{tok['n']}x{tok['s']}"
-
-    def _write_closed_batch(
-        self, closed: DataFrame, path: str, buckets: int | None,
-        live: set[str], timepart: str | None = None,
-    ) -> dict[str, dict[str, str | None]]:
-        """Write newly-closed rows into a history partition keyed by a
-        deterministic content token: retrying the same merge overwrites the
-        SAME directory instead of appending duplicates. Returns the
-        per-directory stats (relpath -> max(_end)) of the directories
-        holding it. When the token's directories are ALREADY among the
-        ``live`` (retained) manifest dirs (re-upserting byte-identical
-        content), the write is skipped — overwriting a live directory
-        would tear a concurrent reader."""
-        token = self._batch_token(closed)
-        if token is None:
-            return {}
-        out = (closed.withColumn("_current", F.lit(False))
-               .withColumn("__batch", F.lit(token)))
-        if buckets:
-            out = out.withColumn("__obucket", self._obucket(buckets))
-        if timepart:
-            out = out.withColumn("__stime", self._stime_col(timepart))
-        rels = self._written_dir_stats(out, buckets, timepart)
-        if rels:
-            if set(rels) <= live:
-                return rels
-            if any(self._batch_dir_token(d) == token for d in live):
-                # identical content already committed under ANOTHER
-                # modulus's directories (re-upsert of a byte-identical
-                # batch during a doubling migration): keep the existing
-                # copy referenced instead of writing a second one the
-                # reads would double-count
-                return {}
-        (
-            self._cube_writer(out).mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*self._partition_keys(buckets, timepart))
-            .parquet(path)
-        )
-        return rels
-
-    def _write_open(self, new_open: DataFrame, path: str,
-                    buckets: int | None, open_batch: str,
-                    timepart: str | None = None
-                    ) -> dict[str, dict[str, str | None]]:
-        """Write the open rows under a generation-scoped batch name, so
-        the write lands in fresh directories instead of mutating the
-        live open partition. Returns
-        the written directories' stats (min_start matters: open
-        directories carry forward across bucket-granular commits, and
-        the recorded min(_start) lets an as-of read skip open buckets
-        whose rows all started after the probe; max_end is NULL for an
-        open dir and _merged_stats drops it)."""
-        out = (new_open.withColumn("_current", F.lit(True))
-               .withColumn("__batch", F.lit(open_batch)))
-        if buckets:
-            out = out.withColumn("__obucket", self._obucket(buckets))
-        if timepart:
-            out = out.withColumn("__stime", self._stime_col(timepart))
-        (
-            self._cube_writer(out).mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*self._partition_keys(buckets, timepart))
-            .parquet(path)
-        )
-        return self._written_dir_stats(out, buckets, timepart)
 
     def compact(self, cube: str, target_partitions: int | None = None,
                 sort_by: Sequence[str] | None = None,
@@ -3463,11 +3350,10 @@ class Engine:
                                           sort_by, cluster=cluster)
             # localCheckpoint: the write below rewrites the directories
             # this plan reads from
-            closed = closed.localCheckpoint(eager=True)
-            grels = self._write_closed_batch(
-                closed, path, buckets=buckets,
-                live=self._retained_dirs(meta), timepart=timepart)
-            rels.update(grels)
+            closed = closed.withColumn("_current", F.lit(False))
+            rels.update(self._write_dirs(
+                closed.localCheckpoint(eager=True), path, buckets,
+                timepart, live=self._retained_dirs(meta)))
             merged_all |= merge
         drop = {d for d in live
                 if d.startswith("_current=false")
@@ -3475,9 +3361,8 @@ class Engine:
         dirs = (live - drop) | set(rels)
         hist = self._push_history(meta, keep)
         self._manifest_flip(path, raw, gen, dirs, hist,
-                            stats=self._merged_stats(
-                                meta, self._record_sizes(path, rels),
-                                dirs, hist, path=path),
+                            stats=self._merged_stats(meta, rels, dirs,
+                                                     hist, path=path),
                             schema=meta["schema"])
         self._sweep_dropped(
             path, meta, dirs | {d for h in hist for d in h["dirs"]})
@@ -3508,7 +3393,7 @@ class Engine:
             rows = (meta.get("stats") or {}).get("rows") or {}
             live = [rows[d] for d in meta["dirs"] if d in rows]
             # average rows per live directory — the "auto" bloom NDV
-            # estimate for this operation's writes (see _cube_writer)
+            # estimate for this operation's writes (see _write_dirs)
             self._bloom_hint = (sum(live) // len(live)) if live else None
             return "manifest", meta, raw
         layout = self._cube_layout(path)
@@ -3522,20 +3407,19 @@ class Engine:
         between data and sidecar would otherwise leave data every later
         operation refuses as an older format); the manifest PUT
         is the commit point — until it lands, readers see nothing and a
-        retry rewrites the same gen-1 directories."""
+        retry rewrites the same gen-1 directories. ``obj`` must be
+        checkpointed by the caller: the stats aggregate and the data
+        write must see the SAME rows — stamp()'s default _start is
+        current_timestamp() (fixed per QUERY, different across the two
+        jobs), so an unpinned plan straddling a period boundary would
+        record manifest dirs the data never landed in, and the sweep
+        would then delete the real ones."""
         buckets = self.oid_buckets
         self._write_layout(path, buckets, self.time_partition,
                            self.keep_generations)
-        # checkpoint: the data write and the relpath distinct below must
-        # see the SAME rows — stamp()'s default _start is
-        # current_timestamp() (fixed per QUERY, different across the two
-        # jobs), so an unpinned plan straddling a period boundary would
-        # record manifest dirs the data never landed in, and the sweep
-        # would then delete the real ones
-        obj = obj.localCheckpoint(eager=True)
-        dirs = self._write_partitioned(
-            obj, path, buckets=buckets, open_batch="open-g1",
-            hist_batch="hist-g1", timepart=self.time_partition)
+        dirs = self._write_dirs(
+            obj.drop("_current"), path, buckets, self.time_partition,
+            open_batch="open-g1", closed_batch="hist-g1")
         if not dirs:
             # zero-row first batch: nothing landed — leave the cube in
             # the "new" state (no manifest) instead of committing an
@@ -3543,8 +3427,7 @@ class Engine:
             return
         self._manifest_flip(path, None, 1, set(dirs),
                             stats=self._merged_stats(
-                                None, self._record_sizes(path, dirs),
-                                set(dirs), None, path=path),
+                                None, dirs, set(dirs), None, path=path),
                             schema=self._manifest_schema(
                                 obj.schema, buckets, self.time_partition))
         self._sweep_unreferenced(path, set(dirs))
@@ -3558,6 +3441,10 @@ class Engine:
         cube like ``upsert`` (see ``_align_incoming``): missing columns
         null-fill, new columns widen the cube schema when ``evolve``."""
         obj = df if stamped else stamp(df, **stamp_kw)
+        # checkpoint: validation, the stats aggregate and the data write
+        # must see the SAME rows (a nondeterministic source recomputed
+        # between them could write a directory the manifest misses)
+        obj = obj.localCheckpoint(eager=True)
         validate(obj)
         path = self._path(cube)
         with self._write_lock(cube):
@@ -3574,21 +3461,15 @@ class Engine:
             self._check_redrop(path, obj, set(table.columns))
             _, obj, _ = self._align_incoming(table, obj, evolve)
             gen = meta["gen"] + 1
-            # checkpoint: the relpath distinct and the data write must
-            # see the SAME rows (a nondeterministic source recomputed
-            # between them could write a directory the manifest misses)
-            obj = obj.localCheckpoint(eager=True)
-            new_dirs = self._write_partitioned(
-                obj, path, buckets=buckets, open_batch=f"ins-g{gen}",
-                hist_batch=f"insh-g{gen}", timepart=timepart)
+            new_dirs = self._write_dirs(
+                obj, path, buckets, timepart, open_batch=f"ins-g{gen}",
+                closed_batch=f"insh-g{gen}")
             dirs = set(meta["dirs"]) | set(new_dirs)
             hist = self._push_history(
                 meta, layout.get("keep_generations", 0) if layout else 0)
             self._manifest_flip(path, raw, gen, dirs, hist,
                                 stats=self._merged_stats(
-                                    meta,
-                                    self._record_sizes(path, new_dirs),
-                                    dirs, hist, path=path),
+                                    meta, new_dirs, dirs, hist, path=path),
                                 schema=self._manifest_schema(
                                     obj.schema, buckets, timepart))
             self._sweep_dropped(
@@ -3608,7 +3489,12 @@ class Engine:
         pre-evolution files read back as typed nulls. ``evolve=False``
         fails loud on new columns instead."""
         incoming = df if stamped else stamp(df, **stamp_kw)
-        validate(incoming)
+        # checkpoint the raw batch ONCE: the probe, the merge and the
+        # write must all see the same rows — a nondeterministic source
+        # (sample/limit, stamp()'s current_timestamp() _start)
+        # recomputed between them could land rows in a bucket the merge
+        # never read, silently dropping that bucket's other open rows
+        incoming = incoming.localCheckpoint(eager=True)
         path = self._path(cube)
         with self._write_lock(cube):
             self._upsert_locked(cube, path, incoming, autosnap, evolve)
@@ -3624,19 +3510,49 @@ class Engine:
             if m.get("auto") and m.get("stale"):
                 self.refresh_vector_index(cube, name)
 
+    def _probe(self, incoming: DataFrame,
+                moduli: Sequence[int]) -> tuple[int, dict[int, set[int]]]:
+        """ONE aggregate over a checkpointed commit batch: raises
+        ``validate``'s errors, and returns the batch's closed-row count
+        (autosnap detection) plus the oid-bucket values its oids hash
+        into under each modulus in ``moduli`` — the live count and every
+        in-flight doubling's from-count, so chained doublings cost the
+        same single job. Each set is bounded by its bucket count."""
+        row = incoming.agg(
+            *validity_checks(),
+            F.count(F.col("_end")).alias("__closed"),
+            *[F.collect_set(self._obucket(m)).alias(f"__b{i}")
+              for i, m in enumerate(moduli)]).first()
+        raise_invalid(row)
+        return row["__closed"], {m: set(row[f"__b{i}"])
+                                 for i, m in enumerate(moduli)}
+
     def _upsert_locked(self, cube, path, incoming, autosnap, evolve=True):
+        """One commit of a checkpointed batch. A snapshot trickle runs
+        four Spark actions whatever its size: the probe (``_probe``),
+        the merge checkpoint, and ``_write_dirs``' stats-and-token
+        aggregate and single write; the manifest flip publishes it."""
+        state, meta, raw = self._cube_state(path)
+        layout = buckets = None
+        moduli: list[int] = []
+        if state != "new":
+            layout = self._cube_layout(path)
+            buckets = self._live_buckets(meta, layout)
+            if buckets:
+                moduli = [buckets] + [b["from"] for b in
+                                      meta.get("migration") or []]
+        n_closed, hits = self._probe(incoming, moduli)
         if autosnap is None:
-            autosnap = _upsert.detect_autosnap(incoming)
+            # True iff every incoming object is open (reference
+            # sqlalchemy.py:910-915)
+            autosnap = not n_closed
         if autosnap:
             # last write wins within a snapshot batch (the reference's
             # container buffer is keyed by _id, core_api.py:537-540)
             incoming = _upsert.latest_per_oid(incoming)
-        state, meta, raw = self._cube_state(path)
         if state == "new":
             self._first_write(path, incoming)
             return
-        layout = self._cube_layout(path)
-        buckets = self._live_buckets(meta, layout)
         timepart = self._cube_timepart(path, for_write=True, layout=layout)
         if buckets:
             # every consumer of ``table`` on the bucketed manifested
@@ -3657,43 +3573,8 @@ class Engine:
         table, incoming, cols = self._align_incoming(table, incoming, evolve)
         msch = self._manifest_schema(incoming.schema, buckets, timepart)
         if autosnap:
-            hit_open: set[str] | None = None
-            drop_open: set[str] | None = None
-            if buckets and meta.get("migration"):
-                # MIGRATION-AWARE bucket-granular merge: the open rows
-                # an incoming oid can touch live in an open dir at ANY
-                # modulus still present (live count, plus each chained
-                # doubling's from-modulus) — resolve the hit
-                # DIRECTORIES per vintage from the manifest blocks and
-                # read exactly the set being dropped. Rewriting under
-                # the live modulus migrates the hit old dirs' open rows
-                # as a side effect — the opportunistic half of the
-                # doubling migration; _manifest_flip's carry rule
-                # retires their stamps automatically.
-                incoming = incoming.localCheckpoint(eager=True)
-                drop_open = self._migration_hit_dirs(
-                    incoming, meta, buckets, meta["dirs"],
-                    current_only=True)
-                if drop_open:
-                    pruned = self._read_dirs(path, meta,
-                                             sorted(drop_open))
-                else:
-                    # no existing open dir can hold these oids: merge
-                    # against an empty open side (schema from the
-                    # manifest — no O(cube) listing for a no-op read)
-                    pruned = self._empty_schema_frame(meta["schema"])
-                pruned = pruned.drop(*[c for c in
-                                       ("__batch", "__obucket", "__stime",
-                                        "_current")
-                                       if c in pruned.columns])
-                inc_types = {f.name: f.dataType
-                             for f in incoming.schema.fields}
-                for c in cols:
-                    if c not in pruned.columns:
-                        pruned = pruned.withColumn(
-                            c, F.lit(None).cast(inc_types[c]))
-                open_rows = pruned.select(*cols)
-            elif buckets:
+            live = set(meta["dirs"])
+            if buckets:
                 # BUCKET-GRANULAR merge: the open snapshot is oid-bucket
                 # partitioned, and a snapshot batch can only touch open
                 # rows whose _oid it carries — so read, merge and rewrite
@@ -3703,41 +3584,46 @@ class Engine:
                 # same trick the bounded history import and the ANN
                 # gbucket removal use). At 100 TB this turns the
                 # per-commit write cost from O(|current snapshot|) into
-                # O(open rows of hit buckets + closed delta).
-                # Checkpoint incoming FIRST: the hit-bucket collect and
-                # the merge below must see the same rows — a
-                # nondeterministic source recomputed between them could
-                # land rows in an unmerged bucket, whose open rows the
-                # merge never saw (silently dropping them from the new
-                # open set for that bucket).
-                incoming = incoming.localCheckpoint(eager=True)
-                ob = self._obucket(buckets)
-                hit = sorted(
-                    r["b"] for r in
-                    incoming.select(ob.alias("b")).distinct().collect())
-                hit_open = {f"__obucket={b}" for b in hit}
-                # read exactly the open dirs of hit buckets by RELPATH
-                # (the same selector the post-write carry-forward drops
-                # by, so read-set == drop-set by construction) — the
-                # full-cube _read_raw here listed O(cube) directories
-                # per trickle commit just to partition-filter them
-                # away; at 100 TB that listing was the commit's
-                # dominant metadata cost
-                hit_rels = sorted(
-                    d for d in meta["dirs"]
-                    if d.startswith("_current=true")
-                    and d.split("/")[1] in hit_open)
-                if hit_rels:
-                    pruned = self._read_dirs(path, meta, hit_rels)
-                    pruned = pruned.where(
-                        F.col("_current")
-                        & F.col("__obucket").isin(hit))
+                # O(open rows of hit buckets + closed delta). The hit
+                # buckets come from the probe over the checkpointed
+                # batch, so the merge reads exactly the buckets its
+                # rows land in.
+                if meta.get("migration"):
+                    # MIGRATION-AWARE: the open rows an incoming oid can
+                    # touch live in an open dir at ANY modulus still
+                    # present (live count, plus each chained doubling's
+                    # from-modulus) — resolve the hit DIRECTORIES per
+                    # vintage from the manifest blocks. Rewriting under
+                    # the live modulus migrates the hit old dirs' open
+                    # rows as a side effect — the opportunistic half of
+                    # the doubling migration; _manifest_flip's carry
+                    # rule retires their stamps automatically.
+                    drop_open = self._migration_hit_dirs(
+                        hits, meta, buckets, live, current_only=True)
                 else:
+                    hit_open = {f"__obucket={b}" for b in hits[buckets]}
+                    drop_open = {d for d in live
+                                 if d.startswith("_current=true")
+                                 and d.split("/")[1] in hit_open}
+                # read exactly the dirs being dropped, by RELPATH
+                # (read-set == drop-set by construction) — a full-cube
+                # _read_raw here would list O(cube) directories per
+                # trickle commit just to partition-filter them away
+                if drop_open:
+                    # the value filter is sound under every modulus: a
+                    # dir's path value is in its own modulus's hit set
+                    hit_vals = sorted(set().union(*hits.values()))
+                    pruned = self._read_dirs(
+                        path, meta, sorted(drop_open)).where(
+                        F.col("_current")
+                        & F.col("__obucket").isin(hit_vals))
+                else:
+                    # no existing open dir can hold these oids: merge
+                    # against an empty open side (schema from the
+                    # manifest — no O(cube) listing for a no-op read)
                     pruned = self._empty_schema_frame(meta["schema"])
-                pruned = pruned.drop(*[c for c in
-                                       ("__batch", "__obucket", "__stime",
-                                        "_current")
-                                       if c in pruned.columns])
+                pruned = pruned.drop("__batch", "__obucket", "__stime",
+                                     "_current")
                 # the pruned rows were read under the PRE-commit schema;
                 # null-fill any columns this batch evolves in, like the
                 # history import does for its kept rows
@@ -3749,56 +3635,38 @@ class Engine:
                             c, F.lit(None).cast(inc_types[c]))
                 open_rows = pruned.select(*cols)
             else:
+                drop_open = {d for d in live
+                             if d.startswith("_current=true")}
                 open_rows = table.where(F.col("_current")).select(*cols)
             # one join, one materialization (must happen before rewriting
-            # the partition we read from), then two cheap filters
+            # the partition we read from; the stats aggregate and the
+            # write below must see the same rows)
             tagged = _upsert.snapshot_merge_tagged(
                 open_rows, incoming.select(*cols)
             ).localCheckpoint(eager=True)
-            closed = tagged.where(F.col("__closed")).drop("__closed")
-            new_open = tagged.where(~F.col("__closed")).drop("__closed")
-            # snapshot-isolated commit: both writes land in
-            # directories no live manifest references; the pointer
+            # snapshot-isolated commit: ONE write lands the closed rows
+            # (content-token batch) and the open rows (gen-keyed batch)
+            # in directories no live manifest references; the pointer
             # flip publishes them atomically. A crash anywhere before
             # the flip leaves readers on the old generation and the
             # retried batch rewrites the same directories (the token
             # is content-keyed, the open dir is gen-keyed and the gen
-            # didn't advance).
+            # didn't advance). Retained history dirs count as live too:
+            # overwriting one would corrupt a retained snapshot.
             gen = meta["gen"] + 1
-            live = set(meta["dirs"])
-            closed_rels = self._write_closed_batch(
-                closed, path, buckets=buckets,
-                live=self._retained_dirs(meta),  # history dirs too:
-                # overwriting one would corrupt a retained snapshot
-                timepart=timepart)
-            open_stats = self._write_open(
-                new_open, path, buckets=buckets,
-                open_batch=f"open-g{gen}", timepart=timepart)
-            open_rels = set(open_stats)
-            if drop_open is not None:
-                # migration-aware merge: exactly the dirs read above
-                dirs = (live - drop_open) | set(closed_rels) | open_rels
-            elif hit_open is not None:
-                # drop only the open dirs of MERGED (hit) buckets;
-                # untouched open-bucket dirs stay referenced
-                drop = {d for d in live
-                        if d.startswith("_current=true")
-                        and d.split("/")[1] in hit_open}
-                dirs = (live - drop) | set(closed_rels) | open_rels
-            else:
-                dirs = ({d for d in live
-                         if not d.startswith("_current=true")}
-                        | set(closed_rels) | open_rels)
+            rels = self._write_dirs(
+                tagged.withColumn("_current", ~F.col("__closed"))
+                .drop("__closed"),
+                path, buckets, timepart, open_batch=f"open-g{gen}",
+                live=self._retained_dirs(meta))
+            # untouched open-bucket dirs stay referenced
+            dirs = (live - drop_open) | set(rels)
             hist = self._push_history(
                 meta,
                 layout.get("keep_generations", 0) if layout else 0)
             self._manifest_flip(path, raw, gen, dirs, hist,
                                 stats=self._merged_stats(
-                                    meta,
-                                    self._record_sizes(
-                                        path,
-                                        {**closed_rels, **open_stats}),
-                                    dirs, hist, path=path),
+                                    meta, rels, dirs, hist, path=path),
                                 schema=msch)
             self._sweep_dropped(
                 path, meta,
@@ -3816,14 +3684,15 @@ class Engine:
         else:
             self._history_replace_manifested(
                 path, incoming.select(*cols), cols, buckets, meta, raw,
-                timepart=timepart,
+                hits, timepart=timepart,
                 keep=layout.get("keep_generations", 0) if layout else 0,
                 schema=msch)
 
     def _history_replace_manifested(
         self, path: str, incoming: DataFrame, cols: list[str],
         buckets: int | None, meta: dict, raw_manifest: str,
-        timepart: str | None = None, keep: int = 0,
+        hits: dict[int, set[int]], timepart: str | None = None,
+        keep: int = 0,
         *, schema: dict,
     ) -> None:
         """Bounded, snapshot-isolated history import: rewrite ONLY the
@@ -3831,8 +3700,8 @@ class Engine:
         semantics — delete every stored version of the incoming oids,
         insert the supplied full history, ``sqlalchemy.py:955-963`` —
         without the full-table rewrite). Untouched buckets are never read
-        OR written: the scan below partition-prunes to the hit buckets,
-        and the rewrite lands in fresh generation-scoped directories that
+        OR written: the scan below reads exactly the hit buckets'
+        directories, and the rewrite lands in fresh generation-scoped directories that
         the manifest flip publishes atomically — a concurrent reader sees
         exactly the old or exactly the new history of a replaced oid,
         never both. Unbucketed manifested cubes take the same path with
@@ -3843,40 +3712,33 @@ class Engine:
         incoming, and the generation number doesn't advance until the
         flip — a retry recomputes the identical directories; stranded
         ones stay unreferenced and are swept by the next commit."""
-        # materialize incoming ONCE: the hit-bucket collect, the batch
-        # token and the union write would otherwise re-execute its plan —
-        # and a nondeterministic source (sample/limit) recomputed between
-        # the collect and the write could land rows in a bucket outside
-        # `hit`, whose rewrite would then drop every other oid's rows
-        # there (kept was pruned to hit buckets only)
-        incoming = incoming.localCheckpoint(eager=True)
+        # ``incoming`` projects the commit's checkpointed batch, and
+        # ``hits`` (the probe's bucket values under every live modulus)
+        # was computed from those same rows — a rewrite of exactly the
+        # hit buckets cannot miss a bucket an incoming row lands in
         gen = meta["gen"] + 1
         live = set(meta["dirs"])
-        part_cols = self._partition_keys(buckets, timepart)
-        raw = self._read_raw(path)
-        mig = meta.get("migration")
-        if buckets and mig:
-            # migration-aware: an incoming oid's stored versions live
-            # in dirs at ANY modulus still present (chained doublings
-            # included) — resolve the replaced DIRECTORIES per vintage
-            # from the manifest blocks and read exactly that set (see
-            # the snapshot merge's migration branch). The rewrite under
-            # the live modulus migrates the hit old dirs as a side
-            # effect.
-            replaced_dirs = self._migration_hit_dirs(
-                incoming, meta, buckets, live, current_only=False)
+        if buckets:
+            if meta.get("migration"):
+                # migration-aware: an incoming oid's stored versions
+                # live in dirs at ANY modulus still present (chained
+                # doublings included) — resolve the replaced
+                # DIRECTORIES per vintage from the manifest blocks (see
+                # the snapshot merge's migration branch). The rewrite
+                # under the live modulus migrates the hit old dirs as a
+                # side effect.
+                replaced_dirs = self._migration_hit_dirs(
+                    hits, meta, buckets, live, current_only=False)
+            else:
+                hit_set = {f"__obucket={b}" for b in hits[buckets]}
+                replaced_dirs = {d for d in live
+                                 if d.split("/")[1] in hit_set}
+            # read exactly the replaced set, by relpath
             pruned = (self._read_dirs(path, meta, sorted(replaced_dirs))
-                      if replaced_dirs else raw.where(F.lit(False)))
-        elif buckets:
-            ob = self._obucket(buckets)
-            hit = sorted(r["b"] for r in
-                         incoming.select(ob.alias("b")).distinct().collect())
-            pruned = raw.where(F.col("__obucket").isin(hit))
-            hit_set = {f"__obucket={b}" for b in hit}
-            replaced_dirs = {d for d in live
-                             if d.split("/")[1] in hit_set}
+                      if replaced_dirs
+                      else self._empty_schema_frame(meta["schema"]))
         else:
-            pruned = raw
+            pruned = self._read_raw(path)
             replaced_dirs = set(live)
         keys = incoming.select("_oid").distinct()
         kept = pruned.join(_upsert.maybe_broadcast_keys(keys), "_oid",
@@ -3895,23 +3757,9 @@ class Engine:
             "_current", F.col("_end").isNull())  # recompute, drop old dirs
         union = kept_part.select(*cols, "_current").unionByName(
             inc_part.select(*cols, "_current"))
-        union = union.withColumn(
-            "__batch",
-            F.when(F.col("_current"), F.lit(f"open-g{gen}"))
-            .otherwise(F.lit(f"hr-g{gen}")))
-        if buckets:
-            union = union.withColumn("__obucket", self._obucket(buckets))
-        if timepart:
-            union = union.withColumn("__stime", self._stime_col(timepart))
-        union = union.select(*cols, *part_cols).localCheckpoint(eager=True)
-        (
-            self._cube_writer(union).mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*part_cols)
-            .parquet(path)
-        )
-        new_rels = self._record_sizes(
-            path, self._written_dir_stats(union, buckets, timepart))
+        new_rels = self._write_dirs(
+            union.localCheckpoint(eager=True), path, buckets, timepart,
+            open_batch=f"open-g{gen}", closed_batch=f"hr-g{gen}")
         dirs = (live - replaced_dirs) | set(new_rels)
         hist = self._push_history(meta, keep)
         self._manifest_flip(path, raw_manifest, gen, dirs, hist,

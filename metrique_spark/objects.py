@@ -142,18 +142,30 @@ def stamp(
     return work
 
 
+def validity_checks() -> list[Column]:
+    """The aggregate columns ``validate`` checks — exposed so a caller
+    that already runs one aggregate over a batch (the engine's commit
+    probe) folds these checks into it instead of paying a second pass."""
+    return [
+        F.sum(F.col("_oid").isNull().cast("int")).alias("null_oid"),
+        F.sum((F.col("_end") < F.col("_start")).cast("int")).alias("bad_interval"),
+    ]
+
+
+def raise_invalid(row) -> None:
+    """Raise ``validate``'s errors from a row carrying the
+    ``validity_checks`` aggregates."""
+    if row["null_oid"]:
+        raise ValueError(f"{row['null_oid']} objects with null _oid")
+    if row["bad_interval"]:
+        raise ValueError(f"{row['bad_interval']} objects with _end < _start")
+
+
 def validate(df: DataFrame) -> None:
     """Cheap invariant checks (reference asserts per object,
     ``core_api.py:76-77,114-115``): raises on null ``_oid`` or
     ``_end < _start``. One aggregate pass, no collect of data rows."""
-    bad = df.select(
-        F.sum(F.col("_oid").isNull().cast("int")).alias("null_oid"),
-        F.sum((F.col("_end") < F.col("_start")).cast("int")).alias("bad_interval"),
-    ).first()
-    if bad["null_oid"]:
-        raise ValueError(f"{bad['null_oid']} objects with null _oid")
-    if bad["bad_interval"]:
-        raise ValueError(f"{bad['bad_interval']} objects with _end < _start")
+    raise_invalid(df.select(*validity_checks()).first())
 
 
 def assign_autoincrement(df: DataFrame, col: str = "id",

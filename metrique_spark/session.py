@@ -54,6 +54,9 @@ def get_spark(
         # the length is captured at first render, so it must be set at
         # session build, not at audit time).
         .config("spark.sql.maxMetadataStringLength", "100000")
+        # No per-call DataFrame call-site capture: it costs ~4 py4j round
+        # trips per F.*/withColumn call, dozens of calls per commit.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

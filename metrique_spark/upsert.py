@@ -14,13 +14,22 @@ Reference semantics (``metrique/sqlalchemy.py:906-975``):
 - ``autosnap=None`` auto-detects: True iff every incoming object is open
   (``:910-915``).
 
-Scale design — the cube table is parquet partitioned by a ``_current``
-boolean:
+Scale design — the cube is parquet partitioned by a ``_current``
+boolean, an oid bucket and a ``__batch`` name, and every commit writes
+FRESH directories that a manifest pointer flip publishes atomically
+(see ``Engine._manifest_flip``):
 
-- snapshot upsert touches ONLY the ``_current=true`` partition (read it,
-  merge, dynamically overwrite it) and *appends* newly-closed rows to the
-  history partition. History — the ever-growing bulk at 100 TB — is never
-  rewritten on the hot path.
+- snapshot upsert reads ONLY the open rows of the oid-bucket
+  directories the batch's oids hash into, merges them with the batch,
+  and writes the result — newly closed rows under a content-token
+  ``__batch`` (a retry rewrites the same directory), open rows under
+  the generation's ``open-g{gen}`` — in ONE partitioned write. History,
+  the ever-growing bulk at 100 TB, is never rewritten on the hot path;
+  ``compact`` folds the small closed batches later.
+- a commit costs a fixed handful of Spark actions whatever the batch
+  size: one probe over the batch (validation, autosnap, hit buckets),
+  the merge materialization, one stats-and-token aggregate and the
+  write (``Engine._write_dirs``).
 - the merge itself is one join on ``_oid``. The incoming batch is typically
   small relative to the table, so it is broadcast when under the threshold;
   otherwise AQE picks the strategy.
@@ -64,12 +73,6 @@ def latest_per_oid(incoming: DataFrame) -> DataFrame:
     )
 
 
-def detect_autosnap(incoming: DataFrame) -> bool:
-    """True iff all incoming objects are current versions (reference
-    ``sqlalchemy.py:910-915``)."""
-    return incoming.where(F.col("_end").isNotNull()).isEmpty()
-
-
 def snapshot_merge_tagged(open_rows: DataFrame, incoming: DataFrame) -> DataFrame:
     """Single-pass snapshot merge: ONE full-outer join on ``_oid``; each
     joined row emits its output role(s) — kept / inserted / (closed +
@@ -78,15 +81,15 @@ def snapshot_merge_tagged(open_rows: DataFrame, incoming: DataFrame) -> DataFram
 
     The one-pass shape is load-bearing at scale: filtering the join three
     times (kept/inserted/closed as separate branches) re-executes the join
-    per branch — measured 9 exchanges vs 4 for this plan. Both join inputs
-    arrive already hash-partitioned by ``_oid`` from their dedup windows,
-    so the join itself adds no exchange.
+    per branch — measured 9 exchanges vs 4 for this plan.
+
+    ``incoming`` must hold at most one row per ``_oid`` (the engine
+    applies ``latest_per_oid`` first); arriving hash-partitioned by
+    ``_oid`` from that dedup window, it joins without another exchange.
     """
     cols = open_rows.columns
-    inc = latest_per_oid(incoming)
-
     o = open_rows.alias("o")
-    n = inc.alias("n")
+    n = incoming.alias("n")
     joined = o.join(n, on=F.col("o._oid") == F.col("n._oid"), how="full_outer")
 
     has_old = F.col("o._oid").isNotNull()
@@ -117,18 +120,6 @@ def snapshot_merge_tagged(open_rows: DataFrame, incoming: DataFrame) -> DataFram
         F.explode(F.filter(outs, lambda x: x.isNotNull())).alias("r")
     ).select("r.*")
     return _regen_id(exploded)
-
-
-def snapshot_merge(
-    open_rows: DataFrame, incoming: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """Snapshot merge split into ``(new_open, newly_closed)`` — thin facade
-    over ``snapshot_merge_tagged``; callers that write both outputs should
-    materialize the tagged frame once and filter it instead."""
-    tagged = snapshot_merge_tagged(open_rows, incoming)
-    new_open = tagged.where(~F.col("__closed")).drop("__closed")
-    closed = tagged.where(F.col("__closed")).drop("__closed")
-    return new_open, closed
 
 
 BROADCAST_KEYS_CAP = 10_000_000

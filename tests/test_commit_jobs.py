@@ -1,0 +1,98 @@
+"""Spark-job budget of a trickle commit and of compaction.
+
+A commit of a handful of objects is dominated by fixed per-job cost, not
+data volume, so the number of Spark jobs it runs is the figure to hold:
+one probe over the batch (checkpoint + aggregate), the merge
+checkpoint, one stats-and-token aggregate and one partitioned write.
+Also pins the token format of the content-keyed closed batch against
+a plain global aggregate."""
+
+import itertools
+
+from pyspark.sql import functions as F
+
+from metrique_spark.engine import Engine
+from metrique_spark.objects import stamp
+
+_groups = itertools.count()
+
+
+def _jobs(spark, fn):
+    """Run ``fn`` under a fresh job group; return (result, job count)."""
+    sc = spark.sparkContext
+    group = f"commit-jobs-{next(_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _objs(spark, rows, start):
+    df = spark.createDataFrame(rows, "oid long, col_1 long")
+    return stamp(df, oid="oid", start=F.to_timestamp(F.lit(start)))
+
+
+def test_trickle_upsert_and_compact_job_budget(spark, tmp_path):
+    eng = Engine(spark, warehouse=str(tmp_path / "wh"), oid_buckets=4)
+    eng.upsert("c", _objs(spark, [(i, i) for i in range(64)],
+                          "2024-01-01"), stamped=True)
+    # warm-up merge: the counted commit is not the cube's first merge
+    eng.upsert("c", _objs(spark, [(1, 101)], "2024-01-02"), stamped=True)
+
+    batch = _objs(spark, [(2, 102), (3, 103), (100, 1)], "2024-01-03")
+    batch = batch.localCheckpoint(eager=True)
+    _, n = _jobs(spark, lambda: eng.upsert("c", batch, stamped=True))
+    assert n <= 9, f"trickle upsert ran {n} Spark jobs"
+
+    assert eng.count("c") == 65
+    assert eng.count("c", date="~") == 68
+    assert eng.count("c", "_end != None", date="~") == 3
+    row = eng.find("c", oids=[3]).collect()
+    assert [r["col_1"] for r in row] == [103]
+
+    removed, n = _jobs(spark, lambda: eng.compact("c"))
+    assert removed >= 1
+    assert n <= 4, f"compact ran {n} Spark jobs"
+    assert eng.count("c") == 65
+    assert eng.count("c", "_end != None", date="~") == 3
+
+
+def test_closed_batch_token_matches_global_aggregate(spark, tmp_path):
+    """The content token of a closed batch, computed per output
+    directory and summed on the driver, equals one global count + sum
+    of per-row xxhash64(_id, _end) — over a batch spanning several
+    buckets and months, with hashes of both signs."""
+    eng = Engine(spark, warehouse=str(tmp_path / "wh"), oid_buckets=4,
+                 time_partition="month")
+    n_oids = 40
+    eng.upsert("t", _objs(spark, [(i, i) for i in range(n_oids)],
+                          "2024-01-15"), stamped=True)
+    eng.upsert("t", _objs(spark, [(i, i + 1) for i in range(0, n_oids, 2)],
+                          "2024-02-15"), stamped=True)
+    eng.upsert("t", _objs(spark, [(i, i + 2) for i in range(n_oids)],
+                          "2024-03-15"), stamped=True)
+    meta = eng._manifest(eng._path("t"))
+    tok_rows: dict[str, int] = {}
+    tok_dirs: dict[str, int] = {}
+    for d in meta["dirs"]:
+        if d.startswith("_current=false"):
+            t = Engine._batch_dir_token(d)
+            tok_rows[t] = tok_rows.get(t, 0) + meta["stats"]["rows"][d]
+            tok_dirs[t] = tok_dirs.get(t, 0) + 1
+    # the third commit closed every oid: one token over 2 months x 4
+    # buckets of directories
+    (tok3,) = [t for t, n in tok_rows.items() if n == n_oids]
+    assert tok_dirs[tok3] > 4
+
+    rows = (eng.find("t", date="~")
+            .where(F.col("_end") == F.to_timestamp(F.lit("2024-03-15"))))
+    assert rows.select(F.split(F.col("_start").cast("string"), "-")[1]
+                       .alias("m")).distinct().count() == 2
+    h = F.xxhash64("_id", F.col("_end").cast("string"))
+    ref = rows.agg(F.count(F.lit(1)).alias("n"),
+                   F.sum(h.cast("decimal(38,0)")).alias("s"),
+                   F.min(h).alias("lo"), F.max(h).alias("hi")).first()
+    assert ref["lo"] < 0 < ref["hi"]
+    assert tok3 == f"n{ref['n']}x{ref['s']}"

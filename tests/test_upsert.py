@@ -124,20 +124,24 @@ def test_null_hash_upsert_does_not_drop_objects(spark, engine):
     assert engine.find("nh").first()["col_1"] == 11
 
 
-def test_crash_between_closed_and_open_writes_recovers(spark, engine, monkeypatch):
+def test_crash_between_data_write_and_flip_recovers(spark, engine,
+                                                    monkeypatch):
     """A crash mid-commit must leave readers on EXACTLY the previous
-    generation (the closed-row write landed on disk but the manifest
+    generation (the closed and open rows landed on disk but the manifest
     pointer never flipped — snapshot isolation), and retrying the same
     batch converges to the crash-free state (the gen didn't advance, so
     the retry overwrites the same unreferenced directories)."""
     engine.upsert("cr", _objs(spark, [(1, 10), (2, 20)], "2014-01-01"), stamped=True)
 
-    # inject a crash AFTER the closed-row write, BEFORE the open write
-    def boom(self, df, path, buckets=None, open_batch="open",
-             timepart=None):
+    # inject a crash AFTER the commit's single data write, BEFORE the
+    # manifest flip
+    real = Engine._write_dirs
+
+    def boom(self, *a, **kw):
+        real(self, *a, **kw)
         raise RuntimeError("injected crash")
 
-    monkeypatch.setattr(Engine, "_write_open", boom)
+    monkeypatch.setattr(Engine, "_write_dirs", boom)
     batch = _objs(spark, [(1, 11)], "2014-02-01")
     with pytest.raises(RuntimeError, match="injected crash"):
         engine.upsert("cr", batch, stamped=True)
@@ -177,20 +181,25 @@ def test_idempotency_token_is_distributed(spark, engine):
     every closed _id into one aggregation buffer, which is gigabytes for a
     large upsert batch. Pin the plan: no collect_list/sort_array."""
     engine.upsert("tok", _objs(spark, [(1, 10)], "2014-01-01"), stamped=True)
-    closed = engine.table("tok").where("_end is not null")
-    captured = {}
-    orig_agg = type(closed).agg
+    from pyspark.sql.group import GroupedData
+
+    captured = []
+    orig_agg = GroupedData.agg
 
     def spy_agg(self, *exprs):
         out = orig_agg(self, *exprs)
-        captured["plan"] = out._jdf.queryExecution().analyzed().toString()
+        captured.append(out._jdf.queryExecution().analyzed().toString())
         return out
 
     import unittest.mock as mock
-    with mock.patch.object(type(closed), "agg", spy_agg):
+    with mock.patch.object(GroupedData, "agg", spy_agg):
         engine.upsert("tok", _objs(spark, [(1, 11)], "2014-02-01"),
                       stamped=True)
-    plan = captured["plan"]
+    # the commit aggregates twice: the probe over the batch, and the
+    # stats-and-token pass grouped by output directory
+    (plan,) = [p for p in captured if p.startswith("Aggregate [_current")]
+    assert not any("collect_list" in p or "sort_array" in p
+                   for p in captured)
     assert "collect_list" not in plan and "sort_array" not in plan
     assert "xxhash64" in plan and "count" in plan
     # and the upsert semantics are intact: one closed + one open version
