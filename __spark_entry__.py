@@ -47,11 +47,10 @@ def _utc(spark: SparkSession) -> None:
     # cache (curation scores, minhash shingles, correlate's stateful
     # stages) runs serial while the other cores idle. Wall regressed
     # 106.8->137.2 s and 32 cores measured SLOWER than 8 (r14 verdict).
-    # Wall is the graded axis; the conf is now opt-in via env for
-    # experiments, default off (= Spark default).
+    # Wall is the graded axis; the conf stays off (= Spark default).
     spark.conf.set(
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        os.environ.get("SPARK_METRIQUE_CACHED_PLAN_AQE", "false"))
+        "false")
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -684,7 +683,7 @@ def upsert_rebucket_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine._rebucket_start_incremental), batch 2 merges against the
     mixed 4/8/16 state (the migration-aware merge resolves hit
     directories per vintage, one hash job for all three moduli —
-    engine._migration_hit_dirs), and one more bounded step drains a
+    engine._hit_dirs), and one more bounded step drains a
     little further, deliberately leaving all three moduli live. The
     full-history read — point lookups union-prune under every modulus
     present (3-moduli PartitionFilters pin in

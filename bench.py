@@ -190,11 +190,11 @@ def main() -> None:
         # round-14 experiment of letting AQE re-size cached plans
         # serialized every pass over small persisted frames onto one
         # core and regressed the cold-JVM wall bench 28% (r14 verdict);
-        # env-overridable for experiments, mirrored in _utc in
-        # __spark_entry__.py so driver and bench behave identically
+        # mirrored in _utc in __spark_entry__.py so driver and bench
+        # behave identically
         .config(
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            os.environ.get("SPARK_METRIQUE_CACHED_PLAN_AQE", "false"))
+            "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         # localCheckpoint/persist blocks are only released when the
         # GC-driven ContextCleaner runs; the default periodicGC interval
@@ -209,8 +209,7 @@ def main() -> None:
         # processing without the pause; with the flag the spikes are
         # gone (monotone 6.3 s floor over 10 runs)
         .config("spark.driver.extraJavaOptions",
-                os.environ.get("SPARK_METRIQUE_GC_OPTS",
-                               "-XX:+ExplicitGCInvokesConcurrent"))
+                "-XX:+ExplicitGCInvokesConcurrent")
         # the UI hosts the public monitoring REST API the task-attributed
         # per-query CPU record reads (plans.metrics.StageMetricsProbe)
         .config("spark.ui.enabled", "true")
@@ -219,12 +218,6 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-
-    # spread width chunk (see dedup.spread_small_scan): env override for
-    # controlled A/Bs; unset -> the module default applies
-    if os.environ.get("SPARK_METRIQUE_SPREAD_CHUNK"):
-        spark.conf.set("spark.metrique.spread.chunkBytes",
-                       os.environ["SPARK_METRIQUE_SPREAD_CHUNK"])
 
     import __spark_entry__ as entrymod
 

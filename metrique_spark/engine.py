@@ -124,8 +124,17 @@ def _old_format_error(path: str, what: str) -> ValueError:
     like any other unusable leftover."""
     return ValueError(
         f"cube at {path!r} is in an older on-disk format ({what}); this "
-        "engine reads only a format-2 _layout.json plus a manifest root "
-        "that carries a schema — rebuild the cube")
+        "engine reads only a format-2 _layout.json plus a segmented "
+        "(format-4) manifest root that carries a schema — rebuild the "
+        "cube")
+
+
+def _check_buckets(oid_buckets) -> None:
+    """Every cube is oid-bucketed: the count is an int >= 1."""
+    if not isinstance(oid_buckets, int) or oid_buckets < 1:
+        raise ValueError(
+            "oid_buckets must be > 0, an int (oid_buckets=1 is the "
+            f"single-bucket layout), got {oid_buckets!r}")
 
 
 class Engine:
@@ -173,7 +182,9 @@ class Engine:
         # is recorded per cube in a ``_layout.json`` sidecar at first
         # write, so every later writer — whatever ITS default — buckets
         # identically; raise it (e.g. 1024) for cubes whose history is
-        # genuinely huge.
+        # genuinely huge. Every cube is bucketed: 1 is the single-bucket
+        # layout.
+        _check_buckets(oid_buckets)
         self.oid_buckets = oid_buckets
         # optional third partition level for NEW cubes: a ``__stime``
         # period key derived from ``_start`` (``"month"`` → yyyy-MM,
@@ -367,8 +378,8 @@ class Engine:
 
         ``bucket_values`` prunes the DIRECTORY LIST handed to the
         reader to the dirs whose path-encoded ``__obucket`` value is in
-        the set (dirs without a bucket component are kept) — exactly
-        the dirs the value-level partition filter would leave, applied
+        the set — exactly the dirs the value-level partition filter
+        would leave, applied
         BEFORE Spark lists files, so a point lookup's plan-time listing
         is O(hit dirs) instead of O(cube): past ~32 paths Spark runs
         the listing as a one-task-per-directory JOB, which was the
@@ -450,47 +461,38 @@ class Engine:
                                F.col("_current").cast("boolean"))
         return df
 
-    def _migration_hit_dirs(self, hits: dict[int, set[int]], meta: dict,
-                            buckets: int, dirs,
-                            current_only: bool) -> set[str]:
+    @staticmethod
+    def _hit_dirs(hits: dict[int, set[int]], meta: dict, buckets: int,
+                  dirs, current_only: bool) -> set[str]:
         """The manifest directories a merge/import must read-and-drop
-        for a batch during in-flight doubling migration(s): an oid's
-        rows live in a directory at modulus ``m`` only where
-        ``__obucket = hash % m`` — resolved per DIRECTORY vintage from
-        the per-dir modulus blocks (a value-level predicate cannot tell
-        vintages apart). ``hits`` maps every live modulus to the bucket
-        values the batch hashes into under it (the commit probe's
-        output, ``_probe``)."""
+        for a batch: an oid's rows live in a directory at modulus ``m``
+        only where ``__obucket = hash % m``. Outside a migration every
+        directory is at the live modulus ``buckets``; during in-flight
+        doubling migration(s) the modulus resolves per DIRECTORY
+        vintage from the per-dir modulus blocks (a value-level
+        predicate cannot tell vintages apart). ``hits`` maps every live
+        modulus to the bucket values the batch hashes into under it
+        (the commit probe's output, ``_probe``)."""
         blocks = meta.get("migration") or []
         hit = {m: {f"__obucket={v}" for v in vals}
                for m, vals in hits.items()}
         dmod = {d: b["from"] for b in blocks for d in b["old_dirs"]}
         return {d for d in dirs
                 if (not current_only or d.startswith("_current=true"))
-                and "/__obucket=" in d
                 and d.split("/")[1] in hit[dmod.get(d, buckets)]}
 
     @staticmethod
     def _prune_dirs_by_bucket(dirs: list, values: Sequence[int]) -> list:
         """Directory-level twin of the ``__obucket`` value filter: keep
-        a dir iff its path-encoded bucket value is in the hit set (dirs
-        without a bucket component are kept — the row predicate decides
-        there). Exactly the directories partition pruning would leave,
-        but applied before the reader ever lists files. Sound under
+        a dir iff its path-encoded bucket value is in the hit set.
+        Exactly the directories partition pruning would leave, but
+        applied before the reader ever lists files. Sound under
         in-flight doubling migrations for the same reason the value
         filter is: ``values`` is the union of the hit values under
         EVERY live modulus (``_oid_bucket_values(moduli=...)``), and a
         dir's path value was written under one of them."""
-        vals = {str(v) for v in values}
-        out = []
-        for d in dirs:
-            i = d.find("/__obucket=")
-            if i < 0:
-                out.append(d)
-                continue
-            if d[i + 11:].split("/", 1)[0] in vals:
-                out.append(d)
-        return out
+        vals = {f"__obucket={v}" for v in values}
+        return [d for d in dirs if d.split("/")[1] in vals]
 
     def _manifest_oid_dtype(self, path: str,
                             generation: int | None = None):
@@ -1502,13 +1504,12 @@ class Engine:
     # implement to read or write the cube without corrupting it —
     # ``rebucket`` stamped 3 (manifest-first bucket counts; incremental
     # migrations add mixed-modulus pruning); 4 adds the SEGMENTED
-    # manifest (root pointer → per-bucket-range segment files, written
-    # by every commit to a bucketed cube) and per-directory modulus
-    # stamps (chained doubling migrations) — an engine that only reads
-    # monolithic manifests, or prunes under at most two moduli, refuses
-    # loud here instead of misreading the cube. (Engines that PREDATE
-    # the field can't be fenced retroactively — the post-flip sidecar
-    # count rewrite shrinks their stale window; see rebucket.)
+    # manifest (root pointer → per-bucket-range segment files, the only
+    # manifest form, written by every commit to every cube) and
+    # per-directory modulus stamps (chained doubling migrations) — an
+    # engine that only reads monolithic manifests, or prunes under at
+    # most two moduli, refuses loud here instead of misreading the
+    # cube. Every sidecar carries the fence from the first write.
     _SUPPORTED_LAYOUT_FORMAT = 4
 
     def _cube_layout(self, path: str) -> dict | None:
@@ -1520,8 +1521,8 @@ class Engine:
         later history import.
 
         An unreadable sidecar raises instead of reading as absent: a
-        writer that silently treated a bucketed cube as unbucketed would
-        append mixed partition levels and corrupt the cube."""
+        writer that silently guessed the layout would bucket or period-
+        partition with the wrong keys and corrupt the cube."""
         import json
 
         p = self.fs.join(path, self._LAYOUT_SIDECAR)
@@ -1550,10 +1551,6 @@ class Engine:
                 "the engine")
         return meta
 
-    def _cube_buckets(self, path: str) -> int | None:
-        meta = self._cube_layout(path)
-        return meta.get("oid_buckets") if meta else None
-
     @staticmethod
     def _live_buckets(meta: dict | None, layout: dict | None) -> int | None:
         """Authoritative oid-bucket count for a committed generation:
@@ -1565,17 +1562,17 @@ class Engine:
             return meta["oid_buckets"]
         return layout.get("oid_buckets") if layout else None
 
-    def _buckets_for_read(self, path: str, layout: dict | None,
-                          generation: int | None
-                          ) -> tuple[int | None, list[int]]:
-        """``(bucket count, prune moduli)`` valid for pruning a read of
-        ``generation`` (None = live). A retained generation carries its
-        own count when one was manifested at retention time; a fieldless
-        entry predates any rebucket, so the layout sidecar's first-write
-        count is its count (``_backfill_history_buckets`` stamps every
-        entry explicitly before that sidecar value can change). Unknown
-        generation → ``(None, [])`` (no prune; the scan raises the
-        proper error).
+    def _read_moduli(self, path: str, layout: dict | None,
+                     generation: int | None) -> list[int]:
+        """The oid-bucket moduli valid for pruning a read of
+        ``generation`` (None = live), live count first. A retained
+        generation carries its own count when one was manifested at
+        retention time; a fieldless entry predates any rebucket, so the
+        layout sidecar's first-write count is its count
+        (``_backfill_history_buckets`` stamps every entry explicitly
+        before that sidecar value can change). No committed or unknown
+        generation → ``[]`` (no prune; the scan raises the proper
+        error).
 
         The moduli list is what a point-lookup prune must UNION over:
         normally just the count itself; during in-flight doubling
@@ -1589,7 +1586,7 @@ class Engine:
         meta = self._manifest(path)
         sidecar = layout.get("oid_buckets") if layout else None
         if meta is None:
-            return sidecar, [sidecar] if sidecar else []
+            return []
         if generation is None or generation == meta["gen"]:
             buckets = self._live_buckets(meta, layout)
             mods = {b["from"] for b in (meta.get("migration") or [])}
@@ -1600,10 +1597,9 @@ class Engine:
                     mods = set(h.get("moduli", ()))
                     break
             else:
-                return None, []
+                return []
         moduli = [buckets] if buckets else []
-        moduli += sorted(m for m in mods if m and m != buckets)
-        return buckets, moduli
+        return moduli + sorted(m for m in mods if m and m != buckets)
 
     def _session_tz(self) -> str:
         return self.spark.conf.get("spark.sql.session.timeZone")
@@ -1648,11 +1644,11 @@ class Engine:
         # write. Data under a format-less sidecar is an older format:
         # _cube_state refuses it, never retries it as new (which would
         # sweep it).
-        meta: dict = {"oid_buckets": buckets, "format": 2}
-        if buckets:
-            # bucketed cubes commit SEGMENTED manifests from the first
-            # write: fence engines that only read monolithic ones
-            meta["min_format"] = self._SUPPORTED_LAYOUT_FORMAT
+        # ``min_format`` fences engines that only read monolithic
+        # manifests: every cube commits SEGMENTED ones from its first
+        # write.
+        meta: dict = {"oid_buckets": buckets, "format": 2,
+                      "min_format": self._SUPPORTED_LAYOUT_FORMAT}
         if timepart:
             meta["time_partition"] = timepart
             meta["time_zone"] = self._session_tz()
@@ -1718,10 +1714,8 @@ class Engine:
                     self._sweep_unreferenced(path, set())
                 return
             self._sweep_unreferenced(path, self._retained_dirs(meta))
-            root = self._manifest_root(path)
-            if root is not None and "segs" in root:
-                # manifest segment files stranded by crashed commits
-                self._sweep_segments(path, root)
+            # manifest segment files stranded by crashed commits
+            self._sweep_segments(path, self._manifest_root(path))
 
     def describe(self, cube: str) -> dict:
         """Zero-scan storage-health report from manifest/sidecar state
@@ -1752,9 +1746,8 @@ class Engine:
                                  "keep_generations") if k in layout},
         }
         rollup = (root or {}).get("rollup")
-        if (root is not None and root.get("format", 0) >= 4
-                and rollup is not None and "token_bytes" in rollup):
-            # ROOT-ONLY fast path (format 4): every scalar below was
+        if rollup is not None and "token_bytes" in rollup:
+            # ROOT-ONLY fast path: every scalar below was
             # rolled up at commit time, so describe costs one small
             # JSON parse — O(segment refs), never O(dirs) — at any
             # cube size; tier recommendation is evaluated against the
@@ -1844,10 +1837,8 @@ class Engine:
                 # old-modulus (stamped) dirs excluded: two vintages
                 # sharing a bucket VALUE are different buckets
                 continue
-            seg = next((s for s in d.split("/")
-                        if s.startswith("__obucket=")), None)
-            if seg:
-                buckets[seg] = buckets.get(seg, 0) + b
+            seg = d.split("/")[1]
+            buckets[seg] = buckets.get(seg, 0) + b
         if buckets:
             # per-bucket footprint from manifest stats alone: when the
             # largest bucket outgrows what one merge/import should
@@ -1903,12 +1894,13 @@ class Engine:
         the count manifest-first (``_live_buckets``) and every later
         flip carries it forward; retained generations keep their own
         count for time-travel pruning (``_push_history``). The layout
-        sidecar deliberately keeps the FIRST-WRITE count: it is the
-        fallback for fieldless pre-rebucket history entries, and editing
-        it could not be atomic with the data anyway. (Consequence: every
-        writer of a rebucketed cube must be at least this engine
-        version — an older writer reading only the sidecar would merge
-        with the wrong modulus.)
+        sidecar's count converges only AFTER the flip
+        (``_sync_layout_after_rebucket``, once fieldless history entries
+        are stamped with their old count): that write cannot be atomic
+        with the data, so the manifest stays authoritative. Every cube
+        is oid-bucketed, so a single-bucket cube (``oid_buckets=1``)
+        grows the same way; the manifest is segmented before and after,
+        so no format changes here.
 
         Content is invariant (physical-only, like compaction); a crash
         before the flip leaves readers on the old generation and the
@@ -1928,7 +1920,7 @@ class Engine:
         METADATA-ONLY — it records the new live count plus a
         ``migration`` block naming the directories still at the old
         modulus, and no data moves. From then on (a) reads union-prune
-        point lookups under both moduli (``_buckets_for_read`` — sound
+        point lookups under both moduli (``_read_moduli`` — sound
         whichever vintage a directory is), (b) every merge, history
         import and compaction that rewrites an old directory migrates
         it as a side effect (the rewrite uses the live modulus and the
@@ -1939,8 +1931,7 @@ class Engine:
         converges (``_sync_layout_after_rebucket``). Crash anywhere =
         any other commit crash: the flip is the commit point and a
         half-migrated cube is a fully valid state indefinitely."""
-        if oid_buckets <= 0:
-            raise ValueError("oid_buckets must be > 0")
+        _check_buckets(oid_buckets)
         if incremental:
             self._rebucket_start_incremental(cube, oid_buckets)
             return
@@ -2001,8 +1992,6 @@ class Engine:
         wrong directories. Their true count IS the current sidecar
         value: fieldless entries can only predate the first rebucket."""
         fallback = self._live_buckets(meta, layout)
-        if fallback is None:
-            return
         for h in hist:
             h.setdefault("oid_buckets", fallback)
 
@@ -2042,12 +2031,11 @@ class Engine:
         mid-migration is legal — directories already stamped keep
         their (older) modulus, the rest get stamped at the
         pre-doubling live count, and reads union-prune under every
-        modulus present (``_buckets_for_read``), so growing 16 → 1024
+        modulus present (``_read_moduli``), so growing 16 → 1024
         is six starts whose drains overlap freely instead of six
-        fully-sequential windows. The sidecar's ``min_format`` fence
-        is written by the flip BEFORE the CAS (a crash between the two
-        leaves an over-fenced, uncorrupted cube — the safe direction);
-        its COUNT stays at the first-write value until completion — no
+        fully-sequential windows. The sidecar carries the
+        ``min_format`` fence from the cube's first write; its COUNT
+        stays at the first-write value until completion — no
         single sidecar number can describe a mixed-modulus cube, and
         the manifest is authoritative throughout."""
         with self._write_lock(cube):
@@ -2067,11 +2055,6 @@ class Engine:
                     self._sync_layout_after_rebucket(path, layout,
                                                      oid_buckets)
                 return  # already at / already migrating to this target
-            if not cur:
-                raise ValueError(
-                    f"cube {cube!r} is unbucketed — incremental "
-                    "migration needs an oid-bucketed cube (use a full "
-                    "rebucket)")
             if oid_buckets != 2 * cur:
                 raise ValueError(
                     f"incremental rebucket supports DOUBLING only "
@@ -2079,12 +2062,10 @@ class Engine:
                     "Chain doublings (each start is metadata-only and "
                     "they drain concurrently), or use a full rebucket")
             stamped = {d for b in blocks for d in b["old_dirs"]}
-            old_dirs = sorted(d for d in meta["dirs"]
-                              if "/__obucket=" in d and d not in stamped)
+            old_dirs = sorted(d for d in meta["dirs"] if d not in stamped)
             if not old_dirs and not blocks:
                 raise RuntimeError(
-                    f"cube {cube!r} has no bucketed directories to "
-                    "migrate — layout/manifest disagree")
+                    f"cube {cube!r} has no directories to migrate")
             gen = meta["gen"] + 1
             keep = layout.get("keep_generations", 0)
             hist = self._push_history(meta, keep)
@@ -2127,8 +2108,7 @@ class Engine:
             layout = self._cube_layout(path) or {}
             buckets = self._live_buckets(meta, layout)
             if not blocks:
-                if (isinstance(buckets, int)
-                        and layout.get("oid_buckets") != buckets):
+                if layout.get("oid_buckets") != buckets:
                     # converge the sidecar: a crash between the
                     # completing flip and its sidecar sync leaves the
                     # first-write count/fence behind — stepping a
@@ -2220,14 +2200,15 @@ class Engine:
     # next successful commit.
 
     _MANIFEST_SIDECAR = "_manifest.json"
-    # Segmented manifest (format 4, bucketed cubes): the root sidecar
-    # stays the single CAS commit point but holds only the generation,
-    # rolled-up stats, and REFERENCES into ``_manifest_seg/`` — one
-    # immutable JSON segment per oid-bucket RANGE carrying that range's
-    # directory list, per-directory stats, and per-directory old-modulus
-    # stamps. A commit serializes only the segments whose content
-    # changed (unchanged ranges carry forward by filename reference,
-    # like data directories), so per-commit manifest bytes are
+    # Segmented manifest (format 4, the only manifest form): the root
+    # sidecar stays the single CAS commit point but holds only the
+    # generation, rolled-up stats, and REFERENCES into
+    # ``_manifest_seg/`` — one immutable JSON segment per oid-bucket
+    # RANGE carrying that range's directory list, per-directory stats,
+    # and per-directory old-modulus stamps. A commit serializes only
+    # the segments whose content changed (unchanged ranges carry
+    # forward by filename reference, like data directories), so
+    # per-commit manifest bytes are
     # O(touched buckets), not O(cube) — the monolithic manifest was the
     # one measured super-linear per-commit cost at 100 TB directory
     # counts (tens of MB re-serialized per 2-row trickle commit).
@@ -2247,7 +2228,9 @@ class Engine:
         """Parse (only) the manifest ROOT sidecar — O(segments), not
         O(dirs): enough for describe()/metadata-count rollups and the
         CAS protocol. ``_manifest`` assembles the full flat dict from
-        it. A root without a ``schema`` is an older format: refused."""
+        it. A root without a ``schema``, or a monolithic root (no
+        ``format: 4`` segment refs, for itself or a retained
+        generation), is an older format: refused."""
         import json
 
         if raw is None:
@@ -2267,6 +2250,9 @@ class Engine:
                 "back to a listing read")
         if root.get("schema") is None:
             raise _old_format_error(path, "manifest root without a schema")
+        if (root.get("format") != 4 or "segs" not in root
+                or any("segs" not in h for h in root.get("history", []))):
+            raise _old_format_error(path, "monolithic manifest root")
         return root
 
     @classmethod
@@ -2274,16 +2260,9 @@ class Engine:
         """The manifest segment a directory belongs to: its oid-bucket
         VALUE range (``b{value // span}``) — the same key whatever the
         directory's modulus vintage, so a point lookup's pruned bucket
-        values name exactly the segments worth loading. Unbucketed
-        directories share the ``m`` segment."""
-        i = rel.find("/__obucket=")
-        if i < 0:
-            return "m"
-        v = rel[i + 11:].split("/", 1)[0]
-        try:
-            return f"b{int(v) // cls._SEG_SPAN:05d}"
-        except ValueError:
-            return "m"
+        values name exactly the segments worth loading."""
+        v = rel.split("/")[1].removeprefix("__obucket=")
+        return f"b{int(v) // cls._SEG_SPAN:05d}"
 
     def _load_segment(self, path: str, fname: str) -> dict:
         full = self.fs.join(path, self._MANIFEST_SEGDIR, fname)
@@ -2298,17 +2277,15 @@ class Engine:
     def _assemble(self, path: str, root: dict) -> dict:
         """The flat manifest dict every consumer reads —
         ``{gen, dirs, stats, schema, oid_buckets, history, migration}``
-        — assembled from a segmented root (or copied from a monolithic
-        one: unbucketed cubes have no segments). Wall-clock
-        stats (``max_end``/``min_start``) are taken only from segments
-        recorded under the root's commit timezone — same skipped-not-
-        wrong contract as the monolithic ``stats.tz``; byte/row stats
-        are tz-independent and always fold. ``migration`` assembles
+        — assembled from the segmented root and its segment files.
+        Wall-clock stats (``max_end``/``min_start``) are taken only from
+        segments recorded under the root's commit timezone — the
+        assembled ``stats.tz`` then names that zone, and readers in
+        another zone skip (never misapply) them; byte/row stats are
+        tz-independent and always fold. ``migration`` assembles
         from the per-directory modulus stamps into per-modulus blocks
         ``[{"from": N, "old_dirs": [...]}, ...]`` (oldest modulus
         first) — the shape every merge/drain path consumes."""
-        if root.get("format", 0) < 4:
-            return dict(root)
         tz = root.get("tz")
         dirs: list[str] = []
         me: dict = {}
@@ -2337,16 +2314,14 @@ class Engine:
                     rw.setdefault(d, v)
             return got
 
-        dirs = fold(root.get("segs") or {}, live=True)
-        meta: dict = {"gen": root["gen"], "format": 4,
-                      "dirs": sorted(dirs), "schema": root["schema"]}
+        dirs = fold(root["segs"], live=True)
+        meta: dict = {"gen": root["gen"], "dirs": sorted(dirs),
+                      "schema": root["schema"]}
         hist_out: list[dict] = []
         for h in root.get("history", []):
             e = {k: h[k] for k in ("gen", "oid_buckets", "moduli",
                                    "schema") if k in h}
-            e["dirs"] = (h["dirs"] if "dirs" in h
-                         else sorted(fold(h.get("segs") or {},
-                                          live=False)))
+            e["dirs"] = sorted(fold(h["segs"], live=False))
             hist_out.append(e)
         if hist_out:
             meta["history"] = hist_out
@@ -2519,13 +2494,13 @@ class Engine:
                        history: list[dict] | None = None,
                        stats: dict | None = None, *,
                        schema: dict,
-                       oid_buckets: int | None | object = _CARRY,
+                       oid_buckets: int | object = _CARRY,
                        migration: dict | None | object = _CARRY) -> None:
         """The commit point: ONE atomic pointer write. CAS against the
         text read at operation start — under the writer lease this only
         fails if a TTL-expired zombie writer raced us; fail loud.
 
-        Bucketed cubes commit the SEGMENTED layout (format 4): the
+        Every cube commits the SEGMENTED layout (format 4): the
         directory list and per-directory stats are re-grouped into
         per-bucket-range segment files, only segments whose content
         changed are serialized (to fresh gen-scoped filenames — a
@@ -2535,9 +2510,7 @@ class Engine:
         refs, rolled-up stats — is the CAS payload. Per-commit manifest
         bytes are therefore O(touched buckets); the root also carries
         the rollup ``describe()`` and the metadata-only ``count()``
-        answer from without loading any segment. Unbucketed cubes keep
-        the monolithic single-JSON manifest (they have no bucket ranges
-        to segment by, and no migration either).
+        answer from without loading any segment.
 
         ``schema`` is the generation's authoritative read schema (data
         columns + directory-encoded partition columns, StructType JSON):
@@ -2601,20 +2574,10 @@ class Engine:
         body: dict = {"gen": gen}
         if oid_buckets is not Engine._CARRY:
             body["oid_buckets"] = oid_buckets
-        buckets = (oid_buckets if isinstance(oid_buckets, int)
-                   else self._cube_buckets(path))
-        if buckets:
-            with self._phase("flip_build_segments"):
-                self._flip_build_segmented(path, prior_root, gen, dirs,
-                                           history, stats, schema,
-                                           stamps, body)
-        else:
-            body["dirs"] = sorted(dirs)
-            if history:
-                body["history"] = history
-            if stats:
-                body["stats"] = stats
-            body["schema"] = schema
+        with self._phase("flip_build_segments"):
+            self._flip_build_segmented(path, prior_root, gen, dirs,
+                                       history, stats, schema, stamps,
+                                       body)
         new = json.dumps(body)
         p = self.fs.join(path, self._MANIFEST_SIDECAR)
         if old_raw is None:
@@ -2631,11 +2594,10 @@ class Engine:
             raise ConcurrentWriteError(
                 f"cube manifest at {path!r} changed under our writer "
                 "lease — concurrent writer detected, commit aborted")
-        if "segs" in body:
-            # retire segment files no retained root references (this
-            # commit's superseded ones, or strands of crashed attempts)
-            with self._phase("flip_sweep_segments"):
-                self._sweep_segments(path, body)
+        # retire segment files no retained root references (this
+        # commit's superseded ones, or strands of crashed attempts)
+        with self._phase("flip_sweep_segments"):
+            self._sweep_segments(path, body)
         if (prior.get("migration") and not stamps
                 and isinstance(body.get("oid_buckets"), int)):
             # this commit rewrote the last old-modulus directory: the
@@ -2654,21 +2616,9 @@ class Engine:
         """Build the format-4 root ``body`` in place and write the
         changed segment files (BEFORE the CAS — stranded ones are
         invisible until a root references them and are swept by the
-        next successful commit). Also writes the layout ``min_format``
-        fence FIRST when this flip upgrades a monolithic cube: a crash
-        between fence and flip leaves an over-fenced but uncorrupted
-        cube, the safe failure direction."""
+        next successful commit)."""
         import json
 
-        if prior_root.get("format", 0) < 4:
-            lay = self._cube_layout(path)
-            if (lay is not None and lay.get("min_format", 0)
-                    < self._SUPPORTED_LAYOUT_FORMAT):
-                out = dict(lay)
-                out["min_format"] = self._SUPPORTED_LAYOUT_FORMAT
-                self.fs.write_text(
-                    self.fs.join(path, self._LAYOUT_SIDECAR),
-                    json.dumps(out))
         st = stats or {}
         tz = st.get("tz") or self._session_tz()
         per_seg: dict[str, dict] = {}
@@ -2714,21 +2664,16 @@ class Engine:
         body["tz"] = tz
         body["segs"] = seg_refs
         body["schema"] = schema
+        # a retained generation keeps the segment refs it was committed
+        # with: every history entry is the prior root or one it retained
+        prior_refs = {h["gen"]: h["segs"]
+                      for h in prior_root.get("history", [])}
+        prior_refs[prior_root.get("gen")] = prior_segs
         hist_out: list[dict] = []
         for h in history or []:
             e = {k: h[k] for k in ("gen", "oid_buckets", "moduli",
                                    "schema") if k in h}
-            if h["gen"] == prior_root.get("gen") and prior_segs:
-                e["segs"] = prior_segs
-            else:
-                for ph in prior_root.get("history", []):
-                    if ph["gen"] == h["gen"] and "segs" in ph:
-                        e["segs"] = ph["segs"]
-                        break
-                else:
-                    # format upgrade: no prior segment refs exist for
-                    # this generation — inline its dirs
-                    e["dirs"] = h["dirs"]
+            e["segs"] = prior_refs[h["gen"]]
             hist_out.append(e)
         if hist_out:
             body["history"] = hist_out
@@ -2775,10 +2720,7 @@ class Engine:
             b = bytes_map.get(d)
             if b is None:
                 continue
-            i = d.find("/__obucket=")
-            if i < 0:
-                continue
-            seg = d[i + 1:].split("/", 1)[0]
+            seg = d.split("/")[1]
             bb[seg] = bb.get(seg, 0) + b
         if bb:
             rollup["max_bucket_bytes"] = max(bb.values())
@@ -2865,7 +2807,7 @@ class Engine:
                     self.fs.delete_dir(full)
 
     def _write_dirs(
-        self, rows: DataFrame, path: str, buckets: int | None,
+        self, rows: DataFrame, path: str, buckets: int,
         timepart: str | None, *, open_batch: str | None = None,
         closed_batch: str | None = None,
         live: set[str] | frozenset[str] = frozenset(),
@@ -2901,11 +2843,10 @@ class Engine:
         out = rows
         if "_current" not in out.columns:
             out = out.withColumn("_current", F.col("_end").isNull())
-        if buckets:
-            out = out.withColumn("__obucket", self._obucket(buckets))
+        out = out.withColumn("__obucket", self._obucket(buckets))
         if timepart:
             out = out.withColumn("__stime", self._stime_col(timepart))
-        keys = self._partition_keys(buckets, timepart)[:-1]  # no __batch
+        keys = self._partition_keys(timepart)[:-1]  # no __batch
         aggs = [F.date_format(F.max("_end"), _END_STAT_FMT).alias("__max_end"),
                 F.date_format(F.min("_start"), _END_STAT_FMT)
                 .alias("__min_start"),
@@ -2963,9 +2904,13 @@ class Engine:
                 ndv = (max(1024, int(self._bloom_hint * 1.5))
                        if self._bloom_hint else 100_000)
             if ndv:
+                # parquet-mr writes no bloom for a fully dictionary-
+                # encoded chunk, and compacted files (an oid repeated
+                # across its versions) pick the dictionary for _oid
                 w = (w.option("parquet.bloom.filter.enabled#_oid", "true")
                      .option("parquet.bloom.filter.expected.ndv#_oid",
-                             str(ndv)))
+                             str(ndv))
+                     .option("parquet.enable.dictionary#_oid", "false"))
             w.parquet(path)
         # one recursive LIST per directory this commit references for
         # these rows (bounded by the commit, not the cube); sizes of
@@ -3022,19 +2967,14 @@ class Engine:
         return F.date_format(
             F.col("_start"), "yyyy-MM" if timepart == "month" else "yyyy")
 
-    def _partition_keys(self, buckets: int | None,
-                        timepart: str | None = None) -> list[str]:
+    @staticmethod
+    def _partition_keys(timepart: str | None = None) -> list[str]:
         # __stime sits BELOW __obucket: the bounded history import
         # identifies a hit bucket by the relpath's second component
-        keys = ["_current"]
-        if buckets:
-            keys.append("__obucket")
-        if timepart:
-            keys.append("__stime")
-        keys.append("__batch")
-        return keys
+        return ["_current", "__obucket",
+                *(["__stime"] if timepart else []), "__batch"]
 
-    def _manifest_schema(self, data_schema, buckets: int | None,
+    def _manifest_schema(self, data_schema,
                          timepart: str | None = None) -> dict:
         """StructType JSON for the manifest's ``schema`` field: the DATA
         columns as committed (minus any partition/internal columns that
@@ -3046,7 +2986,7 @@ class Engine:
         from pyspark.sql.types import (BooleanType, IntegerType,
                                        StringType, StructField, StructType)
 
-        part = self._partition_keys(buckets, timepart)
+        part = self._partition_keys(timepart)
         # every data field is recorded nullable: pre-evolution files and
         # null-filled kept rows MUST read the column as null, so a
         # batch-copied nullable:false would make the stored contract
@@ -3061,9 +3001,23 @@ class Engine:
         fields += [StructField(k, types[k]) for k in part]
         return StructType(fields).jsonValue()
 
+    def _align_to_stored(self, path: str, meta: dict, incoming: DataFrame,
+                         evolve: bool) -> tuple[DataFrame, list[str]]:
+        """Check and align a commit batch against the stored cube
+        (``_check_oid_type``, ``_check_redrop``, ``_align_incoming``).
+        Every check reads only the stored SCHEMA, so a zero-row frame of
+        the manifest schema stands in for the cube (internal partition
+        keys dropped exactly as ``_read`` drops them): no commit lists
+        the cube just to look at its column types."""
+        table = self._empty_schema_frame(meta["schema"]).drop(
+            "__batch", "__obucket", "__stime")
+        self._check_oid_type(table, incoming)
+        self._check_redrop(path, incoming, set(table.columns))
+        return self._align_incoming(table, incoming, evolve)
+
     @staticmethod
     def _align_incoming(table: DataFrame, incoming: DataFrame,
-                        evolve: bool) -> tuple[DataFrame, DataFrame, list[str]]:
+                        evolve: bool) -> tuple[DataFrame, list[str]]:
         """Schema-align a write batch against the stored cube: missing
         stored columns are null-filled into the batch (the reference's
         store is schemaless dicts — an object that stops carrying a
@@ -3073,7 +3027,7 @@ class Engine:
         read back as typed nulls), and a same-name type conflict always
         fails loud — parquet directories with mixed physical types for
         one column are unreadable roulette, and a silent cast hides
-        upstream drift. Returns ``(table', incoming', cols)`` both
+        upstream drift. Returns ``(incoming', cols)``: the batch
         selected to the union column order (stored order first, new
         columns appended; ``_current`` excluded)."""
         stored = {f.name: f.dataType for f in table.schema.fields
@@ -3114,10 +3068,7 @@ class Engine:
         for n in missing:
             incoming = incoming.withColumn(n, F.lit(None).cast(stored[n]))
         cols = [n for n in stored] + new
-        for n in new:
-            table = table.withColumn(n, F.lit(None).cast(inc[n]))
-        keep = cols + (["_current"] if "_current" in table.columns else [])
-        return table.select(*keep), incoming.select(*cols), cols
+        return incoming.select(*cols), cols
 
     def compact(self, cube: str, target_partitions: int | None = None,
                 sort_by: Sequence[str] | None = None,
@@ -3191,15 +3142,15 @@ class Engine:
     def _batch_dir_token(rel: str) -> str:
         """The upsert-batch token of a manifest-relative history
         directory path (the ``__batch=`` leaf — one token spans several
-        bucket/period dirs under the bucketed layout)."""
+        bucket/period dirs)."""
         return rel.rsplit("__batch=", 1)[-1]
 
     def _history_token_sizes(self, path: str,
                              meta: dict) -> dict[str, int]:
         """Total byte size per history batch TOKEN, from the manifest's
         recorded per-directory sizes (``stats.bytes``, written at commit
-        time) — ``fs.du`` only for directories a pre-upgrade manifest
-        never sized. This is the size-tiered compaction's level
+        time) — ``fs.du`` only for directories whose size could not be
+        measured then. This is the size-tiered compaction's level
         classifier and costs no listing on an up-to-date manifest."""
         sizes = (meta.get("stats") or {}).get("bytes") or {}
         tot: dict[str, int] = {}
@@ -3429,7 +3380,7 @@ class Engine:
                             stats=self._merged_stats(
                                 None, dirs, set(dirs), None, path=path),
                             schema=self._manifest_schema(
-                                obj.schema, buckets, self.time_partition))
+                                obj.schema, self.time_partition))
         self._sweep_unreferenced(path, set(dirs))
 
     def insert(self, cube: str, df: DataFrame, stamped: bool = False,
@@ -3456,10 +3407,7 @@ class Engine:
             buckets = self._live_buckets(meta, layout)
             timepart = self._cube_timepart(path, for_write=True,
                                            layout=layout)
-            table = self._read(path)
-            self._check_oid_type(table, obj)
-            self._check_redrop(path, obj, set(table.columns))
-            _, obj, _ = self._align_incoming(table, obj, evolve)
+            obj, _ = self._align_to_stored(path, meta, obj, evolve)
             gen = meta["gen"] + 1
             new_dirs = self._write_dirs(
                 obj, path, buckets, timepart, open_batch=f"ins-g{gen}",
@@ -3471,7 +3419,7 @@ class Engine:
                                 stats=self._merged_stats(
                                     meta, new_dirs, dirs, hist, path=path),
                                 schema=self._manifest_schema(
-                                    obj.schema, buckets, timepart))
+                                    obj.schema, timepart))
             self._sweep_dropped(
                 path, meta, dirs | {d for h in hist for d in h["dirs"]})
             self._auto_refresh_indexes(cube)
@@ -3538,9 +3486,8 @@ class Engine:
         if state != "new":
             layout = self._cube_layout(path)
             buckets = self._live_buckets(meta, layout)
-            if buckets:
-                moduli = [buckets] + [b["from"] for b in
-                                      meta.get("migration") or []]
+            moduli = [buckets] + [b["from"] for b in
+                                  meta.get("migration") or []]
         n_closed, hits = self._probe(incoming, moduli)
         if autosnap is None:
             # True iff every incoming object is open (reference
@@ -3554,90 +3501,62 @@ class Engine:
             self._first_write(path, incoming)
             return
         timepart = self._cube_timepart(path, for_write=True, layout=layout)
-        if buckets:
-            # every consumer of ``table`` on the bucketed manifested
-            # path reads only its SCHEMA (oid-type / evolution / redrop
-            # checks, column alignment) — the data reads below go
-            # through the hit-directory prunes. A zero-row frame from
-            # the manifest schema stands in, skipping the O(dirs)
-            # full-cube listing a trickle commit paid just to look at
-            # column types (the measured plan-build term in the
-            # trickle scale curve). Internal partition keys are
-            # dropped exactly as _read drops them.
-            table = self._empty_schema_frame(meta["schema"]).drop(
-                *[c for c in ("__batch", "__obucket", "__stime")])
-        else:
-            table = self._read(path)
-        self._check_oid_type(table, incoming)
-        self._check_redrop(path, incoming, set(table.columns))
-        table, incoming, cols = self._align_incoming(table, incoming, evolve)
-        msch = self._manifest_schema(incoming.schema, buckets, timepart)
+        incoming, cols = self._align_to_stored(path, meta, incoming, evolve)
+        msch = self._manifest_schema(incoming.schema, timepart)
         if autosnap:
             live = set(meta["dirs"])
-            if buckets:
-                # BUCKET-GRANULAR merge: the open snapshot is oid-bucket
-                # partitioned, and a snapshot batch can only touch open
-                # rows whose _oid it carries — so read, merge and rewrite
-                # ONLY the bucket directories the incoming oids hash
-                # into; every other open-bucket directory carries
-                # forward by manifest reference, untouched on disk (the
-                # same trick the bounded history import and the ANN
-                # gbucket removal use). At 100 TB this turns the
-                # per-commit write cost from O(|current snapshot|) into
-                # O(open rows of hit buckets + closed delta). The hit
-                # buckets come from the probe over the checkpointed
-                # batch, so the merge reads exactly the buckets its
-                # rows land in.
-                if meta.get("migration"):
-                    # MIGRATION-AWARE: the open rows an incoming oid can
-                    # touch live in an open dir at ANY modulus still
-                    # present (live count, plus each chained doubling's
-                    # from-modulus) — resolve the hit DIRECTORIES per
-                    # vintage from the manifest blocks. Rewriting under
-                    # the live modulus migrates the hit old dirs' open
-                    # rows as a side effect — the opportunistic half of
-                    # the doubling migration; _manifest_flip's carry
-                    # rule retires their stamps automatically.
-                    drop_open = self._migration_hit_dirs(
-                        hits, meta, buckets, live, current_only=True)
-                else:
-                    hit_open = {f"__obucket={b}" for b in hits[buckets]}
-                    drop_open = {d for d in live
-                                 if d.startswith("_current=true")
-                                 and d.split("/")[1] in hit_open}
-                # read exactly the dirs being dropped, by RELPATH
-                # (read-set == drop-set by construction) — a full-cube
-                # _read_raw here would list O(cube) directories per
-                # trickle commit just to partition-filter them away
-                if drop_open:
-                    # the value filter is sound under every modulus: a
-                    # dir's path value is in its own modulus's hit set
-                    hit_vals = sorted(set().union(*hits.values()))
-                    pruned = self._read_dirs(
-                        path, meta, sorted(drop_open)).where(
-                        F.col("_current")
-                        & F.col("__obucket").isin(hit_vals))
-                else:
-                    # no existing open dir can hold these oids: merge
-                    # against an empty open side (schema from the
-                    # manifest — no O(cube) listing for a no-op read)
-                    pruned = self._empty_schema_frame(meta["schema"])
-                pruned = pruned.drop("__batch", "__obucket", "__stime",
-                                     "_current")
-                # the pruned rows were read under the PRE-commit schema;
-                # null-fill any columns this batch evolves in, like the
-                # history import does for its kept rows
-                inc_types = {f.name: f.dataType
-                             for f in incoming.schema.fields}
-                for c in cols:
-                    if c not in pruned.columns:
-                        pruned = pruned.withColumn(
-                            c, F.lit(None).cast(inc_types[c]))
-                open_rows = pruned.select(*cols)
+            # BUCKET-GRANULAR merge: the open snapshot is oid-bucket
+            # partitioned, and a snapshot batch can only touch open
+            # rows whose _oid it carries — so read, merge and rewrite
+            # ONLY the bucket directories the incoming oids hash
+            # into; every other open-bucket directory carries
+            # forward by manifest reference, untouched on disk (the
+            # same trick the bounded history import and the ANN
+            # gbucket removal use). At 100 TB this turns the
+            # per-commit write cost from O(|current snapshot|) into
+            # O(open rows of hit buckets + closed delta). The hit
+            # buckets come from the probe over the checkpointed
+            # batch, so the merge reads exactly the buckets its
+            # rows land in.
+            # MIGRATION-AWARE: the open rows an incoming oid can touch
+            # live in an open dir at ANY modulus still present (live
+            # count, plus each chained doubling's from-modulus) — the
+            # hit DIRECTORIES resolve per vintage. Rewriting under the
+            # live modulus migrates the hit old dirs' open rows as a
+            # side effect — the opportunistic half of the doubling
+            # migration; _manifest_flip's carry rule retires their
+            # stamps automatically.
+            drop_open = self._hit_dirs(hits, meta, buckets, live,
+                                       current_only=True)
+            # read exactly the dirs being dropped, by RELPATH
+            # (read-set == drop-set by construction) — a full-cube
+            # _read_raw here would list O(cube) directories per
+            # trickle commit just to partition-filter them away
+            if drop_open:
+                # the value filter is sound under every modulus: a
+                # dir's path value is in its own modulus's hit set
+                hit_vals = sorted(set().union(*hits.values()))
+                pruned = self._read_dirs(
+                    path, meta, sorted(drop_open)).where(
+                    F.col("_current")
+                    & F.col("__obucket").isin(hit_vals))
             else:
-                drop_open = {d for d in live
-                             if d.startswith("_current=true")}
-                open_rows = table.where(F.col("_current")).select(*cols)
+                # no existing open dir can hold these oids: merge
+                # against an empty open side (schema from the
+                # manifest — no O(cube) listing for a no-op read)
+                pruned = self._empty_schema_frame(meta["schema"])
+            pruned = pruned.drop("__batch", "__obucket", "__stime",
+                                 "_current")
+            # the pruned rows were read under the PRE-commit schema;
+            # null-fill any columns this batch evolves in, like the
+            # history import does for its kept rows
+            inc_types = {f.name: f.dataType
+                         for f in incoming.schema.fields}
+            for c in cols:
+                if c not in pruned.columns:
+                    pruned = pruned.withColumn(
+                        c, F.lit(None).cast(inc_types[c]))
+            open_rows = pruned.select(*cols)
             # one join, one materialization (must happen before rewriting
             # the partition we read from; the stats aggregate and the
             # write below must see the same rows)
@@ -3690,7 +3609,7 @@ class Engine:
 
     def _history_replace_manifested(
         self, path: str, incoming: DataFrame, cols: list[str],
-        buckets: int | None, meta: dict, raw_manifest: str,
+        buckets: int, meta: dict, raw_manifest: str,
         hits: dict[int, set[int]], timepart: str | None = None,
         keep: int = 0,
         *, schema: dict,
@@ -3704,8 +3623,7 @@ class Engine:
         directories, and the rewrite lands in fresh generation-scoped directories that
         the manifest flip publishes atomically — a concurrent reader sees
         exactly the old or exactly the new history of a replaced oid,
-        never both. Unbucketed manifested cubes take the same path with
-        the whole table as the single 'bucket'.
+        never both.
 
         Crash-convergent under the single-writer lease: the union write
         is deterministic from (manifested state minus incoming oids) +
@@ -3718,28 +3636,17 @@ class Engine:
         # hit buckets cannot miss a bucket an incoming row lands in
         gen = meta["gen"] + 1
         live = set(meta["dirs"])
-        if buckets:
-            if meta.get("migration"):
-                # migration-aware: an incoming oid's stored versions
-                # live in dirs at ANY modulus still present (chained
-                # doublings included) — resolve the replaced
-                # DIRECTORIES per vintage from the manifest blocks (see
-                # the snapshot merge's migration branch). The rewrite
-                # under the live modulus migrates the hit old dirs as a
-                # side effect.
-                replaced_dirs = self._migration_hit_dirs(
-                    hits, meta, buckets, live, current_only=False)
-            else:
-                hit_set = {f"__obucket={b}" for b in hits[buckets]}
-                replaced_dirs = {d for d in live
-                                 if d.split("/")[1] in hit_set}
-            # read exactly the replaced set, by relpath
-            pruned = (self._read_dirs(path, meta, sorted(replaced_dirs))
-                      if replaced_dirs
-                      else self._empty_schema_frame(meta["schema"]))
-        else:
-            pruned = self._read_raw(path)
-            replaced_dirs = set(live)
+        # migration-aware: an incoming oid's stored versions live in
+        # dirs at ANY modulus still present (chained doublings
+        # included) — the replaced DIRECTORIES resolve per vintage (see
+        # the snapshot merge). The rewrite under the live modulus
+        # migrates the hit old dirs as a side effect.
+        replaced_dirs = self._hit_dirs(hits, meta, buckets, live,
+                                       current_only=False)
+        # read exactly the replaced set, by relpath
+        pruned = (self._read_dirs(path, meta, sorted(replaced_dirs))
+                  if replaced_dirs
+                  else self._empty_schema_frame(meta["schema"]))
         keys = incoming.select("_oid").distinct()
         kept = pruned.join(_upsert.maybe_broadcast_keys(keys), "_oid",
                            "left_anti")
@@ -3819,7 +3726,7 @@ class Engine:
 
         ``moduli`` may be a list (an in-flight doubling migration prunes
         under the UNION of the old and new bucket counts — see
-        ``_buckets_for_read``); the union still costs the one job.
+        ``_read_moduli``); the union still costs the one job.
 
         Fast path: when every literal is a plain ``int``/``str`` and
         the stored dtype is an integral or string type, the string
@@ -3894,8 +3801,7 @@ class Engine:
             # directories instead of filtering rows
             path = self._path(cube)
             layout = self._cube_layout(path)  # ONE sidecar fetch/query
-            buckets, moduli = self._buckets_for_read(path, layout,
-                                                     generation)
+            moduli = self._read_moduli(path, layout, generation)
             # as-of / since specs bound _end from below: closed dirs
             # whose recorded max(_end) precedes the bound are skipped at
             # manifest resolution (directory-level data skipping)
@@ -3927,20 +3833,19 @@ class Engine:
                 return None
 
             bvals = None
-            if buckets:
-                lookup = lookup_literals()
-                if lookup:
-                    mdtype = self._manifest_oid_dtype(path, generation)
-                    if (mdtype is not None
-                            and self._prune_family_ok(mdtype, lookup)):
-                        bvals = self._oid_bucket_values(
-                            lookup, moduli, dtype=mdtype)
+            lookup = lookup_literals()
+            if lookup:
+                mdtype = self._manifest_oid_dtype(path, generation)
+                if (mdtype is not None
+                        and self._prune_family_ok(mdtype, lookup)):
+                    bvals = self._oid_bucket_values(
+                        lookup, moduli, dtype=mdtype)
             raw = self._read_raw(
                 path, generation=generation,
                 min_end=_norm_ts_bound(lo) if lo else None,
                 start_upper=_norm_ts_bound(hi) if hi else None,
                 bucket_values=bvals)
-            if bvals and "__obucket" in raw.columns:
+            if bvals:
                 # belt-and-braces value filter on the pruned read
                 raw = raw.where(F.col("__obucket").isin(bvals))
             if "__stime" in raw.columns:
@@ -3992,7 +3897,7 @@ class Engine:
     ) -> DataFrame:
         """MQL find (reference ``sqlalchemy.py:753-785``). ``oids``
         narrows to specific objects AND prunes the scan to their oid
-        buckets on bucketed cubes — the fast path for point lookups.
+        buckets — the fast path for point lookups.
         ``generation`` queries a retained snapshot (time travel) with
         the full MQL/date surface; partition prunes apply there too."""
         df = self._scoped(cube, query, date, oids=oids,
@@ -4051,7 +3956,7 @@ class Engine:
         counts when every relevant directory has one (a metadata-only
         read: zero files opened, zero Spark jobs — at 100 TB a bare
         ``count`` should never scan the table); any filter, or a
-        pre-upgrade manifest missing a count, falls back to the scan.
+        directory missing a count, falls back to the scan.
 
         Freshness: the metadata answer reflects the manifest resolved AT
         CALL TIME — the same snapshot semantics as any other read of the
@@ -4072,8 +3977,8 @@ class Engine:
     def _count_from_stats(self, cube: str, date: str | None,
                           generation: int | None) -> int | None:
         """Manifest-recorded row total for an unfiltered count, or None
-        when the shape is filtered / the cube predates row stats /
-        any relevant directory lacks a count (fall back to the scan —
+        when the shape is filtered / any relevant directory lacks a
+        count (fall back to the scan —
         skipped, not wrong). Works for retained generations too: stats
         carry forward for every retained directory."""
         if date == "~":
@@ -4088,8 +3993,7 @@ class Engine:
         root = self._manifest_root(path)
         if root is None:
             return None
-        if (root.get("format", 0) >= 4
-                and (generation is None or generation == root["gen"])):
+        if generation is None or generation == root["gen"]:
             # ROOT-ONLY fast path: the totals were rolled up at commit
             # time — a bare count() parses one small JSON whatever the
             # cube's directory count (no segment loads, no Spark job)

@@ -336,10 +336,11 @@ def test_rebucket_recommended_flips_on_outgrown_buckets(spark,
 
 
 def test_du_fallback_is_cached_and_backfilled(spark, tmp_path):
-    """Pre-upgrade manifests (no recorded byte sizes) pay the fs.du
-    walk at most once per directory: the measurement is cached on the
-    engine and the next commit BACKFILLS it into the manifest stats, so
-    a later engine never walks those dirs again."""
+    """Directories with no recorded byte size (the measurement failed
+    at commit) pay the fs.du walk at most once per directory: the
+    measurement is cached on the engine and the next commit BACKFILLS
+    it into the manifest stats, so a later engine never walks those
+    dirs again."""
     import json
 
     eng = Engine(spark, warehouse=str(tmp_path / "wh"))
@@ -347,21 +348,19 @@ def test_du_fallback_is_cached_and_backfilled(spark, tmp_path):
         eng.upsert("bf", _objs(
             spark, [(k, k + i) for k in range(20)], day), stamped=True)
     path = eng._path("bf")
-    # simulate a PRE-UPGRADE manifest: replace the segmented root with
-    # a monolithic (pre-segmentation) one whose stats carry no byte
-    # sizes — also exercises the format-upgrade conversion the next
-    # commit performs
+    # simulate a manifest with no recorded byte sizes: re-commit the
+    # same generation as a segmented root whose segments carry no
+    # ``bytes`` stats
     raw = eng._manifest_raw(path)
     full = eng._manifest(path)
-    legacy = {"gen": full["gen"], "dirs": full["dirs"]}
     st = dict(full.get("stats") or {})
     st.pop("bytes", None)
-    if st:
-        legacy["stats"] = st
-    if full.get("schema") is not None:
-        legacy["schema"] = full["schema"]
-    assert eng.fs.replace_if_match(
-        eng.fs.join(path, eng._MANIFEST_SIDECAR), json.dumps(legacy), raw)
+    eng._manifest_flip(path, raw, full["gen"], set(full["dirs"]),
+                       full.get("history"), stats=st,
+                       schema=full["schema"])
+    segs = json.loads(eng._manifest_raw(path))["segs"]
+    assert all("bytes" not in (eng._load_segment(path, f).get("stats")
+                               or {}) for f in segs.values())
 
     eng2 = Engine(spark, warehouse=str(tmp_path / "wh"))
     calls = {"n": 0}

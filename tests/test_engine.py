@@ -757,7 +757,7 @@ def test_rebucket_migrates_count_and_stays_correct(spark, tmp_path):
     # (shrinking the pre-fence stale-writer window) and the min_format
     # fence lands; history entries were backfilled with their explicit
     # old count first, so time travel below still prunes correctly
-    assert eng._cube_buckets(eng._path("c")) == 16
+    assert eng._cube_layout(eng._path("c"))["oid_buckets"] == 16
     import json as _json
 
     lay = _json.loads(eng.fs.read_text(

@@ -1,9 +1,10 @@
 """The engine reads exactly one on-disk cube format: a format-2
-``_layout.json`` sidecar plus a manifest root that carries a schema.
-Every older state is refused with the one ValueError from
-``_cube_state`` — and refused WITHOUT touching the data: an older cube's
-directories are committed data, so no writer may sweep them as if they
-were a crashed first write."""
+``_layout.json`` sidecar plus a segmented (format-4) manifest root that
+carries a schema, and every cube is oid-bucketed. Every older state is
+refused with the one ValueError from ``_cube_state``/``_manifest_root``
+— and refused WITHOUT touching the data: an older cube's directories
+are committed data, so no writer may sweep them as if they were a
+crashed first write."""
 
 import json
 import os
@@ -27,12 +28,12 @@ def _parquet_files(path):
                   for f in fs if f.endswith(".parquet"))
 
 
-def _no_layout(path):
+def _no_layout(eng, path):
     os.unlink(os.path.join(path, "_manifest.json"))
     os.unlink(os.path.join(path, "_layout.json"))
 
 
-def _formatless_layout(path):
+def _formatless_layout(eng, path):
     os.unlink(os.path.join(path, "_manifest.json"))
     lp = os.path.join(path, "_layout.json")
     with open(lp) as fh:
@@ -42,7 +43,7 @@ def _formatless_layout(path):
         json.dump(lay, fh)
 
 
-def _schemaless_root(path):
+def _schemaless_root(eng, path):
     mp = os.path.join(path, "_manifest.json")
     with open(mp) as fh:
         root = json.load(fh)
@@ -51,15 +52,24 @@ def _schemaless_root(path):
         json.dump(root, fh)
 
 
+def _monolithic_root(eng, path):
+    # the single-JSON root older engines wrote for unbucketed cubes,
+    # rebuilt from the assembled manifest
+    full = eng._manifest(path)
+    root = {k: full[k] for k in ("gen", "dirs", "stats", "schema")}
+    with open(os.path.join(path, "_manifest.json"), "w") as fh:
+        json.dump(root, fh)
+
+
 @pytest.mark.parametrize("make_old", [_no_layout, _formatless_layout,
-                                      _schemaless_root])
+                                      _schemaless_root, _monolithic_root])
 def test_older_format_refused_and_never_wiped(spark, tmp_path, make_old):
     wh = str(tmp_path / "wh")
-    Engine(spark, warehouse=wh).upsert(
-        "old", _objs(spark, [(1, 10), (2, 20)], "2014-01-01"),
-        stamped=True)
+    first = Engine(spark, warehouse=wh)
+    first.upsert("old", _objs(spark, [(1, 10), (2, 20)], "2014-01-01"),
+                 stamped=True)
     path = os.path.join(wh, "old")
-    make_old(path)
+    make_old(first, path)
     files = _parquet_files(path)
     assert files
 
@@ -75,3 +85,9 @@ def test_older_format_refused_and_never_wiped(spark, tmp_path, make_old):
         with pytest.raises(ValueError, match=REFUSAL):
             op()
         assert _parquet_files(path) == files, name
+
+
+@pytest.mark.parametrize("buckets", [None, 0, -1])
+def test_oid_buckets_must_be_a_positive_int(spark, tmp_path, buckets):
+    with pytest.raises(ValueError, match="oid_buckets=1"):
+        Engine(spark, warehouse=str(tmp_path / "wh"), oid_buckets=buckets)

@@ -181,7 +181,7 @@ def test_stamps_round_trip_as_migration_blocks(eng):
 
 def test_describe_fast_path_matches_assembled_path(spark, tmp_path):
     """The root-rollup describe must report the same facts the
-    assembled (pre-segmentation) path computes for the same cube."""
+    assembled-manifest path computes for the same cube."""
     from pyspark.sql import functions as F
 
     from metrique_spark.objects import stamp
@@ -198,17 +198,15 @@ def test_describe_fast_path_matches_assembled_path(spark, tmp_path):
         df2, oid="oid", start=F.to_timestamp(F.lit("2024-02-01"))),
         stamped=True)
     fast = eng.describe("d")
-    # force the legacy path: monolithic root built from the assembled
-    # state (what a pre-segmentation engine would have committed)
+    # force the assembled path: the same segmented root without the
+    # per-token byte rollup (what a commit writes when a closed dir
+    # has no recorded size)
     path = eng._path("d")
     raw = eng._manifest_raw(path)
-    full = eng._manifest(path)
-    legacy = {"gen": full["gen"], "dirs": full["dirs"],
-              "stats": full["stats"], "schema": full["schema"]}
-    if full.get("history"):
-        legacy["history"] = full["history"]
+    root = json.loads(raw)
+    del root["rollup"]["token_bytes"]
     assert eng.fs.replace_if_match(
-        os.path.join(path, "_manifest.json"), json.dumps(legacy), raw)
+        os.path.join(path, "_manifest.json"), json.dumps(root), raw)
     slow = Engine(spark, warehouse=str(tmp_path / "wh"),
                   oid_buckets=4).describe("d")
     for k in ("state", "generation", "open_dirs", "closed_dirs",

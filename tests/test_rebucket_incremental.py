@@ -263,13 +263,6 @@ def test_migration_on_timepartitioned_cube_and_objectstore(spark,
     assert got == [5, 17]
 
 
-def test_unbucketed_cube_refuses_incremental(spark, tmp_path):
-    eng = Engine(spark, warehouse=str(tmp_path / "wh"), oid_buckets=None)
-    _snap(spark, eng, "m", [(1, 1)], "2014-01-01")
-    with pytest.raises(ValueError, match="unbucketed"):
-        eng.rebucket("m", 8, incremental=True)
-
-
 def test_chained_doublings_three_moduli(spark, eng):
     """A second doubling may START while the first still drains:
     directories already stamped keep their older modulus, the rest

@@ -498,7 +498,8 @@ def test_first_manifest_flip_is_cas(spark, engine):
                   stamped=True)
     path = engine._path("cas1")
     with _pytest.raises(ConcurrentWriteError, match="first writer"):
-        engine._manifest_flip(path, None, 1, {"_current=true/__batch=x"},
+        engine._manifest_flip(path, None, 1,
+                              {"_current=true/__obucket=0/__batch=x"},
                               schema=engine._manifest(path)["schema"])
 
 
