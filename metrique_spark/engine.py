@@ -125,8 +125,8 @@ def _old_format_error(path: str, what: str) -> ValueError:
     return ValueError(
         f"cube at {path!r} is in an older on-disk format ({what}); this "
         "engine reads only a format-2 _layout.json plus a segmented "
-        "(format-4) manifest root that carries a schema — rebuild the "
-        "cube")
+        "(format-5) manifest root that carries a schema and the "
+        "oid-bucket count — rebuild the cube")
 
 
 def _check_buckets(oid_buckets) -> None:
@@ -163,6 +163,10 @@ class Engine:
         # on backends where pid liveness can't be probed (object stores);
         # None = never expire (same-host pid probing still reclaims).
         self.fs = fs or LocalFS()
+        # a ttl <= 0 would make every held lease stale at once: a
+        # second writer would reclaim a live holder's lease
+        if lock_ttl is not None and lock_ttl <= 0:
+            raise ValueError("lock_ttl must be > 0 or None")
         self.lock_ttl = lock_ttl
         # writer-contention ergonomics: fail-fast (the default, 0) is
         # right for the single-writer assumption, but a second
@@ -179,11 +183,11 @@ class Engine:
         # (the reference deletes only the incoming oids' versions,
         # sqlalchemy.py:955-963 — at 100 TB a full-table rewrite per
         # import is the difference between minutes and days). The count
-        # is recorded per cube in a ``_layout.json`` sidecar at first
-        # write, so every later writer — whatever ITS default — buckets
+        # is recorded per cube in the manifest root from the first
+        # commit, so every later writer — whatever ITS default — buckets
         # identically; raise it (e.g. 1024) for cubes whose history is
-        # genuinely huge. Every cube is bucketed: 1 is the single-bucket
-        # layout.
+        # genuinely huge, or ``rebucket`` later. Every cube is bucketed:
+        # 1 is the single-bucket layout.
         _check_buckets(oid_buckets)
         self.oid_buckets = oid_buckets
         # optional third partition level for NEW cubes: a ``__stime``
@@ -207,6 +211,12 @@ class Engine:
         # ingest (thousands of token-keyed batch dirs) without giving up
         # the idempotent per-batch commit. Off by default: compaction
         # rewrites all closed rows, which the caller may want to schedule.
+        # A negative limit would compact after every commit: refused.
+        for knob, v in (("auto_compact_batches", auto_compact_batches),
+                        ("auto_compact_index_batches",
+                         auto_compact_index_batches)):
+            if v is not None and v < 0:
+                raise ValueError(f"{knob} must be >= 0 or None")
         self.auto_compact_batches = auto_compact_batches
         # ANN-index sibling of auto_compact_batches: when a refresh
         # leaves more than this many append-batch partitions (files for
@@ -298,7 +308,7 @@ class Engine:
         # (see _merged_stats) so the walk is paid once per dir EVER,
         # not once per compaction trigger.
         self._du_cache: dict[str, int] = {}
-        # parsed manifest SEGMENT files (format-4 cubes), keyed by full
+        # parsed manifest SEGMENT files, keyed by full
         # path. Sound to cache: a segment file is immutable once the
         # root referencing it commits (writers only ever create new
         # gen-scoped segment files; a crashed writer's overwrite of its
@@ -420,14 +430,7 @@ class Engine:
                     df = self._empty_schema_frame(schema)
                     break
             try:
-                # the generation's authoritative schema: no footer
-                # sampling at plan time, and files written before a
-                # column evolved in read back as typed nulls
-                from pyspark.sql.types import StructType
-
-                df = (self.spark.read.option("basePath", path)
-                      .schema(StructType.fromJson(schema))
-                      .parquet(*[self.fs.join(path, d) for d in dirs]))
+                df = self._read_dirs(path, schema, dirs)
                 break
             except Exception as e:
                 # the swept-generation race at PLAN time: our manifest
@@ -435,28 +438,28 @@ class Engine:
                 # since swept — re-resolve once from the fresh pointer
                 if attempt or not _is_swept_read_error(e):
                     raise
-        if "_current" in df.columns:
-            # partition-value inference yields string; restore boolean
-            df = df.withColumn("_current", F.col("_current").cast("boolean"))
         return df
 
-    def _read_dirs(self, path: str, meta: dict,
+    def _read_dirs(self, path: str, schema: dict,
                    rels: Sequence[str]) -> DataFrame:
-        """Read an EXPLICIT subset of a manifested cube's directories —
-        the migration-aware merge paths must read exactly the
-        directories they are about to drop: during a doubling migration
-        a value-level ``__obucket`` predicate cannot distinguish an
-        old-modulus directory from a migrated one carrying the same
-        bucket value, but the manifest relpaths identify each directory
-        uniquely. Same basePath/schema contract as ``_read_raw``; safe
-        under the writer lease (no concurrent sweep can race the
-        listed paths)."""
+        """Read an EXPLICIT list of a manifested cube's directories
+        under a generation's manifest ``schema`` — the one scan every
+        cube read builds. ``_read_raw`` passes a generation's (pruned)
+        directory list; the migration-aware merge paths pass exactly
+        the directories they are about to drop: during a doubling
+        migration a value-level ``__obucket`` predicate cannot
+        distinguish an old-modulus directory from a migrated one
+        carrying the same bucket value, but the manifest relpaths
+        identify each directory uniquely. The authoritative schema
+        means no footer sampling at plan time, and files written before
+        a column evolved in read back as typed nulls."""
         from pyspark.sql.types import StructType
 
         df = (self.spark.read.option("basePath", path)
-              .schema(StructType.fromJson(meta["schema"]))
+              .schema(StructType.fromJson(schema))
               .parquet(*[self.fs.join(path, d) for d in rels]))
         if "_current" in df.columns:
+            # partition-value inference yields string; restore boolean
             df = df.withColumn("_current",
                                F.col("_current").cast("boolean"))
         return df
@@ -1499,30 +1502,31 @@ class Engine:
         return _cm()
 
     _LAYOUT_SIDECAR = "_layout.json"
-    # Highest layout semantics this engine version understands. A
-    # sidecar's ``min_format`` field names the semantics an engine MUST
-    # implement to read or write the cube without corrupting it —
-    # ``rebucket`` stamped 3 (manifest-first bucket counts; incremental
-    # migrations add mixed-modulus pruning); 4 adds the SEGMENTED
-    # manifest (root pointer → per-bucket-range segment files, the only
-    # manifest form, written by every commit to every cube) and
-    # per-directory modulus stamps (chained doubling migrations) — an
-    # engine that only reads monolithic manifests, or prunes under at
-    # most two moduli, refuses loud here instead of misreading the
-    # cube. Every sidecar carries the fence from the first write.
-    _SUPPORTED_LAYOUT_FORMAT = 4
+    # Highest on-disk format this engine version understands. A
+    # sidecar's ``min_format`` field names the format an engine MUST
+    # implement to read or write the cube without corrupting it: 4 is
+    # the SEGMENTED manifest (root pointer → per-bucket-range segment
+    # files) with per-directory modulus stamps (chained doubling
+    # migrations); 5 makes the manifest root the ONLY record of the
+    # oid-bucket count — every root and every retained-history entry
+    # carries it, and the sidecar carries none. An engine that would
+    # read the count from the sidecar, or prunes under at most two
+    # moduli, refuses loud here instead of misreading the cube. Every
+    # sidecar carries the fence from the first write.
+    _SUPPORTED_LAYOUT_FORMAT = 5
 
     def _cube_layout(self, path: str) -> dict | None:
-        """The cube's recorded layout sidecar (oid-bucket count + time
-        partition), or None when absent (no cube yet — or data in an
-        older format, which ``_cube_state`` refuses). Writers must use
-        the RECORDED values — bucketing with a different modulus or a
-        different period key would prune the wrong directories on a
-        later history import.
+        """The cube's recorded layout sidecar (format fence, time
+        partition, retention), or None when absent (no cube yet — or
+        data in an older format, which ``_cube_state`` refuses). Writers
+        must use the RECORDED values — a different period key would
+        prune the wrong directories on a later read. The oid-bucket
+        count is not here: the manifest root records it.
 
         An unreadable sidecar raises instead of reading as absent: a
-        writer that silently guessed the layout would bucket or period-
-        partition with the wrong keys and corrupt the cube."""
+        writer that silently guessed the layout would period-partition
+        with the wrong keys, or miss the format fence, and corrupt the
+        cube."""
         import json
 
         p = self.fs.join(path, self._LAYOUT_SIDECAR)
@@ -1551,28 +1555,13 @@ class Engine:
                 "the engine")
         return meta
 
-    @staticmethod
-    def _live_buckets(meta: dict | None, layout: dict | None) -> int | None:
-        """Authoritative oid-bucket count for a committed generation:
-        the manifest's recorded count when present (``rebucket`` writes
-        it atomically with the rewritten directories and every later
-        flip carries it forward), else the layout sidecar's — the
-        pre-rebucket world, where the count is fixed at first write."""
-        if meta is not None and "oid_buckets" in meta:
-            return meta["oid_buckets"]
-        return layout.get("oid_buckets") if layout else None
-
-    def _read_moduli(self, path: str, layout: dict | None,
+    def _read_moduli(self, path: str,
                      generation: int | None) -> list[int]:
         """The oid-bucket moduli valid for pruning a read of
-        ``generation`` (None = live), live count first. A retained
-        generation carries its own count when one was manifested at
-        retention time; a fieldless entry predates any rebucket, so the
-        layout sidecar's first-write count is its count
-        (``_backfill_history_buckets`` stamps every entry explicitly
-        before that sidecar value can change). No committed or unknown
-        generation → ``[]`` (no prune; the scan raises the proper
-        error).
+        ``generation`` (None = live), live count first: every root and
+        every retained generation records its own count. No committed
+        or unknown generation → ``[]`` (no prune; the scan raises the
+        proper error).
 
         The moduli list is what a point-lookup prune must UNION over:
         normally just the count itself; during in-flight doubling
@@ -1584,22 +1573,20 @@ class Engine:
         time) — including CHAINED doublings, where three or more moduli
         coexist until the oldest block drains."""
         meta = self._manifest(path)
-        sidecar = layout.get("oid_buckets") if layout else None
         if meta is None:
             return []
         if generation is None or generation == meta["gen"]:
-            buckets = self._live_buckets(meta, layout)
+            buckets = meta["oid_buckets"]
             mods = {b["from"] for b in (meta.get("migration") or [])}
         else:
             for h in meta.get("history", []):
                 if h["gen"] == generation:
-                    buckets = h.get("oid_buckets", sidecar)
+                    buckets = h["oid_buckets"]
                     mods = set(h.get("moduli", ()))
                     break
             else:
                 return []
-        moduli = [buckets] if buckets else []
-        return moduli + sorted(m for m in mods if m and m != buckets)
+        return [buckets] + sorted(m for m in mods if m != buckets)
 
     def _session_tz(self) -> str:
         return self.spark.conf.get("spark.sql.session.timeZone")
@@ -1633,8 +1620,7 @@ class Engine:
             return None
         return tp
 
-    def _write_layout(self, path: str, buckets: int,
-                      timepart: str | None = None,
+    def _write_layout(self, path: str, timepart: str | None = None,
                       keep_generations: int = 0) -> None:
         import json
 
@@ -1644,10 +1630,9 @@ class Engine:
         # write. Data under a format-less sidecar is an older format:
         # _cube_state refuses it, never retries it as new (which would
         # sweep it).
-        # ``min_format`` fences engines that only read monolithic
-        # manifests: every cube commits SEGMENTED ones from its first
-        # write.
-        meta: dict = {"oid_buckets": buckets, "format": 2,
+        # ``min_format`` fences engines older than the format-5
+        # manifest every cube commits from its first write.
+        meta: dict = {"format": 2,
                       "min_format": self._SUPPORTED_LAYOUT_FORMAT}
         if timepart:
             meta["time_partition"] = timepart
@@ -1719,14 +1704,15 @@ class Engine:
 
     def describe(self, cube: str) -> dict:
         """Zero-scan storage-health report from manifest/sidecar state
-        alone — no data listing, no Spark job: the live generation and
-        retained generation numbers, open/closed directory counts, the
+        alone — no data listing, no Spark job: the live generation, its
+        oid-bucket count (from the manifest root) and the retained
+        generation numbers, open/closed directory counts, the
         history batch TOKENS with their byte sizes (the tier structure
         size-tiered compaction manages), whether a ``compact()`` would
         merge anything right now (``compact_recommended`` — the trickle
         or a promotion quorum qualifies under the engine's
         ``compact_small_bytes``), whether the largest oid bucket has
-        outgrown its first-write count (``rebucket_recommended`` —
+        outgrown its bucket count (``rebucket_recommended`` —
         runbook: ``rebucket()`` or the incremental doubling), the
         progress of an in-flight doubling migration (``migration``:
         pending dirs/bytes for ``rebucket_step`` scheduling), and the
@@ -1742,8 +1728,8 @@ class Engine:
         out: dict = {
             "cube": cube,
             "layout": {k: layout[k]
-                       for k in ("oid_buckets", "time_partition",
-                                 "keep_generations") if k in layout},
+                       for k in ("time_partition", "keep_generations")
+                       if k in layout},
         }
         rollup = (root or {}).get("rollup")
         if rollup is not None and "token_bytes" in rollup:
@@ -1757,8 +1743,7 @@ class Engine:
             out.update({
                 "state": "manifest",
                 "generation": root["gen"],
-                "oid_buckets": root.get(
-                    "oid_buckets", layout.get("oid_buckets")),
+                "oid_buckets": root["oid_buckets"],
                 "retained_generations": [h["gen"] for h in
                                          root.get("history", [])],
                 "open_dirs": rollup["open_dirs"],
@@ -1794,9 +1779,7 @@ class Engine:
         groups = tier_groups(tok, self.compact_small_bytes)
         out.update({
             "generation": meta["gen"],
-            # live count manifest-first: after a rebucket the layout
-            # sidecar keeps the first-write count by design
-            "oid_buckets": self._live_buckets(meta, layout),
+            "oid_buckets": meta["oid_buckets"],
             "retained_generations": [h["gen"] for h in
                                      meta.get("history", [])],
             "open_dirs": sum(d.startswith("_current=true")
@@ -1843,7 +1826,7 @@ class Engine:
             # per-bucket footprint from manifest stats alone: when the
             # largest bucket outgrows what one merge/import should
             # rewrite per commit (~4x the compact threshold here), the
-            # cube has outgrown its first-write count — rebucket()
+            # cube has outgrown its bucket count — rebucket()
             out["max_bucket_bytes"] = max(buckets.values())
             if not blocks:
                 # mid-migration the runbook action is in progress —
@@ -1889,18 +1872,13 @@ class Engine:
         next generation (open rows in ``open-g{gen}``, closed history in
         a gen-scoped ``rb-g{gen}`` batch — never a content token, which
         identical content would collide with a LIVE directory), and the
-        manifest flip publishes the new count IN THE MANIFEST atomically
-        with the directories it applies to. Writers and readers resolve
-        the count manifest-first (``_live_buckets``) and every later
-        flip carries it forward; retained generations keep their own
-        count for time-travel pruning (``_push_history``). The layout
-        sidecar's count converges only AFTER the flip
-        (``_sync_layout_after_rebucket``, once fieldless history entries
-        are stamped with their old count): that write cannot be atomic
-        with the data, so the manifest stays authoritative. Every cube
-        is oid-bucketed, so a single-bucket cube (``oid_buckets=1``)
-        grows the same way; the manifest is segmented before and after,
-        so no format changes here.
+        manifest flip publishes the new count in the manifest root —
+        the count's only record — atomically with the directories it
+        applies to. Every later flip carries it forward; retained
+        generations keep their own count for time-travel pruning
+        (``_push_history``). Every cube is oid-bucketed, so a
+        single-bucket cube (``oid_buckets=1``) grows the same way; no
+        format changes here.
 
         Content is invariant (physical-only, like compaction); a crash
         before the flip leaves readers on the old generation and the
@@ -1927,8 +1905,7 @@ class Engine:
         manifest carry rule retires the directory from
         ``migration.old_dirs``), and (c) ``rebucket_step`` migrates the
         remainder in byte-bounded background chunks. The migration
-        completes when ``old_dirs`` empties; the sidecar count then
-        converges (``_sync_layout_after_rebucket``). Crash anywhere =
+        completes when ``old_dirs`` empties. Crash anywhere =
         any other commit crash: the flip is the commit point and a
         half-migrated cube is a fully valid state indefinitely."""
         _check_buckets(oid_buckets)
@@ -1943,16 +1920,12 @@ class Engine:
                     f"cube {cube!r} is {state} — rebucket needs a "
                     "committed cube")
             layout = self._cube_layout(path) or {}
-            if (self._live_buckets(meta, layout) == oid_buckets
+            if (meta["oid_buckets"] == oid_buckets
                     and not meta.get("migration")):
-                # converge the sidecar too: a crash between a prior
-                # rebucket's flip and its sidecar sync leaves the
-                # first-write count in place — re-running heals it.
-                # (With a migration in flight, fall through: the full
-                # rewrite below is the escape hatch that finishes it in
-                # one pass and clears the migration block.)
-                self._sync_layout_after_rebucket(path, layout,
-                                                 oid_buckets)
+                # already at this count. With a migration in flight,
+                # fall through: the full rewrite below is the escape
+                # hatch that finishes it in one pass and clears the
+                # migration block.
                 return
             timepart = self._cube_timepart(path, for_write=True,
                                            layout=layout)
@@ -1969,7 +1942,6 @@ class Engine:
                 open_batch=f"open-g{gen}", closed_batch=f"rb-g{gen}")
             dirs = set(new_rels)
             hist = self._push_history(meta, keep)
-            self._backfill_history_buckets(hist, meta, layout)
             self._manifest_flip(path, raw, gen, dirs, hist,
                                 stats=self._merged_stats(
                                     meta, new_rels, dirs, hist,
@@ -1977,49 +1949,9 @@ class Engine:
                                 schema=meta["schema"],
                                 oid_buckets=oid_buckets,
                                 migration=None)
-            self._sync_layout_after_rebucket(path, layout, oid_buckets)
             self._sweep_dropped(
                 path, meta, dirs | {d for h in hist for d in h["dirs"]})
             self._auto_refresh_indexes(cube)
-
-    def _backfill_history_buckets(self, hist: list[dict], meta: dict,
-                                  layout: dict) -> None:
-        """Stamp an EXPLICIT ``oid_buckets`` into every retained-history
-        entry that relied on the layout sidecar's first-write count as
-        its fallback — a rebucket is about to rewrite that sidecar count
-        (see ``_sync_layout_after_rebucket``), and a fieldless entry
-        read under the new count would prune time-travel lookups to the
-        wrong directories. Their true count IS the current sidecar
-        value: fieldless entries can only predate the first rebucket."""
-        fallback = self._live_buckets(meta, layout)
-        for h in hist:
-            h.setdefault("oid_buckets", fallback)
-
-    def _sync_layout_after_rebucket(self, path: str, layout: dict,
-                                    oid_buckets: int) -> None:
-        """Post-flip sidecar convergence (the manifest stays
-        authoritative — this write cannot be atomic with the data):
-        rewrite the sidecar's bucket count to the live one, shrinking
-        the window in which a PRE-fence writer (which resolves the
-        count sidecar-only) would merge a rebucketed cube with the
-        wrong modulus, and stamp ``min_format`` so every fence-aware
-        engine version refuses-loud on future semantics it doesn't
-        implement (``_cube_layout``). Fieldless history entries were
-        backfilled with their true count before the flip
-        (``_backfill_history_buckets``), so changing the fallback here
-        is safe."""
-        import json
-
-        if (layout.get("oid_buckets") == oid_buckets
-                and layout.get("min_format", 0)
-                >= self._SUPPORTED_LAYOUT_FORMAT):
-            return
-        out = dict(layout)
-        out["oid_buckets"] = oid_buckets
-        out["min_format"] = max(layout.get("min_format", 0),
-                                self._SUPPORTED_LAYOUT_FORMAT)
-        self.fs.write_text(self.fs.join(path, self._LAYOUT_SIDECAR),
-                           json.dumps(out))
 
     def _rebucket_start_incremental(self, cube: str,
                                     oid_buckets: int) -> None:
@@ -2033,11 +1965,9 @@ class Engine:
         pre-doubling live count, and reads union-prune under every
         modulus present (``_read_moduli``), so growing 16 → 1024
         is six starts whose drains overlap freely instead of six
-        fully-sequential windows. The sidecar carries the
-        ``min_format`` fence from the cube's first write; its COUNT
-        stays at the first-write value until completion — no
-        single sidecar number can describe a mixed-modulus cube, and
-        the manifest is authoritative throughout."""
+        fully-sequential windows. The root's count becomes ``2N`` at
+        the start; the stamps name the older moduli until they
+        drain."""
         with self._write_lock(cube):
             path = self._path(cube)
             state, meta, raw = self._cube_state(path)
@@ -2046,14 +1976,8 @@ class Engine:
                     f"cube {cube!r} is {state} — rebucket needs a "
                     "committed cube")
             layout = self._cube_layout(path) or {}
-            cur = self._live_buckets(meta, layout)
-            blocks = meta.get("migration") or []
+            cur = meta["oid_buckets"]
             if cur == oid_buckets:
-                if not blocks:
-                    # converge the sidecar (idempotent restart after a
-                    # completed migration whose sync crashed)
-                    self._sync_layout_after_rebucket(path, layout,
-                                                     oid_buckets)
                 return  # already at / already migrating to this target
             if oid_buckets != 2 * cur:
                 raise ValueError(
@@ -2061,6 +1985,7 @@ class Engine:
                     f"({cur} -> {2 * cur}); got target {oid_buckets}. "
                     "Chain doublings (each start is metadata-only and "
                     "they drain concurrently), or use a full rebucket")
+            blocks = meta.get("migration") or []
             stamped = {d for b in blocks for d in b["old_dirs"]}
             old_dirs = sorted(d for d in meta["dirs"] if d not in stamped)
             if not old_dirs and not blocks:
@@ -2069,7 +1994,6 @@ class Engine:
             gen = meta["gen"] + 1
             keep = layout.get("keep_generations", 0)
             hist = self._push_history(meta, keep)
-            self._backfill_history_buckets(hist, meta, layout)
             self._manifest_flip(
                 path, raw, gen, set(meta["dirs"]), hist,
                 stats=self._merged_stats(meta, None, set(meta["dirs"]),
@@ -2090,12 +2014,12 @@ class Engine:
         fresh generation-scoped directories (open rows to
         ``open-g{gen}``, closed to ``mig-g{gen}``), and commits. The
         carry rule retires the chunk from ``old_dirs``; when the last
-        old directory goes, the migration is complete and the sidecar
-        count converges. Each step is one ordinary commit: bounded I/O
-        (O(chunk), never O(cube)), snapshot-isolated, crash-convergent
-        (a retry rewrites the same gen-scoped directories), and safely
-        interleavable with upserts/imports/compactions — which migrate
-        whatever they touch on their own. Returns
+        old directory goes, the migration is complete. Each step is one
+        ordinary commit: bounded I/O (O(chunk), never O(cube)),
+        snapshot-isolated, crash-convergent (a retry rewrites the same
+        gen-scoped directories), and safely interleavable with
+        upserts/imports/compactions — which migrate whatever they touch
+        on their own. Returns
         ``{"migrated_dirs", "migrated_bytes", "remaining_dirs",
         "done"}``."""
         with self._write_lock(cube):
@@ -2106,16 +2030,7 @@ class Engine:
                     f"cube {cube!r} is {state} — no migration to step")
             blocks = meta.get("migration") or []
             layout = self._cube_layout(path) or {}
-            buckets = self._live_buckets(meta, layout)
             if not blocks:
-                if layout.get("oid_buckets") != buckets:
-                    # converge the sidecar: a crash between the
-                    # completing flip and its sidecar sync leaves the
-                    # first-write count/fence behind — stepping a
-                    # finished migration heals it (never-migrated
-                    # cubes have matching counts and are untouched)
-                    self._sync_layout_after_rebucket(path, layout,
-                                                     buckets)
                 return {"migrated_dirs": 0, "migrated_bytes": 0,
                         "remaining_dirs": 0, "done": True}
             timepart = self._cube_timepart(path, for_write=True,
@@ -2138,13 +2053,7 @@ class Engine:
             chunk: list[str] = []
             used = 0
             for d in pending:
-                b = sizes.get(d)
-                if b is None:
-                    full = self.fs.join(path, d)
-                    b = self._du_cache.get(full)
-                    if b is None:
-                        b = self.fs.du(full)
-                        self._du_cache[full] = b
+                b = self._dir_bytes(path, d, sizes)
                 if chunk and max_bytes is not None \
                         and used + b > max_bytes:
                     continue  # keep scanning: a smaller dir may fit
@@ -2154,14 +2063,14 @@ class Engine:
                     break
             gen = meta["gen"] + 1
             keep = layout.get("keep_generations", 0)
-            rows = self._read_dirs(path, meta, chunk).drop(
+            rows = self._read_dirs(path, meta["schema"], chunk).drop(
                 "_current", "__batch", "__obucket", "__stime")
             # localCheckpoint: the write lands under the same root the
             # plan reads from, and a retry must not recompute from
             # directories the write is mutating
             rows = rows.localCheckpoint(eager=True)
             new_rels = self._write_dirs(
-                rows, path, buckets, timepart,
+                rows, path, meta["oid_buckets"], timepart,
                 open_batch=f"open-g{gen}", closed_batch=f"mig-g{gen}")
             dirs = (live - set(chunk)) | set(new_rels)
             hist = self._push_history(meta, keep)
@@ -2200,10 +2109,10 @@ class Engine:
     # next successful commit.
 
     _MANIFEST_SIDECAR = "_manifest.json"
-    # Segmented manifest (format 4, the only manifest form): the root
+    # Segmented manifest (format 5, the only manifest form): the root
     # sidecar stays the single CAS commit point but holds only the
-    # generation, rolled-up stats, and REFERENCES into
-    # ``_manifest_seg/`` — one immutable JSON segment per oid-bucket
+    # generation, the oid-bucket count, rolled-up stats, and REFERENCES
+    # into ``_manifest_seg/`` — one immutable JSON segment per oid-bucket
     # RANGE carrying that range's directory list, per-directory stats,
     # and per-directory old-modulus stamps. A commit serializes only
     # the segments whose content changed (unchanged ranges carry
@@ -2228,9 +2137,10 @@ class Engine:
         """Parse (only) the manifest ROOT sidecar — O(segments), not
         O(dirs): enough for describe()/metadata-count rollups and the
         CAS protocol. ``_manifest`` assembles the full flat dict from
-        it. A root without a ``schema``, or a monolithic root (no
-        ``format: 4`` segment refs, for itself or a retained
-        generation), is an older format: refused."""
+        it. Only a format-5 root is read: segment refs and an
+        ``oid_buckets`` count on the root and on every retained
+        generation, plus a ``schema``. Any other root is an older
+        format: refused, its data kept."""
         import json
 
         if raw is None:
@@ -2250,9 +2160,11 @@ class Engine:
                 "back to a listing read")
         if root.get("schema") is None:
             raise _old_format_error(path, "manifest root without a schema")
-        if (root.get("format") != 4 or "segs" not in root
-                or any("segs" not in h for h in root.get("history", []))):
-            raise _old_format_error(path, "monolithic manifest root")
+        if root.get("format") != 5 or any(
+                "segs" not in e or "oid_buckets" not in e
+                for e in [root, *root.get("history", [])]):
+            raise _old_format_error(
+                path, f"manifest root format {root.get('format')}, not 5")
         return root
 
     @classmethod
@@ -2316,7 +2228,8 @@ class Engine:
 
         dirs = fold(root["segs"], live=True)
         meta: dict = {"gen": root["gen"], "dirs": sorted(dirs),
-                      "schema": root["schema"]}
+                      "schema": root["schema"],
+                      "oid_buckets": root["oid_buckets"]}
         hist_out: list[dict] = []
         for h in root.get("history", []):
             e = {k: h[k] for k in ("gen", "oid_buckets", "moduli",
@@ -2332,8 +2245,6 @@ class Engine:
             if rw:
                 st_out["rows"] = rw
             meta["stats"] = st_out
-        if "oid_buckets" in root:
-            meta["oid_buckets"] = root["oid_buckets"]
         if "rollup" in root:
             meta["rollup"] = root["rollup"]
         if stamps:
@@ -2384,13 +2295,12 @@ class Engine:
         settings cannot silently truncate pinned snapshots."""
         if not keep:
             return []
-        cur: dict = {"gen": meta["gen"], "dirs": meta["dirs"]}
-        if "oid_buckets" in meta:
-            # a retained generation keeps ITS OWN bucket count: after a
-            # rebucket, a time-travel point lookup of the old snapshot
-            # must prune with the modulus its directories were hashed
-            # under, not the live one
-            cur["oid_buckets"] = meta["oid_buckets"]
+        # a retained generation keeps ITS OWN bucket count: after a
+        # rebucket, a time-travel point lookup of the old snapshot must
+        # prune with the modulus its directories were hashed under, not
+        # the live one
+        cur: dict = {"gen": meta["gen"], "dirs": meta["dirs"],
+                     "oid_buckets": meta["oid_buckets"]}
         if meta.get("migration"):
             # mid-migration generations keep their moduli SET: a
             # time-travel point lookup of a mixed-modulus snapshot must
@@ -2404,11 +2314,9 @@ class Engine:
         # reproduce exactly the frame a job saw then — not the union
         # schema with phantom null columns
         cur["schema"] = meta["schema"]
-        # entry dicts are COPIED: callers may stamp fields into them
-        # (_backfill_history_buckets), and the assembled manifest they
-        # came from is cached and shared (see _manifest)
-        hist = [cur] + [dict(h) for h in meta.get("history", [])]
-        return hist[:keep]
+        # the entries are shared with the cached assembled manifest
+        # (see _manifest): read-only, like it
+        return [cur, *meta.get("history", [])][:keep]
 
     @staticmethod
     def _retained_dirs(meta: dict) -> set[str]:
@@ -2500,17 +2408,18 @@ class Engine:
         text read at operation start — under the writer lease this only
         fails if a TTL-expired zombie writer raced us; fail loud.
 
-        Every cube commits the SEGMENTED layout (format 4): the
+        Every cube commits the SEGMENTED layout (format 5): the
         directory list and per-directory stats are re-grouped into
         per-bucket-range segment files, only segments whose content
         changed are serialized (to fresh gen-scoped filenames — a
         crash-retry of the same generation overwrites the same
         not-yet-referenced files), unchanged ranges carry forward by
-        filename reference, and the tiny root — generation, segment
-        refs, rolled-up stats — is the CAS payload. Per-commit manifest
-        bytes are therefore O(touched buckets); the root also carries
-        the rollup ``describe()`` and the metadata-only ``count()``
-        answer from without loading any segment.
+        filename reference, and the tiny root — generation, oid-bucket
+        count, segment refs, rolled-up stats — is the CAS payload.
+        Per-commit manifest bytes are therefore O(touched buckets); the
+        root also carries the rollup ``describe()`` and the
+        metadata-only ``count()`` answer from without loading any
+        segment.
 
         ``schema`` is the generation's authoritative read schema (data
         columns + directory-encoded partition columns, StructType JSON):
@@ -2534,9 +2443,12 @@ class Engine:
         started doubling on top of the carried ones (chained
         migrations). The stamps live in the segment files; the root
         keeps only the rolled-up moduli/pending summary. When the last
-        stamp drains, the migration is complete and the layout sidecar
-        count converges (post-CAS, best-effort — the manifest stays
-        authoritative)."""
+        stamp drains, the migration is complete.
+
+        ``oid_buckets`` is the generation's bucket count, recorded in
+        the root and nowhere else: the first write and ``rebucket`` set
+        it (atomically with the directories it applies to); every other
+        flip carries the prior root's value forward."""
         import json
 
         prior_root = json.loads(old_raw) if old_raw else {}
@@ -2552,14 +2464,8 @@ class Engine:
         else:
             with self._phase("flip_assemble"):
                 prior = self._assemble(path, prior_root)
-        # the generation's authoritative oid-bucket count: ``rebucket``
-        # sets it explicitly (atomically with the rewritten dirs — the
-        # layout sidecar alone can't change in the same write as the
-        # data); every other flip carries the prior generation's value
-        # forward, so once recorded it never silently reverts to the
-        # sidecar default
         if oid_buckets is Engine._CARRY:
-            oid_buckets = prior.get("oid_buckets", Engine._CARRY)
+            oid_buckets = prior["oid_buckets"]
         carried = {d: b["from"] for b in (prior.get("migration") or [])
                    for d in b["old_dirs"] if d in dirs}
         if migration is Engine._CARRY:
@@ -2571,9 +2477,7 @@ class Engine:
             stamps.update({d: migration["from"]
                            for d in migration["old_dirs"]
                            if d in dirs and d not in carried})
-        body: dict = {"gen": gen}
-        if oid_buckets is not Engine._CARRY:
-            body["oid_buckets"] = oid_buckets
+        body: dict = {"gen": gen, "oid_buckets": oid_buckets}
         with self._phase("flip_build_segments"):
             self._flip_build_segmented(path, prior_root, gen, dirs,
                                        history, stats, schema, stamps,
@@ -2598,14 +2502,6 @@ class Engine:
         # commit's superseded ones, or strands of crashed attempts)
         with self._phase("flip_sweep_segments"):
             self._sweep_segments(path, body)
-        if (prior.get("migration") and not stamps
-                and isinstance(body.get("oid_buckets"), int)):
-            # this commit rewrote the last old-modulus directory: the
-            # doubling migration is COMPLETE — converge the layout
-            # sidecar to the live count (post-CAS and best-effort, like
-            # the full rebucket's sync; the manifest stays authoritative)
-            self._sync_layout_after_rebucket(
-                path, self._cube_layout(path) or {}, body["oid_buckets"])
 
     def _flip_build_segmented(self, path: str, prior_root: dict,
                               gen: int, dirs: set[str],
@@ -2613,7 +2509,7 @@ class Engine:
                               stats: dict | None, schema: dict,
                               stamps: dict[str, int],
                               body: dict) -> None:
-        """Build the format-4 root ``body`` in place and write the
+        """Build the format-5 root ``body`` in place and write the
         changed segment files (BEFORE the CAS — stranded ones are
         invisible until a root references them and are swept by the
         next successful commit)."""
@@ -2660,7 +2556,7 @@ class Engine:
             full = self.fs.join(path, self._MANIFEST_SEGDIR, fname)
             self.fs.write_text(full, txt)
             seg_refs[k] = fname
-        body["format"] = 4
+        body["format"] = 5
         body["tz"] = tz
         body["segs"] = seg_refs
         body["schema"] = schema
@@ -3157,16 +3053,22 @@ class Engine:
         for d in meta["dirs"]:
             if not d.startswith("_current=false"):
                 continue
-            b = sizes.get(d)
-            if b is None:
-                full = self.fs.join(path, d)
-                b = self._du_cache.get(full)
-                if b is None:
-                    b = self.fs.du(full)
-                    self._du_cache[full] = b
             t = self._batch_dir_token(d)
-            tot[t] = tot.get(t, 0) + b
+            tot[t] = tot.get(t, 0) + self._dir_bytes(path, d, sizes)
         return tot
+
+    def _dir_bytes(self, path: str, rel: str, sizes: dict) -> int:
+        """A directory's byte size: the manifest's recorded
+        ``stats.bytes`` entry (``sizes``), else the ``fs.du`` fallback
+        for a size ``_write_dirs`` failed to measure, cached in
+        ``_du_cache`` until the next flip persists it."""
+        b = sizes.get(rel)
+        if b is None:
+            full = self.fs.join(path, rel)
+            b = self._du_cache.get(full)
+            if b is None:
+                b = self._du_cache[full] = self.fs.du(full)
+        return b
 
     def _sort_compacted(self, closed: DataFrame,
                         target_partitions: int | None,
@@ -3266,7 +3168,7 @@ class Engine:
         if state == "new":
             return 0
         layout = self._cube_layout(path)
-        buckets = self._live_buckets(meta, layout)
+        buckets = meta["oid_buckets"]
         timepart = self._cube_timepart(path, for_write=True, layout=layout)
         # size-tiered — the trickle of small batches merges
         # into one level, and ≥4 similar-sized larger levels fold into
@@ -3366,8 +3268,7 @@ class Engine:
         record manifest dirs the data never landed in, and the sweep
         would then delete the real ones."""
         buckets = self.oid_buckets
-        self._write_layout(path, buckets, self.time_partition,
-                           self.keep_generations)
+        self._write_layout(path, self.time_partition, self.keep_generations)
         dirs = self._write_dirs(
             obj.drop("_current"), path, buckets, self.time_partition,
             open_batch="open-g1", closed_batch="hist-g1")
@@ -3380,7 +3281,8 @@ class Engine:
                             stats=self._merged_stats(
                                 None, dirs, set(dirs), None, path=path),
                             schema=self._manifest_schema(
-                                obj.schema, self.time_partition))
+                                obj.schema, self.time_partition),
+                            oid_buckets=buckets)
         self._sweep_unreferenced(path, set(dirs))
 
     def insert(self, cube: str, df: DataFrame, stamped: bool = False,
@@ -3404,7 +3306,7 @@ class Engine:
                 self._first_write(path, obj)
                 return
             layout = self._cube_layout(path)
-            buckets = self._live_buckets(meta, layout)
+            buckets = meta["oid_buckets"]
             timepart = self._cube_timepart(path, for_write=True,
                                            layout=layout)
             obj, _ = self._align_to_stored(path, meta, obj, evolve)
@@ -3485,7 +3387,7 @@ class Engine:
         moduli: list[int] = []
         if state != "new":
             layout = self._cube_layout(path)
-            buckets = self._live_buckets(meta, layout)
+            buckets = meta["oid_buckets"]
             moduli = [buckets] + [b["from"] for b in
                                   meta.get("migration") or []]
         n_closed, hits = self._probe(incoming, moduli)
@@ -3537,7 +3439,7 @@ class Engine:
                 # dir's path value is in its own modulus's hit set
                 hit_vals = sorted(set().union(*hits.values()))
                 pruned = self._read_dirs(
-                    path, meta, sorted(drop_open)).where(
+                    path, meta["schema"], sorted(drop_open)).where(
                     F.col("_current")
                     & F.col("__obucket").isin(hit_vals))
             else:
@@ -3644,7 +3546,8 @@ class Engine:
         replaced_dirs = self._hit_dirs(hits, meta, buckets, live,
                                        current_only=False)
         # read exactly the replaced set, by relpath
-        pruned = (self._read_dirs(path, meta, sorted(replaced_dirs))
+        pruned = (self._read_dirs(path, meta["schema"],
+                                  sorted(replaced_dirs))
                   if replaced_dirs
                   else self._empty_schema_frame(meta["schema"]))
         keys = incoming.select("_oid").distinct()
@@ -3801,7 +3704,7 @@ class Engine:
             # directories instead of filtering rows
             path = self._path(cube)
             layout = self._cube_layout(path)  # ONE sidecar fetch/query
-            moduli = self._read_moduli(path, layout, generation)
+            moduli = self._read_moduli(path, generation)
             # as-of / since specs bound _end from below: closed dirs
             # whose recorded max(_end) precedes the bound are skipped at
             # manifest resolution (directory-level data skipping)

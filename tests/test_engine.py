@@ -317,9 +317,12 @@ def test_first_write_crash_between_sidecar_and_data_converges(spark, tmp_path):
     eng.upsert("c", stamped)
     assert eng.count("c") == 1
     # layout survived (the first write must not delete the sidecar);
-    # the retry re-stamps it with the protocol format marker
+    # the retry re-stamps it with the protocol format marker, and the
+    # bucket count lands in the manifest root, not the sidecar
     assert json.load(open(os.path.join(wh, "c", "_layout.json"))) == \
-        {"oid_buckets": 8, "format": 2, "min_format": 4}
+        {"format": 2, "min_format": 5}
+    root = json.load(open(os.path.join(wh, "c", "_manifest.json")))
+    assert root["format"] == 5 and root["oid_buckets"] == 8
     # and the cube keeps working through the normal merge path
     eng.upsert("c", stamped.withColumn("val", F.lit("b"))
                .withColumn("_start",
@@ -730,7 +733,7 @@ def test_count_metadata_only_fast_path(spark, tmp_path, monkeypatch):
 def test_rebucket_migrates_count_and_stays_correct(spark, tmp_path):
     """rebucket(cube, N') is a physical-only migration: content is
     invariant across the rewrite, point lookups prune under the NEW
-    modulus (manifest-first resolution), subsequent snapshot upserts
+    modulus (read from the manifest root), subsequent snapshot upserts
     merge correctly against the rebucketed layout, and a time-travel
     read of a PRE-rebucket generation prunes under the OLD count (a
     lookup hashed with the wrong modulus would silently miss rows)."""
@@ -753,16 +756,18 @@ def test_rebucket_migrates_count_and_stays_correct(spark, tmp_path):
 
     eng.rebucket("c", 16)
     assert eng.describe("c")["oid_buckets"] == 16
-    # post-flip sidecar convergence: the count rewrites to the live one
-    # (shrinking the pre-fence stale-writer window) and the min_format
-    # fence lands; history entries were backfilled with their explicit
-    # old count first, so time travel below still prunes correctly
-    assert eng._cube_layout(eng._path("c"))["oid_buckets"] == 16
+    # the manifest root is the count's one record: the live count is
+    # the new one, every retained generation keeps its old count (so
+    # time travel below still prunes correctly), and the sidecar holds
+    # the min_format fence but no count
     import json as _json
 
+    root = _json.loads(eng.fs.read_text(
+        eng.fs.join(eng._path("c"), "_manifest.json")))
+    assert root["oid_buckets"] == 16
     lay = _json.loads(eng.fs.read_text(
         eng.fs.join(eng._path("c"), "_layout.json")))
-    assert lay["min_format"] == 4
+    assert lay["min_format"] == 5 and "oid_buckets" not in lay
     meta_h = eng._manifest(eng._path("c"))["history"]
     assert all(h["oid_buckets"] == 4 for h in meta_h)
     after = sorted((r["_oid"], r["x"], str(r["_start"]))
@@ -793,7 +798,7 @@ def test_rebucket_migrates_count_and_stays_correct(spark, tmp_path):
     assert eng.count("c", date="~", generation=pre_gen) == 96
 
     # a second engine over the same warehouse (fresh state) resolves
-    # the count manifest-first too
+    # the count from the manifest root too
     eng2 = Engine(spark, warehouse=str(tmp_path / "wh"), oid_buckets=4)
     assert eng2.count("c", date="~") == 144
     eng2.upsert("c", ver(4, "2024-04-01"), stamped=True)

@@ -220,10 +220,9 @@ def test_random_op_sequence_matches_model(spark, tmp_path):
             # still drains (three+ moduli coexist), capped here so the
             # fuzz can't double the count into the thousands.
             meta = eng._manifest(eng._path(cube))
-            layout = eng._cube_layout(eng._path(cube)) or {}
-            cur = eng._live_buckets(meta, layout)
-            if meta is not None and cur and cur <= 32:
-                eng.rebucket(cube, 2 * cur, incremental=True)
+            if meta is not None and meta["oid_buckets"] <= 32:
+                eng.rebucket(cube, 2 * meta["oid_buckets"],
+                             incremental=True)
         elif op == "rebucket_step":
             # bounded background drain (no-op without a migration)
             eng.rebucket_step(cube, max_dirs=rng.choice([1, 2, None]))
@@ -249,9 +248,12 @@ def test_random_op_sequence_matches_model(spark, tmp_path):
         # pointer and read exactly the current model — never error,
         # never mix generations (see Engine._retry_swept / _read_raw)
         if step % 4 == 2:
-            swept_meta = {"gen": -1,
-                          "dirs": ["_current=true/__batch=__swept__"]}
             real_manifest = eng._manifest
+            # a resolved manifest always carries its bucket count
+            swept_meta = {"gen": -1,
+                          "dirs": ["_current=true/__batch=__swept__"],
+                          "oid_buckets": real_manifest(
+                              eng._path(cube))["oid_buckets"]}
             calls = {"n": 0}
 
             def stale_first(path, _r=real_manifest, _c=calls):

@@ -298,7 +298,10 @@ def test_fault_sweep_doubling_migration(spark, tmp_path):
 
         lay = json.loads(clean.fs.read_text(
             clean.fs.join(clean._path(CUBE), "_layout.json")))
-        assert lay["oid_buckets"] == 16 and lay["min_format"] >= 4
+        root = json.loads(clean.fs.read_text(
+            clean.fs.join(clean._path(CUBE), "_manifest.json")))
+        assert root["oid_buckets"] == 16 and lay["min_format"] >= 4
+        assert "oid_buckets" not in lay
         # point lookup through the converged cube prunes correctly
         assert sorted(
             r["_oid"] for r in
@@ -559,8 +562,8 @@ def test_migration_steps_race_concurrent_snapshots(spark, tmp_path):
     lock_wait: the lease serializes the commits in some order; the
     migration is physical-only and the merges are migration-aware, so
     the final cube must equal the snapshot model exactly, the
-    migration must complete, and the converged layout (manifest count,
-    sidecar sync, point lookups) must be consistent."""
+    migration must complete, and the final layout (the root's count,
+    a count-free sidecar, point lookups) must be consistent."""
     import threading
 
     wh = str(tmp_path / "wh")
@@ -615,7 +618,10 @@ def test_migration_steps_race_concurrent_snapshots(spark, tmp_path):
 
     lay = json.loads(clean.fs.read_text(
         clean.fs.join(clean._path(CUBE), "_layout.json")))
-    assert lay["oid_buckets"] == 4 and lay["min_format"] >= 3
+    root = json.loads(clean.fs.read_text(
+        clean.fs.join(clean._path(CUBE), "_manifest.json")))
+    assert root["oid_buckets"] == 4 and lay["min_format"] >= 3
+    assert "oid_buckets" not in lay
     assert clean.count(CUBE) == 7  # 6 boot oids + oid 9
     assert sorted(r["_oid"] for r in
                   clean.find(CUBE, oids=[1, 9]).collect()) == [1, 9]

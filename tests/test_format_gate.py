@@ -1,10 +1,10 @@
 """The engine reads exactly one on-disk cube format: a format-2
-``_layout.json`` sidecar plus a segmented (format-4) manifest root that
-carries a schema, and every cube is oid-bucketed. Every older state is
-refused with the one ValueError from ``_cube_state``/``_manifest_root``
-— and refused WITHOUT touching the data: an older cube's directories
-are committed data, so no writer may sweep them as if they were a
-crashed first write."""
+``_layout.json`` sidecar plus a segmented (format-5) manifest root that
+carries a schema and the oid-bucket count, and every cube is
+oid-bucketed. Every older state is refused with the one ValueError from
+``_cube_state``/``_manifest_root`` — and refused WITHOUT touching the
+data: an older cube's directories are committed data, so no writer may
+sweep them as if they were a crashed first write."""
 
 import json
 import os
@@ -61,8 +61,23 @@ def _monolithic_root(eng, path):
         json.dump(root, fh)
 
 
+def _format4_root(eng, path):
+    # the segmented root older engines wrote: the bucket count lived in
+    # the layout sidecar until a rebucket put it in the root
+    mp = os.path.join(path, "_manifest.json")
+    with open(mp) as fh:
+        root = json.load(fh)
+    root["format"] = 4
+    root.pop("oid_buckets")
+    for h in root.get("history", []):
+        h.pop("oid_buckets")
+    with open(mp, "w") as fh:
+        json.dump(root, fh)
+
+
 @pytest.mark.parametrize("make_old", [_no_layout, _formatless_layout,
-                                      _schemaless_root, _monolithic_root])
+                                      _schemaless_root, _monolithic_root,
+                                      _format4_root])
 def test_older_format_refused_and_never_wiped(spark, tmp_path, make_old):
     wh = str(tmp_path / "wh")
     first = Engine(spark, warehouse=wh)
@@ -87,7 +102,22 @@ def test_older_format_refused_and_never_wiped(spark, tmp_path, make_old):
         assert _parquet_files(path) == files, name
 
 
-@pytest.mark.parametrize("buckets", [None, 0, -1])
-def test_oid_buckets_must_be_a_positive_int(spark, tmp_path, buckets):
-    with pytest.raises(ValueError, match="oid_buckets=1"):
-        Engine(spark, warehouse=str(tmp_path / "wh"), oid_buckets=buckets)
+@pytest.mark.parametrize("kwarg, value, match", [
+    pytest.param("oid_buckets", None, "oid_buckets=1", id="None"),
+    pytest.param("oid_buckets", 0, "oid_buckets=1", id="0"),
+    pytest.param("oid_buckets", -1, "oid_buckets=1", id="-1"),
+    pytest.param("lock_ttl", 0, "lock_ttl must be > 0", id="lock_ttl-0"),
+    pytest.param("lock_ttl", -5.0, "lock_ttl must be > 0",
+                 id="lock_ttl-neg"),
+    pytest.param("auto_compact_batches", -1,
+                 "auto_compact_batches must be >= 0",
+                 id="auto_compact_batches-neg"),
+    pytest.param("auto_compact_index_batches", -1,
+                 "auto_compact_index_batches must be >= 0",
+                 id="auto_compact_index_batches-neg"),
+])
+def test_oid_buckets_must_be_a_positive_int(spark, tmp_path, kwarg, value,
+                                            match):
+    """Bad configuration fails loudly in the constructor."""
+    with pytest.raises(ValueError, match=match):
+        Engine(spark, warehouse=str(tmp_path / "wh"), **{kwarg: value})

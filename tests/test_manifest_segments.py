@@ -27,10 +27,10 @@ def eng(spark, tmp_path):
 _SCHEMA = {"type": "struct", "fields": []}
 
 
-def _mkcube(eng, cube, buckets):
+def _mkcube(eng, cube):
     path = eng._path(cube)
     os.makedirs(path, exist_ok=True)
-    eng._write_layout(path, buckets)
+    eng._write_layout(path)
     return path
 
 
@@ -60,7 +60,7 @@ def test_flip_assemble_round_trip_fuzz(eng):
     for trial in range(25):
         cube = f"c{trial}"
         buckets = rng.choice([4, 8, 64, 200])
-        path = _mkcube(eng, cube, buckets)
+        path = _mkcube(eng, cube)
         dirs = _dirs_for(buckets, rng)
         stats = _stats_for(dirs, rng)
         eng._manifest_flip(path, None, 1, dirs, stats=stats,
@@ -91,7 +91,7 @@ def test_flip_assemble_round_trip_fuzz(eng):
 def test_second_flip_reuses_untouched_segments_and_sweeps(eng):
     rng = random.Random(7)
     buckets = 256  # several bucket ranges -> several segment files
-    path = _mkcube(eng, "s", buckets)
+    path = _mkcube(eng, "s")
     dirs = {f"_current=true/__obucket={b}/__batch=open-g1"
             for b in range(0, 256, 8)}
     stats = _stats_for(dirs, rng)
@@ -133,7 +133,7 @@ def test_second_flip_reuses_untouched_segments_and_sweeps(eng):
 def test_stamps_round_trip_as_migration_blocks(eng):
     rng = random.Random(5)
     buckets = 16
-    path = _mkcube(eng, "m", buckets)
+    path = _mkcube(eng, "m")
     dirs = _dirs_for(buckets, rng)
     bucketed = sorted(d for d in dirs if "/__obucket=" in d)
     eng._manifest_flip(path, None, 1, dirs,
@@ -167,7 +167,8 @@ def test_stamps_round_trip_as_migration_blocks(eng):
                        stats=_stats_for(dirs4, rng), schema=_SCHEMA)
     meta = eng._manifest(path)
     assert gone not in meta["migration"][0]["old_dirs"]
-    # explicit None clears every stamp and syncs the sidecar count
+    # explicit None clears every stamp; the root keeps the live count
+    # and the sidecar carries none
     raw = eng._manifest_raw(path)
     eng._manifest_flip(path, raw, 5, dirs4,
                        stats=_stats_for(dirs4, rng), schema=_SCHEMA,
@@ -176,7 +177,8 @@ def test_stamps_round_trip_as_migration_blocks(eng):
     assert meta.get("migration") is None
     lay = json.loads(eng.fs.read_text(
         os.path.join(path, "_layout.json")))
-    assert lay["oid_buckets"] == 64  # completion convergence
+    root = json.loads(eng._manifest_raw(path))
+    assert root["oid_buckets"] == 64 and "oid_buckets" not in lay
 
 
 def test_describe_fast_path_matches_assembled_path(spark, tmp_path):

@@ -500,7 +500,8 @@ def test_first_manifest_flip_is_cas(spark, engine):
     with _pytest.raises(ConcurrentWriteError, match="first writer"):
         engine._manifest_flip(path, None, 1,
                               {"_current=true/__obucket=0/__batch=x"},
-                              schema=engine._manifest(path)["schema"])
+                              schema=engine._manifest(path)["schema"],
+                              oid_buckets=engine.oid_buckets)
 
 
 def test_time_travel_reads_exact_retained_snapshots(spark, tmp_path):
