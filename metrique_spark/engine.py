@@ -17,6 +17,7 @@ filter pushdown and column pruning reach the parquet scan).
 from __future__ import annotations
 
 import contextlib
+from functools import cached_property
 from typing import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -111,9 +112,11 @@ def _is_swept_read_error(exc: BaseException) -> bool:
     commit deleted after we resolved the manifest pointer? Matched on
     the JVM exception text: Spark surfaces the executor-side miss as a
     ``FileNotFoundException`` (with a REFRESH TABLE hint) and the
-    plan-time miss as ``[PATH_NOT_FOUND]``."""
+    plan-time miss as ``[PATH_NOT_FOUND]``. A manifest segment file the
+    same commit swept surfaces as a Python ``FileNotFoundError``."""
     s = str(exc)
-    return ("FileNotFoundException" in s
+    return (isinstance(exc, FileNotFoundError)
+            or "FileNotFoundException" in s
             or "PATH_NOT_FOUND" in s
             or "FileNotFound" in s)
 
@@ -135,6 +138,97 @@ def _check_buckets(oid_buckets) -> None:
         raise ValueError(
             "oid_buckets must be > 0, an int (oid_buckets=1 is the "
             f"single-bucket layout), got {oid_buckets!r}")
+
+
+# internal partition keys of a cube read: commit batch, oid bucket,
+# period — not data
+_INTERNAL = ("__batch", "__obucket", "__stime")
+
+
+class _Snapshot:
+    """One resolution of a cube (``Engine._resolve``): every fact a
+    public op reads about the cube, taken from ONE read of the manifest
+    root and one of the layout sidecar, so no op can mix two
+    generations. ``state`` is ``new`` (nothing committed) or
+    ``manifest``; ``gen`` is the live generation. ``generation`` picks
+    the generation the read-side facts (``dirs``, ``schema``,
+    ``moduli``, ``oid_dtype``) describe, None = live. The assembled
+    manifest is built lazily from the same raw root text, so the
+    root-only ``count``/``describe`` paths load no segment. Layout
+    facts: ``layout`` (``{}`` when absent), ``keep`` (the cube's
+    recorded retention) and ``timepart`` (the recorded period key, None
+    when the cube has none or a reader's session zone differs from the
+    recorded one). Read-only, like everything it hands out."""
+
+    def __init__(self, eng, path: str, raw: str | None,
+                 root: dict | None, layout: dict,
+                 generation: int | None, timepart: str | None):
+        self._eng = eng
+        self.path, self.raw, self.root = path, raw, root
+        self.state = "new" if root is None else "manifest"
+        self.gen = None if root is None else root["gen"]
+        self.generation = generation
+        self.layout = layout
+        self.keep = layout.get("keep_generations", 0)
+        self.timepart = timepart
+
+    @cached_property
+    def manifest(self) -> dict:
+        return self._eng._assembled(self.path, self.raw, self.root)
+
+    @cached_property
+    def entry(self) -> dict:
+        """The chosen generation's assembled manifest entry."""
+        m = self.manifest
+        if self.generation in (None, m["gen"]):
+            return m
+        return next(h for h in m["history"] if h["gen"] == self.generation)
+
+    @property
+    def dirs(self) -> list[str]:
+        return self.entry["dirs"]
+
+    @property
+    def schema(self) -> dict:
+        return self.entry["schema"]
+
+    @cached_property
+    def moduli(self) -> list[int]:
+        """The oid-bucket moduli a point-lookup prune must UNION over,
+        the generation's own count first: normally just that count;
+        during in-flight doubling migration(s) every FROM modulus joins
+        it (the live manifest's ``migration`` blocks, a retained
+        entry's ``moduli``). A directory at modulus ``m`` with value
+        ``__obucket=v`` holds oids with ``hash % m == v``, so keeping
+        every directory whose value is in ``{hash % m : m in moduli}``
+        is sound whichever vintage the directory is — including CHAINED
+        doublings, where three or more moduli coexist until the oldest
+        block drains."""
+        e = self.entry
+        mods = set(e.get("moduli", ())) | {
+            b["from"] for b in e.get("migration") or []}
+        return [e["oid_buckets"]] + sorted(mods - {e["oid_buckets"]})
+
+    @cached_property
+    def oid_dtype(self):
+        """The stored ``_oid`` dtype from the generation's schema (None
+        when it has no ``_oid``): a point lookup hashes its literals
+        under it to prune the directory list before the read."""
+        from pyspark.sql.types import StructType
+
+        st = StructType.fromJson(self.schema)
+        return st["_oid"].dataType if "_oid" in st.fieldNames() else None
+
+    @cached_property
+    def bloom_ndv(self) -> int | None:
+        """Average rows per live directory — the ``bloom_oid_ndv="auto"``
+        estimate for this op's writes (see ``_write_dirs``); None before
+        the first commit."""
+        if self.root is None:
+            return None
+        rows = (self.manifest.get("stats") or {}).get("rows") or {}
+        live = [rows[d] for d in self.manifest["dirs"] if d in rows]
+        return sum(live) // len(live) if live else None
 
 
 class Engine:
@@ -276,9 +370,6 @@ class Engine:
         elif bloom_oid_ndv is not None and bloom_oid_ndv <= 0:
             raise ValueError("bloom_oid_ndv must be > 0 or 'auto'")
         self.bloom_oid_ndv = bloom_oid_ndv
-        # per-write NDV estimate for bloom_oid_ndv="auto", refreshed by
-        # _cube_state from the manifest each operation resolves anyway
-        self._bloom_hint: int | None = None
         # publish the warehouse scratch root for the sampling module's
         # engine-managed reliable spill (ranked_within_strata's
         # boundary-sampling hazard): with an engine in scope, callers on
@@ -318,9 +409,8 @@ class Engine:
         self._seg_cache: dict[str, dict] = {}
         # assembled-manifest cache: path -> (root raw text, meta).
         # Keyed by the EXACT root text, so any commit (ours or another
-        # engine's) invalidates it on the next read; holders must treat
-        # the returned dict as read-only (_push_history copies the
-        # entries it hands out for mutation).
+        # engine's) invalidates it on the next resolution; holders must
+        # treat the returned dict as read-only.
         self._meta_cache: dict[str, tuple[str, dict]] = {}
         # phase-attributed wall accumulator (scale-curve diagnostics):
         # _phase() sections add here when enabled; disabled (None) in
@@ -362,89 +452,100 @@ class Engine:
         self._views[cube] = df
         df.createOrReplaceTempView(cube)
 
-    def _read_raw(self, path: str,
-                  generation: int | None = None,
-                  min_end: str | None = None,
-                  start_upper: str | None = None,
-                  bucket_values: Sequence[int] | None = None) -> DataFrame:
+    def _read_raw(self, path: str, generation: int | None = None,
+                  date: str | None = "~",
+                  lookup: Sequence | None = None) -> DataFrame:
         """Cube read KEEPING the internal partition columns (``__batch``,
-        ``__obucket``) — the bounded history import needs them to rewrite
-        kept rows back into their own directories.
-
-        Manifested cubes resolve their data directories from the
-        ``_manifest.json`` generation pointer — NEVER from a listing — so
-        a read is snapshot-isolated against concurrent commits: the
-        manifest names exactly one committed generation's directories,
-        writers only ever create NEW directories and flip the pointer
-        (CAS), so a reader sees exactly-old or exactly-new, never a mix.
-        (A reader that resolved the old pointer and scans after the next
-        commit sweeps it fails cleanly on the missing files rather than
-        silently mixing generations; the engine's materializing readers
-        — ``count``/``find_one``/``find_scalar``/``get_last_field``/
-        ``deptree`` — and the plan-time read below auto-retry ONCE from
-        a fresh manifest resolution, then fail loud.) A cube with no
+        ``__obucket``, ``__stime``) of ONE snapshot (``_resolve``): the
+        generation, its directories, schema and bucket moduli and the
+        layout's period key all come from a single read of the
+        ``_manifest.json`` generation pointer — never from a listing —
+        so a read is snapshot-isolated against concurrent commits and
+        can never mix two generations: writers only ever create NEW
+        directories and flip the pointer (CAS), so a reader sees
+        exactly-old or exactly-new. A reader whose snapshot a later
+        commit sweeps fails cleanly on the missing files (or manifest
+        segments) rather than silently mixing generations; this read
+        re-resolves the WHOLE snapshot once at plan time, and the
+        engine's materializing readers — ``count``/``find_one``/
+        ``find_scalar``/``get_last_field``/``deptree`` — rebuild once
+        on an execution-time miss, then fail loud. A cube with no
         committed generation raises ValueError; one in an older on-disk
-        format raises ``_cube_state``'s refusal.
-
-        ``bucket_values`` prunes the DIRECTORY LIST handed to the
-        reader to the dirs whose path-encoded ``__obucket`` value is in
-        the set — exactly the dirs the value-level partition filter
-        would leave, applied
-        BEFORE Spark lists files, so a point lookup's plan-time listing
-        is O(hit dirs) instead of O(cube): past ~32 paths Spark runs
-        the listing as a one-task-per-directory JOB, which was the
-        measured O(dirs) term in the point-lookup scale curve. When the
-        prune empties the list (the literals hash only into buckets no
-        write ever created), a zero-row frame with the generation's
-        manifest schema returns without listing anything."""
-        df = None
+        format raises ``_resolve``'s refusal. ``date`` and ``lookup``
+        prune the read (see ``_scan``); the default reads everything."""
         for attempt in (0, 1):
-            meta = self._manifest(path)
-            if meta is None:
-                self._cube_state(path)  # refuses an older on-disk format
-                raise ValueError(
-                    f"cube at {path!r} has no committed generation")
-            if generation is None or generation == meta["gen"]:
-                dirs, schema = meta["dirs"], meta["schema"]
-            else:
-                for h in meta.get("history", []):
-                    if h["gen"] == generation:
-                        dirs, schema = h["dirs"], h["schema"]
-                        break
-                else:
-                    have = [meta["gen"]] + [h["gen"]
-                                            for h in meta.get("history", [])]
-                    raise ValueError(
-                        f"generation {generation} of cube {path!r} is "
-                        f"expired or unknown; retained: {sorted(have)} "
-                        "(raise Engine(keep_generations=...) to retain "
-                        "more)")
-            if not dirs:
-                raise RuntimeError(
-                    f"cube manifest at {path!r} lists no data directories")
-            dirs = self._prune_by_end_stats(meta, dirs, min_end,
-                                            start_upper)
-            if bucket_values is not None:
-                dirs = self._prune_dirs_by_bucket(dirs, bucket_values)
-                if not dirs:
-                    df = self._empty_schema_frame(schema)
-                    break
             try:
-                df = self._read_dirs(path, schema, dirs)
-                break
+                return self._scan(self._resolve(path, generation), date,
+                                  lookup)
             except Exception as e:
-                # the swept-generation race at PLAN time: our manifest
-                # resolution named directories a concurrent commit has
-                # since swept — re-resolve once from the fresh pointer
                 if attempt or not _is_swept_read_error(e):
                     raise
+
+    def _scan(self, snap: _Snapshot, date: str | None = "~",
+              lookup: Sequence | None = None) -> DataFrame:
+        """The read of one snapshot, with every prune the date spec and
+        the point-lookup literals imply expressed on the DIRECTORY LIST
+        or the partition columns, so the parquet scan skips whole
+        directories instead of filtering rows:
+
+        - as-of / since specs bound ``_end`` from below and ``_start``
+          from above: closed dirs whose recorded stats cannot match are
+          skipped (``_prune_by_end_stats``);
+        - ``lookup`` (``find(oids=...)``, or the same lookup written as
+          MQL — ``_oid == X`` / ``_oid in [...] and ...``, the
+          reference's idiom) turns the literals into ``__obucket``
+          values under the snapshot's moduli and stored ``_oid`` dtype,
+          and the directory list keeps only the hit buckets — a point
+          lookup's plan-time listing is O(hit dirs), not O(cube): past
+          ~32 paths Spark runs the listing as a one-task-per-directory
+          JOB. Sound only when the literals share the stored ``_oid``'s
+          type family (``_prune_family_ok``); otherwise unpruned
+          (skipped, not wrong). When the prune empties the list (the
+          literals hash only into buckets no write ever created), a
+          zero-row frame with the generation's schema returns without
+          listing anything;
+        - a time-partitioned cube prunes ``__stime`` periods after the
+          spec's strict ``_start < U`` bound (skipped when the session
+          zone differs from the layout's recorded zone);
+        - the current-only spec reads ``_current=true`` alone."""
+        if snap.root is None:
+            raise ValueError(
+                f"cube at {snap.path!r} has no committed generation")
+        dirs = snap.dirs
+        if not dirs:
+            raise RuntimeError(
+                f"cube manifest at {snap.path!r} lists no data directories")
+        lo, hi = date_end_lower_bound(date), date_start_upper_bound(date)
+        dirs = self._prune_by_end_stats(
+            snap.manifest, dirs, _norm_ts_bound(lo) if lo else None,
+            _norm_ts_bound(hi) if hi else None)
+        bvals = None
+        if lookup and snap.oid_dtype is not None \
+                and self._prune_family_ok(snap.oid_dtype, lookup):
+            bvals = self._oid_bucket_values(lookup, snap.moduli,
+                                            dtype=snap.oid_dtype)
+            dirs = self._prune_dirs_by_bucket(dirs, bvals)
+            if not dirs:
+                return self._empty_schema_frame(snap.schema)
+        df = self._read_dirs(snap.path, snap.schema, dirs)
+        if bvals:
+            # belt-and-braces value filter on the pruned read
+            df = df.where(F.col("__obucket").isin(bvals))
+        if snap.timepart and hi is not None:
+            bound = F.date_format(
+                to_timestamp_lit(hi),
+                "yyyy-MM" if snap.timepart == "month" else "yyyy")
+            df = df.where((F.col("__stime") <= bound)
+                          | F.col("__stime").isNull())
+        if date_is_current_only(date):
+            df = df.where(F.col("_current"))
         return df
 
     def _read_dirs(self, path: str, schema: dict,
                    rels: Sequence[str]) -> DataFrame:
         """Read an EXPLICIT list of a manifested cube's directories
         under a generation's manifest ``schema`` — the one scan every
-        cube read builds. ``_read_raw`` passes a generation's (pruned)
+        cube read builds. ``_scan`` passes a snapshot's (pruned)
         directory list; the migration-aware merge paths pass exactly
         the directories they are about to drop: during a doubling
         migration a value-level ``__obucket`` predicate cannot
@@ -496,27 +597,6 @@ class Engine:
         dir's path value was written under one of them."""
         vals = {f"__obucket={v}" for v in values}
         return [d for d in dirs if d.split("/")[1] in vals]
-
-    def _manifest_oid_dtype(self, path: str,
-                            generation: int | None = None):
-        """The stored ``_oid`` dtype from the (cached) manifest schema
-        of the requested generation — lets a point lookup resolve its
-        bucket values BEFORE the read so the directory list itself
-        prunes. Unknown generations (and uncommitted cubes) return None
-        here; ``_read_raw`` raises the canonical error."""
-        meta = self._manifest(path)
-        if meta is None:
-            return None
-        sch = meta["schema"]
-        if generation is not None and generation != meta["gen"]:
-            sch = next((h["schema"] for h in meta.get("history", [])
-                        if h["gen"] == generation), None)
-        if sch is None:
-            return None
-        from pyspark.sql.types import StructType
-
-        st = StructType.fromJson(sch)
-        return st["_oid"].dataType if "_oid" in st.fieldNames() else None
 
     def _empty_schema_frame(self, schema: dict) -> DataFrame:
         """Zero-row frame carrying a generation's manifest schema —
@@ -571,15 +651,6 @@ class Engine:
         kept = [d for d in dirs if keep(d)]
         return kept or dirs
 
-    def _read(self, path: str, generation: int | None = None,
-              min_end: str | None = None,
-              start_upper: str | None = None) -> DataFrame:
-        df = self._read_raw(path, generation=generation, min_end=min_end,
-                            start_upper=start_upper)
-        # internal commit-batch / oid-bucket / period keys, not data
-        return df.drop(*[c for c in ("__batch", "__obucket", "__stime")
-                         if c in df.columns])
-
     def table(self, cube: str, generation: int | None = None) -> DataFrame:
         """The cube as a DataFrame (reference ``get_table``).
         ``generation`` reads an exact retained snapshot instead of the
@@ -592,15 +663,15 @@ class Engine:
                     f"{cube!r} is a registered view — generations exist "
                     "only for warehouse cubes")
             return self._views[cube]
-        return self._read(self._path(cube), generation=generation)
+        return self._read_raw(self._path(cube), generation).drop(*_INTERNAL)
 
     def generations(self, cube: str) -> list[int]:
         """Generation numbers readable right now: the live one plus any
         retained by ``keep_generations`` — newest first."""
-        meta = self._manifest(self._path(cube))
-        if meta is None:
+        root = self._resolve(self._path(cube)).root
+        if root is None:
             return []
-        return [meta["gen"]] + [h["gen"] for h in meta.get("history", [])]
+        return [root["gen"]] + [h["gen"] for h in root.get("history", [])]
 
     def ls(self) -> list[str]:
         """List cubes (reference ``sqlalchemy.py:877-888``)."""
@@ -625,8 +696,8 @@ class Engine:
     def _dropped_registry(self, path: str) -> dict:
         import json
 
-        p = self.fs.join(path, self._DROPPED_SIDECAR)
-        return json.loads(self.fs.read_text(p)) if self.fs.isfile(p) else {}
+        return json.loads(
+            self._read_sidecar(path, self._DROPPED_SIDECAR) or "{}")
 
     def _check_redrop(self, path: str, incoming: DataFrame,
                       stored_cols) -> None:
@@ -688,12 +759,12 @@ class Engine:
                 "temporal-versioning contract, not data")
         path = self._path(cube)
         with self._write_lock(cube):
-            state, meta, raw = self._cube_state(path)
-            if state != "manifest":
+            snap = self._resolve(path)
+            if snap.root is None:
                 raise ValueError(
-                    f"cube {cube!r} is {state} — drop_column needs a "
+                    f"cube {cube!r} is new — drop_column needs a "
                     "committed cube")
-            sch = StructType.fromJson(meta["schema"])
+            sch = StructType.fromJson(snap.schema)
             hit = [f for f in sch.fields if f.name == col]
             if not hit:
                 raise ValueError(
@@ -704,7 +775,7 @@ class Engine:
             # (a later refresh reads a column that no longer exists and
             # dies with an AnalysisException deep in the plan) — refuse
             # with the dependency named instead
-            for iname, im in self.vector_index_list(cube).items():
+            for iname, im in self._vector_indexes(path, snap.gen).items():
                 if col in (im.get("vec_col"), im.get("id_col")):
                     raise ValueError(
                         f"cannot drop {col!r}: committed vector index "
@@ -722,22 +793,13 @@ class Engine:
             reg[col] = hit[0].dataType.simpleString()
             self.fs.write_text(self.fs.join(path, self._DROPPED_SIDECAR),
                                json.dumps(reg))
-            layout = self._cube_layout(path)
-            keep = layout.get("keep_generations", 0) if layout else 0
-            gen = meta["gen"] + 1
-            dirs = set(meta["dirs"])
-            hist = self._push_history(meta, keep)
-            self._manifest_flip(
-                path, raw, gen, dirs, hist,
-                stats=self._merged_stats(meta, None, dirs, hist,
-                                         path=path),
-                schema=newsch)
-            # dirs unchanged — nothing to sweep. The generation DID
-            # advance, so auto-refresh indexes like every other commit:
-            # content is identical (the dropped column can't be an index
-            # column — guarded above), the diff is empty, and this only
-            # bumps the markers' generation so searches keep working
-            self._auto_refresh_indexes(cube)
+            gen = self._commit(snap, set(snap.dirs), None, schema=newsch)
+            # the generation advanced, so auto-refresh indexes like
+            # every other commit: content is identical (the dropped
+            # column can't be an index column — guarded above), the
+            # diff is empty, and this only bumps the markers' generation
+            # so searches keep working
+            self._auto_refresh_indexes(cube, gen)
 
     def drop(self, cube: str) -> None:
         """Drop a cube (reference ``sqlalchemy.py:723-747``)."""
@@ -877,23 +939,19 @@ class Engine:
                 f"{sorted(params)}")
         path = self._path(cube)
         with self._write_lock(cube):
-            meta = self._manifest(path)
-            if meta is None:
+            snap = self._resolve(path)
+            if snap.root is None:
                 # staleness detection rides the generation pointer: an
                 # index over an uncommitted cube has no gen to pin
                 raise ValueError(
                     f"cube {cube!r} has no committed generation — build "
                     "vector indexes after the first commit")
-            gen = meta["gen"]
+            gen = snap.gen
             # _current is the partition column (== _end IS NULL by
             # construction): filtering on it prunes every closed history
             # directory at plan time instead of scanning years of
             # superseded versions just to drop them
-            df = self._read(path)
-            if "_current" in df.columns:
-                df = df.where(F.col("_current")).drop("_current")
-            else:
-                df = df.where(F.col("_end").isNull())
+            df = self._scan(snap, date=None).drop("_current", *_INTERNAL)
             apath = self._ann_path(cube, name)
             amarker = self._ann_meta_path(cube, name)
             if self.fs.isfile(amarker):
@@ -963,14 +1021,17 @@ class Engine:
         (``batches`` — see ``_index_batch_count``), the quantity
         ``compact_vector_index`` bounds; off by default because the
         listing walk runs on every auto-refresh commit epilogue."""
+        path = self._path(cube)
+        return self._vector_indexes(path, self._resolve(path).gen, counts)
+
+    def _vector_indexes(self, path: str, live: int | None,
+                        counts: bool = False) -> dict[str, dict]:
+        """``vector_index_list`` against a generation the caller already
+        resolved (``live``) — commits pass the generation they just
+        published, so their index epilogue reads no manifest."""
         import json
 
-        path = self._path(cube)
-        meta = self._manifest(path)
-        live = meta["gen"] if meta else None
         out: dict[str, dict] = {}
-        if not self.fs.isdir(path):
-            return out
         for d in self.fs.listdir(path):
             if not d.startswith("_ann_"):
                 continue
@@ -1008,8 +1069,7 @@ class Engine:
                 f"cube {cube!r} has no committed vector index {name!r} "
                 "(build_vector_index, or a crashed build — rebuild)")
         m = json.loads(self.fs.read_text(marker))
-        meta = self._manifest(self._path(cube))
-        live = meta["gen"] if meta else None
+        live = self._resolve(self._path(cube)).gen
         ipath = self._ann_intent_path(cube, name)
         if self.fs.isfile(ipath) and self.lock_wait:
             # same opt-in as the writer lease: a reader willing to wait
@@ -1032,8 +1092,7 @@ class Engine:
                     f"{name!r} (build_vector_index, or a crashed build "
                     "— rebuild)")
             m = json.loads(self.fs.read_text(marker))  # re-read gen
-            meta = self._manifest(self._path(cube))
-            live = meta["gen"] if meta else None
+            live = self._resolve(self._path(cube)).gen
         if self.fs.isfile(ipath):
             intent = json.loads(self.fs.read_text(ipath))
             done = (intent.get("op") == "refresh"
@@ -1132,9 +1191,8 @@ class Engine:
                     f"{name!r} (build_vector_index, or a crashed "
                     "build/refresh — rebuild)")
             m = json.loads(self.fs.read_text(marker))
-            path = self._path(cube)
-            meta = self._manifest(path)
-            live = meta["gen"] if meta else None
+            snap = self._resolve(self._path(cube))
+            live = snap.gen
             ipath = self._ann_intent_path(cube, name)
             intent_left = self.fs.isfile(ipath)
             if m.get("gen") == live and not intent_left:
@@ -1145,8 +1203,7 @@ class Engine:
             # duplicate ids possible). Run the full diff anyway: it
             # converges either state and the intent is cleaned at the end.
             id_col, vec_col = m["id_col"], m["vec_col"]
-            newc = (self._read(path).where(F.col("_current"))
-                    .select(id_col, vec_col))
+            newc = self._scan(snap, date=None).select(id_col, vec_col)
             apath0 = self._ann_path(cube, name)
             # diff the live corpus against the INDEX'S OWN CONTENT —
             # IVF stores raw vectors (compare directly); the PQ families
@@ -1515,110 +1572,8 @@ class Engine:
     # sidecar carries the fence from the first write.
     _SUPPORTED_LAYOUT_FORMAT = 5
 
-    def _cube_layout(self, path: str) -> dict | None:
-        """The cube's recorded layout sidecar (format fence, time
-        partition, retention), or None when absent (no cube yet — or
-        data in an older format, which ``_cube_state`` refuses). Writers
-        must use the RECORDED values — a different period key would
-        prune the wrong directories on a later read. The oid-bucket
-        count is not here: the manifest root records it.
-
-        An unreadable sidecar raises instead of reading as absent: a
-        writer that silently guessed the layout would period-partition
-        with the wrong keys, or miss the format fence, and corrupt the
-        cube."""
-        import json
-
-        p = self.fs.join(path, self._LAYOUT_SIDECAR)
-        if not self.fs.isfile(p):
-            return None
-        try:
-            meta = json.loads(self.fs.read_text(p))
-        except ValueError as e:
-            raise RuntimeError(
-                f"unreadable layout sidecar {p!r}: {e} — refusing to "
-                "guess the layout (mixed partition levels would "
-                "corrupt the cube); repair the sidecar explicitly") from e
-        if not isinstance(meta, dict):
-            raise RuntimeError(
-                f"layout sidecar {p!r} is not a JSON object "
-                f"(got {type(meta).__name__}) — refusing to guess the "
-                "layout; repair the sidecar explicitly")
-        need = meta.get("min_format", 0)
-        if need > self._SUPPORTED_LAYOUT_FORMAT:
-            raise RuntimeError(
-                f"cube at {path!r} requires layout format {need} but "
-                f"this engine supports up to "
-                f"{self._SUPPORTED_LAYOUT_FORMAT} — touching it could "
-                "corrupt bucket pruning (e.g. merging a rebucketed or "
-                "mid-migration cube with the wrong modulus); upgrade "
-                "the engine")
-        return meta
-
-    def _read_moduli(self, path: str,
-                     generation: int | None) -> list[int]:
-        """The oid-bucket moduli valid for pruning a read of
-        ``generation`` (None = live), live count first: every root and
-        every retained generation records its own count. No committed
-        or unknown generation → ``[]`` (no prune; the scan raises the
-        proper error).
-
-        The moduli list is what a point-lookup prune must UNION over:
-        normally just the count itself; during in-flight doubling
-        migration(s) every FROM modulus joins it — a directory at
-        modulus ``m`` with value ``__obucket=v`` holds oids with
-        ``hash % m == v``, so keeping every directory whose value is in
-        ``{hash % m : m in moduli}`` is sound whichever vintage the
-        directory is (no per-directory modulus lookup needed at prune
-        time) — including CHAINED doublings, where three or more moduli
-        coexist until the oldest block drains."""
-        meta = self._manifest(path)
-        if meta is None:
-            return []
-        if generation is None or generation == meta["gen"]:
-            buckets = meta["oid_buckets"]
-            mods = {b["from"] for b in (meta.get("migration") or [])}
-        else:
-            for h in meta.get("history", []):
-                if h["gen"] == generation:
-                    buckets = h["oid_buckets"]
-                    mods = set(h.get("moduli", ()))
-                    break
-            else:
-                return []
-        return [buckets] + sorted(m for m in mods if m != buckets)
-
     def _session_tz(self) -> str:
         return self.spark.conf.get("spark.sql.session.timeZone")
-
-    def _cube_timepart(self, path: str, for_write: bool = False,
-                       layout: dict | None = None) -> str | None:
-        """The cube's recorded time-partition granularity, or None.
-        Pass ``layout`` when the sidecar is already loaded — the read
-        path calls this per query and must not re-fetch the sidecar.
-
-        ``__stime`` values are wall-clock renderings of the ``_start``
-        instant in the WRITING session's timezone, so the recorded
-        timezone is part of the layout contract: a WRITER whose session
-        timezone differs would file rows into periods inconsistent with
-        the existing directories (raise loud); a READER whose timezone
-        differs must simply skip pruning (the data predicate on
-        ``_start``/``_end`` is timezone-exact either way)."""
-        meta = layout if layout is not None else self._cube_layout(path)
-        tp = meta.get("time_partition") if meta else None
-        if tp is None:
-            return None
-        tz = meta.get("time_zone")
-        if tz != self._session_tz():
-            if for_write:
-                raise RuntimeError(
-                    f"cube at {path!r} is time-partitioned in timezone "
-                    f"{tz!r} but the session timezone is "
-                    f"{self._session_tz()!r} — writing would file rows "
-                    "into inconsistent period directories; set "
-                    "spark.sql.session.timeZone to the cube's zone")
-            return None
-        return tp
 
     def _write_layout(self, path: str, timepart: str | None = None,
                       keep_generations: int = 0) -> None:
@@ -1628,7 +1583,7 @@ class Engine:
         # pointer protocol, whose commit point is the MANIFEST flip — so
         # sidecar-without-manifest means a crashed (uncommitted) first
         # write. Data under a format-less sidecar is an older format:
-        # _cube_state refuses it, never retries it as new (which would
+        # _resolve refuses it, never retries it as new (which would
         # sweep it).
         # ``min_format`` fences engines older than the format-5
         # manifest every cube commits from its first write.
@@ -1649,7 +1604,7 @@ class Engine:
         ``vacuum`` does it on demand (e.g. after a failed bulk import
         on a rarely-written cube) without advancing the generation.
         Runs under the writer lease; refuses a cube in an older on-disk
-        format (``_cube_state``). Also sweeps UNCOMMITTED vector-index
+        format (``_resolve``). Also sweeps UNCOMMITTED vector-index
         directories — a ``_ann_*`` dir without its ``_ann.json`` marker
         is a crashed BUILD (the build writes its marker last), dead
         weight no search can ever use. A crashed REFRESH/compaction is
@@ -1689,18 +1644,18 @@ class Engine:
                             and not self.fs.isfile(
                                 self.fs.join(path, d, "_ann.json"))):
                         self.fs.delete_dir(self.fs.join(path, d))
-            meta = self._manifest(path)
-            if meta is None:
-                self._cube_state(path)  # refuses an older on-disk format
+            snap = self._resolve(path)  # refuses an older format
+            if snap.root is None:
                 if self.fs.isdir(path):
                     # crashed FIRST write (format-2 sidecar, no
                     # manifest): nothing is committed, every data dir
                     # is stranded — sweep them all
                     self._sweep_unreferenced(path, set())
                 return
-            self._sweep_unreferenced(path, self._retained_dirs(meta))
+            self._sweep_unreferenced(path,
+                                     self._retained_dirs(snap.manifest))
             # manifest segment files stranded by crashed commits
-            self._sweep_segments(path, self._manifest_root(path))
+            self._sweep_segments(path, snap.root)
 
     def describe(self, cube: str) -> dict:
         """Zero-scan storage-health report from manifest/sidecar state
@@ -1722,16 +1677,19 @@ class Engine:
         from metrique_spark.compaction import tier_groups
 
         path = self._path(cube)
-        root = (self._manifest_root(path) if self.fs.isdir(path)
-                else None)
-        layout = self._cube_layout(path) or {}
+        snap = self._resolve(path)
+        root = snap.root
         out: dict = {
             "cube": cube,
-            "layout": {k: layout[k]
+            "state": snap.state,
+            "layout": {k: snap.layout[k]
                        for k in ("time_partition", "keep_generations")
-                       if k in layout},
+                       if k in snap.layout},
         }
-        rollup = (root or {}).get("rollup")
+        if root is None:
+            return out
+        indexes = self._vector_indexes(path, snap.gen)
+        rollup = root.get("rollup")
         if rollup is not None and "token_bytes" in rollup:
             # ROOT-ONLY fast path: every scalar below was
             # rolled up at commit time, so describe costs one small
@@ -1741,7 +1699,6 @@ class Engine:
             tok = rollup["token_bytes"]
             groups = tier_groups(tok, self.compact_small_bytes)
             out.update({
-                "state": "manifest",
                 "generation": root["gen"],
                 "oid_buckets": root["oid_buckets"],
                 "retained_generations": [h["gen"] for h in
@@ -1754,7 +1711,7 @@ class Engine:
                 "small_tokens": sum(s <= self.compact_small_bytes
                                     for s in tok.values()),
                 "compact_recommended": bool(groups),
-                "indexes": self.vector_index_list(cube),
+                "indexes": indexes,
             })
             if "rows" in rollup:
                 out["rows_total"] = rollup["rows"]
@@ -1771,10 +1728,7 @@ class Engine:
                 # progress (and old/new vintages sharing a bucket VALUE
                 # are different buckets) — no recommendation
             return out
-        state, meta, _ = self._cube_state(path)
-        out["state"] = state
-        if meta is None:
-            return out
+        meta = snap.manifest
         tok = self._history_token_sizes(path, meta)
         groups = tier_groups(tok, self.compact_small_bytes)
         out.update({
@@ -1792,7 +1746,7 @@ class Engine:
             "small_tokens": sum(s <= self.compact_small_bytes
                                 for s in tok.values()),
             "compact_recommended": bool(groups),
-            "indexes": self.vector_index_list(cube),
+            "indexes": indexes,
         })
         sizes = (meta.get("stats") or {}).get("bytes") or {}
         blocks = meta.get("migration") or []
@@ -1849,14 +1803,15 @@ class Engine:
             raise ValueError("keep_generations must be >= 0")
         with self._write_lock(cube):
             path = self._path(cube)
-            layout = self._cube_layout(path)
-            if layout is None:
+            layout = self._resolve(path).layout
+            if not layout:
                 raise ValueError(
                     f"cube {cube!r} has no layout sidecar — retention "
                     "applies to warehouse cubes only")
-            layout["keep_generations"] = keep_generations
             self.fs.write_text(self.fs.join(path, self._LAYOUT_SIDECAR),
-                               json.dumps(layout))
+                               json.dumps(dict(
+                                   layout,
+                                   keep_generations=keep_generations)))
 
     def rebucket(self, cube: str, oid_buckets: int,
                  incremental: bool = False) -> None:
@@ -1898,7 +1853,7 @@ class Engine:
         METADATA-ONLY — it records the new live count plus a
         ``migration`` block naming the directories still at the old
         modulus, and no data moves. From then on (a) reads union-prune
-        point lookups under both moduli (``_read_moduli`` — sound
+        point lookups under both moduli (``_Snapshot.moduli`` — sound
         whichever vintage a directory is), (b) every merge, history
         import and compaction that rewrites an old directory migrates
         it as a side effect (the rewrite uses the live modulus and the
@@ -1913,45 +1868,32 @@ class Engine:
             self._rebucket_start_incremental(cube, oid_buckets)
             return
         with self._write_lock(cube):
-            path = self._path(cube)
-            state, meta, raw = self._cube_state(path)
-            if state != "manifest":
+            snap = self._resolve(self._path(cube), write=True)
+            if snap.root is None:
                 raise ValueError(
-                    f"cube {cube!r} is {state} — rebucket needs a "
+                    f"cube {cube!r} is new — rebucket needs a "
                     "committed cube")
-            layout = self._cube_layout(path) or {}
-            if (meta["oid_buckets"] == oid_buckets
-                    and not meta.get("migration")):
+            if (snap.root["oid_buckets"] == oid_buckets
+                    and not snap.manifest.get("migration")):
                 # already at this count. With a migration in flight,
                 # fall through: the full rewrite below is the escape
                 # hatch that finishes it in one pass and clears the
                 # migration block.
                 return
-            timepart = self._cube_timepart(path, for_write=True,
-                                           layout=layout)
-            keep = layout.get("keep_generations", 0)
-            gen = meta["gen"] + 1
-            rows = self._read(path)  # internal keys dropped; re-derived
-            # localCheckpoint: the write lands under the same root the
-            # plan reads from (fresh relpaths, but Spark's self-
-            # overwrite check is path-based), and a retry must not
-            # recompute from directories the write is mutating
-            rows = rows.drop("_current").localCheckpoint(eager=True)
+            gen = snap.gen + 1
+            # internal keys dropped; re-derived. localCheckpoint: the
+            # write lands under the same root the plan reads from
+            # (fresh relpaths, but Spark's self-overwrite check is
+            # path-based), and a retry must not recompute from
+            # directories the write is mutating
+            rows = (self._scan(snap).drop("_current", *_INTERNAL)
+                    .localCheckpoint(eager=True))
             new_rels = self._write_dirs(
-                rows, path, oid_buckets, timepart,
+                rows, snap, oid_buckets, snap.timepart,
                 open_batch=f"open-g{gen}", closed_batch=f"rb-g{gen}")
-            dirs = set(new_rels)
-            hist = self._push_history(meta, keep)
-            self._manifest_flip(path, raw, gen, dirs, hist,
-                                stats=self._merged_stats(
-                                    meta, new_rels, dirs, hist,
-                                    path=path),
-                                schema=meta["schema"],
-                                oid_buckets=oid_buckets,
-                                migration=None)
-            self._sweep_dropped(
-                path, meta, dirs | {d for h in hist for d in h["dirs"]})
-            self._auto_refresh_indexes(cube)
+            self._auto_refresh_indexes(cube, self._commit(
+                snap, set(new_rels), new_rels, oid_buckets=oid_buckets,
+                migration=None))
 
     def _rebucket_start_incremental(self, cube: str,
                                     oid_buckets: int) -> None:
@@ -1963,19 +1905,18 @@ class Engine:
         mid-migration is legal — directories already stamped keep
         their (older) modulus, the rest get stamped at the
         pre-doubling live count, and reads union-prune under every
-        modulus present (``_read_moduli``), so growing 16 → 1024
+        modulus present (``_Snapshot.moduli``), so growing 16 → 1024
         is six starts whose drains overlap freely instead of six
         fully-sequential windows. The root's count becomes ``2N`` at
         the start; the stamps name the older moduli until they
         drain."""
         with self._write_lock(cube):
-            path = self._path(cube)
-            state, meta, raw = self._cube_state(path)
-            if state != "manifest":
+            snap = self._resolve(self._path(cube))
+            if snap.root is None:
                 raise ValueError(
-                    f"cube {cube!r} is {state} — rebucket needs a "
+                    f"cube {cube!r} is new — rebucket needs a "
                     "committed cube")
-            layout = self._cube_layout(path) or {}
+            meta = snap.manifest
             cur = meta["oid_buckets"]
             if cur == oid_buckets:
                 return  # already at / already migrating to this target
@@ -1991,17 +1932,10 @@ class Engine:
             if not old_dirs and not blocks:
                 raise RuntimeError(
                     f"cube {cube!r} has no directories to migrate")
-            gen = meta["gen"] + 1
-            keep = layout.get("keep_generations", 0)
-            hist = self._push_history(meta, keep)
-            self._manifest_flip(
-                path, raw, gen, set(meta["dirs"]), hist,
-                stats=self._merged_stats(meta, None, set(meta["dirs"]),
-                                         hist, path=path),
-                schema=meta["schema"],
-                oid_buckets=oid_buckets,
-                migration=({"from": cur, "old_dirs": old_dirs}
-                           if old_dirs else Engine._CARRY))
+            self._commit(snap, set(meta["dirs"]), None,
+                         oid_buckets=oid_buckets,
+                         migration=({"from": cur, "old_dirs": old_dirs}
+                                    if old_dirs else Engine._CARRY))
 
     def rebucket_step(self, cube: str, max_bytes: int | None = None,
                       max_dirs: int | None = None) -> dict:
@@ -2024,17 +1958,15 @@ class Engine:
         "done"}``."""
         with self._write_lock(cube):
             path = self._path(cube)
-            state, meta, raw = self._cube_state(path)
-            if state != "manifest":
+            snap = self._resolve(path, write=True)
+            if snap.root is None:
                 raise ValueError(
-                    f"cube {cube!r} is {state} — no migration to step")
+                    f"cube {cube!r} is new — no migration to step")
+            meta = snap.manifest
             blocks = meta.get("migration") or []
-            layout = self._cube_layout(path) or {}
             if not blocks:
                 return {"migrated_dirs": 0, "migrated_bytes": 0,
                         "remaining_dirs": 0, "done": True}
-            timepart = self._cube_timepart(path, for_write=True,
-                                           layout=layout)
             sizes = (meta.get("stats") or {}).get("bytes") or {}
             live = set(meta["dirs"])
             # oldest modulus first: draining the oldest block shrinks
@@ -2061,27 +1993,19 @@ class Engine:
                 used += b
                 if max_dirs is not None and len(chunk) >= max_dirs:
                     break
-            gen = meta["gen"] + 1
-            keep = layout.get("keep_generations", 0)
+            gen = snap.gen + 1
             rows = self._read_dirs(path, meta["schema"], chunk).drop(
-                "_current", "__batch", "__obucket", "__stime")
+                "_current", *_INTERNAL)
             # localCheckpoint: the write lands under the same root the
             # plan reads from, and a retry must not recompute from
             # directories the write is mutating
             rows = rows.localCheckpoint(eager=True)
             new_rels = self._write_dirs(
-                rows, path, meta["oid_buckets"], timepart,
+                rows, snap, meta["oid_buckets"], snap.timepart,
                 open_batch=f"open-g{gen}", closed_batch=f"mig-g{gen}")
             dirs = (live - set(chunk)) | set(new_rels)
-            hist = self._push_history(meta, keep)
-            self._manifest_flip(path, raw, gen, dirs, hist,
-                                stats=self._merged_stats(
-                                    meta, new_rels, dirs, hist,
-                                    path=path),
-                                schema=meta["schema"])
-            self._sweep_dropped(
-                path, meta, dirs | {d for h in hist for d in h["dirs"]})
-            self._auto_refresh_indexes(cube)
+            self._auto_refresh_indexes(
+                cube, self._commit(snap, dirs, new_rels))
             remaining = len({d for b in blocks
                              for d in b["old_dirs"]} & dirs)
             return {"migrated_dirs": len(chunk), "migrated_bytes": used,
@@ -2128,9 +2052,126 @@ class Engine:
     _MANIFEST_SEGDIR = "_manifest_seg"
     _SEG_SPAN = 64  # oid-bucket values per segment file
 
+    def _read_sidecar(self, path: str, name: str) -> str | None:
+        """One GET of a cube sidecar, None when absent — no existence
+        probe first, which would double the control calls on an object
+        store (``FileSystem.read_text`` raises FileNotFoundError)."""
+        try:
+            return self.fs.read_text(self.fs.join(path, name))
+        except FileNotFoundError:
+            return None
+
     def _manifest_raw(self, path: str) -> str | None:
-        p = self.fs.join(path, self._MANIFEST_SIDECAR)
-        return self.fs.read_text(p) if self.fs.isfile(p) else None
+        return self._read_sidecar(path, self._MANIFEST_SIDECAR)
+
+    def _resolve(self, path: str, generation: int | None = None,
+                 write: bool = False) -> _Snapshot:
+        """THE resolution of a cube: one GET of the manifest root, one
+        of the layout sidecar, and nothing else until a fact is used —
+        every public op reads and commits from the one ``_Snapshot``
+        this returns (see there), so no op can take its generation,
+        directories, moduli, schema and layout from two different
+        roots. The plan-time swept-generation retry calls this again
+        for a whole new snapshot.
+
+        The engine reads exactly one on-disk format: a format-2
+        ``_layout.json`` plus a format-5 manifest root
+        (``_manifest_root``). No root means ``new``: absent, or a
+        crashed first write whose pointer never landed (format-2
+        sidecar, no root). Data under no sidecar, or under a
+        format-less one, is COMMITTED data from an older format —
+        refused with ``_old_format_error`` and never swept (a
+        first-write retry would flip a manifest naming only the new
+        batch and delete every existing directory). A ``generation``
+        the root does not retain raises ValueError.
+
+        The sidecar's ``min_format`` fence refuses a cube written by a
+        newer engine, and an unreadable sidecar raises instead of
+        reading as absent: an op that guessed the layout would prune or
+        partition with the wrong keys, or miss the fence. ``__stime``
+        values are wall-clock renderings in the WRITING session's zone,
+        so the recorded zone is part of the layout: a reader in another
+        zone skips the period prune (``timepart`` None; the row
+        predicate is zone-exact either way), and a ``write=True``
+        resolution raises instead of filing rows into inconsistent
+        period directories."""
+        import json
+
+        raw = self._manifest_raw(path)
+        root = None if raw is None else self._manifest_root(path, raw)
+        text = self._read_sidecar(path, self._LAYOUT_SIDECAR)
+        layout: dict = {}
+        if text is not None:
+            p = self.fs.join(path, self._LAYOUT_SIDECAR)
+            try:
+                layout = json.loads(text)
+            except ValueError as e:
+                raise RuntimeError(
+                    f"unreadable layout sidecar {p!r}: {e} — refusing to "
+                    "guess the layout (mixed partition levels would "
+                    "corrupt the cube); repair the sidecar "
+                    "explicitly") from e
+            if not isinstance(layout, dict):
+                raise RuntimeError(
+                    f"layout sidecar {p!r} is not a JSON object "
+                    f"(got {type(layout).__name__}) — refusing to guess "
+                    "the layout; repair the sidecar explicitly")
+            need = layout.get("min_format", 0)
+            if need > self._SUPPORTED_LAYOUT_FORMAT:
+                raise RuntimeError(
+                    f"cube at {path!r} requires layout format {need} but "
+                    f"this engine supports up to "
+                    f"{self._SUPPORTED_LAYOUT_FORMAT} — touching it could "
+                    "corrupt bucket pruning (e.g. merging a rebucketed or "
+                    "mid-migration cube with the wrong modulus); upgrade "
+                    "the engine")
+        if root is None:
+            if layout.get("format", 1) < 2 and any(
+                    d.startswith("_current=")
+                    for d in self.fs.listdir(path)):
+                raise _old_format_error(
+                    path, "data without a format-2 _layout.json sidecar")
+        elif generation is not None:
+            have = [root["gen"]] + [h["gen"]
+                                    for h in root.get("history", [])]
+            if generation not in have:
+                raise ValueError(
+                    f"generation {generation} of cube {path!r} is "
+                    f"expired or unknown; retained: {sorted(have)} "
+                    "(raise Engine(keep_generations=...) to retain more)")
+        tp, tz = layout.get("time_partition"), layout.get("time_zone")
+        if tp is not None and tz != self._session_tz():
+            if write and root is not None:
+                raise RuntimeError(
+                    f"cube at {path!r} is time-partitioned in timezone "
+                    f"{tz!r} but the session timezone is "
+                    f"{self._session_tz()!r} — writing would file rows "
+                    "into inconsistent period directories; set "
+                    "spark.sql.session.timeZone to the cube's zone")
+            tp = None
+        return _Snapshot(self, path, raw, root, layout, generation, tp)
+
+    def _commit(self, snap: _Snapshot, dirs: set[str],
+                new_stats: dict | None, *, schema: dict | None = None,
+                **flip_kw) -> int:
+        """The commit tail every writer of a committed cube runs on its
+        snapshot: retain the superseded generation under the cube's
+        recorded retention, flip the pointer (CAS against the
+        snapshot's root text; ``schema`` defaults to the snapshot's),
+        then sweep — without listing — the directories the flip
+        retired. Returns the generation it published."""
+        meta = snap.manifest
+        gen = snap.gen + 1
+        hist = self._push_history(meta, snap.keep)
+        self._manifest_flip(
+            snap.path, snap.raw, gen, dirs, hist,
+            stats=self._merged_stats(meta, new_stats, dirs, hist,
+                                     path=snap.path),
+            schema=meta["schema"] if schema is None else schema,
+            **flip_kw)
+        self._sweep_dropped(
+            snap.path, meta, dirs | {d for h in hist for d in h["dirs"]})
+        return gen
 
     def _manifest_root(self, path: str,
                        raw: str | None = None) -> dict | None:
@@ -2185,6 +2226,19 @@ class Engine:
             seg = json.loads(self.fs.read_text(full))
             self._seg_cache[full] = seg
         return seg
+
+    def _assembled(self, path: str, raw: str, root: dict) -> dict:
+        """``_assemble`` of the root parsed from ``raw``, cached per
+        path keyed by that exact text: a commit changes the root, so
+        staleness is impossible, and segment content behind an
+        unchanged root is immutable. Treat it as READ-ONLY."""
+        cached = self._meta_cache.get(path)
+        if cached is not None and cached[0] == raw:
+            return cached[1]
+        with self._phase("manifest_assemble"):
+            meta = self._assemble(path, root)
+        self._meta_cache[path] = (raw, meta)
+        return meta
 
     def _assemble(self, path: str, root: dict) -> dict:
         """The flat manifest dict every consumer reads —
@@ -2257,35 +2311,11 @@ class Engine:
         return meta
 
     def _manifest(self, path: str) -> dict | None:
-        """The assembled manifest dict — treat as READ-ONLY: the
-        assembly is cached per path keyed by the exact root text (a
-        commit changes the root, so staleness is impossible; segment
-        content behind an unchanged root is immutable), making the
-        second and later resolutions of one generation O(1) instead of
-        O(dirs) — several resolutions happen per query."""
-        for attempt in (0, 1):
-            raw = self._manifest_raw(path)
-            if raw is None:
-                return None
-            cached = self._meta_cache.get(path)
-            if cached is not None and cached[0] == raw:
-                return cached[1]
-            root = self._manifest_root(path, raw)
-            try:
-                with self._phase("manifest_assemble"):
-                    meta = self._assemble(path, root)
-            except (FileNotFoundError, OSError) as e:
-                # the swept-SEGMENT race: a concurrent commit retired
-                # segment files our root resolution referenced —
-                # re-resolve once from the fresh pointer (same contract
-                # as the swept data-directory retry in _read_raw)
-                if attempt:
-                    raise RuntimeError(
-                        f"cube manifest at {path!r} references missing "
-                        f"segment files: {e} — torn manifest") from e
-                continue
-            self._meta_cache[path] = (raw, meta)
-            return meta
+        """The assembled live manifest of a fresh resolution, or None
+        when nothing is committed — for callers outside an op (the test
+        and scaling harnesses); every op reads its own snapshot."""
+        snap = self._resolve(path)
+        return None if snap.root is None else snap.manifest
 
     def _push_history(self, meta: dict, keep: int) -> list[dict]:
         """History entries for the NEXT manifest: the superseded current
@@ -2315,7 +2345,7 @@ class Engine:
         # schema with phantom null columns
         cur["schema"] = meta["schema"]
         # the entries are shared with the cached assembled manifest
-        # (see _manifest): read-only, like it
+        # (see _assembled): read-only, like it
         return [cur, *meta.get("history", [])][:keep]
 
     @staticmethod
@@ -2452,18 +2482,10 @@ class Engine:
         import json
 
         prior_root = json.loads(old_raw) if old_raw else {}
-        # reuse the read-path's assembled-manifest cache when it holds
-        # exactly the root text this commit CASes against (the common
-        # case: the caller just resolved the manifest to plan its
-        # writes) — the flip then skips its own O(dirs) assembly fold
-        cached = self._meta_cache.get(path)
-        if old_raw is None:
-            prior = {}
-        elif cached is not None and cached[0] == old_raw:
-            prior = cached[1]
-        else:
-            with self._phase("flip_assemble"):
-                prior = self._assemble(path, prior_root)
+        # the caller's snapshot assembled exactly this root text: the
+        # cache hands it back without a second O(dirs) fold
+        prior = (self._assembled(path, old_raw, prior_root) if old_raw
+                 else {})
         if oid_buckets is Engine._CARRY:
             oid_buckets = prior["oid_buckets"]
         carried = {d: b["from"] for b in (prior.get("migration") or [])
@@ -2703,7 +2725,7 @@ class Engine:
                     self.fs.delete_dir(full)
 
     def _write_dirs(
-        self, rows: DataFrame, path: str, buckets: int,
+        self, rows: DataFrame, snap: _Snapshot, buckets: int,
         timepart: str | None, *, open_batch: str | None = None,
         closed_batch: str | None = None,
         live: set[str] | frozenset[str] = frozenset(),
@@ -2736,6 +2758,7 @@ class Engine:
         same token is live under ANOTHER modulus's directories (a
         byte-identical batch during a doubling migration: reads would
         double-count a second copy)."""
+        path = snap.path
         out = rows
         if "_current" not in out.columns:
             out = out.withColumn("_current", F.col("_end").isNull())
@@ -2792,13 +2815,13 @@ class Engine:
                 .option("partitionOverwriteMode", "dynamic"))
             ndv = self.bloom_oid_ndv
             if ndv == "auto":
-                # derived from the manifest row stats the current
-                # operation already resolved (see _cube_state); 1.5x
-                # headroom so the target FPP survives a growing bucket
-                # until the next write re-derives, floor 1024 so tiny
-                # cubes get a working bloom
-                ndv = (max(1024, int(self._bloom_hint * 1.5))
-                       if self._bloom_hint else 100_000)
+                # derived from the row stats of the snapshot this
+                # write commits on; 1.5x headroom so the target FPP
+                # survives a growing bucket until the next write
+                # re-derives, floor 1024 so tiny cubes get a working
+                # bloom
+                ndv = (max(1024, int(snap.bloom_ndv * 1.5))
+                       if snap.bloom_ndv else 100_000)
             if ndv:
                 # parquet-mr writes no bloom for a fully dictionary-
                 # encoded chunk, and compacted files (an oid repeated
@@ -2833,13 +2856,6 @@ class Engine:
                 f"incoming _oid type {i.simpleString()} != stored cube's "
                 f"{s.simpleString()}; cast the incoming _oid to the "
                 "stored type before writing")
-
-    def _has_data(self, path: str) -> bool:
-        """True once the cube holds any partition directory. A dir with
-        only sidecars (crash between the layout write and the first data
-        write) must retry the FIRST-WRITE path, not the merge path."""
-        return any(d.startswith("_current=")
-                   for d in self.fs.listdir(path))
 
     @staticmethod
     def _obucket(buckets: int):
@@ -2897,7 +2913,7 @@ class Engine:
         fields += [StructField(k, types[k]) for k in part]
         return StructType(fields).jsonValue()
 
-    def _align_to_stored(self, path: str, meta: dict, incoming: DataFrame,
+    def _align_to_stored(self, snap: _Snapshot, incoming: DataFrame,
                          evolve: bool) -> tuple[DataFrame, list[str]]:
         """Check and align a commit batch against the stored cube
         (``_check_oid_type``, ``_check_redrop``, ``_align_incoming``).
@@ -2905,10 +2921,9 @@ class Engine:
         the manifest schema stands in for the cube (internal partition
         keys dropped exactly as ``_read`` drops them): no commit lists
         the cube just to look at its column types."""
-        table = self._empty_schema_frame(meta["schema"]).drop(
-            "__batch", "__obucket", "__stime")
+        table = self._empty_schema_frame(snap.schema).drop(*_INTERNAL)
         self._check_oid_type(table, incoming)
-        self._check_redrop(path, incoming, set(table.columns))
+        self._check_redrop(snap.path, incoming, set(table.columns))
         return self._align_incoming(table, incoming, evolve)
 
     @staticmethod
@@ -3164,12 +3179,10 @@ class Engine:
                         small_bytes: int | None = None,
                         cluster: str = "range") -> int:
         path = self._path(cube)
-        state, meta, raw = self._cube_state(path)
-        if state == "new":
+        snap = self._resolve(path, write=True)
+        if snap.root is None:
             return 0
-        layout = self._cube_layout(path)
-        buckets = meta["oid_buckets"]
-        timepart = self._cube_timepart(path, for_write=True, layout=layout)
+        meta = snap.manifest
         # size-tiered — the trickle of small batches merges
         # into one level, and ≥4 similar-sized larger levels fold into
         # the next level up (see compaction.tier_groups: bounded level
@@ -3187,75 +3200,34 @@ class Engine:
             groups = [merge] if len(merge) > 1 else []
         if not groups:
             return 0
-        keep = layout.get("keep_generations", 0) if layout else 0
-        gen = meta["gen"] + 1
         live = set(meta["dirs"])
-        raw_df = self._read_raw(path)
+        raw_df = self._scan(snap)
         rels: dict[str, dict] = {}
         merged_all: set[str] = set()
         for merge in groups:
             closed = (raw_df.where(~F.col("_current")
                                    & F.col("__batch").isin(sorted(merge)))
-                      .drop(*[c for c in ("__batch", "__obucket",
-                                          "__stime", "_current")
-                              if c in raw_df.columns]))
+                      .drop("_current", *_INTERNAL))
             closed = self._sort_compacted(closed, target_partitions,
                                           sort_by, cluster=cluster)
             # localCheckpoint: the write below rewrites the directories
             # this plan reads from
             closed = closed.withColumn("_current", F.lit(False))
             rels.update(self._write_dirs(
-                closed.localCheckpoint(eager=True), path, buckets,
-                timepart, live=self._retained_dirs(meta)))
+                closed.localCheckpoint(eager=True), snap,
+                meta["oid_buckets"], snap.timepart,
+                live=self._retained_dirs(meta)))
             merged_all |= merge
         drop = {d for d in live
                 if d.startswith("_current=false")
                 and self._batch_dir_token(d) in merged_all}
         dirs = (live - drop) | set(rels)
-        hist = self._push_history(meta, keep)
-        self._manifest_flip(path, raw, gen, dirs, hist,
-                            stats=self._merged_stats(meta, rels, dirs,
-                                                     hist, path=path),
-                            schema=meta["schema"])
-        self._sweep_dropped(
-            path, meta, dirs | {d for h in hist for d in h["dirs"]})
         # content is identical post-compact: the auto-refresh diff
         # is empty and this only bumps auto indexes' marker gens
-        self._auto_refresh_indexes(cube)
+        self._auto_refresh_indexes(cube, self._commit(snap, dirs, rels))
         return len(drop - dirs)
 
-    def _cube_state(self, path: str) -> tuple[str, dict | None, str | None]:
-        """(state, manifest, manifest_raw) where state is one of:
-        ``new`` — no committed data (absent; or a crashed first write
-        whose pointer never landed: format-2 sidecar, manifest absent);
-        ``manifest`` — committed generation-pointer cube.
-
-        The engine reads exactly one on-disk format: a format-2
-        ``_layout.json`` plus a manifest root that carries a schema.
-        Data under no sidecar, or under a format-less one, is COMMITTED
-        data from an older format — refused with ``_old_format_error``
-        and never swept (a first-write retry would flip a manifest
-        naming only the new batch and delete every existing directory).
-        A schema-less manifest root is refused by ``_manifest_root``."""
-        if not self.fs.isdir(path):
-            self._bloom_hint = None
-            return "new", None, None
-        raw = self._manifest_raw(path)
-        if raw is not None:
-            meta = self._manifest(path)
-            rows = (meta.get("stats") or {}).get("rows") or {}
-            live = [rows[d] for d in meta["dirs"] if d in rows]
-            # average rows per live directory — the "auto" bloom NDV
-            # estimate for this operation's writes (see _write_dirs)
-            self._bloom_hint = (sum(live) // len(live)) if live else None
-            return "manifest", meta, raw
-        layout = self._cube_layout(path)
-        if (layout or {}).get("format", 1) >= 2 or not self._has_data(path):
-            return "new", None, None
-        raise _old_format_error(
-            path, "data without a format-2 _layout.json sidecar")
-
-    def _first_write(self, path: str, obj: DataFrame) -> None:
+    def _first_write(self, snap: _Snapshot, obj: DataFrame) -> int | None:
         """First committed generation. Layout sidecar FIRST (a crash
         between data and sidecar would otherwise leave data every later
         operation refuses as an older format); the manifest PUT
@@ -3266,17 +3238,18 @@ class Engine:
         current_timestamp() (fixed per QUERY, different across the two
         jobs), so an unpinned plan straddling a period boundary would
         record manifest dirs the data never landed in, and the sweep
-        would then delete the real ones."""
-        buckets = self.oid_buckets
+        would then delete the real ones. Returns the generation it
+        published (1), or None when nothing landed."""
+        path, buckets = snap.path, self.oid_buckets
         self._write_layout(path, self.time_partition, self.keep_generations)
         dirs = self._write_dirs(
-            obj.drop("_current"), path, buckets, self.time_partition,
+            obj.drop("_current"), snap, buckets, self.time_partition,
             open_batch="open-g1", closed_batch="hist-g1")
         if not dirs:
             # zero-row first batch: nothing landed — leave the cube in
             # the "new" state (no manifest) instead of committing an
             # empty generation every read would refuse
-            return
+            return None
         self._manifest_flip(path, None, 1, set(dirs),
                             stats=self._merged_stats(
                                 None, dirs, set(dirs), None, path=path),
@@ -3284,6 +3257,7 @@ class Engine:
                                 obj.schema, self.time_partition),
                             oid_buckets=buckets)
         self._sweep_unreferenced(path, set(dirs))
+        return 1
 
     def insert(self, cube: str, df: DataFrame, stamped: bool = False,
                evolve: bool = True, **stamp_kw) -> None:
@@ -3301,30 +3275,18 @@ class Engine:
         validate(obj)
         path = self._path(cube)
         with self._write_lock(cube):
-            state, meta, raw = self._cube_state(path)
-            if state == "new":
-                self._first_write(path, obj)
+            snap = self._resolve(path, write=True)
+            if snap.root is None:
+                self._first_write(snap, obj)
                 return
-            layout = self._cube_layout(path)
-            buckets = meta["oid_buckets"]
-            timepart = self._cube_timepart(path, for_write=True,
-                                           layout=layout)
-            obj, _ = self._align_to_stored(path, meta, obj, evolve)
-            gen = meta["gen"] + 1
+            obj, _ = self._align_to_stored(snap, obj, evolve)
+            gen = snap.gen + 1
             new_dirs = self._write_dirs(
-                obj, path, buckets, timepart, open_batch=f"ins-g{gen}",
-                closed_batch=f"insh-g{gen}")
-            dirs = set(meta["dirs"]) | set(new_dirs)
-            hist = self._push_history(
-                meta, layout.get("keep_generations", 0) if layout else 0)
-            self._manifest_flip(path, raw, gen, dirs, hist,
-                                stats=self._merged_stats(
-                                    meta, new_dirs, dirs, hist, path=path),
-                                schema=self._manifest_schema(
-                                    obj.schema, timepart))
-            self._sweep_dropped(
-                path, meta, dirs | {d for h in hist for d in h["dirs"]})
-            self._auto_refresh_indexes(cube)
+                obj, snap, snap.root["oid_buckets"], snap.timepart,
+                open_batch=f"ins-g{gen}", closed_batch=f"insh-g{gen}")
+            self._auto_refresh_indexes(cube, self._commit(
+                snap, set(snap.dirs) | set(new_dirs), new_dirs,
+                schema=self._manifest_schema(obj.schema, snap.timepart)))
 
     def upsert(self, cube: str, df: DataFrame, autosnap: bool | None = None,
                stamped: bool = False, evolve: bool = True,
@@ -3347,16 +3309,16 @@ class Engine:
         incoming = incoming.localCheckpoint(eager=True)
         path = self._path(cube)
         with self._write_lock(cube):
-            self._upsert_locked(cube, path, incoming, autosnap, evolve)
-            self._auto_refresh_indexes(cube)
+            self._auto_refresh_indexes(cube, self._upsert_locked(
+                cube, path, incoming, autosnap, evolve))
 
-    def _auto_refresh_indexes(self, cube: str) -> None:
+    def _auto_refresh_indexes(self, cube: str, gen: int | None) -> None:
         """Commit epilogue for indexes built with ``auto_refresh=True``:
-        bring every such stale index to the generation this commit just
-        published (runs under the already-held writer lease — the lock
-        is reentrant). O(delta) per index; cubes without auto indexes
-        pay one sidecar listing."""
-        for name, m in self.vector_index_list(cube).items():
+        bring every such stale index to ``gen``, the generation this
+        commit just published (runs under the already-held writer lease
+        — the lock is reentrant). O(delta) per index; cubes without
+        auto indexes pay one sidecar listing and no manifest read."""
+        for name, m in self._vector_indexes(self._path(cube), gen).items():
             if m.get("auto") and m.get("stale"):
                 self.refresh_vector_index(cube, name)
 
@@ -3381,16 +3343,12 @@ class Engine:
         """One commit of a checkpointed batch. A snapshot trickle runs
         four Spark actions whatever its size: the probe (``_probe``),
         the merge checkpoint, and ``_write_dirs``' stats-and-token
-        aggregate and single write; the manifest flip publishes it."""
-        state, meta, raw = self._cube_state(path)
-        layout = buckets = None
-        moduli: list[int] = []
-        if state != "new":
-            layout = self._cube_layout(path)
-            buckets = meta["oid_buckets"]
-            moduli = [buckets] + [b["from"] for b in
-                                  meta.get("migration") or []]
-        n_closed, hits = self._probe(incoming, moduli)
+        aggregate and single write; the manifest flip publishes it.
+        Returns the generation it published (None when nothing
+        landed)."""
+        snap = self._resolve(path, write=True)
+        n_closed, hits = self._probe(
+            incoming, [] if snap.root is None else snap.moduli)
         if autosnap is None:
             # True iff every incoming object is open (reference
             # sqlalchemy.py:910-915)
@@ -3399,12 +3357,11 @@ class Engine:
             # last write wins within a snapshot batch (the reference's
             # container buffer is keyed by _id, core_api.py:537-540)
             incoming = _upsert.latest_per_oid(incoming)
-        if state == "new":
-            self._first_write(path, incoming)
-            return
-        timepart = self._cube_timepart(path, for_write=True, layout=layout)
-        incoming, cols = self._align_to_stored(path, meta, incoming, evolve)
-        msch = self._manifest_schema(incoming.schema, timepart)
+        if snap.root is None:
+            return self._first_write(snap, incoming)
+        meta = snap.manifest
+        incoming, cols = self._align_to_stored(snap, incoming, evolve)
+        msch = self._manifest_schema(incoming.schema, snap.timepart)
         if autosnap:
             live = set(meta["dirs"])
             # BUCKET-GRANULAR merge: the open snapshot is oid-bucket
@@ -3428,6 +3385,7 @@ class Engine:
             # side effect — the opportunistic half of the doubling
             # migration; _manifest_flip's carry rule retires their
             # stamps automatically.
+            buckets = meta["oid_buckets"]
             drop_open = self._hit_dirs(hits, meta, buckets, live,
                                        current_only=True)
             # read exactly the dirs being dropped, by RELPATH
@@ -3447,8 +3405,7 @@ class Engine:
                 # against an empty open side (schema from the
                 # manifest — no O(cube) listing for a no-op read)
                 pruned = self._empty_schema_frame(meta["schema"])
-            pruned = pruned.drop("__batch", "__obucket", "__stime",
-                                 "_current")
+            pruned = pruned.drop("_current", *_INTERNAL)
             # the pruned rows were read under the PRE-commit schema;
             # null-fill any columns this batch evolves in, like the
             # history import does for its kept rows
@@ -3474,48 +3431,33 @@ class Engine:
             # is content-keyed, the open dir is gen-keyed and the gen
             # didn't advance). Retained history dirs count as live too:
             # overwriting one would corrupt a retained snapshot.
-            gen = meta["gen"] + 1
             rels = self._write_dirs(
                 tagged.withColumn("_current", ~F.col("__closed"))
                 .drop("__closed"),
-                path, buckets, timepart, open_batch=f"open-g{gen}",
+                snap, buckets, snap.timepart,
+                open_batch=f"open-g{snap.gen + 1}",
                 live=self._retained_dirs(meta))
             # untouched open-bucket dirs stay referenced
-            dirs = (live - drop_open) | set(rels)
-            hist = self._push_history(
-                meta,
-                layout.get("keep_generations", 0) if layout else 0)
-            self._manifest_flip(path, raw, gen, dirs, hist,
-                                stats=self._merged_stats(
-                                    meta, rels, dirs, hist, path=path),
-                                schema=msch)
-            self._sweep_dropped(
-                path, meta,
-                dirs | {d for h in hist for d in h["dirs"]})
+            gen = self._commit(snap, (live - drop_open) | set(rels), rels,
+                               schema=msch)
             if self.auto_compact_batches:
                 # count only SMALL tokens (manifest-recorded sizes, no
-                # listing): consolidated levels above the tier threshold
-                # are already compacted and must not re-trigger an
-                # O(|history|) rewrite every commit
+                # listing) of the generation just published: consolidated
+                # levels above the tier threshold are already compacted and
+                # must not re-trigger an O(|history|) rewrite every commit
                 n = sum(s <= self.compact_small_bytes for s in
-                        self._history_token_sizes(path, self._manifest(path))
-                        .values())
+                        self._history_token_sizes(
+                            path, self._resolve(path).manifest).values())
                 if n > self.auto_compact_batches:
                     self.compact(cube)
-        else:
-            self._history_replace_manifested(
-                path, incoming.select(*cols), cols, buckets, meta, raw,
-                hits, timepart=timepart,
-                keep=layout.get("keep_generations", 0) if layout else 0,
-                schema=msch)
+            return gen
+        return self._history_replace_manifested(
+            snap, incoming.select(*cols), cols, hits, schema=msch)
 
     def _history_replace_manifested(
-        self, path: str, incoming: DataFrame, cols: list[str],
-        buckets: int, meta: dict, raw_manifest: str,
-        hits: dict[int, set[int]], timepart: str | None = None,
-        keep: int = 0,
-        *, schema: dict,
-    ) -> None:
+        self, snap: _Snapshot, incoming: DataFrame, cols: list[str],
+        hits: dict[int, set[int]], *, schema: dict,
+    ) -> int:
         """Bounded, snapshot-isolated history import: rewrite ONLY the
         oid-bucket directories containing incoming oids (reference
         semantics — delete every stored version of the incoming oids,
@@ -3536,8 +3478,8 @@ class Engine:
         # ``hits`` (the probe's bucket values under every live modulus)
         # was computed from those same rows — a rewrite of exactly the
         # hit buckets cannot miss a bucket an incoming row lands in
-        gen = meta["gen"] + 1
-        live = set(meta["dirs"])
+        meta, gen = snap.manifest, snap.gen + 1
+        buckets, live = meta["oid_buckets"], set(meta["dirs"])
         # migration-aware: an incoming oid's stored versions live in
         # dirs at ANY modulus still present (chained doublings
         # included) — the replaced DIRECTORIES resolve per vintage (see
@@ -3546,7 +3488,7 @@ class Engine:
         replaced_dirs = self._hit_dirs(hits, meta, buckets, live,
                                        current_only=False)
         # read exactly the replaced set, by relpath
-        pruned = (self._read_dirs(path, meta["schema"],
+        pruned = (self._read_dirs(snap.path, meta["schema"],
                                   sorted(replaced_dirs))
                   if replaced_dirs
                   else self._empty_schema_frame(meta["schema"]))
@@ -3568,16 +3510,11 @@ class Engine:
         union = kept_part.select(*cols, "_current").unionByName(
             inc_part.select(*cols, "_current"))
         new_rels = self._write_dirs(
-            union.localCheckpoint(eager=True), path, buckets, timepart,
-            open_batch=f"open-g{gen}", closed_batch=f"hr-g{gen}")
-        dirs = (live - replaced_dirs) | set(new_rels)
-        hist = self._push_history(meta, keep)
-        self._manifest_flip(path, raw_manifest, gen, dirs, hist,
-                            stats=self._merged_stats(meta, new_rels, dirs,
-                                                     hist, path=path),
-                            schema=schema)
-        self._sweep_dropped(
-            path, meta, dirs | {d for h in hist for d in h["dirs"]})
+            union.localCheckpoint(eager=True), snap, buckets,
+            snap.timepart, open_batch=f"open-g{gen}",
+            closed_batch=f"hr-g{gen}")
+        return self._commit(snap, (live - replaced_dirs) | set(new_rels),
+                            new_rels, schema=schema)
 
     # -- queries (reference sqlalchemy.py:641-803) ---------------------------
 
@@ -3629,7 +3566,7 @@ class Engine:
 
         ``moduli`` may be a list (an in-flight doubling migration prunes
         under the UNION of the old and new bucket counts — see
-        ``_read_moduli``); the union still costs the one job.
+        ``_Snapshot.moduli``); the union still costs the one job.
 
         Fast path: when every literal is a plain ``int``/``str`` and
         the stored dtype is an integral or string type, the string
@@ -3698,78 +3635,19 @@ class Engine:
         elif cube in self._views or not self.warehouse:
             df = self.table(cube, generation=generation)
         else:
-            # warehouse cube: express every prune the date spec / oid
-            # list implies as a predicate on the PARTITION columns
-            # before dropping them, so the parquet scan skips whole
-            # directories instead of filtering rows
-            path = self._path(cube)
-            layout = self._cube_layout(path)  # ONE sidecar fetch/query
-            moduli = self._read_moduli(path, generation)
-            # as-of / since specs bound _end from below: closed dirs
-            # whose recorded max(_end) precedes the bound are skipped at
-            # manifest resolution (directory-level data skipping)
-            lo = date_end_lower_bound(date)
-            hi = date_start_upper_bound(date)
-            # point lookup (oids= list, or the same lookup written as
-            # MQL — ``_oid == X`` / ``_oid in [...] and ...``, the
-            # reference's idiom): turn the literals into __obucket
-            # partition values so the read PRUNES to the ~|oids|/N of
-            # the table that can contain them — at 100 TB the
-            # difference between reading a few directories and reading
-            # the table (the _oid filter alone cannot prune: the bucket
-            # is a hash Spark doesn't invert). Resolved BEFORE the read
-            # from the manifest's stored dtype, so the prune applies to
-            # the directory list itself (_read_raw lists O(hit dirs),
-            # not O(cube)). Sound only when the literals share the
-            # stored _oid's type family (see _prune_family_ok) and,
-            # for MQL, when the conjunctively-implied literal set is
-            # bounded and single-typed — otherwise unpruned (skipped,
-            # not wrong).
-            def lookup_literals():
-                if oids:
-                    return list(oids)
-                if query:
-                    qoids = oid_literal_set(query)
-                    if (qoids and len(qoids) <= 10_000
-                            and len({type(o) for o in qoids}) == 1):
-                        return sorted(qoids, key=repr)
-                return None
-
-            bvals = None
-            lookup = lookup_literals()
-            if lookup:
-                mdtype = self._manifest_oid_dtype(path, generation)
-                if (mdtype is not None
-                        and self._prune_family_ok(mdtype, lookup)):
-                    bvals = self._oid_bucket_values(
-                        lookup, moduli, dtype=mdtype)
-            raw = self._read_raw(
-                path, generation=generation,
-                min_end=_norm_ts_bound(lo) if lo else None,
-                start_upper=_norm_ts_bound(hi) if hi else None,
-                bucket_values=bvals)
-            if bvals:
-                # belt-and-braces value filter on the pruned read
-                raw = raw.where(F.col("__obucket").isin(bvals))
-            if "__stime" in raw.columns:
-                # time-partitioned layout: the date spec's strict
-                # ``_start < U`` bound prunes periods AFTER period(U).
-                # Skipped (not wrong) when the session timezone differs
-                # from the layout's recorded zone.
-                tp = self._cube_timepart(path, layout=layout)
-                hi = date_start_upper_bound(date)
-                if tp and hi is not None:
-                    bound = F.date_format(
-                        to_timestamp_lit(hi),
-                        "yyyy-MM" if tp == "month" else "yyyy")
-                    raw = raw.where((F.col("__stime") <= bound)
-                                    | F.col("__stime").isNull())
-            if date_is_current_only(date) and "_current" in raw.columns:
-                # current-versions-only spec: the open snapshot lives
-                # entirely under _current=true — skip every history dir
-                raw = raw.where(F.col("_current"))
-            df = raw.drop(*[c for c in ("__batch", "__obucket", "__stime")
-                            if c in raw.columns])
+            # warehouse cube: the read itself applies every prune the
+            # date spec and the point-lookup literals imply (see
+            # _scan): the oids= list, or the same lookup written as MQL
+            # when its conjunctively-implied literal set is bounded and
+            # single-typed — otherwise unpruned (skipped, not wrong)
+            lookup = oids or None
+            if lookup is None and query:
+                qoids = oid_literal_set(query)
+                if (qoids and len(qoids) <= 10_000
+                        and len({type(o) for o in qoids}) == 1):
+                    lookup = sorted(qoids, key=repr)
+            df = self._read_raw(self._path(cube), generation, date,
+                                lookup).drop(*_INTERNAL)
         if oids is not None:
             # empty list short-circuits: no rows match, and building the
             # bucket-lookup frame from zero rows cannot infer a schema
@@ -3861,61 +3739,43 @@ class Engine:
         ``count`` should never scan the table); any filter, or a
         directory missing a count, falls back to the scan.
 
-        Freshness: the metadata answer reflects the manifest resolved AT
-        CALL TIME — the same snapshot semantics as any other read of the
-        cube. Under a concurrent commit this can be one generation
-        behind the committer's own view (the scan path's swept-read
-        retry used to re-resolve onto the newer pointer); callers that
-        need read-your-own-commit across engines should count through
-        the same engine that committed, or re-call."""
+        Freshness: the metadata answer reflects the one snapshot the
+        call resolved — the same semantics as any other read of the
+        cube. Under a concurrent commit it can be one generation behind
+        the committer's own view; the scan path re-resolves only when
+        the snapshot's directories (or manifest segments) were swept
+        under it, and then reads the newer generation whole. Callers
+        that need read-your-own-commit across engines should count
+        through the same engine that committed, or re-call."""
         if (isinstance(cube, str) and query is None and oids is None
-                and self.warehouse and cube not in self._views):
-            n = self._count_from_stats(cube, date, generation)
+                and self.warehouse and cube not in self._views
+                and (date == "~" or date_is_current_only(date))):
+            n = self._retry_swept(lambda: self._count_from_stats(
+                self._resolve(self._path(cube), generation), date != "~"))
             if n is not None:
                 return n
         return self._retry_swept(
             lambda: self._scoped(cube, query, date, oids=oids,
                                  generation=generation).count())
 
-    def _count_from_stats(self, cube: str, date: str | None,
-                          generation: int | None) -> int | None:
-        """Manifest-recorded row total for an unfiltered count, or None
-        when the shape is filtered / any relevant directory lacks a
-        count (fall back to the scan —
+    @staticmethod
+    def _count_from_stats(snap: _Snapshot, open_only: bool) -> int | None:
+        """Manifest-recorded row total of an unfiltered count of the
+        snapshot's generation, or None when nothing is committed or any
+        relevant directory lacks a count (fall back to the scan —
         skipped, not wrong). Works for retained generations too: stats
         carry forward for every retained directory."""
-        if date == "~":
-            want_open_only = False
-        elif date_is_current_only(date):
-            want_open_only = True
-        else:
-            return None
-        path = self._path(cube)
-        if not self.fs.isdir(path):
+        if snap.root is None:
             return None  # the scan path raises the proper error
-        root = self._manifest_root(path)
-        if root is None:
-            return None
-        if generation is None or generation == root["gen"]:
+        if snap.generation in (None, snap.gen):
             # ROOT-ONLY fast path: the totals were rolled up at commit
             # time — a bare count() parses one small JSON whatever the
             # cube's directory count (no segment loads, no Spark job)
-            r = root.get("rollup") or {}
-            key = "rows_open" if want_open_only else "rows"
-            return r.get(key)  # None when incomplete: fall back to scan
-        meta = self._manifest(path)  # full assembly (swept-seg retry)
-        if generation is None or generation == meta["gen"]:
-            dirs = meta["dirs"]
-        else:
-            for h in meta.get("history", []):
-                if h["gen"] == generation:
-                    dirs = h["dirs"]
-                    break
-            else:
-                return None  # the scan path raises the retention error
-        rows = (meta.get("stats") or {}).get("rows") or {}
-        want = [d for d in dirs
-                if not want_open_only or d.startswith("_current=true")]
+            r = snap.root.get("rollup") or {}
+            return r.get("rows_open" if open_only else "rows")
+        rows = (snap.manifest.get("stats") or {}).get("rows") or {}
+        want = [d for d in snap.dirs
+                if not open_only or d.startswith("_current=true")]
         if not all(d in rows for d in want):
             return None
         return sum(rows[d] for d in want)

@@ -248,25 +248,25 @@ def test_random_op_sequence_matches_model(spark, tmp_path):
         # pointer and read exactly the current model — never error,
         # never mix generations (see Engine._retry_swept / _read_raw)
         if step % 4 == 2:
-            real_manifest = eng._manifest
-            # a resolved manifest always carries its bucket count
-            swept_meta = {"gen": -1,
-                          "dirs": ["_current=true/__batch=__swept__"],
-                          "oid_buckets": real_manifest(
-                              eng._path(cube))["oid_buckets"]}
+            real_resolve = eng._resolve
+            # a resolved snapshot whose generation names a directory a
+            # later commit swept (bucket count and schema kept)
+            swept = real_resolve(eng._path(cube))
+            swept.entry = dict(swept.manifest,
+                               dirs=["_current=true/__batch=__swept__"])
             calls = {"n": 0}
 
-            def stale_first(path, _r=real_manifest, _c=calls):
+            def stale_first(path, *a, _r=real_resolve, _c=calls, **kw):
                 _c["n"] += 1
-                return swept_meta if _c["n"] == 1 else _r(path)
+                return swept if _c["n"] == 1 else _r(path, *a, **kw)
 
-            eng._manifest = stale_first
+            eng._resolve = stale_first
             try:
                 # filtered: the scan path (unfiltered count answers
                 # from metadata and never builds a plan to race)
                 got = eng.count(cube, "col_1 >= 0", date="~")
             finally:
-                eng._manifest = real_manifest
+                eng._resolve = real_resolve
             assert got == len(model.versions), (step, op, "swept-read")
         # time travel: every RETAINED generation must read exactly the
         # model state at its commit — including its OWN schema width

@@ -21,13 +21,6 @@ from pyspark.sql import functions as F
 from metrique_spark.engine import Engine
 from metrique_spark.objects import stamp
 
-# Heavy suite (>1 min serial): opt-in via `pytest -m slow` so the default
-# `pytest tests/` finishes inside the driver's verify window (r14 shipped
-# tests_ok:false purely because the ~1 h full suite was truncated). The
-# per-round gate runs these explicitly; coverage is unchanged.
-pytestmark = pytest.mark.slow
-
-
 
 def _batch(spark, rows, schema, start, end=None):
     df = spark.createDataFrame(rows, schema)

@@ -28,23 +28,24 @@ def engine(spark, tmp_path):
 def _gen1_then_gen2(spark, engine, cube="c"):
     """Commit gen 1, capture its manifest, commit gen 2 (which sweeps
     gen 1's directories under keep_generations=0). Returns the stale
-    gen-1 meta. Batch 2 re-upserts EVERY gen-1 oid: the bucket-granular
+    gen-1 snapshot. Batch 2 re-upserts EVERY gen-1 oid: the bucket-granular
     merge carries untouched open buckets forward by reference, and this
     race fixture needs every gen-1 directory really gone."""
     engine.upsert(cube, _objs(spark, [(1, 10), (2, 20)], "2014-01-01"),
                   stamped=True)
     path = engine._path(cube)
-    # capture the ASSEMBLED stale meta (the segmented root alone has no
-    # dirs list, and gen 1's segment files are about to be swept too —
-    # the stale dict stands in for a reader that resolved everything
-    # before the flip)
-    stale = engine._manifest(path)
+    # capture the stale snapshot with its manifest ASSEMBLED (the
+    # segmented root alone has no dirs list, and gen 1's segment files
+    # are about to be swept too — it stands in for a reader that
+    # resolved everything before the flip)
+    stale = engine._resolve(path)
+    assert stale.dirs
     engine.upsert(cube, _objs(spark, [(1, 11), (2, 21), (3, 30)],
                               "2014-02-01"), stamped=True)
     # the race must be real: every gen-1 directory is gone
     live = set(engine._manifest(path)["dirs"])
-    assert not (set(stale["dirs"]) & live)
-    for d in stale["dirs"]:
+    assert not (set(stale.dirs) & live)
+    for d in stale.dirs:
         assert not engine.fs.isdir(engine.fs.join(path, d))
     return stale
 
@@ -68,12 +69,12 @@ def test_plan_time_race_retries_to_new_generation(spark, engine,
     # reader resolves the OLD pointer, scan planning then hits the swept
     # directories -> _read_raw re-resolves once and reads gen 2 exactly
     stale = _gen1_then_gen2(spark, engine)
-    real = engine._manifest
+    real = engine._resolve
     calls = {"n": 0}
 
-    def stale_first(path):
+    def stale_first(path, *a, **kw):
         calls["n"] += 1
-        return stale if calls["n"] == 1 else real(path)
+        return stale if calls["n"] == 1 else real(path, *a, **kw)
 
     # unfiltered count is metadata-only: it answers from the resolved
     # (stale) pointer's ROOT rollup — a consistent committed snapshot,
@@ -90,7 +91,7 @@ def test_plan_time_race_retries_to_new_generation(spark, engine,
     monkeypatch.setattr(engine, "_manifest_root", stale_root_first)
     assert engine.count("r") == 2          # gen 1's committed count
     monkeypatch.setattr(engine, "_manifest_root", real_root)
-    monkeypatch.setattr(engine, "_manifest", stale_first)
+    monkeypatch.setattr(engine, "_resolve", stale_first)
     calls["n"] = 0
     # a FILTERED count must scan: stale resolution hits the swept files
     # -> re-resolve once and read gen 2 exactly
@@ -126,15 +127,18 @@ def test_execution_time_race_retries_to_new_generation(spark, tmp_path,
 
 def test_find_one_retries(spark, engine, monkeypatch):
     stale = _gen1_then_gen2(spark, engine)
-    real = engine._manifest
+    real = engine._resolve
     calls = {"n": 0}
 
-    def stale_first(path):
+    def stale_first(path, *a, **kw):
         calls["n"] += 1
-        return stale if calls["n"] == 1 else real(path)
+        return stale if calls["n"] == 1 else real(path, *a, **kw)
 
-    monkeypatch.setattr(engine, "_manifest", stale_first)
-    row = engine.find_one("c", query="_oid == 3")
+    monkeypatch.setattr(engine, "_resolve", stale_first)
+    # unpruned, so the stale snapshot's scan hits gen 1's swept
+    # directories (``_oid == 3`` would prune gen 1 to no directory at
+    # all and answer gen 1 consistently: oid 3 did not exist yet)
+    row = engine.find_one("c", query="col_1 == 30")
     assert row is not None and row["col_1"] == 30
 
 
@@ -142,7 +146,7 @@ def test_second_miss_fails_loud(spark, engine, monkeypatch):
     # a manifest that KEEPS naming missing directories is a broken cube,
     # not the race — one retry, then the error propagates
     stale = _gen1_then_gen2(spark, engine)
-    monkeypatch.setattr(engine, "_manifest", lambda path: stale)
+    monkeypatch.setattr(engine, "_resolve", lambda path, *a, **kw: stale)
     with pytest.raises(Exception) as ei:
         engine.count("c", "_oid >= 0")  # filtered: must actually scan
     assert _is_swept_read_error(ei.value)
