@@ -2090,7 +2090,7 @@ def _index_dir(sf_dir: str, name: str) -> str:
 
 def sim_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """storage-backed PQ: train + encode ONCE into a persisted index
-    (codes parquet + codebook sidecar, similarity.write_pq_index), then
+    (codes parquet + codebooks in its root, similarity.write_pq_index), then
     ADC-probe the stored codes — the index-once/search-many path the
     in-plan sim_pq_topk (which retrains per call) is not. Identical
     params to sim_pq_topk, so the same training+encode+ADC SQL replay
@@ -2108,7 +2108,7 @@ def sim_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def sim_ivfpq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """storage-backed IVF-PQ: coarse centroids + PQ codebooks in the
-    sidecar, codes parquet PARTITIONED BY coarse cluster
+    index root, codes parquet PARTITIONED BY coarse cluster
     (similarity.write_ivfpq_index) — a probe's cluster equi-join prunes
     to the probed directories, so the stored search pays
     ~nprobe/nlist of the code scan and none of the training/encode.

@@ -797,7 +797,7 @@ class Engine:
             # the generation advanced, so auto-refresh indexes like
             # every other commit: content is identical (the dropped
             # column can't be an index column — guarded above), the
-            # diff is empty, and this only bumps the markers' generation
+            # diff is empty, and this only bumps the roots' generation
             # so searches keep working
             self._auto_refresh_indexes(cube, gen)
 
@@ -818,15 +818,15 @@ class Engine:
             for k in [k for k in self._seg_cache if k.startswith(prefix)]:
                 self._seg_cache.pop(k, None)
 
-    def _index_meta_path(self, cube: str) -> str:
-        return self.fs.join(self._path(cube), "_indexes.json")
-
     def index(self, cube: str, fields, name: str | None = None) -> None:
         """Register an advisory index (reference ``index``,
         ``sqlalchemy.py:826-847``). Spark has no secondary indexes —
         file-format stats and partitioning serve that role — but the
         declaration is durably recorded per cube so ``index_list`` can
-        report it (and a planner MAY use it as a sort/partition hint)."""
+        report it (and a planner MAY use it as a sort/partition hint).
+        The read-merge-write of ``_indexes.json`` runs under the writer
+        lease, so two sessions registering at once cannot lose one
+        declaration."""
         import json
 
         if isinstance(fields, str):
@@ -837,16 +837,18 @@ class Engine:
         registry = self._indexes.setdefault(cube, [])
         if entry not in registry:
             registry.append(entry)
-        if self.warehouse and self.fs.isdir(self._path(cube)):
-            # merge the persisted sidecar first: a fresh Engine starts with
-            # an empty registry, and a blind dump would drop declarations
-            # recorded by prior sessions
-            p = self._index_meta_path(cube)
-            if self.fs.isfile(p):
-                for e in json.loads(self.fs.read_text(p)):
+        path = self._path(cube)
+        if self.warehouse and self.fs.isdir(path):
+            with self._write_lock(cube):
+                # merge the persisted sidecar first: a fresh Engine
+                # starts with an empty registry, and a blind dump would
+                # drop declarations recorded by prior sessions
+                raw = self._read_sidecar(path, "_indexes.json")
+                for e in json.loads(raw) if raw else []:
                     if e not in registry:
                         registry.append(e)
-            self.fs.write_text(p, json.dumps(registry))
+                self.fs.write_text(self.fs.join(path, "_indexes.json"),
+                                   json.dumps(registry))
 
     def index_list(self) -> dict[str, list[dict]]:
         """All advisory indexes per cube (reference ``index_list``,
@@ -860,21 +862,23 @@ class Engine:
             out.setdefault(cube, []).extend(entries)
         if self.warehouse:
             for cube in list(out):
-                p = self.fs.join(self.warehouse, cube, "_indexes.json")
-                if self.fs.isfile(p):
-                    for e in json.loads(self.fs.read_text(p)):
-                        if e not in out[cube]:
-                            out[cube].append(e)
+                raw = self._read_sidecar(self._path(cube), "_indexes.json")
+                for e in json.loads(raw) if raw else []:
+                    if e not in out[cube]:
+                        out[cube].append(e)
         return out
 
     # -- vector (ANN) indexes ------------------------------------------------
     # The similarity module's persisted index family (IVF / PQ / IVF-PQ /
-    # SQ8), managed under the cube's directory with the warehouse's own
-    # protocols: built under the writer lease from the COMMITTED
-    # generation, stamped with that generation number, and checked for
-    # staleness at search time against the live manifest pointer — a
-    # search against an index built before the corpus changed fails loud
-    # instead of silently returning neighbors from a superseded corpus.
+    # SQ8), managed under the cube's directory with the cube's own commit
+    # protocol: every build / refresh / compaction writes fresh granule
+    # directories and publishes ONE ``_ann.json`` root by CAS under the
+    # writer lease (``similarity._publish``), so a crash at any step
+    # leaves the last committed index searchable. The root is stamped
+    # with the cube generation its content reflects and checked at
+    # search time against the live manifest pointer — a search against
+    # an index built before the corpus changed fails loud instead of
+    # silently returning neighbors from a superseded corpus.
 
     _ANN_KINDS = ("ivf", "pq", "ivfpq", "sq8")
 
@@ -883,20 +887,19 @@ class Engine:
         # the index lives inside the cube directory without polluting it
         return self.fs.join(self._path(cube), f"_ann_{name}")
 
-    def _ann_meta_path(self, cube: str, name: str) -> str:
-        return self.fs.join(self._ann_path(cube, name), "_ann.json")
+    def _ann_root(self, cube: str, name: str) -> tuple[str, dict]:
+        """(text, root) of a committed index — one GET. An older-form
+        index refuses with the rebuild instruction
+        (``similarity._parse_root``)."""
+        from metrique_spark.functions import similarity as _sim
 
-    def _ann_intent_path(self, cube: str, name: str) -> str:
-        """In-flight-mutation intent marker (``_refresh.json``): written
-        BEFORE a refresh/compaction mutates a committed index and deleted
-        only after the mutation fully lands. Its presence means the
-        index data may be mid-mutation — searches refuse it (except the
-        completed-refresh tail, see ``vector_search``), vacuum leaves
-        the directory alone (the committed marker is still there), and
-        the next ``refresh_vector_index`` CONVERGES the content (the
-        diff-against-index-content refresh is self-healing), so a crash
-        costs a re-run, never a rebuild."""
-        return self.fs.join(self._ann_path(cube, name), "_refresh.json")
+        apath = self._ann_path(cube, name)
+        raw = _sim._root_text(self.fs, apath)
+        if raw is None:
+            raise ValueError(
+                f"cube {cube!r} has no committed vector index {name!r} "
+                "(build_vector_index, or a crashed build — rebuild)")
+        return raw, _sim._parse_root(apath, raw)
 
     def build_vector_index(self, cube: str, name: str, vec_col: str,
                            kind: str = "ivf", id_col: str = "_oid",
@@ -906,9 +909,12 @@ class Engine:
         """Build (or rebuild) a persisted ANN index over a cube's vector
         column — CURRENT versions only (an embedding index over history
         rows would return superseded objects). ``params`` pass through
-        to the family writer (nlist/m/k/iters/...). The ``_ann.json``
-        marker is written LAST with the cube generation the build read,
-        making the build crash-safe and the staleness check possible.
+        to the family's trainer (nlist/m/k/iters/...). The model and
+        codes land in fresh directories, and ONE root naming them — plus
+        the cube generation the build read, for the staleness check — is
+        published by CAS last: a crashed build leaves the previous index
+        (if any) committed and searchable, and its own directories for
+        ``vacuum``.
 
         ``auto_refresh=True`` closes the staleness loop: every commit on
         the cube (upsert / insert / compact) runs
@@ -923,8 +929,6 @@ class Engine:
         normalization SORTS array fields for order-insensitive hashing,
         which destroys vector semantics (every sorted gaussian vector
         looks like every other; similarities collapse toward 1)."""
-        import json
-
         from metrique_spark.functions import similarity as _sim
 
         if kind not in self._ANN_KINDS:
@@ -933,7 +937,7 @@ class Engine:
                 f"{self._ANN_KINDS}")
         if kind == "sq8" and params:
             # sq8 has no tuning knobs; recording ignored params in the
-            # marker would report configuration that was never applied
+            # root would report configuration that was never applied
             raise TypeError(
                 f"sq8 vector indexes take no extra params, got "
                 f"{sorted(params)}")
@@ -946,81 +950,52 @@ class Engine:
                 raise ValueError(
                     f"cube {cube!r} has no committed generation — build "
                     "vector indexes after the first commit")
-            gen = snap.gen
             # _current is the partition column (== _end IS NULL by
             # construction): filtering on it prunes every closed history
             # directory at plan time instead of scanning years of
             # superseded versions just to drop them
             df = self._scan(snap, date=None).drop("_current", *_INTERNAL)
             apath = self._ann_path(cube, name)
-            amarker = self._ann_meta_path(cube, name)
-            if self.fs.isfile(amarker):
-                self.fs.delete(amarker)  # rebuild: invalidate first
-            if self.fs.isdir(apath):
-                # and clear the previous build entirely: a kind switch
-                # would otherwise leave the old family's data AND its
-                # own committed-looking sidecar behind
+            old = _sim._root_text(self.fs, apath)
+            try:
+                if old is not None:
+                    _sim._parse_root(apath, old)
+            except ValueError:
+                old = None
+            if old is None:
+                # no committed index in the current form: nothing in the
+                # directory (a crashed first build, an older-form index)
+                # is readable, so start from an empty one
                 self.fs.delete_dir(apath)
-            if kind == "ivf":
-                _sim.write_ivf_index(df, apath, id_col=id_col,
-                                     vec_col=vec_col, **params)
-            elif kind == "pq":
-                _sim.write_pq_index(df, apath, id_col=id_col,
-                                    vec_col=vec_col, fs=self.fs, **params)
-            elif kind == "ivfpq":
-                _sim.write_ivfpq_index(df, apath, id_col=id_col,
-                                       vec_col=vec_col, fs=self.fs,
-                                       **params)
-            else:
-                _sim.write_sq8_index(df, apath, id_col=id_col,
-                                     vec_col=vec_col, fs=self.fs)
+            root = _sim._stage_build(df, apath, kind, id_col, vec_col,
+                                     **params)
             # build-time drift baseline: the same distribution-fit
             # statistic refresh will compute over appended deltas (see
             # similarity.drift_stat) recorded against the corpus the
             # model was TRAINED on — one extra map-only pass at build
             # (sq8's clip fraction is 0 by construction: the params ARE
             # the corpus extrema, so no job at all)
-            if kind == "sq8":
-                dmetric, dval = "clip_frac", 0.0
-            elif kind == "ivf":
-                cent_rows = sorted(
-                    (r["centroid_id"], list(r["cvec"])) for r in
-                    self.spark.read.parquet(apath + "/centroids")
-                    .collect())
-                dmetric, dval = _sim.drift_stat(df, "ivf", vec_col,
-                                                centroids=cent_rows)
-            else:
-                pmeta = json.loads(
-                    self.fs.read_text(self.fs.join(apath, "_pq.json")))
-                if kind == "ivfpq":
-                    dmetric, dval = _sim.drift_stat(
-                        df, "ivfpq", vec_col,
-                        centroids=[(c[0], list(c[1]))
-                                   for c in pmeta["centroids"]],
-                        decimals=pmeta.get("sim_decimals", 6))
-                else:
-                    dmetric, dval = _sim.drift_stat(df, "pq", vec_col,
-                                                    books=pmeta["books"])
-            body = {"kind": kind, "gen": gen, "vec_col": vec_col,
-                    "id_col": id_col, "params": params,
-                    "auto": bool(auto_refresh),
-                    "drift_base": {"metric": dmetric, "value": dval}}
+            dmetric, dval = (("clip_frac", 0.0) if kind == "sq8" else
+                             _sim._index_drift(df, apath, root, vec_col))
+            root.update(gen=snap.gen, vec_col=vec_col, params=params,
+                        auto=bool(auto_refresh),
+                        drift_base={"metric": dmetric, "value": dval})
             if drift_tol is not None:
                 # per-index tolerance: drift sensitivity is a property
-                # of the INDEX's workload, so it rides the marker — a
+                # of the INDEX's workload, so it rides the root — a
                 # later refresh (auto included) applies it without the
                 # caller re-passing the knob
-                body["drift_tol"] = float(drift_tol)
-            self.fs.write_text(amarker, json.dumps(body))
+                root["drift_tol"] = float(drift_tol)
+            _sim._publish(self.fs, apath, old, root)
 
     def vector_index_list(self, cube: str,
                           counts: bool = False) -> dict[str, dict]:
-        """Committed ANN indexes on the cube: name → its ``_ann.json``
-        metadata plus a ``stale`` flag (built generation != live).
-        ``counts=True`` adds each index's append-granule count
-        (``batches`` — see ``_index_batch_count``), the quantity
-        ``compact_vector_index`` bounds; off by default because the
-        listing walk runs on every auto-refresh commit epilogue."""
+        """Committed ANN indexes on the cube: name → its root's
+        descriptive fields (kind, gen, columns, params, drift) plus a
+        ``stale`` flag (built generation != live). ``counts=True`` adds
+        each index's append-batch count (``batches``), the quantity
+        ``compact_vector_index`` bounds. An older-form index is not
+        listed: only a rebuild makes it usable again."""
         path = self._path(cube)
         return self._vector_indexes(path, self._resolve(path).gen, counts)
 
@@ -1028,114 +1003,68 @@ class Engine:
                         counts: bool = False) -> dict[str, dict]:
         """``vector_index_list`` against a generation the caller already
         resolved (``live``) — commits pass the generation they just
-        published, so their index epilogue reads no manifest."""
-        import json
+        published, so their index epilogue reads no manifest, and a
+        cube without indexes pays one listing and no index GET."""
+        from metrique_spark.functions import similarity as _sim
 
         out: dict[str, dict] = {}
         for d in self.fs.listdir(path):
             if not d.startswith("_ann_"):
                 continue
-            marker = self.fs.join(path, d, "_ann.json")
-            if not self.fs.isfile(marker):
-                continue  # crashed build — uncommitted
-            m = json.loads(self.fs.read_text(marker))
-            m["stale"] = (m.get("gen") != live)
-            if self.fs.isfile(self.fs.join(path, d, "_refresh.json")):
-                # a mutation is in flight or crashed mid-way; the next
-                # refresh converges it (see _ann_intent_path)
-                m["refreshing"] = True
+            apath = self.fs.join(path, d)
+            raw = _sim._root_text(self.fs, apath)
+            if raw is None:
+                continue  # crashed first build — uncommitted
+            try:
+                root = _sim._parse_root(apath, raw)
+            except ValueError:
+                continue  # older form: only a rebuild makes it usable
+            m = {k: v for k, v in root.items()
+                 if k not in ("model", "granules", "schema")}
+            m["stale"] = m.get("gen") != live
             if counts:
-                m["batches"] = self._index_batch_count(
-                    self.fs.join(path, d), m["kind"])
+                m["batches"] = _sim._batch_count(root)
             out[d[len("_ann_"):]] = m
         return out
 
     def vector_search(self, cube: str, name: str, queries: DataFrame,
                       k: int = 5, nprobe: int | None = None,
                       allow_stale: bool = False) -> DataFrame:
-        """Search a cube's persisted ANN index. Fails loud when the
-        index was built against a superseded generation (the corpus
-        changed under it) unless ``allow_stale=True`` — a stale ANN
-        answer LOOKS fine, which is exactly why it must not be silent.
-        Returns the family's (query_id, neighbor_id, sim|score) frame;
-        neighbor ids are the cube's ``_oid`` values by default."""
-        import json
+        """Search a cube's persisted ANN index — exactly the granules
+        its committed root names, so a crashed or in-flight writer is
+        invisible. Fails loud when the root was built against a
+        superseded generation (the corpus changed under it) unless
+        ``allow_stale=True`` — a stale ANN answer LOOKS fine, which is
+        exactly why it must not be silent. Under ``Engine(lock_wait=N)``
+        a stale search re-reads the root until a refresh (an
+        auto-refresh commit epilogue, say) publishes the live
+        generation, or the deadline passes. Returns the family's
+        (query_id, neighbor_id, sim|score) frame; neighbor ids are the
+        cube's ``_oid`` values by default."""
+        import time as _time
 
         from metrique_spark.functions import similarity as _sim
 
-        marker = self._ann_meta_path(cube, name)
-        if not self.fs.isfile(marker):
-            raise ValueError(
-                f"cube {cube!r} has no committed vector index {name!r} "
-                "(build_vector_index, or a crashed build — rebuild)")
-        m = json.loads(self.fs.read_text(marker))
-        live = self._resolve(self._path(cube)).gen
-        ipath = self._ann_intent_path(cube, name)
-        if self.fs.isfile(ipath) and self.lock_wait:
-            # same opt-in as the writer lease: a reader willing to wait
-            # polls the intent away instead of failing — the common case
-            # is an auto-refresh commit epilogue finishing in seconds
-            import time as _time
-
-            deadline = _time.monotonic() + self.lock_wait
-            backoff = 0.05
-            while (self.fs.isfile(ipath)
-                   and _time.monotonic() + backoff <= deadline):
-                _time.sleep(backoff)
-                backoff = min(backoff * 2, 1.0)
-            if not self.fs.isfile(marker):
-                # a concurrent drop_vector_index removed the index while
-                # we waited — same refusal as the pre-wait check, not a
-                # raw file-not-found from the re-read below
-                raise ValueError(
-                    f"cube {cube!r} has no committed vector index "
-                    f"{name!r} (build_vector_index, or a crashed build "
-                    "— rebuild)")
-            m = json.loads(self.fs.read_text(marker))  # re-read gen
+        deadline = _time.monotonic() + self.lock_wait
+        backoff = 0.05
+        while True:
+            _, root = self._ann_root(cube, name)
             live = self._resolve(self._path(cube)).gen
-        if self.fs.isfile(ipath):
-            intent = json.loads(self.fs.read_text(ipath))
-            done = (intent.get("op") == "refresh"
-                    and m.get("gen") == intent.get("target_gen"))
-            if not done:
-                # a refresh/compaction is in flight (or crashed) and the
-                # index data may be mid-mutation — torn, not merely
-                # stale, so allow_stale does NOT apply: a half-removed /
-                # half-appended corpus has no consistent interpretation
-                raise ValueError(
-                    f"vector index {name!r} on cube {cube!r} has a "
-                    f"{intent.get('op', 'mutation')} in flight or "
-                    "crashed mid-way — wait for the writer, or run "
-                    "refresh_vector_index to converge the index "
-                    "(the content diff is self-healing)")
-            # completed-refresh tail: the marker generation bump landed,
-            # only the intent cleanup was lost — content is consistent
-        if m.get("gen") != live and not allow_stale:
+            if (allow_stale or root.get("gen") == live
+                    or _time.monotonic() + backoff > deadline):
+                break
+            _time.sleep(backoff)
+            backoff = min(backoff * 2, 1.0)
+        if root.get("gen") != live and not allow_stale:
             raise ValueError(
                 f"vector index {name!r} on cube {cube!r} was built at "
-                f"generation {m.get('gen')} but the cube is at {live} — "
-                "refresh_vector_index (incremental, needs the built "
+                f"generation {root.get('gen')} but the cube is at {live} "
+                "— refresh_vector_index (incremental, needs the built "
                 "generation retained), re-run build_vector_index, or "
                 "pass allow_stale=True to search the superseded corpus "
                 "deliberately")
-        apath = self._ann_path(cube, name)
-        kind = m["kind"]
-        if kind == "ivf":
-            assigned, centroids = _sim.read_ivf_index(self.spark, apath)
-            return _sim.ivf_topk_indexed(
-                assigned, centroids, queries, k=k,
-                nprobe=nprobe if nprobe is not None else 4,
-                id_col=m["id_col"], vec_col=m["vec_col"])
-        if kind == "pq":
-            return _sim.pq_topk_indexed(self.spark, apath, queries, k=k,
-                                        vec_col=m["vec_col"], fs=self.fs)
-        if kind == "ivfpq":
-            kw = {} if nprobe is None else {"nprobe": nprobe}
-            return _sim.ivfpq_topk_indexed(self.spark, apath, queries,
-                                           topk=k, vec_col=m["vec_col"],
-                                           fs=self.fs, **kw)
-        return _sim.sq8_topk_indexed(self.spark, apath, queries, k=k,
-                                     vec_col=m["vec_col"], fs=self.fs)
+        return _sim._topk(self.spark, self._ann_path(cube, name), root,
+                          queries, k, nprobe, root["vec_col"])
 
     def refresh_vector_index(self, cube: str, name: str,
                              drift_tol: float | None = None) -> dict:
@@ -1143,23 +1072,22 @@ class Engine:
         generation without re-training or re-encoding the corpus: diff
         the live current rows against the INDEX'S OWN CONTENT (raw
         stored vectors for IVF; the per-row ``__vh`` vector fingerprint
-        for PQ/SQ8/IVF-PQ), physically REMOVE superseded ids at
-        partition granularity (bucket dirs for IVF,
-        ``__abatch``/cluster dirs for the PQ families — only partitions
-        that contain a removed id are rewritten), encode-and-append
-        only the new/changed rows against the STORED model (frozen
+        for PQ/SQ8/IVF-PQ), REMOVE superseded ids by rewriting only the
+        granules that hold one (bucket / cluster / ``__gbucket`` ×
+        batch leaves) into fresh ones, encode-and-append only the
+        new/changed rows against the STORED model (frozen
         centroids/codebooks/params — recall drifts with the data
         distribution, correctness doesn't; rebuild when bucket sizes
-        skew), and bump the marker generation. WRITE cost is O(delta)
-        encoding + O(hit partitions) code copying — never the corpus;
-        the diff's READ side does scan the whole index's slim (id,
-        fingerprint) pair — column-pruned, no vector/code payload —
-        the unavoidable floor for an exact diff without a retained
-        generation.
-        Diffing against index content needs no retained generation and
-        is self-healing: whatever state the index data is in (drift,
-        duplicate ids from raw appends), one refresh converges it to
-        exactly the live (id, vector) set under the frozen model.
+        skew), and publish the new root with the live generation. WRITE
+        cost is O(delta) encoding + O(hit granules) code copying — never
+        the corpus; the diff's READ side does scan the whole index's
+        slim (id, fingerprint) pair — column-pruned, no vector/code
+        payload — the unavoidable floor for an exact diff without a
+        retained generation. Diffing against index content needs no
+        retained generation and is self-healing: whatever the index
+        holds (drift, duplicate ids from raw appends), one refresh
+        converges it to exactly the live (id, vector) set under the
+        frozen model.
 
         Removal-by-rewrite instead of read-side tombstone filtering is
         deliberate: a tombstone anti-join would tax EVERY future search
@@ -1167,63 +1095,40 @@ class Engine:
         keep the probe path untouched (and exactly equal to a fresh
         build's, so search parity is structural, not probabilistic).
 
-        Crash-safety WITHOUT a read-unavailability window: the committed
-        ``_ann.json`` marker stays in place throughout; an intent file
-        (``_refresh.json``, see ``_ann_intent_path``) is written before
-        the first mutation and deleted after the marker's generation
-        bump lands. A crash mid-refresh leaves marker+intent: searches
-        fail loud with the stale/in-flight error (never a silent
-        half-refreshed answer), vacuum leaves the directory alone (the
-        marker is present), and the next refresh CONVERGES the content —
-        the diff-against-index-content design is self-healing, so the
-        crash costs a re-run, never the full rebuild the old
-        delete-marker-first protocol forced. Returns
+        Crash safety is the commit protocol's: removal and append write
+        fresh directories only, and ONE root swap publishes both with
+        the new generation. A crash before it leaves the previous root —
+        consistent, searchable with ``allow_stale=True``, stale until
+        refreshed — and a re-run starts over from it. Returns
         ``{"appended": n, "removed": n, "gen": live, "drift": {...}}``."""
-        import json
-
         from metrique_spark.functions import similarity as _sim
 
         with self._write_lock(cube):
-            marker = self._ann_meta_path(cube, name)
-            if not self.fs.isfile(marker):
-                raise ValueError(
-                    f"cube {cube!r} has no committed vector index "
-                    f"{name!r} (build_vector_index, or a crashed "
-                    "build/refresh — rebuild)")
-            m = json.loads(self.fs.read_text(marker))
+            raw, root = self._ann_root(cube, name)
             snap = self._resolve(self._path(cube))
             live = snap.gen
-            ipath = self._ann_intent_path(cube, name)
-            intent_left = self.fs.isfile(ipath)
-            if m.get("gen") == live and not intent_left:
+            if root.get("gen") == live:
                 return {"appended": 0, "removed": 0, "gen": live}
-            # intent present with gen already live: a crashed mutation
-            # tail (refresh that died before intent cleanup — content
-            # consistent — or a compaction that died mid-rewrite —
-            # duplicate ids possible). Run the full diff anyway: it
-            # converges either state and the intent is cleaned at the end.
-            id_col, vec_col = m["id_col"], m["vec_col"]
+            id_col, vec_col = root["id_col"], root["vec_col"]
+            kind = root["kind"]
+            apath = self._ann_path(cube, name)
             newc = self._scan(snap, date=None).select(id_col, vec_col)
-            apath0 = self._ann_path(cube, name)
             # diff the live corpus against the INDEX'S OWN CONTENT —
             # IVF stores raw vectors (compare directly); the PQ families
             # store a per-row vector fingerprint (__vh, see
             # similarity._vh) — so no retained generation is needed and
             # the refresh is self-healing (a drifted or double-appended
             # id converges back to exactly the live row)
-            pmeta = None
-            if m["kind"] == "ivf":
-                idx = (self.spark.read.parquet(apath0 + "/vectors")
-                       .select(F.col(id_col).alias("__iid"),
-                               F.col("v").alias("__iv")))
+            rows = _sim._frame(self.spark, apath, root)
+            if kind == "ivf":
+                idx = rows.select(F.col(id_col).alias("__iid"),
+                                  F.col("v").alias("__iv"))
                 same = ((F.col(id_col) == F.col("__iid"))
                         & F.col(vec_col).cast("array<double>")
                         .eqNullSafe(F.col("__iv")))
             else:
-                codes, pmeta = _sim.read_pq_index(self.spark, apath0,
-                                                  fs=self.fs)
-                idx = codes.select(F.col(id_col).alias("__iid"),
-                                   F.col("__vh").alias("__ivh"))
+                idx = rows.select(F.col(id_col).alias("__iid"),
+                                  F.col("__vh").alias("__ivh"))
                 same = ((F.col(id_col) == F.col("__iid"))
                         & (_sim._vh(vec_col) == F.col("__ivh")))
             # changed/new: live rows with no identical (id, vec) in the
@@ -1247,29 +1152,12 @@ class Engine:
             changed = changed.localCheckpoint(eager=True)
             sup = sup.localCheckpoint(eager=True)
             n_add, n_del = changed.count(), sup.count()
-            apath = apath0
-            if n_add or n_del:
-                # intent BEFORE the first mutation: the committed marker
-                # stays in place (no read-unavailability window, nothing
-                # for vacuum to sweep); the intent flags the data as
-                # possibly mid-mutation until deleted below
-                self.fs.write_text(ipath, json.dumps(
-                    {"op": "refresh", "target_gen": live}))
+            new = root
             if n_del:
-                if m["kind"] == "ivf":
-                    _sim.remove_from_ivf_index(self.spark, apath, sup,
-                                               id_col=id_col, fs=self.fs)
-                else:
-                    _sim.remove_from_pq_index(self.spark, apath, sup,
-                                              fs=self.fs)
+                new = _sim._stage_remove(self.spark, apath, new, sup)
             if n_add:
-                if m["kind"] == "ivf":
-                    _sim.append_to_ivf_index(changed, apath,
-                                             id_col=id_col,
-                                             vec_col=vec_col)
-                else:
-                    _sim.append_to_pq_index(changed, apath,
-                                            vec_col=vec_col, fs=self.fs)
+                new = _sim._stage_append(changed, apath, new, vec_col)
+            new = {**new, "gen": live}
             # drift signal over the APPENDED delta (frozen-model refresh
             # never retrains — recall decays silently as the
             # distribution shifts, so measure it): compare the same
@@ -1280,30 +1168,11 @@ class Engine:
             # doubling; clip_frac: absolute fraction > tol, default
             # 0.05). Cost: one map-only pass over the delta.
             drift = None
-            base = (m.get("drift_base") or {}).get("value")
+            base = (root.get("drift_base") or {}).get("value")
             if drift_tol is None:
-                drift_tol = m.get("drift_tol")  # per-index tolerance
+                drift_tol = root.get("drift_tol")  # per-index tolerance
             if n_add and base is not None:
-                if m["kind"] == "ivf":
-                    cents = sorted(
-                        (r["centroid_id"], list(r["cvec"])) for r in
-                        self.spark.read.parquet(apath0 + "/centroids")
-                        .collect())
-                    dm, dv = _sim.drift_stat(changed, "ivf", vec_col,
-                                             centroids=cents)
-                elif m["kind"] == "ivfpq":
-                    dm, dv = _sim.drift_stat(
-                        changed, "ivfpq", vec_col,
-                        centroids=[(c[0], list(c[1]))
-                                   for c in pmeta["centroids"]],
-                        decimals=pmeta.get("sim_decimals", 6))
-                elif m["kind"] == "sq8":
-                    dm, dv = _sim.drift_stat(
-                        changed, "sq8", vec_col,
-                        params=[(p[0], p[1]) for p in pmeta["params"]])
-                else:
-                    dm, dv = _sim.drift_stat(changed, "pq", vec_col,
-                                             books=pmeta["books"])
+                dm, dv = _sim._index_drift(changed, apath, root, vec_col)
                 if dm == "centroid_sim":
                     tol = 0.15 if drift_tol is None else drift_tol
                     rec = dv is not None and dv < base - tol
@@ -1317,37 +1186,32 @@ class Engine:
                 drift = {"metric": dm, "baseline": base, "appended": dv,
                          "tolerance": tol,
                          "rebuild_recommended": bool(rec)}
-                if m["kind"] in ("ivf", "ivfpq"):
+                if kind in ("ivf", "ivfpq"):
                     # post-refresh inverted-list balance (report-only:
                     # the documented rebuild trigger "bucket sizes
                     # skew", now measured — max/mean over the slim
                     # partition key, one combinable aggregate)
-                    key = "bucket" if m["kind"] == "ivf" else "cluster"
-                    sub = "/vectors" if m["kind"] == "ivf" else "/codes"
-                    srow = (self.spark.read.parquet(apath0 + sub)
-                            .groupBy(key).count()
+                    srow = (_sim._frame(self.spark, apath, new)
+                            .groupBy(_sim._parts(new)[0]).count()
                             .agg((F.max("count")
                                   / F.avg("count")).alias("s")).first())
                     if srow["s"] is not None:
                         drift["bucket_skew"] = round(float(srow["s"]), 3)
-                m["drift_last"] = drift  # surfaced by vector_index_list
-            m["gen"] = live
-            self.fs.write_text(marker, json.dumps(m))
-            if intent_left or n_add or n_del:
-                self.fs.delete(ipath)  # commit tail: mutation fully landed
+                new["drift_last"] = drift  # surfaced by vector_index_list
+            _sim._publish(self.fs, apath, raw, new)
             out = {"appended": n_add, "removed": n_del, "gen": live}
             if drift is not None:
                 out["drift"] = drift
-            # refresh epilogue: bound the append-granule growth (the
-            # lock is reentrant, so this runs inside the same lease)
+            # refresh epilogue: bound the append-batch growth (the lock
+            # is reentrant, so this runs inside the same lease)
             lim = self.auto_compact_index_batches
-            if lim and self._index_batch_count(apath0, m["kind"]) > lim:
+            if lim and _sim._batch_count(new) > lim:
                 out["compacted"] = self.compact_vector_index(cube, name)
             return out
 
     def drop_vector_index(self, cube: str, name: str) -> bool:
         """Delete an ANN index — committed or crash-stranded — under the
-        writer lease: marker first (searches immediately refuse), then
+        writer lease: root first (searches immediately refuse), then
         the directory. Returns False when no such index directory
         exists. The inverse of ``build_vector_index``; dropping is the
         documented way to release an index whose column is about to be
@@ -1356,157 +1220,44 @@ class Engine:
         with self._write_lock(cube):
             if not self.fs.isdir(apath):
                 return False
-            marker = self._ann_meta_path(cube, name)
-            if self.fs.isfile(marker):
-                self.fs.delete(marker)
+            self.fs.delete(self.fs.join(apath, "_ann.json"))
             self.fs.delete_dir(apath)
             return True
-
-    def _index_batch_count(self, apath: str, kind: str) -> int:
-        """Append-granule count of a stored index — distinct ``__abatch``
-        tokens for the PQ families, the max per-bucket file count for
-        IVF (both are 1 in the fully-compacted state, so the
-        auto-compaction trigger converges instead of re-firing). Listing
-        cost is bounded by buckets × batches."""
-        if kind == "ivf":
-            root = self.fs.join(apath, "vectors")
-            if not self.fs.isdir(root):
-                return 0
-            worst = 0
-            for d in self.fs.listdir(root):
-                p = self.fs.join(root, d)
-                if d.startswith("bucket=") and self.fs.isdir(p):
-                    worst = max(worst, sum(
-                        f.endswith(".parquet")
-                        for f in self.fs.listdir(p)))
-            return worst
-        root = self.fs.join(apath, "codes")
-        if not self.fs.isdir(root):
-            return 0
-        tokens: set[str] = set()
-        for d in self.fs.listdir(root):
-            p = self.fs.join(root, d)
-            if d.startswith("__abatch="):
-                tokens.add(d)
-            elif (d.startswith(("cluster=", "__gbucket="))
-                    and self.fs.isdir(p)):
-                tokens.update(b for b in self.fs.listdir(p)
-                              if b.startswith("__abatch="))
-        return len(tokens)
 
     def compact_vector_index(self, cube: str, name: str,
                              small_bytes: int | None | object =
                              _FULL_COMPACT) -> int:
         """Consolidate a committed ANN index's append-accumulated
-        layout — SIZE-TIERED by default, like ``compact``: every
-        ``refresh_vector_index``/append lands one content-token-keyed
-        ``__abatch`` partition per hit bucket/cluster (extra files per
-        bucket for IVF) — an index refreshed nightly for a year carries
-        hundreds of sub-directories whose listing cost and tiny-file
-        reads degrade every probe. Merges the batches at or below
-        ``small_bytes`` (default: the engine's ``compact_small_bytes``)
-        into one consolidated batch per bucket/cluster; larger
-        consolidated levels stay untouched on disk, so the auto-
-        compaction epilogue costs O(recent appends), never O(|index|).
-        Pass ``small_bytes=None`` for an explicit FULL consolidation
-        (also the cross-level duplicate-id convergence path). Codes are
-        copied, never re-encoded; duplicate ids collapse within the
-        merged tier. Physical-only: search results are identical before
-        and after, and the marker generation is untouched (a stale
-        index stays stale).
+        batches — SIZE-TIERED by default, like ``compact``: every
+        ``refresh_vector_index``/append lands one batch of granules (one
+        per hit bucket/cluster/``__gbucket``) — an index refreshed
+        nightly for a year carries hundreds of granules whose listing
+        cost and tiny-file reads degrade every probe. Merges the batches
+        at or below ``small_bytes`` (default: the engine's
+        ``compact_small_bytes``) into one consolidated batch per parent
+        directory; larger consolidated levels stay untouched on disk, so
+        the auto-compaction epilogue costs O(recent appends), never
+        O(|index|). Pass ``small_bytes=None`` for an explicit FULL
+        consolidation (also the cross-level duplicate-id convergence
+        path). Codes are copied, never re-encoded; duplicate ids
+        collapse within the merged tier. Physical-only: search results
+        are identical before and after, and the root's generation is
+        untouched (a stale index stays stale).
 
-        Runs under the writer lease and the same ``_refresh.json``
-        intent protocol as refresh: searches refuse the index while the
-        rewrite is in flight, vacuum leaves it alone, and a crash
-        mid-compaction is converged by the next refresh (duplicate ids
-        are removed wholesale and re-appended once) or by re-running
-        the compaction — the intent records each merge group as it
-        starts, so a re-run COMPLETES exactly the crashed group
-        (``resume_pq_compaction`` / ``resume_ivf_compaction``): the
-        cross-level duplicate-id window self-heals tiered, touching
-        only the group's own directories, never the whole index. (A
-        group-less compact intent from a pre-resume engine still
-        escalates to full.) Returns the number of batch directories
-        (files for IVF) removed."""
-        import json
-
+        Runs under the writer lease and commits like every index write:
+        the merged batches land in fresh directories and one root swap
+        publishes them and retires the merged granules, so a crash
+        leaves the previous root searchable and a re-run starts over.
+        Returns the number of granule directories merged away."""
         from metrique_spark.functions import similarity as _sim
 
         with self._write_lock(cube):
-            marker = self._ann_meta_path(cube, name)
-            if not self.fs.isfile(marker):
-                raise ValueError(
-                    f"cube {cube!r} has no committed vector index "
-                    f"{name!r} (build_vector_index, or a crashed "
-                    "build — rebuild)")
-            m = json.loads(self.fs.read_text(marker))
-            apath = self._ann_path(cube, name)
-            ipath = self._ann_intent_path(cube, name)
-            if self.fs.isfile(ipath):
-                intent = json.loads(self.fs.read_text(ipath))
-                if (intent.get("op") == "refresh"
-                        and m.get("gen") != intent.get("target_gen")):
-                    # a refresh crashed MID-MUTATION: the index content
-                    # is torn (neither the old nor the new generation).
-                    # Compacting would consolidate the half-refreshed
-                    # data and erase the torn-content flag — exactly the
-                    # state the intent protocol exists to refuse. Only
-                    # the self-healing diff may converge it.
-                    raise ValueError(
-                        f"vector index {name!r} on cube {cube!r} has a "
-                        "refresh crashed mid-way — run "
-                        "refresh_vector_index to converge the index "
-                        "before compacting (the content diff is "
-                        "self-healing)")
-                # else: a crashed compaction (op=compact) or a
-                # completed-refresh tail. A crashed compaction that
-                # RECORDED its merge group (``pending``) self-heals
-                # TIERED: the resume completes exactly that group —
-                # the cross-level duplicate-id window closes without
-                # touching any other level. A group-less compact intent
-                # (written by a pre-resume engine) still escalates to
-                # FULL, the only convergence that vintage supports.
-                if intent.get("op") == "compact":
-                    pend = intent.get("pending")
-                    if pend is not None:
-                        if m["kind"] == "ivf":
-                            _sim.resume_ivf_compaction(
-                                self.spark, apath, pend, fs=self.fs)
-                        else:
-                            _sim.resume_pq_compaction(
-                                self.spark, apath, pend, fs=self.fs)
-                        self.fs.delete(ipath)
-                    elif intent.get("v", 1) < 2:
-                        # group-less compact intent from a PRE-resume
-                        # engine: mutations may have happened without a
-                        # recorded group — full is that vintage's only
-                        # convergence. (A v2 intent without pending
-                        # means the crash hit BEFORE any mutation:
-                        # nothing to converge, proceed tiered.)
-                        small_bytes = None
+            self._ann_root(cube, name)
             if small_bytes is Engine._FULL_COMPACT:
                 small_bytes = self.compact_small_bytes
-
-            def record(pending: dict) -> None:
-                # persist the group about to be rewritten INTO the
-                # intent: a crash between its consolidated write and
-                # its original-deletes is then resumable tiered
-                self.fs.write_text(ipath, json.dumps(
-                    {"op": "compact", "pending": pending}))
-
-            self.fs.write_text(ipath, json.dumps(
-                {"op": "compact", "v": 2}))
-            if m["kind"] == "ivf":
-                removed = _sim.compact_ivf_index(
-                    self.spark, apath, id_col=m["id_col"], fs=self.fs,
-                    small_bytes=small_bytes, record=record)
-            else:
-                removed = _sim.compact_pq_index(self.spark, apath,
-                                                fs=self.fs,
-                                                small_bytes=small_bytes,
-                                                record=record)
-            self.fs.delete(ipath)
-            return removed
+            return _sim.compact_pq_index(
+                self.spark, self._ann_path(cube, name), fs=self.fs,
+                small_bytes=small_bytes)
 
     # -- writes -------------------------------------------------------------
 
@@ -1604,14 +1355,13 @@ class Engine:
         ``vacuum`` does it on demand (e.g. after a failed bulk import
         on a rarely-written cube) without advancing the generation.
         Runs under the writer lease; refuses a cube in an older on-disk
-        format (``_resolve``). Also sweeps UNCOMMITTED vector-index
-        directories — a ``_ann_*`` dir without its ``_ann.json`` marker
-        is a crashed BUILD (the build writes its marker last), dead
-        weight no search can ever use. A crashed REFRESH/compaction is
-        NOT swept: its committed marker is still present (plus a
-        ``_refresh.json`` intent) and the next refresh converges the
-        content — sweeping it would turn a recoverable crash into a
-        forced full rebuild. Also sweeps the warehouse ``_scratch``
+        format (``_resolve``). Also sweeps every vector-index directory
+        down to what its ``_ann.json`` root names: a ``_ann_*`` dir
+        without a root is a crashed first BUILD (the build publishes its
+        root last) and goes whole; in a committed index, the fresh
+        directories a crashed build / refresh / compaction wrote but
+        never published go (``similarity._vacuum``). An older-form index
+        keeps its data until rebuilt. Also sweeps the warehouse ``_scratch``
         root — reliable-spill directories a crashed sampling job never
         released — but ONLY entries older than ``scratch_grace``
         seconds (default one hour): the scratch root is session-global,
@@ -1621,6 +1371,8 @@ class Engine:
         never silently wrong — but it shouldn't fail at all). Pass
         ``scratch_grace=0`` to force-sweep everything when you know no
         sampling query is in flight."""
+        from metrique_spark.functions import similarity as _sim
+
         if self.warehouse:
             import time as _time
 
@@ -1637,13 +1389,9 @@ class Engine:
                     self.fs.delete_dir(scratch)
         with self._write_lock(cube):
             path = self._path(cube)
-            if self.fs.isdir(path):
-                for d in self.fs.listdir(path):
-                    if (d.startswith("_ann_")
-                            and self.fs.isdir(self.fs.join(path, d))
-                            and not self.fs.isfile(
-                                self.fs.join(path, d, "_ann.json"))):
-                        self.fs.delete_dir(self.fs.join(path, d))
+            for d in self.fs.listdir(path):
+                if d.startswith("_ann_"):
+                    _sim._vacuum(self.fs, self.fs.join(path, d))
             snap = self._resolve(path)  # refuses an older format
             if snap.root is None:
                 if self.fs.isdir(path):
@@ -3223,7 +2971,7 @@ class Engine:
                 and self._batch_dir_token(d) in merged_all}
         dirs = (live - drop) | set(rels)
         # content is identical post-compact: the auto-refresh diff
-        # is empty and this only bumps auto indexes' marker gens
+        # is empty and this only bumps auto indexes' root gens
         self._auto_refresh_indexes(cube, self._commit(snap, dirs, rels))
         return len(drop - dirs)
 

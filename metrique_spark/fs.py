@@ -154,15 +154,6 @@ class FileSystem:
         """Recursive prefix delete; absent is a no-op."""
         raise NotImplementedError
 
-    def copy(self, src: str, dst: str) -> None:
-        """Byte-copy one object (overwrite an existing destination).
-        Object stores offer this server-side (S3 CopyObject / GCS
-        rewrite); it is deliberately NOT a rename — the interface stays
-        rename-free. Used by the staged-publish half of the tiered
-        IVF-index compaction (copy staged part files into their bucket
-        directories under deterministic names)."""
-        raise NotImplementedError
-
 
 class _LocalBacked(FileSystem):
     """Shared local-disk implementation. Conditional operations are
@@ -287,21 +278,6 @@ class _LocalBacked(FileSystem):
 
         if os.path.isdir(path):
             shutil.rmtree(path, ignore_errors=True)
-
-    def copy(self, src: str, dst: str) -> None:
-        # atomic VISIBILITY, like the object-store copy it models (S3
-        # CopyObject never exposes a half-written object): stage the
-        # bytes under a dot-prefixed temp name (invisible to parquet
-        # discovery and cube listings) and os.replace into place — an
-        # internal implementation detail of this backend, not a rename
-        # in the interface
-        import shutil
-
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        tmp = os.path.join(os.path.dirname(dst),
-                           f".copytmp.{os.getpid()}.{os.path.basename(dst)}")
-        shutil.copyfile(src, tmp)
-        os.replace(tmp, dst)
 
 
 class LocalFS(_LocalBacked):

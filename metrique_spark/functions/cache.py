@@ -33,7 +33,17 @@ def _leaf_scan_bytes(df: DataFrame) -> int:
     relations (file-listing numbers — reliable, no job), or -1 when any
     leaf is unknown. Post-join/aggregate stats are useless for sizing (a
     multiplied estimate of 23 GB was measured for a 2 MB feature frame),
-    but the leaves bound the materialized size of any narrow derivation.
+    so the leaves are the estimate — but they do NOT bound the
+    materialized size of a frame built with ``explode``, which emits
+    many rows per input row. The call sites that wrap such frames:
+    ``dedup.jaccard_pairs`` and ``dedup.minhash_dedup_pairs`` (the
+    ``shingle_table`` frame), ``dedup.minhash_lsh_candidates`` (the
+    ``banded_hashes`` rows, one per document and band) and
+    ``similarity._pairs_within_buckets`` (the multi-probe bucket
+    assignments, one row per probed bucket). There the estimate is low
+    by the expansion factor, so in the small regime a partition can
+    hold many times ``chunkBytes``; the core-count clamp keeps it
+    perf-only.
     Distinct by (node, bytes): plans often scan the SAME relation through
     2–4 join branches, and counting it once per branch would quadruple
     the estimate (a same-sized different relation deduping wrongly only

@@ -741,21 +741,20 @@ def write_ivf_index(
     vec_col: str = "embedding",
     train_iters: int = 0,
 ) -> None:
-    """Materialize the IVF index on storage: bucket assignments written
-    partitioned by ``bucket`` (so probes prune at the partition level)
-    plus the centroid table. Index once, search many — searches never
-    re-assign the corpus."""
-    assigned, centroids = ivf_assign(df, nlist, id_col, vec_col,
-                                     train_iters)
-    (assigned.write.partitionBy("bucket").mode("overwrite")
-     .parquet(path + "/vectors"))
-    centroids.write.mode("overwrite").parquet(path + "/centroids")
+    """Materialize the IVF index on storage: the raw vectors partitioned
+    by ``bucket`` (so probes prune at the partition level) plus the
+    centroid table, committed under one ``_ann.json`` root (see the
+    persisted-index protocol below). Index once, search many — searches
+    never re-assign the corpus."""
+    _write_index(df, path, None, "ivf", id_col, vec_col, nlist=nlist,
+                 train_iters=train_iters)
 
 
 def read_ivf_index(spark, path: str) -> tuple:
     """(assigned, centroids) back from ``write_ivf_index`` output."""
-    return (spark.read.parquet(path + "/vectors"),
-            spark.read.parquet(path + "/centroids"))
+    _, root = _read_root(_default_fs(None), path)
+    return (_frame(spark, path, root), spark.read.parquet(
+        f"{path}/{root['model']['centroid_dir']}"))
 
 
 def append_to_ivf_index(
@@ -766,125 +765,20 @@ def append_to_ivf_index(
 ) -> None:
     """Extend a stored IVF index with a new batch — the ANN analog of the
     appendable MinHash text index: assign the batch against the STORED
-    centroids (frozen, so bucket semantics never shift under readers) and
-    append the slim (id, v, bucket) rows into the bucket-partitioned
-    layout. Cost is O(batch)·nlist centroid scoring + one partitioned
-    append — the existing corpus is never re-read or re-assigned, and
-    ``ivf_topk_indexed`` probes see old and new vectors identically.
-    Centroids drifting from the data distribution degrade recall, not
-    correctness; re-run ``write_ivf_index`` when bucket sizes skew."""
-    spark = batch.sparkSession
-    centroids = spark.read.parquet(path + "/centroids")
-    vecs = batch.select(F.col(id_col).alias("__vid"),
-                        _as_double(vec_col).alias("v"))
-    assigned = (
-        _nearest_buckets(vecs, centroids, "v", 1)
-        .select(F.col("__vid").alias(id_col), "v",
-                F.col("centroid_id").alias("bucket"))
-    )
-    (assigned.write.partitionBy("bucket").mode("append")
-     .parquet(path + "/vectors"))
-
-
-def remove_from_ivf_index(
-    spark,
-    path: str,
-    ids: DataFrame,
-    id_col: str = "vec_id",
-    fs=None,
-) -> None:
-    """Physically remove ids from a stored IVF index at BUCKET
-    granularity: only bucket directories that contain a removed id are
-    rewritten (read → anti-join → dynamic partition overwrite); buckets
-    the removed ids never touched are neither read nor written, and a
-    bucket left empty is deleted outright (dynamic overwrite cannot
-    rewrite a partition it produces zero rows for). Removal-by-rewrite
-    instead of read-side tombstones is deliberate: a tombstone anti-join
-    taxes EVERY future probe while removals are rare — pay the write
-    amplification once, keep the probe path untouched. The affected /
-    remaining bucket collects are bounded by ``nlist``."""
-    fs = _default_fs(fs)
-    vectors = spark.read.parquet(path + "/vectors")
-    rid = ids.select(F.col(ids.columns[0]).alias("__rid")).distinct()
-    affected = [
-        r["bucket"] for r in vectors
-        .join(rid, vectors[id_col] == F.col("__rid"), "left_semi")
-        .select("bucket").distinct().collect()]
-    if not affected:
-        return
-    keep = (vectors.where(F.col("bucket").isin(affected))
-            .join(rid, vectors[id_col] == F.col("__rid"), "left_anti")
-            # materialize BEFORE overwriting the directories it reads
-            .localCheckpoint(eager=True))
-    remaining = {r["bucket"]
-                 for r in keep.select("bucket").distinct().collect()}
-    (keep.write.partitionBy("bucket").mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .parquet(path + "/vectors"))
-    for b in affected:
-        if b not in remaining:
-            d = fs.join(path, "vectors", f"bucket={b}")
-            if fs.isdir(d):
-                fs.delete_dir(d)
-
-
-def remove_from_pq_index(
-    spark,
-    path: str,
-    ids: DataFrame,
-    fs=None,
-) -> None:
-    """Physically remove ids from a stored PQ / SQ8 / IVF-PQ index at
-    partition granularity (``(__gbucket, __abatch)`` for the flat
-    families — the id-hash bucketing bounds a removal to ~1/gbuckets of
-    each hit batch; plain ``__abatch`` on pre-bucketing layouts;
-    ``(cluster, __abatch)`` for IVF-PQ): only partitions containing a
-    removed id are rewritten; partitions left empty are deleted (and a
-    parent directory emptied of batches goes with them). Codes are
-    copied, never re-encoded — the rewrite cost is the slim code
-    payload of the hit partitions. Same removal-by-rewrite rationale as
-    ``remove_from_ivf_index``; the affected-partition collects are
-    bounded by (clusters|gbuckets) × append batches."""
-    fs = _default_fs(fs)
-    codes, meta = read_pq_index(spark, path, fs=fs)
-    id_col = meta["id_col"]
-    if meta.get("kind") == "ivfpq":
-        part_cols = ["cluster", "__abatch"]
-    elif meta.get("gbuckets"):
-        part_cols = ["__gbucket", "__abatch"]
-    else:
-        part_cols = ["__abatch"]
-    rid = ids.select(F.col(ids.columns[0]).alias("__rid")).distinct()
-    hit = (codes.join(rid, codes[id_col] == F.col("__rid"), "left_semi")
-           .select(*part_cols).distinct())
-    affected = [tuple(r[c] for c in part_cols) for r in hit.collect()]
-    if not affected:
-        return
-    aff_df = spark.createDataFrame(
-        affected, hit.schema)  # bounded: clusters x batches rows
-    keep = (codes.join(aff_df, part_cols, "left_semi")
-            .join(rid, codes[id_col] == F.col("__rid"), "left_anti")
-            .localCheckpoint(eager=True))
-    remaining = {tuple(r[c] for c in part_cols)
-                 for r in keep.select(*part_cols).distinct().collect()}
-    (keep.write.partitionBy(*part_cols).mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .parquet(path + "/codes"))
-    for t in affected:
-        if t in remaining:
-            continue
-        d = fs.join(path, "codes",
-                    *[f"{c}={v}" for c, v in zip(part_cols, t)])
-        if fs.isdir(d):
-            fs.delete_dir(d)
-    if len(part_cols) == 2:
-        # drop parent dirs (cluster=X / __gbucket=X) emptied of every
-        # batch (a file-less dir is harmless to the reader but lies to
-        # anyone listing the layout)
-        for c in {t[0] for t in affected}:
-            cd = fs.join(path, "codes", f"{part_cols[0]}={c}")
-            if fs.isdir(cd) and not fs.listdir(cd):
-                fs.delete_dir(cd)
+    centroids (frozen, so bucket semantics never shift under readers)
+    and commit its slim (id, v, bucket) rows as one new batch, through
+    the one append path every kind shares (``append_to_pq_index``;
+    ``id_col`` names the batch's id column). Cost is O(batch)·nlist
+    centroid scoring — the existing corpus is never re-read or
+    re-assigned, and ``ivf_topk_indexed`` probes see old and new
+    vectors identically. Centroids drifting from the data distribution
+    degrade recall, not correctness; re-run ``write_ivf_index`` when
+    bucket sizes skew."""
+    fs = _default_fs(None)
+    raw, root = _read_root(fs, path)
+    _publish(fs, path, raw, _stage_append(
+        batch.withColumnRenamed(id_col, root["id_col"]), path, root,
+        vec_col))
 
 
 def ivf_topk_indexed(
@@ -1538,7 +1432,7 @@ def _probe_lists_lit(
 ) -> DataFrame:
     """``_probe_lists`` from a driver-side ``[(cid, vec), ...]`` list —
     the storage-backed path hands centroids straight from the index
-    sidecar without a DataFrame round-trip."""
+    root without a DataFrame round-trip."""
     cent_lit = F.array(*[
         F.struct(F.lit(cid).alias("cid"),
                  F.expr("array({})".format(",".join(
@@ -1733,24 +1627,32 @@ def ivfpq_topk_codes(
             .where(F.col("__rk") <= topk).drop("__rk"))
 
 
-# --- persisted PQ / IVF-PQ indexes: train + encode ONCE, search many.
-# At scale, encoding is the dominant cost (m argmin folds per vector over
-# the whole corpus) — recomputing it per query batch is what makes the
-# in-plan pq_topk/ivfpq_topk a demo path. The stored layout keeps the
-# codebooks (m·k·sub_len doubles — driver-resident by the PQ contract)
-# in a JSON sidecar and the corpus codes in parquet; IVF-PQ additionally
-# partitions the codes by coarse cluster so a probe's equi-join prunes
-# at the directory level. Commit protocol: on REBUILD the old sidecar is
-# deleted FIRST (readers fail loud on the missing marker instead of
-# scoring new codes with stale codebooks), the codes are written, and
-# the new sidecar is written LAST — its presence is the commit point,
-# so a crashed write is re-run, never half-read. Appends land in
-# content-token-keyed ``__abatch`` partitions (dynamic overwrite), so a
-# retried or duplicated append of the same batch converges to one copy
-# instead of doubling rows that would then occupy two top-k slots.
+# --- persisted ANN indexes (IVF / PQ / IVF-PQ / SQ8): train + encode
+# ONCE, search many. At scale, encoding is the dominant cost (m argmin
+# folds per vector over the whole corpus) — recomputing it per query
+# batch is what makes the in-plan pq_topk/ivfpq_topk a demo path.
+#
+# Commit protocol (the cube's): an index directory holds ONE root,
+# ``_ann.json``, naming the kind, the frozen model (PQ codebooks, IVF-PQ
+# coarse centroids and SQ8 params inline — driver-resident by the PQ
+# contract; the IVF centroid table as a directory) and the live
+# GRANULES: leaf partitions ``<table>/<parent>=<v>/__abatch=<token>.<wid>``
+# of the ``vectors`` (IVF) or ``codes`` table, whose parent column —
+# IVF bucket, IVF-PQ cluster, or the id-hash ``__gbucket`` of the flat
+# families — lets probes and removals prune at the directory level.
+# Every write (build, append, remove, compact) lands in FRESH leaves
+# (``wid`` is new per write) that no root names; ``_publish`` then swaps
+# the root by CAS and deletes exactly the directories the old root named
+# and the new one does not. A crash at any step leaves the last
+# committed root and everything it names intact: readers read only the
+# named leaves, and unnamed leftovers are dead weight ``Engine.vacuum``
+# sweeps. ``<token>`` is a granule's BATCH: ``base`` for the build, a
+# content token per append (a retried or duplicated append of the same
+# id set replaces its earlier copy instead of doubling rows that would
+# occupy two top-k slots), ``c<wid>`` per compaction output; a removal
+# rewrites each hit leaf under its own token, so removals add no batch.
 
-_PQ_SIDECAR = "_pq.json"
-_PQ_FORMAT = 1
+_ROOT = "_ann.json"
 
 
 def _default_fs(fs):
@@ -1759,13 +1661,6 @@ def _default_fs(fs):
     from metrique_spark.fs import LocalFS
 
     return LocalFS()
-
-
-def _invalidate_index(fs, path: str) -> None:
-    """Rebuild prologue: drop the commit marker before touching codes."""
-    side = fs.join(path, _PQ_SIDECAR)
-    if fs.isfile(side):
-        fs.delete(side)
 
 
 def _vh(vec_col: str) -> Column:
@@ -1780,10 +1675,10 @@ def _vh(vec_col: str) -> Column:
 
 def _gbucket(id_col: str, gbuckets: int) -> Column:
     """Removal-granularity partition key for the FLAT code layouts
-    (pq/sq8): an id-hash bucket sub-partitioning each ``__abatch``
-    directory, so removing ids rewrites only the hit buckets instead of
-    the whole base partition (IVF-PQ already gets this from its cluster
-    partitioning). Hash on the stringified id for type stability."""
+    (pq/sq8): an id-hash bucket sub-partitioning each batch, so removing
+    ids rewrites only the hit buckets instead of the whole batch (IVF
+    and IVF-PQ get this from their bucket/cluster partitioning). Hash on
+    the stringified id for type stability."""
     return F.pmod(F.xxhash64(F.col(id_col).cast("string")),
                   F.lit(gbuckets)).cast("int")
 
@@ -1799,6 +1694,417 @@ def _abatch_token(df: DataFrame, id_col: str) -> str:
     return f"b{r['n']}x{r['s']}"
 
 
+def _root_text(fs, path: str) -> str | None:
+    """One GET of an index root; None when absent."""
+    try:
+        return fs.read_text(fs.join(path, _ROOT))
+    except FileNotFoundError:
+        return None
+
+
+def _parse_root(path: str, raw: str) -> dict:
+    """A root in the current on-disk form. A root naming no granules was
+    written before indexes committed by root (its data lives in
+    directories it does not name): refuse with the rebuild instruction
+    and leave that data in place."""
+    import json
+
+    root = json.loads(raw)
+    if "granules" not in root:
+        raise ValueError(
+            f"ANN index at {path!r} is in an older on-disk form (its "
+            f"{_ROOT} names no granules) — rebuild it (build_vector_index "
+            "or the family's write_*_index); its data is left in place")
+    return root
+
+
+def _read_root(fs, path: str) -> tuple[str, dict]:
+    """(text, root) of the committed index at ``path`` — one GET. Fails
+    loud when there is none: codes without their model are meaningless,
+    and silently retraining would score against the wrong codewords."""
+    raw = _root_text(fs, path)
+    if raw is None:
+        raise ValueError(
+            f"no ANN index at {path!r} ({_ROOT} missing — uncommitted, "
+            "not an index, or an older on-disk form: rebuild it)")
+    return raw, _parse_root(path, raw)
+
+
+def _meta(root: dict) -> dict:
+    """The flat view ``read_pq_index`` returns: kind, id column, model."""
+    return {"kind": root["kind"], "id_col": root["id_col"], **root["model"]}
+
+
+def _parts(root: dict) -> list[str]:
+    """Partition columns of the index table, outermost first."""
+    parent = {"ivf": "bucket", "ivfpq": "cluster"}.get(root["kind"],
+                                                       "__gbucket")
+    return [parent, "__abatch"]
+
+
+def _table(root: dict) -> str:
+    return "vectors" if root["kind"] == "ivf" else "codes"
+
+
+def _leaf(root: dict, row) -> str:
+    """Granule relpath of a row carrying the partition columns."""
+    return "/".join([_table(root)]
+                    + [f"{c}={row[c]}" for c in _parts(root)])
+
+
+def _token(leaf: str) -> str:
+    """The batch token of a granule relpath."""
+    return leaf.rsplit("__abatch=", 1)[1].rsplit(".", 1)[0]
+
+
+def _batch_count(root: dict) -> int:
+    """Append batches of an index — 1 when fully compacted, so the
+    auto-compaction trigger converges instead of re-firing."""
+    return len({_token(g) for g in root["granules"]})
+
+
+def _named(root: dict) -> set[str]:
+    """Directories a root names, relative to the index directory."""
+    out = set(root.get("granules", ()))
+    cdir = root.get("model", {}).get("centroid_dir")
+    return out | {cdir} if cdir else out
+
+
+def _frame(spark, path: str, root: dict, leaves=None) -> DataFrame:
+    """Rows of the named granules (default: all) under the root's
+    recorded schema — partition columns come from the leaf paths
+    (``basePath``), no footer is sampled, and an empty granule set
+    reads as zero rows."""
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromJson(root["schema"])
+    leaves = sorted(root["granules"] if leaves is None else leaves)
+    if not leaves:
+        return spark.createDataFrame([], schema)
+    return (spark.read.option("basePath", f"{path}/{_table(root)}")
+            .schema(schema).parquet(*[f"{path}/{g}" for g in leaves]))
+
+
+def _centroid_rows(spark, path: str, root: dict) -> list:
+    """The frozen coarse centroids as a sorted ``[(cid, vec)]`` list."""
+    if root["kind"] == "ivfpq":
+        return [(c[0], list(c[1])) for c in root["model"]["centroids"]]
+    return sorted((r["centroid_id"], list(r["cvec"])) for r in spark.read
+                  .parquet(f"{path}/{root['model']['centroid_dir']}")
+                  .collect())
+
+
+def _new_wid() -> str:
+    import uuid
+
+    return uuid.uuid4().hex[:12]
+
+
+def _write_granules(df: DataFrame, path: str, root: dict) -> list[str]:
+    """Write ``df`` — each row's batch token in its ``__abatch`` column
+    — into fresh leaves and return their relpaths. This write's own
+    ``wid`` suffixes every leaf name, so the append-mode write only ever
+    creates directories: never one a root names, nor one a crashed
+    attempt left behind (and no ``_SUCCESS`` marker above them)."""
+    parts = _parts(root)
+    df = (df.withColumn("__abatch",
+                        F.concat(F.col("__abatch"), F.lit("." + _new_wid())))
+          .localCheckpoint(eager=True))
+    leaves = sorted(_leaf(root, r)
+                    for r in df.select(*parts).distinct().collect())
+    if leaves:
+        (df.write.partitionBy(*parts).mode("append")
+         .option("mapreduce.fileoutputcommitter.marksuccessfuljobs",
+                 "false")
+         .parquet(f"{path}/{_table(root)}"))
+    return leaves
+
+
+def _publish(fs, path: str, old_raw: str | None, root: dict) -> None:
+    """THE commit point of every index write: swap the root by CAS
+    (put-if-absent when there was none, replace-if-match against the
+    text the writer read), then delete the directories the old root
+    named and the new one does not — both known, so no listing — and
+    prune the parent shells they empty. Directories a crashed writer
+    stranded are ``Engine.vacuum``'s."""
+    import json
+
+    from metrique_spark.engine import ConcurrentWriteError
+
+    new = json.dumps(root)
+    p = fs.join(path, _ROOT)
+    if not (fs.put_if_absent(p, new) if old_raw is None
+            else fs.replace_if_match(p, new, old_raw)):
+        raise ConcurrentWriteError(
+            f"ANN index root at {path!r} changed under this writer — "
+            "concurrent writer detected, commit aborted")
+    dropped = _named(json.loads(old_raw)) - _named(root) if old_raw else ()
+    for d in sorted(dropped, reverse=True):
+        fs.delete_dir(fs.join(path, d))
+        parts = d.split("/")
+        for i in range(len(parts) - 1, 0, -1):
+            parent = fs.join(path, *parts[:i])
+            if fs.listdir(parent):
+                break
+            fs.delete_dir(parent)
+
+
+def _vacuum(fs, path: str) -> None:
+    """Listing sweep of one index directory: a directory without a root
+    is a crashed first build and goes whole; otherwise every entry the
+    root does not name goes (crashed writers' fresh leaves and Spark
+    ``_temporary`` dirs). An older-form index keeps its data until
+    rebuilt."""
+    raw = _root_text(fs, path)
+    if raw is None:
+        fs.delete_dir(path)
+        return
+    try:
+        named = _named(_parse_root(path, raw)) | {_ROOT}
+    except ValueError:
+        return
+    above = {d.rsplit("/", i)[0] for d in named
+             for i in range(1, d.count("/") + 1)}
+
+    def walk(rel: str) -> None:
+        for d in fs.listdir(fs.join(path, rel) if rel else path):
+            r = f"{rel}/{d}" if rel else d
+            full = fs.join(path, r)
+            if r in above:
+                walk(r)
+            elif r not in named and not d.startswith("."):
+                (fs.delete_dir if fs.isdir(full) else fs.delete)(full)
+
+    walk("")
+
+
+def _train_ivf(df, path, id_col, vec_col, nlist=16, train_iters=0):
+    _, cents = ivf_assign(df, nlist, id_col, vec_col, train_iters)
+    cdir = f"centroids-{_new_wid()}"
+    cents.write.parquet(f"{path}/{cdir}")
+    return {"centroid_dir": cdir}
+
+
+def _train_pq(df, path, id_col, vec_col, m=8, k=16, iters=1,
+              gbuckets=16):
+    books = pq_train(df, m=m, k=k, iters=iters, id_col=id_col,
+                     vec_col=vec_col)
+    return {"m": m, "k": k, "iters": iters, "sub_len": len(books[0][0]),
+            "books": books, "gbuckets": gbuckets}
+
+
+def _train_ivfpq(df, path, id_col, vec_col, nlist=8, m=16, k=16,
+                 coarse_iters=1, pq_iters=1, sim_decimals=6):
+    cents = kmeans_fit(df, k=nlist, iters=coarse_iters, id_col=id_col,
+                       vec_col=vec_col, sim_decimals=sim_decimals)
+    books = pq_train(df, m=m, k=k, iters=pq_iters, id_col=id_col,
+                     vec_col=vec_col)
+    return {"m": m, "k": k, "iters": pq_iters, "nlist": nlist,
+            "coarse_iters": coarse_iters, "sim_decimals": sim_decimals,
+            "sub_len": len(books[0][0]), "books": books,
+            "centroids": [[cid, vec] for cid, vec in
+                          getattr(cents, _KMEANS_CENTS_ATTR)]}
+
+
+def _train_sq8(df, path, id_col, vec_col, gbuckets=16):
+    return {"params": [[mn, mx] for mn, mx in sq8_train(df, vec_col)],
+            "gbuckets": gbuckets}
+
+
+_TRAIN = {"ivf": _train_ivf, "pq": _train_pq, "ivfpq": _train_ivfpq,
+          "sq8": _train_sq8}
+
+
+def _encode(batch: DataFrame, path: str, root: dict,
+            vec_col: str) -> DataFrame:
+    """``batch`` in the index's row form, against the root's FROZEN
+    model: IVF rows carry the raw vector and its bucket; the PQ
+    families carry the codes, the vector fingerprint (``__vh``) and the
+    cluster / ``__gbucket`` parent. Build and append both encode here,
+    so an appended row is exactly what a rebuild under the same model
+    would store."""
+    id_col, kind, model = root["id_col"], root["kind"], root["model"]
+    vecs = batch.select(F.col(id_col).alias("__vid"),
+                        _as_double(vec_col).alias("v"))
+    if kind == "ivf":
+        cents = batch.sparkSession.read.parquet(
+            f"{path}/{model['centroid_dir']}")
+        return (_nearest_buckets(vecs, cents, "v", 1)
+                .select(F.col("__vid").alias(id_col), "v",
+                        F.col("centroid_id").alias("bucket")))
+    if kind == "sq8":
+        rows = sq8_encode(batch, [tuple(p) for p in model["params"]],
+                          id_col=id_col, vec_col=vec_col)
+    else:
+        rows = pq_encode(batch, model["books"], id_col=id_col,
+                         vec_col=vec_col)
+    rows = rows.join(
+        batch.select(F.col(id_col), _vh(vec_col).alias("__vh")), id_col)
+    if kind == "ivfpq":
+        cl = _assign_lit(vecs, _centroid_rows(None, path, root),
+                         model["sim_decimals"])
+        return rows.join(cl.select(F.col("__vid").alias(id_col),
+                                   "cluster"), id_col)
+    return rows.withColumn("__gbucket", _gbucket(id_col, model["gbuckets"]))
+
+
+def _stage_build(df: DataFrame, path: str, kind: str, id_col: str,
+                 vec_col: str, **params) -> dict:
+    """Train the family's model on ``df`` and write the encoded corpus
+    as the ``base`` batch — fresh directories only. Returns the new
+    root for ``_publish``; ``params`` are the family's knobs
+    (nlist/m/k/iters/...)."""
+    from pyspark.sql.types import StructType
+
+    root = {"kind": kind, "id_col": id_col,
+            "model": _TRAIN[kind](df, path, id_col, vec_col, **params)}
+    rows = _encode(df, path, root, vec_col).withColumn("__abatch",
+                                                       F.lit("base"))
+    parts = _parts(root)
+    root["schema"] = StructType(
+        [f for f in rows.schema.fields if f.name not in parts]
+        + [rows.schema[c] for c in parts]).jsonValue()
+    root["granules"] = _write_granules(rows, path, root)
+    return root
+
+
+def _write_index(df: DataFrame, path: str, fs, kind: str, id_col: str,
+                 vec_col: str, **params) -> dict:
+    """Build-and-publish behind the standalone ``write_*_index``
+    writers: a rebuild over a committed index swaps the root, so
+    readers see the old index or the new one, never neither."""
+    fs = _default_fs(fs)
+    old = _root_text(fs, path)
+    root = _stage_build(df, path, kind, id_col, vec_col, **params)
+    _publish(fs, path, old, root)
+    return root
+
+
+def _stage_append(batch: DataFrame, path: str, root: dict,
+                  vec_col: str) -> dict:
+    """Root with ``batch`` encoded against the frozen model and written
+    as one fresh batch, replacing any batch of the same content token.
+    Cost is O(batch) encoding — the existing corpus is never re-read or
+    re-encoded."""
+    if root["kind"] != "ivf":
+        model = root["model"]
+        dim = (len(model["params"]) if root["kind"] == "sq8"
+               else len(model["books"]) * model["sub_len"])
+        first = batch.select(_as_double(vec_col).alias("v")).first()
+        if first is not None and len(first["v"]) != dim:
+            raise ValueError(
+                f"append: batch vectors have dim {len(first['v'])}, "
+                f"index was trained at dim {dim}")
+    token = _abatch_token(batch, root["id_col"])
+    leaves = _write_granules(
+        _encode(batch, path, root, vec_col).withColumn("__abatch",
+                                                       F.lit(token)),
+        path, root)
+    return {**root, "granules": sorted(
+        [g for g in root["granules"] if _token(g) != token] + leaves)}
+
+
+def _stage_remove(spark, path: str, root: dict, ids: DataFrame) -> dict:
+    """Root with ``ids`` (first column) removed: each granule holding
+    one is rewritten without it into a fresh leaf under its own batch
+    token — codes copied, never re-encoded — and a granule left empty
+    drops out. Granules the ids never touched are neither read nor
+    written. Removal-by-rewrite instead of read-side tombstones is
+    deliberate: a tombstone anti-join taxes EVERY future probe while
+    removals are rare — pay the write amplification once, keep the
+    probe path untouched."""
+    id_col = root["id_col"]
+    rid = ids.select(F.col(ids.columns[0]).alias("__rid")).distinct()
+    rows = _frame(spark, path, root)
+    hit = {_leaf(root, r) for r in
+           rows.join(rid, rows[id_col] == F.col("__rid"), "left_semi")
+           .select(*_parts(root)).distinct().collect()}
+    if not hit:
+        return root
+    src = _frame(spark, path, root, hit)
+    keep = (src.join(rid, src[id_col] == F.col("__rid"), "left_anti")
+            .withColumn("__abatch", F.substring_index("__abatch", ".", 1)))
+    return {**root, "granules": sorted(
+        set(root["granules"]) - hit
+        | set(_write_granules(keep, path, root)))}
+
+
+def _stage_compact(spark, fs, path: str, root: dict,
+                   small_bytes: int | None) -> tuple[dict, int]:
+    """(root, granules merged away) after consolidating batches: each
+    merge group is rewritten as ONE fresh batch per parent directory
+    (ids deduplicated within the group, codes copied, never re-encoded).
+    ``small_bytes`` makes the pass SIZE-TIERED (``tier_groups`` over the
+    batches' bytes): larger levels stay untouched on disk, so routine
+    compaction costs O(recent appends), never O(|index|);
+    ``small_bytes=None`` merges every batch — the FULL consolidation."""
+    from metrique_spark.compaction import tier_groups
+
+    by_tok: dict[str, list[str]] = {}
+    for g in root["granules"]:
+        by_tok.setdefault(_token(g), []).append(g)
+    if small_bytes is None:
+        groups = [set(by_tok)] if len(by_tok) > 1 else []
+    else:
+        groups = tier_groups(
+            {t: sum(fs.du(fs.join(path, g)) for g in gs)
+             for t, gs in by_tok.items()}, small_bytes)
+    granules, removed = set(root["granules"]), 0
+    for merge in groups:
+        leaves = [g for t in sorted(merge) for g in by_tok[t]]
+        merged = (_frame(spark, path, root, leaves)
+                  .dropDuplicates([root["id_col"]])
+                  .repartition(_parts(root)[0])
+                  .withColumn("__abatch", F.lit("c" + _new_wid())))
+        granules = (granules - set(leaves)
+                    | set(_write_granules(merged, path, root)))
+        removed += len(leaves)
+    return {**root, "granules": sorted(granules)}, removed
+
+
+def _index_drift(frame: DataFrame, path: str, root: dict,
+                 vec_col: str) -> tuple[str, float | None]:
+    """``drift_stat`` of ``frame`` against the root's frozen model."""
+    kind, model = root["kind"], root["model"]
+    if kind in ("ivf", "ivfpq"):
+        return drift_stat(frame, kind, vec_col,
+                          centroids=_centroid_rows(frame.sparkSession,
+                                                   path, root),
+                          decimals=model.get("sim_decimals", 6))
+    if kind == "sq8":
+        return drift_stat(frame, "sq8", vec_col,
+                          params=[tuple(p) for p in model["params"]])
+    return drift_stat(frame, "pq", vec_col, books=model["books"])
+
+
+def _topk(spark, path: str, root: dict, queries: DataFrame, k: int,
+          nprobe: int | None, vec_col: str, score_decimals: int = 4,
+          max_query_rows: int | None = 10_000) -> DataFrame:
+    """Top-k over the granules ONE root names, dispatched on its kind."""
+    kind, meta = root["kind"], _meta(root)
+    rows = _frame(spark, path, root)
+    if kind == "ivf":
+        return ivf_topk_indexed(
+            rows, spark.read.parquet(f"{path}/{meta['centroid_dir']}"),
+            queries, k=k, nprobe=4 if nprobe is None else nprobe,
+            id_col=meta["id_col"], vec_col=vec_col)
+    if kind == "pq":
+        return pq_topk_codes(rows, meta["books"], queries, k=k,
+                             id_col=meta["id_col"], vec_col=vec_col,
+                             score_decimals=score_decimals)
+    if kind == "ivfpq":
+        return ivfpq_topk_codes(
+            rows, _centroid_rows(spark, path, root), meta["books"],
+            queries, nprobe=2 if nprobe is None else nprobe, topk=k,
+            id_col=meta["id_col"], vec_col=vec_col,
+            score_decimals=score_decimals,
+            sim_decimals=meta["sim_decimals"], static_prune=True)
+    return sq8_topk_codes(rows, [tuple(p) for p in meta["params"]],
+                          queries, k=k, id_col=meta["id_col"],
+                          vec_col=vec_col, score_decimals=score_decimals,
+                          max_query_rows=max_query_rows)
+
+
 def write_pq_index(
     df: DataFrame,
     path: str,
@@ -1811,72 +2117,28 @@ def write_pq_index(
     gbuckets: int = 16,
 ) -> list:
     """Train PQ codebooks on ``df`` and persist the index: codes to
-    ``path/codes`` (parquet), codebooks + params to the ``_pq.json``
-    sidecar. Returns the trained codebooks. Flat-PQ search reads every
+    ``path/codes`` (parquet), codebooks + params in the ``_ann.json``
+    root. Returns the trained codebooks. Flat-PQ search reads every
     code (compression, not pruning) — for a pruned stored layout use
     ``write_ivfpq_index``.
 
     A per-row vector fingerprint (``__vh``, see ``_vh``) is stored
     alongside the codes, enabling retention-free incremental refresh;
-    search paths ignore the column. ``gbuckets``
-    sub-partitions each batch directory by id hash (see ``_gbucket``)
-    so removals rewrite only hit buckets — ~1/gbuckets of the codes
-    per removed-id bucket instead of the whole base partition."""
-    import json
-
-    fs = _default_fs(fs)
-    _invalidate_index(fs, path)
-    books = pq_train(df, m=m, k=k, iters=iters, id_col=id_col,
-                     vec_col=vec_col)
-    codes = pq_encode(df, books, id_col=id_col, vec_col=vec_col)
-    codes = codes.join(
-        df.select(F.col(id_col), _vh(vec_col).alias("__vh")), id_col)
-    (codes.withColumn("__gbucket", _gbucket(id_col, gbuckets))
-     .withColumn("__abatch", F.lit("base"))
-     .write.partitionBy("__gbucket", "__abatch").mode("overwrite")
-     .parquet(path + "/codes"))
-    meta = {"format": _PQ_FORMAT, "kind": "pq", "m": m, "k": k,
-            "iters": iters, "id_col": id_col,
-            "sub_len": len(books[0][0]), "books": books,
-            "vh": True, "gbuckets": gbuckets}
-    fs.write_text(fs.join(path, _PQ_SIDECAR), json.dumps(meta))
-    return books
-
-
-def _read_pq_meta(fs, path: str) -> dict:
-    """The committed ``_pq.json`` sidecar of a PQ / IVF-PQ / SQ8 index.
-    Fails loud on a missing or mismatched sidecar — codes without their
-    codebooks are meaningless, and silently retraining would score
-    against the wrong codewords — and on a sidecar without vector
-    fingerprints (``vh``): incremental refresh diffs against them, so
-    that older layout must be rebuilt."""
-    import json
-
-    side = fs.join(path, _PQ_SIDECAR)
-    if not fs.isfile(side):
-        raise ValueError(
-            f"no PQ index at {path!r} ({_PQ_SIDECAR} missing — "
-            "uncommitted or not a PQ index)")
-    meta = json.loads(fs.read_text(side))
-    needs = "params" if meta.get("kind") == "sq8" else "books"
-    if meta.get("format") != _PQ_FORMAT or needs not in meta:
-        raise ValueError(
-            f"PQ index sidecar at {path!r} has format "
-            f"{meta.get('format')!r}, reader supports {_PQ_FORMAT}")
-    if not meta.get("vh"):
-        raise ValueError(
-            f"PQ index at {path!r} has no vector fingerprints (an older "
-            "layout) — rebuild it")
-    return meta
+    search paths ignore the column. ``gbuckets`` sub-partitions each
+    batch by id hash (see ``_gbucket``) so removals rewrite only hit
+    buckets — ~1/gbuckets of the codes per removed-id bucket."""
+    return _write_index(df, path, fs, "pq", id_col, vec_col, m=m, k=k,
+                        iters=iters, gbuckets=gbuckets)["model"]["books"]
 
 
 def read_pq_index(spark, path: str, fs=None) -> tuple[DataFrame, dict]:
-    """(codes, meta) back from ``write_pq_index``/``write_ivfpq_index``
-    output; ``meta`` carries the codebooks (JSON floats round-trip
-    doubles exactly) and, for IVF-PQ, the coarse centroids (see
-    ``_read_pq_meta`` for the sidecar checks)."""
-    meta = _read_pq_meta(_default_fs(fs), path)
-    return spark.read.parquet(path + "/codes"), meta
+    """(codes, meta) back from ``write_pq_index``/``write_ivfpq_index``/
+    ``write_sq8_index`` output: the granules the root names, and the
+    flat model view (kind, id column, codebooks — JSON floats
+    round-trip doubles exactly — and, for IVF-PQ, the coarse centroids;
+    for SQ8 the params). Fails loud on a missing or older-form root."""
+    _, root = _read_root(_default_fs(fs), path)
+    return _frame(spark, path, root), _meta(root)
 
 
 def append_to_pq_index(
@@ -1885,401 +2147,51 @@ def append_to_pq_index(
     vec_col: str = "embedding",
     fs=None,
 ) -> None:
-    """Extend a stored PQ / IVF-PQ / SQ8 index with a new batch: encode
-    against the STORED parameters (frozen — code semantics never shift
-    under readers) and land the slim (id, codes[, cluster]) rows in a
-    content-token-keyed ``__abatch`` partition. Idempotent: a retried
-    or duplicated append of the same batch dynamically OVERWRITES its
-    own token directory instead of doubling rows (duplicate ids would
-    otherwise occupy two top-k slots). Cost is O(batch) argmin folds —
-    the existing corpus is never re-read or re-encoded. Parameters
-    drifting from the data distribution degrade recall, not
-    correctness; re-run the writer when they do."""
+    """Extend a stored index of any kind with a new batch: encode
+    against the STORED model (frozen — code semantics never shift under
+    readers) and commit it as one new batch. Idempotent: a retried or
+    duplicated append of the same id set REPLACES its earlier copy
+    instead of doubling rows (duplicate ids would otherwise occupy two
+    top-k slots). Cost is O(batch) — the existing corpus is never
+    re-read or re-encoded. A model drifting from the data distribution
+    degrades recall, not correctness; re-run the writer when it does."""
     fs = _default_fs(fs)
-    meta = _read_pq_meta(fs, path)
-    id_col = meta["id_col"]
-    kind = meta.get("kind")
-    if kind == "sq8":
-        params = [(p[0], p[1]) for p in meta["params"]]
-        dim = len(params)
-    else:
-        books = meta["books"]
-        dim = len(books) * meta["sub_len"]
-    first = batch.select(_as_double(vec_col).alias("v")).first()
-    if first is not None and len(first["v"]) != dim:
-        raise ValueError(
-            f"append_to_pq_index: batch vectors have dim "
-            f"{len(first['v'])}, index was trained at dim {dim}")
-    if kind == "sq8":
-        codes = sq8_encode(batch, params, id_col=id_col, vec_col=vec_col)
-    else:
-        codes = pq_encode(batch, books, id_col=id_col, vec_col=vec_col)
-    codes = codes.join(
-        batch.select(F.col(id_col), _vh(vec_col).alias("__vh")), id_col)
-    token = _abatch_token(batch, id_col)
-    out = codes.withColumn("__abatch", F.lit(token))
-    part_cols = ["__abatch"]
-    if kind == "ivfpq":
-        cent_rows = [(c[0], c[1]) for c in meta["centroids"]]
-        vecs = batch.select(F.col(id_col).alias("__vid"),
-                            _as_double(vec_col).alias("v"))
-        assigned = _assign_lit(vecs, sorted(cent_rows),
-                               meta["sim_decimals"]).select(
-            F.col("__vid").alias(id_col), "cluster")
-        out = out.join(assigned, id_col)
-        part_cols = ["cluster", "__abatch"]
-    elif meta.get("gbuckets"):
-        # match the stored flat layout's removal-granularity bucketing
-        out = out.withColumn("__gbucket",
-                             _gbucket(id_col, meta["gbuckets"]))
-        part_cols = ["__gbucket", "__abatch"]
-    (out.write.partitionBy(*part_cols).mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .parquet(path + "/codes"))
+    raw, root = _read_root(fs, path)
+    _publish(fs, path, raw, _stage_append(batch, path, root, vec_col))
 
 
-def _pq_part_cols(meta: dict) -> list[str]:
-    if meta.get("kind") == "ivfpq":
-        return ["cluster", "__abatch"]
-    if meta.get("gbuckets"):
-        return ["__gbucket", "__abatch"]
-    return ["__abatch"]
-
-
-def _pq_token_dirs(fs, croot: str,
-                   part_cols: list[str]) -> tuple[dict, dict]:
-    """(token -> total bytes, token -> [dirs]) for a PQ-family codes
-    root — the batch-granule census both the tiered pass and the
-    crash-resume path classify from."""
-    if len(part_cols) == 2:
-        parents = [fs.join(croot, d) for d in fs.listdir(croot)
-                   if d.startswith(f"{part_cols[0]}=")]
-    else:
-        parents = [croot]
-    tok_bytes: dict[str, int] = {}
-    tok_dirs: dict[str, list[str]] = {}
-    for parent in parents:
-        for d in fs.listdir(parent):
-            full = fs.join(parent, d)
-            if d.startswith("__abatch=") and fs.isdir(full):
-                t = d[len("__abatch="):]
-                tok_bytes[t] = tok_bytes.get(t, 0) + fs.du(full)
-                tok_dirs.setdefault(t, []).append(full)
-    return tok_bytes, tok_dirs
-
-
-def resume_pq_compaction(spark, path: str, pending: dict,
-                         fs=None) -> int:
-    """Complete the ONE merge group a crashed tiered/full
-    ``compact_pq_index`` pass recorded in its compaction intent
-    (``pending = {"group": [tokens], "out": consolidated token}``) —
-    the tiered self-heal that closes the cross-level duplicate-id
-    window WITHOUT a full rewrite: only the recorded group is touched,
-    every other level stays byte-identical on disk.
-
-    Convergence argument: originals are deleted strictly AFTER the
-    consolidated directory is completely written (verified here by row
-    count against the ``n{rows}x{sum}`` census the token itself
-    encodes), so either (a) the consolidated content is complete →
-    just delete the group's surviving original directories, or (b) it
-    is absent/torn → every original is still present, and re-merging
-    them (plus any partial consolidated rows — deduplicated by id)
-    deterministically rebuilds the same consolidated directory, after
-    which the originals are deleted. A group whose originals are all
-    gone already completed. Returns directories removed."""
-    import json as _json
-
+def remove_from_pq_index(
+    spark,
+    path: str,
+    ids: DataFrame,
+    fs=None,
+) -> None:
+    """Physically remove ids (``ids``' first column) from a stored index
+    of any kind at granule granularity — only the ``(parent, batch)``
+    leaves holding a removed id are rewritten (see ``_stage_remove``);
+    the affected-leaf collect is bounded by parents × batches."""
     fs = _default_fs(fs)
-    croot = fs.join(path, "codes")
-    meta = _json.loads(fs.read_text(fs.join(path, _PQ_SIDECAR)))
-    id_col = meta["id_col"]
-    part_cols = _pq_part_cols(meta)
-    _, tok_dirs = _pq_token_dirs(fs, croot, part_cols)
-    out_tok = pending["out"]
-    present = [t for t in pending["group"]
-               if t in tok_dirs and t != out_tok]
-    if not present:
-        return 0  # group fully completed before the crash
-    want = int(out_tok[4:].split("x", 1)[0])  # "cmp" + "n{rows}x{sum}"
-    have = (spark.read.option("basePath", croot)
-            .parquet(*tok_dirs[out_tok]).count()
-            if out_tok in tok_dirs else 0)
-    if have != want:
-        in_group = out_tok in pending["group"]
-        src = [d for t in present for d in tok_dirs[t]]
-        if in_group:
-            # the recorded out token IS one of the group's own levels
-            # (the merged content's census matched an existing cmp
-            # level — every merged id already lives there): its
-            # surviving dirs are ORIGINAL data, not torn output, so
-            # rebuild from all surviving group dirs INCLUDING them and
-            # write BEFORE any delete (the originals stay on disk);
-            # torn orphan dirs are pruned against the rewrite's own
-            # partition set afterwards. Post-fix writers never record
-            # an out token inside its own group (compact_pq_index
-            # suffixes colliding tokens), so this escalation only runs
-            # for intents a pre-fix writer recorded.
-            src += tok_dirs.get(out_tok, [])
-        else:
-            # drop any TORN consolidated dirs before rebuilding: the
-            # rebuild's dynamic overwrite only replaces partitions
-            # present in ITS output, and a torn
-            # cluster=X/__abatch=<out> dir whose rows the re-dedup
-            # assigns to a different cluster this time would otherwise
-            # survive as a permanent duplicate. Safe: the
-            # write-then-delete order guarantees every original is
-            # still present while the consolidated content is
-            # incomplete.
-            for full in tok_dirs.get(out_tok, []):
-                if fs.isdir(full):
-                    fs.delete_dir(full)
-        sub = (spark.read.option("basePath", croot).parquet(*src))
-        deduped = (sub.dropDuplicates([id_col])
-                   .localCheckpoint(eager=True))
-        out = deduped.withColumn("__abatch", F.lit(out_tok))
-        (out.write.partitionBy(*part_cols).mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(croot))
-        if in_group:
-            # prune out-token dirs the rewrite no longer owns (torn
-            # leftovers in partitions the re-dedup vacated)
-            if len(part_cols) == 2:
-                lead = part_cols[0]
-                vals = [r[0] for r in out.select(lead)
-                        .distinct().collect()]
-                written = {fs.join(croot, f"{lead}={v}",
-                                   f"__abatch={out_tok}") for v in vals}
-            else:
-                written = {fs.join(croot, f"__abatch={out_tok}")}
-            for full in tok_dirs.get(out_tok, []):
-                if full not in written and fs.isdir(full):
-                    fs.delete_dir(full)
-    removed = 0
-    for t in present:
-        for full in tok_dirs[t]:
-            if fs.isdir(full):
-                fs.delete_dir(full)
-                removed += 1
-    return removed
+    raw, root = _read_root(fs, path)
+    new = _stage_remove(spark, path, root, ids)
+    if new is not root:
+        _publish(fs, path, raw, new)
 
 
 def compact_pq_index(spark, path: str, fs=None,
-                     small_bytes: int | None = None,
-                     record=None) -> int:
-    """Consolidate a stored PQ / SQ8 / IVF-PQ index's append-batch
-    partitions: every refresh/append lands one content-token-keyed
-    ``__abatch`` directory per hit bucket/cluster, so an index refreshed
-    nightly for a year accumulates hundreds of sub-directories whose
-    listing cost and tiny files degrade every probe. Rewrites the
-    selected batches into ONE consolidated batch per
-    ``__gbucket``/``cluster`` (ids deduplicated within the merged set)
-    and deletes the obsolete batch directories. Codes are copied, never
-    re-encoded. ``small_bytes`` makes the pass SIZE-TIERED: only batch
-    tokens whose total size is at or below the threshold merge, and
-    larger consolidated levels stay untouched on disk (byte-identical)
-    — so a nightly auto-compaction stays O(recent appends) instead of
-    O(|index|). ``small_bytes=None`` (the default here) merges every
-    batch — the FULL consolidation. Returns the number of
-    batch directories removed; 0 when nothing qualifies.
-
-    Caller owns commit safety: the engine wraps this in its
-    ``_refresh.json`` intent protocol. ``record`` (when given) is
-    called with ``{"kind": "pq", "group": [...], "out": token}``
-    immediately BEFORE each merge group's rewrite — the engine persists
-    it into the intent so a crash anywhere in the group (between the
-    consolidated write and the original-directory deletes — the
-    cross-level duplicate-id window) is converged by
-    ``resume_pq_compaction`` on the next compaction call, TIERED:
-    only the recorded group is re-touched, never the whole index."""
+                     small_bytes: int | None = None) -> int:
+    """Consolidate a stored index's append batches (any kind): every
+    append/refresh adds one batch per hit parent directory, so an index
+    refreshed nightly for a year accumulates hundreds of granules whose
+    listing cost and tiny files degrade every probe. See
+    ``_stage_compact`` for the tiered (``small_bytes``) and full
+    (``None``, the default here) policies. Returns the number of granule
+    directories merged away; 0 when nothing qualifies."""
     fs = _default_fs(fs)
-    codes, meta = read_pq_index(spark, path, fs=fs)
-    id_col = meta["id_col"]
-    part_cols = _pq_part_cols(meta)
-    tok_bytes, tok_dirs = _pq_token_dirs(fs, fs.join(path, "codes"),
-                                         part_cols)
-    if small_bytes is None:
-        groups = ([set(tok_bytes)] if len(tok_bytes) > 1 else [])
-    else:
-        from metrique_spark.compaction import tier_groups
-
-        groups = tier_groups(tok_bytes, small_bytes)
-    if not groups:
-        return 0
-    removed = 0
-    for merge in groups:
-        sub = codes.where(F.col("__abatch").isin(sorted(merge)))
-        deduped = (sub.dropDuplicates([id_col])
-                   .localCheckpoint(eager=True))
-        token = "cmp" + _abatch_token(deduped, id_col)
-        while token in merge:
-            # the merged census can collide with a group member's OWN
-            # token (re-appended identical ids — and the member's
-            # content may even have drifted from its name after
-            # refresh removals rewrote it in place): writing under the
-            # member's token would self-overwrite a live level
-            # mid-merge, the one state write-then-delete can't
-            # converge. Disambiguate deterministically (a crash-retry
-            # recomputes the same suffix) while keeping the
-            # ``cmpn{rows}x...`` prefix the resume's row-count check
-            # parses — the output then always lands in fresh
-            # directories and out ∉ group holds for every recorded
-            # intent this code writes.
-            token += "r"
-        if record is not None:
-            record({"kind": "pq", "group": sorted(merge),
-                    "out": token})
-        out = deduped.withColumn("__abatch", F.lit(token))
-        (out.write.partitionBy(*part_cols).mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(path + "/codes"))
-        # drop only the merged tokens' dirs; untouched levels keep
-        # their bytes (never delete what this write just produced)
-        for t in sorted(merge):
-            if t == token:
-                continue
-            for full in tok_dirs[t]:
-                if fs.isdir(full):
-                    fs.delete_dir(full)
-                    removed += 1
+    raw, root = _read_root(fs, path)
+    new, removed = _stage_compact(spark, fs, path, root, small_bytes)
+    if removed:
+        _publish(fs, path, raw, new)
     return removed
-
-
-_IVF_STAGE = "_cmpstage"
-
-
-def _publish_ivf_stage(fs, stage: str, vroot: str) -> None:
-    """Copy every staged merged part file into its bucket directory
-    under a DETERMINISTIC name (``cmp-<staged filename>``): re-running
-    the publish after a crash overwrites the same destinations, so the
-    staged-publish protocol converges without ever rewriting a bucket
-    partition."""
-    for d in fs.listdir(stage):
-        bdir = fs.join(stage, d)
-        if not (d.startswith("bucket=") and fs.isdir(bdir)):
-            continue
-        for f in fs.listdir(bdir):
-            if f.endswith(".parquet"):
-                fs.copy(fs.join(bdir, f),
-                        fs.join(vroot, d, f"cmp-{f}"))
-
-
-def resume_ivf_compaction(spark, path: str, pending: dict,
-                          fs=None) -> int:
-    """Converge a crashed tiered ``compact_ivf_index`` pass from its
-    recorded intent (``pending = {"targets": [vroot-relative files]}``)
-    WITHOUT rewriting anything — the merged rows were STAGED (one
-    atomic-per-file Spark write under ``_cmpstage``, ``_SUCCESS``
-    marking completeness) before the intent was recorded, so resume is
-    pure idempotent file plumbing: re-publish the staged files under
-    their deterministic names (overwrite = converge), delete the
-    recorded original files still present, drop the stage. Every
-    untouched file in every bucket stays byte-identical. A stage
-    without ``_SUCCESS`` is a torn pre-intent write — with all
-    originals still present, just discard it (the next pass re-stages).
-    Returns the number of original files removed."""
-    fs = _default_fs(fs)
-    vroot = fs.join(path, "vectors")
-    stage = fs.join(path, _IVF_STAGE)
-    staged_ok = fs.isfile(fs.join(stage, "_SUCCESS"))
-    if staged_ok:
-        _publish_ivf_stage(fs, stage, vroot)
-    removed = 0
-    if staged_ok:
-        for rel in pending["targets"]:
-            f = fs.join(vroot, rel)
-            if fs.isfile(f):
-                fs.delete(f)
-                removed += 1
-    if fs.isdir(stage):
-        fs.delete_dir(stage)
-    return removed
-
-
-def compact_ivf_index(spark, path: str, id_col: str = "vec_id",
-                      fs=None, small_bytes: int | None = None,
-                      record=None) -> int:
-    """IVF sibling of ``compact_pq_index``: appends land extra files in
-    the bucket directories (``mode("append")``), so a long-refreshed
-    index reads many tiny files per probe. ``small_bytes=None`` (full):
-    rewrites each bucket to a single file (ids deduplicated) via one
-    shuffle keyed on ``bucket``. With ``small_bytes`` set the pass is
-    SIZE-TIERED at FILE granularity: within each bucket, only the files
-    at or below the threshold merge into one new file (when there are
-    at least two), and larger files stay untouched on disk — a bucket
-    that grew big pays nothing for a trickle of appends elsewhere.
-    Tiered merges dedup only among the merged files; a crash
-    mid-group is converged tiered from the recorded intent (see
-    ``record`` / ``resume_ivf_compaction``). Returns the number of
-    data files eliminated; 0 when already consolidated."""
-    fs = _default_fs(fs)
-    vroot = fs.join(path, "vectors")
-
-    def _nfiles() -> int:
-        n = 0
-        for d in fs.listdir(vroot):
-            if d.startswith("bucket=") and fs.isdir(fs.join(vroot, d)):
-                n += sum(f.endswith(".parquet")
-                         for f in fs.listdir(fs.join(vroot, d)))
-        return n
-
-    before = _nfiles()
-    if small_bytes is not None:
-        # tiered: per bucket, merge the small files plus any group of
-        # ≥4 similar-sized larger files (promotion — same policy as the
-        # batch-dir compactors, at file granularity)
-        from metrique_spark.compaction import tier_groups
-
-        targets: list[str] = []
-        for d in fs.listdir(vroot):
-            bdir = fs.join(vroot, d)
-            if not (d.startswith("bucket=") and fs.isdir(bdir)):
-                continue
-            sizes = {fs.join(bdir, f): fs.du(fs.join(bdir, f))
-                     for f in fs.listdir(bdir) if f.endswith(".parquet")}
-            for grp in tier_groups(sizes, small_bytes):
-                targets.extend(grp)
-        if not targets:
-            return 0
-        rels = [t[len(vroot) + 1:] for t in targets]
-        # STAGE-then-PUBLISH: the merged rows land in a staging dir
-        # first (atomic per file; Spark's _SUCCESS marks completeness),
-        # the intent records the group, then the staged files are
-        # COPIED into their bucket dirs under deterministic names and
-        # the originals deleted. Every step after the stage write is
-        # idempotent file plumbing, so a crash anywhere is converged by
-        # resume_ivf_compaction without rewriting any bucket — a bare
-        # append would be ambiguous at crash time (did it land?), and
-        # the only convergence then is rewriting whole hit buckets.
-        stage = fs.join(path, _IVF_STAGE)
-        if fs.isdir(stage):
-            fs.delete_dir(stage)  # torn pre-intent leftover
-        merged = (spark.read.option("basePath", vroot).parquet(*targets)
-                  .dropDuplicates([id_col])
-                  .repartition(F.col("bucket")))
-        merged.write.partitionBy("bucket").mode("overwrite").parquet(
-            stage)
-        if record is not None:
-            record({"kind": "ivf", "targets": rels})
-        _publish_ivf_stage(fs, stage, vroot)
-        for f in targets:
-            if fs.isfile(f):
-                fs.delete(f)
-        fs.delete_dir(stage)
-        return max(0, before - _nfiles())
-    nbuckets = sum(d.startswith("bucket=") for d in fs.listdir(vroot))
-    if before <= nbuckets:
-        # one file per bucket already — and duplicate ids can only come
-        # from appends, which always add a SECOND file to their bucket,
-        # so a single-file bucket is duplicate-free too
-        return 0
-    vectors = spark.read.parquet(path + "/vectors")
-    deduped = (vectors.dropDuplicates([id_col])
-               .repartition(F.col("bucket"))
-               .localCheckpoint(eager=True))
-    (deduped.write.partitionBy("bucket").mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .parquet(path + "/vectors"))
-    return max(0, before - _nfiles())
 
 
 def drift_stat(
@@ -2298,7 +2210,7 @@ def drift_stat(
     exact; only RECALL drifts as the data distribution shifts), so the
     decay must be measured, not guessed: compare this statistic over an
     appended delta against the build-time baseline recorded in the
-    index marker.
+    index root.
 
     Per family (higher-is-better vs lower-is-better noted):
 
@@ -2372,15 +2284,14 @@ def pq_topk_indexed(
     """Top-k against a stored flat-PQ index: read codes + codebooks,
     ADC-score. The probe pays only the code scan — no training, no
     encoding."""
-    codes, meta = read_pq_index(spark, path, fs=fs)
-    if meta.get("kind") not in (None, "pq"):
+    _, root = _read_root(_default_fs(fs), path)
+    if root["kind"] != "pq":
         raise ValueError(
-            f"index at {path!r} is kind {meta.get('kind')!r}, not a "
-            "flat PQ index — probe it with its own family's search "
-            "function (sq8_topk_indexed / ivfpq_topk_indexed)")
-    return pq_topk_codes(codes, meta["books"], queries, k=k,
-                         id_col=meta["id_col"], vec_col=vec_col,
-                         score_decimals=score_decimals)
+            f"index at {path!r} is kind {root['kind']!r}, not a flat PQ "
+            "index — probe it with its own family's search function "
+            "(sq8_topk_indexed / ivfpq_topk_indexed)")
+    return _topk(spark, path, root, queries, k, None, vec_col,
+                 score_decimals)
 
 
 def write_ivfpq_index(
@@ -2400,36 +2311,10 @@ def write_ivfpq_index(
     routes every vector to an inverted list, codes land in parquet
     PARTITIONED BY cluster (a probe's equi-join prunes to the probed
     directories — the scan cost rides nprobe/nlist), coarse centroids +
-    PQ codebooks go to the sidecar."""
-    import json
-
-    fs = _default_fs(fs)
-    _invalidate_index(fs, path)
-    cents = kmeans_fit(df, k=nlist, iters=coarse_iters, id_col=id_col,
-                       vec_col=vec_col, sim_decimals=sim_decimals)
-    assigned = kmeans_assign(df, cents, id_col=id_col, vec_col=vec_col,
-                             sim_decimals=sim_decimals)
-    books = pq_train(df, m=m, k=k, iters=pq_iters, id_col=id_col,
-                     vec_col=vec_col)
-    codes = (pq_encode(df, books, id_col=id_col, vec_col=vec_col)
-             .join(assigned.select(F.col(id_col), "cluster"), id_col))
-    codes = codes.join(
-        df.select(F.col(id_col), _vh(vec_col).alias("__vh")), id_col)
-    (codes.withColumn("__abatch", F.lit("base"))
-     .write.partitionBy("cluster", "__abatch").mode("overwrite")
-     .parquet(path + "/codes"))
-    cent_rows = getattr(cents, _KMEANS_CENTS_ATTR, None)
-    if cent_rows is None:
-        cent_rows = sorted((r["centroid_id"], list(r["cvec"]))
-                           for r in cents.collect())
-    meta = {"format": _PQ_FORMAT, "kind": "ivfpq", "m": m, "k": k,
-            "iters": pq_iters, "nlist": nlist,
-            "coarse_iters": coarse_iters, "id_col": id_col,
-            "sim_decimals": sim_decimals,
-            "sub_len": len(books[0][0]), "books": books,
-            "centroids": [[cid, vec] for cid, vec in cent_rows],
-            "vh": True}
-    fs.write_text(fs.join(path, _PQ_SIDECAR), json.dumps(meta))
+    PQ codebooks go to the ``_ann.json`` root."""
+    _write_index(df, path, fs, "ivfpq", id_col, vec_col, nlist=nlist,
+                 m=m, k=k, coarse_iters=coarse_iters, pq_iters=pq_iters,
+                 sim_decimals=sim_decimals)
 
 
 def ivfpq_topk_indexed(
@@ -2446,22 +2331,15 @@ def ivfpq_topk_indexed(
     cluster-partitioned code scan prunes to those directories, ADC
     scores the codes. Probe-many cost: nprobe/nlist of the code scan —
     training and encoding were paid once at write time."""
-    codes, meta = read_pq_index(spark, path, fs=fs)
-    if meta.get("kind") != "ivfpq":
-        probe = {"pq": "pq_topk_indexed", None: "pq_topk_indexed",
-                 "sq8": "sq8_topk_indexed"}.get(meta.get("kind"),
-                                                "its own family's probe")
+    _, root = _read_root(_default_fs(fs), path)
+    if root["kind"] != "ivfpq":
+        probe = {"pq": "pq_topk_indexed", "sq8": "sq8_topk_indexed"}.get(
+            root["kind"], "its own family's probe")
         raise ValueError(
-            f"index at {path!r} is kind {meta.get('kind') or 'pq'!r}, "
-            f"not ivfpq — probe it with {probe}, or rebuild with "
-            "write_ivfpq_index")
-    cent_rows = [(c[0], list(c[1])) for c in meta["centroids"]]
-    return ivfpq_topk_codes(codes, cent_rows, meta["books"], queries,
-                            nprobe=nprobe, topk=topk,
-                            id_col=meta["id_col"], vec_col=vec_col,
-                            score_decimals=score_decimals,
-                            sim_decimals=meta["sim_decimals"],
-                            static_prune=True)
+            f"index at {path!r} is kind {root['kind']!r}, not ivfpq — "
+            f"probe it with {probe}, or rebuild with write_ivfpq_index")
+    return _topk(spark, path, root, queries, topk, nprobe, vec_col,
+                 score_decimals)
 
 
 # --- scalar quantization (SQ8): the third standard compression scheme
@@ -2574,27 +2452,12 @@ def write_sq8_index(
     gbuckets: int = 16,
 ) -> list:
     """Persist an SQ8 index: codes to ``path/codes`` (8x smaller scan
-    payload than the float corpus), per-dim params to the ``_pq.json``
-    sidecar (kind ``sq8``; sidecar written last = commit point).
-    Returns the trained params. Encode once, probe many — the probe
-    pays only the code scan + reconstruction folds."""
-    import json
-
-    fs = _default_fs(fs)
-    _invalidate_index(fs, path)
-    params = sq8_train(df, vec_col=vec_col)
-    codes = sq8_encode(df, params, id_col=id_col, vec_col=vec_col)
-    codes = codes.join(
-        df.select(F.col(id_col), _vh(vec_col).alias("__vh")), id_col)
-    (codes.withColumn("__gbucket", _gbucket(id_col, gbuckets))
-     .withColumn("__abatch", F.lit("base"))
-     .write.partitionBy("__gbucket", "__abatch").mode("overwrite")
-     .parquet(path + "/codes"))
-    meta = {"format": _PQ_FORMAT, "kind": "sq8", "id_col": id_col,
-            "params": [[mn, mx] for mn, mx in params],
-            "vh": True, "gbuckets": gbuckets}
-    fs.write_text(fs.join(path, _PQ_SIDECAR), json.dumps(meta))
-    return params
+    payload than the float corpus), per-dim params in the ``_ann.json``
+    root (kind ``sq8``). Returns the trained params. Encode once, probe
+    many — the probe pays only the code scan + reconstruction folds."""
+    root = _write_index(df, path, fs, "sq8", id_col, vec_col,
+                        gbuckets=gbuckets)
+    return [tuple(p) for p in root["model"]["params"]]
 
 
 def sq8_topk_indexed(
@@ -2607,18 +2470,14 @@ def sq8_topk_indexed(
     max_query_rows: int | None = 10_000,
     fs=None,
 ) -> DataFrame:
-    """Top-k against a stored SQ8 index (``read_pq_index`` reads the
-    shared sidecar layout; kind-checked)."""
-    codes, meta = read_pq_index(spark, path, fs=fs)
-    if meta.get("kind") != "sq8":
+    """Top-k against a stored SQ8 index (kind-checked)."""
+    _, root = _read_root(_default_fs(fs), path)
+    if root["kind"] != "sq8":
         raise ValueError(
-            f"index at {path!r} is kind {meta.get('kind')!r}, not sq8 — "
+            f"index at {path!r} is kind {root['kind']!r}, not sq8 — "
             "probe it with its own family's search function")
-    params = [(p[0], p[1]) for p in meta["params"]]
-    return sq8_topk_codes(codes, params, queries, k=k,
-                          id_col=meta["id_col"], vec_col=vec_col,
-                          score_decimals=score_decimals,
-                          max_query_rows=max_query_rows)
+    return _topk(spark, path, root, queries, k, None, vec_col,
+                 score_decimals, max_query_rows)
 
 
 def ivfsq8_topk(

@@ -41,20 +41,30 @@ from pyspark.sql import types as T
 # set from the sidecar — level dirs plus batch dirs above the fold mark
 # — never from a raw listing, so a crash between any two steps leaves
 # them reading exactly-once content; stale sources are ignored and
-# re-swept by the next compaction. Pre-level sidecars (no ``levels``
-# key) read as a single level ``batch=gen{gen}`` — forward-compatible
-# in place.
+# re-swept by the next compaction. A pre-level sidecar (no ``levels``
+# key) refuses with the rebuild instruction; its data is kept.
 
 _GEN_SIDECAR = "_state.json"
 
 
 def _gen_meta(fs, root: str) -> dict:
+    """The committed state sidecar — one GET; a fresh root starts
+    empty. A sidecar without a ``levels`` list was written before the
+    tiered fold: refuse it (the data stays in place) rather than guess
+    its level set."""
     import json
 
-    p = fs.join(root, _GEN_SIDECAR)
-    if fs.isfile(p):
-        return json.loads(fs.read_text(p))
-    return {"compacted_through": -1, "gen": 0}
+    try:
+        meta = json.loads(fs.read_text(fs.join(root, _GEN_SIDECAR)))
+    except FileNotFoundError:
+        return {"compacted_through": -1, "gen": 0, "levels": []}
+    if "levels" not in meta:
+        raise ValueError(
+            f"streaming state at {root!r} has a pre-level {_GEN_SIDECAR} "
+            "(no 'levels' list) — rebuild it: remove this state "
+            "directory and the query's checkpoint, then replay the "
+            "stream; the old data is left in place")
+    return meta
 
 
 def _gen_flip(fs, root: str, meta: dict) -> None:
@@ -64,13 +74,8 @@ def _gen_flip(fs, root: str, meta: dict) -> None:
 
 
 def _gen_levels(meta: dict) -> list[str]:
-    """Live level directory NAMES per the sidecar; a pre-level sidecar
-    (no ``levels`` key) is one level named by its ``gen``."""
-    lv = meta.get("levels")
-    if lv is None:
-        lv = ([f"batch=gen{meta['gen']}"]
-              if meta.get("gen", 0) > 0 else [])
-    return list(lv)
+    """Live level directory NAMES per the sidecar."""
+    return list(meta["levels"])
 
 
 def _gen_dirs(fs, root: str, meta: dict) -> list[str]:
@@ -1083,9 +1088,9 @@ def _partial_state_sink(state_path, out_path, partial_fn, fold_fn,
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
+        meta = _gen_meta(fs, state_path)  # refuses before any write
         partial_fn(batch_df).write.mode("overwrite").parquet(
             fs.join(state_path, f"batch={batch_id}"))
-        meta = _gen_meta(fs, state_path)
         # fold committed partials (ids < batch_id can never replay) into
         # a new LEVEL once the dir count crosses the threshold; levels
         # size-tier via _fold_levels (fold_fn's merge contract —

@@ -430,7 +430,7 @@ def test_tiered_pq_index_compaction_preserves_base_level(spark, tmp_path):
     for r, dirs, _f in os.walk(croot):
         b = os.path.basename(r)
         if b.startswith("__abatch="):
-            t = b[len("__abatch="):]
+            t = b[len("__abatch="):].rsplit(".", 1)[0]  # batch token
             tok_sizes[t] = tok_sizes.get(t, 0) + eng.fs.du(r)
     base_size = tok_sizes["base"]
     assert all(s < base_size for t, s in tok_sizes.items() if t != "base")
@@ -449,7 +449,8 @@ def test_tiered_pq_index_compaction_preserves_base_level(spark, tmp_path):
     assert eng.compact_vector_index("vecs", "px",
                                     small_bytes=base_size - 1) > 0
     assert _base_files() == base_before  # base level untouched
-    assert eng._index_batch_count(apath, "ivfpq") == 2  # base + merged
+    # base + merged
+    assert eng.vector_index_list("vecs", counts=True)["px"]["batches"] == 2
     after = sorted(map(tuple, eng.vector_search("vecs", "px", q, k=5)
                        .collect()))
     assert after == before
@@ -458,15 +459,16 @@ def test_tiered_pq_index_compaction_preserves_base_level(spark, tmp_path):
                                     small_bytes=base_size - 1) == 0
     # explicit full pass still consolidates everything
     assert eng.compact_vector_index("vecs", "px", small_bytes=None) > 0
-    assert eng._index_batch_count(apath, "ivfpq") == 1
+    assert eng.vector_index_list("vecs", counts=True)["px"]["batches"] == 1
     assert sorted(map(tuple, eng.vector_search("vecs", "px", q, k=5)
                       .collect())) == before
 
 
 def test_tiered_ivf_compaction_merges_only_small_files(spark, tmp_path):
-    """IVF index (file-granular appends): a tiered pass merges only the
-    small appended files within each bucket — base bucket files are
-    byte-identical after the pass — with identical search results."""
+    """IVF index (batch-granular appends, like the PQ families): a
+    tiered pass merges only the small appended batches — base bucket
+    files are byte-identical after the pass — with identical search
+    results."""
     eng = Engine(spark, warehouse=str(tmp_path / "wh"))
     _emb_cube(spark, eng)
     eng.build_vector_index("vecs", "ix", vec_col="embedding",
@@ -481,10 +483,18 @@ def test_tiered_ivf_compaction_merges_only_small_files(spark, tmp_path):
     all_stats = _file_stats(vroot)
     appended = {p: s for p, s in all_stats.items() if p not in base_files}
     assert len(appended) >= 2
-    thr = max(s for s, _m in appended.values())
+    # the compactor tiers batches by their directories' du (crc
+    # sidecars included) — compute the threshold in the same units
+    tok: dict[str, int] = {}
+    for r, _dirs, _f in os.walk(vroot):
+        b = os.path.basename(r)
+        if b.startswith("__abatch="):
+            t = b[len("__abatch="):].rsplit(".", 1)[0]
+            tok[t] = tok.get(t, 0) + eng.fs.du(r)
+    thr = max(s for t, s in tok.items() if t != "base")
     base_before = {p: v for p, v in all_stats.items() if p in base_files}
-    assert all(s > thr for s, _m in base_before.values()), \
-        "test premise: base files must outweigh appended ones"
+    assert tok["base"] > thr, \
+        "test premise: the base batch must outweigh appended ones"
     q = spark.createDataFrame(
         [(0, [0.1] * 64), (1, [0.3] * 64)],
         "_oid long, embedding array<double>")

@@ -1,5 +1,7 @@
 """Engine facade tests: find/count/distinct/get_last_field/catalog ops."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -111,6 +113,28 @@ def test_index_and_index_list(spark, tmp_path):
     eng3 = Engine(spark, warehouse=str(tmp_path))
     assert {e["name"] for e in eng3.index_list()["c1"]} == {
         "ix_c1_k", "ix_custom", "ix_new"}
+
+
+def test_index_registration_takes_writer_lease(spark, tmp_path):
+    """index() read-merge-writes _indexes.json under the cube's writer
+    lease: while another engine holds it, registration fails fast with
+    ConcurrentWriteError (two sessions registering at once would
+    otherwise lose one declaration) and writes nothing; once the lease
+    is free it lands."""
+    from metrique_spark.engine import ConcurrentWriteError
+
+    wh = str(tmp_path)
+    eng = Engine(spark, warehouse=wh)
+    eng.insert("c1", spark.createDataFrame([(1, "a")], ["k", "v"]),
+               oid="k")
+    other = Engine(spark, warehouse=wh)
+    with other._write_lock("c1"):
+        with pytest.raises(ConcurrentWriteError):
+            eng.index("c1", ["k"])
+        assert not os.path.exists(os.path.join(wh, "c1", "_indexes.json"))
+    eng.index("c1", ["k"])
+    assert [e["name"] for e in Engine(spark, warehouse=wh)
+            .index_list()["c1"]] == ["ix_c1_k"]
 
 
 def test_auto_compact_hook(spark, tmp_path):

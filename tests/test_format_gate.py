@@ -121,3 +121,68 @@ def test_oid_buckets_must_be_a_positive_int(spark, tmp_path, kwarg, value,
     """Bad configuration fails loudly in the constructor."""
     with pytest.raises(ValueError, match=match):
         Engine(spark, warehouse=str(tmp_path / "wh"), **{kwarg: value})
+
+
+def _vecs(spark, ids, start):
+    rows = [(i, [float(((i + 2) * (j + 1)) % 7 - 3) for j in range(8)])
+            for i in ids]
+    df = spark.createDataFrame(rows, "oid long, embedding array<double>")
+    return stamp(df, oid="oid", start=F.to_timestamp(F.lit(start)),
+                 sort_arrays=False)
+
+
+@pytest.mark.parametrize("leftover_intent", [False, True],
+                         ids=["root_without_granules", "refresh_intent"])
+def test_older_form_vector_index_refused_and_kept(spark, tmp_path,
+                                                  leftover_intent):
+    """An ANN index written before indexes committed by root — an
+    ``_ann.json`` naming no granules, possibly beside a leftover
+    ``_refresh.json`` intent — is refused by search, refresh and
+    compaction with one ValueError naming the rebuild, is not listed,
+    and keeps its data through commits and vacuum; a rebuild replaces
+    it. A standalone index whose model sits in a sidecar (no root) is
+    refused the same way."""
+    from metrique_spark.functions import similarity as sim
+
+    eng = Engine(spark, warehouse=str(tmp_path / "wh"))
+    eng.upsert("v", _vecs(spark, range(40), "2014-01-01"), stamped=True)
+    eng.build_vector_index("v", "ix", vec_col="embedding", kind="sq8")
+    apath = eng._ann_path("v", "ix")
+    root_p = os.path.join(apath, "_ann.json")
+    with open(root_p) as fh:
+        root = json.load(fh)
+    old = {k: root[k] for k in ("kind", "gen", "vec_col", "id_col",
+                                "params", "auto", "drift_base")}
+    with open(root_p, "w") as fh:
+        json.dump(old, fh)
+    if leftover_intent:
+        with open(os.path.join(apath, "_refresh.json"), "w") as fh:
+            json.dump({"op": "refresh", "target_gen": 9}, fh)
+    files = _parquet_files(apath)
+    q = spark.createDataFrame([(0, [1.0] * 8)],
+                              "_oid long, embedding array<double>")
+    for op in (lambda: eng.vector_search("v", "ix", q, allow_stale=True),
+               lambda: eng.refresh_vector_index("v", "ix"),
+               lambda: eng.compact_vector_index("v", "ix")):
+        with pytest.raises(ValueError, match="older on-disk form.*rebuild"):
+            op()
+    assert "ix" not in eng.vector_index_list("v")
+    eng.upsert("v", _vecs(spark, [99], "2014-02-01"), stamped=True)
+    eng.vacuum("v")
+    assert _parquet_files(apath) == files  # data kept
+    eng.build_vector_index("v", "ix", vec_col="embedding", kind="sq8")
+    assert eng.vector_search("v", "ix", q, k=3).count() == 3
+    assert not set(_parquet_files(apath)) & set(files)
+    assert not os.path.exists(os.path.join(apath, "_refresh.json"))
+
+    # standalone: a sidecar-model index with no root
+    sp = str(tmp_path / "standalone")
+    sim.write_sq8_index(eng.find("v", fields="embedding")
+                        .select("_oid", "embedding"), sp, id_col="_oid")
+    os.rename(os.path.join(sp, "_ann.json"), os.path.join(sp, "_pq.json"))
+    kept = _parquet_files(sp)
+    with pytest.raises(ValueError, match="rebuild"):
+        sim.read_pq_index(spark, sp)
+    with pytest.raises(ValueError, match="rebuild"):
+        sim.sq8_topk_indexed(spark, sp, q)
+    assert _parquet_files(sp) == kept

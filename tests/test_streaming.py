@@ -836,8 +836,8 @@ def test_tiered_levels_coexist_promote_and_read_old_sidecars(spark,
     rewriting all prior state (the sidecar's ``levels`` list names
     them), totals stay exact across multiple coexisting levels, a
     4th similar-sized level promotes the group into one, and a
-    pre-level sidecar (no ``levels`` key) keeps reading as a single
-    level."""
+    pre-level sidecar (no ``levels`` key) refuses with the rebuild
+    instruction, its data left in place."""
     import json
     import os
 
@@ -887,10 +887,10 @@ def test_tiered_levels_coexist_promote_and_read_old_sidecars(spark,
     rows = {str(r["window_start"]): r["n"]
             for r in spark.read.parquet(out_p).collect()}
     assert len(rows) == 14 and all(n == 1 for n in rows.values())
-    # pre-level sidecar compatibility: rebuild the state as a single
-    # gen dir under a sidecar WITHOUT the levels key (what a sink
-    # running the pre-tiering code would have left behind) — the next
-    # batch reads it as one level and totals stay exact
+    # pre-level sidecar: rebuild the state as a single gen dir under a
+    # sidecar WITHOUT the levels key (what a sink running the
+    # pre-tiering code would have left behind) — the next batch refuses
+    # it with the rebuild instruction and touches nothing
     import shutil
 
     merged = spark.read.parquet(*[os.path.join(state_p, d)
@@ -905,10 +905,11 @@ def test_tiered_levels_coexist_promote_and_read_old_sidecars(spark,
     with open(os.path.join(state_p, "_state.json"), "w") as f:
         json.dump({"compacted_through": m["compacted_through"],
                    "gen": 1000}, f)
-    sink(mk(14, 14), 14)
-    rows = {str(r["window_start"]): r["n"]
-            for r in spark.read.parquet(out_p).collect()}
-    assert len(rows) == 15 and all(n == 1 for n in rows.values())
+    before = sorted(os.listdir(state_p))
+    with pytest.raises(ValueError, match="pre-level.*rebuild"):
+        sink(mk(14, 14), 14)
+    assert sorted(os.listdir(state_p)) == before  # data kept
+    assert gen_dirs() == ["batch=gen1000"]
 
 
 def test_gen_sweep_removes_stale_dirs_from_crashed_prior_sweep(tmp_path):
@@ -925,7 +926,8 @@ def test_gen_sweep_removes_stale_dirs_from_crashed_prior_sweep(tmp_path):
     root = str(tmp_path / "store")
     for d in ("batch=0", "batch=1", "batch=2", "batch=gen1", "batch=gen2"):
         os.makedirs(os.path.join(root, d))
-    _gen_sweep(fs, root, {"compacted_through": 1, "gen": 2})
+    _gen_sweep(fs, root, {"compacted_through": 1, "gen": 2,
+                          "levels": ["batch=gen2"]})
     assert sorted(os.listdir(root)) == ["batch=2", "batch=gen2"]
 
 

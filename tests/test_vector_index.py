@@ -11,14 +11,31 @@ from metrique_spark.engine import Engine
 from metrique_spark.functions import similarity as sim
 from metrique_spark.objects import stamp
 
-# Heavy suite (>1 min serial): opt-in via `pytest -m slow` so the default
-# `pytest tests/` finishes inside the driver's verify window (r14 shipped
-# tests_ok:false purely because the ~1 h full suite was truncated). The
-# per-round gate runs these explicitly; coverage is unchanged.
-pytestmark = pytest.mark.slow
-
 
 SF0001 = "/root/testdata/sf0.001"
+
+
+def unnamed_index_dirs(apath: str) -> list[str]:
+    """Directories under an index directory that its ``_ann.json`` root
+    neither names nor leads to — what a crashed writer left behind."""
+    import json
+    import os
+
+    with open(os.path.join(apath, "_ann.json")) as fh:
+        root = json.load(fh)
+    named = set(root["granules"])
+    if root["model"].get("centroid_dir"):
+        named.add(root["model"]["centroid_dir"])
+    above = {"/".join(d.split("/")[:i]) for d in named
+             for i in range(1, d.count("/") + 1)}
+    out = []
+    for dirpath, dirs, _files in os.walk(apath):
+        for d in dirs:
+            rel = os.path.relpath(os.path.join(dirpath, d), apath)
+            if rel not in above and not any(
+                    rel == n or rel.startswith(n + "/") for n in named):
+                out.append(rel)
+    return sorted(out)
 
 
 @pytest.fixture()
@@ -375,13 +392,13 @@ def test_vacuum_sweeps_crashed_index_build(spark, tmp_path, monkeypatch):
     eng.build_vector_index("vecs", "keep", vec_col="embedding",
                            kind="ivf", nlist=4)
 
-    real = sim_mod.write_sq8_index
+    real = sim_mod._stage_build
 
     def crash(*a, **kw):
         real(*a, **kw)
         raise RuntimeError("injected crash before marker")
 
-    monkeypatch.setattr(sim_mod, "write_sq8_index", crash)
+    monkeypatch.setattr(sim_mod, "_stage_build", crash)
     with pytest.raises(RuntimeError, match="injected"):
         eng.build_vector_index("vecs", "dead", vec_col="embedding",
                                kind="sq8")
@@ -422,18 +439,22 @@ def test_drop_column_refuses_index_columns_and_autorefreshes(spark,
 
 def test_refresh_crash_is_recoverable_not_sweepable(spark, tmp_path,
                                                     monkeypatch):
-    """A refresh that crashes mid-mutation leaves the committed marker
-    in place plus the _refresh.json intent: searches fail loud with the
-    in-flight error (allow_stale does NOT bypass it — the data is torn,
-    not merely stale), vacuum leaves the directory alone, and re-running
-    the refresh converges the content — a crash costs a re-run, never
-    the full rebuild the old delete-marker-first protocol forced."""
+    """A refresh that crashes mid-way (its removal already rewrote the
+    hit granules into fresh directories, its append died) publishes
+    nothing: the committed root stays in place, searches answer from it
+    (stale until refreshed — allow_stale reads the pre-refresh corpus
+    exactly), vacuum sweeps only the crashed writer's fresh directories
+    and keeps the index, and re-running the refresh converges the
+    content — a crash costs a re-run, never a rebuild."""
     from metrique_spark.functions import similarity as sim_mod
 
     eng = Engine(spark, warehouse=str(tmp_path / "wh"))
     _emb_cube(spark, eng)
     eng.build_vector_index("vecs", "ix", vec_col="embedding",
                            kind="ivf", nlist=4)
+    apath = eng._ann_path("vecs", "ix")
+    built = {r["_oid"] for r in spark.read.parquet(apath + "/vectors")
+             .select("_oid").collect()}
     eng.upsert("vecs", _vrows(spark, [(1, [0.5] * 64, 0),
                                       (99_999, [0.25] * 64, 1)],
                               "2014-02-01"), stamped=True)
@@ -441,28 +462,30 @@ def test_refresh_crash_is_recoverable_not_sweepable(spark, tmp_path,
     def crash(*a, **kw):
         raise RuntimeError("injected crash mid-refresh")
 
-    monkeypatch.setattr(sim_mod, "append_to_ivf_index", crash)
+    monkeypatch.setattr(sim_mod, "_stage_append", crash)
     with pytest.raises(RuntimeError, match="injected"):
         eng.refresh_vector_index("vecs", "ix")
     monkeypatch.undo()
     path = eng._path("vecs")
-    # committed marker still present; intent flags the in-flight state
-    assert eng.fs.isfile(eng._ann_meta_path("vecs", "ix"))
-    assert eng.fs.isfile(eng._ann_intent_path("vecs", "ix"))
+    # the committed root is still the build's: stale, never torn
     ix = eng.vector_index_list("vecs")["ix"]
-    assert ix["refreshing"] and ix["stale"]
+    assert ix["stale"] and ix["gen"] == 1
+    assert unnamed_index_dirs(apath)  # the removal's fresh granules
     q = spark.createDataFrame(
         [(0, [0.1] * 64)], "_oid long, embedding array<double>")
-    with pytest.raises(ValueError, match="in flight"):
+    with pytest.raises(ValueError, match="generation"):
         eng.vector_search("vecs", "ix", q, k=3)
-    with pytest.raises(ValueError, match="in flight"):
-        eng.vector_search("vecs", "ix", q, k=3, allow_stale=True)
+    assert eng.vector_search("vecs", "ix", q, k=3,
+                             allow_stale=True).count() == 3
+    committed, _ = sim.read_ivf_index(spark, apath)
+    assert {r["_oid"] for r in committed.select("_oid").collect()} == built
     eng.vacuum("vecs")
     assert eng.fs.isdir(eng.fs.join(path, "_ann_ix"))  # NOT swept
+    assert unnamed_index_dirs(apath) == []
     # the re-run converges: content == live corpus, search works
     res = eng.refresh_vector_index("vecs", "ix")
     assert res["gen"] == 2
-    assert not eng.fs.isfile(eng._ann_intent_path("vecs", "ix"))
+    assert not eng.vector_index_list("vecs")["ix"]["stale"]
     stored = {(r["_oid"], tuple(r["v"])) for r in spark.read.parquet(
         eng._ann_path("vecs", "ix") + "/vectors")
         .selectExpr("_oid", "v").collect()}
@@ -573,7 +596,8 @@ def test_compact_vector_index_consolidates_batches(spark, tmp_path):
                        .collect()))
     assert after == before
     assert eng.vector_index_list("vecs")["px"]["gen"] == gen_before
-    assert not eng.fs.isfile(eng._ann_intent_path("vecs", "px"))
+    # the merged granules are retired with the root swap, not left over
+    assert unnamed_index_dirs(eng._ann_path("vecs", "px")) == []
     eng.vacuum("vecs")
     assert sorted(map(tuple, eng.vector_search("vecs", "px", q, k=5)
                       .collect())) == before
@@ -582,8 +606,9 @@ def test_compact_vector_index_consolidates_batches(spark, tmp_path):
 
 
 def test_compact_vector_index_ivf_files(spark, tmp_path):
-    """IVF compaction consolidates the per-bucket FILE count (appends
-    land extra files, not batch dirs) with identical search results."""
+    """IVF compaction consolidates the per-bucket FILE count (every
+    append lands another batch granule in its buckets) with identical
+    search results."""
     import os
 
     eng = Engine(spark, warehouse=str(tmp_path / "wh"))
@@ -602,8 +627,8 @@ def test_compact_vector_index_ivf_files(spark, tmp_path):
     vroot = os.path.join(eng._ann_path("vecs", "ix"), "vectors")
     for d in os.listdir(vroot):
         if d.startswith("bucket="):
-            n = sum(f.endswith(".parquet")
-                    for f in os.listdir(os.path.join(vroot, d)))
+            n = sum(f.endswith(".parquet") for _r, _d, files in
+                    os.walk(os.path.join(vroot, d)) for f in files)
             assert n == 1
     assert sorted(map(tuple, eng.vector_search("vecs", "ix", q, k=5)
                       .collect())) == before
@@ -618,10 +643,11 @@ def test_compact_vector_index_ivf_files(spark, tmp_path):
 
 def test_compact_vector_index_crash_is_recoverable(spark, tmp_path,
                                                    monkeypatch):
-    """A compaction that crashes mid-rewrite leaves marker+intent:
-    searches refuse the index, vacuum leaves it alone, and the next
-    refresh converges the duplicate window — then compaction re-runs
-    clean."""
+    """A compaction that crashes after writing its merged batch but
+    before the root swap publishes nothing: searches answer from the
+    committed root exactly as before, vacuum sweeps the unpublished
+    merge and keeps the index, a refresh has nothing to converge, and
+    the compaction then re-runs clean."""
     from metrique_spark.functions import similarity as sim_mod
 
     eng = Engine(spark, warehouse=str(tmp_path / "wh"))
@@ -631,26 +657,31 @@ def test_compact_vector_index_crash_is_recoverable(spark, tmp_path,
     eng.upsert("vecs", _vrows(spark, [(99_999, [0.25] * 64, 1)],
                               "2014-02-01"), stamped=True)
     eng.refresh_vector_index("vecs", "sx")
+    apath = eng._ann_path("vecs", "sx")
+    q = spark.createDataFrame(
+        [(0, [0.1] * 64)], "_oid long, embedding array<double>")
+    before = sorted(map(tuple, eng.vector_search("vecs", "sx", q, k=3)
+                        .collect()))
 
     def crash(*a, **kw):
         raise RuntimeError("injected compaction crash")
 
-    monkeypatch.setattr(sim_mod, "compact_pq_index", crash)
+    monkeypatch.setattr(sim_mod, "_publish", crash)
     with pytest.raises(RuntimeError, match="injected"):
         eng.compact_vector_index("vecs", "sx")
     monkeypatch.undo()
-    assert eng.fs.isfile(eng._ann_intent_path("vecs", "sx"))
-    q = spark.createDataFrame(
-        [(0, [0.1] * 64)], "_oid long, embedding array<double>")
-    with pytest.raises(ValueError, match="in flight"):
-        eng.vector_search("vecs", "sx", q, k=3)
+    assert unnamed_index_dirs(apath)  # the unpublished merged batch
+    assert sorted(map(tuple, eng.vector_search("vecs", "sx", q, k=3)
+                      .collect())) == before
+    assert eng.vector_index_list("vecs", counts=True)["sx"]["batches"] == 2
     eng.vacuum("vecs")
-    assert eng.fs.isfile(eng._ann_meta_path("vecs", "sx"))  # not swept
-    eng.refresh_vector_index("vecs", "sx")  # converges + clears intent
-    assert not eng.fs.isfile(eng._ann_intent_path("vecs", "sx"))
+    assert eng.fs.isfile(eng.fs.join(apath, "_ann.json"))  # not swept
+    assert unnamed_index_dirs(apath) == []
+    assert eng.refresh_vector_index("vecs", "sx")["appended"] == 0
     assert eng.vector_search("vecs", "sx", q, k=3).count() == 3
-    eng.compact_vector_index("vecs", "sx")
-    assert eng.vector_search("vecs", "sx", q, k=3).count() == 3
+    assert eng.compact_vector_index("vecs", "sx") > 0
+    assert sorted(map(tuple, eng.vector_search("vecs", "sx", q, k=3)
+                      .collect())) == before
 
 
 def test_drift_reports_bucket_skew(spark, tmp_path):
@@ -687,7 +718,8 @@ def test_auto_compact_index_batches(spark, tmp_path):
         tripped += res.get("compacted", 0)
     assert tripped > 0  # some refresh crossed the limit and compacted
     apath = eng._ann_path("vecs", "sx")
-    assert eng._index_batch_count(apath, "sq8") <= 2  # bounded, converged
+    # bounded, converged
+    assert eng.vector_index_list("vecs", counts=True)["sx"]["batches"] <= 2
     q = spark.createDataFrame(
         [(0, [0.1] * 64)], "_oid long, embedding array<double>")
     assert eng.vector_search("vecs", "sx", q, k=3).count() == 3
@@ -722,42 +754,45 @@ def test_drift_tol_recorded_per_index(spark, tmp_path):
 
 def test_search_waits_out_inflight_refresh_with_lock_wait(spark,
                                                           tmp_path):
-    """Engine(lock_wait=N) applies to READERS of a mid-mutation index
-    too: instead of the in-flight error, vector_search polls the intent
-    away (the common case is an auto-refresh commit epilogue finishing
-    in seconds) and then answers from the committed state."""
-    import json
+    """Engine(lock_wait=N) applies to READERS of a stale index too:
+    instead of the stale-generation error, vector_search re-reads the
+    root until a refresh in flight on another session publishes the
+    live generation (the common case is an auto-refresh commit epilogue
+    finishing in seconds) and then answers from that committed root."""
     import threading
 
-    eng = Engine(spark, warehouse=str(tmp_path / "wh"), lock_wait=30.0)
+    wh = str(tmp_path / "wh")
+    eng = Engine(spark, warehouse=wh, lock_wait=30.0)
     _emb_cube(spark, eng)
     eng.build_vector_index("vecs", "sx", vec_col="embedding", kind="sq8")
-    # simulate an in-flight refresh: intent present, then a 'writer'
-    # finishes (deletes it) while the search is waiting
-    ipath = eng._ann_intent_path("vecs", "sx")
-    eng.fs.write_text(ipath, json.dumps({"op": "refresh",
-                                         "target_gen": 99}))
-    threading.Timer(1.5, lambda: eng.fs.delete(ipath)).start()
+    eng.upsert("vecs", _vrows(spark, [(99_999, [0.25] * 64, 1)],
+                              "2014-02-01"), stamped=True)
+    writer = Engine(spark, warehouse=wh)
+    t = threading.Timer(
+        1.5, lambda: writer.refresh_vector_index("vecs", "sx"))
+    t.start()
     q = spark.createDataFrame(
         [(0, [0.1] * 64)], "_oid long, embedding array<double>")
-    assert eng.vector_search("vecs", "sx", q, k=3).count() == 3
-    # the fail-fast default still raises immediately
-    ff = Engine(spark, warehouse=str(tmp_path / "wh"))
-    eng.fs.write_text(ipath, json.dumps({"op": "compact"}))
     try:
-        with pytest.raises(ValueError, match="in flight"):
-            ff.vector_search("vecs", "sx", q, k=3)
+        assert eng.vector_search("vecs", "sx", q, k=3).count() == 3
+        assert not eng.vector_index_list("vecs")["sx"]["stale"]
     finally:
-        eng.fs.delete(ipath)
+        t.join()
+    # the fail-fast default still raises immediately on a stale root
+    ff = Engine(spark, warehouse=wh)
+    ff.upsert("vecs", _vrows(spark, [(99_998, [0.2] * 64, 1)],
+                             "2014-03-01"), stamped=True)
+    with pytest.raises(ValueError, match="generation"):
+        ff.vector_search("vecs", "sx", q, k=3)
 
 
-def test_compact_refuses_torn_crashed_refresh(spark, tmp_path,
-                                              monkeypatch):
-    """A refresh that crashed MID-MUTATION (intent op=refresh, marker
-    gen != target_gen — content torn) must not be compacted directly:
-    compaction would consolidate the half-refreshed data and erase the
-    torn-content flag. compact_vector_index refuses and steers to
-    refresh_vector_index, which converges — then compaction runs."""
+def test_crashed_refresh_leaves_committed_root_compactable(
+        spark, tmp_path, monkeypatch):
+    """A refresh that crashed mid-way leaves no torn state to refuse:
+    the committed root is consistent, merely stale, so compaction (a
+    physical-only pass that leaves the generation alone) runs on it and
+    the index stays stale until refreshed — then refresh converges and
+    compaction runs again."""
     from metrique_spark.functions import similarity as sim_mod
 
     eng = Engine(spark, warehouse=str(tmp_path / "wh"))
@@ -769,47 +804,46 @@ def test_compact_refuses_torn_crashed_refresh(spark, tmp_path,
     def crash(*a, **kw):
         raise RuntimeError("injected crash mid-refresh")
 
-    monkeypatch.setattr(sim_mod, "append_to_pq_index", crash)
+    monkeypatch.setattr(sim_mod, "_stage_append", crash)
     with pytest.raises(RuntimeError, match="injected"):
         eng.refresh_vector_index("vecs", "sx")
     monkeypatch.undo()
-    # torn state: intent present, marker gen behind the intent's target
-    assert eng.fs.isfile(eng._ann_intent_path("vecs", "sx"))
-    with pytest.raises(ValueError, match="refresh_vector_index"):
-        eng.compact_vector_index("vecs", "sx")
-    # intent untouched by the refusal: searches still refuse too
-    assert eng.fs.isfile(eng._ann_intent_path("vecs", "sx"))
-    eng.refresh_vector_index("vecs", "sx")  # self-healing convergence
-    eng.compact_vector_index("vecs", "sx")  # now fine
     q = spark.createDataFrame(
         [(0, [0.1] * 64)], "_oid long, embedding array<double>")
+    # committed root untouched by the crash: stale, not torn
+    assert eng.vector_index_list("vecs")["sx"]["stale"]
+    eng.compact_vector_index("vecs", "sx")
+    # still stale after the compaction: searches keep refusing
+    with pytest.raises(ValueError, match="refresh_vector_index"):
+        eng.vector_search("vecs", "sx", q, k=3)
+    eng.refresh_vector_index("vecs", "sx")  # self-healing convergence
+    eng.compact_vector_index("vecs", "sx")  # now fine
     assert eng.vector_search("vecs", "sx", q, k=3).count() == 3
 
 
 def test_search_wait_survives_concurrent_drop(spark, tmp_path):
-    """A lock_wait reader whose index is DROPPED while it polls the
-    intent away gets the same 'no committed vector index' ValueError as
-    the pre-wait check — never a raw file-not-found from the marker
-    re-read."""
-    import json
+    """A lock_wait reader whose stale index is DROPPED while it re-reads
+    the root gets the same 'no committed vector index' ValueError as
+    the pre-wait check — never a raw file-not-found."""
     import threading
 
     eng = Engine(spark, warehouse=str(tmp_path / "wh"), lock_wait=30.0)
     _emb_cube(spark, eng)
     eng.build_vector_index("vecs", "sx", vec_col="embedding", kind="sq8")
-    ipath = eng._ann_intent_path("vecs", "sx")
-    eng.fs.write_text(ipath, json.dumps({"op": "refresh",
-                                         "target_gen": 99}))
-
-    # the drop removes the whole _ann_sx dir — intent included, which
-    # ends the reader's poll; the marker re-read must then refuse, not
-    # raise a raw file-not-found
-    threading.Timer(
-        1.0, lambda: eng.drop_vector_index("vecs", "sx")).start()
+    eng.upsert("vecs", _vrows(spark, [(99_999, [0.25] * 64, 1)],
+                              "2014-02-01"), stamped=True)
+    # the drop removes the whole _ann_sx dir — root included, which
+    # ends the reader's wait with the refusal
+    t = threading.Timer(
+        1.0, lambda: eng.drop_vector_index("vecs", "sx"))
+    t.start()
     q = spark.createDataFrame(
         [(0, [0.1] * 64)], "_oid long, embedding array<double>")
-    with pytest.raises(ValueError, match="no committed vector index"):
-        eng.vector_search("vecs", "sx", q, k=3)
+    try:
+        with pytest.raises(ValueError, match="no committed vector index"):
+            eng.vector_search("vecs", "sx", q, k=3)
+    finally:
+        t.join()
 
 
 def test_drop_vector_index_then_drop_column(spark, tmp_path):
