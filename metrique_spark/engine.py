@@ -887,20 +887,6 @@ class Engine:
         # the index lives inside the cube directory without polluting it
         return self.fs.join(self._path(cube), f"_ann_{name}")
 
-    def _ann_root(self, cube: str, name: str) -> tuple[str, dict]:
-        """(text, root) of a committed index — one GET. An older-form
-        index refuses with the rebuild instruction
-        (``similarity._parse_root``)."""
-        from metrique_spark.functions import similarity as _sim
-
-        apath = self._ann_path(cube, name)
-        raw = _sim._root_text(self.fs, apath)
-        if raw is None:
-            raise ValueError(
-                f"cube {cube!r} has no committed vector index {name!r} "
-                "(build_vector_index, or a crashed build — rebuild)")
-        return raw, _sim._parse_root(apath, raw)
-
     def build_vector_index(self, cube: str, name: str, vec_col: str,
                            kind: str = "ivf", id_col: str = "_oid",
                            auto_refresh: bool = False,
@@ -956,10 +942,8 @@ class Engine:
             # superseded versions just to drop them
             df = self._scan(snap, date=None).drop("_current", *_INTERNAL)
             apath = self._ann_path(cube, name)
-            old = _sim._root_text(self.fs, apath)
             try:
-                if old is not None:
-                    _sim._parse_root(apath, old)
+                old = (_sim._load_root(self.fs, apath) or (None,))[0]
             except ValueError:
                 old = None
             if old is None:
@@ -1012,13 +996,13 @@ class Engine:
             if not d.startswith("_ann_"):
                 continue
             apath = self.fs.join(path, d)
-            raw = _sim._root_text(self.fs, apath)
-            if raw is None:
-                continue  # crashed first build — uncommitted
             try:
-                root = _sim._parse_root(apath, raw)
+                got = _sim._load_root(self.fs, apath)
             except ValueError:
                 continue  # older form: only a rebuild makes it usable
+            if got is None:
+                continue  # crashed first build — uncommitted
+            root = got[1]
             m = {k: v for k, v in root.items()
                  if k not in ("model", "granules", "schema")}
             m["stale"] = m.get("gen") != live
@@ -1031,27 +1015,37 @@ class Engine:
                       k: int = 5, nprobe: int | None = None,
                       allow_stale: bool = False) -> DataFrame:
         """Search a cube's persisted ANN index — exactly the granules
-        its committed root names, so a crashed or in-flight writer is
-        invisible. Fails loud when the root was built against a
-        superseded generation (the corpus changed under it) unless
-        ``allow_stale=True`` — a stale ANN answer LOOKS fine, which is
-        exactly why it must not be silent. Under ``Engine(lock_wait=N)``
-        a stale search re-reads the root until a refresh (an
-        auto-refresh commit epilogue, say) publishes the live
-        generation, or the deadline passes. Returns the family's
-        (query_id, neighbor_id, sim|score) frame; neighbor ids are the
-        cube's ``_oid`` values by default."""
+        its committed root names, so a crashed writer's directories are
+        invisible. A search whose frame runs while a concurrent writer
+        publishes a new root can fail with a missing-file error (the
+        publish deletes the granules it retires); re-run it. Fails loud
+        when the root was built against a superseded generation (the
+        corpus changed under it) unless ``allow_stale=True`` — a stale
+        ANN answer LOOKS fine, which is exactly why it must not be
+        silent. Under ``Engine(lock_wait=N)`` a stale search re-reads
+        the root while another writer holds the cube's lease (a refresh,
+        or an auto-refresh commit epilogue, in flight) until the live
+        generation is published or the deadline passes; with no writer
+        in flight nothing can make the index live, so it fails at once.
+        Returns the family's (query_id, neighbor_id, sim|score) frame;
+        neighbor ids are the cube's ``_oid`` values by default."""
         import time as _time
 
         from metrique_spark.functions import similarity as _sim
 
+        apath = self._ann_path(cube, name)
         deadline = _time.monotonic() + self.lock_wait
         backoff = 0.05
         while True:
-            _, root = self._ann_root(cube, name)
+            _, root = _sim._read_root(self.fs, apath)
             live = self._resolve(self._path(cube)).gen
             if (allow_stale or root.get("gen") == live
                     or _time.monotonic() + backoff > deadline):
+                break
+            if not self._lease(cube).busy():
+                # no writer in flight: one re-read catches a refresh
+                # that published between the root read and the check
+                _, root = _sim._read_root(self.fs, apath)
                 break
             _time.sleep(backoff)
             backoff = min(backoff * 2, 1.0)
@@ -1063,8 +1057,8 @@ class Engine:
                 "generation retained), re-run build_vector_index, or "
                 "pass allow_stale=True to search the superseded corpus "
                 "deliberately")
-        return _sim._topk(self.spark, self._ann_path(cube, name), root,
-                          queries, k, nprobe, root["vec_col"])
+        return _sim._topk(self.spark, apath, root, queries, k, nprobe,
+                          root["vec_col"])
 
     def refresh_vector_index(self, cube: str, name: str,
                              drift_tol: float | None = None) -> dict:
@@ -1103,15 +1097,15 @@ class Engine:
         ``{"appended": n, "removed": n, "gen": live, "drift": {...}}``."""
         from metrique_spark.functions import similarity as _sim
 
+        apath = self._ann_path(cube, name)
         with self._write_lock(cube):
-            raw, root = self._ann_root(cube, name)
+            raw, root = _sim._read_root(self.fs, apath)
             snap = self._resolve(self._path(cube))
             live = snap.gen
             if root.get("gen") == live:
                 return {"appended": 0, "removed": 0, "gen": live}
             id_col, vec_col = root["id_col"], root["vec_col"]
             kind = root["kind"]
-            apath = self._ann_path(cube, name)
             newc = self._scan(snap, date=None).select(id_col, vec_col)
             # diff the live corpus against the INDEX'S OWN CONTENT —
             # IVF stores raw vectors (compare directly); the PQ families
@@ -1252,7 +1246,6 @@ class Engine:
         from metrique_spark.functions import similarity as _sim
 
         with self._write_lock(cube):
-            self._ann_root(cube, name)
             if small_bytes is Engine._FULL_COMPACT:
                 small_bytes = self.compact_small_bytes
             return _sim.compact_pq_index(
@@ -1279,9 +1272,7 @@ class Engine:
             if not self.warehouse or cube in self._held_locks:
                 yield
                 return
-            lease = LeaseLock(
-                self.fs, self.fs.join(self.warehouse, f".{cube}.lock"),
-                ttl=self.lock_ttl)
+            lease = self._lease(cube)
             import time as _time
 
             deadline = _time.monotonic() + self.lock_wait
@@ -1308,6 +1299,11 @@ class Engine:
                 lease.release()
 
         return _cm()
+
+    def _lease(self, cube: str) -> LeaseLock:
+        return LeaseLock(self.fs,
+                         self.fs.join(self.warehouse, f".{cube}.lock"),
+                         ttl=self.lock_ttl)
 
     _LAYOUT_SIDECAR = "_layout.json"
     # Highest on-disk format this engine version understands. A

@@ -427,6 +427,15 @@ class LeaseLock:
                     f"lease {self.path}: lost the reclaim race twice")
         raise LeaseHeldError(f"lease {self.path}: could not acquire")
 
+    def busy(self) -> bool:
+        """Whether a live holder has the lease right now — one GET, no
+        write; a dead holder's leftover record counts as free."""
+        try:
+            cur = self.fs.read_text(self.path)
+        except OSError:
+            return False
+        return not self._holder_dead(cur)
+
     def release(self) -> None:
         if self._token is not None:
             self.fs.delete_if_match(self.path, self._token)

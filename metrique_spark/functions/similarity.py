@@ -369,6 +369,21 @@ def ivf_assign(
     literal expressions, so plan size is independent of ``nlist``/dim. At
     scale, persist the result partitioned by ``bucket``.
     """
+    centroids = _ivf_centroids(df, nlist, id_col, vec_col, train_iters)
+    vectors = df.select(
+        F.col(id_col).alias("__vid"), _as_double(vec_col).alias("v"))
+    assigned = (
+        _nearest_buckets(vectors, centroids, "v", 1)
+        .select(F.col("__vid").alias(id_col), "v",
+                F.col("centroid_id").alias("bucket"))
+    )
+    return assigned, centroids
+
+
+def _ivf_centroids(df: DataFrame, nlist: int, id_col: str, vec_col: str,
+                   train_iters: int) -> DataFrame:
+    """``ivf_assign``'s (centroid_id, cvec) table: the sampled init plus
+    ``train_iters`` Lloyd rounds."""
     ranked = df.select(
         F.col(id_col), _as_double(vec_col).alias("v"),
         F.xxhash64(F.col(id_col).cast("string")).alias("h"),
@@ -377,17 +392,13 @@ def ivf_assign(
         ranked.orderBy("h").limit(nlist)
         .select(F.col(id_col).alias("centroid_id"), F.col("v").alias("cvec"))
     )
-    vectors = df.select(
-        F.col(id_col).alias("__vid"), _as_double(vec_col).alias("v"))
-    for _ in range(train_iters):
-        centroids = _lloyd_round(vectors, centroids).localCheckpoint(
-            eager=True)
-    assigned = (
-        _nearest_buckets(vectors, centroids, "v", 1)
-        .select(F.col("__vid").alias(id_col), "v",
-                F.col("centroid_id").alias("bucket"))
-    )
-    return assigned, centroids
+    if train_iters:
+        vectors = df.select(
+            F.col(id_col).alias("__vid"), _as_double(vec_col).alias("v"))
+        for _ in range(train_iters):
+            centroids = _lloyd_round(vectors, centroids).localCheckpoint(
+                eager=True)
+    return centroids
 
 
 _KMEANS_CENTS_ATTR = "_kmeans_cents"
@@ -740,19 +751,21 @@ def write_ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     train_iters: int = 0,
+    fs=None,
 ) -> None:
     """Materialize the IVF index on storage: the raw vectors partitioned
     by ``bucket`` (so probes prune at the partition level) plus the
     centroid table, committed under one ``_ann.json`` root (see the
     persisted-index protocol below). Index once, search many — searches
-    never re-assign the corpus."""
-    _write_index(df, path, None, "ivf", id_col, vec_col, nlist=nlist,
+    never re-assign the corpus. ``fs`` is the ``metrique_spark.fs``
+    backend the root is read and swapped through (default: local)."""
+    _write_index(df, path, fs, "ivf", id_col, vec_col, nlist=nlist,
                  train_iters=train_iters)
 
 
-def read_ivf_index(spark, path: str) -> tuple:
+def read_ivf_index(spark, path: str, fs=None) -> tuple:
     """(assigned, centroids) back from ``write_ivf_index`` output."""
-    _, root = _read_root(_default_fs(None), path)
+    _, root = _read_root(_default_fs(fs), path)
     return (_frame(spark, path, root), spark.read.parquet(
         f"{path}/{root['model']['centroid_dir']}"))
 
@@ -762,6 +775,7 @@ def append_to_ivf_index(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    fs=None,
 ) -> None:
     """Extend a stored IVF index with a new batch — the ANN analog of the
     appendable MinHash text index: assign the batch against the STORED
@@ -774,7 +788,7 @@ def append_to_ivf_index(
     vectors identically. Centroids drifting from the data distribution
     degrade recall, not correctness; re-run ``write_ivf_index`` when
     bucket sizes skew."""
-    fs = _default_fs(None)
+    fs = _default_fs(fs)
     raw, root = _read_root(fs, path)
     _publish(fs, path, raw, _stage_append(
         batch.withColumnRenamed(id_col, root["id_col"]), path, root,
@@ -1702,32 +1716,37 @@ def _root_text(fs, path: str) -> str | None:
         return None
 
 
-def _parse_root(path: str, raw: str) -> dict:
-    """A root in the current on-disk form. A root naming no granules was
-    written before indexes committed by root (its data lives in
-    directories it does not name): refuse with the rebuild instruction
-    and leave that data in place."""
+def _load_root(fs, path: str) -> tuple[str, dict] | None:
+    """(text, root) of the committed index at ``path`` — one GET — or
+    None when there is none. A root naming no granules was written
+    before indexes committed by root (its data lives in directories it
+    does not name): refuse with the rebuild instruction and leave that
+    data in place."""
     import json
 
+    raw = _root_text(fs, path)
+    if raw is None:
+        return None
     root = json.loads(raw)
     if "granules" not in root:
         raise ValueError(
             f"ANN index at {path!r} is in an older on-disk form (its "
             f"{_ROOT} names no granules) — rebuild it (build_vector_index "
             "or the family's write_*_index); its data is left in place")
-    return root
+    return raw, root
 
 
 def _read_root(fs, path: str) -> tuple[str, dict]:
-    """(text, root) of the committed index at ``path`` — one GET. Fails
-    loud when there is none: codes without their model are meaningless,
-    and silently retraining would score against the wrong codewords."""
-    raw = _root_text(fs, path)
-    if raw is None:
+    """``_load_root`` that fails loud when there is no root: codes
+    without their model are meaningless, and silently retraining would
+    score against the wrong codewords."""
+    got = _load_root(fs, path)
+    if got is None:
         raise ValueError(
-            f"no ANN index at {path!r} ({_ROOT} missing — uncommitted, "
-            "not an index, or an older on-disk form: rebuild it)")
-    return raw, _parse_root(path, raw)
+            f"no committed vector index at {path!r} ({_ROOT} missing — "
+            "never built, a crashed first build, or an older on-disk "
+            "form: rebuild it)")
+    return got
 
 
 def _meta(root: dict) -> dict:
@@ -1805,19 +1824,25 @@ def _write_granules(df: DataFrame, path: str, root: dict) -> list[str]:
     — into fresh leaves and return their relpaths. This write's own
     ``wid`` suffixes every leaf name, so the append-mode write only ever
     creates directories: never one a root names, nor one a crashed
-    attempt left behind (and no ``_SUCCESS`` marker above them)."""
-    parts = _parts(root)
-    df = (df.withColumn("__abatch",
-                        F.concat(F.col("__abatch"), F.lit("." + _new_wid())))
-          .localCheckpoint(eager=True))
-    leaves = sorted(_leaf(root, r)
-                    for r in df.select(*parts).distinct().collect())
-    if leaves:
-        (df.write.partitionBy(*parts).mode("append")
-         .option("mapreduce.fileoutputcommitter.marksuccessfuljobs",
-                 "false")
-         .parquet(f"{path}/{_table(root)}"))
-    return leaves
+    attempt left behind (and no ``_SUCCESS`` marker above them). The
+    written leaves are then found by one glob on that ``wid`` through
+    the Hadoop FileSystem that wrote them — a directory listing, not a
+    second pass over the rows."""
+    import re
+
+    spark, table, wid = df.sparkSession, _table(root), _new_wid()
+    (df.withColumn("__abatch", F.concat(F.col("__abatch"), F.lit("." + wid)))
+     .write.partitionBy(*_parts(root)).mode("append")
+     .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+     .parquet(f"{path}/{table}"))
+    # the index path is literal: escape the glob metacharacters in it
+    lit = re.sub(r"([\\{}\[\]*?])", r"\\\1", f"{path}/{table}")
+    pat = spark._jvm.org.apache.hadoop.fs.Path(
+        f"{lit}/*/__abatch=*.{wid}")
+    found = pat.getFileSystem(
+        spark._jsc.hadoopConfiguration()).globStatus(pat) or []
+    return sorted(f"{table}/{st.getPath().getParent().getName()}/"
+                  f"{st.getPath().getName()}" for st in found)
 
 
 def _publish(fs, path: str, old_raw: str | None, root: dict) -> None:
@@ -1855,14 +1880,14 @@ def _vacuum(fs, path: str) -> None:
     root does not name goes (crashed writers' fresh leaves and Spark
     ``_temporary`` dirs). An older-form index keeps its data until
     rebuilt."""
-    raw = _root_text(fs, path)
-    if raw is None:
-        fs.delete_dir(path)
-        return
     try:
-        named = _named(_parse_root(path, raw)) | {_ROOT}
+        got = _load_root(fs, path)
     except ValueError:
         return
+    if got is None:
+        fs.delete_dir(path)
+        return
+    named = _named(got[1]) | {_ROOT}
     above = {d.rsplit("/", i)[0] for d in named
              for i in range(1, d.count("/") + 1)}
 
@@ -1879,9 +1904,9 @@ def _vacuum(fs, path: str) -> None:
 
 
 def _train_ivf(df, path, id_col, vec_col, nlist=16, train_iters=0):
-    _, cents = ivf_assign(df, nlist, id_col, vec_col, train_iters)
     cdir = f"centroids-{_new_wid()}"
-    cents.write.parquet(f"{path}/{cdir}")
+    _ivf_centroids(df, nlist, id_col, vec_col, train_iters).write.parquet(
+        f"{path}/{cdir}")
     return {"centroid_dir": cdir}
 
 

@@ -370,11 +370,27 @@ def test_ivf_index_append_and_search(spark, tmp_path):
     batch = spark.createDataFrame(extra,
                                   "vec_id long, embedding array<float>")
 
-    path = str(tmp_path / "ivf_app")
-    sim.write_ivf_index(df, path, nlist=4)
-    sim.append_to_ivf_index(batch, path)
+    from metrique_spark.fs import LocalFS
 
-    assigned, centroids = sim.read_ivf_index(spark, path)
+    class CountingFS(LocalFS):
+        swaps = 0
+
+        def put_if_absent(self, *a, **kw):
+            self.swaps += 1
+            return super().put_if_absent(*a, **kw)
+
+        def replace_if_match(self, *a, **kw):
+            self.swaps += 1
+            return super().replace_if_match(*a, **kw)
+
+    # every root read and swap goes through the caller's fs backend
+    fs = CountingFS()
+    path = str(tmp_path / "ivf_app")
+    sim.write_ivf_index(df, path, nlist=4, fs=fs)
+    sim.append_to_ivf_index(batch, path, fs=fs)
+    assert fs.swaps == 2
+
+    assigned, centroids = sim.read_ivf_index(spark, path, fs=fs)
     assert assigned.count() == 130  # old corpus untouched, batch added
 
     # appended vectors are searchable: full-probe over the extended

@@ -756,10 +756,11 @@ def test_search_waits_out_inflight_refresh_with_lock_wait(spark,
                                                           tmp_path):
     """Engine(lock_wait=N) applies to READERS of a stale index too:
     instead of the stale-generation error, vector_search re-reads the
-    root until a refresh in flight on another session publishes the
-    live generation (the common case is an auto-refresh commit epilogue
-    finishing in seconds) and then answers from that committed root."""
+    root while a refresh in flight on another session holds the cube's
+    lease (the common case is an auto-refresh commit epilogue finishing
+    in seconds) and then answers from the root it publishes."""
     import threading
+    import time
 
     wh = str(tmp_path / "wh")
     eng = Engine(spark, warehouse=wh, lock_wait=30.0)
@@ -768,12 +769,20 @@ def test_search_waits_out_inflight_refresh_with_lock_wait(spark,
     eng.upsert("vecs", _vrows(spark, [(99_999, [0.25] * 64, 1)],
                               "2014-02-01"), stamped=True)
     writer = Engine(spark, warehouse=wh)
-    t = threading.Timer(
-        1.5, lambda: writer.refresh_vector_index("vecs", "sx"))
+    leased = threading.Event()
+
+    def refresh():
+        with writer._write_lock("vecs"):
+            leased.set()
+            time.sleep(1.5)
+            writer.refresh_vector_index("vecs", "sx")
+
+    t = threading.Thread(target=refresh)
     t.start()
     q = spark.createDataFrame(
         [(0, [0.1] * 64)], "_oid long, embedding array<double>")
     try:
+        assert leased.wait(60)
         assert eng.vector_search("vecs", "sx", q, k=3).count() == 3
         assert not eng.vector_index_list("vecs")["sx"]["stale"]
     finally:
@@ -784,6 +793,26 @@ def test_search_waits_out_inflight_refresh_with_lock_wait(spark,
                              "2014-03-01"), stamped=True)
     with pytest.raises(ValueError, match="generation"):
         ff.vector_search("vecs", "sx", q, k=3)
+
+
+def test_stale_search_without_writer_fails_fast_under_lock_wait(
+        spark, tmp_path):
+    """With no writer holding the cube's lease nothing can make a stale
+    index live, so a lock_wait reader refuses at once instead of
+    sleeping out the deadline."""
+    import time
+
+    eng = Engine(spark, warehouse=str(tmp_path / "wh"), lock_wait=30.0)
+    _emb_cube(spark, eng)
+    eng.build_vector_index("vecs", "sx", vec_col="embedding", kind="sq8")
+    eng.upsert("vecs", _vrows(spark, [(99_999, [0.25] * 64, 1)],
+                              "2014-02-01"), stamped=True)
+    q = spark.createDataFrame(
+        [(0, [0.1] * 64)], "_oid long, embedding array<double>")
+    t0 = time.monotonic()
+    with pytest.raises(ValueError, match="generation"):
+        eng.vector_search("vecs", "sx", q, k=3)
+    assert time.monotonic() - t0 < 10.0
 
 
 def test_crashed_refresh_leaves_committed_root_compactable(
@@ -826,20 +855,31 @@ def test_search_wait_survives_concurrent_drop(spark, tmp_path):
     the root gets the same 'no committed vector index' ValueError as
     the pre-wait check — never a raw file-not-found."""
     import threading
+    import time
 
-    eng = Engine(spark, warehouse=str(tmp_path / "wh"), lock_wait=30.0)
+    wh = str(tmp_path / "wh")
+    eng = Engine(spark, warehouse=wh, lock_wait=30.0)
     _emb_cube(spark, eng)
     eng.build_vector_index("vecs", "sx", vec_col="embedding", kind="sq8")
     eng.upsert("vecs", _vrows(spark, [(99_999, [0.25] * 64, 1)],
                               "2014-02-01"), stamped=True)
-    # the drop removes the whole _ann_sx dir — root included, which
-    # ends the reader's wait with the refusal
-    t = threading.Timer(
-        1.0, lambda: eng.drop_vector_index("vecs", "sx"))
+    writer = Engine(spark, warehouse=wh)
+    leased = threading.Event()
+
+    # the drop, under a lease the reader waits on, removes the whole
+    # _ann_sx dir — root included, which ends the wait with the refusal
+    def drop():
+        with writer._write_lock("vecs"):
+            leased.set()
+            time.sleep(1.0)
+            writer.drop_vector_index("vecs", "sx")
+
+    t = threading.Thread(target=drop)
     t.start()
     q = spark.createDataFrame(
         [(0, [0.1] * 64)], "_oid long, embedding array<double>")
     try:
+        assert leased.wait(60)
         with pytest.raises(ValueError, match="no committed vector index"):
             eng.vector_search("vecs", "sx", q, k=3)
     finally:
