@@ -2207,15 +2207,15 @@ def sim_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the index-once/search-many path, value-checked against the same
     brute-force oracle as sim_ivf_fullprobe. Probes on the partitioned
     layout prune at the directory level."""
-    import tempfile
-
     _utc(spark)
     e = _t(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") < 10)
-    path = os.path.join(tempfile.gettempdir(),
-                        "metrique_spark_entry", "ivf_index")
-    similarity.write_ivf_index(e, path, nlist=16)
-    assigned, centroids = similarity.read_ivf_index(spark, path)
+    path = _index_dir(sf_dir, "ivfidx_n16")
+    try:
+        assigned, centroids = similarity.read_ivf_index(spark, path)
+    except ValueError:
+        similarity.write_ivf_index(e, path, nlist=16)
+        assigned, centroids = similarity.read_ivf_index(spark, path)
     return similarity.ivf_topk_indexed(assigned, centroids, q, k=5,
                                        nprobe=16)
 

@@ -24,7 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metrique_spark import temporal, upsert as _upsert
-from metrique_spark.fs import FileSystem, LeaseHeldError, LeaseLock, LocalFS
+from metrique_spark.fs import (ConcurrentWriteError, FileSystem,
+                               LeaseHeldError, LeaseLock, LocalFS, publish)
+from metrique_spark.fs import vacuum as _vacuum
 from metrique_spark.mql import (compile_mql, date_end_lower_bound,
                                 date_is_current_only,
                                 date_range_predicate,
@@ -40,15 +42,6 @@ _log = logging.getLogger("metrique_spark.engine")
 # default fields always appended to explicit projections
 # (reference sqlalchemy.py:264-273)
 DEFAULT_FIELDS = ("_start", "_end", "_oid")
-
-
-class ConcurrentWriteError(RuntimeError):
-    """A second writer attempted a mutating operation on a cube whose
-    advisory write lock is held. The commit protocol is crash-safe but
-    single-writer: two interleaved snapshot merges could each read the
-    open partition, close different version sets, and overwrite each
-    other's open rewrite — silently corrupting version chains. Fail fast
-    instead."""
 
 
 # wall-clock rendering for the per-directory max(_end) stats: zero-padded
@@ -921,6 +914,7 @@ class Engine:
             raise ValueError(
                 f"unknown vector-index kind {kind!r}; one of "
                 f"{self._ANN_KINDS}")
+        _sim._check_gbuckets(params)
         if kind == "sq8" and params:
             # sq8 has no tuning knobs; recording ignored params in the
             # root would report configuration that was never applied
@@ -1912,9 +1906,9 @@ class Engine:
             stats=self._merged_stats(meta, new_stats, dirs, hist,
                                      path=snap.path),
             schema=meta["schema"] if schema is None else schema,
+            dropped=self._retained_dirs(meta) - dirs.union(
+                *(h["dirs"] for h in hist)),
             **flip_kw)
-        self._sweep_dropped(
-            snap.path, meta, dirs | {d for h in hist for d in h["dirs"]})
         return gen
 
     def _manifest_root(self, path: str,
@@ -2177,10 +2171,16 @@ class Engine:
                        stats: dict | None = None, *,
                        schema: dict,
                        oid_buckets: int | object = _CARRY,
-                       migration: dict | None | object = _CARRY) -> None:
-        """The commit point: ONE atomic pointer write. CAS against the
-        text read at operation start — under the writer lease this only
-        fails if a TTL-expired zombie writer raced us; fail loud.
+                       migration: dict | None | object = _CARRY,
+                       dropped=()) -> None:
+        """The commit point: ONE atomic pointer write through
+        ``fs.publish`` — a CAS against the text read at operation start
+        (under the writer lease this only fails if a TTL-expired zombie
+        writer raced us; fail loud), then the ``dropped`` directories
+        (what the prior generations retained and this one does not) go
+        by name, without listing: at 100 TB the per-commit tree LIST
+        would be the last O(cube) metadata op in the commit path.
+        Crash-stranded directories are left for ``vacuum``.
 
         Every cube commits the SEGMENTED layout (format 5): the
         directory list and per-directory stats are re-grouped into
@@ -2248,22 +2248,12 @@ class Engine:
             self._flip_build_segmented(path, prior_root, gen, dirs,
                                        history, stats, schema, stamps,
                                        body)
-        new = json.dumps(body)
-        p = self.fs.join(path, self._MANIFEST_SIDECAR)
-        if old_raw is None:
-            # first flip is a CAS too (put-if-absent): two racing first
-            # writers (TTL-expired zombie vs reclaimer) must not both
-            # "succeed" — the loser's sweep would delete the winner's
-            # directories while the surviving manifest references them
-            if not self.fs.put_if_absent(p, new):
-                raise ConcurrentWriteError(
-                    f"cube manifest at {path!r} appeared under our "
-                    "writer lease — concurrent first writer detected, "
-                    "commit aborted")
-        elif not self.fs.replace_if_match(p, new, old_raw):
-            raise ConcurrentWriteError(
-                f"cube manifest at {path!r} changed under our writer "
-                "lease — concurrent writer detected, commit aborted")
+        # the first flip is a CAS too (put-if-absent): two racing first
+        # writers (TTL-expired zombie vs reclaimer) must not both
+        # "succeed" — the loser's sweep would delete the winner's
+        # directories while the surviving manifest references them
+        publish(self.fs, path, self._MANIFEST_SIDECAR, json.dumps(body),
+                old_raw, dropped)
         # retire segment files no retained root references (this
         # commit's superseded ones, or strands of crashed attempts)
         with self._phase("flip_sweep_segments"):
@@ -2413,60 +2403,17 @@ class Engine:
                 self.fs.delete(full)
                 self._seg_cache.pop(full, None)
 
-    def _sweep_dropped(self, path: str, prior_meta: dict,
-                       keep: set[str]) -> None:
-        """Post-commit sweep WITHOUT LISTING: the directories this
-        commit retired are exactly (what the prior manifest retained)
-        minus (what the new one retains) — both known, so the sweep
-        costs O(dropped) deletes, never an O(cube) directory walk (at
-        100 TB the per-commit tree LIST was the last O(cube) metadata
-        op left in the commit path; object-store LIST round trips make
-        it the dominant one). Crash-STRANDED directories (invisible —
-        no manifest ever referenced them) are left for ``vacuum``'s
-        listing sweep instead of being collected per commit."""
-        for d in sorted(self._retained_dirs(prior_meta) - keep,
-                        reverse=True):
-            full = self.fs.join(path, d)
-            if self.fs.isdir(full):
-                self.fs.delete_dir(full)
-            # prune emptied parent shells (__obucket= / __stime= /
-            # _current= levels) so point-lookup listings never walk
-            # hollow directories — bounded by the dropped dir's depth
-            parts = d.split("/")
-            for i in range(len(parts) - 1, 0, -1):
-                parent = self.fs.join(path, *parts[:i])
-                if self.fs.isdir(parent) and not self.fs.listdir(parent):
-                    self.fs.delete_dir(parent)
-                else:
-                    break
-
     def _sweep_unreferenced(self, path: str, keep: set[str]) -> None:
         """Delete data directories the live manifest does not reference
         — superseded OR stranded by crashed attempts. This is the
-        LISTING sweep: it walks the cube's directory tree, so it runs
-        only where that is cheap or necessary (first write,
-        ``vacuum``); ordinary commits use ``_sweep_dropped``, which
-        needs no listing. Runs under the writer lease — only the
-        writer lists; readers never do."""
-        def walk(dirpath: str, rel: str) -> None:
-            for d in self.fs.listdir(dirpath):
-                full = self.fs.join(dirpath, d)
-                r = f"{rel}/{d}"
-                if d.startswith("__batch="):
-                    if r not in keep and self.fs.isdir(full):
-                        self.fs.delete_dir(full)
-                elif (d.startswith(("__obucket=", "__stime="))
-                        and self.fs.isdir(full)):
-                    walk(full, r)
-                    if not self.fs.listdir(full):
-                        self.fs.delete_dir(full)  # emptied shell
-
-        for cur in self.fs.listdir(path):
-            if cur.startswith("_current="):
-                full = self.fs.join(path, cur)
-                walk(full, cur)
-                if not self.fs.listdir(full):
-                    self.fs.delete_dir(full)
+        LISTING sweep (``fs.vacuum`` over the ``_current=`` trees; the
+        sidecars and index directories beside them stay): it runs only
+        where that is cheap or necessary (first write, ``vacuum``);
+        ordinary commits drop by name through ``fs.publish``. Runs
+        under the writer lease — only the writer lists; readers never
+        do."""
+        _vacuum(self.fs, path, keep | {d for d in self.fs.listdir(path)
+                                       if not d.startswith("_current=")})
 
     def _write_dirs(
         self, rows: DataFrame, snap: _Snapshot, buckets: int,

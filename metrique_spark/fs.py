@@ -4,8 +4,8 @@ Every *data-plane* read/write in this engine goes through Spark (parquet
 via the JVM's Hadoop FileSystem layer, which already speaks local disk,
 HDFS, and object stores). What does NOT ride a Hadoop path string is the
 *control plane*: warehouse catalog listings, advisory writer locks,
-params sidecars (`_minhash_params.json`, `_indexes.json`), and the
-stream-dedup sink's `_SUCCESS` commit probing. Those used to call
+the `_indexes.json` registry, and the root every store commits through
+(``publish`` / ``vacuum`` below). Those used to call
 ``os.path`` / ``glob`` / ``O_CREAT|O_EXCL`` directly — POSIX-only
 semantics that do not exist on an object store (no atomic rename, no
 exclusive-create file handles, no real directories).
@@ -39,6 +39,13 @@ Two backends ship:
   sink / index test suites run unmodified against it — proving the
   protocols never needed POSIX in the first place.
 
+``publish`` is the one commit point of every store — cube manifests,
+ANN indexes, MinHash indexes and streaming sink state: a store is a set
+of immutable directories named in one root object, a commit writes
+fresh directories and then swaps the root by compare-and-swap, and
+what the swap retired is deleted by name. ``vacuum`` is its listing
+counterpart for what crashed writers stranded.
+
 ``LeaseLock`` is the rename-free advisory writer lock built on these
 primitives (replacing the earlier O_EXCL lockfile + guard-file reclaim
 dance): the lock object holds a JSON lease record carrying a unique
@@ -63,6 +70,14 @@ import uuid
 
 class LeaseHeldError(RuntimeError):
     """The lease is held by a live (or not-provably-dead) owner."""
+
+
+class ConcurrentWriteError(RuntimeError):
+    """A second writer raced a mutating operation on a store: its
+    writer lease is held, or its root changed between this writer's
+    read and its commit. Every commit protocol here is crash-safe but
+    single-writer — two interleaved commits could each retire
+    directories the other one names — so the loser fails fast."""
 
 
 def _pid_start_time(pid: int) -> int | None:
@@ -448,3 +463,62 @@ class LeaseLock:
             yield self
         finally:
             self.release()
+
+
+def publish(fs: FileSystem, path: str, name: str, text: str,
+            expected: str | None, dropped=()) -> None:
+    """THE commit point of every store rooted at ``path``: swap the
+    root object ``name`` to ``text`` by compare-and-swap against the
+    text the writer read (``expected``; put-if-absent when there was
+    none), then delete the ``dropped`` directories — the ones the old
+    root named and the new one does not, relative to ``path`` — and
+    prune the parents that leaves empty. Both sets are known, so
+    nothing is listed. A lost swap raises ``ConcurrentWriteError`` and
+    deletes nothing. Directories a crashed writer stranded are
+    ``vacuum``'s."""
+    p = fs.join(path, name)
+    if expected is None:
+        if not fs.put_if_absent(p, text):
+            raise ConcurrentWriteError(
+                f"{p!r} appeared under this writer — concurrent first "
+                "writer detected, commit aborted")
+    elif not fs.replace_if_match(p, text, expected):
+        raise ConcurrentWriteError(
+            f"{p!r} changed under this writer — concurrent writer "
+            "detected, commit aborted")
+    drop(fs, path, dropped)
+
+
+def drop(fs: FileSystem, path: str, dirs) -> None:
+    """Delete the named directories under ``path`` (deepest first) and
+    the parent shells each one empties — the only LIST is one per
+    parent checked."""
+    for d in sorted(dirs, reverse=True):
+        fs.delete_dir(fs.join(path, d))
+        parts = d.split("/")
+        for i in range(len(parts) - 1, 0, -1):
+            parent = fs.join(path, *parts[:i])
+            if fs.listdir(parent):
+                break
+            fs.delete_dir(parent)
+
+
+def vacuum(fs: FileSystem, path: str, keep) -> None:
+    """Listing sweep of a store: delete every entry under ``path`` that
+    neither is named in ``keep`` (relative paths: the root object and
+    the directories it names) nor lies above a named one. Dot-prefixed
+    entries (CAS and lease sidecars) stay."""
+    keep = set(keep)
+    above = {d.rsplit("/", i)[0] for d in keep
+             for i in range(1, d.count("/") + 1)}
+
+    def walk(rel: str) -> None:
+        for d in fs.listdir(fs.join(path, rel) if rel else path):
+            r = f"{rel}/{d}" if rel else d
+            if r in above:
+                walk(r)
+            elif r not in keep and not d.startswith("."):
+                full = fs.join(path, r)
+                (fs.delete_dir if fs.isdir(full) else fs.delete)(full)
+
+    walk("")

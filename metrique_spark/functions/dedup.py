@@ -439,21 +439,21 @@ def minhash_dedup_pairs(
 
 
 _MINHASH_PARAMS_ATTR = "_minhash_params"
-_MINHASH_SIDECAR = "_minhash_params.json"
+_MINHASH_ROOT = "_minhash.json"
 
 
 def minhash_index(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", num_hashes: int = 64,
                   bands: int = 16, shingle_n: int = 3) -> DataFrame:
     """The persistable LSH index of a corpus: one (id, band, bh) row per
-    band per document. Write it out (``write_minhash_index`` — parquet
-    plus a params sidecar) and incremental dedup never re-reads corpus
-    text except to verify candidates. Append new accepted docs by
-    indexing just the batch and unioning — signatures are content-hashes,
-    so index rows never change, only accumulate.
+    band per document. Write it out (``write_minhash_index``) and
+    incremental dedup never re-reads corpus text except to verify
+    candidates. Append new accepted docs by indexing just the batch and
+    unioning — signatures are content-hashes, so index rows never
+    change, only accumulate.
 
     The signing parameters ride along as a ``_minhash_params`` attribute
-    (and in the storage sidecar): an index signed with non-default
+    (and in the stored index's root): an index signed with non-default
     parameters but probed with defaults would produce near-zero-recall
     band collisions SILENTLY — ``dedup_against_index`` validates them
     instead."""
@@ -465,50 +465,96 @@ def minhash_index(df: DataFrame, id_col: str = "doc_id",
     return out
 
 
-def write_minhash_index(index: DataFrame, path: str,
-                        mode: str = "overwrite", fs=None) -> None:
-    """Persist an LSH index: parquet on (id, band, bh) plus a
-    ``_minhash_params.json`` sidecar recording the signing parameters, so
-    a reader can never probe with mismatched (num_hashes, bands,
-    shingle_n). ``mode="append"`` extends an existing index — the sidecar
-    must already match (validated; appending rows signed differently
-    would silently poison every probe). Sidecar I/O goes through the
-    control-plane ``fs`` backend (default ``LocalFS``) — puts are atomic,
-    so a crash can never leave a truncated sidecar that kills every
-    subsequent reader."""
+def _minhash_root(fs, path: str) -> tuple[str | None, dict | None]:
+    """``(text, root)`` of the MinHash index committed at ``path``, or
+    ``(None, None)`` when nothing is. The ``_minhash.json`` root names
+    the index's part directories and carries the signing params
+    (``stream_dedup_sink`` keeps its state in the same root). An older
+    form — parquet or a ``_minhash_params.json`` sidecar in the
+    directory, no root — is refused, its data left in place."""
     import json
 
-    from metrique_spark.fs import LocalFS
-
-    fs = fs or LocalFS()
-    params = getattr(index, _MINHASH_PARAMS_ATTR, None)
-    side = fs.join(path, _MINHASH_SIDECAR)
-    if mode == "append" and fs.isfile(side):
-        existing = json.loads(fs.read_text(side))
-        if params is not None and params != existing:
+    try:
+        raw = fs.read_text(fs.join(path, _MINHASH_ROOT))
+    except FileNotFoundError:
+        if any(d.endswith(".parquet") or d in ("_SUCCESS",
+                                               "_minhash_params.json")
+               for d in fs.listdir(path)):
             raise ValueError(
-                f"minhash index at {path} was signed with {existing}; "
-                f"refusing to append rows signed with {params}")
-        params = existing
-    index.write.mode(mode).parquet(path)
-    if params is not None:
-        fs.write_text(side, json.dumps(params))
+                f"MinHash index at {path!r} is an older on-disk form (no "
+                f"{_MINHASH_ROOT} root) — rebuild it: write the index "
+                "into an empty directory (a stream_dedup_sink index: "
+                "remove its index, corpus and checkpoint directories and "
+                "replay the stream); the old data is left in place"
+            ) from None
+        return None, None
+    return raw, json.loads(raw)
+
+
+def _minhash_frame(spark, fs, path: str, root: dict) -> DataFrame:
+    """The rows of the part directories ``root`` names, with its
+    signing params attached for ``dedup_against_index``."""
+    out = spark.read.parquet(*[fs.join(path, p) for p in root["parts"]])
+    if root["params"] is not None:
+        setattr(out, _MINHASH_PARAMS_ATTR, root["params"])
+    return out
+
+
+def write_minhash_index(index: DataFrame, path: str,
+                        mode: str = "overwrite", fs=None) -> None:
+    """Persist an LSH index: its (id, band, bh) rows land in a fresh
+    part directory, then ``fs.publish`` swaps the ``_minhash.json`` root
+    that names the live parts and records the signing parameters, so a
+    reader can never probe with mismatched (num_hashes, bands,
+    shingle_n) and never sees a torn write. ``mode="overwrite"``
+    replaces the named parts (and sweeps what crashed writes stranded);
+    ``mode="append"`` adds one — the root's params must match
+    (validated; appending rows signed differently would silently poison
+    every probe). A crash at any point leaves the last committed index
+    readable. Root I/O goes through the control-plane ``fs`` backend
+    (default ``LocalFS``)."""
+    import json
+    import uuid
+
+    from metrique_spark.fs import LocalFS, publish, vacuum
+
+    if mode not in ("overwrite", "append"):
+        raise ValueError(
+            f"write_minhash_index: mode must be 'overwrite' or 'append', "
+            f"got {mode!r}")
+    fs = fs or LocalFS()
+    raw, root = _minhash_root(fs, path)
+    params = getattr(index, _MINHASH_PARAMS_ATTR, None)
+    old = root["parts"] if root else []
+    if mode == "append" and root and root["params"] is not None:
+        if params is not None and params != root["params"]:
+            raise ValueError(
+                f"minhash index at {path} was signed with "
+                f"{root['params']}; refusing to append rows signed with "
+                f"{params}")
+        params = root["params"]
+    part = f"part={uuid.uuid4().hex[:12]}"
+    index.write.parquet(fs.join(path, part))
+    parts = [*old, part] if mode == "append" else [part]
+    publish(fs, path, _MINHASH_ROOT,
+            json.dumps({"params": params, "parts": parts}), raw,
+            set(old) - set(parts))
+    if mode == "overwrite":
+        vacuum(fs, path, {part, _MINHASH_ROOT})
 
 
 def read_minhash_index(spark, path: str, fs=None) -> DataFrame:
-    """Read a persisted LSH index, reattaching the signing parameters
-    from the sidecar (if present) so ``dedup_against_index`` can validate
-    them."""
-    import json
-
+    """Read a persisted LSH index — exactly the part directories its
+    root names, with the signing parameters reattached so
+    ``dedup_against_index`` can validate them. Reads a
+    ``stream_dedup_sink``'s ``index_path`` too: its committed index."""
     from metrique_spark.fs import LocalFS
 
     fs = fs or LocalFS()
-    out = spark.read.parquet(path)
-    side = fs.join(path, _MINHASH_SIDECAR)
-    if fs.isfile(side):
-        setattr(out, _MINHASH_PARAMS_ATTR, json.loads(fs.read_text(side)))
-    return out
+    _raw, root = _minhash_root(fs, path)
+    if root is None:
+        raise ValueError(f"no committed MinHash index at {path!r}")
+    return _minhash_frame(spark, fs, path, root)
 
 
 def dedup_against_index(

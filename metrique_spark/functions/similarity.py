@@ -1846,32 +1846,15 @@ def _write_granules(df: DataFrame, path: str, root: dict) -> list[str]:
 
 
 def _publish(fs, path: str, old_raw: str | None, root: dict) -> None:
-    """THE commit point of every index write: swap the root by CAS
-    (put-if-absent when there was none, replace-if-match against the
-    text the writer read), then delete the directories the old root
-    named and the new one does not — both known, so no listing — and
-    prune the parent shells they empty. Directories a crashed writer
-    stranded are ``Engine.vacuum``'s."""
+    """THE commit point of every index write: ``fs.publish`` swaps the
+    root and deletes what the old root named and the new one does not.
+    Directories a crashed writer stranded are ``Engine.vacuum``'s."""
     import json
 
-    from metrique_spark.engine import ConcurrentWriteError
+    from metrique_spark.fs import publish
 
-    new = json.dumps(root)
-    p = fs.join(path, _ROOT)
-    if not (fs.put_if_absent(p, new) if old_raw is None
-            else fs.replace_if_match(p, new, old_raw)):
-        raise ConcurrentWriteError(
-            f"ANN index root at {path!r} changed under this writer — "
-            "concurrent writer detected, commit aborted")
-    dropped = _named(json.loads(old_raw)) - _named(root) if old_raw else ()
-    for d in sorted(dropped, reverse=True):
-        fs.delete_dir(fs.join(path, d))
-        parts = d.split("/")
-        for i in range(len(parts) - 1, 0, -1):
-            parent = fs.join(path, *parts[:i])
-            if fs.listdir(parent):
-                break
-            fs.delete_dir(parent)
+    publish(fs, path, _ROOT, json.dumps(root), old_raw,
+            _named(json.loads(old_raw)) - _named(root) if old_raw else ())
 
 
 def _vacuum(fs, path: str) -> None:
@@ -1880,27 +1863,16 @@ def _vacuum(fs, path: str) -> None:
     root does not name goes (crashed writers' fresh leaves and Spark
     ``_temporary`` dirs). An older-form index keeps its data until
     rebuilt."""
+    from metrique_spark.fs import vacuum
+
     try:
         got = _load_root(fs, path)
     except ValueError:
         return
     if got is None:
         fs.delete_dir(path)
-        return
-    named = _named(got[1]) | {_ROOT}
-    above = {d.rsplit("/", i)[0] for d in named
-             for i in range(1, d.count("/") + 1)}
-
-    def walk(rel: str) -> None:
-        for d in fs.listdir(fs.join(path, rel) if rel else path):
-            r = f"{rel}/{d}" if rel else d
-            full = fs.join(path, r)
-            if r in above:
-                walk(r)
-            elif r not in named and not d.startswith("."):
-                (fs.delete_dir if fs.isdir(full) else fs.delete)(full)
-
-    walk("")
+    else:
+        vacuum(fs, path, _named(got[1]) | {_ROOT})
 
 
 def _train_ivf(df, path, id_col, vec_col, nlist=16, train_iters=0):
@@ -1973,6 +1945,15 @@ def _encode(batch: DataFrame, path: str, root: dict,
     return rows.withColumn("__gbucket", _gbucket(id_col, model["gbuckets"]))
 
 
+def _check_gbuckets(params: dict) -> None:
+    """``gbuckets`` (see ``_gbucket``) must be an int >= 1 — checked
+    before any training job, since 0 would only fail the encode job on
+    a modulo by zero."""
+    g = params.get("gbuckets", 1)
+    if isinstance(g, bool) or not isinstance(g, int) or g < 1:
+        raise ValueError(f"gbuckets must be an int >= 1, got {g!r}")
+
+
 def _stage_build(df: DataFrame, path: str, kind: str, id_col: str,
                  vec_col: str, **params) -> dict:
     """Train the family's model on ``df`` and write the encoded corpus
@@ -1981,6 +1962,7 @@ def _stage_build(df: DataFrame, path: str, kind: str, id_col: str,
     (nlist/m/k/iters/...)."""
     from pyspark.sql.types import StructType
 
+    _check_gbuckets(params)
     root = {"kind": kind, "id_col": id_col,
             "model": _TRAIN[kind](df, path, id_col, vec_col, **params)}
     rows = _encode(df, path, root, vec_col).withColumn("__abatch",

@@ -19,94 +19,92 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
-# Generational batch-store compaction (shared by the continuous sinks).
+# Sink state: one CAS'd root naming batch and level directories (shared by
+# the continuous sinks).
 #
-# A foreachBatch sink that writes one ``batch={id}`` directory per
-# micro-batch accumulates directories forever — a year of minutely
-# batches is ~500k of listing pressure. The cure is rename-free and
-# sidecar-driven: fold every directory from COMMITTED batches (ids below
-# the running batch — foreachBatch runs batch N only after N-1's
-# checkpoint commit, so those ids can never be re-delivered) into a
-# ``batch=gen{g}`` LEVEL directory, atomically PUT a ``_state.json``
-# naming the live level set and the highest folded id, then sweep the
-# sources. Levels are SIZE-TIERED like the warehouse compactor
+# A foreachBatch sink keeps its state as immutable directories — one
+# ``batch={id}`` directory per micro-batch plus size-tiered ``batch=gen{g}``
+# LEVEL directories — named in ONE root object that commits through
+# ``fs.publish`` like a cube manifest: a micro-batch writes its directory,
+# then CASes the root to name it. Readers take the live set from the root,
+# never from a listing, so a crash between any two steps leaves them
+# reading exactly-once content, and the per-batch path makes no LIST. A
+# replay of a batch the root already names skips the state write; a
+# replay of one it does not (a crashed attempt) overwrites the unnamed
+# directory.
+#
+# A sink that wrote one directory per micro-batch forever would carry a
+# year of minutely batches — ~500k directories. So once more than
+# ``compact_after`` COMMITTED batches (ids below the running batch —
+# foreachBatch runs batch N only after N-1's checkpoint commit, so those
+# ids are never re-delivered) are named, the commit first folds them into
+# a new level. Levels are SIZE-TIERED like the warehouse compactor
 # (``compaction.tier_groups``): each fold creates a new level from the
-# recent partials only, small levels merge together, and ≥4
-# similar-sized larger levels promote into the next level up — so a
-# long-running sink pays O(recent batches) per fold and O(log) lifetime
-# rewrites per byte, never an O(|all state|) rewrite every
-# ``compact_after`` batches (the old single-generation fold re-read and
-# rewrote the ENTIRE prior generation each time — at a 100 TB corpus
-# the dedup sink's fold would have been the job). Readers take the live
-# set from the sidecar — level dirs plus batch dirs above the fold mark
-# — never from a raw listing, so a crash between any two steps leaves
-# them reading exactly-once content; stale sources are ignored and
-# re-swept by the next compaction. A pre-level sidecar (no ``levels``
-# key) refuses with the rebuild instruction; its data is kept.
+# recent partials only, small levels merge together, and ≥4 similar-sized
+# larger levels promote into the next level up — so a long-running sink
+# pays O(recent batches) per fold and O(log) lifetime rewrites per byte,
+# never an O(|all state|) rewrite. The same publish drops what the fold
+# retired by name, and the fold then runs the listing ``fs.vacuum`` for
+# what crashed attempts stranded. An older state — a ``_state.json``
+# without the ``parts`` list, or batch directories with no root — refuses
+# with the rebuild instruction; its data is kept.
 
-_GEN_SIDECAR = "_state.json"
+_STATE_ROOT = "_state.json"
 
 
-def _gen_meta(fs, root: str) -> dict:
-    """The committed state sidecar — one GET; a fresh root starts
-    empty. A sidecar without a ``levels`` list was written before the
-    tiered fold: refuse it (the data stays in place) rather than guess
-    its level set."""
+def _state_root(fs, path: str,
+                batch_id: int | None) -> tuple[str | None, dict]:
+    """``(text, root)`` of the sink state at ``path`` — one GET; a fresh
+    state starts empty. Only when there is no root does a batch list
+    the directory, to refuse an older state whose batch directories no
+    root names (a crashed first attempt of THIS batch is not one); a
+    drain outside any batch (``batch_id`` None) reads nothing there."""
     import json
 
     try:
-        meta = json.loads(fs.read_text(fs.join(root, _GEN_SIDECAR)))
+        raw = fs.read_text(fs.join(path, _STATE_ROOT))
     except FileNotFoundError:
-        return {"compacted_through": -1, "gen": 0, "levels": []}
-    if "levels" not in meta:
+        raw = None
+        if batch_id is None or not any(
+                d.startswith("batch=") and d != f"batch={batch_id}"
+                for d in fs.listdir(path)):
+            return None, {"gen": 0, "parts": []}
+    root = json.loads(raw) if raw else {}
+    if "parts" not in root:
         raise ValueError(
-            f"streaming state at {root!r} has a pre-level {_GEN_SIDECAR} "
-            "(no 'levels' list) — rebuild it: remove this state "
-            "directory and the query's checkpoint, then replay the "
-            "stream; the old data is left in place")
-    return meta
+            f"streaming state at {path!r} is an older on-disk form (no "
+            f"{_STATE_ROOT} naming its batch directories) — rebuild it: "
+            "remove this state directory and the query's checkpoint, then "
+            "replay the stream; the old data is left in place")
+    return raw, root
 
 
-def _gen_flip(fs, root: str, meta: dict) -> None:
-    import json
-
-    fs.write_text(fs.join(root, _GEN_SIDECAR), json.dumps(meta))
-
-
-def _gen_levels(meta: dict) -> list[str]:
-    """Live level directory NAMES per the sidecar."""
-    return list(meta["levels"])
+def _batch_ids(root: dict) -> list[int]:
+    """Ids of the committed ``batch={id}`` directories the root names."""
+    return sorted(int(p[len("batch="):]) for p in root["parts"]
+                  if not p.startswith("batch=gen"))
 
 
-def _gen_dirs(fs, root: str, meta: dict) -> list[str]:
-    """Full paths of the live level dirs that exist on disk."""
-    out = []
-    for d in _gen_levels(meta):
-        full = fs.join(root, d)
-        if fs.isdir(full):
-            out.append(full)
-    return out
-
-
-def _fold_levels(meta: dict, new_ids: list[int], write_fold, du,
+def _fold_levels(root: dict, new_ids: list[int], write_fold, du,
                  level_bytes: int) -> dict:
     """The tiered fold: write the NEW level from ``new_ids``'s batch
     dirs only, then size-tier the level set (small levels merge, ≥4
     similar-sized levels promote — ``compaction.tier_groups``). Returns
-    the next sidecar meta (caller flips + sweeps).
+    the next root (the caller publishes it).
     ``write_fold(src_names, out_name)`` folds the named sibling dirs
-    into ``out_name`` (names are root-relative, so a multi-root sink —
-    index + corpus — folds every root in lockstep under the same level
+    into ``out_name`` (names are root-relative, so a multi-store sink —
+    index + corpus — folds every store in lockstep under the same level
     names); ``du(name)`` is the name's total byte size (summed across
-    roots for multi-root sinks). Every write lands in a gen-numbered
-    dir no live sidecar references, and the numbering is deterministic
-    from the committed meta, so a crashed attempt's dirs are
-    overwritten by the retry or swept after the flip."""
+    stores). Every write lands in a gen-numbered dir no root names, and
+    the numbering is deterministic from the committed root, so a
+    crashed attempt's dirs are overwritten by the retry or vacuumed
+    after it."""
     from metrique_spark.compaction import tier_groups
 
-    gen = meta["gen"] + 1
-    levels = _gen_levels(meta)
-    write_fold([f"batch={i}" for i in new_ids], f"batch=gen{gen}")
+    gen = root["gen"] + 1
+    folded = {f"batch={i}" for i in new_ids}
+    levels = [p for p in root["parts"] if p.startswith("batch=gen")]
+    write_fold(sorted(folded), f"batch=gen{gen}")
     levels.append(f"batch=gen{gen}")
     sizes = {d: du(d) for d in levels}
     for grp in tier_groups(sizes, level_bytes):
@@ -114,48 +112,38 @@ def _fold_levels(meta: dict, new_ids: list[int], write_fold, du,
         write_fold(sorted(grp), f"batch=gen{gen}")
         levels = [d for d in levels if d not in grp]
         levels.append(f"batch=gen{gen}")
-    return {"compacted_through": max(new_ids), "gen": gen,
-            "levels": levels}
+    rest = [p for p in root["parts"]
+            if p not in folded and not p.startswith("batch=gen")]
+    return {**root, "gen": gen, "parts": levels + rest}
 
 
-def _gen_batch_ids(fs, root: str, meta: dict,
-                   upto_exclusive: int | None = None) -> list[int]:
-    """Numeric batch ids above the fold mark (the live, un-compacted
-    partials), optionally bounded above."""
-    ids = []
-    for d in fs.listdir(root):
-        if not d.startswith("batch=") or d.startswith("batch=gen"):
-            continue
-        try:
-            i = int(d[len("batch="):])
-        except ValueError:
-            continue
-        if i > meta["compacted_through"] and (
-                upto_exclusive is None or i < upto_exclusive):
-            ids.append(i)
-    return sorted(ids)
+def _commit_batch(fs, path: str, name: str, raw: str | None, root: dict,
+                  batch_id: int, compact_after: int, stores=(),
+                  **fold) -> dict:
+    """Publish the root ``name`` at ``path`` with the just-written
+    ``batch={batch_id}`` directory named — after folding the committed
+    batches into a new level when more than ``compact_after`` are named
+    (``fold``: ``_fold_levels``' ``write_fold``, ``du`` and
+    ``level_bytes``). What the fold retired is dropped by name from
+    ``path`` and every extra store directory in ``stores``, which
+    ``vacuum`` then sweeps down to what the root names. Returns the new
+    root."""
+    import json
 
+    from metrique_spark.fs import drop, publish, vacuum
 
-def _gen_sweep(fs, root: str, meta: dict) -> None:
-    """Delete superseded sources: EVERY numeric batch dir at or below the
-    fold mark (not just this round's fold set — a crash between a prior
-    flip and its sweep leaves folded dirs behind that later folds would
-    otherwise never revisit) and any generation dir outside the live
-    level set (merged-away levels, crashed prior attempts)."""
-    keep = set(_gen_levels(meta))
-    for d in fs.listdir(root):
-        if not d.startswith("batch="):
-            continue
-        if d.startswith("batch=gen"):
-            if d not in keep:
-                fs.delete_dir(fs.join(root, d))
-            continue
-        try:
-            i = int(d[len("batch="):])
-        except ValueError:
-            continue
-        if i <= meta["compacted_through"]:
-            fs.delete_dir(fs.join(root, d))
+    ids = [i for i in _batch_ids(root) if i < batch_id]
+    new = (_fold_levels(root, ids, **fold) if len(ids) > compact_after
+           else dict(root))
+    new["parts"] = [*new["parts"], f"batch={batch_id}"]
+    dropped = set(root["parts"]) - set(new["parts"])
+    publish(fs, path, name, json.dumps(new), raw, dropped)
+    for store in stores:
+        drop(fs, store, dropped)
+    if dropped:
+        for store in (path, *stores):
+            vacuum(fs, store, {*new["parts"], name})
+    return new
 
 
 def read_events_stream(spark: SparkSession, path: str,
@@ -278,7 +266,7 @@ def stream_upsert_sink(engine, cube: str, checkpoint_dir: str,
     row into ONE snapshot commit (one manifest flip). Durability is
     preserved across the buffering window: rows a crash strands in the
     stage are picked up by the next flush after restart (the stage
-    directory IS the recovery queue), and a crash mid-flush replays
+    root IS the recovery queue), and a crash mid-flush replays
     the same staged batches into the idempotent snapshot merge
     (identical content closes nothing twice). Within one coalesced
     commit, later micro-batches win per oid (batch ids order the
@@ -286,12 +274,14 @@ def stream_upsert_sink(engine, cube: str, checkpoint_dir: str,
     commit order). The returned sink exposes ``flush(spark)`` for a
     final drain after the stream stops.
 
-    The stage's control plane (listing staged batches, clearing them
-    after the fold) rides the ENGINE's ``fs`` abstraction — LIST and
-    prefix-DELETE primitives every object store offers — and the data
-    plane is Spark's own parquet writer, so the coalescing sink stages
-    wherever the engine's warehouse lives; real deployments put the
-    checkpoint dir on the same HDFS/S3 store as the cube."""
+    The stage is sink state like any other (the protocol in the module
+    header): a ``_state.json`` root names the staged batch directories,
+    a staging batch CASes it, and a flush publishes it empty, which
+    drops what it folded by name. Its control plane rides the ENGINE's
+    ``fs`` abstraction and the data plane is Spark's own parquet
+    writer, so the coalescing sink stages wherever the engine's
+    warehouse lives; real deployments put the checkpoint dir on the
+    same HDFS/S3 store as the cube."""
 
     def _commit(batch_df: DataFrame):
         engine.upsert(cube, batch_df, stamped=True)
@@ -303,54 +293,59 @@ def stream_upsert_sink(engine, cube: str, checkpoint_dir: str,
 
         return _sink
 
+    import json
     import time as _time
 
     from pyspark.sql import functions as F
+
+    from metrique_spark.fs import publish
 
     fs = engine.fs
     stage_root = fs.join(checkpoint_dir, "_upsert_stage")
     state = {"last_flush": _time.monotonic()}
 
-    def _staged() -> list[str]:
-        if not fs.isdir(stage_root):
-            return []
-        return sorted(d for d in fs.listdir(stage_root)
-                      if d.startswith("batch="))
+    def _drain(spark, raw, root) -> int:
+        staged = root["parts"]
+        if staged:
+            df = (spark.read.option("basePath", stage_root)
+                  .parquet(*[fs.join(stage_root, d) for d in staged]))
+            # one row per oid: latest _start wins, micro-batch id breaks
+            # ties (so a later batch's same-timestamp update wins, as it
+            # would under per-batch commits). Intermediate versions
+            # within the window collapse — the same buffered-container
+            # semantics the engine's own per-batch latest_per_oid
+            # applies, widened to the coalescing window; callers who
+            # need every intermediate version keep the per-batch default.
+            from pyspark.sql import Window
+
+            w = (Window.partitionBy("_oid")
+                 .orderBy(F.col("_start").desc(),
+                          F.col("batch").cast("long").desc()))
+            _commit(df.withColumn("__rn", F.row_number().over(w))
+                    .where(F.col("__rn") == 1).drop("__rn", "batch"))
+            # a crash before this publish replays the same staged
+            # batches into the idempotent merge
+            publish(fs, stage_root, _STATE_ROOT,
+                    json.dumps({**root, "parts": []}), raw, staged)
+        state["last_flush"] = _time.monotonic()
+        return len(staged)
 
     def flush(spark) -> int:
         """Fold every staged micro-batch into ONE engine commit and
         clear the stage; returns the number of batches folded."""
-        batches = _staged()
-        if not batches:
-            state["last_flush"] = _time.monotonic()
-            return 0
-        df = (spark.read.option("basePath", stage_root)
-              .parquet(*[fs.join(stage_root, d) for d in batches]))
-        # one row per oid: latest _start wins, micro-batch id breaks
-        # ties (so a later batch's same-timestamp update wins, as it
-        # would under per-batch commits). Intermediate versions within
-        # the window collapse — the same buffered-container semantics
-        # the engine's own per-batch latest_per_oid applies, widened to
-        # the coalescing window; callers who need every intermediate
-        # version keep the per-batch default.
-        from pyspark.sql import Window
-
-        w = (Window.partitionBy("_oid")
-             .orderBy(F.col("_start").desc(),
-                      F.col("batch").cast("long").desc()))
-        df = (df.withColumn("__rn", F.row_number().over(w))
-              .where(F.col("__rn") == 1).drop("__rn", "batch"))
-        _commit(df)
-        for d in batches:
-            fs.delete_dir(fs.join(stage_root, d))
-        state["last_flush"] = _time.monotonic()
-        return len(batches)
+        return _drain(spark, *_state_root(fs, stage_root, None))
 
     def _sink(batch_df: DataFrame, batch_id: int):
-        if not batch_df.isEmpty():
-            (batch_df.write.mode("overwrite")
-             .parquet(fs.join(stage_root, f"batch={batch_id}")))
-        n = len(_staged())
+        raw, root = _state_root(fs, stage_root, batch_id)
+        part = f"batch={batch_id}"
+        if part not in root["parts"] and not batch_df.isEmpty():
+            batch_df.write.mode("overwrite").parquet(
+                fs.join(stage_root, part))
+            root = {**root, "parts": [*root["parts"], part]}
+            text = json.dumps(root)
+            publish(fs, stage_root, _STATE_ROOT, text, raw)
+            raw = text
+        n = len(root["parts"])
         if not n:
             return
         due = (coalesce_batches is not None and n >= coalesce_batches)
@@ -359,7 +354,7 @@ def stream_upsert_sink(engine, cube: str, checkpoint_dir: str,
                 >= coalesce_seconds):
             due = True
         if due:
-            flush(batch_df.sparkSession)
+            _drain(batch_df.sparkSession, raw, root)
 
     _sink.flush = flush
     _sink.stage_root = stage_root
@@ -390,151 +385,77 @@ def stream_dedup_sink(
     the corpus store and their signatures to the index, and flagged
     dupes are recorded with their best match:
 
-    - ``index_path``:  (id, band, bh) signature rows + params sidecar
-    - ``corpus_path``: accepted (id, text) rows (candidate verification
-      re-reads text only for candidates, via the semi-join inside
-      ``dedup_against_index``)
+    - ``index_path``:  (id, band, bh) signature rows, named by the
+      MinHash index's ``_minhash.json`` root, which also carries the
+      signing params and the sink state — ``read_minhash_index`` on it
+      returns exactly the committed index
+    - ``corpus_path``: accepted (id, text) rows under the same directory
+      names (candidate verification re-reads text only for candidates,
+      via the semi-join inside ``dedup_against_index``)
     - ``flags_path``:  (id, dup_of, jaccard) per flagged doc
 
-    Replay-idempotent under foreachBatch's at-least-once contract: every
-    write is keyed by ``batch={batch_id}`` (a replay OVERWRITES its own
-    directories, never appends duplicates). Commit detection rides the
-    ``_SUCCESS`` marker of the batch's INDEX directory — the LAST of the
-    three writes — so a fully-committed batch replays as a pure no-op,
-    and a crash anywhere earlier reprocesses the whole batch into the
-    same directories and converges; the probe reads exclude the batch's
-    OWN partition, so a half-written prior attempt can never make a
-    batch match itself. Doc ids should be unique across the stream (a
-    re-sent id verifies against its earlier self at jaccard 1.0 and gets
-    flagged). Near-dupes WITHIN one batch are handled too
-    (``dedup_within_batch``, on by default): after the index probe, the
-    remaining novel docs run MinHash-verified pair generation + canonical
-    selection among themselves — only each cluster's min-id member is
+    Replay-idempotent under foreachBatch's at-least-once contract: each
+    batch writes its flags, corpus and index rows into
+    ``batch={batch_id}`` directories, then publishes the root naming
+    them (the state protocol in the module header). A batch the root
+    already names replays as a pure no-op; a crash anywhere earlier
+    reprocesses the whole batch into the same (unnamed) directories and
+    converges. Probes read only what the root names, so a half-written
+    prior attempt can never make a batch match itself, and a sink whose
+    params differ from the root's fails before it writes anything. Doc
+    ids should be unique across the stream (a re-sent id verifies
+    against its earlier self at jaccard 1.0 and gets flagged).
+    Near-dupes WITHIN one batch are handled too (``dedup_within_batch``,
+    on by default): after the index probe, the remaining novel docs run
+    MinHash-verified pair generation + canonical selection among
+    themselves — only each cluster's min-id member is
     accepted/indexed; the rest are flagged with ``dup_of`` = their
     cluster's canonical id and ``jaccard`` = their strongest verified
     pair link. Corpus flags take priority over within-batch flags when a
-    doc duplicates both.
-
-    All control-plane I/O (the ``_SUCCESS`` commit probing, the params
-    sidecar) rides the ``fs`` backend (default ``LocalFS``) — sidecar
-    puts are atomic whole-object writes, so a crash mid-write can never
-    leave a truncated JSON that kills every later batch, and the probing
-    is LIST/GET-only, so the sink runs unchanged on an object store. A
-    sidecar that is unreadable/unparseable while ZERO batches have
-    committed is replaced like the mismatch case (it signed nothing).
+    doc duplicates both. The root's I/O rides the ``fs`` backend
+    (default ``LocalFS``), so the sink runs unchanged on an object
+    store.
 
     Index/corpus compaction: once more than ``compact_after`` committed
-    batch directories exist, they fold into size-tiered LEVEL
-    directories under the generational sidecar protocol (see the module
-    header) — each fold writes a new level from the recent batches
-    only, and levels merge per ``compaction.tier_groups`` with
-    ``level_bytes`` as the tier threshold, so a year of ingest never
-    pays an O(|corpus|) rewrite on any single fold. Only
-    checkpoint-committed ids below the running batch fold, so the
-    replay skip-check never needs a folded directory, and probes read
-    [level dirs + live batch dirs] selected by the sidecar instead of
-    an ever-growing listing. Flag directories are output, not sink
+    batch directories are named, the commit folds them into size-tiered
+    LEVEL directories of both stores in lockstep (see the module header)
+    — each fold writes a new level from the recent batches only, and
+    levels merge per ``compaction.tier_groups`` with ``level_bytes`` as
+    the tier threshold, so a year of ingest never pays an O(|corpus|)
+    rewrite on any single fold. Flag directories are output, not sink
     state — compact them offline if needed."""
     from metrique_spark.functions import dedup as _dedup
     from metrique_spark.functions.cache import release
     from metrique_spark.fs import LocalFS
 
     fs = fs or LocalFS()
+    params = {"num_hashes": num_hashes, "bands": bands,
+              "shingle_n": shingle_n}
 
     def _sink(batch_df: DataFrame, batch_id: int):
-        import json
-
         spark = batch_df.sparkSession
         if batch_df.isEmpty():
             return
-        if fs.exists(fs.join(index_path, f"batch={batch_id}", "_SUCCESS")):
-            return  # fully committed earlier: replay is a no-op
-
-        meta = _gen_meta(fs, index_path)
-
-        def _committed_ids(upto_exclusive=None):
-            return [i for i in _gen_batch_ids(fs, index_path, meta,
-                                              upto_exclusive)
-                    if i != batch_id
-                    and fs.exists(fs.join(index_path, f"batch={i}",
-                                          "_SUCCESS"))]
-
-        def _any_committed():
-            return (bool(_gen_dirs(fs, index_path, meta))
-                    or bool(_committed_ids()))
-
-        # params sidecar FIRST, before any write: a misconfigured sink
-        # must fail before it can commit wrongly-signed rows into the
-        # index (validated again at probe time via dedup_against_index),
-        # and a crash after the index commit can no longer leave the
-        # sidecar missing
-        params = {"num_hashes": num_hashes, "bands": bands,
-                  "shingle_n": shingle_n}
-        side = fs.join(index_path, _dedup._MINHASH_SIDECAR)
-        if fs.isfile(side):
-            try:
-                existing = json.loads(fs.read_text(side))
-            except ValueError:
-                existing = None  # truncated/corrupt legacy sidecar
-            if existing != params:
-                if _any_committed():
-                    raise ValueError(
-                        f"stream index at {index_path} was signed with "
-                        f"{existing}; this sink uses {params}")
-                # the sidecar signed ZERO committed rows (first batch
-                # crashed before its index commit, the sink was
-                # reconfigured before anything landed, or the file is
-                # corrupt) — replace it rather than permanently pinning
-                # an empty index
-                fs.write_text(side, json.dumps(params))
-        else:
-            fs.write_text(side, json.dumps(params))
-
-        # fold committed batches (ids < batch_id: checkpoint-committed
-        # before this batch started, so the replay skip-check above can
-        # never need their directories) into the next generation
-        fold_ids = _committed_ids(upto_exclusive=batch_id)
-        if len(fold_ids) > compact_after:
-            # tiered fold: the new level folds only the recent partials;
-            # small/similar-sized levels merge per tier_groups — the
-            # corpus is never rewritten whole (see the module header)
-            def _write_fold(src_names, out_name):
-                for root, cols in ((index_path, None),
-                                   (corpus_path, [id_col, text_col])):
-                    srcs = [fs.join(root, n) for n in src_names
-                            if fs.isdir(fs.join(root, n))]
-                    folded = spark.read.parquet(*srcs)
-                    if cols:
-                        folded = folded.select(*cols)
-                    folded.write.mode("overwrite").parquet(
-                        fs.join(root, out_name))
-
-            meta = _fold_levels(
-                meta, fold_ids, _write_fold,
-                du=lambda n: (fs.du(fs.join(index_path, n))
-                              + fs.du(fs.join(corpus_path, n))),
-                level_bytes=level_bytes)
-            _gen_flip(fs, index_path, meta)  # atomic: probes switch here
-            _gen_sweep(fs, index_path, meta)
-            _gen_sweep(fs, corpus_path, meta)
+        # a misconfigured sink fails before it can commit wrongly-signed
+        # rows into the index
+        raw, root = _dedup._minhash_root(fs, index_path)
+        if root is None:
+            root = {"params": params, "gen": 0, "parts": []}
+        elif root["params"] != params:
+            raise ValueError(
+                f"stream index at {index_path} was signed with "
+                f"{root['params']}; this sink uses {params}")
+        if f"batch={batch_id}" in root["parts"]:
+            return  # committed earlier: replay is a no-op
 
         batch = batch_df.select(F.col(id_col), F.col(text_col))
-        prior_ids = _committed_ids()
-        gi = _gen_dirs(fs, index_path, meta)
-        if prior_ids or gi:
-            idx_paths = gi + [
-                fs.join(index_path, f"batch={i}") for i in prior_ids]
-            gc = _gen_dirs(fs, corpus_path, meta)
-            cor_paths = gc + [
-                fs.join(corpus_path, f"batch={i}") for i in prior_ids]
-            idx = spark.read.parquet(*idx_paths)
-            # attach what the SIDECAR says, not our own params — that is
-            # what keeps dedup_against_index's signature check a real
-            # second validation (e.g. an operator rewriting the sidecar
-            # between the pre-check above and this probe fails loudly)
-            setattr(idx, _dedup._MINHASH_PARAMS_ATTR,
-                    json.loads(fs.read_text(side)))
-            corpus = spark.read.parquet(*cor_paths).select(id_col, text_col)
+        if root["parts"]:
+            # the probe reads exactly what the root names — never this
+            # batch's own (uncommitted) directories
+            idx = _dedup._minhash_frame(spark, fs, index_path, root)
+            corpus = spark.read.parquet(
+                *[fs.join(corpus_path, p) for p in root["parts"]]
+            ).select(id_col, text_col)
             raw_flags = _dedup.dedup_against_index(
                 batch, idx, corpus, id_col=id_col, text_col=text_col,
                 threshold=threshold, num_hashes=num_hashes, bands=bands,
@@ -621,6 +542,24 @@ def stream_dedup_sink(
             num_hashes=num_hashes, bands=bands, shingle_n=shingle_n)
         rows.write.mode("overwrite").parquet(
             fs.join(index_path, f"batch={batch_id}"))
+
+        # index and corpus fold in lockstep under the same level names
+        def _write_fold(src_names, out_name):
+            for store, cols in ((index_path, None),
+                                (corpus_path, [id_col, text_col])):
+                folded = spark.read.parquet(
+                    *[fs.join(store, n) for n in src_names])
+                if cols:
+                    folded = folded.select(*cols)
+                folded.write.mode("overwrite").parquet(
+                    fs.join(store, out_name))
+
+        _commit_batch(
+            fs, index_path, _dedup._MINHASH_ROOT, raw, root, batch_id,
+            compact_after, stores=(corpus_path,), write_fold=_write_fold,
+            du=lambda n: (fs.du(fs.join(index_path, n))
+                          + fs.du(fs.join(corpus_path, n))),
+            level_bytes=level_bytes)
 
     return _sink
 
@@ -999,12 +938,12 @@ def stream_anomaly_sink(
 ):
     """Continuous error-rate anomaly detection — the ``foreachBatch``
     twin of ``error_rate_anomalies``: each micro-batch's per-window
-    counts land as an additive partial under ``state_path`` (keyed
-    ``batch={batch_id}``, so an at-least-once replay OVERWRITES its own
-    directory instead of double-counting), the partials are re-summed
-    per window, and the SAME rolling-z detector the batch path uses
-    rewrites the full anomaly table at ``out_path``. Stream equals batch
-    by construction: both compose ``_event_window_counts`` +
+    counts land as an additive partial under ``state_path`` (a
+    ``batch={batch_id}`` directory the state root names once committed,
+    so an at-least-once replay never double-counts), the partials are
+    re-summed per window, and the SAME rolling-z detector the batch path
+    uses rewrites the full anomaly table at ``out_path``. Stream equals
+    batch by construction: both compose ``_event_window_counts`` +
     ``_anomalies_from_counts`` (pinned by test).
 
     Late events just add another partial to their window — the next
@@ -1012,22 +951,17 @@ def stream_anomaly_sink(
     DERIVED state, rebuilt every batch; the rebuild cost rides the
     number of time windows, which is time-bounded — a year of hours is
     8.8k rows — not event-volume-bounded). A crash between the state
-    write and the output write leaves ``out_path`` one batch stale; the
-    replay or the next batch rewrites it — convergent, never corrupt.
+    commit and the output write leaves ``out_path`` one batch stale; the
+    replay (which skips the state write of a batch the root already
+    names) or the next batch rewrites it — convergent, never corrupt.
 
-    State compaction (a continuous sink would otherwise leave one
-    directory PER MICRO-BATCH forever — a year of minutely batches is
-    half a million dirs of listing pressure): once more than
-    ``compact_after`` un-compacted partials exist, the sink folds every
-    partial from COMMITTED batches (id < the running batch — foreachBatch
-    runs batch N only after N-1's checkpoint commit, so those ids can
-    never replay) into a generation directory. The protocol is
-    rename-free and sidecar-driven: readers take the partial set from an
-    atomically-PUT ``_state.json`` (current generation dir + "batches
-    above K"), never from a directory listing, so the three steps —
-    write gen{g+1}, flip the sidecar, delete the sources — can crash
-    anywhere and the reader still sees exactly-once counts; stale
-    sources are swept by the next compaction."""
+    State: the ``_state.json`` root names the live partial and level
+    directories and commits through ``fs.publish`` (the protocol in the
+    module header): readers never list, a crash at any step leaves
+    exactly-once counts, and once more than ``compact_after`` committed
+    partials are named the commit folds them into a size-tiered level
+    (``level_bytes``), so the state never grows one directory per
+    micro-batch forever."""
 
     def fold(df):
         return (df.groupBy("window_start")
@@ -1060,8 +994,8 @@ def _partial_state_sink(state_path, out_path, partial_fn, fold_fn,
                         level_bytes=64 * 1024 * 1024, fs=None):
     """The shared engine of the additive-partial ``foreachBatch`` sinks
     (anomaly / funnel / retention): each micro-batch's ``partial_fn``
-    output lands batch-keyed under ``state_path`` (a replay OVERWRITES
-    its own directory — idempotent), committed partials fold
+    output lands batch-keyed under ``state_path`` and commits through
+    the state root (a replay never counts twice), committed partials fold
     generationally via ``fold_fn`` once their count crosses
     ``compact_after``, and the re-folded totals are finalized by
     ``finalize_fn`` into a full rewrite of ``out_path``.
@@ -1070,48 +1004,41 @@ def _partial_state_sink(state_path, out_path, partial_fn, fold_fn,
     fold(A ∪ B) (sums, mins, distincts all qualify). ``finalize_fn``
     receives the folded totals and returns the output table; derived
     state is rebuilt every batch, so late data re-derives history by
-    construction. Crash/replay semantics and the rename-free sidecar
-    protocol are documented on ``stream_anomaly_sink`` (whose tests pin
-    this engine)."""
+    construction. Per batch: one root GET, the partial write and one
+    root CAS (none for a replay of a committed batch), then the output
+    rewrite — no LIST, ``isdir`` or marker probe. Crash/replay
+    semantics are documented on ``stream_anomaly_sink`` (whose tests
+    pin this engine) and the state protocol in the module header."""
     from metrique_spark.fs import LocalFS
     from metrique_spark.functions.cache import release
 
     fs = fs or LocalFS()
 
-    def _live_paths(meta, upto_exclusive=None):
-        paths = list(_gen_dirs(fs, state_path, meta))
-        ids = _gen_batch_ids(fs, state_path, meta, upto_exclusive)
-        paths.extend(fs.join(state_path, f"batch={i}") for i in ids)
-        return paths, ids
-
     def _sink(batch_df: DataFrame, batch_id: int):
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        meta = _gen_meta(fs, state_path)  # refuses before any write
-        partial_fn(batch_df).write.mode("overwrite").parquet(
-            fs.join(state_path, f"batch={batch_id}"))
-        # fold committed partials (ids < batch_id can never replay) into
-        # a new LEVEL once the dir count crosses the threshold; levels
-        # size-tier via _fold_levels (fold_fn's merge contract —
-        # fold(fold(A) ∪ fold(B)) == fold(A ∪ B) — is exactly what
-        # makes re-folding two levels together sound)
-        _, src_ids = _live_paths(meta, upto_exclusive=batch_id)
-        if len(src_ids) > compact_after:
+        raw, root = _state_root(fs, state_path, batch_id)  # refuses first
+        part = f"batch={batch_id}"
+        if part not in root["parts"]:
+            partial_fn(batch_df).write.mode("overwrite").parquet(
+                fs.join(state_path, part))
+            # fold_fn's merge contract — fold(fold(A) ∪ fold(B)) ==
+            # fold(A ∪ B) — is exactly what makes re-folding two levels
+            # together sound
             def _write_fold(src_names, out_name):
-                srcs = [fs.join(state_path, n) for n in src_names
-                        if fs.isdir(fs.join(state_path, n))]
-                fold_fn(spark.read.parquet(*srcs)).write.mode(
-                    "overwrite").parquet(fs.join(state_path, out_name))
+                fold_fn(spark.read.parquet(
+                    *[fs.join(state_path, n) for n in src_names])
+                ).write.mode("overwrite").parquet(
+                    fs.join(state_path, out_name))
 
-            meta = _fold_levels(
-                meta, src_ids, _write_fold,
+            root = _commit_batch(
+                fs, state_path, _STATE_ROOT, raw, root, batch_id,
+                compact_after, write_fold=_write_fold,
                 du=lambda n: fs.du(fs.join(state_path, n)),
                 level_bytes=level_bytes)
-            _gen_flip(fs, state_path, meta)  # atomic: readers switch here
-            _gen_sweep(fs, state_path, meta)
-        live, _ = _live_paths(meta)
-        out = finalize_fn(fold_fn(spark.read.parquet(*live)))
+        out = finalize_fn(fold_fn(spark.read.parquet(
+            *[fs.join(state_path, p) for p in root["parts"]])))
         out.write.mode("overwrite").parquet(out_path)
         release(out)  # finalizers may persist stages (funnel)
 

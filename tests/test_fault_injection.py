@@ -23,7 +23,7 @@ from metrique_spark.objects import stamp
 
 # The sweeps are heavy (minutes each): they are opt-in via `pytest -m
 # slow` so the default `pytest tests/` finishes inside its verify window;
-# the default run keeps a seeded sample of the ANN sweep.
+# the default run keeps seeded samples of the ANN and stream sweeps.
 
 
 class InjectedFault(RuntimeError):
@@ -489,69 +489,234 @@ def test_fault_sweep_ann_index_protocol_sample(spark, tmp_path, kind):
     _ann_sweep(spark, tmp_path, kind, stride=4)
 
 
-@pytest.mark.slow
-def test_fault_sweep_stream_level_protocol(spark, tmp_path):
-    """Sweep a crash across the streaming sinks' tiered level-fold
-    protocol (sidecar flips, level writes, sweeps), then model
-    foreachBatch's contract: the failed batch REPLAYS on restart. After
-    every crash+replay the output totals must be exact — the sidecar
-    protocol's exactly-once claim, under every possible crash point,
-    with the level tiering active (compact_after=1, every level
-    'large')."""
+def _event(spark, b):
+    return spark.createDataFrame(
+        [(b, 1, f"2024-01-01 {b:02d}:05:00", "ok")],
+        "event_id long, user_id long, ts string, event_type string"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def _window_sum(df):
+    return (df.groupBy("window_start")
+            .agg(F.sum("n").cast("long").alias("n"),
+                 F.sum("n_errors").cast("long").alias("n_errors")))
+
+
+def _partial_sink(base, fs):
+    """An anomaly-count partial-state sink with the level tiering
+    active on every fold (compact_after=1, every level 'large')."""
     from metrique_spark.streaming import events as ev
 
-    def mk(b):
-        return spark.createDataFrame(
-            [(b, 1, f"2024-01-01 {b:02d}:05:00", "ok")],
-            "event_id long, user_id long, ts string, event_type string"
-        ).withColumn("ts", F.col("ts").cast("timestamp"))
+    return ev._partial_state_sink(
+        f"{base}/st", f"{base}/out",
+        partial_fn=lambda b: ev._event_window_counts(
+            b, "1 hour", "error", "ts", "event_type"),
+        fold_fn=_window_sum, finalize_fn=lambda t: t,
+        compact_after=1, level_bytes=1, fs=fs)
 
-    def build_sink(state_p, out_p, fs):
-        return ev._partial_state_sink(
-            state_p, out_p,
-            partial_fn=lambda b: ev._event_window_counts(
-                b, "1 hour", "error", "ts", "event_type"),
-            fold_fn=lambda df: (df.groupBy("window_start")
-                                .agg(F.sum("n").cast("long").alias("n"),
-                                     F.sum("n_errors").cast("long")
-                                     .alias("n_errors"))),
-            finalize_fn=lambda t: t,
-            compact_after=1, level_bytes=1, fs=fs)
 
-    n_batches = 6
+def _root(base, rel):
+    try:
+        return LocalFS().read_text(f"{base}/{rel}")
+    except FileNotFoundError:
+        return None
 
-    def totals(out_p):
-        return {str(r["window_start"]): r["n"]
-                for r in spark.read.parquet(out_p).collect()}
 
-    # clean run: count the protocol's mutating fs ops
-    fs0 = FaultFS(LocalFS(), None)
-    p0, o0 = str(tmp_path / "st0"), str(tmp_path / "out0")
-    sink0 = build_sink(p0, o0, fs0)
-    for b in range(n_batches):
-        sink0(mk(b), b)
-    total = fs0.used
-    assert total >= 5 and len(totals(o0)) == n_batches
-    for k in range(total):
-        sp, op = str(tmp_path / f"st{k}a"), str(tmp_path / f"out{k}a")
-        sink = build_sink(sp, op, FaultFS(LocalFS(), k))
-        crashed_at = None
-        for b in range(n_batches):
-            try:
-                sink(mk(b), b)
-            except InjectedFault:
-                crashed_at = b
-                break
-        if crashed_at is None:
-            continue
-        # restart: a clean sink REPLAYS the crashed batch (foreachBatch
-        # re-delivers it) and continues
-        sink2 = build_sink(sp, op, LocalFS())
-        for b in range(crashed_at, n_batches):
-            sink2(mk(b), b)
-        got = totals(op)
-        assert len(got) == n_batches and all(
-            n == 1 for n in got.values()), (k, crashed_at, got)
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _partial_view(spark, base):
+    """(root text, totals of the named partials, output totals)."""
+    raw = _root(base, "st/_state.json")
+    if raw is None:
+        return None, [], None
+    parts = [f"{base}/st/{p}" for p in json.loads(raw)["parts"]]
+    return (raw, _rows(_window_sum(spark.read.parquet(*parts))),
+            _rows(spark.read.parquet(f"{base}/out")))
+
+
+_DUP_BASE = "the quick brown fox jumps over the lazy dog again and again"
+_DEDUP_BATCHES = [
+    [(i, f"{_DUP_BASE} variant number {i}") for i in range(4)],
+    [(100, f"{_DUP_BASE} variant number 2"),
+     (101, "completely different content about databases here")],
+    [(200, "completely different content about databases here"),
+     (201, "yet another unrelated snippet of text entirely")],
+    [(300, f"{_DUP_BASE} variant number 1"),
+     (301, "a fourth batch speaks of query planners and joins")],
+    [(400, "yet another unrelated snippet of text entirely"),
+     (401, "the last batch is about storage engines and logs")],
+]
+
+
+def _dedup_sink(base, fs):
+    from metrique_spark.streaming.events import stream_dedup_sink
+
+    return stream_dedup_sink(
+        f"{base}/idx", f"{base}/cor", f"{base}/flg", threshold=0.8,
+        dedup_within_batch=False, compact_after=1, level_bytes=1, fs=fs)
+
+
+def _dedup_view(spark, base):
+    """(index root text, (committed index rows, committed corpus rows),
+    flags) — the index must hold no duplicate row."""
+    from metrique_spark.functions.dedup import read_minhash_index
+
+    raw = _root(base, "idx/_minhash.json")
+    if raw is None:
+        return None, ([], []), None
+    parts = json.loads(raw)["parts"]
+    idx = _rows(read_minhash_index(spark, f"{base}/idx")
+                .select("id", "band", "bh"))
+    assert len(idx) == len(set(idx)), "duplicate index row"
+    cor = _rows(spark.read.parquet(*[f"{base}/cor/{p}" for p in parts])
+                .select("doc_id", "text"))
+    return raw, (idx, cor), _rows(spark.read.parquet(f"{base}/flg"))
+
+
+_MINHASH_OPS = [("overwrite", range(0, 6)), ("append", range(6, 9)),
+                ("append", range(9, 12)), ("overwrite", range(12, 16))]
+
+
+def _minhash_op(spark, base, fs, j):
+    from metrique_spark.functions import dedup
+
+    mode, ids = _MINHASH_OPS[j]
+    docs = spark.createDataFrame(
+        [(i, f"document {i} says {i * 7} things about {i % 3}")
+         for i in ids], "doc_id long, text string")
+    dedup.write_minhash_index(
+        dedup.minhash_index(docs, num_hashes=16, bands=4),
+        f"{base}/mh", mode=mode, fs=fs)
+
+
+def _minhash_view(spark, base):
+    """(params and part count of the root — part names are random per
+    write —, committed index rows, None)."""
+    from metrique_spark.functions.dedup import read_minhash_index
+
+    raw = _root(base, "mh/_minhash.json")
+    if raw is None:
+        return None, [], None
+    root = json.loads(raw)
+    rows = _rows(read_minhash_index(spark, f"{base}/mh"))
+    assert len(rows) == len(set(rows)), "duplicate index row"
+    return (root["params"], len(root["parts"])), rows, None
+
+
+def _store_sweep(spark, tmp_path, stride, n_ops, run_op, view,
+                 replay=True):
+    """Crash a store's op sequence at every `stride`-th control-plane
+    mutation (a seeded offset picks which), restarting each crash from
+    the store as it stood before the crashed op. Right after the crash
+    the store must read exactly as before or after the op — root and
+    committed rows — never torn. Then the op runs again: a stream
+    sink's batch always replays (foreachBatch re-delivers it); an index
+    write retries only when it did not commit (an append that committed
+    must not be appended twice). Root, committed rows and output must
+    then equal the clean run's after that op."""
+    import os
+    import random
+    import shutil
+
+    clean = str(tmp_path / "clean")
+    os.makedirs(clean)
+    fs = FaultFS(LocalFS(), None)
+    templates, counts, views = [], [], [view(spark, clean)]
+    for j in range(n_ops):
+        templates.append(str(tmp_path / f"t{j}"))
+        shutil.copytree(clean, templates[-1])
+        used = fs.used
+        run_op(clean, fs, j)
+        counts.append(fs.used - used)
+        views.append(view(spark, clean))
+    points = [(j, k) for j, n in enumerate(counts) for k in range(n)]
+    assert len(points) >= 5, counts
+    for j, k in points[random.Random(11).randrange(stride)::stride]:
+        base = str(tmp_path / f"c{j}_{k}")
+        shutil.copytree(templates[j], base)
+        with pytest.raises(InjectedFault):
+            run_op(base, FaultFS(LocalFS(), k), j)
+        got = view(spark, base)[:2]
+        assert got in (views[j][:2], views[j + 1][:2]), (j, k)
+        if replay or got == views[j][:2]:
+            run_op(base, LocalFS(), j)
+        assert view(spark, base) == views[j + 1], (j, k)
+
+
+def _stream_sweep(spark, tmp_path, stride):
+    """The stream and MinHash stores' crash sweep: the partial-state
+    sink's batch commits and tiered folds, the dedup sink's batch
+    commits and index + corpus folds, and MinHash index overwrites and
+    appends."""
+    _store_sweep(spark, tmp_path / "partial", stride, 6,
+                 lambda base, fs, j: _partial_sink(base, fs)(
+                     _event(spark, j), j),
+                 _partial_view)
+    _store_sweep(spark, tmp_path / "dedup", stride, len(_DEDUP_BATCHES),
+                 lambda base, fs, j: _dedup_sink(base, fs)(
+                     spark.createDataFrame(_DEDUP_BATCHES[j],
+                                           "doc_id long, text string"), j),
+                 _dedup_view)
+    _store_sweep(spark, tmp_path / "minhash", stride, len(_MINHASH_OPS),
+                 lambda base, fs, j: _minhash_op(spark, base, fs, j),
+                 _minhash_view, replay=False)
+
+
+@pytest.mark.slow
+def test_fault_sweep_stream_level_protocol(spark, tmp_path):
+    """Every crash point of the stream-state and MinHash root protocols
+    (see _store_sweep / _stream_sweep): after each crash and replay the
+    partial-state totals are exact, the dedup sink's flags and corpus
+    equal a clean run's, and the MinHash index reads exactly its
+    committed rows."""
+    _stream_sweep(spark, tmp_path, stride=1)
+
+
+def test_fault_sweep_stream_level_protocol_sample(spark, tmp_path):
+    """A seeded every-4th-point sample of the stream / MinHash crash
+    sweep — the default-run share of
+    ``test_fault_sweep_stream_level_protocol``."""
+    _stream_sweep(spark, tmp_path, stride=4)
+
+
+def test_racing_stream_state_commit_fails_loud(spark, tmp_path):
+    """A second writer that commits a batch between this sink's root
+    read and its CAS makes this sink's commit fail with
+    ConcurrentWriteError instead of clobbering the rival's batch; the
+    committed state stays readable and exact."""
+    from metrique_spark.fs import ConcurrentWriteError
+    from metrique_spark.streaming import events as ev
+
+    base = str(tmp_path / "race")
+    rival = _partial_sink(base, LocalFS())
+    rival(_event(spark, 0), 0)
+
+    class RacingFS:
+        """Runs the rival's commit of batch 1 right before this
+        writer's first root CAS."""
+
+        def __init__(self):
+            self._inner, self.fired = LocalFS(), False
+
+        def __getattr__(self, name):
+            return getattr(self._inner, name)
+
+        def replace_if_match(self, path, text, expected):
+            if not self.fired:
+                self.fired = True
+                rival(_event(spark, 1), 1)
+            return self._inner.replace_if_match(path, text, expected)
+
+    with pytest.raises(ConcurrentWriteError):
+        _partial_sink(base, RacingFS())(_event(spark, 2), 2)
+    _raw, root = ev._state_root(LocalFS(), f"{base}/st", 2)
+    assert root["parts"] == ["batch=0", "batch=1"]
+    assert [n for _w, n, _e in _partial_view(spark, base)[1]] == [1, 1]
+    # the losing batch replays into the rival's committed state
+    _partial_sink(base, LocalFS())(_event(spark, 2), 2)
+    assert [n for _w, n, _e in _partial_view(spark, base)[2]] == [1, 1, 1]
 
 
 @pytest.mark.slow

@@ -186,3 +186,75 @@ def test_older_form_vector_index_refused_and_kept(spark, tmp_path,
     with pytest.raises(ValueError, match="rebuild"):
         sim.sq8_topk_indexed(spark, sp, q)
     assert _parquet_files(sp) == kept
+
+
+def _event(spark, b):
+    return spark.createDataFrame(
+        [(b, 1, f"2024-01-01 {b:02d}:05:00", "ok")],
+        "event_id long, user_id long, ts string, event_type string"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+@pytest.mark.parametrize("form", ["pre_level", "levels_only", "no_root"])
+def test_older_form_stream_state_refused_and_kept(spark, tmp_path, form):
+    """Streaming sink state written before it committed by root — a
+    ``_state.json`` without the ``parts`` list (with or without the
+    tiered ``levels``), or batch directories with no root at all — is
+    refused by the next batch with one ValueError naming the rebuild,
+    and keeps its data."""
+    from metrique_spark.streaming import events as ev
+
+    state_p = str(tmp_path / "st")
+    sink = ev.stream_anomaly_sink(state_p, str(tmp_path / "out"),
+                                  compact_after=1)
+    for b in range(3):
+        sink(_event(spark, b), b)
+    root_p = os.path.join(state_p, "_state.json")
+    with open(root_p) as fh:
+        levels = [p for p in json.load(fh)["parts"]
+                  if p.startswith("batch=gen")]
+    old = {"compacted_through": 1, "gen": 1}
+    if form == "levels_only":
+        old["levels"] = levels
+    if form == "no_root":
+        os.unlink(root_p)
+    else:
+        with open(root_p, "w") as fh:
+            json.dump(old, fh)
+    files = _parquet_files(state_p)
+    with pytest.raises(ValueError, match="older on-disk form.*rebuild"):
+        sink(_event(spark, 3), 3)
+    assert _parquet_files(state_p) == files
+
+
+@pytest.mark.parametrize("form", ["sidecar_only", "no_root"])
+def test_older_form_minhash_index_refused_and_kept(spark, tmp_path, form):
+    """A MinHash index written before indexes committed by root — a
+    stream sink's batch directories under a ``_minhash_params.json``
+    sidecar, or parquet written straight into the directory — is
+    refused by reads, both write modes and a stream dedup sink with one
+    ValueError naming the rebuild, and keeps its data."""
+    from metrique_spark.functions import dedup
+    from metrique_spark.streaming.events import stream_dedup_sink
+
+    docs = spark.createDataFrame(
+        [(i, f"the quick brown fox jumps over dog {i}") for i in range(8)],
+        "doc_id long, text string")
+    idx = dedup.minhash_index(docs, num_hashes=32, bands=8)
+    p = str(tmp_path / "mh")
+    if form == "sidecar_only":
+        idx.write.parquet(os.path.join(p, "batch=0"))
+        with open(os.path.join(p, "_minhash_params.json"), "w") as fh:
+            json.dump(idx._minhash_params, fh)
+    else:
+        idx.write.parquet(p)
+    files = _parquet_files(p)
+    sink = stream_dedup_sink(p, str(tmp_path / "c"), str(tmp_path / "f"),
+                             num_hashes=32, bands=8)
+    for op in (lambda: dedup.read_minhash_index(spark, p),
+               lambda: dedup.write_minhash_index(idx, p),
+               lambda: dedup.write_minhash_index(idx, p, mode="append"),
+               lambda: sink(docs, 1)):
+        with pytest.raises(ValueError, match="older on-disk form.*rebuild"):
+            op()
+    assert _parquet_files(p) == files

@@ -112,6 +112,26 @@ def test_unknown_kind_and_missing_index(spark, engine):
         engine.vector_search("vecs", "nope", q)
 
 
+def test_gbuckets_must_be_a_positive_int(spark, engine, tmp_path):
+    """A bad ``gbuckets`` fails with a ValueError before any training
+    job — through the standalone writers and the engine alike — instead
+    of a modulo-by-zero deep inside the encode job."""
+    import os
+
+    _emb_cube(spark, engine)
+    df = engine.find("vecs", fields="embedding").select("_oid", "embedding")
+    p = str(tmp_path / "flat")
+    for bad in (0, -2, 1.5, None, True):
+        for write in (sim.write_pq_index, sim.write_sq8_index):
+            with pytest.raises(ValueError, match="gbuckets must be an int"):
+                write(df, p, id_col="_oid", gbuckets=bad)
+        with pytest.raises(ValueError, match="gbuckets must be an int"):
+            engine.build_vector_index("vecs", "pq", vec_col="embedding",
+                                      kind="pq", gbuckets=bad)
+    assert not os.path.exists(p)
+    assert engine.vector_index_list("vecs") == {}
+
+
 def test_index_survives_commits_and_search_uses_current_only(
         spark, engine):
     _emb_cube(spark, engine)
