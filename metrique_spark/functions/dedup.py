@@ -511,8 +511,9 @@ def write_minhash_index(index: DataFrame, path: str,
     ``mode="append"`` adds one — the root's params must match
     (validated; appending rows signed differently would silently poison
     every probe). A crash at any point leaves the last committed index
-    readable. Root I/O goes through the control-plane ``fs`` backend
-    (default ``LocalFS``)."""
+    readable. A ``stream_dedup_sink``'s ``index_path`` is written by
+    that sink only (a ValueError here). Root I/O goes through the
+    control-plane ``fs`` backend (default ``LocalFS``)."""
     import json
     import uuid
 
@@ -524,6 +525,10 @@ def write_minhash_index(index: DataFrame, path: str,
             f"got {mode!r}")
     fs = fs or LocalFS()
     raw, root = _minhash_root(fs, path)
+    if root and "gen" in root:
+        raise ValueError(
+            f"minhash index at {path!r} belongs to a stream_dedup_sink "
+            "(its root carries the sink's state); only that sink writes it")
     params = getattr(index, _MINHASH_PARAMS_ATTR, None)
     old = root["parts"] if root else []
     if mode == "append" and root and root["params"] is not None:

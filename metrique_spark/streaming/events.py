@@ -55,19 +55,18 @@ _STATE_ROOT = "_state.json"
 def _state_root(fs, path: str,
                 batch_id: int | None) -> tuple[str | None, dict]:
     """``(text, root)`` of the sink state at ``path`` — one GET; a fresh
-    state starts empty. Only when there is no root does a batch list
-    the directory, to refuse an older state whose batch directories no
-    root names (a crashed first attempt of THIS batch is not one); a
-    drain outside any batch (``batch_id`` None) reads nothing there."""
+    state starts empty. Only when there is no root is the directory
+    listed, to refuse an older state whose batch directories no root
+    names (a crashed first attempt of THIS batch, ``batch_id``, is not
+    one; a drain outside any batch passes None)."""
     import json
 
     try:
         raw = fs.read_text(fs.join(path, _STATE_ROOT))
     except FileNotFoundError:
         raw = None
-        if batch_id is None or not any(
-                d.startswith("batch=") and d != f"batch={batch_id}"
-                for d in fs.listdir(path)):
+        if not any(d.startswith("batch=") and d != f"batch={batch_id}"
+                   for d in fs.listdir(path)):
             return None, {"gen": 0, "parts": []}
     root = json.loads(raw) if raw else {}
     if "parts" not in root:
@@ -276,12 +275,16 @@ def stream_upsert_sink(engine, cube: str, checkpoint_dir: str,
 
     The stage is sink state like any other (the protocol in the module
     header): a ``_state.json`` root names the staged batch directories,
-    a staging batch CASes it, and a flush publishes it empty, which
-    drops what it folded by name. Its control plane rides the ENGINE's
-    ``fs`` abstraction and the data plane is Spark's own parquet
-    writer, so the coalescing sink stages wherever the engine's
-    warehouse lives; real deployments put the checkpoint dir on the
-    same HDFS/S3 store as the cube."""
+    a staging batch CASes it, and a flush publishes it empty and then
+    sweeps the stage (``fs.vacuum``) down to the root — the drained
+    batches and any a crashed flush stranded. A stage with batch
+    directories but no root is an older form and refuses, in a flush
+    as in a batch (a first staging that crashed before its root is
+    taken back by that batch's replay, not by a flush). Its control
+    plane rides the ENGINE's ``fs`` abstraction and the data plane is
+    Spark's own parquet writer, so the coalescing sink stages wherever
+    the engine's warehouse lives; real deployments put the checkpoint
+    dir on the same HDFS/S3 store as the cube."""
 
     def _commit(batch_df: DataFrame):
         engine.upsert(cube, batch_df, stamped=True)
@@ -298,7 +301,7 @@ def stream_upsert_sink(engine, cube: str, checkpoint_dir: str,
 
     from pyspark.sql import functions as F
 
-    from metrique_spark.fs import publish
+    from metrique_spark.fs import publish, vacuum
 
     fs = engine.fs
     stage_root = fs.join(checkpoint_dir, "_upsert_stage")
@@ -326,7 +329,11 @@ def stream_upsert_sink(engine, cube: str, checkpoint_dir: str,
             # a crash before this publish replays the same staged
             # batches into the idempotent merge
             publish(fs, stage_root, _STATE_ROOT,
-                    json.dumps({**root, "parts": []}), raw, staged)
+                    json.dumps({**root, "parts": []}), raw)
+        # the stage root names nothing now: the sweep drops the drained
+        # batches and whatever a drain that crashed after its publish
+        # stranded
+        vacuum(fs, stage_root, {_STATE_ROOT})
         state["last_flush"] = _time.monotonic()
         return len(staged)
 

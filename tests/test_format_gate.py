@@ -258,3 +258,25 @@ def test_older_form_minhash_index_refused_and_kept(spark, tmp_path, form):
         with pytest.raises(ValueError, match="older on-disk form.*rebuild"):
             op()
     assert _parquet_files(p) == files
+
+
+def test_older_form_upsert_stage_refused_and_kept(spark, tmp_path):
+    """A group-commit stage holding staged batch directories but no
+    ``_state.json`` root (staged by a sink that listed its stage) is
+    refused by the final ``flush()`` as by the next batch — neither may
+    report nothing pending while rows sit unflushed — and keeps its
+    data."""
+    from metrique_spark.streaming.events import stream_upsert_sink
+
+    eng = Engine(spark, warehouse=str(tmp_path / "wh"), oid_buckets=2)
+    sink = stream_upsert_sink(eng, "cube", str(tmp_path / "ck"),
+                              coalesce_batches=2)
+    _objs(spark, [(1, 10)], "2024-01-01").write.parquet(
+        os.path.join(sink.stage_root, "batch=7"))
+    files = _parquet_files(sink.stage_root)
+    for op in (lambda: sink.flush(spark),
+               lambda: sink(_objs(spark, [(2, 20)], "2024-01-02"), 8)):
+        with pytest.raises(ValueError, match="older on-disk form.*rebuild"):
+            op()
+    assert _parquet_files(sink.stage_root) == files
+    assert not os.path.exists(os.path.join(tmp_path, "wh", "cube"))

@@ -411,6 +411,38 @@ def test_stream_dedup_sink_param_mismatch_errors(spark, tmp_path):
             "doc_id long, text string"), 1)
 
 
+@pytest.mark.parametrize("mode", ["overwrite", "append"])
+def test_write_minhash_index_refuses_a_sink_index(spark, tmp_path, mode):
+    """A stream_dedup_sink's ``index_path`` is readable as a MinHash
+    index, but only the sink writes it: ``write_minhash_index`` would
+    drop the sink's fold state and name a part with no corpus twin."""
+    import os
+
+    from metrique_spark.functions import dedup
+    from metrique_spark.streaming.events import stream_dedup_sink
+
+    idx_p = str(tmp_path / "idx")
+    sink = stream_dedup_sink(idx_p, str(tmp_path / "c"),
+                             str(tmp_path / "f"))
+    docs = spark.createDataFrame(
+        [(1, "some document text for the stream here")],
+        "doc_id long, text string")
+    sink(docs, 0)
+    before = sorted(os.listdir(idx_p))
+    root = open(os.path.join(idx_p, "_minhash.json")).read()
+    with pytest.raises(ValueError, match="stream_dedup_sink"):
+        dedup.write_minhash_index(dedup.minhash_index(docs), idx_p,
+                                  mode=mode)
+    assert sorted(os.listdir(idx_p)) == before
+    assert open(os.path.join(idx_p, "_minhash.json")).read() == root
+    # the sink goes on committing on top of its untouched state
+    sink(spark.createDataFrame(
+        [(2, "an unrelated second document of other words")],
+        "doc_id long, text string"), 1)
+    assert dedup.read_minhash_index(spark, idx_p).select(
+        "id").distinct().count() == 2
+
+
 def test_stream_dedup_sink_end_to_end_filestream(spark, tmp_path):
     """Real Structured Streaming wiring: a file-source stream drives
     stream_dedup_sink through foreachBatch with availableNow triggers and
@@ -1378,7 +1410,7 @@ def test_streaming_ingest_keeps_auto_index_fresh(spark, tmp_path):
 
 @pytest.mark.parametrize("backend", ["local", "objectstore"])
 def test_stream_upsert_sink_group_commit_coalesces(spark, tmp_path,
-                                                   backend):
+                                                   backend, monkeypatch):
     """Opt-in group commit: micro-batches stage durably and fold into
     ONE engine commit per N batches — the CURRENT state matches the
     per-batch oracle exactly (intermediate versions within a window
@@ -1462,3 +1494,31 @@ def test_stream_upsert_sink_group_commit_coalesces(spark, tmp_path,
                                coalesce_seconds=0.0)
     sink3(batches[0], 0)
     assert cur(eng3) == [(1, 10), (2, 20)]
+    # a drain that crashes after publishing the stage root empty, before
+    # its sweep, strands the drained directories no root names; the next
+    # flush — with nothing staged — sweeps them
+    eng4 = Engine(spark, warehouse=str(tmp_path / "wh_x"),
+                  oid_buckets=2, fs=mkfs())
+    ck4 = str(tmp_path / "ck_x")
+
+    def crash(*_a):
+        raise RuntimeError("crash after the stage publish")
+
+    with monkeypatch.context() as m:
+        m.setattr("metrique_spark.fs.vacuum", crash)
+        sink4 = stream_upsert_sink(eng4, "cube", ck4, coalesce_batches=2)
+        sink4(batches[0], 0)
+        with pytest.raises(RuntimeError, match="crash after"):
+            sink4(batches[1], 1)
+
+    def listing(sink):
+        return [d for d in eng4.fs.listdir(sink.stage_root)
+                if not d.startswith(".")]
+
+    assert json.loads(eng4.fs.read_text(eng4.fs.join(
+        sink4.stage_root, "_state.json")))["parts"] == []
+    assert listing(sink4) == ["_state.json", "batch=0", "batch=1"]
+    sink5 = stream_upsert_sink(eng4, "cube", ck4, coalesce_batches=2)
+    assert sink5.flush(spark) == 0
+    assert listing(sink5) == ["_state.json"]
+    assert cur(eng4) == [(1, 10), (2, 20), (3, 30), (4, 40)]
