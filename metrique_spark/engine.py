@@ -120,9 +120,9 @@ def _old_format_error(path: str, what: str) -> ValueError:
     like any other unusable leftover."""
     return ValueError(
         f"cube at {path!r} is in an older on-disk format ({what}); this "
-        "engine reads only a format-2 _layout.json plus a segmented "
-        "(format-5) manifest root that carries a schema and the "
-        "oid-bucket count — rebuild the cube")
+        "engine reads only a segmented format-6 manifest root that "
+        "carries the schema, the oid-bucket count and the cube's layout "
+        "— rebuild the cube")
 
 
 def _check_buckets(oid_buckets) -> None:
@@ -141,28 +141,30 @@ _INTERNAL = ("__batch", "__obucket", "__stime")
 class _Snapshot:
     """One resolution of a cube (``Engine._resolve``): every fact a
     public op reads about the cube, taken from ONE read of the manifest
-    root and one of the layout sidecar, so no op can mix two
-    generations. ``state`` is ``new`` (nothing committed) or
-    ``manifest``; ``gen`` is the live generation. ``generation`` picks
-    the generation the read-side facts (``dirs``, ``schema``,
-    ``moduli``, ``oid_dtype``) describe, None = live. The assembled
-    manifest is built lazily from the same raw root text, so the
-    root-only ``count``/``describe`` paths load no segment. Layout
-    facts: ``layout`` (``{}`` when absent), ``keep`` (the cube's
-    recorded retention) and ``timepart`` (the recorded period key, None
-    when the cube has none or a reader's session zone differs from the
-    recorded one). Read-only, like everything it hands out."""
+    root, so no op can mix two generations. ``state`` is ``new``
+    (nothing committed) or ``manifest``; ``gen`` is the live
+    generation. ``generation`` picks the generation the read-side facts
+    (``dirs``, ``schema``, ``moduli``, ``oid_dtype``) describe, None =
+    live. The assembled manifest is built lazily from the same raw root
+    text, so the root-only ``count``/``describe`` paths load no segment.
+    Cube-level facts, all from the root: ``layout`` (``{}`` before the
+    first commit), ``keep`` (the cube's recorded retention),
+    ``timepart`` (the recorded period key, None when the cube has none
+    or a reader's session zone differs from the recorded one) and
+    ``dropped`` (the dropped-column registry, name → type). Read-only,
+    like everything it hands out."""
 
     def __init__(self, eng, path: str, raw: str | None,
-                 root: dict | None, layout: dict,
-                 generation: int | None, timepart: str | None):
+                 root: dict | None, generation: int | None,
+                 timepart: str | None):
         self._eng = eng
         self.path, self.raw, self.root = path, raw, root
         self.state = "new" if root is None else "manifest"
         self.gen = None if root is None else root["gen"]
         self.generation = generation
-        self.layout = layout
-        self.keep = layout.get("keep_generations", 0)
+        self.layout = {} if root is None else root.get("layout", {})
+        self.keep = self.layout.get("keep_generations", 0)
+        self.dropped = {} if root is None else root.get("dropped", {})
         self.timepart = timepart
 
     @cached_property
@@ -284,7 +286,7 @@ class Engine:
         # with the period key the date spec's ``_start < U`` bound
         # partition-prunes to periods ``<= period(U)`` and the
         # current-only spec prunes to ``_current=true`` alone. Recorded
-        # in ``_layout.json`` (with the writing session's timezone —
+        # in the manifest root (with the writing session's timezone —
         # period strings are wall-clock renderings) so every later
         # writer partitions identically.
         if time_partition not in (None, "month", "year"):
@@ -378,8 +380,8 @@ class Engine:
                 pass
         self._views: dict[str, DataFrame] = {}
         # advisory index registry: cube -> [{"name", "column_names"}]
-        # (underscore-prefixed sidecar files are invisible to Spark's
-        # parquet discovery, so _indexes.json can live inside the cube dir)
+        # (this session's declarations; a committed cube's root keeps
+        # the durable copy)
         self._indexes: dict[str, list[dict]] = {}
         # cubes whose write lock THIS engine currently holds (reentrancy:
         # upsert's auto-compact runs inside the upsert's lock)
@@ -397,8 +399,8 @@ class Engine:
         # root referencing it commits (writers only ever create new
         # gen-scoped segment files; a crashed writer's overwrite of its
         # own uncommitted file is invisible — no committed root ever
-        # referenced it). Entries are dropped when the segment sweep
-        # retires the file.
+        # referenced it). Entries are dropped when a commit retires the
+        # file.
         self._seg_cache: dict[str, dict] = {}
         # assembled-manifest cache: path -> (root raw text, meta).
         # Keyed by the EXACT root text, so any commit (ours or another
@@ -684,15 +686,8 @@ class Engine:
     def columns(self, cube: str) -> list[str]:
         return self.table(cube).columns
 
-    _DROPPED_SIDECAR = "_dropped.json"
-
-    def _dropped_registry(self, path: str) -> dict:
-        import json
-
-        return json.loads(
-            self._read_sidecar(path, self._DROPPED_SIDECAR) or "{}")
-
-    def _check_redrop(self, path: str, incoming: DataFrame,
+    @staticmethod
+    def _check_redrop(snap: _Snapshot, incoming: DataFrame,
                       stored_cols) -> None:
         """Re-adding a previously dropped column is allowed ONLY at its
         recorded type: old files still hold the old physical values, so
@@ -705,9 +700,7 @@ class Engine:
         buckets); open rows in rewritten buckets read null, because the
         rewrite landed under the post-drop schema (the documented
         no-rewrite trade of ``drop_column``)."""
-        reg = self._dropped_registry(path)
-        if not reg:
-            return
+        reg = snap.dropped
         for f in incoming.schema.fields:
             t = reg.get(f.name)
             if (t is not None and f.name not in stored_cols
@@ -735,11 +728,10 @@ class Engine:
         null-fill them — only files that never rewrite (closed history
         batches, retained generations) keep the dropped bytes.
 
-        The dropped name + type is recorded in a registry sidecar and
-        the name may only ever be re-added at the SAME type (see
-        ``_check_redrop``). System/partition columns can't drop."""
-        import json
-
+        The dropped name + type is recorded in the manifest root's
+        ``dropped`` registry by the same CAS that publishes the narrower
+        schema, and the name may only ever be re-added at the SAME type
+        (see ``_check_redrop``). System/partition columns can't drop."""
         from pyspark.sql.types import StructType
 
         from metrique_spark.objects import SYSTEM_FIELDS
@@ -779,14 +771,10 @@ class Engine:
                         "another column)")
             newsch = StructType(
                 [f for f in sch.fields if f.name != col]).jsonValue()
-            # registry BEFORE the flip: a crash in between leaves an
-            # entry for a still-live column — harmless (_check_redrop
-            # only constrains columns absent from the stored schema)
-            reg = self._dropped_registry(path)
-            reg[col] = hit[0].dataType.simpleString()
-            self.fs.write_text(self.fs.join(path, self._DROPPED_SIDECAR),
-                               json.dumps(reg))
-            gen = self._commit(snap, set(snap.dirs), None, schema=newsch)
+            gen = self._commit(snap, set(snap.dirs), None, schema=newsch,
+                               facts={"dropped": {
+                                   **snap.dropped,
+                                   col: hit[0].dataType.simpleString()}})
             # the generation advanced, so auto-refresh indexes like
             # every other commit: content is identical (the dropped
             # column can't be an index column — guarded above), the
@@ -817,11 +805,12 @@ class Engine:
         file-format stats and partitioning serve that role — but the
         declaration is durably recorded per cube so ``index_list`` can
         report it (and a planner MAY use it as a sort/partition hint).
-        The read-merge-write of ``_indexes.json`` runs under the writer
-        lease, so two sessions registering at once cannot lose one
-        declaration."""
-        import json
-
+        A committed cube records this session's declarations in its
+        manifest root's ``indexes`` list: a new root at the same
+        generation, published by CAS under the writer lease, so two
+        sessions registering at once cannot lose one declaration. On a
+        cube with nothing committed the declaration stays in this
+        session."""
         if isinstance(fields, str):
             fields = [fields]
         fields = list(fields)
@@ -830,33 +819,32 @@ class Engine:
         registry = self._indexes.setdefault(cube, [])
         if entry not in registry:
             registry.append(entry)
-        path = self._path(cube)
-        if self.warehouse and self.fs.isdir(path):
-            with self._write_lock(cube):
-                # merge the persisted sidecar first: a fresh Engine
-                # starts with an empty registry, and a blind dump would
-                # drop declarations recorded by prior sessions
-                raw = self._read_sidecar(path, "_indexes.json")
-                for e in json.loads(raw) if raw else []:
-                    if e not in registry:
-                        registry.append(e)
-                self.fs.write_text(self.fs.join(path, "_indexes.json"),
-                                   json.dumps(registry))
+        if not self.warehouse:
+            return
+        with self._write_lock(cube):
+            snap = self._resolve(self._path(cube))
+            if snap.root is None:
+                return
+            # merge with the persisted list: a fresh Engine starts with
+            # an empty registry, and a blind write would drop
+            # declarations recorded by prior sessions
+            have = snap.root.get("indexes", [])
+            new = have + [e for e in registry if e not in have]
+            if new != have:
+                self._republish(snap, indexes=new)
 
     def index_list(self) -> dict[str, list[dict]]:
         """All advisory indexes per cube (reference ``index_list``,
         ``sqlalchemy.py:849-863``: dict of table → index descriptors) —
-        merges this session's registrations with any persisted
-        ``_indexes.json`` in the warehouse."""
-        import json
-
+        merges this session's registrations with the ``indexes`` list
+        each committed cube's manifest root persists."""
         out: dict[str, list[dict]] = {c: [] for c in self.ls()}
         for cube, entries in self._indexes.items():
             out.setdefault(cube, []).extend(entries)
         if self.warehouse:
             for cube in list(out):
-                raw = self._read_sidecar(self._path(cube), "_indexes.json")
-                for e in json.loads(raw) if raw else []:
+                root = self._resolve(self._path(cube)).root or {}
+                for e in root.get("indexes", []):
                     if e not in out[cube]:
                         out[cube].append(e)
         return out
@@ -1299,44 +1287,34 @@ class Engine:
                          self.fs.join(self.warehouse, f".{cube}.lock"),
                          ttl=self.lock_ttl)
 
+    # The on-disk format this engine reads and writes: the manifest
+    # root's ``format``. 6 makes the root the ONLY record of every fact
+    # a cube keeps — segment refs, the oid-bucket count on the root and
+    # every retained entry (5), plus the layout, the dropped-column
+    # registry and the advisory index registry. A lower root is refused
+    # as an older format, a higher one as a newer engine's.
+    _FORMAT = 6
+    # The constant fence the first write puts beside the data before
+    # anything else: engines at format 5 or older read its
+    # ``min_format`` and refuse the cube, and this engine reads it only
+    # when there is no root, where it marks a crashed first write
+    # (retried as new) apart from older root-less data (refused, kept).
     _LAYOUT_SIDECAR = "_layout.json"
-    # Highest on-disk format this engine version understands. A
-    # sidecar's ``min_format`` field names the format an engine MUST
-    # implement to read or write the cube without corrupting it: 4 is
-    # the SEGMENTED manifest (root pointer → per-bucket-range segment
-    # files) with per-directory modulus stamps (chained doubling
-    # migrations); 5 makes the manifest root the ONLY record of the
-    # oid-bucket count — every root and every retained-history entry
-    # carries it, and the sidecar carries none. An engine that would
-    # read the count from the sidecar, or prunes under at most two
-    # moduli, refuses loud here instead of misreading the cube. Every
-    # sidecar carries the fence from the first write.
-    _SUPPORTED_LAYOUT_FORMAT = 5
+    _FENCE = '{"format": 2, "min_format": 6}'
 
     def _session_tz(self) -> str:
         return self.spark.conf.get("spark.sql.session.timeZone")
 
-    def _write_layout(self, path: str, timepart: str | None = None,
-                      keep_generations: int = 0) -> None:
-        import json
-
-        # "format": 2 marks a sidecar written under the generation-
-        # pointer protocol, whose commit point is the MANIFEST flip — so
-        # sidecar-without-manifest means a crashed (uncommitted) first
-        # write. Data under a format-less sidecar is an older format:
-        # _resolve refuses it, never retries it as new (which would
-        # sweep it).
-        # ``min_format`` fences engines older than the format-5
-        # manifest every cube commits from its first write.
-        meta: dict = {"format": 2,
-                      "min_format": self._SUPPORTED_LAYOUT_FORMAT}
-        if timepart:
-            meta["time_partition"] = timepart
-            meta["time_zone"] = self._session_tz()
-        if keep_generations:
-            meta["keep_generations"] = keep_generations
-        self.fs.write_text(self.fs.join(path, self._LAYOUT_SIDECAR),
-                           json.dumps(meta))
+    def _new_layout(self) -> dict:
+        """The layout a first write records in the root: this engine's
+        period key (with the writing session's zone) and retention."""
+        out: dict = {}
+        if self.time_partition:
+            out["time_partition"] = self.time_partition
+            out["time_zone"] = self._session_tz()
+        if self.keep_generations:
+            out["keep_generations"] = self.keep_generations
+        return out
 
     def vacuum(self, cube: str, scratch_grace: float = 3600.0) -> None:
         """Sweep directories no retained generation references — the
@@ -1373,8 +1351,7 @@ class Engine:
                     p = self.fs.join(scratch, d)
                     mt = self.fs.mtime(p)
                     if mt is None or mt <= cutoff:
-                        (self.fs.delete_dir if self.fs.isdir(p)
-                         else self.fs.delete)(p)
+                        self.fs.delete_dir(p)
                 if not self.fs.listdir(scratch):
                     self.fs.delete_dir(scratch)
         with self._write_lock(cube):
@@ -1385,18 +1362,19 @@ class Engine:
             snap = self._resolve(path)  # refuses an older format
             if snap.root is None:
                 if self.fs.isdir(path):
-                    # crashed FIRST write (format-2 sidecar, no
-                    # manifest): nothing is committed, every data dir
-                    # is stranded — sweep them all
+                    # crashed FIRST write (fence, no root): nothing is
+                    # committed, every data dir is stranded — sweep
+                    # them all
                     self._sweep_unreferenced(path, set())
                 return
             self._sweep_unreferenced(path,
                                      self._retained_dirs(snap.manifest))
             # manifest segment files stranded by crashed commits
-            self._sweep_segments(path, snap.root)
+            _vacuum(self.fs, self.fs.join(path, self._MANIFEST_SEGDIR),
+                    self._seg_names(snap.root))
 
     def describe(self, cube: str) -> dict:
-        """Zero-scan storage-health report from manifest/sidecar state
+        """Zero-scan storage-health report from manifest-root state
         alone — no data listing, no Spark job: the live generation, its
         oid-bucket count (from the manifest root) and the retained
         generation numbers, open/closed directory counts, the
@@ -1534,22 +1512,19 @@ class Engine:
         the excess snapshots). Retention is per-CUBE state, like
         ``oid_buckets``/``time_partition`` — if it lived only in writer
         config, a maintenance job with a default engine would silently
-        truncate the history and sweep snapshots someone pinned."""
-        import json
-
+        truncate the history and sweep snapshots someone pinned. The
+        manifest root's layout records it: a new root at the same
+        generation, published by CAS under the writer lease."""
         if keep_generations < 0:
             raise ValueError("keep_generations must be >= 0")
         with self._write_lock(cube):
-            path = self._path(cube)
-            layout = self._resolve(path).layout
-            if not layout:
+            snap = self._resolve(self._path(cube))
+            if snap.root is None:
                 raise ValueError(
-                    f"cube {cube!r} has no layout sidecar — retention "
-                    "applies to warehouse cubes only")
-            self.fs.write_text(self.fs.join(path, self._LAYOUT_SIDECAR),
-                               json.dumps(dict(
-                                   layout,
-                                   keep_generations=keep_generations)))
+                    f"cube {cube!r} has nothing committed — retention "
+                    "applies to committed warehouse cubes only")
+            self._republish(snap, layout=dict(
+                snap.layout, keep_generations=keep_generations))
 
     def rebucket(self, cube: str, oid_buckets: int,
                  incremental: bool = False) -> None:
@@ -1771,9 +1746,10 @@ class Engine:
     # next successful commit.
 
     _MANIFEST_SIDECAR = "_manifest.json"
-    # Segmented manifest (format 5, the only manifest form): the root
+    # Segmented manifest (format 6, the only manifest form): the root
     # sidecar stays the single CAS commit point but holds only the
-    # generation, the oid-bucket count, rolled-up stats, and REFERENCES
+    # generation, the oid-bucket count, the cube's layout and
+    # registries, rolled-up stats, and REFERENCES
     # into ``_manifest_seg/`` — one immutable JSON segment per oid-bucket
     # RANGE carrying that range's directory list, per-directory stats,
     # and per-directory old-modulus stamps. A commit serializes only
@@ -1783,10 +1759,10 @@ class Engine:
     # O(touched buckets), not O(cube) — the monolithic manifest was the
     # one measured super-linear per-commit cost at 100 TB directory
     # counts (tens of MB re-serialized per 2-row trickle commit).
-    # Retained generations reference THEIR segment files; the
-    # post-flip segment sweep deletes only files no retained root
-    # references. Segment files are immutable once their root commits,
-    # so parses are cached per filename.
+    # Retained generations reference THEIR segment files; a flip
+    # deletes by name only the files the prior root named and no
+    # retained generation still does. Segment files are immutable once
+    # their root commits, so parses are cached per filename.
     _MANIFEST_SEGDIR = "_manifest_seg"
     _SEG_SPAN = 64  # oid-bucket values per segment file
 
@@ -1804,72 +1780,41 @@ class Engine:
 
     def _resolve(self, path: str, generation: int | None = None,
                  write: bool = False) -> _Snapshot:
-        """THE resolution of a cube: one GET of the manifest root, one
-        of the layout sidecar, and nothing else until a fact is used —
-        every public op reads and commits from the one ``_Snapshot``
-        this returns (see there), so no op can take its generation,
-        directories, moduli, schema and layout from two different
-        roots. The plan-time swept-generation retry calls this again
-        for a whole new snapshot.
+        """THE resolution of a cube: one GET of the manifest root and
+        nothing else until a fact is used — every public op reads and
+        commits from the one ``_Snapshot`` this returns (see there), so
+        no op can take its generation, directories, moduli, schema and
+        layout from two different roots. The plan-time swept-generation
+        retry calls this again for a whole new snapshot.
 
-        The engine reads exactly one on-disk format: a format-2
-        ``_layout.json`` plus a format-5 manifest root
-        (``_manifest_root``). No root means ``new``: absent, or a
-        crashed first write whose pointer never landed (format-2
-        sidecar, no root). Data under no sidecar, or under a
-        format-less one, is COMMITTED data from an older format —
-        refused with ``_old_format_error`` and never swept (a
-        first-write retry would flip a manifest naming only the new
-        batch and delete every existing directory). A ``generation``
-        the root does not retain raises ValueError.
+        The engine reads exactly one on-disk format: a format-6
+        manifest root (``_manifest_root``), whose ``format`` is the
+        fence — an older root is refused with ``_old_format_error``, a
+        newer one raises the upgrade error. No root means ``new``:
+        absent, or a crashed first write whose root never landed (its
+        ``_layout.json`` fence is there, read only in this case). Data
+        under no root and no fence — no sidecar, or an older one — is
+        COMMITTED data from an older format: refused and never swept
+        (a first-write retry would publish a root naming only the new
+        batch and delete every existing directory). A ``generation`` the root does not retain
+        raises ValueError.
 
-        The sidecar's ``min_format`` fence refuses a cube written by a
-        newer engine, and an unreadable sidecar raises instead of
-        reading as absent: an op that guessed the layout would prune or
-        partition with the wrong keys, or miss the fence. ``__stime``
-        values are wall-clock renderings in the WRITING session's zone,
-        so the recorded zone is part of the layout: a reader in another
-        zone skips the period prune (``timepart`` None; the row
-        predicate is zone-exact either way), and a ``write=True``
-        resolution raises instead of filing rows into inconsistent
-        period directories."""
-        import json
-
+        ``__stime`` values are wall-clock renderings in the WRITING
+        session's zone, so the recorded zone is part of the layout: a
+        reader in another zone skips the period prune (``timepart``
+        None; the row predicate is zone-exact either way), and a
+        ``write=True`` resolution raises instead of filing rows into
+        inconsistent period directories."""
         raw = self._manifest_raw(path)
         root = None if raw is None else self._manifest_root(path, raw)
-        text = self._read_sidecar(path, self._LAYOUT_SIDECAR)
-        layout: dict = {}
-        if text is not None:
-            p = self.fs.join(path, self._LAYOUT_SIDECAR)
-            try:
-                layout = json.loads(text)
-            except ValueError as e:
-                raise RuntimeError(
-                    f"unreadable layout sidecar {p!r}: {e} — refusing to "
-                    "guess the layout (mixed partition levels would "
-                    "corrupt the cube); repair the sidecar "
-                    "explicitly") from e
-            if not isinstance(layout, dict):
-                raise RuntimeError(
-                    f"layout sidecar {p!r} is not a JSON object "
-                    f"(got {type(layout).__name__}) — refusing to guess "
-                    "the layout; repair the sidecar explicitly")
-            need = layout.get("min_format", 0)
-            if need > self._SUPPORTED_LAYOUT_FORMAT:
-                raise RuntimeError(
-                    f"cube at {path!r} requires layout format {need} but "
-                    f"this engine supports up to "
-                    f"{self._SUPPORTED_LAYOUT_FORMAT} — touching it could "
-                    "corrupt bucket pruning (e.g. merging a rebucketed or "
-                    "mid-migration cube with the wrong modulus); upgrade "
-                    "the engine")
         if root is None:
-            if layout.get("format", 1) < 2 and any(
-                    d.startswith("_current=")
-                    for d in self.fs.listdir(path)):
-                raise _old_format_error(
-                    path, "data without a format-2 _layout.json sidecar")
-        elif generation is not None:
+            fenced = self._read_sidecar(
+                path, self._LAYOUT_SIDECAR) == self._FENCE
+            if not fenced and any(d.startswith("_current=")
+                                  for d in self.fs.listdir(path)):
+                raise _old_format_error(path, "data without a manifest root")
+            return _Snapshot(self, path, None, None, generation, None)
+        if generation is not None:
             have = [root["gen"]] + [h["gen"]
                                     for h in root.get("history", [])]
             if generation not in have:
@@ -1877,9 +1822,10 @@ class Engine:
                     f"generation {generation} of cube {path!r} is "
                     f"expired or unknown; retained: {sorted(have)} "
                     "(raise Engine(keep_generations=...) to retain more)")
+        layout = root.get("layout", {})
         tp, tz = layout.get("time_partition"), layout.get("time_zone")
         if tp is not None and tz != self._session_tz():
-            if write and root is not None:
+            if write:
                 raise RuntimeError(
                     f"cube at {path!r} is time-partitioned in timezone "
                     f"{tz!r} but the session timezone is "
@@ -1887,7 +1833,17 @@ class Engine:
                     "into inconsistent period directories; set "
                     "spark.sql.session.timeZone to the cube's zone")
             tp = None
-        return _Snapshot(self, path, raw, root, layout, generation, tp)
+        return _Snapshot(self, path, raw, root, generation, tp)
+
+    def _republish(self, snap: _Snapshot, **facts) -> None:
+        """Publish ``snap``'s root again at the same generation with
+        some cube-level ``facts`` replaced (``layout``, ``indexes``):
+        one CAS against the snapshot's root text, under the writer
+        lease; nothing is retired."""
+        import json
+
+        publish(self.fs, snap.path, self._MANIFEST_SIDECAR,
+                json.dumps({**snap.root, **facts}), snap.raw)
 
     def _commit(self, snap: _Snapshot, dirs: set[str],
                 new_stats: dict | None, *, schema: dict | None = None,
@@ -1896,8 +1852,8 @@ class Engine:
         snapshot: retain the superseded generation under the cube's
         recorded retention, flip the pointer (CAS against the
         snapshot's root text; ``schema`` defaults to the snapshot's),
-        then sweep — without listing — the directories the flip
-        retired. Returns the generation it published."""
+        then delete — without listing — the directories and segment
+        files the flip retired. Returns the generation it published."""
         meta = snap.manifest
         gen = snap.gen + 1
         hist = self._push_history(meta, snap.keep)
@@ -1916,10 +1872,11 @@ class Engine:
         """Parse (only) the manifest ROOT sidecar — O(segments), not
         O(dirs): enough for describe()/metadata-count rollups and the
         CAS protocol. ``_manifest`` assembles the full flat dict from
-        it. Only a format-5 root is read: segment refs and an
+        it. Only a format-6 root is read: segment refs and an
         ``oid_buckets`` count on the root and on every retained
-        generation, plus a ``schema``. Any other root is an older
-        format: refused, its data kept."""
+        generation, plus a ``schema``. A lower format is an older
+        cube — refused, its data kept; a higher one is a newer engine's
+        and raises the upgrade error."""
         import json
 
         if raw is None:
@@ -1937,13 +1894,20 @@ class Engine:
             raise RuntimeError(
                 f"malformed cube manifest in {path!r} — refusing to fall "
                 "back to a listing read")
+        fmt = root.get("format")
+        if isinstance(fmt, int) and fmt > self._FORMAT:
+            raise RuntimeError(
+                f"cube at {path!r} requires on-disk format {fmt} but this "
+                f"engine supports up to {self._FORMAT} — touching it could "
+                "corrupt it (e.g. merging a rebucketed or mid-migration "
+                "cube with the wrong modulus); upgrade the engine")
         if root.get("schema") is None:
             raise _old_format_error(path, "manifest root without a schema")
-        if root.get("format") != 5 or any(
+        if fmt != self._FORMAT or any(
                 "segs" not in e or "oid_buckets" not in e
                 for e in [root, *root.get("history", [])]):
             raise _old_format_error(
-                path, f"manifest root format {root.get('format')}, not 5")
+                path, f"manifest root format {fmt}, not {self._FORMAT}")
         return root
 
     @classmethod
@@ -2058,7 +2022,7 @@ class Engine:
     def _push_history(self, meta: dict, keep: int) -> list[dict]:
         """History entries for the NEXT manifest: the superseded current
         generation first, then the previously retained ones, truncated
-        to ``keep`` — the CUBE's recorded retention (layout sidecar),
+        to ``keep`` — the CUBE's recorded retention (the root's layout),
         not this writer's config, so a maintenance engine with default
         settings cannot silently truncate pinned snapshots."""
         if not keep:
@@ -2172,17 +2136,25 @@ class Engine:
                        schema: dict,
                        oid_buckets: int | object = _CARRY,
                        migration: dict | None | object = _CARRY,
-                       dropped=()) -> None:
+                       dropped=(), facts: dict | None = None) -> None:
         """The commit point: ONE atomic pointer write through
         ``fs.publish`` — a CAS against the text read at operation start
         (under the writer lease this only fails if a TTL-expired zombie
         writer raced us; fail loud), then the ``dropped`` directories
-        (what the prior generations retained and this one does not) go
-        by name, without listing: at 100 TB the per-commit tree LIST
-        would be the last O(cube) metadata op in the commit path.
-        Crash-stranded directories are left for ``vacuum``.
+        (what the prior generations retained and this one does not) and
+        the segment files only the prior root named go by name, without
+        listing: at 100 TB the per-commit tree LIST would be the last
+        O(cube) metadata op in the commit path. Crash-stranded
+        directories and segment files are left for ``vacuum``.
 
-        Every cube commits the SEGMENTED layout (format 5): the
+        The root is the only record of the cube-level facts —
+        ``layout`` (period key and zone, retention), the ``dropped``
+        column registry and the advisory ``indexes`` list. Every flip
+        carries them forward from the prior root (a first flip records
+        this engine's layout); ``facts`` replaces some of them in the
+        same CAS (``drop_column``'s registry entry).
+
+        Every cube commits the SEGMENTED layout (format 6): the
         directory list and per-directory stats are re-grouped into
         per-bucket-range segment files, only segments whose content
         changed are serialized (to fresh gen-scoped filenames — a
@@ -2248,16 +2220,24 @@ class Engine:
             self._flip_build_segmented(path, prior_root, gen, dirs,
                                        history, stats, schema, stamps,
                                        body)
+        carried = ({k: prior_root[k] for k in ("layout", "dropped",
+                                               "indexes")
+                    if k in prior_root} if old_raw
+                   else {"layout": self._new_layout()})
+        body.update(carried, **(facts or {}))
+        # superseded segment files: named by the prior root, by neither
+        # this one nor a generation it retains
+        segs = {self.fs.join(self._MANIFEST_SEGDIR, f)
+                for f in self._seg_names(prior_root)
+                - self._seg_names(body)}
         # the first flip is a CAS too (put-if-absent): two racing first
         # writers (TTL-expired zombie vs reclaimer) must not both
         # "succeed" — the loser's sweep would delete the winner's
         # directories while the surviving manifest references them
         publish(self.fs, path, self._MANIFEST_SIDECAR, json.dumps(body),
-                old_raw, dropped)
-        # retire segment files no retained root references (this
-        # commit's superseded ones, or strands of crashed attempts)
-        with self._phase("flip_sweep_segments"):
-            self._sweep_segments(path, body)
+                old_raw, set(dropped) | segs)
+        for f in segs:
+            self._seg_cache.pop(self.fs.join(path, f), None)
 
     def _flip_build_segmented(self, path: str, prior_root: dict,
                               gen: int, dirs: set[str],
@@ -2265,10 +2245,10 @@ class Engine:
                               stats: dict | None, schema: dict,
                               stamps: dict[str, int],
                               body: dict) -> None:
-        """Build the format-5 root ``body`` in place and write the
+        """Build the format-6 root ``body`` in place and write the
         changed segment files (BEFORE the CAS — stranded ones are
-        invisible until a root references them and are swept by the
-        next successful commit)."""
+        invisible until a root references them and are swept by
+        ``vacuum``)."""
         import json
 
         st = stats or {}
@@ -2305,14 +2285,14 @@ class Engine:
             # drop-and-recreate of the cube, and across a TTL-expired
             # zombie losing the CAS race; a crash-retry with identical
             # input rewrites the identical file, and one with changed
-            # input writes a NEW name whose stranded predecessor the
-            # post-commit sweep retires
+            # input writes a NEW name whose stranded predecessor
+            # vacuum retires
             h = hashlib.md5(txt.encode()).hexdigest()[:10]
             fname = f"g{gen:08d}-{k}-{h}.json"
             full = self.fs.join(path, self._MANIFEST_SEGDIR, fname)
             self.fs.write_text(full, txt)
             seg_refs[k] = fname
-        body["format"] = 5
+        body["format"] = self._FORMAT
         body["tz"] = tz
         body["segs"] = seg_refs
         body["schema"] = schema
@@ -2384,24 +2364,12 @@ class Engine:
                                      for d in stamps)}
         return rollup
 
-    def _sweep_segments(self, path: str, root: dict) -> None:
-        """Delete manifest segment files the just-committed root (live
-        refs + every retained generation's refs) does not reference.
-        Runs post-CAS under the writer lease; listing the segment dir
-        is safe — readers resolve segments from root refs, never
-        listings, and a reader still holding the superseded root
-        re-resolves once on a missing segment (see ``_manifest``)."""
-        keep = set((root.get("segs") or {}).values())
-        for h in root.get("history", []):
-            keep.update((h.get("segs") or {}).values())
-        segdir = self.fs.join(path, self._MANIFEST_SEGDIR)
-        if not self.fs.isdir(segdir):
-            return
-        for f in self.fs.listdir(segdir):
-            if f not in keep:
-                full = self.fs.join(segdir, f)
-                self.fs.delete(full)
-                self._seg_cache.pop(full, None)
+    @staticmethod
+    def _seg_names(root: dict) -> set[str]:
+        """Segment files a root names: its live refs plus every
+        retained generation's."""
+        return {f for e in [root, *root.get("history", [])]
+                for f in (e.get("segs") or {}).values()}
 
     def _sweep_unreferenced(self, path: str, keep: set[str]) -> None:
         """Delete data directories the live manifest does not reference
@@ -2564,7 +2532,7 @@ class Engine:
     def _stime_col(timepart: str):
         """Scan-stage period expression for the ``__stime`` partition
         key — a wall-clock rendering of ``_start`` in the session
-        timezone (the layout sidecar pins the zone). Zero-padded
+        timezone (the root's layout pins the zone). Zero-padded
         ``yyyy-MM``/``yyyy`` strings compare lexicographically in date
         order, which is what the prune predicate relies on."""
         return F.date_format(
@@ -2614,7 +2582,7 @@ class Engine:
         the cube just to look at its column types."""
         table = self._empty_schema_frame(snap.schema).drop(*_INTERNAL)
         self._check_oid_type(table, incoming)
-        self._check_redrop(snap.path, incoming, set(table.columns))
+        self._check_redrop(snap, incoming, set(table.columns))
         return self._align_incoming(table, incoming, evolve)
 
     @staticmethod
@@ -2919,10 +2887,11 @@ class Engine:
         return len(drop - dirs)
 
     def _first_write(self, snap: _Snapshot, obj: DataFrame) -> int | None:
-        """First committed generation. Layout sidecar FIRST (a crash
-        between data and sidecar would otherwise leave data every later
-        operation refuses as an older format); the manifest PUT
-        is the commit point — until it lands, readers see nothing and a
+        """First committed generation. The constant ``_layout.json``
+        fence FIRST (a crash between data and fence would otherwise
+        leave data every later operation refuses as an older format);
+        the manifest PUT, which records this engine's layout, is the
+        commit point — until it lands, readers see nothing and a
         retry rewrites the same gen-1 directories. ``obj`` must be
         checkpointed by the caller: the stats aggregate and the data
         write must see the SAME rows — stamp()'s default _start is
@@ -2932,7 +2901,8 @@ class Engine:
         would then delete the real ones. Returns the generation it
         published (1), or None when nothing landed."""
         path, buckets = snap.path, self.oid_buckets
-        self._write_layout(path, self.time_partition, self.keep_generations)
+        self.fs.write_text(self.fs.join(path, self._LAYOUT_SIDECAR),
+                           self._FENCE)
         dirs = self._write_dirs(
             obj.drop("_current"), snap, buckets, self.time_partition,
             open_batch="open-g1", closed_batch="hist-g1")

@@ -4,8 +4,9 @@ Every *data-plane* read/write in this engine goes through Spark (parquet
 via the JVM's Hadoop FileSystem layer, which already speaks local disk,
 HDFS, and object stores). What does NOT ride a Hadoop path string is the
 *control plane*: warehouse catalog listings, advisory writer locks,
-the `_indexes.json` registry, and the root every store commits through
-(``publish`` / ``vacuum`` below). Those used to call
+and the root every store commits through (``publish`` / ``vacuum``
+below) — for a cube, the manifest root that also records its layout,
+dropped columns and advisory index registry. Those used to call
 ``os.path`` / ``glob`` / ``O_CREAT|O_EXCL`` directly — POSIX-only
 semantics that do not exist on an object store (no atomic rename, no
 exclusive-create file handles, no real directories).
@@ -166,7 +167,8 @@ class FileSystem:
         raise NotImplementedError
 
     def delete_dir(self, path: str) -> None:
-        """Recursive prefix delete; absent is a no-op."""
+        """Recursive prefix delete of what ``path`` names — a directory
+        tree, or a single object; absent is a no-op."""
         raise NotImplementedError
 
 
@@ -293,6 +295,8 @@ class _LocalBacked(FileSystem):
 
         if os.path.isdir(path):
             shutil.rmtree(path, ignore_errors=True)
+        else:
+            self.delete(path)
 
 
 class LocalFS(_LocalBacked):
@@ -470,10 +474,10 @@ def publish(fs: FileSystem, path: str, name: str, text: str,
     """THE commit point of every store rooted at ``path``: swap the
     root object ``name`` to ``text`` by compare-and-swap against the
     text the writer read (``expected``; put-if-absent when there was
-    none), then delete the ``dropped`` directories — the ones the old
-    root named and the new one does not, relative to ``path`` — and
-    prune the parents that leaves empty. Both sets are known, so
-    nothing is listed. A lost swap raises ``ConcurrentWriteError`` and
+    none), then delete the ``dropped`` entries — the directories and
+    files the old root named and the new one does not, relative to
+    ``path`` — through ``drop``. Both sets are known, so nothing is
+    listed. A lost swap raises ``ConcurrentWriteError`` and
     deletes nothing. Directories a crashed writer stranded are
     ``vacuum``'s."""
     p = fs.join(path, name)
@@ -490,12 +494,16 @@ def publish(fs: FileSystem, path: str, name: str, text: str,
 
 
 def drop(fs: FileSystem, path: str, dirs) -> None:
-    """Delete the named directories under ``path`` (deepest first) and
-    the parent shells each one empties — the only LIST is one per
-    parent checked."""
+    """Delete the named entries under ``path`` (deepest first): each is
+    a directory or a single file. A dropped partition directory (a
+    ``key=value`` leaf) also takes the parent shells it empties — the
+    only LIST is one per parent checked; a file or any other directory
+    leaves its parent unlisted."""
     for d in sorted(dirs, reverse=True):
         fs.delete_dir(fs.join(path, d))
         parts = d.split("/")
+        if "=" not in parts[-1]:
+            continue
         for i in range(len(parts) - 1, 0, -1):
             parent = fs.join(path, *parts[:i])
             if fs.listdir(parent):
@@ -518,7 +526,6 @@ def vacuum(fs: FileSystem, path: str, keep) -> None:
             if r in above:
                 walk(r)
             elif r not in keep and not d.startswith("."):
-                full = fs.join(path, r)
-                (fs.delete_dir if fs.isdir(full) else fs.delete)(full)
+                fs.delete_dir(fs.join(path, r))
 
     walk("")

@@ -766,8 +766,7 @@ def write_ivf_index(
 def read_ivf_index(spark, path: str, fs=None) -> tuple:
     """(assigned, centroids) back from ``write_ivf_index`` output."""
     _, root = _read_root(_default_fs(fs), path)
-    return (_frame(spark, path, root), spark.read.parquet(
-        f"{path}/{root['model']['centroid_dir']}"))
+    return _frame(spark, path, root), _centroids(spark, path, root)
 
 
 def append_to_ivf_index(
@@ -1804,13 +1803,29 @@ def _frame(spark, path: str, root: dict, leaves=None) -> DataFrame:
             .schema(schema).parquet(*[f"{path}/{g}" for g in leaves]))
 
 
+def _centroids(spark, path: str, root: dict, id_type=None) -> DataFrame:
+    """An IVF index's frozen ``(centroid_id, cvec)`` table, read under
+    its known schema — no footer is sampled. ``centroid_id`` has the id
+    column's type: the root's recorded one, or ``id_type`` for the
+    build that wrote the table before its root had a schema."""
+    from pyspark.sql.types import (ArrayType, DoubleType, StructField,
+                                   StructType)
+
+    if id_type is None:
+        id_type = StructType.fromJson(root["schema"])[
+            root["id_col"]].dataType
+    schema = StructType([StructField("centroid_id", id_type),
+                         StructField("cvec", ArrayType(DoubleType()))])
+    return spark.read.schema(schema).parquet(
+        f"{path}/{root['model']['centroid_dir']}")
+
+
 def _centroid_rows(spark, path: str, root: dict) -> list:
     """The frozen coarse centroids as a sorted ``[(cid, vec)]`` list."""
     if root["kind"] == "ivfpq":
         return [(c[0], list(c[1])) for c in root["model"]["centroids"]]
-    return sorted((r["centroid_id"], list(r["cvec"])) for r in spark.read
-                  .parquet(f"{path}/{root['model']['centroid_dir']}")
-                  .collect())
+    return sorted((r["centroid_id"], list(r["cvec"]))
+                  for r in _centroids(spark, path, root).collect())
 
 
 def _new_wid() -> str:
@@ -1924,8 +1939,9 @@ def _encode(batch: DataFrame, path: str, root: dict,
     vecs = batch.select(F.col(id_col).alias("__vid"),
                         _as_double(vec_col).alias("v"))
     if kind == "ivf":
-        cents = batch.sparkSession.read.parquet(
-            f"{path}/{model['centroid_dir']}")
+        cents = _centroids(batch.sparkSession, path, root,
+                           None if "schema" in root
+                           else batch.schema[id_col].dataType)
         return (_nearest_buckets(vecs, cents, "v", 1)
                 .select(F.col("__vid").alias(id_col), "v",
                         F.col("centroid_id").alias("bucket")))
@@ -2092,7 +2108,7 @@ def _topk(spark, path: str, root: dict, queries: DataFrame, k: int,
     rows = _frame(spark, path, root)
     if kind == "ivf":
         return ivf_topk_indexed(
-            rows, spark.read.parquet(f"{path}/{meta['centroid_dir']}"),
+            rows, _centroids(spark, path, root),
             queries, k=k, nprobe=4 if nprobe is None else nprobe,
             id_col=meta["id_col"], vec_col=vec_col)
     if kind == "pq":

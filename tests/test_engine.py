@@ -1,5 +1,6 @@
 """Engine facade tests: find/count/distinct/get_last_field/catalog ops."""
 
+import json
 import os
 
 import pytest
@@ -116,23 +117,29 @@ def test_index_and_index_list(spark, tmp_path):
 
 
 def test_index_registration_takes_writer_lease(spark, tmp_path):
-    """index() read-merge-writes _indexes.json under the cube's writer
-    lease: while another engine holds it, registration fails fast with
-    ConcurrentWriteError (two sessions registering at once would
-    otherwise lose one declaration) and writes nothing; once the lease
-    is free it lands."""
+    """index() read-merge-writes the manifest root's ``indexes`` list
+    under the cube's writer lease: while another engine holds it,
+    registration fails fast with ConcurrentWriteError (two sessions
+    registering at once would otherwise lose one declaration) and
+    writes nothing; once the lease is free it lands, at the same
+    generation."""
     from metrique_spark.engine import ConcurrentWriteError
 
     wh = str(tmp_path)
     eng = Engine(spark, warehouse=wh)
     eng.insert("c1", spark.createDataFrame([(1, "a")], ["k", "v"]),
                oid="k")
+    mp = os.path.join(wh, "c1", "_manifest.json")
+    before = open(mp).read()
     other = Engine(spark, warehouse=wh)
     with other._write_lock("c1"):
         with pytest.raises(ConcurrentWriteError):
             eng.index("c1", ["k"])
-        assert not os.path.exists(os.path.join(wh, "c1", "_indexes.json"))
+        assert open(mp).read() == before
     eng.index("c1", ["k"])
+    root = json.loads(open(mp).read())
+    assert root["indexes"] == [{"name": "ix_c1_k", "column_names": ["k"]}]
+    assert root["gen"] == json.loads(before)["gen"]
     assert [e["name"] for e in Engine(spark, warehouse=wh)
             .index_list()["c1"]] == ["ix_c1_k"]
 
@@ -311,7 +318,7 @@ def test_engine_full_protocol_on_object_store(spark, tmp_path):
 
 
 def test_first_write_crash_between_sidecar_and_data_converges(spark, tmp_path):
-    """The layout sidecar lands before the first data write; a crash in
+    """The `_layout.json` fence lands before the first data write; a crash in
     between leaves a data-less cube dir. The retry must take the
     first-write path again (not the merge path, which would fail reading
     an empty cube) and converge."""
@@ -333,13 +340,13 @@ def test_first_write_crash_between_sidecar_and_data_converges(spark, tmp_path):
                .withColumn("_end", F.col("_end").cast("timestamp")))
     eng.upsert("c", stamped)
     assert eng.count("c") == 1
-    # layout survived (the first write must not delete the sidecar);
-    # the retry re-stamps it with the protocol format marker, and the
-    # bucket count lands in the manifest root, not the sidecar
+    # the retry re-stamps the sidecar with the constant fence, and the
+    # bucket count and layout land in the manifest root
     assert json.load(open(os.path.join(wh, "c", "_layout.json"))) == \
-        {"format": 2, "min_format": 5}
+        {"format": 2, "min_format": 6}
     root = json.load(open(os.path.join(wh, "c", "_manifest.json")))
-    assert root["format"] == 5 and root["oid_buckets"] == 8
+    assert root["format"] == 6 and root["oid_buckets"] == 8
+    assert root["layout"] == {}
     # and the cube keeps working through the normal merge path
     eng.upsert("c", stamped.withColumn("val", F.lit("b"))
                .withColumn("_start",
@@ -418,9 +425,10 @@ def test_find_oids_empty_list_returns_empty(spark, tmp_path):
 
 
 def test_unreadable_layout_sidecar_raises(spark, tmp_path):
-    """An unparseable _layout.json must raise loudly, not fall back to
-    the legacy layout — a writer appending legacy directories into a
-    bucketed cube corrupts it silently."""
+    """An unparseable manifest root — the only record of the cube's
+    layout — must raise loudly, not fall back to a listing read or a
+    guessed layout: a writer appending directories under the wrong
+    partition keys corrupts the cube silently."""
     import os
 
     import pytest
@@ -434,15 +442,15 @@ def test_unreadable_layout_sidecar_raises(spark, tmp_path):
     stamped = (df.withColumn("_start", F.col("_start").cast("timestamp"))
                .withColumn("_end", F.col("_end").cast("timestamp")))
     eng.upsert("bk", stamped)
-    p = os.path.join(str(tmp_path / "wh"), "bk", "_layout.json")
+    p = os.path.join(str(tmp_path / "wh"), "bk", "_manifest.json")
     with open(p, "w") as f:
         f.write("{not json")
-    with pytest.raises(RuntimeError, match="unreadable layout sidecar"):
+    with pytest.raises(RuntimeError, match="unreadable cube manifest"):
         eng.upsert("bk", stamped)
     # scalar JSON (parses fine but is not an object) also refuses
     with open(p, "w") as f:
         f.write("12345")
-    with pytest.raises(RuntimeError, match="not a JSON object"):
+    with pytest.raises(RuntimeError, match="malformed cube manifest"):
         eng.upsert("bk", stamped)
 
 
@@ -776,16 +784,14 @@ def test_rebucket_migrates_count_and_stays_correct(spark, tmp_path):
     assert eng.describe("c")["oid_buckets"] == 16
     # the manifest root is the count's one record: the live count is
     # the new one, every retained generation keeps its old count (so
-    # time travel below still prunes correctly), and the sidecar holds
-    # the min_format fence but no count
+    # time travel below still prunes correctly), and the root carries
+    # the format fence and no layout count
     import json as _json
 
     root = _json.loads(eng.fs.read_text(
         eng.fs.join(eng._path("c"), "_manifest.json")))
     assert root["oid_buckets"] == 16
-    lay = _json.loads(eng.fs.read_text(
-        eng.fs.join(eng._path("c"), "_layout.json")))
-    assert lay["min_format"] == 5 and "oid_buckets" not in lay
+    assert root["format"] == 6 and "oid_buckets" not in root["layout"]
     meta_h = eng._manifest(eng._path("c"))["history"]
     assert all(h["oid_buckets"] == 4 for h in meta_h)
     after = sorted((r["_oid"], r["x"], str(r["_start"]))

@@ -201,7 +201,8 @@ def test_fault_sweep_cube_commit_protocol(spark, tmp_path, backend):
     the protocol must not lean on either): after each crash (a) a clean
     reader sees exactly the pre-op or post-op state — never torn;
     (b) retrying the op sequence converges to the model; (c) vacuum
-    leaves exactly the manifest-referenced directories on disk."""
+    leaves exactly the manifest-referenced directories on disk, and
+    exactly the segment files the root and its retained entries name."""
     status, total, _ = _run_ops(spark, str(tmp_path / "clean"), None,
                                 backend)
     assert status == "done" and total >= 6, "protocol mutation count"
@@ -227,8 +228,11 @@ def test_fault_sweep_cube_commit_protocol(spark, tmp_path, backend):
         # vacuum sweeps exactly the stranded dirs: what remains on disk
         # is precisely the manifest's directory set
         clean.vacuum(CUBE, scratch_grace=0)
-        meta = clean._manifest(clean._path(CUBE))
-        assert _on_disk_batch_dirs(clean._path(CUBE)) == set(meta["dirs"])
+        path = clean._path(CUBE)
+        meta = clean._manifest(path)
+        assert _on_disk_batch_dirs(path) == set(meta["dirs"])
+        assert set(clean.fs.listdir(clean.fs.join(path, "_manifest_seg"))) \
+            == clean._seg_names(clean._manifest_root(path)), (k, i, "segs")
         assert _cube_rows(spark, clean) == model.rows(), (k, i, "vacuum")
     assert faulted == total  # every budget value crashed somewhere
 
@@ -262,7 +266,7 @@ def test_fault_sweep_doubling_migration(spark, tmp_path):
     sequence converges to the model; (c) the migration invariant holds
     throughout (``old_dirs`` is always a subset of the live dirs) and
     the finished cube has no migration block, the doubled count in
-    both manifest and sidecar, and vacuum leaves exactly the
+    the assembled manifest and the root, and vacuum leaves exactly the
     manifest's directories."""
     status, total, _ = _run_ops(spark, str(tmp_path / "clean"), None,
                                 ops=MIG_OPS)
@@ -294,12 +298,10 @@ def test_fault_sweep_doubling_migration(spark, tmp_path):
         assert meta["oid_buckets"] == 16
         import json
 
-        lay = json.loads(clean.fs.read_text(
-            clean.fs.join(clean._path(CUBE), "_layout.json")))
         root = json.loads(clean.fs.read_text(
             clean.fs.join(clean._path(CUBE), "_manifest.json")))
-        assert root["oid_buckets"] == 16 and lay["min_format"] >= 4
-        assert "oid_buckets" not in lay
+        assert root["oid_buckets"] == 16 and root["format"] >= 4
+        assert "oid_buckets" not in root["layout"]
         # point lookup through the converged cube prunes correctly
         assert sorted(
             r["_oid"] for r in
@@ -827,7 +829,7 @@ def test_migration_steps_race_concurrent_snapshots(spark, tmp_path):
     migration is physical-only and the merges are migration-aware, so
     the final cube must equal the snapshot model exactly, the
     migration must complete, and the final layout (the root's count,
-    a count-free sidecar, point lookups) must be consistent."""
+    a count-free layout, point lookups) must be consistent."""
     import threading
 
     wh = str(tmp_path / "wh")
@@ -880,12 +882,10 @@ def test_migration_steps_race_concurrent_snapshots(spark, tmp_path):
     assert meta["oid_buckets"] == 4
     import json
 
-    lay = json.loads(clean.fs.read_text(
-        clean.fs.join(clean._path(CUBE), "_layout.json")))
     root = json.loads(clean.fs.read_text(
         clean.fs.join(clean._path(CUBE), "_manifest.json")))
-    assert root["oid_buckets"] == 4 and lay["min_format"] >= 3
-    assert "oid_buckets" not in lay
+    assert root["oid_buckets"] == 4 and root["format"] >= 3
+    assert "oid_buckets" not in root["layout"]
     assert clean.count(CUBE) == 7  # 6 boot oids + oid 9
     assert sorted(r["_oid"] for r in
                   clean.find(CUBE, oids=[1, 9]).collect()) == [1, 9]

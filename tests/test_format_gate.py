@@ -1,10 +1,11 @@
-"""The engine reads exactly one on-disk cube format: a format-2
-``_layout.json`` sidecar plus a segmented (format-5) manifest root that
-carries a schema and the oid-bucket count, and every cube is
-oid-bucketed. Every older state is refused with the one ValueError from
-``_cube_state``/``_manifest_root`` — and refused WITHOUT touching the
-data: an older cube's directories are committed data, so no writer may
-sweep them as if they were a crashed first write."""
+"""The engine reads exactly one on-disk cube format: a segmented
+(format-6) manifest root that carries a schema, the oid-bucket count and
+the cube's layout and registries, and every cube is oid-bucketed; the
+``_layout.json`` fence is read only when there is no root. Every older
+state is refused with the one ValueError from ``_resolve``/
+``_manifest_root`` — and refused WITHOUT touching the data: an older
+cube's directories are committed data, so no writer may sweep them as
+if they were a crashed first write."""
 
 import json
 import os
@@ -75,9 +76,23 @@ def _format4_root(eng, path):
         json.dump(root, fh)
 
 
+def _format5_root(eng, path):
+    # the root the previous engine wrote: the layout lived in the
+    # sidecar, whose fence named format 5
+    mp = os.path.join(path, "_manifest.json")
+    with open(mp) as fh:
+        root = json.load(fh)
+    root["format"] = 5
+    root.pop("layout")
+    with open(mp, "w") as fh:
+        json.dump(root, fh)
+    with open(os.path.join(path, "_layout.json"), "w") as fh:
+        json.dump({"format": 2, "min_format": 5}, fh)
+
+
 @pytest.mark.parametrize("make_old", [_no_layout, _formatless_layout,
                                       _schemaless_root, _monolithic_root,
-                                      _format4_root])
+                                      _format4_root, _format5_root])
 def test_older_format_refused_and_never_wiped(spark, tmp_path, make_old):
     wh = str(tmp_path / "wh")
     first = Engine(spark, warehouse=wh)

@@ -1,8 +1,8 @@
-"""Invariant suite for the SEGMENTED manifest (format 4): the flip →
+"""Invariant suite for the SEGMENTED manifest (format 6): the flip →
 assemble round trip is the identity every consumer depends on, touched
 segments rotate while untouched ranges carry by filename reference,
 modulus stamps group back into migration blocks, history entries keep
-their segment refs, the sweep retires exactly the unreferenced files,
+their segment refs, a flip retires by name exactly the files no root names,
 and the describe() root fast path reports the same facts as the
 assembled (legacy) path. Pure control-plane: no parquet data is
 written, so the fuzz covers hundreds of manifest states in seconds."""
@@ -28,9 +28,9 @@ _SCHEMA = {"type": "struct", "fields": []}
 
 
 def _mkcube(eng, cube):
+    # no sidecar: the first flip records the layout in the root
     path = eng._path(cube)
     os.makedirs(path, exist_ok=True)
-    eng._write_layout(path)
     return path
 
 
@@ -168,17 +168,15 @@ def test_stamps_round_trip_as_migration_blocks(eng):
     meta = eng._manifest(path)
     assert gone not in meta["migration"][0]["old_dirs"]
     # explicit None clears every stamp; the root keeps the live count
-    # and the sidecar carries none
+    # and its layout carries none
     raw = eng._manifest_raw(path)
     eng._manifest_flip(path, raw, 5, dirs4,
                        stats=_stats_for(dirs4, rng), schema=_SCHEMA,
                        migration=None)
     meta = eng._manifest(path)
     assert meta.get("migration") is None
-    lay = json.loads(eng.fs.read_text(
-        os.path.join(path, "_layout.json")))
     root = json.loads(eng._manifest_raw(path))
-    assert root["oid_buckets"] == 64 and "oid_buckets" not in lay
+    assert root["oid_buckets"] == 64 and "oid_buckets" not in root["layout"]
 
 
 def test_describe_fast_path_matches_assembled_path(spark, tmp_path):

@@ -38,8 +38,8 @@ def _root(eng, cube):
 
 
 def _lay(eng, cube):
-    return json.loads(eng.fs.read_text(
-        eng.fs.join(eng._path(cube), "_layout.json")))
+    """The layout the manifest root records."""
+    return _root(eng, cube)["layout"]
 
 
 @pytest.fixture()
@@ -69,12 +69,12 @@ def test_start_is_metadata_only_and_validated(spark, eng):
     eng.rebucket("m", 8, incremental=True)
     with pytest.raises(ValueError, match="DOUBLING"):
         eng.rebucket("m", 32, incremental=True)
-    # sidecar: fence stamped from first write, no count; the root
-    # carries the live count, the retained generations their own
+    # the root carries the format fence from the first write and the
+    # live count (its layout none), the retained generations their own
     lay = _lay(eng, "m")
-    assert lay["min_format"] == 5 and "oid_buckets" not in lay
+    assert lay["keep_generations"] == 2 and "oid_buckets" not in lay
     root = _root(eng, "m")
-    assert root["format"] == 5 and root["oid_buckets"] == 8
+    assert root["format"] == 6 and root["oid_buckets"] == 8
     assert [h["oid_buckets"] for h in root["history"]] == [4]
 
 
@@ -163,7 +163,8 @@ def test_step_drains_and_completion_records_root_count(spark, eng):
     m = _man(eng, "m")
     assert m.get("migration") is None and m["oid_buckets"] == 8
     lay = _lay(eng, "m")
-    assert _root(eng, "m")["oid_buckets"] == 8 and lay["min_format"] == 5
+    assert _root(eng, "m")["oid_buckets"] == 8
+    assert _root(eng, "m")["format"] == 6
     assert "oid_buckets" not in lay
     assert _rows(eng, "m") == before  # physical-only, content invariant
     assert "migration" not in eng.describe("m")
@@ -215,15 +216,19 @@ def test_full_rebucket_escapes_migration(spark, eng):
 
 
 def test_layout_format_fence_refuses_future_semantics(spark, eng):
+    """A root written by a newer engine (format above 6) raises the
+    upgrade error on reads and writes, and the writer leaves it as it
+    is."""
     _snap(spark, eng, "m", [(1, 1)], "2014-01-01")
-    p = eng.fs.join(eng._path("m"), "_layout.json")
-    lay = json.loads(eng.fs.read_text(p))
-    lay["min_format"] = 99
-    eng.fs.write_text(p, json.dumps(lay))
-    with pytest.raises(RuntimeError, match="layout format 99"):
+    p = eng.fs.join(eng._path("m"), "_manifest.json")
+    root = json.loads(eng.fs.read_text(p))
+    root["format"] = 99
+    eng.fs.write_text(p, json.dumps(root))
+    with pytest.raises(RuntimeError, match="format 99.*upgrade the engine"):
         eng.find("m", oids=[1]).collect()
-    with pytest.raises(RuntimeError, match="layout format 99"):
+    with pytest.raises(RuntimeError, match="format 99.*upgrade the engine"):
         _snap(spark, eng, "m", [(2, 2)], "2014-02-01")
+    assert json.loads(eng.fs.read_text(p)) == root
 
 
 def test_migration_on_timepartitioned_cube_and_objectstore(spark,

@@ -4,8 +4,11 @@ Every read and commit takes its generation, directories, bucket moduli,
 schema and layout from ONE read of the manifest root (``_resolve``), so a
 point lookup can no longer mix two generations: a lookup racing a full
 rebucket either reads the old generation whole or re-resolves and reads
-the new one whole. Control-plane reads are pinned through a counting
-``FileSystem``: one GET per sidecar, no existence probe before it.
+the new one whole. Control-plane calls are pinned through a counting
+``FileSystem``: one GET of the root and no existence probe before it;
+no GET of ``_layout.json`` (the root records the layout) or of a
+dropped-columns sidecar, and a commit retires superseded segment files
+by name, without probing or listing the segment directory.
 """
 
 import os
@@ -19,6 +22,7 @@ from metrique_spark.objects import stamp
 from metrique_spark.xxh64 import obucket_of
 
 ROOT, LAYOUT = "_manifest.json", "_layout.json"
+SEGDIR = "_manifest_seg"
 
 
 def _objs(spark, rows, start):
@@ -116,7 +120,7 @@ def test_control_call_ceilings(spark, tmp_path):
         assert _calls(fs, fn) == warm, name  # repeats exactly
         for calls in (cold, warm):
             assert calls.get(("read_text", ROOT)) == 1, (name, calls)
-            assert calls.get(("read_text", LAYOUT), 0) <= 1, (name, calls)
+            assert ("read_text", LAYOUT) not in calls, (name, calls)
             assert not _probes(calls), (name, calls)
     assert [r["col_1"] for r in lookups["oids"]()] == [13]
     assert [r["col_1"] for r in lookups["mql_asof"]()] == [3]
@@ -140,5 +144,15 @@ def test_control_call_ceilings(spark, tmp_path):
         assert eng.generations("c")[0] == gen + 1, name  # committed
         assert calls.get(("read_text", ROOT), 0) <= 2, (name, calls)
         assert not _probes(calls), (name, calls)
+        for call in (("read_text", LAYOUT), ("read_text", "_dropped.json"),
+                     ("isdir", SEGDIR), ("listdir", SEGDIR)):
+            assert call not in calls, (name, call, calls)
+    # the commits retired superseded segment files by name: the segment
+    # directory holds exactly what the root and its retained entries name
+    path = eng._path("c")
+    root = eng._manifest_root(path)
+    assert len(root["history"]) == 2
+    assert set(os.listdir(os.path.join(path, SEGDIR))) == \
+        eng._seg_names(root)
     assert eng.count("c") == 17
     assert eng.count("c", date="~") == 26

@@ -445,10 +445,10 @@ def test_manifest_cas_detects_zombie_writer(spark, engine, monkeypatch):
 
 def test_crashed_first_write_still_retries_as_new(spark, engine,
                                                   monkeypatch):
-    """The format-2 sidecar distinguishes a crashed first write (safe
-    to retry) from an older-format cube (refused): crash after the
-    layout write, before the manifest flip — the retry must take the
-    first-write path and succeed."""
+    """The ``_layout.json`` fence distinguishes a crashed first write
+    (safe to retry) from an older-format cube (refused): crash after
+    the fence and data writes, before the manifest flip — the retry
+    must take the first-write path and succeed."""
     from metrique_spark.engine import Engine
 
     orig = Engine._manifest_flip
