@@ -17,10 +17,11 @@ filter pushdown and column pruning reach the parquet scan).
 from __future__ import annotations
 
 import contextlib
-from functools import cached_property
+import operator
+from functools import cached_property, reduce
 from typing import Iterable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metrique_spark import temporal, upsert as _upsert
@@ -28,12 +29,11 @@ from metrique_spark.fs import (ConcurrentWriteError, FileSystem,
                                LeaseHeldError, LeaseLock, LocalFS, publish)
 from metrique_spark.fs import vacuum as _vacuum
 from metrique_spark.mql import (compile_mql, date_end_lower_bound,
-                                date_is_current_only,
-                                date_range_predicate,
+                                date_is_current_only, date_range_sql,
                                 date_start_upper_bound, oid_literal_set,
-                                parse_fields, to_timestamp_lit)
-from metrique_spark.objects import (raise_invalid, stamp, validate,
-                                   validity_checks)
+                                parse_fields, to_timestamp_sql)
+from metrique_spark.objects import (raise_invalid, sql_ident, sql_string,
+                                   stamp, validate, validity_checks)
 
 import logging
 
@@ -407,6 +407,12 @@ class Engine:
         # engine's) invalidates it on the next resolution; holders must
         # treat the returned dict as read-only.
         self._meta_cache: dict[str, tuple[str, dict]] = {}
+        # Columns of the SQL expressions the commit and lookup plans are
+        # built from (``_exprs``), keyed by their text — which spells
+        # out the schema and bucket moduli they depend on
+        self._expr_cache: dict[str, Column] = {}
+        # cube path -> (schema, DataFrameReader) of ``_read_dirs``
+        self._readers: dict[str, tuple] = {}
         # phase-attributed wall accumulator (scale-curve diagnostics):
         # _phase() sections add here when enabled; disabled (None) in
         # normal operation so the hot path pays one attribute check.
@@ -434,6 +440,19 @@ class Engine:
             if acc is not None:
                 acc[name] = round(
                     acc.get(name, 0.0) + _t.monotonic() - t0, 6)
+
+    def _exprs(self, *sql: str) -> list[Column]:
+        """The ``Column`` of each SQL expression text, built once per
+        Engine: every driver→JVM call a plan's construction makes is a
+        round trip, and a cached expression costs none."""
+        cache = self._expr_cache
+        out = []
+        for s in sql:
+            c = cache.get(s)
+            if c is None:
+                c = cache[s] = F.expr(s)
+            out.append(c)
+        return out
 
     # -- catalog ------------------------------------------------------------
 
@@ -502,7 +521,11 @@ class Engine:
         - a time-partitioned cube prunes ``__stime`` periods after the
           spec's strict ``_start < U`` bound (skipped when the session
           zone differs from the layout's recorded zone);
-        - the current-only spec reads ``_current=true`` alone."""
+        - the current-only spec reads ``_current=true`` alone.
+
+        The partition predicates above are ONE filter over the read,
+        built as SQL text: a lookup's plan costs a few driver→JVM calls,
+        not one per predicate."""
         if snap.root is None:
             raise ValueError(
                 f"cube at {snap.path!r} has no committed generation")
@@ -522,19 +545,18 @@ class Engine:
             dirs = self._prune_dirs_by_bucket(dirs, bvals)
             if not dirs:
                 return self._empty_schema_frame(snap.schema)
-        df = self._read_dirs(snap.path, snap.schema, dirs)
+        preds = []
         if bvals:
             # belt-and-braces value filter on the pruned read
-            df = df.where(F.col("__obucket").isin(bvals))
+            preds.append(f"__obucket IN ({', '.join(map(str, bvals))})")
         if snap.timepart and hi is not None:
-            bound = F.date_format(
-                to_timestamp_lit(hi),
-                "yyyy-MM" if snap.timepart == "month" else "yyyy")
-            df = df.where((F.col("__stime") <= bound)
-                          | F.col("__stime").isNull())
+            fmt = "yyyy-MM" if snap.timepart == "month" else "yyyy"
+            preds.append(f"(__stime <= date_format({to_timestamp_sql(hi)}, "
+                         f"'{fmt}') OR __stime IS NULL)")
         if date_is_current_only(date):
-            df = df.where(F.col("_current"))
-        return df
+            preds.append("_current")
+        df = self._read_dirs(snap.path, snap.schema, dirs)
+        return df.where(" AND ".join(preds)) if preds else df
 
     def _read_dirs(self, path: str, schema: dict,
                    rels: Sequence[str]) -> DataFrame:
@@ -548,17 +570,18 @@ class Engine:
         carrying the same bucket value, but the manifest relpaths
         identify each directory uniquely. The authoritative schema
         means no footer sampling at plan time, and files written before
-        a column evolved in read back as typed nulls."""
+        a column evolved in read back as typed nulls, and the
+        directory-encoded ``_current`` reads as the boolean it declares.
+        The reader (base path and schema set) is built once per cube and
+        schema."""
         from pyspark.sql.types import StructType
 
-        df = (self.spark.read.option("basePath", path)
-              .schema(StructType.fromJson(schema))
-              .parquet(*[self.fs.join(path, d) for d in rels]))
-        if "_current" in df.columns:
-            # partition-value inference yields string; restore boolean
-            df = df.withColumn("_current",
-                               F.col("_current").cast("boolean"))
-        return df
+        cached = self._readers.get(path)
+        if cached is None or cached[0] != schema:
+            cached = self._readers[path] = (
+                schema, self.spark.read.option("basePath", path)
+                .schema(StructType.fromJson(schema)))
+        return cached[1].parquet(*[self.fs.join(path, d) for d in rels])
 
     @staticmethod
     def _hit_dirs(hits: dict[int, set[int]], meta: dict, buckets: int,
@@ -595,16 +618,10 @@ class Engine:
 
     def _empty_schema_frame(self, schema: dict) -> DataFrame:
         """Zero-row frame carrying a generation's manifest schema —
-        what a fully-pruned read returns without listing anything, and
-        what the bucket-granular merge reads when no existing directory
-        can hold the incoming oids."""
+        what a fully-pruned read returns without listing anything."""
         from pyspark.sql.types import StructType
 
-        df = self.spark.createDataFrame([], StructType.fromJson(schema))
-        if "_current" in df.columns:
-            df = df.withColumn("_current",
-                               F.col("_current").cast("boolean"))
-        return df
+        return self.spark.createDataFrame([], StructType.fromJson(schema))
 
     def _prune_by_end_stats(self, meta: dict, dirs: list,
                             min_end: str | None,
@@ -2143,8 +2160,10 @@ class Engine:
         writer raced us; fail loud), then the ``dropped`` directories
         (what the prior generations retained and this one does not) and
         the segment files only the prior root named go by name, without
-        listing: at 100 TB the per-commit tree LIST would be the last
-        O(cube) metadata op in the commit path. Crash-stranded
+        listing the tree: at 100 TB the per-commit tree LIST would be
+        the last O(cube) metadata op in the commit path. A dropped
+        directory's parent is listed only when no directory this root
+        or a generation it retains names lies under it. Crash-stranded
         directories and segment files are left for ``vacuum``.
 
         The root is the only record of the cube-level facts —
@@ -2235,7 +2254,8 @@ class Engine:
         # "succeed" — the loser's sweep would delete the winner's
         # directories while the surviving manifest references them
         publish(self.fs, path, self._MANIFEST_SIDECAR, json.dumps(body),
-                old_raw, set(dropped) | segs)
+                old_raw, set(dropped) | segs,
+                kept=set(dirs).union(*(h["dirs"] for h in history or ())))
         for f in segs:
             self._seg_cache.pop(self.fs.join(path, f), None)
 
@@ -2416,24 +2436,28 @@ class Engine:
         directory would tear a concurrent reader — and dropped when the
         same token is live under ANOTHER modulus's directories (a
         byte-identical batch during a doubling migration: reads would
-        double-count a second copy)."""
+        double-count a second copy).
+
+        The partition keys come in ONE projection and the aggregate's
+        keys and measures are the Engine's cached expressions
+        (``_exprs``)."""
         path = snap.path
-        out = rows
-        if "_current" not in out.columns:
-            out = out.withColumn("_current", F.col("_end").isNull())
-        out = out.withColumn("__obucket", self._obucket(buckets))
-        if timepart:
-            out = out.withColumn("__stime", self._stime_col(timepart))
         keys = self._partition_keys(timepart)[:-1]  # no __batch
-        aggs = [F.date_format(F.max("_end"), _END_STAT_FMT).alias("__max_end"),
-                F.date_format(F.min("_start"), _END_STAT_FMT)
-                .alias("__min_start"),
-                F.count(F.lit(1)).alias("__rows")]
+        add = [f"{self._obucket_sql(buckets)} AS __obucket"]
+        if timepart:
+            add.append(f"{self._stime_sql(timepart)} AS __stime")
+        if "_current" not in rows.columns:
+            add.insert(0, "_end IS NULL AS _current")
+        out = rows.select(*self._exprs("*", *add))
+        aggs = [f"date_format(max(_end), '{_END_STAT_FMT}') AS __max_end",
+                f"date_format(min(_start), '{_END_STAT_FMT}') AS __min_start",
+                "count(1) AS __rows"]
         if closed_batch is None:
             # decimal(38,0) can't overflow under ANSI until ~1e19 rows
-            aggs.append(F.sum(F.xxhash64("_id", F.col("_end").cast("string"))
-                              .cast("decimal(38,0)")).alias("__hsum"))
-        groups = out.groupBy(*keys).agg(*aggs).collect()
+            aggs.append("sum(CAST(xxhash64(_id, CAST(_end AS STRING)) "
+                        "AS DECIMAL(38,0))) AS __hsum")
+        groups = (out.groupBy(*self._exprs(*keys))
+                  .agg(*self._exprs(*aggs)).collect())
         closed = [r for r in groups if not r["_current"]]
         if closed_batch is None and closed:
             # Python ints: Decimal arithmetic rounds at 28 digits
@@ -2465,11 +2489,14 @@ class Engine:
             skip = crels
             stats = {d: v for d, v in stats.items() if d not in crels}
         if skip:
-            out = out.where(F.col("_current"))
+            out = out.where("_current")
         if set(stats) - skip:
-            w = (out.withColumn(
-                "__batch", F.when(F.col("_current"), F.lit(open_batch))
-                .otherwise(F.lit(closed_batch))).write
+            def lit(b):
+                return "NULL" if b is None else sql_string(b)
+
+            w = (out.withColumn("__batch", F.expr(
+                f"CASE WHEN _current THEN {lit(open_batch)} "
+                f"ELSE {lit(closed_batch)} END")).write
                 .mode("overwrite").partitionBy(*keys, "__batch")
                 .option("partitionOverwriteMode", "dynamic"))
             ndv = self.bloom_oid_ndv
@@ -2501,15 +2528,16 @@ class Engine:
         return stats
 
     @staticmethod
-    def _check_oid_type(stored: DataFrame, incoming: DataFrame) -> None:
+    def _check_oid_type(stored, incoming) -> None:
         """Reject an incoming frame whose ``_oid`` type differs from the
         stored cube's. Parquet directories with mixed physical types for
         the same column read back wrong (Spark picks one file's footer
         schema unless mergeSchema), and type drift is how the bucket
         hash / anti-join hazards arise in the first place — fail loud at
-        the write boundary instead."""
-        s = stored.schema["_oid"].dataType
-        i = incoming.schema["_oid"].dataType
+        the write boundary instead. ``stored`` and ``incoming`` are
+        schemas (``StructType``)."""
+        s = stored["_oid"].dataType
+        i = incoming["_oid"].dataType
         if s != i:
             raise TypeError(
                 f"incoming _oid type {i.simpleString()} != stored cube's "
@@ -2525,18 +2553,23 @@ class Engine:
         would prune point lookups to the wrong directories whenever the
         lookup frame's inferred type differs from the stored type. The
         string cast makes every integral width hash identically."""
-        return F.pmod(F.xxhash64(F.col("_oid").cast("string")),
-                      F.lit(buckets)).cast("int")
+        return F.expr(Engine._obucket_sql(buckets))
 
     @staticmethod
-    def _stime_col(timepart: str):
+    def _obucket_sql(buckets: int) -> str:
+        """``_obucket`` as SQL text."""
+        return (f"CAST(pmod(xxhash64(CAST(_oid AS STRING)), {int(buckets)})"
+                " AS INT)")
+
+    @staticmethod
+    def _stime_sql(timepart: str) -> str:
         """Scan-stage period expression for the ``__stime`` partition
-        key — a wall-clock rendering of ``_start`` in the session
-        timezone (the root's layout pins the zone). Zero-padded
+        key, as SQL text — a wall-clock rendering of ``_start`` in the
+        session timezone (the root's layout pins the zone). Zero-padded
         ``yyyy-MM``/``yyyy`` strings compare lexicographically in date
         order, which is what the prune predicate relies on."""
-        return F.date_format(
-            F.col("_start"), "yyyy-MM" if timepart == "month" else "yyyy")
+        fmt = "yyyy-MM" if timepart == "month" else "yyyy"
+        return f"date_format(_start, '{fmt}')"
 
     @staticmethod
     def _partition_keys(timepart: str | None = None) -> list[str]:
@@ -2573,21 +2606,23 @@ class Engine:
         return StructType(fields).jsonValue()
 
     def _align_to_stored(self, snap: _Snapshot, incoming: DataFrame,
-                         evolve: bool) -> tuple[DataFrame, list[str]]:
+                         evolve: bool):
         """Check and align a commit batch against the stored cube
         (``_check_oid_type``, ``_check_redrop``, ``_align_incoming``).
-        Every check reads only the stored SCHEMA, so a zero-row frame of
-        the manifest schema stands in for the cube (internal partition
-        keys dropped exactly as ``_read`` drops them): no commit lists
-        the cube just to look at its column types."""
-        table = self._empty_schema_frame(snap.schema).drop(*_INTERNAL)
-        self._check_oid_type(table, incoming)
-        self._check_redrop(snap, incoming, set(table.columns))
-        return self._align_incoming(table, incoming, evolve)
+        Every check reads only the stored SCHEMA — the manifest's
+        ``StructType``, internal partition keys left out exactly as
+        ``_read`` drops them: no commit lists the cube, or builds a
+        frame, just to look at its column types."""
+        from pyspark.sql.types import StructType
+
+        stored = StructType([f for f in StructType.fromJson(snap.schema)
+                             if f.name not in _INTERNAL])
+        self._check_oid_type(stored, incoming.schema)
+        self._check_redrop(snap, incoming, set(stored.names))
+        return self._align_incoming(stored, incoming, evolve)
 
     @staticmethod
-    def _align_incoming(table: DataFrame, incoming: DataFrame,
-                        evolve: bool) -> tuple[DataFrame, list[str]]:
+    def _align_incoming(stored_schema, incoming: DataFrame, evolve: bool):
         """Schema-align a write batch against the stored cube: missing
         stored columns are null-filled into the batch (the reference's
         store is schemaless dicts — an object that stops carrying a
@@ -2597,10 +2632,14 @@ class Engine:
         read back as typed nulls), and a same-name type conflict always
         fails loud — parquet directories with mixed physical types for
         one column are unreadable roulette, and a silent cast hides
-        upstream drift. Returns ``(incoming', cols)``: the batch
-        selected to the union column order (stored order first, new
-        columns appended; ``_current`` excluded)."""
-        stored = {f.name: f.dataType for f in table.schema.fields
+        upstream drift. Returns ``(incoming', schema)``: the batch in
+        the union column order (stored order first, new columns
+        appended; ``_current`` excluded) — projected only when its
+        columns are not already exactly that — and its ``StructType``,
+        known without asking the JVM."""
+        from pyspark.sql.types import StructField, StructType
+
+        stored = {f.name: f.dataType for f in stored_schema.fields
                   if f.name != "_current"}
         inc = {f.name: f.dataType for f in incoming.schema.fields
                if f.name != "_current"}
@@ -2635,10 +2674,14 @@ class Engine:
                 "column(s) %s — drop_column() to undo an accidental "
                 "widening", sorted(new))
         missing = [n for n in stored if n not in inc]
+        have = incoming.columns + missing
         for n in missing:
             incoming = incoming.withColumn(n, F.lit(None).cast(stored[n]))
         cols = [n for n in stored] + new
-        return incoming.select(*cols), cols
+        if have != cols:
+            incoming = incoming.selectExpr(*map(sql_ident, cols))
+        types = {**stored, **inc}
+        return incoming, StructType([StructField(n, types[n]) for n in cols])
 
     def compact(self, cube: str, target_partitions: int | None = None,
                 sort_by: Sequence[str] | None = None,
@@ -2940,14 +2983,14 @@ class Engine:
             if snap.root is None:
                 self._first_write(snap, obj)
                 return
-            obj, _ = self._align_to_stored(snap, obj, evolve)
+            obj, sch = self._align_to_stored(snap, obj, evolve)
             gen = snap.gen + 1
             new_dirs = self._write_dirs(
                 obj, snap, snap.root["oid_buckets"], snap.timepart,
                 open_batch=f"ins-g{gen}", closed_batch=f"insh-g{gen}")
             self._auto_refresh_indexes(cube, self._commit(
                 snap, set(snap.dirs) | set(new_dirs), new_dirs,
-                schema=self._manifest_schema(obj.schema, snap.timepart)))
+                schema=self._manifest_schema(sch, snap.timepart)))
 
     def upsert(self, cube: str, df: DataFrame, autosnap: bool | None = None,
                stamped: bool = False, evolve: bool = True,
@@ -2991,11 +3034,10 @@ class Engine:
         into under each modulus in ``moduli`` — the live count and every
         in-flight doubling's from-count, so chained doublings cost the
         same single job. Each set is bounded by its bucket count."""
-        row = incoming.agg(
-            *validity_checks(),
-            F.count(F.col("_end")).alias("__closed"),
-            *[F.collect_set(self._obucket(m)).alias(f"__b{i}")
-              for i, m in enumerate(moduli)]).first()
+        row = incoming.select(*self._exprs(
+            *validity_checks(), "count(_end) AS __closed",
+            *[f"collect_set({self._obucket_sql(m)}) AS __b{i}"
+              for i, m in enumerate(moduli)])).first()
         raise_invalid(row)
         return row["__closed"], {m: set(row[f"__b{i}"])
                                  for i, m in enumerate(moduli)}
@@ -3021,8 +3063,8 @@ class Engine:
         if snap.root is None:
             return self._first_write(snap, incoming)
         meta = snap.manifest
-        incoming, cols = self._align_to_stored(snap, incoming, evolve)
-        msch = self._manifest_schema(incoming.schema, snap.timepart)
+        incoming, sch = self._align_to_stored(snap, incoming, evolve)
+        msch = self._manifest_schema(sch, snap.timepart)
         if autosnap:
             live = set(meta["dirs"])
             # BUCKET-GRANULAR merge: the open snapshot is oid-bucket
@@ -3057,32 +3099,30 @@ class Engine:
                 # the value filter is sound under every modulus: a
                 # dir's path value is in its own modulus's hit set
                 hit_vals = sorted(set().union(*hits.values()))
-                pruned = self._read_dirs(
+                open_rows = self._read_dirs(
                     path, meta["schema"], sorted(drop_open)).where(
-                    F.col("_current")
-                    & F.col("__obucket").isin(hit_vals))
+                    f"_current AND __obucket IN "
+                    f"({', '.join(map(str, hit_vals))})")
+                # the open rows were read under the PRE-commit schema;
+                # null-fill any columns this batch evolves in, like the
+                # history import does for its kept rows
+                old = {f["name"] for f in meta["schema"]["fields"]}
+                for f in sch.fields:
+                    if f.name not in old:
+                        open_rows = open_rows.withColumn(
+                            f.name, F.lit(None).cast(f.dataType))
             else:
                 # no existing open dir can hold these oids: merge
-                # against an empty open side (schema from the
-                # manifest — no O(cube) listing for a no-op read)
-                pruned = self._empty_schema_frame(meta["schema"])
-            pruned = pruned.drop("_current", *_INTERNAL)
-            # the pruned rows were read under the PRE-commit schema;
-            # null-fill any columns this batch evolves in, like the
-            # history import does for its kept rows
-            inc_types = {f.name: f.dataType
-                         for f in incoming.schema.fields}
-            for c in cols:
-                if c not in pruned.columns:
-                    pruned = pruned.withColumn(
-                        c, F.lit(None).cast(inc_types[c]))
-            open_rows = pruned.select(*cols)
+                # against an empty open side with the batch's columns
+                # (no listing, no frame built for a no-op read)
+                open_rows = incoming.where("false")
             # one join, one materialization (must happen before rewriting
             # the partition we read from; the stats aggregate and the
-            # write below must see the same rows)
+            # write below must see the same rows). The merge reads the
+            # batch's columns of the open side and ignores the rest
+            # (the read's partition keys).
             tagged = _upsert.snapshot_merge_tagged(
-                open_rows, incoming.select(*cols)
-            ).localCheckpoint(eager=True)
+                open_rows, incoming).localCheckpoint(eager=True)
             # snapshot-isolated commit: ONE write lands the closed rows
             # (content-token batch) and the open rows (gen-keyed batch)
             # in directories no live manifest references; the pointer
@@ -3093,9 +3133,7 @@ class Engine:
             # didn't advance). Retained history dirs count as live too:
             # overwriting one would corrupt a retained snapshot.
             rels = self._write_dirs(
-                tagged.withColumn("_current", ~F.col("__closed"))
-                .drop("__closed"),
-                snap, buckets, snap.timepart,
+                tagged, snap, buckets, snap.timepart,
                 open_batch=f"open-g{snap.gen + 1}",
                 live=self._retained_dirs(meta))
             # untouched open-bucket dirs stay referenced
@@ -3113,7 +3151,7 @@ class Engine:
                     self.compact(cube)
             return gen
         return self._history_replace_manifested(
-            snap, incoming.select(*cols), cols, hits, schema=msch)
+            snap, incoming, sch.names, hits, schema=msch)
 
     def _history_replace_manifested(
         self, snap: _Snapshot, incoming: DataFrame, cols: list[str],
@@ -3151,8 +3189,7 @@ class Engine:
         # read exactly the replaced set, by relpath
         pruned = (self._read_dirs(snap.path, meta["schema"],
                                   sorted(replaced_dirs))
-                  if replaced_dirs
-                  else self._empty_schema_frame(meta["schema"]))
+                  if replaced_dirs else incoming.where("false"))
         keys = incoming.select("_oid").distinct()
         kept = pruned.join(_upsert.maybe_broadcast_keys(keys), "_oid",
                            "left_anti")
@@ -3164,12 +3201,10 @@ class Engine:
         for c in cols:
             if c not in kept.columns:
                 kept = kept.withColumn(c, F.lit(None).cast(inc_types[c]))
-        inc = _upsert._regen_id(incoming)
-        inc_part = inc.withColumn("_current", F.col("_end").isNull())
-        kept_part = kept.withColumn(
-            "_current", F.col("_end").isNull())  # recompute, drop old dirs
-        union = kept_part.select(*cols, "_current").unionByName(
-            inc_part.select(*cols, "_current"))
+        # _current recomputed from _end (the old dirs are dropped)
+        sel = [*map(sql_ident, cols), "_end IS NULL AS _current"]
+        union = kept.selectExpr(*sel).unionByName(
+            _upsert._regen_id(incoming).selectExpr(*sel))
         new_rels = self._write_dirs(
             union.localCheckpoint(eager=True), snap, buckets,
             snap.timepart, open_batch=f"open-g{gen}",
@@ -3286,7 +3321,14 @@ class Engine:
     def _scoped(self, cube: str | DataFrame, query: str | None,
                 date: str | None, oids: Sequence | None = None,
                 generation: int | None = None) -> DataFrame:
+        """The rows of ``cube`` that ``oids``, ``date`` and the MQL
+        ``query`` select, without ``_current`` and the internal
+        partition keys: ONE filter and ONE projection over the read
+        (a warehouse cube's read prunes itself first, see ``_scan``)."""
+        from pyspark.sql.types import StructType
+
         oids = list(oids) if oids is not None else None
+        hidden = ("_current",)
         if isinstance(cube, DataFrame):
             if generation is not None:
                 raise ValueError(
@@ -3308,20 +3350,40 @@ class Engine:
                         and len({type(o) for o in qoids}) == 1):
                     lookup = sorted(qoids, key=repr)
             df = self._read_raw(self._path(cube), generation, date,
-                                lookup).drop(*_INTERNAL)
+                                lookup)
+            hidden += _INTERNAL
+        conds = []
         if oids is not None:
-            # empty list short-circuits: no rows match, and building the
-            # bucket-lookup frame from zero rows cannot infer a schema
-            df = df.where(F.col("_oid").isin(oids) if oids
-                          else F.lit(False))
-        if "_current" in df.columns:
-            df = df.drop("_current")
-        dpred = date_range_predicate(date) if ("_end" in df.columns) else None
-        if dpred is not None:
-            df = df.where(dpred)
+            conds.append(self._oid_in(oids))
+        # every committed cube has _end; a view may not
+        dsql = (date_range_sql(date)
+                if len(hidden) > 1 or "_end" in df.columns else None)
+        if dsql:
+            # the current-only predicate is a constant: built once
+            conds += (self._exprs(dsql) if date_is_current_only(date)
+                      else [F.expr(dsql)])
         if query:
-            df = df.where(compile_mql(query, df))
-        return df
+            conds.append(compile_mql(query, StructType(
+                [f for f in df.schema.fields if f.name not in hidden])))
+        if conds:
+            df = df.where(reduce(operator.and_, conds))
+        return df.drop(*hidden)
+
+    @staticmethod
+    def _oid_in(oids: list) -> Column:
+        """``_oid IN oids``. Plain ``int``/``str`` literals are written
+        into one SQL expression; any other literal goes through the
+        Column API's conversion (one driver→JVM call per value). An
+        empty list matches nothing: building the bucket-lookup frame
+        from zero rows cannot infer a schema."""
+        if not oids:
+            return F.expr("false")
+        if all(type(o) is int or (type(o) is str and "\\" not in o)
+               for o in oids):
+            vals = ", ".join(str(o) if type(o) is int else sql_string(o)
+                             for o in oids)
+            return F.expr(f"_oid IN ({vals})")
+        return F.col("_oid").isin(oids)
 
     def find(
         self,

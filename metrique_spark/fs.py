@@ -470,14 +470,15 @@ class LeaseLock:
 
 
 def publish(fs: FileSystem, path: str, name: str, text: str,
-            expected: str | None, dropped=()) -> None:
+            expected: str | None, dropped=(), kept=()) -> None:
     """THE commit point of every store rooted at ``path``: swap the
     root object ``name`` to ``text`` by compare-and-swap against the
     text the writer read (``expected``; put-if-absent when there was
     none), then delete the ``dropped`` entries — the directories and
     files the old root named and the new one does not, relative to
-    ``path`` — through ``drop``. Both sets are known, so nothing is
-    listed. A lost swap raises ``ConcurrentWriteError`` and
+    ``path`` — through ``drop``, which takes the ``kept`` entries the
+    new root names so it never lists a parent that still holds one. A
+    lost swap raises ``ConcurrentWriteError`` and
     deletes nothing. Directories a crashed writer stranded are
     ``vacuum``'s."""
     p = fs.join(path, name)
@@ -490,25 +491,33 @@ def publish(fs: FileSystem, path: str, name: str, text: str,
         raise ConcurrentWriteError(
             f"{p!r} changed under this writer — concurrent writer "
             "detected, commit aborted")
-    drop(fs, path, dropped)
+    drop(fs, path, dropped, kept)
 
 
-def drop(fs: FileSystem, path: str, dirs) -> None:
+def _above(names) -> set[str]:
+    """Every directory that lies above one of the relative ``names``."""
+    return {d.rsplit("/", i)[0] for d in names
+            for i in range(1, d.count("/") + 1)}
+
+
+def drop(fs: FileSystem, path: str, dirs, kept=()) -> None:
     """Delete the named entries under ``path`` (deepest first): each is
     a directory or a single file. A dropped partition directory (a
     ``key=value`` leaf) also takes the parent shells it empties — the
-    only LIST is one per parent checked; a file or any other directory
-    leaves its parent unlisted."""
+    only LIST is one per parent checked, and a parent above one of the
+    ``kept`` names cannot be empty, so it is not checked; a file or any
+    other directory leaves its parent unlisted."""
+    above = _above(kept)
     for d in sorted(dirs, reverse=True):
         fs.delete_dir(fs.join(path, d))
         parts = d.split("/")
         if "=" not in parts[-1]:
             continue
         for i in range(len(parts) - 1, 0, -1):
-            parent = fs.join(path, *parts[:i])
-            if fs.listdir(parent):
+            rel = "/".join(parts[:i])
+            if rel in above or fs.listdir(fs.join(path, rel)):
                 break
-            fs.delete_dir(parent)
+            fs.delete_dir(fs.join(path, rel))
 
 
 def vacuum(fs: FileSystem, path: str, keep) -> None:
@@ -517,8 +526,7 @@ def vacuum(fs: FileSystem, path: str, keep) -> None:
     the directories it names) nor lies above a named one. Dot-prefixed
     entries (CAS and lease sidecars) stay."""
     keep = set(keep)
-    above = {d.rsplit("/", i)[0] for d in keep
-             for i in range(1, d.count("/") + 1)}
+    above = _above(keep)
 
     def walk(rel: str) -> None:
         for d in fs.listdir(fs.join(path, rel) if rel else path):

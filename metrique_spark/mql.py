@@ -37,6 +37,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from metrique_spark.objects import sql_string
+
 
 class MQLError(ValueError):
     """Raised when an MQL expression cannot be compiled."""
@@ -64,8 +66,13 @@ def to_timestamp_lit(value) -> Column:
     raise MQLError(f"cannot interpret {value!r} as a date")
 
 
-def date_range_predicate(date: str | None) -> Column | None:
-    """Temporal-range predicate over ``_start``/``_end``.
+def to_timestamp_sql(value: str) -> str:
+    """``to_timestamp_lit`` of a string, as SQL text."""
+    return f"to_timestamp({sql_string(value.strip().replace('T', ' '))})"
+
+
+def date_range_sql(date: str | None) -> str | None:
+    """Temporal-range predicate over ``_start``/``_end``, as SQL text.
 
     Exact reference semantics (``parse.py:74-130``):
 
@@ -80,19 +87,19 @@ def date_range_predicate(date: str | None) -> Column | None:
     if isinstance(date, str):
         date = date.strip()
     if not date:
-        return F.col("_end").isNull()
+        return "_end IS NULL"
     if date == "~":
         return None
 
-    def before(d: str) -> Column:
-        return F.col("_start") < to_timestamp_lit(d)
+    def before(d: str) -> str:
+        return f"_start < {to_timestamp_sql(d)}"
 
-    def after(d: str) -> Column:
-        return (F.col("_end") >= to_timestamp_lit(d)) | F.col("_end").isNull()
+    def after(d: str) -> str:
+        return f"(_end >= {to_timestamp_sql(d)} OR _end IS NULL)"
 
     split = [s.strip() for s in date.split("~")]
     if len(split) == 1:
-        return before(split[0]) & after(split[0])
+        return f"{before(split[0])} AND {after(split[0])}"
     if len(split) != 2:
         raise MQLError(f"bad date range: {date!r}")
     lo, hi = split
@@ -100,7 +107,13 @@ def date_range_predicate(date: str | None) -> Column | None:
         return before(hi)
     if not hi:
         return after(lo)
-    return before(hi) & after(lo)
+    return f"{before(hi)} AND {after(lo)}"
+
+
+def date_range_predicate(date: str | None) -> Column | None:
+    """``date_range_sql`` as a ``Column`` (None for ``'~'``)."""
+    sql = date_range_sql(date)
+    return None if sql is None else F.expr(sql)
 
 
 def date_start_upper_bound(date: str | None) -> str | None:
@@ -170,8 +183,10 @@ _SCALAR_OPS = {
 
 def _array_field_names(df_or_fields) -> set[str]:
     if isinstance(df_or_fields, DataFrame):
+        df_or_fields = df_or_fields.schema
+    if isinstance(df_or_fields, T.StructType):
         return {
-            f.name for f in df_or_fields.schema.fields
+            f.name for f in df_or_fields.fields
             if isinstance(f.dataType, T.ArrayType)
         }
     return set(df_or_fields or ())
@@ -318,18 +333,19 @@ class _Compiler(ast.NodeVisitor):
 
 def compile_mql(
     query: str,
-    df: DataFrame | None = None,
+    df: DataFrame | T.StructType | None = None,
     arrays: Iterable[str] | None = None,
 ) -> Column:
     """Compile an MQL query string to a Spark ``Column`` predicate.
 
-    Pass ``df`` so array-typed fields get the reference's ANY/ALL semantics
-    and unknown field names fail fast; without it, all fields are treated as
-    scalars unless listed in ``arrays``.
+    Pass ``df`` (a DataFrame or its schema) so array-typed fields get the
+    reference's ANY/ALL semantics and unknown field names fail fast;
+    without it, all fields are treated as scalars unless listed in
+    ``arrays``.
     """
     if df is not None:
         arr = _array_field_names(df)
-        cols = set(df.columns)
+        cols = set((df.schema if isinstance(df, DataFrame) else df).names)
     else:
         arr = set(arrays or ())
         cols = None

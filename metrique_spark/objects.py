@@ -37,12 +37,44 @@ SYSTEM_FIELDS = ("_id", "_oid", "_hash", "_start", "_end", "_v", "__v__", "_e")
 HASH_EXCLUDE = ("_hash", "_id", "_start", "_end", "__v__", "id")
 
 
+def sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier: the column it names
+    is ``name`` whatever it contains (spaces, dots, backticks)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_string(s: str) -> str:
+    """``s`` as a SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def hash_sql(cols: dict[str, str],
+             exclude: tuple[str, ...] = HASH_EXCLUDE) -> str:
+    """``_hash`` as SQL text over ``cols`` (column name → the SQL
+    expression of its value): SHA1 over a canonical JSON of the sorted
+    non-excluded fields. The struct's field names and their sorted order
+    are what the digest covers — every stored object's hash depends on
+    them."""
+    names = sorted(c for c in cols if c not in exclude and c not in ("_v", "_e"))
+    if not names:
+        return "CAST(NULL AS STRING)"
+    fields = ", ".join(f"{cols[c]} AS {sql_ident(c)}" for c in names)
+    return f"sha1(to_json(struct({fields})))"
+
+
+def gen_id_sql(oid: str, start: str, end: str) -> str:
+    """``_id`` as SQL text over the SQL expressions of ``_oid``,
+    ``_start`` and ``_end`` (reference ``gen_id``,
+    ``core_api.py:73-82``): current → ``str(oid)``; closed →
+    ``'{oid}:{start}'``."""
+    o = f"CAST({oid} AS STRING)"
+    return (f"CASE WHEN ({end}) IS NULL THEN {o} ELSE concat_ws(':', {o}, "
+            f"CAST(CAST(CAST({start} AS TIMESTAMP) AS DOUBLE) AS STRING)) END")
+
+
 def content_hash(df: DataFrame, exclude: tuple[str, ...] = HASH_EXCLUDE) -> Column:
     """SHA1 over a canonical JSON of the sorted non-excluded fields."""
-    cols = sorted(c for c in df.columns if c not in exclude and c not in ("_v", "_e"))
-    if not cols:
-        return F.lit(None).cast("string")
-    return F.sha1(F.to_json(F.struct(*[F.col(c) for c in cols])))
+    return F.expr(hash_sql({c: sql_ident(c) for c in df.columns}, exclude))
 
 
 def normalize_key(name: str) -> str:
@@ -55,15 +87,15 @@ def normalize_key(name: str) -> str:
     return out
 
 
-def _epoch_or_ts(col: Column, dtype: T.DataType) -> Column:
+def _epoch_or_ts(sql: str, dtype: T.DataType | None) -> str:
     """Coerce epoch floats / strings / timestamps to TimestampType (the
     reference normalizes everything to UTC epoch float, utils.py:432-457;
-    we normalize to timestamp)."""
+    we normalize to timestamp) — SQL text over the value's SQL."""
     if isinstance(dtype, (T.DoubleType, T.FloatType, T.LongType, T.IntegerType)):
-        return F.timestamp_seconds(col)
+        return f"timestamp_seconds({sql})"
     if isinstance(dtype, T.StringType):
-        return F.to_timestamp(col)
-    return col.cast("timestamp")
+        return f"to_timestamp({sql})"
+    return f"CAST({sql} AS TIMESTAMP)"
 
 
 def stamp(
@@ -78,78 +110,71 @@ def stamp(
     """Turn an arbitrary source DataFrame into a versioned-object DataFrame.
 
     One declarative ``select`` replacing the reference's per-object
-    ``_prep_object`` loop (``core_api.py:424-464``):
+    ``_prep_object`` loop (``core_api.py:424-464``), built as SQL text so
+    the plan costs a handful of driver→JVM calls whatever the width:
 
-    - renames columns to normalized keys; drops reserved ``id``
-      (``core_api.py:97-102``)
+    - renames columns to normalized keys (one ``toDF`` first, only when
+      a name changes); drops reserved ``id`` (``core_api.py:97-102``)
     - sorts array-typed ("container") fields (``core_api.py:490-498``) so
       hashes are order-insensitive, matching the reference's sort-at-ingest
     - stamps ``_oid`` (from ``oid`` column/expr), ``_start`` (default now),
-      ``_end`` (default NULL), ``_hash``, ``_id``, ``_v``, ``__v__``
-    """
+      ``_end`` (default NULL), ``_e`` (NULL), ``_hash``, ``_id``, ``_v``,
+      ``__v__``; a system column the input already carries keeps its
+      position, the others append in that order
+
+    ``_hash`` covers the sorted non-excluded output columns under their
+    names (``hash_sql``), so the digest of an object does not depend on
+    how the frame was built. A ``Column`` passed as ``oid``, ``start`` or
+    ``end`` (or a name that is not a top-level column) is evaluated over
+    the renamed input, before arrays are sorted."""
     from metrique_spark import __version__
 
-    work = df
-    if normalize_keys:
-        renames = {c: normalize_key(c) for c in work.columns}
-        for old, new in renames.items():
-            if old != new:
-                work = work.withColumnRenamed(old, new)
-    if "id" in work.columns:  # reserved for backend autoincrement
-        work = work.drop("id")
+    fields = df.schema.fields
+    names = [normalize_key(f.name) if normalize_keys else f.name
+             for f in fields]
+    if names != [f.name for f in fields]:
+        df = df.toDF(*names)
+    types = {n: f.dataType for n, f in zip(names, fields)}
+    # output column -> SQL of its value, in output order
+    out = {n: (f"array_sort({sql_ident(n)})"
+               if sort_arrays and isinstance(types[n], T.ArrayType)
+               else sql_ident(n))
+           for n in names if n != "id"}  # id: backend autoincrement
 
-    if sort_arrays:
-        for f in work.schema.fields:
-            if isinstance(f.dataType, T.ArrayType):
-                work = work.withColumn(f.name, F.array_sort(F.col(f.name)))
+    def value(arg: str | Column, tmp: str) -> tuple[str, T.DataType | None]:
+        if isinstance(arg, str) and arg in out:
+            return out[arg], types.get(arg)
+        nonlocal df
+        df = df.withColumn(tmp, F.col(arg) if isinstance(arg, str) else arg)
+        return sql_ident(tmp), None
 
-    oid_col = F.col(oid) if isinstance(oid, str) else oid
-    work = work.withColumn("_oid", oid_col)
-
-    by_name = {f.name: f.dataType for f in work.schema.fields}
-    if start is not None:
-        c = F.col(start) if isinstance(start, str) else start
-        dt = by_name.get(start) if isinstance(start, str) else None
-        work = work.withColumn("_start", _epoch_or_ts(c, dt) if dt else c.cast("timestamp"))
-    elif "_start" not in work.columns:
-        work = work.withColumn("_start", F.current_timestamp())
-    if end is not None:
-        c = F.col(end) if isinstance(end, str) else end
-        dt = by_name.get(end) if isinstance(end, str) else None
-        work = work.withColumn("_end", _epoch_or_ts(c, dt) if dt else c.cast("timestamp"))
-    elif "_end" not in work.columns:
-        work = work.withColumn("_end", F.lit(None).cast("timestamp"))
-
-    if "_e" not in work.columns:
+    out["_oid"], types["_oid"] = value(oid, "__stamp_oid")
+    for name, arg in (("_start", start), ("_end", end)):
+        if arg is not None:
+            sql, dt = value(arg, f"__stamp{name}")
+            out[name] = (_epoch_or_ts(sql, dt) if isinstance(arg, str) and dt
+                         else f"CAST({sql} AS TIMESTAMP)")
+        elif name not in out:
+            out[name] = ("current_timestamp()" if name == "_start"
+                         else "CAST(NULL AS TIMESTAMP)")
+    if "_e" not in out:
         # errors map always present post-ingest (reference field list pin,
         # tests/test_cubes_builtin.py:42-44); NULL = no issues recorded
-        work = work.withColumn(
-            "_e", F.lit(None).cast("map<string,string>"))
-
-    work = work.withColumn("_hash", content_hash(work))
-    # gen_id (core_api.py:73-82): current → str(oid); closed → 'oid:start'
-    work = work.withColumn(
-        "_id",
-        F.when(F.col("_end").isNull(), F.col("_oid").cast("string")).otherwise(
-            F.concat_ws(":", F.col("_oid").cast("string"),
-                        F.col("_start").cast("timestamp").cast("double")
-                        .cast("string"))
-        ),
-    )
-    work = work.withColumn("_v", F.lit(schema_version)).withColumn(
-        "__v__", F.lit(__version__)
-    )
-    return work
+        out["_e"] = "CAST(NULL AS MAP<STRING, STRING>)"
+    out["_hash"] = hash_sql(out)
+    out["_id"] = gen_id_sql(out["_oid"], out["_start"], out["_end"])
+    out["_v"] = str(int(schema_version))
+    out["__v__"] = sql_string(__version__)
+    return df.selectExpr(*[f"{v} AS {sql_ident(n)}" for n, v in out.items()])
 
 
-def validity_checks() -> list[Column]:
-    """The aggregate columns ``validate`` checks — exposed so a caller
-    that already runs one aggregate over a batch (the engine's commit
-    probe) folds these checks into it instead of paying a second pass."""
-    return [
-        F.sum(F.col("_oid").isNull().cast("int")).alias("null_oid"),
-        F.sum((F.col("_end") < F.col("_start")).cast("int")).alias("bad_interval"),
-    ]
+def validity_checks() -> list[str]:
+    """The aggregates ``validate`` checks, as SQL text — exposed so a
+    caller that already runs one aggregate over a batch (the engine's
+    commit probe) folds these checks into it instead of paying a second
+    pass."""
+    return ["sum(CAST(_oid IS NULL AS INT)) AS null_oid",
+            "sum(CAST(_end < _start AS INT)) AS bad_interval"]
 
 
 def raise_invalid(row) -> None:
@@ -165,7 +190,7 @@ def validate(df: DataFrame) -> None:
     """Cheap invariant checks (reference asserts per object,
     ``core_api.py:76-77,114-115``): raises on null ``_oid`` or
     ``_end < _start``. One aggregate pass, no collect of data rows."""
-    raise_invalid(df.select(*validity_checks()).first())
+    raise_invalid(df.selectExpr(*validity_checks()).first())
 
 
 def assign_autoincrement(df: DataFrame, col: str = "id",

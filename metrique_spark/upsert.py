@@ -33,6 +33,12 @@ FRESH directories that a manifest pointer flip publishes atomically
 - the merge itself is one join on ``_oid``. The incoming batch is typically
   small relative to the table, so it is broadcast when under the threshold;
   otherwise AQE picks the strategy.
+- the merge plan is two Dataset operations: the full-outer join and ONE
+  ``inline`` projection (``merge_sql``) whose SQL text emits each output
+  row with its regenerated ``_id`` and its ``_current`` flag. Every
+  column is addressed by its quoted name and nothing is re-projected,
+  so building the plan costs a few driver→JVM round trips whatever the
+  width — at trickle sizes plan construction, not data, was the cost.
 - on a production cluster this maps 1:1 onto a Delta Lake ``MERGE INTO``
   (close-then-insert two-action merge); the parquet implementation keeps the
   same logical plan without requiring the Delta runtime in this container.
@@ -40,44 +46,71 @@ FRESH directories that a manifest pointer flip publishes atomically
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from metrique_spark.objects import gen_id_sql, sql_ident
+
+# last write wins within a batch: the latest _start per _oid ranks 1
+_LATEST = "row_number() OVER (PARTITION BY _oid ORDER BY _start DESC)"
 
 
 def _regen_id(df: DataFrame) -> DataFrame:
     """Recompute ``_id`` after interval changes (reference ``gen_id``,
     ``core_api.py:73-82``)."""
-    return df.withColumn(
-        "_id",
-        F.when(F.col("_end").isNull(), F.col("_oid").cast("string")).otherwise(
-            F.concat_ws(":", F.col("_oid").cast("string"),
-                        F.col("_start").cast("timestamp").cast("double")
-                        .cast("string"))
-        ),
-    )
+    return df.withColumn("_id", F.expr(gen_id_sql("_oid", "_start", "_end")))
 
 
 def latest_per_oid(incoming: DataFrame) -> DataFrame:
     """Last write wins within a batch: keep the latest ``_start`` per
     ``_oid`` (the reference's container buffer keyed by ``_id`` gives the
     same semantics, ``core_api.py:537-540``)."""
-    return (
-        incoming.withColumn(
-            "__rn",
-            F.row_number().over(
-                Window.partitionBy("_oid").orderBy(F.col("_start").desc())
-            ),
-        )
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return (incoming.withColumn("__rn", F.expr(_LATEST))
+            .where("__rn = 1").drop("__rn"))
+
+
+def merge_sql(cols: tuple[str, ...]) -> str:
+    """The snapshot merge's output rows as ONE SQL generator expression
+    over the full-outer join of open rows ``o`` and incoming rows ``n``
+    on ``_oid``: each joined row builds its output role(s) — kept /
+    inserted / (closed + replacement) — as structs of ``cols`` plus
+    ``_current``, with ``_id`` regenerated for each role's interval,
+    and ``inline`` turns the non-null ones into rows."""
+    # null-safe: a NULL _hash on either side must not void all three
+    # output branches (plain = would make every CASE condition NULL and
+    # the joined row would emit nothing — the object silently disappears)
+    old, new = "o._oid IS NOT NULL", "n._oid IS NOT NULL"
+    same = "o._hash <=> n._hash"
+
+    def side(p: str, closed: bool = False) -> str:
+        end = "n._start" if closed else f"{p}._end"
+        vals = {c: f"{p}.{sql_ident(c)}" for c in cols}
+        vals["_end"] = end
+        vals["_id"] = gen_id_sql(f"{p}._oid", f"{p}._start", end)
+        fields = [f"{v} AS {sql_ident(c)}" for c, v in vals.items()]
+        return (f"struct({', '.join(fields)}, "
+                f"{'false' if closed else 'true'} AS _current)")
+
+    roles = [
+        # open row survives unchanged: no incoming, or incoming is a dup
+        f"CASE WHEN {old} AND (NOT ({new}) OR {same}) THEN {side('o')} END",
+        # incoming lands: brand-new oid, or changed hash
+        f"CASE WHEN {new} AND (NOT ({old}) OR NOT ({same})) "
+        f"THEN {side('n')} END",
+        # changed: the old open row is closed at the incoming _start
+        f"CASE WHEN {old} AND {new} AND NOT ({same}) "
+        f"THEN {side('o', closed=True)} END",
+    ]
+    return f"inline(filter(array({', '.join(roles)}), r -> r IS NOT NULL))"
 
 
 def snapshot_merge_tagged(open_rows: DataFrame, incoming: DataFrame) -> DataFrame:
-    """Single-pass snapshot merge: ONE full-outer join on ``_oid``; each
-    joined row emits its output role(s) — kept / inserted / (closed +
-    replacement) — as structs that are exploded out, with a ``__closed``
-    flag distinguishing the newly-closed rows.
+    """Single-pass snapshot merge: ONE full-outer join on ``_oid`` and
+    ONE generator projection (``merge_sql``) emitting every output row
+    with the incoming columns in their order, the regenerated ``_id``
+    and a ``_current`` flag (false on the rows this batch closed).
+    ``open_rows`` must carry the incoming columns (extra columns, such
+    as a cube read's partition keys, are ignored).
 
     The one-pass shape is load-bearing at scale: filtering the join three
     times (kept/inserted/closed as separate branches) re-executes the join
@@ -87,39 +120,9 @@ def snapshot_merge_tagged(open_rows: DataFrame, incoming: DataFrame) -> DataFram
     applies ``latest_per_oid`` first); arriving hash-partitioned by
     ``_oid`` from that dedup window, it joins without another exchange.
     """
-    cols = open_rows.columns
-    o = open_rows.alias("o")
-    n = incoming.alias("n")
-    joined = o.join(n, on=F.col("o._oid") == F.col("n._oid"), how="full_outer")
-
-    has_old = F.col("o._oid").isNotNull()
-    has_new = F.col("n._oid").isNotNull()
-    # null-safe: a NULL _hash on either side must not void all three output
-    # branches (plain == would make every when() condition NULL and the
-    # joined row would emit nothing — the object silently disappears)
-    same_hash = F.col("o._hash").eqNullSafe(F.col("n._hash"))
-    changed = has_old & has_new & ~same_hash
-
-    def side(prefix: str, closed: bool = False):
-        fields = [
-            (F.col("n._start") if closed and c == "_end" else F.col(f"{prefix}.{c}"))
-            .alias(c)
-            for c in cols
-        ]
-        return F.struct(*fields, F.lit(closed).alias("__closed"))
-
-    outs = F.array(
-        # open row survives unchanged: no incoming, or incoming is a dup
-        F.when(has_old & (~has_new | same_hash), side("o")),
-        # incoming lands: brand-new oid, or changed hash
-        F.when(has_new & (~has_old | ~same_hash), side("n")),
-        # changed: the old open row is closed at the incoming _start
-        F.when(changed, side("o", closed=True)),
-    )
-    exploded = joined.select(
-        F.explode(F.filter(outs, lambda x: x.isNotNull())).alias("r")
-    ).select("r.*")
-    return _regen_id(exploded)
+    joined = open_rows.alias("o").join(
+        incoming.alias("n"), F.expr("o._oid = n._oid"), "full_outer")
+    return joined.selectExpr(merge_sql(tuple(incoming.columns)))
 
 
 BROADCAST_KEYS_CAP = 10_000_000
@@ -181,4 +184,5 @@ def history_replace(table: DataFrame, incoming: DataFrame) -> DataFrame:
     logic."""
     keys = incoming.select("_oid").distinct()
     kept = table.join(maybe_broadcast_keys(keys), "_oid", "left_anti")
-    return kept.unionByName(_regen_id(incoming).select(*table.columns))
+    return kept.unionByName(_regen_id(incoming).selectExpr(
+        *map(sql_ident, table.columns)))

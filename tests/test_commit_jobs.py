@@ -1,13 +1,18 @@
-"""Spark-job budget of a trickle commit and of compaction.
+"""Spark-job budget of a trickle commit and of compaction, and the
+driver→JVM round-trip budget of a commit, a stamp and a point lookup.
 
 A commit of a handful of objects is dominated by fixed per-job cost, not
 data volume, so the number of Spark jobs it runs is the figure to hold:
 one probe over the batch (checkpoint + aggregate), the merge
 checkpoint, one stats-and-token aggregate and one partitioned write.
-Also pins the token format of the content-keyed closed batch against
-a plain global aggregate."""
+Building those plans costs Py4J round trips — one per Dataset or Column
+call — so their count is held too. Also pins the token format of the
+content-keyed closed batch against a plain global aggregate."""
 
+import contextlib
+import gc
 import itertools
+import time
 
 from pyspark.sql import functions as F
 
@@ -27,6 +32,38 @@ def _jobs(spark, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@contextlib.contextmanager
+def _round_trips(spark):
+    """Count the Py4J commands sent while the block runs, one round trip
+    each: yields a list whose single item is the count. Deletes of JVM
+    objects Python freed are sent by py4j's finalizer thread, so its
+    queue is drained before the block (earlier garbage is not the
+    block's) and after it (the block's garbage is)."""
+    from py4j.clientserver import ClientServerConnection
+
+    client = spark.sparkContext._gateway._gateway_client
+
+    def drain():
+        gc.collect()
+        while client.finalizer_deque:
+            time.sleep(0.01)
+
+    real = ClientServerConnection.send_command
+    n = [0]
+
+    def counting(self, command):
+        n[0] += 1
+        return real(self, command)
+
+    drain()
+    ClientServerConnection.send_command = counting
+    try:
+        yield n
+        drain()
+    finally:
+        ClientServerConnection.send_command = real
 
 
 def _objs(spark, rows, start):
@@ -57,6 +94,44 @@ def test_trickle_upsert_and_compact_job_budget(spark, tmp_path):
     assert n <= 4, f"compact ran {n} Spark jobs"
     assert eng.count("c") == 65
     assert eng.count("c", "_end != None", date="~") == 3
+
+
+def test_trickle_commit_stamp_and_lookup_round_trips(spark, tmp_path):
+    """A warm trickle upsert, a stamp and a warm point lookup build their
+    plans from a few cached expressions: their Py4J round trips, py4j's
+    deletes of the JVM objects they free included, stay within a fixed
+    budget."""
+    eng = Engine(spark, warehouse=str(tmp_path / "wh"), oid_buckets=4)
+    eng.upsert("c", _objs(spark, [(i, i) for i in range(64)],
+                          "2024-01-01"), stamped=True)
+    eng.upsert("c", _objs(spark, [(1, 101)], "2024-01-02"), stamped=True)
+    eng.upsert("c", _objs(spark, [(5, 105)], "2024-01-03"), stamped=True)
+
+    batch = _objs(spark, [(2, 102), (3, 103), (100, 1)], "2024-01-04")
+    batch = batch.localCheckpoint(eager=True)
+    with _round_trips(spark) as n:
+        eng.upsert("c", batch, stamped=True)
+    assert n[0] <= 400, f"trickle upsert made {n[0]} round trips"
+
+    df = spark.createDataFrame([(1, 2), (2, 3), (3, 4)],
+                               "oid long, col_1 long")
+    start = F.to_timestamp(F.lit("2024-01-05"))
+    with _round_trips(spark) as n:
+        stamped = stamp(df, oid="oid", start=start)
+    assert n[0] <= 40, f"stamp made {n[0]} round trips"
+    assert [r["_id"] for r in stamped.orderBy("_oid").collect()] == \
+        ["1", "2", "3"]
+
+    lookups = {"oids": lambda: eng.find("c", oids=[3]).collect(),
+               "mql": lambda: eng.find("c", "_oid == 3").collect()}
+    for name, fn in lookups.items():
+        fn()  # warm: manifest and expression caches filled
+        with _round_trips(spark) as n:
+            rows = fn()
+        assert n[0] <= 60, f"{name} lookup made {n[0]} round trips"
+        assert [r["col_1"] for r in rows] == [103], name
+    assert eng.count("c") == 65
+    assert eng.count("c", date="~") == 69
 
 
 def test_closed_batch_token_matches_global_aggregate(spark, tmp_path):

@@ -54,6 +54,33 @@ def test_array_sorted_for_hash(spark):
     assert h1 == h2
 
 
+def test_stamp_golden_hashes(spark):
+    """The exact ``_hash``/``_id`` strings and column layout ``stamp``
+    produces. Every stored object's hash is a digest of the struct
+    ``stamp`` hashes (sorted field names and values): a ``stamp`` that
+    renamed, reordered or re-typed it would change every hash, and the
+    next upsert would close every open row. Covers a key that needs
+    normalizing, a reserved ``id``, an unsorted array, epoch
+    ``start``/``end`` and one closed row."""
+    df = spark.createDataFrame(
+        [(1, 7, "a", ["z", "b", "m"], 1388534400.5, None),
+         (2, 8, "b", ["y", "x"], 1388620800.0, 1391212800.25)],
+        "oid long, id long, `Key Name` string, tags array<string>, "
+        "s double, e double")
+    out = stamp(df, oid="oid", start="s", end="e")
+    assert out.columns == ["oid", "key_name", "tags", "s", "e", "_oid",
+                           "_start", "_end", "_e", "_hash", "_id", "_v",
+                           "__v__"]
+    rows = [(r["_oid"], r["tags"], r["_hash"], r["_id"])
+            for r in out.orderBy("_oid").collect()]
+    assert rows == [
+        (1, ["b", "m", "z"], "effa2afe09114a03f282cb8846f437ad656d9408",
+         "1"),
+        (2, ["x", "y"], "5b225f10986a69c6e45b5c4d7fd7189921b2092b",
+         "2:1.3886208E9"),
+    ]
+
+
 def test_reserved_id_dropped(spark):
     df = spark.createDataFrame([(1, 99)], "oid long, id long")
     out = stamp(df, oid="oid")

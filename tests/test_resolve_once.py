@@ -147,6 +147,11 @@ def test_control_call_ceilings(spark, tmp_path):
         for call in (("read_text", LAYOUT), ("read_text", "_dropped.json"),
                      ("isdir", SEGDIR), ("listdir", SEGDIR)):
             assert call not in calls, (name, call, calls)
+        if name != "compact":
+            # a dropped open directory's bucket parent still holds the
+            # directory that replaced it: it is never listed
+            assert not [k for k in calls if k[0] == "listdir"
+                        and k[1].startswith("__obucket=")], (name, calls)
     # the commits retired superseded segment files by name: the segment
     # directory holds exactly what the root and its retained entries name
     path = eng._path("c")

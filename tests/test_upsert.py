@@ -117,6 +117,53 @@ def test_null_hash_upsert_does_not_drop_objects(spark, engine):
     assert engine.find("nh").first()["col_1"] == 11
 
 
+def test_merge_quotes_column_names(spark, tmp_path):
+    """The merge, the alignment and the write address every column by
+    its quoted name: a cube whose columns hold a space, a dot and a
+    backtick upserts row for row like any other — a trickle of changed,
+    unchanged and new oids, a NULL ``_hash`` on both sides of an oid
+    (the null-safe ``<=>`` keeps the object and skips the duplicate),
+    then a schema-evolving batch."""
+    eng = Engine(spark, warehouse=str(tmp_path / "wh"), oid_buckets=4)
+    schema = "oid long, `a b` long, `x.y` string, `q``t` long"
+
+    def objs(rows, start, sch=schema, null_hash=None):
+        out = stamp(spark.createDataFrame(rows, sch), oid="oid",
+                    start=F.to_timestamp(F.lit(start)),
+                    normalize_keys=False)
+        if null_hash is not None:
+            out = out.withColumn("_hash", F.when(
+                F.col("_oid") != null_hash, F.col("_hash")))
+        return out
+
+    def rows():
+        return sorted(
+            (r["_oid"], r["a b"], r["x.y"], r["q`t"], r["n e.w"],
+             r["_start"].strftime("%m-%d"),
+             r["_end"] and r["_end"].strftime("%m-%d"), r["_id"])
+            for r in eng.find("c", date="~").collect())
+
+    eng.upsert("c", objs([(i, i, str(i), -i) for i in range(4)],
+                         "2024-01-01", null_hash=3), stamped=True)
+    eng.upsert("c", objs([(1, 10, "1", -1), (2, 2, "2", -2),
+                          (3, 3, "3", -3), (100, 5, "z", 0)],
+                         "2024-02-01", null_hash=3), stamped=True)
+    eng.upsert("c", objs([(2, 20, "2", -2, 7), (4, 4, "4", -4, 8)],
+                         "2024-03-01", schema + ", `n e.w` long"),
+               stamped=True)
+    assert eng.columns("c")[:4] == ["oid", "a b", "x.y", "q`t"]
+    assert rows() == [
+        (0, 0, "0", 0, None, "01-01", None, "0"),
+        (1, 1, "1", -1, None, "01-01", "02-01", "1:1.7040672E9"),
+        (1, 10, "1", -1, None, "02-01", None, "1"),
+        (2, 2, "2", -2, None, "01-01", "03-01", "2:1.7040672E9"),
+        (2, 20, "2", -2, 7, "03-01", None, "2"),
+        (3, 3, "3", -3, None, "01-01", None, "3"),
+        (4, 4, "4", -4, 8, "03-01", None, "4"),
+        (100, 5, "z", 0, None, "02-01", None, "100"),
+    ]
+
+
 def test_crash_between_data_write_and_flip_recovers(spark, engine,
                                                     monkeypatch):
     """A crash mid-commit must leave readers on EXACTLY the previous
