@@ -3328,7 +3328,7 @@ class Engine:
         from pyspark.sql.types import StructType
 
         oids = list(oids) if oids is not None else None
-        hidden = ("_current",)
+        committed = False
         if isinstance(cube, DataFrame):
             if generation is not None:
                 raise ValueError(
@@ -3351,13 +3351,14 @@ class Engine:
                     lookup = sorted(qoids, key=repr)
             df = self._read_raw(self._path(cube), generation, date,
                                 lookup)
-            hidden += _INTERNAL
+            committed = True
+        hidden = ("_current", *(_INTERNAL if committed else ()))
         conds = []
         if oids is not None:
             conds.append(self._oid_in(oids))
         # every committed cube has _end; a view may not
         dsql = (date_range_sql(date)
-                if len(hidden) > 1 or "_end" in df.columns else None)
+                if committed or "_end" in df.columns else None)
         if dsql:
             # the current-only predicate is a constant: built once
             conds += (self._exprs(dsql) if date_is_current_only(date)

@@ -48,14 +48,14 @@ def sql_string(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def hash_sql(cols: dict[str, str],
-             exclude: tuple[str, ...] = HASH_EXCLUDE) -> str:
+def hash_sql(cols: dict[str, str]) -> str:
     """``_hash`` as SQL text over ``cols`` (column name → the SQL
     expression of its value): SHA1 over a canonical JSON of the sorted
     non-excluded fields. The struct's field names and their sorted order
     are what the digest covers — every stored object's hash depends on
     them."""
-    names = sorted(c for c in cols if c not in exclude and c not in ("_v", "_e"))
+    names = sorted(c for c in cols
+                   if c not in HASH_EXCLUDE and c not in ("_v", "_e"))
     if not names:
         return "CAST(NULL AS STRING)"
     fields = ", ".join(f"{cols[c]} AS {sql_ident(c)}" for c in names)
@@ -70,11 +70,6 @@ def gen_id_sql(oid: str, start: str, end: str) -> str:
     o = f"CAST({oid} AS STRING)"
     return (f"CASE WHEN ({end}) IS NULL THEN {o} ELSE concat_ws(':', {o}, "
             f"CAST(CAST(CAST({start} AS TIMESTAMP) AS DOUBLE) AS STRING)) END")
-
-
-def content_hash(df: DataFrame, exclude: tuple[str, ...] = HASH_EXCLUDE) -> Column:
-    """SHA1 over a canonical JSON of the sorted non-excluded fields."""
-    return F.expr(hash_sql({c: sql_ident(c) for c in df.columns}, exclude))
 
 
 def normalize_key(name: str) -> str:

@@ -10,7 +10,7 @@ manifest generations × period partitioning × per-generation schemas)
 no single-feature test composes.
 
 Row content is modeled as a DICT, mirroring the engine's hash contract:
-``content_hash`` is sha1 over ``to_json(struct(...))`` and ``to_json``
+``objects.hash_sql`` is sha1 over ``to_json(struct(...))`` and ``to_json``
 OMITS null fields — so a post-evolution row with ``col_2 = NULL`` is
 hash-equal to a pre-evolution row with the same ``col_1`` (a same-state
 snapshot stays a no-op across the widening), while any non-null
