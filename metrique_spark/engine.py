@@ -33,7 +33,7 @@ from metrique_spark.mql import (compile_mql, date_end_lower_bound,
                                 date_start_upper_bound, oid_literal_set,
                                 parse_fields, to_timestamp_sql)
 from metrique_spark.objects import (raise_invalid, sql_ident, sql_string,
-                                   stamp, validate, validity_checks)
+                                   stamp, validity_checks)
 
 import logging
 
@@ -114,15 +114,30 @@ def _is_swept_read_error(exc: BaseException) -> bool:
             or "FileNotFound" in s)
 
 
+_BYTE_SHIFT = {"": 0, "b": 0, "k": 10, "kb": 10, "m": 20, "mb": 20,
+               "g": 30, "gb": 30, "t": 40, "tb": 40, "p": 50, "pb": 50}
+
+
+def _byte_size(text: str) -> int:
+    """A Spark byte-size setting (``67108864b``, ``64m``, ``1k``) in
+    bytes, with Spark's binary units; 0 when it does not parse."""
+    import re
+
+    m = re.fullmatch(r"(\d+)\s*([a-z]*)", text.strip().lower())
+    if m is None or m[2] not in _BYTE_SHIFT:
+        return 0
+    return int(m[1]) << _BYTE_SHIFT[m[2]]
+
+
 def _old_format_error(path: str, what: str) -> ValueError:
     """The one refusal for a cube in an older on-disk format. A
     ValueError, so callers that rebuild on ValueError treat the cube
     like any other unusable leftover."""
     return ValueError(
         f"cube at {path!r} is in an older on-disk format ({what}); this "
-        "engine reads only a segmented format-6 manifest root that "
-        "carries the schema, the oid-bucket count and the cube's layout "
-        "— rebuild the cube")
+        "engine reads only a segmented format-7 manifest root that "
+        "carries the schema, the oid-bucket count, the cube's layout "
+        "and its index registry — rebuild the cube")
 
 
 def _check_buckets(oid_buckets) -> None:
@@ -224,6 +239,21 @@ class _Snapshot:
         rows = (self.manifest.get("stats") or {}).get("rows") or {}
         live = [rows[d] for d in self.manifest["dirs"] if d in rows]
         return sum(live) // len(live) if live else None
+
+    @cached_property
+    def row_bytes(self) -> float | None:
+        """Average recorded bytes per row over the live directories —
+        what sizes a commit batch from its row count
+        (``Engine._one_partition``); None before the first commit or
+        when no live directory has recorded sizes."""
+        if self.root is None:
+            return None
+        st = self.manifest.get("stats") or {}
+        size, rows = st.get("bytes") or {}, st.get("rows") or {}
+        live = [d for d in self.manifest["dirs"] if d in size and rows.get(d)]
+        if not live:
+            return None
+        return sum(size[d] for d in live) / sum(rows[d] for d in live)
 
 
 class Engine:
@@ -515,9 +545,9 @@ class Engine:
           JOB. Sound only when the literals share the stored ``_oid``'s
           type family (``_prune_family_ok``); otherwise unpruned
           (skipped, not wrong). When the prune empties the list (the
-          literals hash only into buckets no write ever created), a
-          zero-row frame with the generation's schema returns without
-          listing anything;
+          literals hash only into buckets no write ever created), the
+          cached reader over no directory, filtered to ``false``,
+          returns the generation's schema without listing anything;
         - a time-partitioned cube prunes ``__stime`` periods after the
           spec's strict ``_start < U`` bound (skipped when the session
           zone differs from the layout's recorded zone);
@@ -544,7 +574,8 @@ class Engine:
                                             dtype=snap.oid_dtype)
             dirs = self._prune_dirs_by_bucket(dirs, bvals)
             if not dirs:
-                return self._empty_schema_frame(snap.schema)
+                return self._read_dirs(snap.path, snap.schema,
+                                       []).where("false")
         preds = []
         if bvals:
             # belt-and-braces value filter on the pruned read
@@ -615,13 +646,6 @@ class Engine:
         dir's path value was written under one of them."""
         vals = {f"__obucket={v}" for v in values}
         return [d for d in dirs if d.split("/")[1] in vals]
-
-    def _empty_schema_frame(self, schema: dict) -> DataFrame:
-        """Zero-row frame carrying a generation's manifest schema —
-        what a fully-pruned read returns without listing anything."""
-        from pyspark.sql.types import StructType
-
-        return self.spark.createDataFrame([], StructType.fromJson(schema))
 
     def _prune_by_end_stats(self, meta: dict, dirs: list,
                             min_end: str | None,
@@ -777,7 +801,7 @@ class Engine:
             # (a later refresh reads a column that no longer exists and
             # dies with an AnalysisException deep in the plan) — refuse
             # with the dependency named instead
-            for iname, im in self._vector_indexes(path, snap.gen).items():
+            for iname, im in self._vector_indexes(snap, snap.gen).items():
                 if col in (im.get("vec_col"), im.get("id_col")):
                     raise ValueError(
                         f"cannot drop {col!r}: committed vector index "
@@ -797,7 +821,7 @@ class Engine:
             # column can't be an index column — guarded above), the
             # diff is empty, and this only bumps the roots' generation
             # so searches keep working
-            self._auto_refresh_indexes(cube, gen)
+            self._auto_refresh_indexes(cube, snap, gen)
 
     def drop(self, cube: str) -> None:
         """Drop a cube (reference ``sqlalchemy.py:723-747``)."""
@@ -862,7 +886,7 @@ class Engine:
             for cube in list(out):
                 root = self._resolve(self._path(cube)).root or {}
                 for e in root.get("indexes", []):
-                    if e not in out[cube]:
+                    if "vector" not in e and e not in out[cube]:
                         out[cube].append(e)
         return out
 
@@ -881,9 +905,12 @@ class Engine:
     _ANN_KINDS = ("ivf", "pq", "ivfpq", "sq8")
 
     def _ann_path(self, cube: str, name: str) -> str:
+        return self._ann_path_of(self._path(cube), name)
+
+    def _ann_path_of(self, path: str, name: str) -> str:
         # underscore prefix: invisible to Spark's parquet discovery, so
         # the index lives inside the cube directory without polluting it
-        return self.fs.join(self._path(cube), f"_ann_{name}")
+        return self.fs.join(path, f"_ann_{name}")
 
     def build_vector_index(self, cube: str, name: str, vec_col: str,
                            kind: str = "ivf", id_col: str = "_oid",
@@ -969,6 +996,13 @@ class Engine:
                 # later refresh (auto included) applies it without the
                 # caller re-passing the knob
                 root["drift_tol"] = float(drift_tol)
+            # named in the cube root's registry first: a crash between
+            # the two leaves a named index with no committed root,
+            # which every listing skips
+            entry = {"name": name, "vector": True}
+            have = snap.root.get("indexes", [])
+            if entry not in have:
+                self._republish(snap, indexes=[*have, entry])
             _sim._publish(self.fs, apath, old, root)
 
     def vector_index_list(self, cube: str,
@@ -979,22 +1013,23 @@ class Engine:
         each index's append-batch count (``batches``), the quantity
         ``compact_vector_index`` bounds. An older-form index is not
         listed: only a rebuild makes it usable again."""
-        path = self._path(cube)
-        return self._vector_indexes(path, self._resolve(path).gen, counts)
+        snap = self._resolve(self._path(cube))
+        return self._vector_indexes(snap, snap.gen, counts)
 
-    def _vector_indexes(self, path: str, live: int | None,
+    def _vector_indexes(self, snap: _Snapshot, live: int | None,
                         counts: bool = False) -> dict[str, dict]:
-        """``vector_index_list`` against a generation the caller already
+        """``vector_index_list`` of the ANN indexes ``snap``'s root
+        registry names, against a generation the caller already
         resolved (``live``) — commits pass the generation they just
         published, so their index epilogue reads no manifest, and a
-        cube without indexes pays one listing and no index GET."""
+        cube without indexes pays no control call at all."""
         from metrique_spark.functions import similarity as _sim
 
         out: dict[str, dict] = {}
-        for d in self.fs.listdir(path):
-            if not d.startswith("_ann_"):
+        for e in (snap.root or {}).get("indexes", []):
+            if "vector" not in e:
                 continue
-            apath = self.fs.join(path, d)
+            apath = self._ann_path_of(snap.path, e["name"])
             try:
                 got = _sim._load_root(self.fs, apath)
             except ValueError:
@@ -1007,7 +1042,7 @@ class Engine:
             m["stale"] = m.get("gen") != live
             if counts:
                 m["batches"] = _sim._batch_count(root)
-            out[d[len("_ann_"):]] = m
+            out[e["name"]] = m
         return out
 
     def vector_search(self, cube: str, name: str, queries: DataFrame,
@@ -1211,6 +1246,12 @@ class Engine:
         dropped from the cube."""
         apath = self._ann_path(cube, name)
         with self._write_lock(cube):
+            snap = self._resolve(self._path(cube))
+            have = (snap.root or {}).get("indexes", [])
+            entry = {"name": name, "vector": True}
+            if entry in have:
+                self._republish(snap, indexes=[e for e in have
+                                               if e != entry])
             if not self.fs.isdir(apath):
                 return False
             self.fs.delete(self.fs.join(apath, "_ann.json"))
@@ -1305,19 +1346,21 @@ class Engine:
                          ttl=self.lock_ttl)
 
     # The on-disk format this engine reads and writes: the manifest
-    # root's ``format``. 6 makes the root the ONLY record of every fact
+    # root's ``format``. 6 made the root the ONLY record of every fact
     # a cube keeps — segment refs, the oid-bucket count on the root and
     # every retained entry (5), plus the layout, the dropped-column
-    # registry and the advisory index registry. A lower root is refused
-    # as an older format, a higher one as a newer engine's.
-    _FORMAT = 6
+    # registry and the advisory index registry; 7 has the index
+    # registry name the cube's ANN indexes too, so no op lists the cube
+    # directory to find them. A lower root is refused as an older
+    # format, a higher one as a newer engine's.
+    _FORMAT = 7
     # The constant fence the first write puts beside the data before
-    # anything else: engines at format 5 or older read its
+    # anything else: engines at format 6 or older read its
     # ``min_format`` and refuse the cube, and this engine reads it only
     # when there is no root, where it marks a crashed first write
     # (retried as new) apart from older root-less data (refused, kept).
     _LAYOUT_SIDECAR = "_layout.json"
-    _FENCE = '{"format": 2, "min_format": 6}'
+    _FENCE = '{"format": 2, "min_format": 7}'
 
     def _session_tz(self) -> str:
         return self.spark.conf.get("spark.sql.session.timeZone")
@@ -1421,7 +1464,7 @@ class Engine:
         }
         if root is None:
             return out
-        indexes = self._vector_indexes(path, snap.gen)
+        indexes = self._vector_indexes(snap, snap.gen)
         rollup = root.get("rollup")
         if rollup is not None and "token_bytes" in rollup:
             # ROOT-ONLY fast path: every scalar below was
@@ -1621,7 +1664,7 @@ class Engine:
             new_rels = self._write_dirs(
                 rows, snap, oid_buckets, snap.timepart,
                 open_batch=f"open-g{gen}", closed_batch=f"rb-g{gen}")
-            self._auto_refresh_indexes(cube, self._commit(
+            self._auto_refresh_indexes(cube, snap, self._commit(
                 snap, set(new_rels), new_rels, oid_buckets=oid_buckets,
                 migration=None))
 
@@ -1735,7 +1778,7 @@ class Engine:
                 open_batch=f"open-g{gen}", closed_batch=f"mig-g{gen}")
             dirs = (live - set(chunk)) | set(new_rels)
             self._auto_refresh_indexes(
-                cube, self._commit(snap, dirs, new_rels))
+                cube, snap, self._commit(snap, dirs, new_rels))
             remaining = len({d for b in blocks
                              for d in b["old_dirs"]} & dirs)
             return {"migrated_dirs": len(chunk), "migrated_bytes": used,
@@ -1763,7 +1806,7 @@ class Engine:
     # next successful commit.
 
     _MANIFEST_SIDECAR = "_manifest.json"
-    # Segmented manifest (format 6, the only manifest form): the root
+    # Segmented manifest (format 7, the only manifest form): the root
     # sidecar stays the single CAS commit point but holds only the
     # generation, the oid-bucket count, the cube's layout and
     # registries, rolled-up stats, and REFERENCES
@@ -1804,7 +1847,7 @@ class Engine:
         layout from two different roots. The plan-time swept-generation
         retry calls this again for a whole new snapshot.
 
-        The engine reads exactly one on-disk format: a format-6
+        The engine reads exactly one on-disk format: a format-7
         manifest root (``_manifest_root``), whose ``format`` is the
         fence — an older root is refused with ``_old_format_error``, a
         newer one raises the upgrade error. No root means ``new``:
@@ -1889,7 +1932,7 @@ class Engine:
         """Parse (only) the manifest ROOT sidecar — O(segments), not
         O(dirs): enough for describe()/metadata-count rollups and the
         CAS protocol. ``_manifest`` assembles the full flat dict from
-        it. Only a format-6 root is read: segment refs and an
+        it. Only a format-7 root is read: segment refs and an
         ``oid_buckets`` count on the root and on every retained
         generation, plus a ``schema``. A lower format is an older
         cube — refused, its data kept; a higher one is a newer engine's
@@ -2168,12 +2211,13 @@ class Engine:
 
         The root is the only record of the cube-level facts —
         ``layout`` (period key and zone, retention), the ``dropped``
-        column registry and the advisory ``indexes`` list. Every flip
+        column registry and the ``indexes`` registry (advisory and ANN
+        indexes). Every flip
         carries them forward from the prior root (a first flip records
         this engine's layout); ``facts`` replaces some of them in the
         same CAS (``drop_column``'s registry entry).
 
-        Every cube commits the SEGMENTED layout (format 6): the
+        Every cube commits the SEGMENTED layout (format 7): the
         directory list and per-directory stats are re-grouped into
         per-bucket-range segment files, only segments whose content
         changed are serialized (to fresh gen-scoped filenames — a
@@ -2265,7 +2309,7 @@ class Engine:
                               stats: dict | None, schema: dict,
                               stamps: dict[str, int],
                               body: dict) -> None:
-        """Build the format-6 root ``body`` in place and write the
+        """Build the format-7 root ``body`` in place and write the
         changed segment files (BEFORE the CAS — stranded ones are
         invisible until a root references them and are swept by
         ``vacuum``)."""
@@ -2408,11 +2452,17 @@ class Engine:
         timepart: str | None, *, open_batch: str | None = None,
         closed_batch: str | None = None,
         live: set[str] | frozenset[str] = frozenset(),
+        one_partition: bool = False,
     ) -> dict[str, dict[str, str | int | None]]:
         """The one data write every commit kind makes: ONE stats-and-
         token aggregate, then ONE partitioned write of open and closed
-        rows together. Returns the stats of each manifest-relative
-        directory the commit references for these rows: ``rows``,
+        rows together. ``one_partition`` (the caller's
+        ``_one_partition`` verdict on its input) runs the aggregate over
+        one partition: no exchange, so one Spark job instead of AQE's
+        map-stage job plus the result job; the write keeps the rows'
+        own partitioning either way. Returns the stats of each
+        manifest-relative directory the commit references for these
+        rows: ``rows``,
         ``min_start``, ``max_end`` (None for open directories) and
         ``bytes``. The stats come from the DATA, not a listing; they
         land in the manifest and let as-of reads skip closed
@@ -2456,7 +2506,8 @@ class Engine:
             # decimal(38,0) can't overflow under ANSI until ~1e19 rows
             aggs.append("sum(CAST(xxhash64(_id, CAST(_end AS STRING)) "
                         "AS DECIMAL(38,0))) AS __hsum")
-        groups = (out.groupBy(*self._exprs(*keys))
+        groups = ((out.coalesce(1) if one_partition else out)
+                  .groupBy(*self._exprs(*keys))
                   .agg(*self._exprs(*aggs)).collect())
         closed = [r for r in groups if not r["_current"]]
         if closed_batch is None and closed:
@@ -2494,11 +2545,15 @@ class Engine:
             def lit(b):
                 return "NULL" if b is None else sql_string(b)
 
+            # _hash and _id are unique per row: parquet-mr would build
+            # a dictionary for each and fall back to PLAIN anyway
             w = (out.withColumn("__batch", F.expr(
                 f"CASE WHEN _current THEN {lit(open_batch)} "
                 f"ELSE {lit(closed_batch)} END")).write
                 .mode("overwrite").partitionBy(*keys, "__batch")
-                .option("partitionOverwriteMode", "dynamic"))
+                .option("partitionOverwriteMode", "dynamic")
+                .option("parquet.enable.dictionary#_hash", "false")
+                .option("parquet.enable.dictionary#_id", "false"))
             ndv = self.bloom_oid_ndv
             if ndv == "auto":
                 # derived from the row stats of the snapshot this
@@ -2907,6 +2962,8 @@ class Engine:
         rels: dict[str, dict] = {}
         merged_all: set[str] = set()
         for merge in groups:
+            read = [d for d in live if d.startswith("_current=false")
+                    and self._batch_dir_token(d) in merge]
             closed = (raw_df.where(~F.col("_current")
                                    & F.col("__batch").isin(sorted(merge)))
                       .drop("_current", *_INTERNAL))
@@ -2918,7 +2975,8 @@ class Engine:
             rels.update(self._write_dirs(
                 closed.localCheckpoint(eager=True), snap,
                 meta["oid_buckets"], snap.timepart,
-                live=self._retained_dirs(meta)))
+                live=self._retained_dirs(meta),
+                one_partition=self._one_partition(snap, read)))
             merged_all |= merge
         drop = {d for d in live
                 if d.startswith("_current=false")
@@ -2926,7 +2984,8 @@ class Engine:
         dirs = (live - drop) | set(rels)
         # content is identical post-compact: the auto-refresh diff
         # is empty and this only bumps auto indexes' root gens
-        self._auto_refresh_indexes(cube, self._commit(snap, dirs, rels))
+        self._auto_refresh_indexes(cube, snap,
+                                   self._commit(snap, dirs, rels))
         return len(drop - dirs)
 
     def _first_write(self, snap: _Snapshot, obj: DataFrame) -> int | None:
@@ -2936,10 +2995,11 @@ class Engine:
         the manifest PUT, which records this engine's layout, is the
         commit point — until it lands, readers see nothing and a
         retry rewrites the same gen-1 directories. ``obj`` must be
-        checkpointed by the caller: the stats aggregate and the data
-        write must see the SAME rows — stamp()'s default _start is
-        current_timestamp() (fixed per QUERY, different across the two
-        jobs), so an unpinned plan straddling a period boundary would
+        checkpointed by the caller (``_checkpoint``): the stats
+        aggregate and the data write must see the SAME rows —
+        stamp()'s default _start is current_timestamp() (fixed per
+        QUERY, different across the two jobs), so an unpinned plan
+        straddling a period boundary would
         record manifest dirs the data never landed in, and the sweep
         would then delete the real ones. Returns the generation it
         published (1), or None when nothing landed."""
@@ -2972,14 +3032,10 @@ class Engine:
         cube like ``upsert`` (see ``_align_incoming``): missing columns
         null-fill, new columns widen the cube schema when ``evolve``."""
         obj = df if stamped else stamp(df, **stamp_kw)
-        # checkpoint: validation, the stats aggregate and the data write
-        # must see the SAME rows (a nondeterministic source recomputed
-        # between them could write a directory the manifest misses)
-        obj = obj.localCheckpoint(eager=True)
-        validate(obj)
         path = self._path(cube)
         with self._write_lock(cube):
             snap = self._resolve(path, write=True)
+            obj, n_in, _, _ = self._checkpoint(obj, ())
             if snap.root is None:
                 self._first_write(snap, obj)
                 return
@@ -2987,8 +3043,9 @@ class Engine:
             gen = snap.gen + 1
             new_dirs = self._write_dirs(
                 obj, snap, snap.root["oid_buckets"], snap.timepart,
-                open_batch=f"ins-g{gen}", closed_batch=f"insh-g{gen}")
-            self._auto_refresh_indexes(cube, self._commit(
+                open_batch=f"ins-g{gen}", closed_batch=f"insh-g{gen}",
+                one_partition=self._one_partition(snap, rows=n_in))
+            self._auto_refresh_indexes(cube, snap, self._commit(
                 snap, set(snap.dirs) | set(new_dirs), new_dirs,
                 schema=self._manifest_schema(sch, snap.timepart)))
 
@@ -3005,66 +3062,99 @@ class Engine:
         pre-evolution files read back as typed nulls. ``evolve=False``
         fails loud on new columns instead."""
         incoming = df if stamped else stamp(df, **stamp_kw)
-        # checkpoint the raw batch ONCE: the probe, the merge and the
-        # write must all see the same rows — a nondeterministic source
-        # (sample/limit, stamp()'s current_timestamp() _start)
-        # recomputed between them could land rows in a bucket the merge
-        # never read, silently dropping that bucket's other open rows
-        incoming = incoming.localCheckpoint(eager=True)
         path = self._path(cube)
         with self._write_lock(cube):
-            self._auto_refresh_indexes(cube, self._upsert_locked(
-                cube, path, incoming, autosnap, evolve))
+            snap = self._resolve(path, write=True)
+            self._auto_refresh_indexes(cube, snap, self._upsert_locked(
+                cube, snap, incoming, autosnap, evolve))
 
-    def _auto_refresh_indexes(self, cube: str, gen: int | None) -> None:
+    def _auto_refresh_indexes(self, cube: str, snap: _Snapshot,
+                              gen: int | None) -> None:
         """Commit epilogue for indexes built with ``auto_refresh=True``:
         bring every such stale index to ``gen``, the generation this
-        commit just published (runs under the already-held writer lease
-        — the lock is reentrant). O(delta) per index; cubes without
-        auto indexes pay one sidecar listing and no manifest read."""
-        for name, m in self._vector_indexes(self._path(cube), gen).items():
+        commit just published on ``snap`` (runs under the already-held
+        writer lease — the lock is reentrant). O(delta) per index; the
+        indexes come from the root's registry, which a commit carries
+        forward, so cubes without indexes pay no control call."""
+        for name, m in self._vector_indexes(snap, gen).items():
             if m.get("auto") and m.get("stale"):
                 self.refresh_vector_index(cube, name)
 
-    def _probe(self, incoming: DataFrame,
-                moduli: Sequence[int]) -> tuple[int, dict[int, set[int]]]:
-        """ONE aggregate over a checkpointed commit batch: raises
-        ``validate``'s errors, and returns the batch's closed-row count
-        (autosnap detection) plus the oid-bucket values its oids hash
-        into under each modulus in ``moduli`` — the live count and every
-        in-flight doubling's from-count, so chained doublings cost the
-        same single job. Each set is bounded by its bucket count."""
-        row = incoming.select(*self._exprs(
-            *validity_checks(), "count(_end) AS __closed",
-            *[f"collect_set({self._obucket_sql(m)}) AS __b{i}"
-              for i, m in enumerate(moduli)])).first()
-        raise_invalid(row)
-        return row["__closed"], {m: set(row[f"__b{i}"])
-                                 for i, m in enumerate(moduli)}
+    def _checkpoint(self, batch: DataFrame, moduli: Sequence[int]
+                    ) -> tuple[DataFrame, int, int, dict[int, set[int]]]:
+        """Checkpoint a commit batch ONCE, with its probe folded in:
+        ``validate``'s checks, the row count, the closed-row count
+        (autosnap detection) and the oid-bucket values the oids hash
+        into under each modulus in ``moduli`` (the live count and every
+        in-flight doubling's from-count) are ``observe`` metrics of the
+        checkpoint's own job — the probe reads no row twice and runs no
+        job of its own. Raises ``validate``'s errors before anything is
+        written. Returns the checkpoint, its row count, its closed-row
+        count and the hit bucket values per modulus (each set bounded
+        by its bucket count).
 
-    def _upsert_locked(self, cube, path, incoming, autosnap, evolve=True):
-        """One commit of a checkpointed batch. A snapshot trickle runs
-        four Spark actions whatever its size: the probe (``_probe``),
-        the merge checkpoint, and ``_write_dirs``' stats-and-token
-        aggregate and single write; the manifest flip publishes it.
-        Returns the generation it published (None when nothing
-        landed)."""
-        snap = self._resolve(path, write=True)
-        n_closed, hits = self._probe(
+        The checkpoint pins the rows: the probe, the merge and the
+        write must all see the same ones — a nondeterministic source
+        (sample/limit, stamp()'s current_timestamp() _start) recomputed
+        between them could land rows in a bucket the merge never read,
+        silently dropping that bucket's other open rows. It runs even
+        when the batch already is a checkpoint: it is the probe."""
+        from pyspark.sql import Observation
+
+        obs = Observation()
+        cp = batch.observe(obs, *self._exprs(
+            *validity_checks(), "count(1) AS __rows",
+            "count(_end) AS __closed",
+            *[f"collect_set({self._obucket_sql(m)}) AS __b{i}"
+              for i, m in enumerate(moduli)])).localCheckpoint(eager=True)
+        row = obs.get
+        raise_invalid(row)
+        return cp, row["__rows"], row["__closed"], {
+            m: set(row[f"__b{i}"]) for i, m in enumerate(moduli)}
+
+    def _one_partition(self, snap: _Snapshot, dirs: Iterable[str] = (),
+                       rows: int = 0) -> bool:
+        """Whether a commit plan over ``snap`` runs in ONE partition:
+        True when its input — the recorded bytes of the directories
+        ``dirs`` it reads plus ``rows`` batch rows at the cube's
+        average recorded row size — fits
+        ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, the size
+        below which AQE coalesces a shuffle to one partition anyway.
+        Such a merge joins and such a stats aggregate groups with no
+        exchange, and the job AQE runs for each exchange's map stage
+        goes with it. An input of unknown size (a first write, a
+        directory with no recorded size) or a larger one keeps the
+        shuffled plan, so a bulk commit never merges on one task."""
+        if snap.root is None or rows >= 1 << 31:
+            return False
+        size = (snap.manifest.get("stats") or {}).get("bytes") or {}
+        dirs = list(dirs)
+        if any(d not in size for d in dirs) or (
+                rows and snap.row_bytes is None):
+            return False
+        total = sum(size[d] for d in dirs) + rows * (snap.row_bytes or 0)
+        return total <= _byte_size(self.spark.conf.get(
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+
+    def _upsert_locked(self, cube, snap, incoming, autosnap, evolve=True):
+        """One commit of a batch on ``snap``. A snapshot trickle runs
+        four Spark jobs whatever its size: the batch checkpoint that
+        carries the probe (``_checkpoint``), the merge checkpoint, and
+        ``_write_dirs``' stats-and-token aggregate and single write —
+        when ``_one_partition`` finds the merge's input small; a larger
+        merge adds the shuffle map stages of its join and aggregate.
+        The manifest flip publishes it. Returns the generation it
+        published (None when nothing landed)."""
+        incoming, n_in, n_closed, hits = self._checkpoint(
             incoming, [] if snap.root is None else snap.moduli)
         if autosnap is None:
             # True iff every incoming object is open (reference
             # sqlalchemy.py:910-915)
             autosnap = not n_closed
-        if autosnap:
-            # last write wins within a snapshot batch (the reference's
-            # container buffer is keyed by _id, core_api.py:537-540)
-            incoming = _upsert.latest_per_oid(incoming)
         if snap.root is None:
-            return self._first_write(snap, incoming)
+            return self._first_write(snap, _upsert.latest_per_oid(incoming)
+                                     if autosnap else incoming)
         meta = snap.manifest
-        incoming, sch = self._align_to_stored(snap, incoming, evolve)
-        msch = self._manifest_schema(sch, snap.timepart)
         if autosnap:
             live = set(meta["dirs"])
             # BUCKET-GRANULAR merge: the open snapshot is oid-bucket
@@ -3091,6 +3181,22 @@ class Engine:
             buckets = meta["oid_buckets"]
             drop_open = self._hit_dirs(hits, meta, buckets, live,
                                        current_only=True)
+            small = self._one_partition(snap, drop_open, n_in)
+            if small:
+                # one partition per side joins with no exchange. The
+                # batch passes through one row (a global collect_list,
+                # inlined back) so that the planner's estimate of its
+                # size is bounded: a checkpoint of a source of unknown
+                # size would otherwise block the unshuffled join
+                # (spark.sql.maxSinglePartitionBytes)
+                incoming = incoming.coalesce(1).select(
+                    *self._exprs("collect_list(struct(*)) AS __rows")
+                ).select(*self._exprs("inline(__rows)"))
+            # last write wins within a snapshot batch (the reference's
+            # container buffer is keyed by _id, core_api.py:537-540; the
+            # first write above applies the same rule)
+            incoming, sch = self._align_to_stored(
+                snap, _upsert.latest_per_oid(incoming), evolve)
             # read exactly the dirs being dropped, by RELPATH
             # (read-set == drop-set by construction) — a full-cube
             # _read_raw here would list O(cube) directories per
@@ -3100,9 +3206,11 @@ class Engine:
                 # dir's path value is in its own modulus's hit set
                 hit_vals = sorted(set().union(*hits.values()))
                 open_rows = self._read_dirs(
-                    path, meta["schema"], sorted(drop_open)).where(
+                    snap.path, meta["schema"], sorted(drop_open)).where(
                     f"_current AND __obucket IN "
                     f"({', '.join(map(str, hit_vals))})")
+                if small:
+                    open_rows = open_rows.coalesce(1)
                 # the open rows were read under the PRE-commit schema;
                 # null-fill any columns this batch evolves in, like the
                 # history import does for its kept rows
@@ -3135,10 +3243,11 @@ class Engine:
             rels = self._write_dirs(
                 tagged, snap, buckets, snap.timepart,
                 open_batch=f"open-g{snap.gen + 1}",
-                live=self._retained_dirs(meta))
+                live=self._retained_dirs(meta), one_partition=small)
             # untouched open-bucket dirs stay referenced
             gen = self._commit(snap, (live - drop_open) | set(rels), rels,
-                               schema=msch)
+                               schema=self._manifest_schema(
+                                   sch, snap.timepart))
             if self.auto_compact_batches:
                 # count only SMALL tokens (manifest-recorded sizes, no
                 # listing) of the generation just published: consolidated
@@ -3146,16 +3255,19 @@ class Engine:
                 # must not re-trigger an O(|history|) rewrite every commit
                 n = sum(s <= self.compact_small_bytes for s in
                         self._history_token_sizes(
-                            path, self._resolve(path).manifest).values())
+                            snap.path,
+                            self._resolve(snap.path).manifest).values())
                 if n > self.auto_compact_batches:
                     self.compact(cube)
             return gen
+        incoming, sch = self._align_to_stored(snap, incoming, evolve)
         return self._history_replace_manifested(
-            snap, incoming, sch.names, hits, schema=msch)
+            snap, incoming, sch.names, hits, n_in,
+            schema=self._manifest_schema(sch, snap.timepart))
 
     def _history_replace_manifested(
         self, snap: _Snapshot, incoming: DataFrame, cols: list[str],
-        hits: dict[int, set[int]], *, schema: dict,
+        hits: dict[int, set[int]], n_in: int, *, schema: dict,
     ) -> int:
         """Bounded, snapshot-isolated history import: rewrite ONLY the
         oid-bucket directories containing incoming oids (reference
@@ -3208,7 +3320,8 @@ class Engine:
         new_rels = self._write_dirs(
             union.localCheckpoint(eager=True), snap, buckets,
             snap.timepart, open_batch=f"open-g{gen}",
-            closed_batch=f"hr-g{gen}")
+            closed_batch=f"hr-g{gen}",
+            one_partition=self._one_partition(snap, replaced_dirs, n_in))
         return self._commit(snap, (live - replaced_dirs) | set(new_rels),
                             new_rels, schema=schema)
 

@@ -26,13 +26,17 @@ FRESH directories that a manifest pointer flip publishes atomically
   the generation's ``open-g{gen}`` — in ONE partitioned write. History,
   the ever-growing bulk at 100 TB, is never rewritten on the hot path;
   ``compact`` folds the small closed batches later.
-- a commit costs a fixed handful of Spark actions whatever the batch
-  size: one probe over the batch (validation, autosnap, hit buckets),
-  the merge materialization, one stats-and-token aggregate and the
-  write (``Engine._write_dirs``).
-- the merge itself is one join on ``_oid``. The incoming batch is typically
-  small relative to the table, so it is broadcast when under the threshold;
-  otherwise AQE picks the strategy.
+- a trickle commit runs four Spark jobs whatever the batch size: the
+  batch checkpoint, whose job also computes the probe (validation,
+  autosnap, hit buckets) as observed metrics, the merge
+  materialization, one stats-and-token aggregate and the write
+  (``Engine._write_dirs``).
+- the merge itself is one full-outer sort-merge join on ``_oid`` (a full
+  outer join never broadcasts). When its inputs are small — under the
+  size at which AQE would coalesce the shuffle to one partition anyway
+  (``Engine._one_partition``) — the engine hands both sides over in one
+  partition and the join runs with no exchange; otherwise both sides
+  are shuffled on ``_oid``.
 - the merge plan is two Dataset operations: the full-outer join and ONE
   ``inline`` projection (``merge_sql``) whose SQL text emits each output
   row with its regenerated ``_id`` and its ``_current`` flag. Every
@@ -119,6 +123,8 @@ def snapshot_merge_tagged(open_rows: DataFrame, incoming: DataFrame) -> DataFram
     ``incoming`` must hold at most one row per ``_oid`` (the engine
     applies ``latest_per_oid`` first); arriving hash-partitioned by
     ``_oid`` from that dedup window, it joins without another exchange.
+    When both sides come in one partition (a small commit, see
+    ``Engine._one_partition``), neither side is exchanged.
     """
     joined = open_rows.alias("o").join(
         incoming.alias("n"), F.expr("o._oid = n._oid"), "full_outer")

@@ -1,13 +1,19 @@
-"""Spark-job budget of a trickle commit and of compaction, and the
-driver→JVM round-trip budget of a commit, a stamp and a point lookup.
+"""Spark-job budget of a trickle commit, an insert and compaction, and
+the driver→JVM round-trip budget of a commit, a stamp and a point
+lookup.
 
 A commit of a handful of objects is dominated by fixed per-job cost, not
-data volume, so the number of Spark jobs it runs is the figure to hold:
-one probe over the batch (checkpoint + aggregate), the merge
-checkpoint, one stats-and-token aggregate and one partitioned write.
-Building those plans costs Py4J round trips — one per Dataset or Column
-call — so their count is held too. Also pins the token format of the
-content-keyed closed batch against a plain global aggregate."""
+data volume, so the number of Spark jobs it runs is the figure to hold.
+A warm trickle upsert runs four: the batch checkpoint, whose job also
+carries the probe (validation, autosnap, hit buckets) as observed
+metrics, the merge checkpoint, one stats-and-token aggregate and one
+partitioned write. Its inputs fit one partition, so neither the merge
+join nor the aggregate has a shuffle whose map stage AQE would run as a
+job of its own. An insert runs the checkpoint, the aggregate and the
+write; compaction the same three. Building those plans costs Py4J round
+trips — one per Dataset or Column call — so their count is held too.
+Also pins the token format of the content-keyed closed batch against a
+plain global aggregate."""
 
 import contextlib
 import gc
@@ -18,6 +24,7 @@ from pyspark.sql import functions as F
 
 from metrique_spark.engine import Engine
 from metrique_spark.objects import stamp
+from metrique_spark.xxh64 import obucket_of
 
 _groups = itertools.count()
 
@@ -81,7 +88,7 @@ def test_trickle_upsert_and_compact_job_budget(spark, tmp_path):
     batch = _objs(spark, [(2, 102), (3, 103), (100, 1)], "2024-01-03")
     batch = batch.localCheckpoint(eager=True)
     _, n = _jobs(spark, lambda: eng.upsert("c", batch, stamped=True))
-    assert n <= 9, f"trickle upsert ran {n} Spark jobs"
+    assert n <= 5, f"trickle upsert ran {n} Spark jobs"
 
     assert eng.count("c") == 65
     assert eng.count("c", date="~") == 68
@@ -91,9 +98,17 @@ def test_trickle_upsert_and_compact_job_budget(spark, tmp_path):
 
     removed, n = _jobs(spark, lambda: eng.compact("c"))
     assert removed >= 1
-    assert n <= 4, f"compact ran {n} Spark jobs"
+    assert n <= 3, f"compact ran {n} Spark jobs"
     assert eng.count("c") == 65
     assert eng.count("c", "_end != None", date="~") == 3
+
+    # warm insert: checkpoint (carrying validation), aggregate, write
+    eng.insert("c", _objs(spark, [(200, 1)], "2024-01-04"), stamped=True)
+    batch = _objs(spark, [(201, 1), (202, 2)], "2024-01-05")
+    batch = batch.localCheckpoint(eager=True)
+    _, n = _jobs(spark, lambda: eng.insert("c", batch, stamped=True))
+    assert n <= 3, f"insert ran {n} Spark jobs"
+    assert eng.count("c") == 68
 
 
 def test_trickle_commit_stamp_and_lookup_round_trips(spark, tmp_path):
@@ -130,8 +145,76 @@ def test_trickle_commit_stamp_and_lookup_round_trips(spark, tmp_path):
             rows = fn()
         assert n[0] <= 60, f"{name} lookup made {n[0]} round trips"
         assert [r["col_1"] for r in rows] == [103], name
+
+    # a lookup whose literal hashes only into a bucket no write created
+    # reads no directory and still carries the manifest schema
+    eng.upsert("one", _objs(spark, [(0, 1)], "2024-01-01"), stamped=True)
+    miss = next(o for o in range(1, 100)
+                if obucket_of(o, 4) != obucket_of(0, 4))
+    eng.find("one", oids=[miss]).collect()
+    with _round_trips(spark) as n:
+        frame = eng.find("one", oids=[miss])
+        rows = frame.collect()
+    assert n[0] <= 60, f"empty-bucket lookup made {n[0]} round trips"
+    assert rows == []
+    hit = eng.find("one", oids=[0])
+    assert hit.count() == 1 and frame.schema == hit.schema
+    schema = eng._manifest(eng._path("one"))["schema"]
+    assert set(frame.columns) < {f["name"] for f in schema["fields"]}
     assert eng.count("c") == 65
     assert eng.count("c", date="~") == 69
+
+
+def _history(eng):
+    return sorted((r["_oid"], str(r["_start"]), str(r["_end"]), r["_id"],
+                   r["_hash"], r["col_1"])
+                  for r in eng.find("c", date="~").collect())
+
+
+def _logical_stats(eng):
+    """Directory names (content tokens included) and the per-directory
+    row and time stats. Byte sizes are left out: they count files, and
+    the shuffled plan writes as many as AQE leaves partitions."""
+    meta = eng._manifest(eng._path("c"))
+    return meta["dirs"], {k: meta["stats"][k]
+                          for k in ("rows", "min_start", "max_end")}
+
+
+def test_large_commit_takes_shuffled_plan_with_same_result(spark, tmp_path):
+    """A commit whose input exceeds
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` keeps the
+    shuffled plan — a multi-bucket upsert and a compaction then run the
+    map-stage jobs the single-partition plan avoids — and lands the
+    same rows, ``_id``/``_hash``, closed-batch tokens and manifest
+    stats as under the default setting."""
+    def run(wh):
+        eng = Engine(spark, warehouse=str(wh), oid_buckets=4)
+        eng.upsert("c", _objs(spark, [(i, i) for i in range(64)],
+                              "2024-01-01"), stamped=True)
+        eng.upsert("c", _objs(spark, [(i, i + 1) for i in range(0, 64, 3)],
+                              "2024-01-02"), stamped=True)
+        batch = _objs(spark, [(i, i + 2) for i in range(0, 72, 2)],
+                      "2024-01-03").localCheckpoint(eager=True)
+        _, n_upsert = _jobs(spark, lambda: eng.upsert("c", batch,
+                                                      stamped=True))
+        _, n_compact = _jobs(spark, lambda: eng.compact("c"))
+        return eng, n_upsert, n_compact
+
+    small, n_upsert, n_compact = run(tmp_path / "small")
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    default = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        large, n_upsert_l, n_compact_l = run(tmp_path / "large")
+    finally:
+        spark.conf.set(key, default)
+    assert (n_upsert, n_compact) == (4, 3)
+    assert n_upsert_l > n_upsert and n_compact_l > n_compact
+    dirs, _ = _logical_stats(small)
+    assert len({d.split("/")[1] for d in dirs
+                if d.startswith("_current=false")}) == 4  # every bucket
+    assert _history(large) == _history(small)
+    assert _logical_stats(large) == _logical_stats(small)
 
 
 def test_closed_batch_token_matches_global_aggregate(spark, tmp_path):

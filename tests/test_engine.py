@@ -343,9 +343,9 @@ def test_first_write_crash_between_sidecar_and_data_converges(spark, tmp_path):
     # the retry re-stamps the sidecar with the constant fence, and the
     # bucket count and layout land in the manifest root
     assert json.load(open(os.path.join(wh, "c", "_layout.json"))) == \
-        {"format": 2, "min_format": 6}
+        {"format": 2, "min_format": 7}
     root = json.load(open(os.path.join(wh, "c", "_manifest.json")))
-    assert root["format"] == 6 and root["oid_buckets"] == 8
+    assert root["format"] == 7 and root["oid_buckets"] == 8
     assert root["layout"] == {}
     # and the cube keeps working through the normal merge path
     eng.upsert("c", stamped.withColumn("val", F.lit("b"))
@@ -791,7 +791,7 @@ def test_rebucket_migrates_count_and_stays_correct(spark, tmp_path):
     root = _json.loads(eng.fs.read_text(
         eng.fs.join(eng._path("c"), "_manifest.json")))
     assert root["oid_buckets"] == 16
-    assert root["format"] == 6 and "oid_buckets" not in root["layout"]
+    assert root["format"] == 7 and "oid_buckets" not in root["layout"]
     meta_h = eng._manifest(eng._path("c"))["history"]
     assert all(h["oid_buckets"] == 4 for h in meta_h)
     after = sorted((r["_oid"], r["x"], str(r["_start"]))

@@ -1,6 +1,7 @@
 """The engine reads exactly one on-disk cube format: a segmented
-(format-6) manifest root that carries a schema, the oid-bucket count and
-the cube's layout and registries, and every cube is oid-bucketed; the
+(format-7) manifest root that carries a schema, the oid-bucket count and
+the cube's layout and registries (the index registry naming its ANN
+indexes too), and every cube is oid-bucketed; the
 ``_layout.json`` fence is read only when there is no root. Every older
 state is refused with the one ValueError from ``_resolve``/
 ``_manifest_root`` — and refused WITHOUT touching the data: an older
@@ -90,9 +91,26 @@ def _format5_root(eng, path):
         json.dump({"format": 2, "min_format": 5}, fh)
 
 
+def _format6_root(eng, path):
+    # the root the previous engine wrote: its index registry named only
+    # advisory indexes (ANN indexes were found by listing the cube), and
+    # its fence named format 6
+    mp = os.path.join(path, "_manifest.json")
+    with open(mp) as fh:
+        root = json.load(fh)
+    root["format"] = 6
+    root["indexes"] = [e for e in root.get("indexes", [])
+                       if "vector" not in e]
+    with open(mp, "w") as fh:
+        json.dump(root, fh)
+    with open(os.path.join(path, "_layout.json"), "w") as fh:
+        json.dump({"format": 2, "min_format": 6}, fh)
+
+
 @pytest.mark.parametrize("make_old", [_no_layout, _formatless_layout,
                                       _schemaless_root, _monolithic_root,
-                                      _format4_root, _format5_root])
+                                      _format4_root, _format5_root,
+                                      _format6_root])
 def test_older_format_refused_and_never_wiped(spark, tmp_path, make_old):
     wh = str(tmp_path / "wh")
     first = Engine(spark, warehouse=wh)

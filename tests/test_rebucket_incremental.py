@@ -74,7 +74,7 @@ def test_start_is_metadata_only_and_validated(spark, eng):
     lay = _lay(eng, "m")
     assert lay["keep_generations"] == 2 and "oid_buckets" not in lay
     root = _root(eng, "m")
-    assert root["format"] == 6 and root["oid_buckets"] == 8
+    assert root["format"] == 7 and root["oid_buckets"] == 8
     assert [h["oid_buckets"] for h in root["history"]] == [4]
 
 
@@ -164,7 +164,7 @@ def test_step_drains_and_completion_records_root_count(spark, eng):
     assert m.get("migration") is None and m["oid_buckets"] == 8
     lay = _lay(eng, "m")
     assert _root(eng, "m")["oid_buckets"] == 8
-    assert _root(eng, "m")["format"] == 6
+    assert _root(eng, "m")["format"] == 7
     assert "oid_buckets" not in lay
     assert _rows(eng, "m") == before  # physical-only, content invariant
     assert "migration" not in eng.describe("m")

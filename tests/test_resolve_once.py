@@ -8,7 +8,8 @@ the new one whole. Control-plane calls are pinned through a counting
 ``FileSystem``: one GET of the root and no existence probe before it;
 no GET of ``_layout.json`` (the root records the layout) or of a
 dropped-columns sidecar, and a commit retires superseded segment files
-by name, without probing or listing the segment directory.
+by name and lists no directory at all (the root's registry names the
+cube's ANN indexes).
 """
 
 import os
@@ -147,11 +148,10 @@ def test_control_call_ceilings(spark, tmp_path):
         for call in (("read_text", LAYOUT), ("read_text", "_dropped.json"),
                      ("isdir", SEGDIR), ("listdir", SEGDIR)):
             assert call not in calls, (name, call, calls)
-        if name != "compact":
-            # a dropped open directory's bucket parent still holds the
-            # directory that replaced it: it is never listed
-            assert not [k for k in calls if k[0] == "listdir"
-                        and k[1].startswith("__obucket=")], (name, calls)
+        # the root's registry names the cube's ANN indexes, and a
+        # dropped directory's parent is never listed: a commit lists
+        # nothing
+        assert not [k for k in calls if k[0] == "listdir"], (name, calls)
     # the commits retired superseded segment files by name: the segment
     # directory holds exactly what the root and its retained entries name
     path = eng._path("c")
