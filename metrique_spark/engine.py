@@ -234,26 +234,23 @@ class _Snapshot:
         """Average rows per live directory — the ``bloom_oid_ndv="auto"``
         estimate for this op's writes (see ``_write_dirs``); None before
         the first commit."""
-        if self.root is None:
+        dirs = self.manifest["dirs"] if self.root is not None else ()
+        if not dirs:
             return None
-        rows = (self.manifest.get("stats") or {}).get("rows") or {}
-        live = [rows[d] for d in self.manifest["dirs"] if d in rows]
-        return sum(live) // len(live) if live else None
+        rows = self.manifest["stats"]["rows"]
+        return sum(rows[d] for d in dirs) // len(dirs)
 
     @cached_property
     def row_bytes(self) -> float | None:
         """Average recorded bytes per row over the live directories —
         what sizes a commit batch from its row count
-        (``Engine._one_partition``); None before the first commit or
-        when no live directory has recorded sizes."""
-        if self.root is None:
+        (``Engine._one_partition``); None before the first commit."""
+        dirs = self.manifest["dirs"] if self.root is not None else ()
+        if not dirs:
             return None
-        st = self.manifest.get("stats") or {}
-        size, rows = st.get("bytes") or {}, st.get("rows") or {}
-        live = [d for d in self.manifest["dirs"] if d in size and rows.get(d)]
-        if not live:
-            return None
-        return sum(size[d] for d in live) / sum(rows[d] for d in live)
+        st = self.manifest["stats"]
+        return (sum(st["bytes"][d] for d in dirs)
+                / sum(st["rows"][d] for d in dirs))
 
 
 class Engine:
@@ -416,14 +413,6 @@ class Engine:
         # cubes whose write lock THIS engine currently holds (reentrancy:
         # upsert's auto-compact runs inside the upsert's lock)
         self._held_locks: set[str] = set()
-        # per-directory byte sizes measured by the fs.du FALLBACK for
-        # dirs whose size _write_dirs could not measure at commit
-        # time (it swallows du errors). Token-keyed batch
-        # dirs are immutable once written, so caching is sound; the
-        # next manifest flip backfills these into the persisted stats
-        # (see _merged_stats) so the walk is paid once per dir EVER,
-        # not once per compaction trigger.
-        self._du_cache: dict[str, int] = {}
         # parsed manifest SEGMENT files, keyed by full
         # path. Sound to cache: a segment file is immutable once the
         # root referencing it commits (writers only ever create new
@@ -441,8 +430,10 @@ class Engine:
         # built from (``_exprs``), keyed by their text — which spells
         # out the schema and bucket moduli they depend on
         self._expr_cache: dict[str, Column] = {}
-        # cube path -> (schema, DataFrameReader) of ``_read_dirs``
+        # cube path -> (schema, DataFrameReader) of ``_read_dirs``, and
+        # (schema, frame of no rows) for its read of no directory
         self._readers: dict[str, tuple] = {}
+        self._empties: dict[str, tuple] = {}
         # phase-attributed wall accumulator (scale-curve diagnostics):
         # _phase() sections add here when enabled; disabled (None) in
         # normal operation so the hot path pays one attribute check.
@@ -546,8 +537,8 @@ class Engine:
           type family (``_prune_family_ok``); otherwise unpruned
           (skipped, not wrong). When the prune empties the list (the
           literals hash only into buckets no write ever created), the
-          cached reader over no directory, filtered to ``false``,
-          returns the generation's schema without listing anything;
+          read is ``_read_dirs``' frame of no rows under the
+          generation's schema, and nothing is listed;
         - a time-partitioned cube prunes ``__stime`` periods after the
           spec's strict ``_start < U`` bound (skipped when the session
           zone differs from the layout's recorded zone);
@@ -574,8 +565,7 @@ class Engine:
                                             dtype=snap.oid_dtype)
             dirs = self._prune_dirs_by_bucket(dirs, bvals)
             if not dirs:
-                return self._read_dirs(snap.path, snap.schema,
-                                       []).where("false")
+                return self._read_dirs(snap.path, snap.schema, [])
         preds = []
         if bvals:
             # belt-and-braces value filter on the pruned read
@@ -604,9 +594,20 @@ class Engine:
         a column evolved in read back as typed nulls, and the
         directory-encoded ``_current`` reads as the boolean it declares.
         The reader (base path and schema set) is built once per cube and
-        schema."""
+        schema. An empty ``rels`` gives a frame of no rows under the
+        schema, also built once: a parquet read of no path would log
+        Spark's "All paths were ignored" warning on every call."""
         from pyspark.sql.types import StructType
 
+        if not rels:
+            cached = self._empties.get(path)
+            if cached is None or cached[0] != schema:
+                # the false filter plans as an empty local relation:
+                # collecting it runs no job
+                cached = self._empties[path] = (
+                    schema, self.spark.createDataFrame(
+                        [], StructType.fromJson(schema)).where("false"))
+            return cached[1]
         cached = self._readers.get(path)
         if cached is None or cached[0] != schema:
             cached = self._readers[path] = (
@@ -1437,12 +1438,13 @@ class Engine:
         """Zero-scan storage-health report from manifest-root state
         alone — no data listing, no Spark job: the live generation, its
         oid-bucket count (from the manifest root) and the retained
-        generation numbers, open/closed directory counts, the
-        history batch TOKENS with their byte sizes (the tier structure
-        size-tiered compaction manages), whether a ``compact()`` would
-        merge anything right now (``compact_recommended`` — the trickle
-        or a promotion quorum qualifies under the engine's
-        ``compact_small_bytes``), whether the largest oid bucket has
+        generation numbers, open/closed directory counts, the live and
+        open row totals, the history batch TOKENS with their byte sizes
+        (the tier structure size-tiered compaction manages), whether a
+        ``compact()`` would merge anything right now
+        (``compact_recommended`` — the trickle or a promotion quorum
+        qualifies under the engine's ``compact_small_bytes``), whether
+        the largest oid bucket has
         outgrown its bucket count (``rebucket_recommended`` —
         runbook: ``rebucket()`` or the incremental doubling), the
         progress of an in-flight doubling migration (``migration``:
@@ -1452,8 +1454,7 @@ class Engine:
         manifest-read cost."""
         from metrique_spark.compaction import tier_groups
 
-        path = self._path(cube)
-        snap = self._resolve(path)
+        snap = self._resolve(self._path(cube))
         root = snap.root
         out: dict = {
             "cube": cube,
@@ -1464,105 +1465,40 @@ class Engine:
         }
         if root is None:
             return out
-        indexes = self._vector_indexes(snap, snap.gen)
-        rollup = root.get("rollup")
-        if rollup is not None and "token_bytes" in rollup:
-            # ROOT-ONLY fast path: every scalar below was
-            # rolled up at commit time, so describe costs one small
-            # JSON parse — O(segment refs), never O(dirs) — at any
-            # cube size; tier recommendation is evaluated against the
-            # READER's threshold from the per-token byte rollup.
-            tok = rollup["token_bytes"]
-            groups = tier_groups(tok, self.compact_small_bytes)
-            out.update({
-                "generation": root["gen"],
-                "oid_buckets": root["oid_buckets"],
-                "retained_generations": [h["gen"] for h in
-                                         root.get("history", [])],
-                "open_dirs": rollup["open_dirs"],
-                "closed_dirs": rollup["closed_dirs"],
-                "history_tokens": dict(sorted(tok.items(),
-                                              key=lambda kv: -kv[1])),
-                "history_bytes": sum(tok.values()),
-                "small_tokens": sum(s <= self.compact_small_bytes
-                                    for s in tok.values()),
-                "compact_recommended": bool(groups),
-                "indexes": indexes,
-            })
-            if "rows" in rollup:
-                out["rows_total"] = rollup["rows"]
-                out["rows_open"] = rollup["rows_open"]
-            if rollup.get("migration") is not None:
-                out["migration"] = rollup["migration"]
-            if "max_bucket_bytes" in rollup:
-                out["max_bucket_bytes"] = rollup["max_bucket_bytes"]
-                if "migration" not in out:
-                    out["rebucket_recommended"] = (
-                        rollup["max_bucket_bytes"]
-                        > 4 * self.compact_small_bytes)
-                # mid-migration the runbook action is already in
-                # progress (and old/new vintages sharing a bucket VALUE
-                # are different buckets) — no recommendation
-            return out
-        meta = snap.manifest
-        tok = self._history_token_sizes(path, meta)
-        groups = tier_groups(tok, self.compact_small_bytes)
+        # every scalar below was rolled up at commit time, so describe
+        # costs one small JSON parse — O(segment refs), never O(dirs) —
+        # at any cube size; the tier recommendation is evaluated
+        # against the READER's threshold from the per-token byte rollup
+        rollup = root["rollup"]
+        tok = rollup["token_bytes"]
         out.update({
-            "generation": meta["gen"],
-            "oid_buckets": meta["oid_buckets"],
+            "generation": root["gen"],
+            "oid_buckets": root["oid_buckets"],
             "retained_generations": [h["gen"] for h in
-                                     meta.get("history", [])],
-            "open_dirs": sum(d.startswith("_current=true")
-                             for d in meta["dirs"]),
-            "closed_dirs": sum(d.startswith("_current=false")
-                               for d in meta["dirs"]),
+                                     root.get("history", [])],
+            "open_dirs": rollup["open_dirs"],
+            "closed_dirs": rollup["closed_dirs"],
             "history_tokens": dict(sorted(tok.items(),
                                           key=lambda kv: -kv[1])),
             "history_bytes": sum(tok.values()),
             "small_tokens": sum(s <= self.compact_small_bytes
                                 for s in tok.values()),
-            "compact_recommended": bool(groups),
-            "indexes": indexes,
+            "compact_recommended": bool(
+                tier_groups(tok, self.compact_small_bytes)),
+            "indexes": self._vector_indexes(snap, snap.gen),
+            "rows_total": rollup["rows"],
+            "rows_open": rollup["rows_open"],
         })
-        sizes = (meta.get("stats") or {}).get("bytes") or {}
-        blocks = meta.get("migration") or []
-        stamped = {d for b in blocks for d in b["old_dirs"]}
-        if blocks:
-            # in-flight doubling migration(s): how much is left, from
-            # manifest state alone (rebucket_step drains it)
-            out["migration"] = {
-                "from": sorted({b["from"] for b in blocks}),
-                "pending_dirs": len(stamped),
-                "pending_bytes": sum(sizes.get(d, 0) for d in stamped),
-            }
-        rows = (meta.get("stats") or {}).get("rows") or {}
-        if all(d in rows for d in meta["dirs"]):
-            # same source as the metadata-only count(): exact when
-            # every live directory carries a recorded row count
-            out["rows_open"] = sum(
-                rows[d] for d in meta["dirs"]
-                if d.startswith("_current=true"))
-            out["rows_total"] = sum(rows[d] for d in meta["dirs"])
-        buckets: dict[str, int] = {}
-        live = set(meta["dirs"])
-        for d, b in sizes.items():
-            if d not in live or d in stamped:
-                # old-modulus (stamped) dirs excluded: two vintages
-                # sharing a bucket VALUE are different buckets
-                continue
-            seg = d.split("/")[1]
-            buckets[seg] = buckets.get(seg, 0) + b
-        if buckets:
-            # per-bucket footprint from manifest stats alone: when the
-            # largest bucket outgrows what one merge/import should
-            # rewrite per commit (~4x the compact threshold here), the
-            # cube has outgrown its bucket count — rebucket()
-            out["max_bucket_bytes"] = max(buckets.values())
-            if not blocks:
-                # mid-migration the runbook action is in progress —
-                # no recommendation
+        if rollup.get("migration") is not None:
+            out["migration"] = rollup["migration"]
+        if "max_bucket_bytes" in rollup:
+            out["max_bucket_bytes"] = rollup["max_bucket_bytes"]
+            if "migration" not in out:
+                # mid-migration the runbook action is already in
+                # progress (and old/new vintages sharing a bucket VALUE
+                # are different buckets) — no recommendation
                 out["rebucket_recommended"] = (
-                    out["max_bucket_bytes"]
+                    rollup["max_bucket_bytes"]
                     > 4 * self.compact_small_bytes)
         return out
 
@@ -1740,7 +1676,7 @@ class Engine:
             if not blocks:
                 return {"migrated_dirs": 0, "migrated_bytes": 0,
                         "remaining_dirs": 0, "done": True}
-            sizes = (meta.get("stats") or {}).get("bytes") or {}
+            sizes = meta["stats"]["bytes"]
             live = set(meta["dirs"])
             # oldest modulus first: draining the oldest block shrinks
             # the union-prune's moduli set soonest under chained
@@ -1758,7 +1694,7 @@ class Engine:
             chunk: list[str] = []
             used = 0
             for d in pending:
-                b = self._dir_bytes(path, d, sizes)
+                b = sizes[d]
                 if chunk and max_bytes is not None \
                         and used + b > max_bytes:
                     continue  # keep scanning: a smaller dir may fit
@@ -1919,8 +1855,7 @@ class Engine:
         hist = self._push_history(meta, snap.keep)
         self._manifest_flip(
             snap.path, snap.raw, gen, dirs, hist,
-            stats=self._merged_stats(meta, new_stats, dirs, hist,
-                                     path=snap.path),
+            stats=self._merged_stats(meta, new_stats, dirs, hist),
             schema=meta["schema"] if schema is None else schema,
             dropped=self._retained_dirs(meta) - dirs.union(
                 *(h["dirs"] for h in hist)),
@@ -1934,9 +1869,12 @@ class Engine:
         CAS protocol. ``_manifest`` assembles the full flat dict from
         it. Only a format-7 root is read: segment refs and an
         ``oid_buckets`` count on the root and on every retained
-        generation, plus a ``schema``. A lower format is an older
-        cube — refused, its data kept; a higher one is a newer engine's
-        and raises the upgrade error."""
+        generation, a ``schema``, and a rollup with the per-token byte
+        and row totals (every directory a root names carries its
+        ``rows`` and ``bytes``). A lower format, or a root whose rollup
+        lacks those totals, is an older cube — refused, its data kept;
+        a higher format is a newer engine's and raises the upgrade
+        error."""
         import json
 
         if raw is None:
@@ -1968,6 +1906,10 @@ class Engine:
                 for e in [root, *root.get("history", [])]):
             raise _old_format_error(
                 path, f"manifest root format {fmt}, not {self._FORMAT}")
+        rollup = root.get("rollup") or {}
+        if "token_bytes" not in rollup or "rows" not in rollup:
+            raise _old_format_error(
+                path, "manifest root without directory size totals")
         return root
 
     @classmethod
@@ -2123,15 +2065,16 @@ class Engine:
     def _merged_stats(self, meta: dict | None,
                       new_stats: dict[str, dict[str, str | None]] | None,
                       dirs: set[str],
-                      history: list[dict] | None,
-                      path: str | None = None) -> dict | None:
+                      history: list[dict] | None) -> dict:
         """The ``stats`` block for the next manifest: per-directory
-        ``max(_end)`` carried forward for every retained directory and
-        extended with this commit's writes. Prior stats recorded under a
-        DIFFERENT session timezone are dropped, not converted — the
-        strings are wall-clock renderings, and a reader only consults
-        stats whose recorded zone matches its own session (skipped, not
-        wrong, on mismatch — same contract as the ``__stime`` prune)."""
+        stats carried forward for every retained directory and extended
+        with this commit's writes. ``rows`` and ``bytes`` are recorded
+        for every directory. Prior ``max_end``/``min_start`` recorded
+        under a DIFFERENT session timezone are dropped, not converted —
+        the strings are wall-clock renderings, and a reader only
+        consults stats whose recorded zone matches its own session
+        (skipped, not wrong, on mismatch — same contract as the
+        ``__stime`` prune)."""
         tz = self._session_tz()
         prior = (meta or {}).get("stats") or {}
         end_m: dict[str, str] = {}
@@ -2140,8 +2083,8 @@ class Engine:
             end_m.update(prior.get("max_end") or {})
             start_m.update(prior.get("min_start") or {})
         # per-directory byte sizes (the tiered-compaction level
-        # classifier) and row counts (the metadata-only count fast
-        # path) are tz-independent: always carried forward
+        # classifier) and row counts (the metadata-only count) are
+        # tz-independent: always carried forward
         bytes_m: dict[str, int] = dict(prior.get("bytes") or {})
         rows_m: dict[str, int] = dict(prior.get("rows") or {})
         for d, v in (new_stats or {}).items():
@@ -2153,39 +2096,16 @@ class Engine:
                 start_m[d] = v["min_start"]
             else:
                 start_m.pop(d, None)
-            if v.get("bytes") is not None:
-                bytes_m[d] = v["bytes"]
-            if v.get("rows") is not None:
-                rows_m[d] = v["rows"]
-        retained = set(dirs) | {d for h in (history or [])
-                                for d in h["dirs"]}
-        if path is not None:
-            # backfill du-fallback measurements for retained dirs the
-            # manifest holds no size for — persisting them here
-            # makes the fallback walk a once-per-dir cost, not
-            # once-per-compaction-trigger
-            for d in retained:
-                if d not in bytes_m:
-                    cached = self._du_cache.get(self.fs.join(path, d))
-                    if cached is not None:
-                        bytes_m[d] = cached
-        kept_end = {d: end_m[d] for d in sorted(retained) if d in end_m}
-        kept_start = {d: start_m[d] for d in sorted(retained)
-                      if d in start_m}
-        kept_bytes = {d: bytes_m[d] for d in sorted(retained)
-                      if d in bytes_m}
-        kept_rows = {d: rows_m[d] for d in sorted(retained)
-                     if d in rows_m}
-        if (not kept_end and not kept_start and not kept_bytes
-                and not kept_rows):
-            return None
-        out: dict = {"tz": tz, "max_end": kept_end,
-                     "min_start": kept_start}
-        if kept_bytes:
-            out["bytes"] = kept_bytes
-        if kept_rows:
-            out["rows"] = kept_rows
-        return out
+            bytes_m[d] = v["bytes"]
+            rows_m[d] = v["rows"]
+        retained = sorted(set(dirs) | {d for h in (history or [])
+                                       for d in h["dirs"]})
+        return {"tz": tz,
+                "max_end": {d: end_m[d] for d in retained if d in end_m},
+                "min_start": {d: start_m[d] for d in retained
+                              if d in start_m},
+                "bytes": {d: bytes_m[d] for d in retained},
+                "rows": {d: rows_m[d] for d in retained}}
 
     _CARRY = object()  # _manifest_flip: keep the prior manifest's value
 
@@ -2388,44 +2308,29 @@ class Engine:
         exclude old-modulus (stamped) directories — two vintages
         sharing a bucket VALUE are different buckets, and summing them
         would over-trigger ``rebucket_recommended`` mid-migration."""
-        rows_map = st.get("rows") or {}
-        bytes_map = st.get("bytes") or {}
+        rows_map, bytes_map = st.get("rows") or {}, st.get("bytes") or {}
         open_d = [d for d in dirs if d.startswith("_current=true")]
         rollup: dict = {"dirs": len(dirs), "open_dirs": len(open_d),
-                        "closed_dirs": len(dirs) - len(open_d)}
-        if dirs and all(d in rows_map for d in dirs):
-            rollup["rows"] = sum(rows_map[d] for d in dirs)
-            rollup["rows_open"] = sum(rows_map[d] for d in open_d)
+                        "closed_dirs": len(dirs) - len(open_d),
+                        "rows": sum(rows_map[d] for d in dirs),
+                        "rows_open": sum(rows_map[d] for d in open_d)}
         tok: dict[str, int] = {}
-        tok_ok = True
-        for d in dirs:
-            if d.startswith("_current=true"):
-                continue
-            b = bytes_map.get(d)
-            if b is None:
-                tok_ok = False
-                break  # unsized closed dir: no token rollup (fallback)
-            t = self._batch_dir_token(d)
-            tok[t] = tok.get(t, 0) + b
-        if tok_ok:
-            rollup["token_bytes"] = tok
         bb: dict[str, int] = {}
         for d in dirs:
-            if d in stamps:
-                continue
-            b = bytes_map.get(d)
-            if b is None:
-                continue
-            seg = d.split("/")[1]
-            bb[seg] = bb.get(seg, 0) + b
+            if not d.startswith("_current=true"):
+                t = self._batch_dir_token(d)
+                tok[t] = tok.get(t, 0) + bytes_map[d]
+            if d not in stamps:
+                seg = d.split("/")[1]
+                bb[seg] = bb.get(seg, 0) + bytes_map[d]
+        rollup["token_bytes"] = tok
         if bb:
             rollup["max_bucket_bytes"] = max(bb.values())
         if stamps:
             rollup["migration"] = {
                 "from": sorted(set(stamps.values())),
                 "pending_dirs": len(stamps),
-                "pending_bytes": sum(bytes_map.get(d, 0)
-                                     for d in stamps)}
+                "pending_bytes": sum(bytes_map[d] for d in stamps)}
         return rollup
 
     @staticmethod
@@ -2462,13 +2367,16 @@ class Engine:
         map-stage job plus the result job; the write keeps the rows'
         own partitioning either way. Returns the stats of each
         manifest-relative directory the commit references for these
-        rows: ``rows``,
-        ``min_start``, ``max_end`` (None for open directories) and
-        ``bytes``. The stats come from the DATA, not a listing; they
+        rows: ``rows``, ``min_start``, ``max_end`` (None for open
+        directories) and ``bytes``. The time stats and row counts come
+        from the DATA; the sizes from one ``fs.du`` per directory,
+        whose error propagates — the commit then fails before its
+        flip, and a retry rewrites the same directories. The stats
         land in the manifest and let as-of reads skip closed
         directories whose whole content ended before the probe date
         (the lakehouse data-skipping pattern, at directory
-        granularity), and the sizes feed the size-tiered compaction.
+        granularity); the sizes feed the size-tiered compaction and
+        every other size-driven choice.
 
         ``rows`` must be deterministic (checkpointed by the caller): the
         aggregate and the write must see the same rows. A ``_current``
@@ -2574,12 +2482,11 @@ class Engine:
             w.parquet(path)
         # one recursive LIST per directory this commit references for
         # these rows (bounded by the commit, not the cube); sizes of
-        # untouched dirs carry forward in _merged_stats
+        # untouched dirs carry forward in _merged_stats. A failed
+        # measurement fails the commit before its flip, like a failed
+        # write: every directory a root names carries its size
         for rel, v in stats.items():
-            try:
-                v["bytes"] = self.fs.du(self.fs.join(path, rel))
-            except Exception:
-                pass  # size unknown: tiered compact falls back to du
+            v["bytes"] = self.fs.du(self.fs.join(path, rel))
         return stats
 
     @staticmethod
@@ -2766,9 +2673,8 @@ class Engine:
         ``small_bytes=None`` for an explicit FULL consolidation (every
         batch merges — e.g. one final clustering pass with ``sort_by``
         before archiving).
-        Per-batch sizes come from the manifest's recorded per-directory
-        byte stats (written at commit time; ``fs.du`` fallback for a
-        directory whose size could not be measured then), so tier
+        Per-batch sizes come from the manifest root's per-token byte
+        rollup (every directory's size is recorded at commit), so tier
         selection costs no listing. Returns the number of directories
         removed.
 
@@ -2812,35 +2718,6 @@ class Engine:
         directory path (the ``__batch=`` leaf — one token spans several
         bucket/period dirs)."""
         return rel.rsplit("__batch=", 1)[-1]
-
-    def _history_token_sizes(self, path: str,
-                             meta: dict) -> dict[str, int]:
-        """Total byte size per history batch TOKEN, from the manifest's
-        recorded per-directory sizes (``stats.bytes``, written at commit
-        time) — ``fs.du`` only for directories whose size could not be
-        measured then. This is the size-tiered compaction's level
-        classifier and costs no listing on an up-to-date manifest."""
-        sizes = (meta.get("stats") or {}).get("bytes") or {}
-        tot: dict[str, int] = {}
-        for d in meta["dirs"]:
-            if not d.startswith("_current=false"):
-                continue
-            t = self._batch_dir_token(d)
-            tot[t] = tot.get(t, 0) + self._dir_bytes(path, d, sizes)
-        return tot
-
-    def _dir_bytes(self, path: str, rel: str, sizes: dict) -> int:
-        """A directory's byte size: the manifest's recorded
-        ``stats.bytes`` entry (``sizes``), else the ``fs.du`` fallback
-        for a size ``_write_dirs`` failed to measure, cached in
-        ``_du_cache`` until the next flip persists it."""
-        b = sizes.get(rel)
-        if b is None:
-            full = self.fs.join(path, rel)
-            b = self._du_cache.get(full)
-            if b is None:
-                b = self._du_cache[full] = self.fs.du(full)
-        return b
 
     def _sort_compacted(self, closed: DataFrame,
                         target_partitions: int | None,
@@ -2949,8 +2826,8 @@ class Engine:
         from metrique_spark.compaction import tier_groups
 
         if small_bytes is not None:
-            tok_sizes = self._history_token_sizes(path, meta)
-            groups = tier_groups(tok_sizes, small_bytes)
+            groups = tier_groups(snap.root["rollup"]["token_bytes"],
+                                 small_bytes)
         else:
             merge = {self._batch_dir_token(d) for d in meta["dirs"]
                      if d.startswith("_current=false")}
@@ -3016,7 +2893,7 @@ class Engine:
             return None
         self._manifest_flip(path, None, 1, set(dirs),
                             stats=self._merged_stats(
-                                None, dirs, set(dirs), None, path=path),
+                                None, dirs, set(dirs), None),
                             schema=self._manifest_schema(
                                 obj.schema, self.time_partition),
                             oid_buckets=buckets)
@@ -3122,17 +2999,13 @@ class Engine:
         below which AQE coalesces a shuffle to one partition anyway.
         Such a merge joins and such a stats aggregate groups with no
         exchange, and the job AQE runs for each exchange's map stage
-        goes with it. An input of unknown size (a first write, a
-        directory with no recorded size) or a larger one keeps the
-        shuffled plan, so a bulk commit never merges on one task."""
-        if snap.root is None or rows >= 1 << 31:
+        goes with it. An input of unknown size (a first write) or a
+        larger one keeps the shuffled plan, so a bulk commit never
+        merges on one task."""
+        if snap.row_bytes is None or rows >= 1 << 31:
             return False
-        size = (snap.manifest.get("stats") or {}).get("bytes") or {}
-        dirs = list(dirs)
-        if any(d not in size for d in dirs) or (
-                rows and snap.row_bytes is None):
-            return False
-        total = sum(size[d] for d in dirs) + rows * (snap.row_bytes or 0)
+        size = snap.manifest["stats"]["bytes"]
+        total = sum(size[d] for d in dirs) + rows * snap.row_bytes
         return total <= _byte_size(self.spark.conf.get(
             "spark.sql.adaptive.advisoryPartitionSizeInBytes"))
 
@@ -3249,14 +3122,13 @@ class Engine:
                                schema=self._manifest_schema(
                                    sch, snap.timepart))
             if self.auto_compact_batches:
-                # count only SMALL tokens (manifest-recorded sizes, no
-                # listing) of the generation just published: consolidated
-                # levels above the tier threshold are already compacted and
-                # must not re-trigger an O(|history|) rewrite every commit
-                n = sum(s <= self.compact_small_bytes for s in
-                        self._history_token_sizes(
-                            snap.path,
-                            self._resolve(snap.path).manifest).values())
+                # count only SMALL tokens (the root's per-token byte
+                # rollup, no listing) of the generation just published:
+                # consolidated levels above the tier threshold are
+                # already compacted and must not re-trigger an
+                # O(|history|) rewrite every commit
+                tok = self._resolve(snap.path).root["rollup"]["token_bytes"]
+                n = sum(s <= self.compact_small_bytes for s in tok.values())
                 if n > self.auto_compact_batches:
                     self.compact(cube)
             return gen
@@ -3571,10 +3443,9 @@ class Engine:
         """Count matches (reference ``sqlalchemy.py:641-664``). The two
         unfiltered shapes — current-only (``date=None``) and all-history
         (``date='~'``) — answer from the manifest's per-directory row
-        counts when every relevant directory has one (a metadata-only
-        read: zero files opened, zero Spark jobs — at 100 TB a bare
-        ``count`` should never scan the table); any filter, or a
-        directory missing a count, falls back to the scan.
+        counts (a metadata-only read: zero files opened, zero Spark
+        jobs — at 100 TB a bare ``count`` should never scan the table);
+        any filter takes the scan.
 
         Freshness: the metadata answer reflects the one snapshot the
         call resolved — the same semantics as any other read of the
@@ -3598,24 +3469,20 @@ class Engine:
     @staticmethod
     def _count_from_stats(snap: _Snapshot, open_only: bool) -> int | None:
         """Manifest-recorded row total of an unfiltered count of the
-        snapshot's generation, or None when nothing is committed or any
-        relevant directory lacks a count (fall back to the scan —
-        skipped, not wrong). Works for retained generations too: stats
-        carry forward for every retained directory."""
+        snapshot's generation, or None when nothing is committed (the
+        scan path raises the proper error). Works for retained
+        generations too: stats carry forward for every retained
+        directory."""
         if snap.root is None:
-            return None  # the scan path raises the proper error
-        if snap.generation in (None, snap.gen):
-            # ROOT-ONLY fast path: the totals were rolled up at commit
-            # time — a bare count() parses one small JSON whatever the
-            # cube's directory count (no segment loads, no Spark job)
-            r = snap.root.get("rollup") or {}
-            return r.get("rows_open" if open_only else "rows")
-        rows = (snap.manifest.get("stats") or {}).get("rows") or {}
-        want = [d for d in snap.dirs
-                if not open_only or d.startswith("_current=true")]
-        if not all(d in rows for d in want):
             return None
-        return sum(rows[d] for d in want)
+        if snap.generation in (None, snap.gen):
+            # the live totals were rolled up at commit time — a bare
+            # count() parses one small JSON whatever the cube's
+            # directory count (no segment loads, no Spark job)
+            return snap.root["rollup"]["rows_open" if open_only else "rows"]
+        rows = snap.manifest["stats"]["rows"]
+        return sum(rows[d] for d in snap.dirs
+                   if not open_only or d.startswith("_current=true"))
 
     def distinct(self, cube: str | DataFrame, fields, query: str | None = None,
                  date: str | None = "~") -> DataFrame:

@@ -21,6 +21,7 @@ import itertools
 import time
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from metrique_spark.engine import Engine
 from metrique_spark.objects import stamp
@@ -161,6 +162,12 @@ def test_trickle_commit_stamp_and_lookup_round_trips(spark, tmp_path):
     assert hit.count() == 1 and frame.schema == hit.schema
     schema = eng._manifest(eng._path("one"))["schema"]
     assert set(frame.columns) < {f["name"] for f in schema["fields"]}
+    # the read under the lookup is no parquet scan (Spark warns on one
+    # over no path) but no rows under the whole manifest schema
+    raw = eng._read_raw(eng._path("one"), lookup=[miss])
+    assert raw.schema == StructType.fromJson(schema)
+    assert raw.count() == 0
+    assert "parquet" not in raw._jdf.queryExecution().analyzed().toString()
     assert eng.count("c") == 65
     assert eng.count("c", date="~") == 69
 

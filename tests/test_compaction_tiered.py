@@ -59,7 +59,7 @@ def test_tiered_compact_leaves_large_level_untouched(spark, engine):
     # consolidated level
     assert engine.compact("lv") >= 1
     path = engine._path("lv")
-    sizes = engine._history_token_sizes(path, engine._manifest(path))
+    sizes = engine.describe("lv")["history_tokens"]
     assert len(sizes) == 1
     ((big_tok, big_size),) = sizes.items()
 
@@ -82,7 +82,7 @@ def test_tiered_compact_leaves_large_level_untouched(spark, engine):
     engine.upsert("lv", _objs(spark, [(1, 992)], "2014-06-01"),
                   stamped=True)
     assert engine.compact("lv", small_bytes=big_size - 1) >= 1
-    sizes2 = engine._history_token_sizes(path, engine._manifest(path))
+    sizes2 = engine.describe("lv")["history_tokens"]
     # large level carried forward by reference + one merged small level
     assert big_tok in sizes2 and len(sizes2) == 2
     assert _level_files(big_tok) == big_before  # byte-identical
@@ -92,8 +92,7 @@ def test_tiered_compact_leaves_large_level_untouched(spark, engine):
     assert engine.compact("lv", small_bytes=big_size - 1) == 0
     # explicit full consolidation merges the large level too
     assert engine.compact("lv", small_bytes=None) >= 1
-    assert len(engine._history_token_sizes(
-        path, engine._manifest(path))) == 1
+    assert len(engine.describe("lv")["history_tokens"]) == 1
     assert engine.count("lv", date="~") == hist_before + 2
 
 
@@ -110,7 +109,7 @@ def test_auto_compact_ignores_large_levels(spark, tmp_path):
             spark, [(k, k + i) for k in range(40)], day), stamped=True)
     eng.compact("ac")  # one consolidated level
     path = eng._path("ac")
-    sizes = eng._history_token_sizes(path, eng._manifest(path))
+    sizes = eng.describe("ac")["history_tokens"]
     ((big_tok, big_size),) = sizes.items()
     # shrink the tier threshold below the level's size: it is now LARGE
     eng.compact_small_bytes = big_size - 1
@@ -133,7 +132,7 @@ def test_auto_compact_ignores_large_levels(spark, tmp_path):
         eng.upsert("ac", _objs(spark, [(1, 900 + i)], day), stamped=True)
     # trickle folded into small levels (auto-compact fired), large level
     # never rewritten
-    sizes2 = eng._history_token_sizes(path, eng._manifest(path))
+    sizes2 = eng.describe("ac")["history_tokens"]
     small = {t for t, s in sizes2.items() if s <= eng.compact_small_bytes}
     assert big_tok in sizes2 and len(small) <= 2
     assert _level_files() == big_before
@@ -154,8 +153,7 @@ def test_tiered_compact_never_reads_untouched_levels(spark, engine):
             spark, [(k, k + i) for k in range(50)], day), stamped=True)
     assert engine.compact("nr") >= 1  # one consolidated level
     path = engine._path("nr")
-    ((big_tok, big_size),) = engine._history_token_sizes(
-        path, engine._manifest(path)).items()
+    ((big_tok, big_size),) = engine.describe("nr")["history_tokens"].items()
     engine.upsert("nr", _objs(spark, [(1, 991)], "2014-05-01"),
                   stamped=True)
     engine.upsert("nr", _objs(spark, [(1, 992)], "2014-06-01"),
@@ -258,7 +256,7 @@ def test_similar_size_levels_promote_at_quorum(spark, engine):
             spark, [(k, i) for k in range(200)], f"2014-0{i + 1}-01"),
             stamped=True)
     path = engine._path("pm")
-    sizes = engine._history_token_sizes(path, engine._manifest(path))
+    sizes = engine.describe("pm")["history_tokens"]
     assert len(sizes) == 3
     thr = min(sizes.values()) // 5  # every level counts as "large"
 
@@ -278,7 +276,7 @@ def test_similar_size_levels_promote_at_quorum(spark, engine):
     assert engine.count("pm", date="~") == 1000
     # four similar levels now: one promotion merge into a single level
     assert engine.compact("pm", small_bytes=thr) >= 1
-    sizes2 = engine._history_token_sizes(path, engine._manifest(path))
+    sizes2 = engine.describe("pm")["history_tokens"]
     assert len(sizes2) == 1
     assert engine.count("pm", date="~") == 1000
     assert engine.count("pm") == 200
@@ -334,64 +332,6 @@ def test_rebucket_recommended_flips_on_outgrown_buckets(spark,
                    compact_small_bytes=max(
                        1, d["max_bucket_bytes"] // 4 - 1))
     assert tight.describe("rb")["rebucket_recommended"]
-
-
-def test_du_fallback_is_cached_and_backfilled(spark, tmp_path):
-    """Directories with no recorded byte size (the measurement failed
-    at commit) pay the fs.du walk at most once per directory: the
-    measurement is cached on the engine and the next commit BACKFILLS
-    it into the manifest stats, so a later engine never walks those
-    dirs again."""
-    import json
-
-    eng = Engine(spark, warehouse=str(tmp_path / "wh"))
-    for i, day in enumerate(("2014-01-01", "2014-02-01", "2014-03-01")):
-        eng.upsert("bf", _objs(
-            spark, [(k, k + i) for k in range(20)], day), stamped=True)
-    path = eng._path("bf")
-    # simulate a manifest with no recorded byte sizes: re-commit the
-    # same generation as a segmented root whose segments carry no
-    # ``bytes`` stats
-    raw = eng._manifest_raw(path)
-    full = eng._manifest(path)
-    st = dict(full.get("stats") or {})
-    st.pop("bytes", None)
-    eng._manifest_flip(path, raw, full["gen"], set(full["dirs"]),
-                       full.get("history"), stats=st,
-                       schema=full["schema"])
-    segs = json.loads(eng._manifest_raw(path))["segs"]
-    assert all("bytes" not in (eng._load_segment(path, f).get("stats")
-                               or {}) for f in segs.values())
-
-    eng2 = Engine(spark, warehouse=str(tmp_path / "wh"))
-    calls = {"n": 0}
-    real_du = eng2.fs.du
-
-    def counting_du(p):
-        calls["n"] += 1
-        return real_du(p)
-
-    eng2.fs.du = counting_du
-    sizes = eng2._history_token_sizes(path, eng2._manifest(path))
-    assert sizes and calls["n"] > 0  # fallback walked once
-    walked = calls["n"]
-    eng2._history_token_sizes(path, eng2._manifest(path))
-    assert calls["n"] == walked  # cached: no second walk
-    # a commit backfills the measured sizes into the manifest stats...
-    eng2.upsert("bf", _objs(spark, [(1, 999)], "2014-04-01"),
-                stamped=True)
-    stats = eng2._manifest(path)["stats"]["bytes"]
-    closed = [d for d in eng2._manifest(path)["dirs"]
-              if d.startswith("_current=false")]
-    assert set(closed) <= set(stats)
-    # ...so a FRESH engine never walks the old dirs again
-    eng3 = Engine(spark, warehouse=str(tmp_path / "wh"))
-    calls3 = {"n": 0}
-    real_du3 = eng3.fs.du
-    eng3.fs.du = lambda p: (calls3.__setitem__("n", calls3["n"] + 1),
-                            real_du3(p))[1]
-    eng3._history_token_sizes(path, eng3._manifest(path))
-    assert calls3["n"] == 0
 
 
 def _vrows(spark, rows, day):

@@ -1,7 +1,8 @@
 """The engine reads exactly one on-disk cube format: a segmented
-(format-7) manifest root that carries a schema, the oid-bucket count and
+(format-7) manifest root that carries a schema, the oid-bucket count,
 the cube's layout and registries (the index registry naming its ANN
-indexes too), and every cube is oid-bucketed; the
+indexes too) and the row and per-token byte totals of its directories,
+and every cube is oid-bucketed; the
 ``_layout.json`` fence is read only when there is no root. Every older
 state is refused with the one ValueError from ``_resolve``/
 ``_manifest_root`` — and refused WITHOUT touching the data: an older
@@ -107,10 +108,22 @@ def _format6_root(eng, path):
         json.dump({"format": 2, "min_format": 6}, fh)
 
 
+def _unsized_root(eng, path):
+    # the format-7 root an older engine wrote when measuring a written
+    # directory's size failed: the commit went ahead without that
+    # directory's bytes, and the rollup without its per-token totals
+    mp = os.path.join(path, "_manifest.json")
+    with open(mp) as fh:
+        root = json.load(fh)
+    root["rollup"].pop("token_bytes")
+    with open(mp, "w") as fh:
+        json.dump(root, fh)
+
+
 @pytest.mark.parametrize("make_old", [_no_layout, _formatless_layout,
                                       _schemaless_root, _monolithic_root,
                                       _format4_root, _format5_root,
-                                      _format6_root])
+                                      _format6_root, _unsized_root])
 def test_older_format_refused_and_never_wiped(spark, tmp_path, make_old):
     wh = str(tmp_path / "wh")
     first = Engine(spark, warehouse=wh)

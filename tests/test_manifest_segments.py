@@ -3,9 +3,10 @@ assemble round trip is the identity every consumer depends on, touched
 segments rotate while untouched ranges carry by filename reference,
 modulus stamps group back into migration blocks, history entries keep
 their segment refs, a flip retires by name exactly the files no root names,
-and the describe() root fast path reports the same facts as the
-assembled (legacy) path. Pure control-plane: no parquet data is
-written, so the fuzz covers hundreds of manifest states in seconds."""
+describe() reports from the root rollup the figures the assembled
+per-directory stats give, and a commit whose size measurement fails
+publishes nothing. The fuzz is pure control-plane: no parquet data is
+written, so it covers hundreds of manifest states in seconds."""
 
 import json
 import os
@@ -179,41 +180,112 @@ def test_stamps_round_trip_as_migration_blocks(eng):
     assert root["oid_buckets"] == 64 and "oid_buckets" not in root["layout"]
 
 
-def test_describe_fast_path_matches_assembled_path(spark, tmp_path):
-    """The root-rollup describe must report the same facts the
-    assembled-manifest path computes for the same cube."""
+def _upsert(eng, cube, rows, day):
     from pyspark.sql import functions as F
 
     from metrique_spark.objects import stamp
 
+    df = eng.spark.createDataFrame(rows, "oid long, x long")
+    eng.upsert(cube, stamp(df, oid="oid",
+                           start=F.to_timestamp(F.lit(day))), stamped=True)
+
+
+def test_describe_reports_the_assembled_stats(spark, tmp_path):
+    """describe() answers from the root rollup alone; every figure it
+    reports equals the one computed from the assembled manifest's
+    per-directory ``rows`` and ``bytes`` of the same cube."""
+    from metrique_spark.compaction import tier_groups
+
     eng = Engine(spark, warehouse=str(tmp_path / "wh"), oid_buckets=4,
                  keep_generations=1)
-    df = spark.createDataFrame([(i, i) for i in range(30)],
-                               "oid long, x long")
-    eng.upsert("d", stamp(
-        df, oid="oid", start=F.to_timestamp(F.lit("2024-01-01"))),
-        stamped=True)
-    df2 = spark.createDataFrame([(1, 99)], "oid long, x long")
-    eng.upsert("d", stamp(
-        df2, oid="oid", start=F.to_timestamp(F.lit("2024-02-01"))),
-        stamped=True)
-    fast = eng.describe("d")
-    # force the assembled path: the same segmented root without the
-    # per-token byte rollup (what a commit writes when a closed dir
-    # has no recorded size)
-    path = eng._path("d")
+    _upsert(eng, "d", [(i, i) for i in range(30)], "2024-01-01")
+    _upsert(eng, "d", [(1, 99)], "2024-02-01")
+    _upsert(eng, "d", [(2, 98), (3, 97)], "2024-03-01")
+    meta = eng._manifest(eng._path("d"))
+    rows, size = meta["stats"]["rows"], meta["stats"]["bytes"]
+    open_d = [d for d in meta["dirs"] if d.startswith("_current=true")]
+    closed = [d for d in meta["dirs"] if d.startswith("_current=false")]
+    tok: dict[str, int] = {}
+    for d in closed:
+        t = Engine._batch_dir_token(d)
+        tok[t] = tok.get(t, 0) + size[d]
+    per_bucket: dict[str, int] = {}
+    for d in meta["dirs"]:
+        b = d.split("/")[1]
+        per_bucket[b] = per_bucket.get(b, 0) + size[d]
+    small = eng.compact_small_bytes
+    want = {
+        "state": "manifest",
+        "generation": meta["gen"],
+        "retained_generations": [h["gen"] for h in meta["history"]],
+        "open_dirs": len(open_d),
+        "closed_dirs": len(closed),
+        "history_tokens": tok,
+        "history_bytes": sum(tok.values()),
+        "small_tokens": sum(s <= small for s in tok.values()),
+        "compact_recommended": bool(tier_groups(tok, small)),
+        "rows_open": sum(rows[d] for d in open_d),
+        "rows_total": sum(rows[d] for d in meta["dirs"]),
+        "max_bucket_bytes": max(per_bucket.values()),
+    }
+    got = Engine(spark, warehouse=str(tmp_path / "wh"),
+                 oid_buckets=4).describe("d")
+    for k, v in want.items():
+        assert got[k] == v, k
+    assert len(tok) == 2 and got["compact_recommended"]
+    assert (got["rows_total"], got["rows_open"]) == (33, 30)
+
+
+def test_failed_size_measurement_fails_the_commit_before_its_flip(
+        spark, tmp_path):
+    """Every directory a commit writes is measured with ``fs.du``; when
+    that raises, the commit fails before its flip like a failed write:
+    the root and reads stay on the prior generation, the same batch
+    retried commits what a clean run commits, and every directory the
+    new root names carries its ``rows`` and ``bytes``."""
+    from metrique_spark.fs import LocalFS
+
+    class FailingDu(LocalFS):
+        failures = 0
+
+        def du(self, path):
+            if self.failures:
+                self.failures -= 1
+                raise OSError("injected du failure")
+            return super().du(path)
+
+    def history(eng):
+        return sorted((r["_oid"], str(r["_start"]), str(r["_end"]),
+                       r["_id"], r["_hash"], r["x"])
+                      for r in eng.find("c", date="~").collect())
+
+    first = [(i, i) for i in range(20)]
+    second = [(1, 101), (2, 102), (30, 1)]
+    fs = FailingDu()
+    eng = Engine(spark, warehouse=str(tmp_path / "wh"), oid_buckets=4,
+                 fs=fs)
+    _upsert(eng, "c", first, "2024-01-01")
+    path = eng._path("c")
     raw = eng._manifest_raw(path)
-    root = json.loads(raw)
-    del root["rollup"]["token_bytes"]
-    assert eng.fs.replace_if_match(
-        os.path.join(path, "_manifest.json"), json.dumps(root), raw)
-    slow = Engine(spark, warehouse=str(tmp_path / "wh"),
-                  oid_buckets=4).describe("d")
-    for k in ("state", "generation", "open_dirs", "closed_dirs",
-              "history_tokens", "history_bytes", "small_tokens",
-              "compact_recommended", "rows_open", "rows_total",
-              "max_bucket_bytes", "retained_generations"):
-        assert fast[k] == slow[k], k
+    before = history(eng)
+    fs.failures = 1
+    with pytest.raises(OSError, match="injected du failure"):
+        _upsert(eng, "c", second, "2024-02-01")
+    assert eng._manifest_raw(path) == raw
+    assert history(eng) == before
+    assert [r["x"] for r in eng.find("c", oids=[1]).collect()] == [1]
+
+    _upsert(eng, "c", second, "2024-02-01")
+    clean = Engine(spark, warehouse=str(tmp_path / "clean"), oid_buckets=4)
+    _upsert(clean, "c", first, "2024-01-01")
+    _upsert(clean, "c", second, "2024-02-01")
+    assert history(eng) == history(clean)
+    meta = eng._manifest(path)
+    assert meta["gen"] == 2
+    assert meta["dirs"] == clean._manifest(clean._path("c"))["dirs"]
+    for field in ("rows", "bytes"):
+        assert set(meta["stats"][field]) == set(meta["dirs"]), field
+    assert eng.count("c") == 21 and eng.count("c", date="~") == 23
 
 
 def test_commit_listing_is_bounded_by_the_commit_not_the_cube(

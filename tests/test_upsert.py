@@ -537,9 +537,10 @@ def test_first_manifest_flip_is_cas(spark, engine):
     engine.upsert("cas1", _objs(spark, [(1, 10)], "2014-01-01"),
                   stamped=True)
     path = engine._path("cas1")
+    d = "_current=true/__obucket=0/__batch=x"
     with _pytest.raises(ConcurrentWriteError, match="first writer"):
-        engine._manifest_flip(path, None, 1,
-                              {"_current=true/__obucket=0/__batch=x"},
+        engine._manifest_flip(path, None, 1, {d},
+                              stats={"rows": {d: 1}, "bytes": {d: 1}},
                               schema=engine._manifest(path)["schema"],
                               oid_buckets=engine.oid_buckets)
 
