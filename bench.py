@@ -20,6 +20,7 @@ timings, the ingest-throughput block, and run metadata are written to
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
@@ -172,6 +173,42 @@ def contract_line(timings: dict, total: float, sf, load) -> str:
     )
 
 
+@contextlib.contextmanager
+def job_group(spark, group: str, description: str):
+    """Run the block's Spark jobs in job group ``group``; a job the
+    engine does not name itself carries ``description``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, description)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def group_stages(probe, group: str) -> list[dict]:
+    """The stage attempts of job group ``group`` from the monitoring
+    REST API, read by ``perfbench/tracing.py``'s ``StageProbe``; none
+    when the API cannot be read, so measurement never fails the run:
+    the probe itself skips what an unreachable endpoint does not return,
+    and with the UI off there is no endpoint URL to open."""
+    try:
+        return probe.stages_of_group(group)[1]
+    except ValueError:  # urllib's "unknown url type" for the UI-off URL
+        return []
+
+
+def task_totals(stages: list[dict]) -> dict:
+    """Task CPU seconds, scan bytes and shuffle read+write bytes summed
+    over ``stages``."""
+    def total(*keys):
+        return sum(s.get(k, 0) for s in stages for k in keys)
+
+    return {"task_cpu_s": round(total("executorCpuTime") / 1e9, 3),
+            "input_bytes": total("inputBytes"),
+            "shuffle_bytes": total("shuffleReadBytes", "shuffleWriteBytes")}
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -211,7 +248,8 @@ def main() -> None:
         .config("spark.driver.extraJavaOptions",
                 "-XX:+ExplicitGCInvokesConcurrent")
         # the UI hosts the public monitoring REST API the task-attributed
-        # per-query CPU record reads (plans.metrics.StageMetricsProbe)
+        # per-query CPU record reads (perfbench/tracing.py's StageProbe,
+        # one job group per timed run)
         .config("spark.ui.enabled", "true")
         .config("spark.ui.retainedStages", "20000")
         .config("spark.ui.retainedJobs", "20000")
@@ -291,9 +329,9 @@ def main() -> None:
     # the per-query CPU gate sound. Kept ALONGSIDE the process clock:
     # task CPU excludes driver-side work (collect loops, py4j), so the
     # process totals remain the whole-bench comparator.
-    from metrique_spark.plans.metrics import StageMetricsProbe
+    from perfbench.tracing import StageProbe
 
-    probe = StageMetricsProbe(spark)
+    probe = StageProbe(spark)
 
     loads: dict[str, float] = {}
     timings: dict[str, float] = {}
@@ -320,19 +358,20 @@ def main() -> None:
         best_task = None
         loads[name] = round(os.getloadavg()[0], 2)
         for i in range(runs):
-            probe.start()
-            c0 = _proc_cpu()
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            dc = _proc_cpu() - c0
-            sm = probe.finish()
+            group = f"bench-{name}-{i}"
+            with job_group(spark, group, name):
+                c0 = _proc_cpu()
+                t0 = time.time()
+                fn(spark, sf_dir).write.format("noop").mode(
+                    "overwrite").save()
+                dt = time.time() - t0
+                dc = _proc_cpu() - c0
+            sm = task_totals(group_stages(probe, group))
             best = dt if best is None else min(best, dt)
             best_cpu = dc if best_cpu is None else min(best_cpu, dc)
             if best_task is None or sm["task_cpu_s"] < best_task:
                 best_task = sm["task_cpu_s"]
-                shuffle_bytes[name] = (sm["shuffle_read_bytes"]
-                                       + sm["shuffle_write_bytes"])
+                shuffle_bytes[name] = sm["shuffle_bytes"]
             if i == 1:
                 timings_min2[name] = round(best, 3)
         timings_task_cpu[name] = round(best_task, 3)

@@ -434,33 +434,22 @@ class Engine:
         # (schema, frame of no rows) for its read of no directory
         self._readers: dict[str, tuple] = {}
         self._empties: dict[str, tuple] = {}
-        # phase-attributed wall accumulator (scale-curve diagnostics):
-        # _phase() sections add here when enabled; disabled (None) in
-        # normal operation so the hot path pays one attribute check.
-        self.phase_times: dict[str, float] | None = None
-
-    def _phase(self, name: str):
-        """Accumulate a named section's wall into ``phase_times`` when
-        phase accounting is on (``eng.phase_times = {}``) — how the
-        scaling harness attributes an op's wall to manifest-resolve /
-        commit-build / CAS without guessing from totals. Overhead when
-        off: one None check."""
-        if self.phase_times is None:
-            return contextlib.nullcontext()
-        return self._phase_cm(name)
 
     @contextlib.contextmanager
-    def _phase_cm(self, name: str):
-        import time as _t
-
-        t0 = _t.monotonic()
+    def _jobs(self, op: str, action: str):
+        """Name every Spark job the block runs ``<op>:<action>``
+        (``upsert:merge``, ``compact:write``, ...) through
+        ``spark.job.description``, which the UI, the status store and
+        the monitoring REST API's jobs and stages carry; the caller's
+        description comes back on exit, exceptions included, and its
+        job group is never touched. Three round trips per block."""
+        sc, key = self.spark.sparkContext, "spark.job.description"
+        prev = sc.getLocalProperty(key)
+        sc.setLocalProperty(key, f"{op}:{action}")
         try:
             yield
         finally:
-            acc = self.phase_times
-            if acc is not None:
-                acc[name] = round(
-                    acc.get(name, 0.0) + _t.monotonic() - t0, 6)
+            sc.setLocalProperty(key, prev)
 
     def _exprs(self, *sql: str) -> list[Column]:
         """The ``Column`` of each SQL expression text, built once per
@@ -978,16 +967,19 @@ class Engine:
                 # directory (a crashed first build, an older-form index)
                 # is readable, so start from an empty one
                 self.fs.delete_dir(apath)
-            root = _sim._stage_build(df, apath, kind, id_col, vec_col,
-                                     **params)
+            with self._jobs("ann_build", "index"):
+                root = _sim._stage_build(df, apath, kind, id_col, vec_col,
+                                         **params)
             # build-time drift baseline: the same distribution-fit
             # statistic refresh will compute over appended deltas (see
             # similarity.drift_stat) recorded against the corpus the
             # model was TRAINED on — one extra map-only pass at build
             # (sq8's clip fraction is 0 by construction: the params ARE
             # the corpus extrema, so no job at all)
-            dmetric, dval = (("clip_frac", 0.0) if kind == "sq8" else
-                             _sim._index_drift(df, apath, root, vec_col))
+            with self._jobs("ann_build", "drift"):
+                dmetric, dval = (
+                    ("clip_frac", 0.0) if kind == "sq8" else
+                    _sim._index_drift(df, apath, root, vec_col))
             root.update(gen=snap.gen, vec_col=vec_col, params=params,
                         auto=bool(auto_refresh),
                         drift_base={"metric": dmetric, "value": dval})
@@ -1178,14 +1170,17 @@ class Engine:
                 newc.join(dups.withColumnRenamed(id_col, "__did"),
                           F.col(id_col) == F.col("__did"), "left_semi"))
                 .dropDuplicates([id_col]))
-            changed = changed.localCheckpoint(eager=True)
-            sup = sup.localCheckpoint(eager=True)
-            n_add, n_del = changed.count(), sup.count()
+            with self._jobs("ann_refresh", "diff"):
+                changed = changed.localCheckpoint(eager=True)
+                sup = sup.localCheckpoint(eager=True)
+                n_add, n_del = changed.count(), sup.count()
             new = root
             if n_del:
-                new = _sim._stage_remove(self.spark, apath, new, sup)
+                with self._jobs("ann_refresh", "remove"):
+                    new = _sim._stage_remove(self.spark, apath, new, sup)
             if n_add:
-                new = _sim._stage_append(changed, apath, new, vec_col)
+                with self._jobs("ann_refresh", "append"):
+                    new = _sim._stage_append(changed, apath, new, vec_col)
             new = {**new, "gen": live}
             # drift signal over the APPENDED delta (frozen-model refresh
             # never retrains — recall decays silently as the
@@ -1201,7 +1196,9 @@ class Engine:
             if drift_tol is None:
                 drift_tol = root.get("drift_tol")  # per-index tolerance
             if n_add and base is not None:
-                dm, dv = _sim._index_drift(changed, apath, root, vec_col)
+                with self._jobs("ann_refresh", "drift"):
+                    dm, dv = _sim._index_drift(changed, apath, root,
+                                               vec_col)
                 if dm == "centroid_sim":
                     tol = 0.15 if drift_tol is None else drift_tol
                     rec = dv is not None and dv < base - tol
@@ -1220,10 +1217,11 @@ class Engine:
                     # the documented rebuild trigger "bucket sizes
                     # skew", now measured — max/mean over the slim
                     # partition key, one combinable aggregate)
-                    srow = (_sim._frame(self.spark, apath, new)
-                            .groupBy(_sim._parts(new)[0]).count()
-                            .agg((F.max("count")
-                                  / F.avg("count")).alias("s")).first())
+                    with self._jobs("ann_refresh", "skew"):
+                        srow = (_sim._frame(self.spark, apath, new)
+                                .groupBy(_sim._parts(new)[0]).count()
+                                .agg((F.max("count") / F.avg("count"))
+                                     .alias("s")).first())
                     if srow["s"] is not None:
                         drift["bucket_skew"] = round(float(srow["s"]), 3)
                 new["drift_last"] = drift  # surfaced by vector_index_list
@@ -1289,9 +1287,10 @@ class Engine:
         with self._write_lock(cube):
             if small_bytes is Engine._FULL_COMPACT:
                 small_bytes = self.compact_small_bytes
-            return _sim.compact_pq_index(
-                self.spark, self._ann_path(cube, name), fs=self.fs,
-                small_bytes=small_bytes)
+            with self._jobs("ann_compact", "merge"):
+                return _sim.compact_pq_index(
+                    self.spark, self._ann_path(cube, name), fs=self.fs,
+                    small_bytes=small_bytes)
 
     # -- writes -------------------------------------------------------------
 
@@ -1595,10 +1594,11 @@ class Engine:
             # (fresh relpaths, but Spark's self-overwrite check is
             # path-based), and a retry must not recompute from
             # directories the write is mutating
-            rows = (self._scan(snap).drop("_current", *_INTERNAL)
-                    .localCheckpoint(eager=True))
+            with self._jobs("rebucket", "checkpoint"):
+                rows = (self._scan(snap).drop("_current", *_INTERNAL)
+                        .localCheckpoint(eager=True))
             new_rels = self._write_dirs(
-                rows, snap, oid_buckets, snap.timepart,
+                rows, snap, oid_buckets, snap.timepart, op="rebucket",
                 open_batch=f"open-g{gen}", closed_batch=f"rb-g{gen}")
             self._auto_refresh_indexes(cube, snap, self._commit(
                 snap, set(new_rels), new_rels, oid_buckets=oid_buckets,
@@ -1708,10 +1708,12 @@ class Engine:
             # localCheckpoint: the write lands under the same root the
             # plan reads from, and a retry must not recompute from
             # directories the write is mutating
-            rows = rows.localCheckpoint(eager=True)
+            with self._jobs("rebucket_step", "checkpoint"):
+                rows = rows.localCheckpoint(eager=True)
             new_rels = self._write_dirs(
                 rows, snap, meta["oid_buckets"], snap.timepart,
-                open_batch=f"open-g{gen}", closed_batch=f"mig-g{gen}")
+                op="rebucket_step", open_batch=f"open-g{gen}",
+                closed_batch=f"mig-g{gen}")
             dirs = (live - set(chunk)) | set(new_rels)
             self._auto_refresh_indexes(
                 cube, snap, self._commit(snap, dirs, new_rels))
@@ -1939,8 +1941,7 @@ class Engine:
         cached = self._meta_cache.get(path)
         if cached is not None and cached[0] == raw:
             return cached[1]
-        with self._phase("manifest_assemble"):
-            meta = self._assemble(path, root)
+        meta = self._assemble(path, root)
         self._meta_cache[path] = (raw, meta)
         return meta
 
@@ -2199,10 +2200,8 @@ class Engine:
                            for d in migration["old_dirs"]
                            if d in dirs and d not in carried})
         body: dict = {"gen": gen, "oid_buckets": oid_buckets}
-        with self._phase("flip_build_segments"):
-            self._flip_build_segmented(path, prior_root, gen, dirs,
-                                       history, stats, schema, stamps,
-                                       body)
+        self._flip_build_segmented(path, prior_root, gen, dirs, history,
+                                   stats, schema, stamps, body)
         carried = ({k: prior_root[k] for k in ("layout", "dropped",
                                                "indexes")
                     if k in prior_root} if old_raw
@@ -2354,7 +2353,7 @@ class Engine:
 
     def _write_dirs(
         self, rows: DataFrame, snap: _Snapshot, buckets: int,
-        timepart: str | None, *, open_batch: str | None = None,
+        timepart: str | None, *, op: str, open_batch: str | None = None,
         closed_batch: str | None = None,
         live: set[str] | frozenset[str] = frozenset(),
         one_partition: bool = False,
@@ -2398,7 +2397,8 @@ class Engine:
 
         The partition keys come in ONE projection and the aggregate's
         keys and measures are the Engine's cached expressions
-        (``_exprs``)."""
+        (``_exprs``). The two jobs are named ``<op>:stats`` and
+        ``<op>:write``."""
         path = snap.path
         keys = self._partition_keys(timepart)[:-1]  # no __batch
         add = [f"{self._obucket_sql(buckets)} AS __obucket"]
@@ -2414,9 +2414,10 @@ class Engine:
             # decimal(38,0) can't overflow under ANSI until ~1e19 rows
             aggs.append("sum(CAST(xxhash64(_id, CAST(_end AS STRING)) "
                         "AS DECIMAL(38,0))) AS __hsum")
-        groups = ((out.coalesce(1) if one_partition else out)
-                  .groupBy(*self._exprs(*keys))
-                  .agg(*self._exprs(*aggs)).collect())
+        with self._jobs(op, "stats"):
+            groups = ((out.coalesce(1) if one_partition else out)
+                      .groupBy(*self._exprs(*keys))
+                      .agg(*self._exprs(*aggs)).collect())
         closed = [r for r in groups if not r["_current"]]
         if closed_batch is None and closed:
             # Python ints: Decimal arithmetic rounds at 28 digits
@@ -2479,7 +2480,8 @@ class Engine:
                      .option("parquet.bloom.filter.expected.ndv#_oid",
                              str(ndv))
                      .option("parquet.enable.dictionary#_oid", "false"))
-            w.parquet(path)
+            with self._jobs(op, "write"):
+                w.parquet(path)
         # one recursive LIST per directory this commit references for
         # these rows (bounded by the commit, not the cube); sizes of
         # untouched dirs carry forward in _merged_stats. A failed
@@ -2778,9 +2780,10 @@ class Engine:
                     "cluster='range' for lexicographic keys)")
             nums.append(col.cast("double"))
         probes = [i / (1 << bits) for i in range(1, 1 << bits)]
-        qs = closed.select(*[n.alias(f"__q{j}") for j, n in
-                             enumerate(nums)]).approxQuantile(
-            [f"__q{j}" for j in range(k)], probes, 0.001)  # ONE pass
+        with self._jobs("compact", "zorder"):
+            qs = closed.select(*[n.alias(f"__q{j}") for j, n in
+                                 enumerate(nums)]).approxQuantile(
+                [f"__q{j}" for j in range(k)], probes, 0.001)  # ONE pass
         def binner(num):  # bind the axis column per-iteration (pyspark
             # reads the lambda's arity, so no default-arg capture)
             return lambda acc, b: acc + F.when(num >= b, 1).otherwise(0)
@@ -2848,11 +2851,12 @@ class Engine:
                                           sort_by, cluster=cluster)
             # localCheckpoint: the write below rewrites the directories
             # this plan reads from
-            closed = closed.withColumn("_current", F.lit(False))
+            with self._jobs("compact", "checkpoint"):
+                closed = closed.withColumn(
+                    "_current", F.lit(False)).localCheckpoint(eager=True)
             rels.update(self._write_dirs(
-                closed.localCheckpoint(eager=True), snap,
-                meta["oid_buckets"], snap.timepart,
-                live=self._retained_dirs(meta),
+                closed, snap, meta["oid_buckets"], snap.timepart,
+                op="compact", live=self._retained_dirs(meta),
                 one_partition=self._one_partition(snap, read)))
             merged_all |= merge
         drop = {d for d in live
@@ -2885,7 +2889,7 @@ class Engine:
                            self._FENCE)
         dirs = self._write_dirs(
             obj.drop("_current"), snap, buckets, self.time_partition,
-            open_batch="open-g1", closed_batch="hist-g1")
+            op="first_write", open_batch="open-g1", closed_batch="hist-g1")
         if not dirs:
             # zero-row first batch: nothing landed — leave the cube in
             # the "new" state (no manifest) instead of committing an
@@ -2912,7 +2916,7 @@ class Engine:
         path = self._path(cube)
         with self._write_lock(cube):
             snap = self._resolve(path, write=True)
-            obj, n_in, _, _ = self._checkpoint(obj, ())
+            obj, n_in, _, _ = self._checkpoint(obj, (), "insert")
             if snap.root is None:
                 self._first_write(snap, obj)
                 return
@@ -2920,7 +2924,8 @@ class Engine:
             gen = snap.gen + 1
             new_dirs = self._write_dirs(
                 obj, snap, snap.root["oid_buckets"], snap.timepart,
-                open_batch=f"ins-g{gen}", closed_batch=f"insh-g{gen}",
+                op="insert", open_batch=f"ins-g{gen}",
+                closed_batch=f"insh-g{gen}",
                 one_partition=self._one_partition(snap, rows=n_in))
             self._auto_refresh_indexes(cube, snap, self._commit(
                 snap, set(snap.dirs) | set(new_dirs), new_dirs,
@@ -2957,18 +2962,19 @@ class Engine:
             if m.get("auto") and m.get("stale"):
                 self.refresh_vector_index(cube, name)
 
-    def _checkpoint(self, batch: DataFrame, moduli: Sequence[int]
+    def _checkpoint(self, batch: DataFrame, moduli: Sequence[int], op: str
                     ) -> tuple[DataFrame, int, int, dict[int, set[int]]]:
         """Checkpoint a commit batch ONCE, with its probe folded in:
         ``validate``'s checks, the row count, the closed-row count
         (autosnap detection) and the oid-bucket values the oids hash
         into under each modulus in ``moduli`` (the live count and every
         in-flight doubling's from-count) are ``observe`` metrics of the
-        checkpoint's own job — the probe reads no row twice and runs no
-        job of its own. Raises ``validate``'s errors before anything is
-        written. Returns the checkpoint, its row count, its closed-row
-        count and the hit bucket values per modulus (each set bounded
-        by its bucket count).
+        checkpoint's own job, named ``<op>:checkpoint`` — the probe
+        reads no row twice and runs no job of its own. Raises
+        ``validate``'s errors before anything is written. Returns the
+        checkpoint, its row count, its closed-row count and the hit
+        bucket values per modulus (each set bounded by its bucket
+        count).
 
         The checkpoint pins the rows: the probe, the merge and the
         write must all see the same ones — a nondeterministic source
@@ -2979,11 +2985,12 @@ class Engine:
         from pyspark.sql import Observation
 
         obs = Observation()
-        cp = batch.observe(obs, *self._exprs(
-            *validity_checks(), "count(1) AS __rows",
-            "count(_end) AS __closed",
-            *[f"collect_set({self._obucket_sql(m)}) AS __b{i}"
-              for i, m in enumerate(moduli)])).localCheckpoint(eager=True)
+        with self._jobs(op, "checkpoint"):
+            cp = batch.observe(obs, *self._exprs(
+                *validity_checks(), "count(1) AS __rows",
+                "count(_end) AS __closed",
+                *[f"collect_set({self._obucket_sql(m)}) AS __b{i}"
+                  for i, m in enumerate(moduli)])).localCheckpoint(eager=True)
         row = obs.get
         raise_invalid(row)
         return cp, row["__rows"], row["__closed"], {
@@ -3013,13 +3020,15 @@ class Engine:
         """One commit of a batch on ``snap``. A snapshot trickle runs
         four Spark jobs whatever its size: the batch checkpoint that
         carries the probe (``_checkpoint``), the merge checkpoint, and
-        ``_write_dirs``' stats-and-token aggregate and single write —
-        when ``_one_partition`` finds the merge's input small; a larger
-        merge adds the shuffle map stages of its join and aggregate.
+        ``_write_dirs``' stats-and-token aggregate and single write
+        (``upsert:checkpoint``, ``upsert:merge``, ``upsert:stats``,
+        ``upsert:write``) — when ``_one_partition`` finds the merge's
+        input small; a larger merge adds the shuffle map stages of its
+        join and aggregate, under the same names.
         The manifest flip publishes it. Returns the generation it
         published (None when nothing landed)."""
         incoming, n_in, n_closed, hits = self._checkpoint(
-            incoming, [] if snap.root is None else snap.moduli)
+            incoming, [] if snap.root is None else snap.moduli, "upsert")
         if autosnap is None:
             # True iff every incoming object is open (reference
             # sqlalchemy.py:910-915)
@@ -3102,8 +3111,9 @@ class Engine:
             # write below must see the same rows). The merge reads the
             # batch's columns of the open side and ignores the rest
             # (the read's partition keys).
-            tagged = _upsert.snapshot_merge_tagged(
-                open_rows, incoming).localCheckpoint(eager=True)
+            with self._jobs("upsert", "merge"):
+                tagged = _upsert.snapshot_merge_tagged(
+                    open_rows, incoming).localCheckpoint(eager=True)
             # snapshot-isolated commit: ONE write lands the closed rows
             # (content-token batch) and the open rows (gen-keyed batch)
             # in directories no live manifest references; the pointer
@@ -3114,7 +3124,7 @@ class Engine:
             # didn't advance). Retained history dirs count as live too:
             # overwriting one would corrupt a retained snapshot.
             rels = self._write_dirs(
-                tagged, snap, buckets, snap.timepart,
+                tagged, snap, buckets, snap.timepart, op="upsert",
                 open_batch=f"open-g{snap.gen + 1}",
                 live=self._retained_dirs(meta), one_partition=small)
             # untouched open-bucket dirs stay referenced
@@ -3189,10 +3199,11 @@ class Engine:
         sel = [*map(sql_ident, cols), "_end IS NULL AS _current"]
         union = kept.selectExpr(*sel).unionByName(
             _upsert._regen_id(incoming).selectExpr(*sel))
+        with self._jobs("history_import", "checkpoint"):
+            union = union.localCheckpoint(eager=True)
         new_rels = self._write_dirs(
-            union.localCheckpoint(eager=True), snap, buckets,
-            snap.timepart, open_batch=f"open-g{gen}",
-            closed_batch=f"hr-g{gen}",
+            union, snap, buckets, snap.timepart, op="history_import",
+            open_batch=f"open-g{gen}", closed_batch=f"hr-g{gen}",
             one_partition=self._one_partition(snap, replaced_dirs, n_in))
         return self._commit(snap, (live - replaced_dirs) | set(new_rels),
                             new_rels, schema=schema)
@@ -3269,9 +3280,10 @@ class Engine:
             # un-castable probe, which the row filter treats as
             # no-match, not an error
             df = df.withColumn("_oid", F.col("_oid").try_cast(dtype))
-        rows = (df.select(*[self._obucket(m).alias(f"b{i}")
-                            for i, m in enumerate(moduli)])
-                .distinct().collect())
+        with self._jobs("lookup", "buckets"):
+            rows = (df.select(*[self._obucket(m).alias(f"b{i}")
+                                for i, m in enumerate(moduli)])
+                    .distinct().collect())
         return sorted({r[f"b{i}"] for r in rows
                        for i in range(len(moduli))
                        if r[f"b{i}"] is not None})
@@ -3424,16 +3436,18 @@ class Engine:
                  **kw):
         """First matching row as a dict, or None (reference ``one=True``,
         ``sqlalchemy.py:769-771``)."""
-        row = self._retry_swept(
-            lambda: self.find(cube, query, **kw).first())
+        with self._jobs("find_one", "first"):
+            row = self._retry_swept(
+                lambda: self.find(cube, query, **kw).first())
         return row.asDict(recursive=True) if row is not None else None
 
     def find_scalar(self, cube: str | DataFrame, query: str | None = None,
                     **kw):
         """First column of the first matching row (reference
         ``scalar=True``, ``sqlalchemy.py:772-774``)."""
-        row = self._retry_swept(
-            lambda: self.find(cube, query, **kw).first())
+        with self._jobs("find_scalar", "first"):
+            row = self._retry_swept(
+                lambda: self.find(cube, query, **kw).first())
         return row[0] if row is not None else None
 
     def count(self, cube: str | DataFrame, query: str | None = None,
@@ -3462,9 +3476,10 @@ class Engine:
                 self._resolve(self._path(cube), generation), date != "~"))
             if n is not None:
                 return n
-        return self._retry_swept(
-            lambda: self._scoped(cube, query, date, oids=oids,
-                                 generation=generation).count())
+        with self._jobs("count", "scan"):
+            return self._retry_swept(
+                lambda: self._scoped(cube, query, date, oids=oids,
+                                     generation=generation).count())
 
     @staticmethod
     def _count_from_stats(snap: _Snapshot, open_only: bool) -> int | None:
@@ -3515,7 +3530,8 @@ class Engine:
             df = cube if isinstance(cube, DataFrame) else self.table(cube)
             return df.agg(F.max(field).alias(field)).first()[field]
 
-        return self._retry_swept(run)
+        with self._jobs("get_last_field", "max"):
+            return self._retry_swept(run)
 
     def deptree(self, cube: str | DataFrame, field: str, oids: Sequence,
                 date: str | None = None, level: int | None = None,
@@ -3531,7 +3547,8 @@ class Engine:
             fn = temporal.deptree_df if as_df else temporal.deptree
             return fn(df, field, oids, level=level, date=date)
 
-        return self._retry_swept(run)
+        with self._jobs("deptree", "closure"):
+            return self._retry_swept(run)
 
     def dfind(self, cube: str | DataFrame, fields: Iterable[str] | None = None,
               query: str | None = None, date: str | None = "~") -> DataFrame:

@@ -63,16 +63,17 @@ def _leaf_scan_bytes(df: DataFrame) -> int:
         return -1
 
 
-def _chunk_bytes(sess) -> int:
-    """``spark.metrique.cache.chunkBytes`` as a positive int — a
-    non-numeric, zero or negative setting falls back to the default
-    instead of raising inside a persist path."""
+def _chunk_bytes(sess, conf: str = _CACHE_CHUNK_CONF,
+                 default: int = _CACHE_CHUNK_DEFAULT) -> int:
+    """The chunk-size setting ``conf`` (``spark.metrique.cache.chunkBytes``
+    unless given) as a positive int — a non-numeric, zero or negative
+    setting falls back to ``default`` instead of raising inside a
+    persist or sizing path."""
     try:
-        chunk = int(sess.conf.get(_CACHE_CHUNK_CONF,
-                                  str(_CACHE_CHUNK_DEFAULT)))
+        chunk = int(sess.conf.get(conf, str(default)))
     except ValueError:
-        return _CACHE_CHUNK_DEFAULT
-    return chunk if chunk > 0 else _CACHE_CHUNK_DEFAULT
+        return default
+    return chunk if chunk > 0 else default
 
 
 def narrow_small(df: DataFrame) -> DataFrame:

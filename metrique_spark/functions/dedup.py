@@ -146,7 +146,8 @@ def spread_small_scan(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     (file-listing bytes — no job), the chunk from
     ``spark.metrique.spread.chunkBytes`` (default 32 KiB of (column-
     pruned) scan statistics per task — big enough to amortize
-    per-task overhead, small enough to engage cores on sub-MB inputs).
+    per-task overhead, small enough to engage cores on sub-MB inputs;
+    a non-numeric, zero or negative setting falls back to it).
     At real scale the input has thousands of splits ≥ cores and this is
     an exact no-op (we never coalesce), so the constant only governs
     the small-input regime; unknown/absent statistics fall back to the
@@ -171,8 +172,10 @@ def spread_small_scan(df: DataFrame, min_parts: int | None = None) -> DataFrame:
         if size <= 0 or size >= (1 << 50):  # unknown / default-huge
             target = cap
         else:
-            chunk = int(df.sparkSession.conf.get(
-                _SPREAD_CHUNK_CONF, str(_SPREAD_CHUNK_DEFAULT)))
+            from metrique_spark.functions.cache import _chunk_bytes
+
+            chunk = _chunk_bytes(df.sparkSession, _SPREAD_CHUNK_CONF,
+                                 _SPREAD_CHUNK_DEFAULT)
             target = max(1, min(cap, -(-size // chunk)))
     if target > 1 and df.rdd.getNumPartitions() < target:
         return df.repartition(target)

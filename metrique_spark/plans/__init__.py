@@ -1,6 +1,5 @@
 """Physical-plan introspection and audit assertions."""
 
-from metrique_spark.plans.metrics import StageMetricsProbe  # noqa: F401
 from metrique_spark.plans.audit import (  # noqa: F401
     executed_plan,
     static_plan,

@@ -76,7 +76,9 @@ def oracle_connection(sf_dir: str):
 def check_entry(name: str, spark, con, sf_dir: str) -> dict:
     """Run ONE ``queries()`` entry on Spark and its ``oracle_sql()`` twin
     on DuckDB; returns {"status": ok|weak|fail, "rows": n, "problems": []}.
-    Shared by the CLI below and the ``pytest -m oracle`` sweep."""
+    Shared by the CLI below and the sf0.001 sweep in
+    ``tests/test_oracle.py``, which the default test run includes (``-m
+    oracle`` runs it alone)."""
     import __spark_entry__ as entrymod
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()

@@ -27,10 +27,11 @@ manifest's own per-directory stats) per op. The claims under test:
 
 ATTRIBUTION rows (what drives a curve, not just its slope):
 
-- ``trickle_phases`` / ``point_lookup_phases``: the engine's own
-  phase accounting (manifest assemble / segment build / sweeps) plus
-  task time, so residual wall is identifiable as Spark plan/schedule
-  overhead rather than guessed;
+- ``trickle_job_task_s`` / ``point_lookup_job_task_s``: task run
+  seconds per Spark job name — the ``<op>:<action>`` description the
+  engine gives each job it runs (``upsert:merge``, ``upsert:write``
+  ...), or the section's own name for a job the harness runs — so the
+  wall no named job covers is driver-side plan/schedule/control cost;
 - ``dedup_candidate_pairs`` / ``dedup_verified_pairs`` /
   ``dedup_max_band_bucket``: the LSH candidate volume — the
   super-linear ``dedup_shuffle_bytes`` curve tracks candidate pairs
@@ -48,6 +49,7 @@ from it. Usage: python scripts/run_scaling.py [rows,rows,...]
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import sys
@@ -69,8 +71,10 @@ def main() -> None:
 
     from pyspark.sql import SparkSession, functions as F
 
+    from bench import group_stages, job_group, task_totals
     from metrique_spark.engine import Engine
     from metrique_spark.objects import stamp
+    from perfbench.tracing import StageProbe
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
@@ -87,6 +91,27 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warmup
+    probe = StageProbe(spark)
+    groups = itertools.count()
+
+    def measured(section, fn):
+        """(fn(), wall s, its stages) with fn's jobs in a fresh job
+        group described ``section``."""
+        group = f"scaling-{section}-{next(groups)}"
+        with job_group(spark, group, section):
+            t0 = time.monotonic()
+            out = fn()
+            wall = time.monotonic() - t0
+        return out, wall, group_stages(probe, group)
+
+    def task_s_by_job(stages):
+        """Task run seconds per job description."""
+        out: dict = {}
+        for s in stages:
+            d = s.get("description") or s.get("name", "")
+            out[d] = round(out.get(d, 0.0)
+                           + s.get("executorRunTime", 0) / 1e3, 3)
+        return out
 
     def bulk(n):
         df = (spark.range(n)
@@ -139,22 +164,17 @@ def main() -> None:
         from metrique_spark import temporal
         from metrique_spark.functions import dedup as _dd
         from metrique_spark.functions import similarity as _sim
-        from metrique_spark.plans.metrics import StageMetricsProbe
         from metrique_spark.streaming import events as _ev
 
-        probe = StageMetricsProbe(spark)
         out: dict = {}
 
         def run(tag, fn):
-            probe.start()
-            t0 = time.monotonic()
-            fn()
-            out[f"{tag}_s"] = round(time.monotonic() - t0, 3)
-            m = probe.finish()
+            _, wall, stages = measured(tag, fn)
+            m = task_totals(stages)
+            out[f"{tag}_s"] = round(wall, 3)
             out[f"{tag}_task_cpu_s"] = m["task_cpu_s"]
             out[f"{tag}_scan_bytes"] = m["input_bytes"]
-            out[f"{tag}_shuffle_bytes"] = (m["shuffle_read_bytes"]
-                                           + m["shuffle_write_bytes"])
+            out[f"{tag}_shuffle_bytes"] = m["shuffle_bytes"]
 
         # temporal history (prefix-sum plan) over every version of the
         # scaled cube, 60-point daily spine — expected LINEAR in
@@ -249,31 +269,19 @@ def main() -> None:
             ((eng._manifest(eng._path("c")).get("stats") or {})
              .get("bytes") or {}).values())
 
-        from metrique_spark.plans.metrics import StageMetricsProbe
-
-        tprobe = StageMetricsProbe(spark)
         trickle = []
-        tphases: dict = {}
         for i in range(3):
             before = set(eng._manifest(eng._path("c"))["dirs"])
             before_segs = seg_listing(eng, "c")
-            eng.phase_times = {}
-            tprobe.start()
-            t0 = time.monotonic()
-            eng.upsert("c", delta([i * 7 + 1, n // 2 + i],
-                                  f"2024-02-0{i + 1}", i),
-                       stamped=True)
-            wall = time.monotonic() - t0
-            tm = tprobe.finish()
+            batch = delta([i * 7 + 1, n // 2 + i], f"2024-02-0{i + 1}", i)
+            _, wall, stages = measured(
+                "trickle", lambda: eng.upsert("c", batch, stamped=True))
             if not trickle or wall < trickle[0][0]:
-                tphases = dict(eng.phase_times,
-                               task_run_s=tm["task_run_s"])
-            eng.phase_times = None
+                rec["trickle_job_task_s"] = task_s_by_job(stages)
             dirs, bts = commit_cost(eng, "c", before)
             mbts = manifest_commit_bytes(eng, "c", before_segs)
             trickle.append((wall, dirs, bts, mbts))
             trickle.sort()
-        rec["trickle_phases"] = tphases
         rec["trickle_s"] = round(min(w for w, _d, _b, _m in trickle), 3)
         rec["trickle_dirs"] = max(d for _w, d, _b, _m in trickle)
         rec["trickle_bytes"] = max(b for _w, _d, b, _m in trickle)
@@ -298,16 +306,12 @@ def main() -> None:
         rec["compact_removed"] = removed
         rec["compact_bytes"] = bts
 
-        eng.phase_times = {}
-        tprobe.start()
-        t0 = time.monotonic()
-        assert eng.find("c", oids=[n // 3]).count() == 1
-        rec["point_lookup_s"] = round(time.monotonic() - t0, 3)
-        pm = tprobe.finish()
-        rec["point_lookup_phases"] = dict(
-            eng.phase_times, task_run_s=pm["task_run_s"])
-        rec["point_lookup_scan_bytes"] = pm["input_bytes"]
-        eng.phase_times = None
+        hits, wall, stages = measured(
+            "point_lookup", lambda: eng.find("c", oids=[n // 3]).count())
+        assert hits == 1
+        rec["point_lookup_s"] = round(wall, 3)
+        rec["point_lookup_job_task_s"] = task_s_by_job(stages)
+        rec["point_lookup_scan_bytes"] = task_totals(stages)["input_bytes"]
 
         t0 = time.monotonic()
         assert eng.count("c") >= n

@@ -38,8 +38,7 @@ _OPT_IN = {"slow", "oracle_sf01"}
 def pytest_collection_modifyitems(config, items):
     # an opt-in item is skipped only when the -m expression names NONE
     # of its own markers — matched as whole identifiers, so `-m oracle`
-    # runs the (slow-marked) oracle sweep and does not count as naming
-    # oracle_sf01
+    # does not count as naming oracle_sf01
     named = set(re.findall(r"\w+", config.getoption("-m") or ""))
     for it in items:
         own = {m.name for m in it.iter_markers()}

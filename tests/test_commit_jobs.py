@@ -10,8 +10,10 @@ metrics, the merge checkpoint, one stats-and-token aggregate and one
 partitioned write. Its inputs fit one partition, so neither the merge
 join nor the aggregate has a shuffle whose map stage AQE would run as a
 job of its own. An insert runs the checkpoint, the aggregate and the
-write; compaction the same three. Building those plans costs Py4J round
-trips — one per Dataset or Column call — so their count is held too.
+write; compaction the same three. The engine names each of these jobs
+``<op>:<action>`` and leaves the caller's job description and group as
+it found them. Building those plans costs Py4J round trips — one per
+Dataset or Column call — so their count is held too.
 Also pins the token format of the content-keyed closed batch against a
 plain global aggregate."""
 
@@ -20,6 +22,7 @@ import gc
 import itertools
 import time
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -109,6 +112,75 @@ def test_trickle_upsert_and_compact_job_budget(spark, tmp_path):
     batch = batch.localCheckpoint(eager=True)
     _, n = _jobs(spark, lambda: eng.insert("c", batch, stamped=True))
     assert n <= 3, f"insert ran {n} Spark jobs"
+    assert eng.count("c") == 68
+
+
+def test_commit_jobs_are_named_and_the_callers_names_restored(spark,
+                                                              tmp_path):
+    """Every job a warm trickle upsert, an insert and a compaction run
+    under a caller's job group carries the ``<op>:<action>`` description
+    of its step, read back from the status store (which the listener
+    fills with the UI off too). After each op, after a commit that
+    raises a validation error and after one whose checkpoint job fails,
+    the caller's description and group are back in place."""
+    eng = Engine(spark, warehouse=str(tmp_path / "wh"), oid_buckets=4)
+    eng.upsert("c", _objs(spark, [(i, i) for i in range(64)],
+                          "2024-01-01"), stamped=True)
+    eng.upsert("c", _objs(spark, [(1, 101)], "2024-01-02"), stamped=True)
+    eng.insert("c", _objs(spark, [(200, 1)], "2024-01-02"), stamped=True)
+    upsert = _objs(spark, [(2, 102), (3, 103), (100, 1)],
+                   "2024-01-03").localCheckpoint(eager=True)
+    insert = _objs(spark, [(201, 1), (202, 2)],
+                   "2024-01-04").localCheckpoint(eager=True)
+    bad = stamp(spark.createDataFrame([(1, 1), (None, 2)],
+                                      "oid long, col_1 long"),
+                oid="oid", start=F.to_timestamp(F.lit("2024-01-05")))
+    failing = upsert.withColumn(
+        "col_1", F.expr("CAST(raise_error('boom') AS BIGINT)"))
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    group = f"commit-jobs-{next(_groups)}"
+    seen: set[int] = set()
+
+    def names_since_last():
+        jsc.listenerBus().waitUntilEmpty(10_000)
+        new = set(sc.statusTracker().getJobIdsForGroup(group)) - seen
+        seen.update(new)
+        out = []
+        for j in sorted(new):
+            d = jsc.statusStore().job(j).description()
+            out.append(d.get() if d.isDefined() else None)
+        return out
+
+    def callers_in_place():
+        return (sc.getLocalProperty("spark.job.description"),
+                sc.getLocalProperty("spark.jobGroup.id")) == ("caller",
+                                                              group)
+
+    sc.setJobGroup(group, "caller")
+    try:
+        for op, fn, actions in [
+                ("upsert", lambda: eng.upsert("c", upsert, stamped=True),
+                 ["checkpoint", "merge", "stats", "write"]),
+                ("insert", lambda: eng.insert("c", insert, stamped=True),
+                 ["checkpoint", "stats", "write"]),
+                ("compact", lambda: eng.compact("c"),
+                 ["checkpoint", "stats", "write"])]:
+            fn()
+            assert callers_in_place(), op
+            assert names_since_last() == [f"{op}:{a}" for a in actions]
+        with pytest.raises(ValueError, match="null _oid"):
+            eng.upsert("c", bad, stamped=True)
+        assert callers_in_place()
+        assert names_since_last() == ["upsert:checkpoint"]
+        with pytest.raises(Exception, match="boom"):
+            eng.upsert("c", failing, stamped=True)
+        assert callers_in_place()
+        assert names_since_last() == ["upsert:checkpoint"]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
     assert eng.count("c") == 68
 
 

@@ -18,10 +18,9 @@ duckdb = pytest.importorskip("duckdb")
 SF_DIR = "/root/testdata/sf0.001"
 
 pytestmark = [
+    # part of the default `pytest tests/` run (~4 min): every change is
+    # checked for paper parity; `-m oracle` runs the sweep alone
     pytest.mark.oracle,
-    # heavy (~4 min): opt-in with -m 'oracle or slow' — the default
-    # `pytest tests/` must finish inside the driver's verify window
-    pytest.mark.slow,
     pytest.mark.skipif(not os.path.isdir(SF_DIR),
                        reason="driver testdata not present"),
 ]
