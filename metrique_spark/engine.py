@@ -129,6 +129,23 @@ def _byte_size(text: str) -> int:
     return int(m[1]) << _BYTE_SHIFT[m[2]]
 
 
+@contextlib.contextmanager
+def named_jobs(spark: SparkSession, op: str, action: str):
+    """Name every Spark job the block runs ``<op>:<action>``
+    (``upsert:merge``, ``components:edges``, ...) through
+    ``spark.job.description``, which the UI, the status store and the
+    monitoring REST API's jobs and stages carry; the caller's
+    description comes back on exit, exceptions included, and its job
+    group is never touched. Three round trips per block."""
+    sc, key = spark.sparkContext, "spark.job.description"
+    prev = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, f"{op}:{action}")
+    try:
+        yield
+    finally:
+        sc.setLocalProperty(key, prev)
+
+
 def _old_format_error(path: str, what: str) -> ValueError:
     """The one refusal for a cube in an older on-disk format. A
     ValueError, so callers that rebuild on ValueError treat the cube
@@ -435,21 +452,9 @@ class Engine:
         self._readers: dict[str, tuple] = {}
         self._empties: dict[str, tuple] = {}
 
-    @contextlib.contextmanager
     def _jobs(self, op: str, action: str):
-        """Name every Spark job the block runs ``<op>:<action>``
-        (``upsert:merge``, ``compact:write``, ...) through
-        ``spark.job.description``, which the UI, the status store and
-        the monitoring REST API's jobs and stages carry; the caller's
-        description comes back on exit, exceptions included, and its
-        job group is never touched. Three round trips per block."""
-        sc, key = self.spark.sparkContext, "spark.job.description"
-        prev = sc.getLocalProperty(key)
-        sc.setLocalProperty(key, f"{op}:{action}")
-        try:
-            yield
-        finally:
-            sc.setLocalProperty(key, prev)
+        """``named_jobs`` on this Engine's session."""
+        return named_jobs(self.spark, op, action)
 
     def _exprs(self, *sql: str) -> list[Column]:
         """The ``Column`` of each SQL expression text, built once per

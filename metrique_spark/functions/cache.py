@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 
 _ATTR = "_metrique_cached_intermediates"
 _DIRS = "_metrique_scratch_dirs"
+_RDD = "_metrique_checkpoint_rdd"
 
 _CACHE_CHUNK_CONF = "spark.metrique.cache.chunkBytes"
 _CACHE_CHUNK_DEFAULT = 64 * 1024
@@ -35,15 +36,16 @@ def _leaf_scan_bytes(df: DataFrame) -> int:
     multiplied estimate of 23 GB was measured for a 2 MB feature frame),
     so the leaves are the estimate — but they do NOT bound the
     materialized size of a frame built with ``explode``, which emits
-    many rows per input row. The call sites that wrap such frames:
-    ``dedup.jaccard_pairs`` and ``dedup.minhash_dedup_pairs`` (the
-    ``shingle_table`` frame), ``dedup.minhash_lsh_candidates`` (the
-    ``banded_hashes`` rows, one per document and band) and
+    many rows per input row. The ``narrow_small`` call sites that wrap
+    such frames: ``dedup.jaccard_pairs``, ``dedup.dedup_against_index``
+    and ``dedup.minhash_dedup_pairs`` over an input too big for one
+    partition (the ``shingle_table`` frame), and
     ``similarity._pairs_within_buckets`` (the multi-probe bucket
     assignments, one row per probed bucket). There the estimate is low
     by the expansion factor, so in the small regime a partition can
     hold many times ``chunkBytes``; the core-count clamp keeps it
-    perf-only.
+    perf-only. ``dedup._one_partition`` sizes the MinHash pass's
+    input, before any explode.
     Distinct by (node, bytes): plans often scan the SAME relation through
     2–4 join branches, and counting it once per branch would quadruple
     the estimate (a same-sized different relation deduping wrongly only
@@ -104,6 +106,18 @@ def narrow_small(df: DataFrame) -> DataFrame:
     return df
 
 
+def local_checkpoint(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=False)``: the first job that reads the
+    returned frame writes its blocks and later reads share them — no
+    job of its own, and a scan that keeps ``df``'s partition count.
+    ``DataFrame.unpersist`` does not free those blocks, so the frame
+    carries its RDD for ``release`` to free. Once released, a plan
+    that reads the frame cannot run again."""
+    cp = df.localCheckpoint(eager=False)
+    setattr(cp, _RDD, cp._jdf.queryExecution().analyzed().rdd())
+    return cp
+
+
 def track(result: DataFrame, *frames: DataFrame) -> DataFrame:
     """Record persisted ``frames`` as intermediates of ``result`` so
     ``release(result)`` can unpersist them once the caller is done.
@@ -159,14 +173,20 @@ def _fs_delete(spark, path: str) -> None:
 
 
 def release(result: DataFrame) -> int:
-    """Unpersist every intermediate tracked on ``result`` and delete its
-    tracked scratch directories (idempotent; non-blocking). Returns the
-    number of frames unpersisted. Call AFTER materializing — the plan
-    recomputes from source if acted on again."""
+    """Unpersist every intermediate tracked on ``result`` (a
+    ``local_checkpoint``'s blocks included) and delete its tracked
+    scratch directories (idempotent; non-blocking). Returns the number
+    of frames unpersisted. Call AFTER materializing — the plan
+    recomputes from source if acted on again, except one that reads a
+    released ``local_checkpoint``, which cannot run again."""
     owned = getattr(result, _ATTR, [])
     for f in owned:
         try:
-            f.unpersist(blocking=False)
+            rdd = getattr(f, _RDD, None)
+            if rdd is None:
+                f.unpersist(blocking=False)
+            else:
+                rdd.unpersist(False)
         except Exception:
             pass  # session already stopped
     setattr(result, _ATTR, [])

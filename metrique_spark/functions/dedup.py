@@ -5,13 +5,19 @@ Scale design:
 - exact dedup is a hash-groupBy — one shuffle on the fingerprint, the
   minimum possible; at 100 TB this is the same plan with more partitions.
 - MinHash signatures are computed as 64 codegen'd ``min(xxhash64(h, i))``
-  aggregates over exploded shingle hashes (all JVM-side, zero Python;
+  aggregates over exploded shingle hashes, written as SQL text generated
+  once per ``(num_hashes, bands)`` (all JVM-side, zero Python;
   higher-order-function lambdas were measured ~10× slower because they
   evaluate interpreted, outside whole-stage codegen). LSH banding turns
-  all-pairs O(n²) into a join on (band, band-hash): candidate generation
-  shuffles only signature-sized rows, never document text.
-- candidate verification joins text back by id and computes exact Jaccard —
-  so output precision is exact; recall is the usual LSH bound.
+  all-pairs O(n²) into a group-by on (band, band-hash): candidate
+  generation moves only signature-sized rows, never document text.
+- candidate verification joins shingle sets back by id and computes
+  exact Jaccard — so output precision is exact; recall is the usual LSH
+  bound.
+- one plan, two widths: an input that fits one partition
+  (``_one_partition``, the rule commits use) runs the whole MinHash pass
+  and ``canonical_docs``' decoration there, with no shuffle exchange and
+  no broadcast; a larger one runs the same operators shuffled.
 - SimHash packs token hashes into a 64-bit signature via a vectorized
   pandas UDF (bit-twiddling has no clean Column form); near-dup = hamming
   distance on the signature, again banded to avoid all-pairs.
@@ -22,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from metrique_spark.functions.text import fingerprint, tokens
+from metrique_spark.functions.text import fingerprint, tokens, tokens_sql
 
 
 # ---------------------------------------------------------------------------
@@ -75,30 +81,23 @@ def dedup_exact(df: DataFrame, id_col: str = "doc_id",
 # shingles / n-gram jaccard
 
 
-def shingles_from_tokens(toks: Column, n: int) -> Column:
-    """Distinct word n-gram shingles from a (materialized) token array.
-
-    Pass a plain column reference, not the token-extraction expression —
-    ``slice`` runs once per window position, and Catalyst will NOT
-    deduplicate a heavy expression referenced from inside a lambda.
-    """
+def _shingle_sql(toks: str, n: int) -> str:
+    """Distinct word n-gram shingles of the token array ``toks`` (SQL
+    text): a sliding window over the index range, short documents
+    guarded (``sequence(0, -1)`` would count DOWN, not produce empty)."""
     if n == 1:
-        return F.array_distinct(toks)
-    # sliding window via transform over index range; guard short docs
-    # (sequence(0, -1) would count DOWN, not produce empty)
-    idx = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(0), F.size(toks) - n)
-    ).otherwise(F.expr("array()").cast("array<int>"))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, n), " "))
-    )
+        return f"array_distinct({toks})"
+    return (f"array_distinct(transform(CASE WHEN size({toks}) >= {n} THEN "
+            f"sequence(0, size({toks}) - {n}) ELSE CAST(array() AS "
+            f"array<int>) END, i -> array_join(slice({toks}, i + 1, {n}),"
+            f" ' ')))")
 
 
 def word_shingles(text_col: str, n: int = 3) -> Column:
     """Distinct word n-gram shingles of the canonical token stream.
-    Convenience form — for anything hot, materialize tokens first via
-    ``shingle_table`` so tokenization isn't re-run per shingle."""
-    return shingles_from_tokens(tokens(text_col), n)
+    Convenience form — it tokenizes once per window position; for
+    anything hot, materialize tokens first via ``shingle_table``."""
+    return F.expr(_shingle_sql(f"({tokens_sql(text_col)})", n))
 
 
 _SHUFFLE_NODE_RE = None
@@ -106,11 +105,12 @@ _SHUFFLE_NODE_RE = None
 
 def _has_exchange(df: DataFrame) -> bool:
     """Whether the OPTIMIZED logical plan contains a shuffle-inducing
-    operator — checked WITHOUT executing anything. This matters because
-    ``DataFrame.rdd`` under AQE materializes the plan's query stages,
-    i.e. RUNS the upstream shuffles as real jobs at plan-BUILD time
-    (measured: several seconds and a dozen phantom jobs per query whose
-    shingle/feature input rode through a join)."""
+    operator — checked WITHOUT executing anything. ``spread_small_scan``
+    asks before it probes ``DataFrame.rdd``, which under AQE
+    materializes the plan's query stages, i.e. RUNS the upstream
+    shuffles as real jobs at plan-BUILD time (measured: several seconds
+    and a dozen phantom jobs per query whose input rode through a
+    join)."""
     global _SHUFFLE_NODE_RE
     if _SHUFFLE_NODE_RE is None:
         import re
@@ -139,19 +139,23 @@ def spread_small_scan(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     than a flat ``cores``: per-task fixed overhead dominates tiny
     inputs, so over-spreading them burns CPU for no wall — measured at
     sf0.1 (600–800 KB inputs), width 8 beat width 32 on BOTH wall and
-    task CPU for every tokenize/hash-heavy query (minhash 11→2.6
-    CPU-s, contamination 9→2.0, ivfpq 10→2.2), because 32 tasks of
-    ~60 rows pay more in scheduling/codegen-init/GC than they win in
-    parallelism. The size comes from the optimized plan's statistics
-    (file-listing bytes — no job), the chunk from
-    ``spark.metrique.spread.chunkBytes`` (default 32 KiB of (column-
-    pruned) scan statistics per task — big enough to amortize
-    per-task overhead, small enough to engage cores on sub-MB inputs;
-    a non-numeric, zero or negative setting falls back to it).
-    At real scale the input has thousands of splits ≥ cores and this is
-    an exact no-op (we never coalesce), so the constant only governs
-    the small-input regime; unknown/absent statistics fall back to the
-    old flat-``cores`` target.
+    task CPU for every tokenize/hash-heavy query (contamination 9→2.0
+    CPU-s, ivfpq 10→2.2), because 32 tasks of ~60 rows pay more in
+    scheduling/codegen-init/GC than they win in parallelism. The size
+    comes from the optimized plan's statistics (file-listing bytes — no
+    job), the chunk from ``spark.metrique.spread.chunkBytes`` (default
+    32 KiB of (column-pruned) scan statistics per task; a non-numeric,
+    zero or negative setting falls back to it). At real scale the input
+    has thousands of splits ≥ cores and this is an exact no-op (we
+    never coalesce), so the constant only governs the small-input
+    regime; unknown/absent statistics fall back to the flat-``cores``
+    target.
+
+    Callers: ``shingle_table`` (``jaccard_pairs``, ``minhash_index``,
+    ``dedup_against_index``, and the MinHash pass over an input too big
+    for one partition — a smaller one is read into one partition
+    instead, see ``_one_partition``) and the entry module's text-feature
+    queries.
 
     Inputs that already carry a shuffle are returned UNCHANGED without
     probing: their partitioning is governed by shuffle config/AQE (never
@@ -182,17 +186,26 @@ def spread_small_scan(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     return df
 
 
+def _shingle_table(df: DataFrame, id_col: str, text_col: str, n: int,
+                   one: bool) -> DataFrame:
+    """(id, sh) of ``df`` in one partition (``one``, see
+    ``_one_partition``) or at ``spread_small_scan``'s width, with
+    tokenization and shingling in separate projection steps. The
+    two-step shape is load-bearing for performance: an alias referenced
+    many times downstream is kept materialized by CollapseProject only
+    because the producing expression is non-cheap — inlining the regexp
+    into consumers multiplies the tokenization cost by the consumer
+    count."""
+    src = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
+    src = src.coalesce(1) if one else spread_small_scan(src)
+    return (src.selectExpr("id", f"{tokens_sql('__text')} AS __toks")
+            .selectExpr("id", f"{_shingle_sql('__toks', n)} AS sh"))
+
+
 def shingle_table(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """(id, sh) projection with tokenization and shingling materialized in
-    separate projection steps. The two-step shape is load-bearing for
-    performance: an alias referenced many times downstream (64 hash lambdas,
-    16 band slices) is kept materialized by CollapseProject only because the
-    producing expression is non-cheap — inlining the regexp into consumers
-    multiplies the tokenization cost by the consumer count."""
-    src = spread_small_scan(df.select(F.col(id_col).alias("id"),
-                                      F.col(text_col).alias("__text")))
-    t = src.select("id", tokens("__text").alias("__toks"))
-    return t.select("id", shingles_from_tokens(F.col("__toks"), n).alias("sh"))
+    """(id, sh) projection of ``df`` at ``spread_small_scan``'s width
+    (see ``_shingle_table``)."""
+    return _shingle_table(df, id_col, text_col, n, False)
 
 
 def jaccard_pairs(
@@ -292,6 +305,27 @@ def minhash_signature(text_col: str, num_hashes: int = 64, shingle_n: int = 3) -
     return signature_from_shingles(word_shingles(text_col, shingle_n), num_hashes)
 
 
+_BAND_SQL: dict[tuple[int, int], str] = {}
+
+
+def _band_sql(num_hashes: int, bands: int) -> str:
+    """The aggregate text of one document's band structs: signature
+    entry i is ``min(xxhash64(h, i))`` over its shingle hashes ``h``,
+    and band b's hash is the multi-argument ``xxhash64`` of its
+    ``num_hashes/bands`` entries. Generated once per ``(num_hashes,
+    bands)`` and kept as text, which holds no JVM object."""
+    key = (num_hashes, bands)
+    if key not in _BAND_SQL:
+        r = num_hashes // bands
+        structs = ", ".join(
+            f"named_struct('band', {b}, 'bh', xxhash64("
+            + ", ".join(f"min(xxhash64(h, {b * r + j}))" for j in range(r))
+            + "))"
+            for b in range(bands))
+        _BAND_SQL[key] = f"array({structs}) AS bb"
+    return _BAND_SQL[key]
+
+
 def banded_hashes(sh: DataFrame, num_hashes: int = 64,
                   bands: int = 16) -> DataFrame:
     """(id, band, bh) LSH band rows from a ``shingle_table``. This is the
@@ -301,32 +335,67 @@ def banded_hashes(sh: DataFrame, num_hashes: int = 64,
     Signature via explode + hash-aggregate, NOT higher-order lambdas:
     transform/aggregate lambdas are interpreted per element (no
     whole-stage codegen), which measured ~10s for 5k docs. Exploding to
-    (id, shingle-hash) rows and taking ``num_hashes`` codegen'd min()
-    aggregates is the same math entirely inside Tungsten hash-agg —
-    map-side partial aggregation shrinks the shuffle to one row per doc.
+    (id, shingle-hash) rows and taking the ``num_hashes`` codegen'd min()
+    aggregates of ``_band_sql`` is the same math entirely inside Tungsten
+    hash-agg — map-side partial aggregation shrinks a shuffle to one row
+    per doc, and over one partition there is none.
     explode_outer + null-drop: see ``jaccard_pairs`` — plain explode makes
     the optimizer re-run the shingle expression below the exchange."""
-    rows_per_band = num_hashes // bands
-    hs = (sh.select("id", F.explode_outer("sh").alias("tok"))
-          .where(F.col("tok").isNotNull())
-          .select("id", F.xxhash64("tok").alias("h")))
-    sig = hs.groupBy("id").agg(
-        *[F.min(F.xxhash64(F.col("h"), F.lit(i))).alias(f"m{i}")
-          for i in range(num_hashes)]
-    )
-    # band hash = multi-arg xxhash64 over the band's signature columns
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(
-                *[F.col(f"m{b * rows_per_band + j}") for j in range(rows_per_band)]
-            ).alias("bh"),
-        )
-        for b in range(bands)
-    ]
-    return sig.select(
-        "id", F.explode(F.array(*band_structs)).alias("bb")
-    ).select("id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
+    return (sh.selectExpr("id", "explode_outer(sh) AS tok")
+            .where("tok IS NOT NULL")
+            .selectExpr("id", "xxhash64(tok) AS h")
+            .groupBy("id").agg(F.expr(_band_sql(num_hashes, bands)))
+            .selectExpr("id", "inline(bb)"))
+
+
+def _one_partition(df: DataFrame) -> bool:
+    """Whether the MinHash pass (or ``canonical_docs``) over ``df`` runs
+    in ONE partition: True when its input — the optimized plan's leaf
+    bytes (``cache._leaf_scan_bytes``) — fits
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, the rule
+    ``Engine._one_partition`` applies to commits. There the signature
+    and bucket aggregates, the candidate ``distinct``, the verify join
+    and ``canonical_docs``' decoration plan with no shuffle exchange,
+    and the job AQE runs for each exchange's map stage goes with it.
+    An input of unknown size or a larger one keeps
+    ``spread_small_scan``'s width and the shuffled plan."""
+    from metrique_spark.engine import _byte_size
+    from metrique_spark.functions.cache import _leaf_scan_bytes
+
+    size = _leaf_scan_bytes(df)
+    return 0 < size <= _byte_size(df.sparkSession.conf.get(
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+
+
+def _side(df: DataFrame, one: bool) -> DataFrame:
+    """A join's right side: in one partition a merge join, which needs
+    no exchange there, where a broadcast would run a job of its own."""
+    return df.hint("merge") if one else df
+
+
+def _lsh_candidates(sh: DataFrame, num_hashes: int, bands: int,
+                    max_band_bucket: int | None) -> DataFrame:
+    """Distinct (id_a, id_b) LSH candidates of a shingle table (see
+    ``minhash_lsh_candidates``): each (band, bh) bucket's sorted ids,
+    a bucket over ``max_band_bucket`` dropped, then every id pair of a
+    bucket — each id against the ids after it, one generated row per
+    pair, so a bucket of k ids never holds its k(k-1)/2 pairs at once.
+    One aggregate over the band rows, so they are signed once and read
+    once; a self-join on (band, bh) would read them twice, and the
+    planner sizes its output as the product of both sides, which puts
+    exchanges under the verify join even in one partition. A bucket's
+    ids are gathered (8 bytes each for bigint ids) before the cap drops
+    it."""
+    buckets = (banded_hashes(sh, num_hashes, bands)
+               .groupBy("band", "bh")
+               .agg(F.expr("array_sort(collect_list(id)) AS ids")))
+    if max_band_bucket is not None:
+        buckets = buckets.where(f"size(ids) <= {int(max_band_bucket)}")
+    return (buckets.selectExpr("ids", "posexplode(ids) AS (i, id_a)")
+            .selectExpr("id_a",
+                        "explode(slice(ids, i + 2, size(ids))) AS id_b")
+            .where("id_a < id_b")
+            .distinct())
 
 
 def minhash_lsh_candidates(
@@ -337,16 +406,15 @@ def minhash_lsh_candidates(
     bands: int = 16,
     shingle_n: int = 3,
     max_band_bucket: int | None = 100_000,
-    _shingles: DataFrame | None = None,
 ) -> DataFrame:
     """LSH candidate pairs: split the signature into ``bands`` rows of
     ``num_hashes/bands``, hash each band, group by (band, hash). Returns
-    distinct (id_a, id_b) with id_a < id_b. ``_shingles`` lets a caller
-    share one (persisted) shingle table across candidate + verify stages.
+    distinct (id_a, id_b) with id_a < id_b, at ``minhash_dedup_pairs``'
+    width (``_one_partition``).
 
     ``max_band_bucket`` drops (band, bh) buckets larger than the cap
-    before the self-join — the batch-mode twin of the incremental path's
-    guard. The blowup regime is real corpora, not an edge case: a
+    before their ids are paired — the batch-mode twin of the incremental
+    path's guard. The blowup regime is real corpora, not an edge case: a
     TEMPLATED cluster sitting just UNDER the verify threshold (half the
     shingles shared — boilerplate pages, generated docs) collides in
     some band with probability ~(j^(hashes/bands))·bands per pair, and a
@@ -358,38 +426,9 @@ def minhash_lsh_candidates(
     sub-threshold template noise by construction; genuinely identical
     docs should be removed by ``dedup_exact`` upstream, which remains
     the intended order."""
-    from metrique_spark.functions.cache import track
-
-    sh = (_shingles if _shingles is not None
-          else shingle_table(df, id_col, text_col, shingle_n))
-    banded = banded_hashes(sh, num_hashes, bands)
-    persisted = []
-    if max_band_bucket is not None:
-        # the hot-bucket count is a different plan shape from the
-        # self-join, so exchange reuse does NOT dedupe the (expensive)
-        # signature aggregation beneath both — persist the slim
-        # (id, band, bh) rows instead of computing signatures twice
-        from pyspark import StorageLevel
-
-        from metrique_spark.functions.cache import narrow_small
-
-        banded = narrow_small(banded).persist(StorageLevel.MEMORY_AND_DISK)
-        persisted.append(banded)
-        hot = (banded.groupBy("band", "bh")
-               .agg(F.count("*").alias("__n"))
-               .where(F.col("__n") > max_band_bucket)
-               .select("band", "bh"))
-        banded = banded.join(hot, ["band", "bh"], "anti")
-    return track(
-        banded.alias("a")
-        .join(banded.alias("b"),
-              (F.col("a.band") == F.col("b.band"))
-              & (F.col("a.bh") == F.col("b.bh"))
-              & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct(),
-        *persisted,
-    )
+    return _lsh_candidates(
+        _shingle_table(df, id_col, text_col, shingle_n, _one_partition(df)),
+        num_hashes, bands, max_band_bucket)
 
 
 def minhash_dedup_pairs(
@@ -405,39 +444,59 @@ def minhash_dedup_pairs(
 ) -> DataFrame:
     """MinHash-LSH candidates verified by exact Jaccard ≥ threshold.
     Precision is exact (verification step); recall follows the LSH band
-    curve. The verify join only touches candidate ids — document text is
-    shuffled once to build shingle sets for candidates.
+    curve. Verification only touches candidate ids: each candidate pair
+    meets the shingle table once per side, never document text.
 
-    The shingle table feeds three consumers (signatures + both verify
-    sides); ``persist_shingles`` materializes it once (MEMORY_AND_DISK —
-    spills rather than OOMs at scale) instead of re-tokenizing per
-    consumer — measured 2.5-3× end-to-end at sf0.1. The block is released
-    by LRU eviction / session end; pass False for one-shot pipelines that
-    must not hold executor storage."""
-    sh = shingle_table(df, id_col, text_col, shingle_n)
+    Width (``_one_partition``): an input that fits
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` is read into
+    one partition, where the whole pass plans with no shuffle exchange
+    and no broadcast, so materializing the result is one Spark job; a
+    larger one keeps ``spread_small_scan``'s width and the shuffled
+    plan. Either way the plan is built from a few SQL-text projections
+    (a few hundred Py4J round trips) and runs no job until the caller
+    acts on it.
+
+    The shingle table feeds two consumers (the signatures and the verify
+    join); ``persist_shingles`` holds it — a lazy
+    ``cache.local_checkpoint`` in one partition, a MEMORY_AND_DISK
+    persist (spills rather than OOMs at scale) otherwise — so the first
+    consumer tokenizes once and the other reads the blocks (measured
+    2.5-3× end-to-end at sf0.1, with three consumers). The result is
+    ``cache``-tracked: call ``release(result)`` after materializing it
+    to free those blocks (a released one-partition result cannot be run
+    again); pass False for one-shot pipelines that must not hold the
+    shingle table in executor storage."""
+    from pyspark import StorageLevel
+
+    from metrique_spark.functions.cache import (local_checkpoint,
+                                                narrow_small, track)
+
+    one = _one_partition(df)
+    sh = _shingle_table(df, id_col, text_col, shingle_n, one)
     tracked = []
-    if persist_shingles:
-        from pyspark import StorageLevel
-
-        from metrique_spark.functions.cache import narrow_small
-
+    if persist_shingles and one:
+        # written by the first job that reads it; read through
+        # coalesce(1), which tells the planner it is one partition (a
+        # cached scan would run a job of its own under AQE)
+        tracked.append(local_checkpoint(sh))
+        sh = tracked[0].coalesce(1)
+    elif persist_shingles:
         sh = narrow_small(sh).persist(StorageLevel.MEMORY_AND_DISK)
         tracked.append(sh)
-    from metrique_spark.functions.cache import track
-
-    cand = minhash_lsh_candidates(df, id_col, text_col, num_hashes, bands,
-                                  shingle_n, max_band_bucket=max_band_bucket,
-                                  _shingles=sh)
-    a = sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a")
-    b = sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b")
+    cand = _lsh_candidates(sh, num_hashes, bands, max_band_bucket)
+    # one join brings both shingle sets: each candidate meets the table
+    # once per side and regroups, where a second join on id_b would have
+    # a join below it, whose size the planner estimates as a product
+    # (an exchange even in one partition)
     return track(
-        cand.join(a, "id_a").join(b, "id_b")
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn("uni", F.size(F.array_union("sh_a", "sh_b")))
-        .withColumn("jaccard", F.round(F.col("inter") / F.col("uni"), 4))
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard"),
-        cand, *tracked,
+        cand.selectExpr("id_a", "id_b", "explode(array(id_a, id_b)) AS id")
+        .join(_side(sh, one), "id")
+        .groupBy("id_a", "id_b").agg(F.expr("collect_list(sh) AS s"))
+        .selectExpr("id_a", "id_b",
+                    "round(size(array_intersect(s[0], s[1]))"
+                    " / size(array_union(s[0], s[1])), 4) AS jaccard")
+        .where(F.col("jaccard") >= threshold),
+        *tracked,
     )
 
 
@@ -1016,7 +1075,12 @@ def connected_components(
     edges (~30 MB collected at 2M) is solved with driver-side union-find —
     the pair set surviving an LSH/jaccard threshold is usually a sliver of
     the corpus, and a multi-round distributed loop on a small graph is all
-    scheduling overhead. Above the threshold the distributed loop runs;
+    scheduling overhead. The edges are collected in one Spark job when
+    ``pairs`` is one partition (``components:edges``) and the labels
+    come back as a local relation (``_label_table``), so no Python
+    worker starts. Above the threshold the distributed loop runs
+    (``components:propagate``, ``components:star``) and reads ``pairs``
+    again — materialize a pair plan that is costly to recompute first;
     pass ``driver_edge_threshold=0`` to force it.
 
     Scale shape: one join + one min-aggregate per round, both shuffling on
@@ -1028,25 +1092,20 @@ def connected_components(
     small-star, which is O(log n) rounds at higher per-round volume."""
     from pyspark import StorageLevel
 
+    from metrique_spark.engine import named_jobs
+
+    spark = pairs.sparkSession
     if driver_edge_threshold:
-        # persist first: if the probe overflows the threshold we fall
-        # through to the distributed loop without recomputing the
-        # (expensive) pair generation
-        from metrique_spark.functions.cache import narrow_small
-
-        pairs = narrow_small(pairs).persist(StorageLevel.MEMORY_AND_DISK)
-        small = (pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-                 .limit(driver_edge_threshold + 1).collect())
+        # one job over a pair frame of one partition (the MinHash pass's
+        # output): the limit scans further partitions only when the
+        # first holds fewer rows than it asks for
+        with named_jobs(spark, "components", "edges"):
+            small = (pairs.select(F.col(id_a).alias("a"),
+                                  F.col(id_b).alias("b"))
+                     .limit(driver_edge_threshold + 1).collect())
         if len(small) <= driver_edge_threshold:
-            spark = pairs.sparkSession
-            id_type = pairs.schema[id_a].dataType
-            pairs.unpersist()
-            from pyspark.sql import types as T
-
-            return spark.createDataFrame(
-                _components_driver([(r["a"], r["b"]) for r in small]),
-                T.StructType([T.StructField("id", id_type),
-                              T.StructField("component", id_type)]))
+            return _label_table(spark, _components_driver(small),
+                                pairs.schema[id_a].dataType)
         # fell through: graph too big for the driver — run distributed
 
     edges = (
@@ -1056,12 +1115,6 @@ def connected_components(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)  # re-scanned every round
     )
-    labels = (
-        edges.select(F.col("src").alias("id")).distinct()
-        .withColumn("component", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
-
     def _checksum(lbl: DataFrame):
         # Type-agnostic convergence witness: the vertex set is fixed and
         # labels only ever decrease, so a round is a fixpoint iff the
@@ -1076,35 +1129,53 @@ def connected_components(
             F.sum(F.xxhash64("id", "component").cast("decimal(38,0)"))
         ).first()[0]
 
-    prev_sum = _checksum(labels)
     try:
-        for _ in range(max_iter):
-            msgs = (
-                edges.join(labels, edges.src == labels.id)
-                .select(F.col("dst").alias("id"), "component")
-            )
+        with named_jobs(spark, "components", "propagate"):
             labels = (
-                labels.unionByName(msgs)
-                .groupBy("id")
-                .agg(F.min("component").alias("component"))
+                edges.select(F.col("src").alias("id")).distinct()
+                .withColumn("component", F.col("id"))
                 .localCheckpoint(eager=True)
             )
-            new_sum = _checksum(labels)
-            if new_sum == prev_sum:
-                break
-            prev_sum = new_sum
-        else:
-            # diameter > max_iter: propagation would need diameter-many
-            # rounds (silently-wrong labels if truncated), so escalate to
-            # the alternating-star algorithm — O(log² n) rounds on any
-            # graph shape, at higher per-round volume. The common
-            # shallow near-dup graph never reaches this.
+            prev_sum = _checksum(labels)
+            for _ in range(max_iter):
+                msgs = (
+                    edges.join(labels, edges.src == labels.id)
+                    .select(F.col("dst").alias("id"), "component")
+                )
+                labels = (
+                    labels.unionByName(msgs)
+                    .groupBy("id")
+                    .agg(F.min("component").alias("component"))
+                    .localCheckpoint(eager=True)
+                )
+                new_sum = _checksum(labels)
+                if new_sum == prev_sum:
+                    return labels
+                prev_sum = new_sum
+        # diameter > max_iter: propagation would need diameter-many
+        # rounds (silently-wrong labels if truncated), so escalate to the
+        # alternating-star algorithm — O(log² n) rounds on any graph
+        # shape, at higher per-round volume. The common shallow near-dup
+        # graph never reaches this.
+        with named_jobs(spark, "components", "star"):
             return _star_components(edges)
-        return labels
     finally:
         edges.unpersist()
-        if driver_edge_threshold:
-            pairs.unpersist()
+
+
+def _label_table(spark, labels: list[tuple], id_type) -> DataFrame:
+    """The ``(id, component)`` rows of the driver path as a local
+    relation, built from an Arrow table: the JVM reads it directly, so
+    no Python worker starts (a frame built from a Python list is a
+    Python RDD that one would evaluate), and it carries a size estimate
+    the planner can place in one partition."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    t = to_arrow_type(id_type)
+    return spark.createDataFrame(pa.table(
+        {"id": pa.array([v for v, _ in labels], t),
+         "component": pa.array([c for _, c in labels], t)}))
 
 
 def canonical_docs(
@@ -1129,20 +1200,25 @@ def canonical_docs(
     map-side-combinable min-of-struct aggregate per component, never a
     window over the cluster's rows.
 
-    The decoration join is left to AQE: the components table only holds
-    docs that appear in some pair, so it usually broadcasts — but a
-    heavily-duplicated corpus can make it a large fraction of the input,
-    where a forced broadcast would OOM the executors."""
-    comp = connected_components(pairs, id_a, id_b).withColumnRenamed(
-        "id", id_col)
+    A ``df`` that fits one partition (``_one_partition``) is decorated
+    there: the component join (and the quality join) are merge joins
+    with no exchange, so counting the result runs one job after
+    ``connected_components``' edge collect. A larger one leaves the
+    joins to AQE: the components table only holds docs that appear in
+    some pair, so it usually broadcasts — but a heavily-duplicated
+    corpus can make it a large fraction of the input, where a forced
+    broadcast would OOM the executors."""
+    one = _one_partition(df)
+    keep = [id_col, *([quality_col] if quality_col else [])]
+    docs = df.select(*keep)
+    comp = connected_components(pairs, id_a, id_b).select(
+        F.col("id").alias(id_col), "component")
+    if one:
+        docs, comp = docs.coalesce(1), comp.coalesce(1)
     base = (
-        df.select(id_col, *( [quality_col] if quality_col else [] ))
-        .join(comp, id_col, "left")
-        .select(
-            id_col,
-            *( [quality_col] if quality_col else [] ),
-            F.coalesce("component", F.col(id_col)).alias("component_id"),
-        )
+        docs.join(_side(comp, one), id_col, "left")
+        .select(*keep,
+                F.coalesce("component", F.col(id_col)).alias("component_id"))
     )
     if quality_col is None:
         return base.select(
@@ -1160,7 +1236,7 @@ def canonical_docs(
         .select("component_id", F.col("m.i").alias("__keep"))
     )
     return (
-        base.join(best, "component_id")
+        base.join(_side(best, one), "component_id")
         .select(id_col, "component_id",
                 (F.col(id_col) == F.col("__keep")).alias("is_canonical"))
     )

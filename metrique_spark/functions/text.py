@@ -17,6 +17,15 @@ from pyspark.sql import functions as F
 
 TOKEN_PATTERN = r"[^\W_]+"  # unicode word runs, BPE-ish pre-tokenization
 _WS_SPLIT = r"\s+"
+_TOKEN_DELIMS = r"[\W_]+"
+_TOKEN_DELIMS_SQL = _TOKEN_DELIMS.replace("\\", "\\\\")  # SQL string escapes
+
+
+def tokens_sql(col: str) -> str:
+    """``tokens`` of the column named ``col`` as SQL text, the same
+    expression: a ``selectExpr`` builds it in one driver→JVM call,
+    where the Column form makes dozens."""
+    return f"filter(split(lower(`{col}`), '{_TOKEN_DELIMS_SQL}'), t -> t != '')"
 
 
 def tokens(text: Column | str) -> Column:
@@ -29,7 +38,7 @@ def tokens(text: Column | str) -> Column:
     extraction. This is the single hottest expression in the repo —
     every shingle/dedup/quality/chunk path starts here."""
     c = F.col(text) if isinstance(text, str) else text
-    return F.filter(F.split(F.lower(c), r"[\W_]+"), lambda x: x != "")
+    return F.filter(F.split(F.lower(c), _TOKEN_DELIMS), lambda x: x != "")
 
 
 def token_count(text: Column | str) -> Column:
@@ -165,7 +174,7 @@ def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def ngram_stream(toks: Column, n: int) -> Column:
-    """Word n-grams WITH duplicates (unlike ``dedup.shingles_from_tokens``,
+    """Word n-grams WITH duplicates (unlike ``dedup.word_shingles``,
     which set-dedups for Jaccard): repetition measures need multiplicity."""
     if n == 1:
         return toks

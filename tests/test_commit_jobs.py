@@ -14,12 +14,16 @@ write; compaction the same three. The engine names each of these jobs
 ``<op>:<action>`` and leaves the caller's job description and group as
 it found them. Building those plans costs Py4J round trips — one per
 Dataset or Column call — so their count is held too.
+The corpus-dedup pass (MinHash pairs, then ``canonical_docs``) is held
+the same way: its build's round trips, its jobs, the names of the jobs
+it runs itself, and the blocks it leaves behind.
 Also pins the token format of the content-keyed closed batch against a
 plain global aggregate."""
 
 import contextlib
 import gc
 import itertools
+import random
 import time
 
 import pytest
@@ -27,6 +31,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from metrique_spark.engine import Engine
+from metrique_spark.functions import dedup
+from metrique_spark.functions.cache import release
 from metrique_spark.objects import stamp
 from metrique_spark.xxh64 import obucket_of
 
@@ -77,6 +83,56 @@ def _round_trips(spark):
         ClientServerConnection.send_command = real
 
 
+def _all_jobs(spark, fn):
+    """Run ``fn``; return (result, the number of Spark jobs that started
+    meanwhile in any job group — a broadcast runs under its own)."""
+    jsc = spark.sparkContext._jsc.sc()
+
+    def last():
+        jsc.listenerBus().waitUntilEmpty(10_000)
+        jobs = jsc.statusStore().jobsList(None)
+        return max((jobs.apply(i).jobId() for i in range(jobs.size())),
+                   default=-1)
+
+    first = last()
+    out = fn()
+    return out, last() - first
+
+
+def _corpus(spark, path, n=160):
+    """``n`` documents of 60 words drawn from 400, every fourth a copy of
+    the one before with one word replaced: n/4 near-duplicate pairs
+    (word-set Jaccard about 0.95), read back from parquet."""
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(400)]
+    docs = []
+    for i in range(n):
+        words = ([rng.choice(vocab) for _ in range(60)] if i % 4 != 3
+                 else docs[-1][1].split())
+        if i % 4 == 3:
+            words[rng.randrange(60)] = f"x{i}"
+        docs.append((i, " ".join(words)))
+    spark.createDataFrame(docs, "doc_id long, text string").write.parquet(
+        str(path))
+    return spark.read.parquet(str(path))
+
+
+def _python_scans(df):
+    """The leaves of ``df``'s optimized plan that a Python worker
+    evaluates: an RDD scan whose lineage holds a ``PythonRDD`` (a frame
+    built from a Python list)."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return [leaf.toString() for leaf in
+            (leaves.apply(i) for i in range(leaves.size()))
+            if leaf.nodeName() == "LogicalRDD"
+            and "PythonRDD" in leaf.rdd().toDebugString()]
+
+
+def _drop_checkpoint(df):
+    """Free the blocks of ``df``, a ``localCheckpoint``'s frame."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(True)
+
+
 def _objs(spark, rows, start):
     df = spark.createDataFrame(rows, "oid long, col_1 long")
     return stamp(df, oid="oid", start=F.to_timestamp(F.lit(start)))
@@ -122,7 +178,9 @@ def test_commit_jobs_are_named_and_the_callers_names_restored(spark,
     of its step, read back from the status store (which the listener
     fills with the UI off too). After each op, after a commit that
     raises a validation error and after one whose checkpoint job fails,
-    the caller's description and group are back in place."""
+    the caller's description and group are back in place. The dedup
+    pass names the jobs it runs itself (``components:*``); the jobs of
+    the frames it returns are the caller's and carry its name."""
     eng = Engine(spark, warehouse=str(tmp_path / "wh"), oid_buckets=4)
     eng.upsert("c", _objs(spark, [(i, i) for i in range(64)],
                           "2024-01-01"), stamped=True)
@@ -137,6 +195,7 @@ def test_commit_jobs_are_named_and_the_callers_names_restored(spark,
                 oid="oid", start=F.to_timestamp(F.lit("2024-01-05")))
     failing = upsert.withColumn(
         "col_1", F.expr("CAST(raise_error('boom') AS BIGINT)"))
+    kept = _corpus(spark, tmp_path / "corpus", n=40)
 
     sc = spark.sparkContext
     jsc = sc._jsc.sc()
@@ -178,10 +237,64 @@ def test_commit_jobs_are_named_and_the_callers_names_restored(spark,
             eng.upsert("c", failing, stamped=True)
         assert callers_in_place()
         assert names_since_last() == ["upsert:checkpoint"]
+
+        pairs_df = dedup.minhash_dedup_pairs(kept)
+        assert callers_in_place() and names_since_last() == []
+        pairs = pairs_df.localCheckpoint(eager=True)
+        assert set(names_since_last()) == {"caller"}
+        release(pairs_df)
+        decisions = dedup.canonical_docs(kept, pairs)
+        assert callers_in_place()
+        assert names_since_last() == ["components:edges"]
+        assert decisions.where("is_canonical").count() == 30
+        assert set(names_since_last()) == {"caller"}
+        dedup.connected_components(pairs, max_iter=0,
+                                   driver_edge_threshold=0)
+        assert callers_in_place()
+        names = names_since_last()
+        assert set(names) == {"components:propagate", "components:star"}
+        assert names.index("components:star") > names.index(
+            "components:propagate")
+        broken = pairs.withColumn(
+            "id_a", F.expr("CAST(raise_error('boom') AS BIGINT)"))
+        with pytest.raises(Exception, match="boom"):
+            dedup.canonical_docs(kept, broken)
+        assert callers_in_place()
+        assert names_since_last() == ["components:edges"]
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert eng.count("c") == 68
+
+
+def test_dedup_pass_round_trips_jobs_and_blocks(spark, tmp_path):
+    """The corpus-dedup pass over 160 documents that fit one partition:
+    building ``minhash_dedup_pairs`` makes at most 300 round trips, the
+    build plus the pairs' checkpoint at most 8 Spark jobs, and
+    ``canonical_docs(...).count()`` at most 3, with no scan a Python
+    worker evaluates. Over three passes, ``release`` leaves no more
+    persisted RDDs than there were before the first."""
+    kept = _corpus(spark, tmp_path / "corpus")
+    sc = spark.sparkContext
+    persisted = sc._jsc.getPersistentRDDs().size()
+    for _ in range(3):
+        with _round_trips(spark) as n:
+            pairs_df = dedup.minhash_dedup_pairs(kept)
+        assert n[0] <= 300, f"minhash_dedup_pairs made {n[0]} round trips"
+        pairs, jobs = _all_jobs(spark,
+                                lambda: pairs_df.localCheckpoint(eager=True))
+        assert jobs <= 8, f"the pairs ran {jobs} Spark jobs"
+        assert pairs.count() == 40
+        release(pairs_df)
+
+        decisions = dedup.canonical_docs(kept, pairs)
+        assert _python_scans(decisions) == []
+        keep, jobs = _all_jobs(spark, lambda: dedup.canonical_docs(
+            kept, pairs).where("is_canonical").count())
+        assert jobs <= 3, f"canonical_docs ran {jobs} Spark jobs"
+        assert keep == 120
+        _drop_checkpoint(pairs)
+        assert sc._jsc.getPersistentRDDs().size() <= persisted
 
 
 def test_trickle_commit_stamp_and_lookup_round_trips(spark, tmp_path):

@@ -1,9 +1,12 @@
 """Dedup operator tests: exact, jaccard, minhash-lsh, simhash."""
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
 from metrique_spark.functions import dedup
+from metrique_spark.functions.cache import release
 
 
 @pytest.fixture()
@@ -611,3 +614,92 @@ def test_paragraph_dedup_metachar_separator(spark):
     [r] = paragraph_dedup(d, sep="|").collect()
     assert (r["n_paras"], r["n_kept"]) == (3, 2)
     assert r["text"] == "dup|unique"
+
+
+# (id, band) -> bh of ``minhash_index`` at 64 hashes / 16 bands over the
+# three documents below, shingle_n=3. Stored MinHash indexes and
+# ``stream_dedup_sink`` state are probed with these values, so any
+# rewrite of ``banded_hashes`` must reproduce them bit for bit.
+_GOLDEN_BANDS = {
+    1: [7776836377844061199, 2408444987345815659, 451917761382874011,
+        -6772696258096642821, -8708777148605146514, 1577596239821168601,
+        -7095381799102770605, -967493415922894680, 5493753364445595597,
+        1462660151868318977, -3375526597629425417, 7504116577985199722,
+        -4906201715138207662, 1357427509612459753, -900487949999015188,
+        9070548363477872606],
+    2: [-5808487585321531036, 4965044772731184687, 4162274907815840662,
+        -8093602992704577760, -9006205337412908508, -7020754330416277911,
+        2067937724575946397, -2775361921156109654, 5866048184707624477,
+        -629530070566181950, 80520452624179813, 364031491221924488,
+        -4906201715138207662, 4009530985573185863, 5238131942271340242,
+        6199997904460411545],
+    3: [-2861673754909619170, 693583945721069499, 4109752291645165940,
+        7352410483096587537, -6901745387610387109, 1856817238525854982,
+        -3695373516803283267, -5696333030906426798, -6989417311489076767,
+        -7813684175827474241, 148068534099494770, -32080956852424731,
+        4803264319084969588, 1280337588294446326, 6993345206735192135,
+        -8807653041939132539],
+}
+
+
+@pytest.mark.parametrize("num_hashes,bands", [(64, 16), (32, 8)])
+def test_minhash_index_band_hashes_are_pinned(spark, num_hashes, bands):
+    """Band hashes equal the pinned values. Both settings put 4 hashes
+    in a band, so the 32/8 index is the first 8 bands of the 64/16 one."""
+    df = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog near the river "
+             "bank"),
+         (2, "The quick brown fox jumps over the lazy cat near the river "
+             "bank!"),
+         (3, "spark engines plan distributed queries at scale")],
+        "doc_id long, text string")
+    got = sorted((r["id"], r["band"], r["bh"]) for r in dedup.minhash_index(
+        df, num_hashes=num_hashes, bands=bands).collect())
+    assert got == [(i, b, bhs[b]) for i, bhs in sorted(_GOLDEN_BANDS.items())
+                   for b in range(bands)]
+
+
+def test_minhash_pass_one_partition_matches_the_shuffled_plan(spark,
+                                                              tmp_path):
+    """An input that fits ``advisoryPartitionSizeInBytes`` runs the
+    MinHash pass and ``canonical_docs`` with no exchange; below the
+    input's size the shuffled plan runs. Both give the same candidates,
+    pairs and keep/drop decisions, with and without a quality column."""
+    rng = random.Random(3)
+    rows = []
+    for i in range(48):
+        words = (rows[-1][1].split()[:29] + [f"x{i}"] if i % 3 == 2
+                 else [f"w{rng.randrange(400)}" for _ in range(30)])
+        rows.append((i, " ".join(words), float(i % 5)))
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(rows, "doc_id long, text string, q double") \
+        .write.parquet(path)
+    docs = spark.read.parquet(path)
+
+    def run():
+        cand = dedup.minhash_lsh_candidates(docs, shingle_n=1)
+        pairs = dedup.minhash_dedup_pairs(docs)
+        plan = pairs.localCheckpoint(eager=True)
+        shuffled = "Exchange" in pairs._jdf.queryExecution() \
+            .executedPlan().toString()
+        out = (sorted(map(tuple, cand.collect())),
+               sorted(map(tuple, plan.collect())),
+               sorted(map(tuple, dedup.canonical_docs(docs, plan)
+                          .collect())),
+               sorted(map(tuple, dedup.canonical_docs(
+                   docs, plan, quality_col="q").collect())))
+        release(pairs)
+        return shuffled, out
+
+    one_shuffled, one = run()
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    default = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        many_shuffled, many = run()
+    finally:
+        spark.conf.set(key, default)
+    assert (one_shuffled, many_shuffled) == (False, True)
+    assert one == many
+    assert len(one[1]) == 16 and all(j >= 0.8 for _, _, j in one[1])
+    assert sum(r[2] for r in one[2]) == 32
