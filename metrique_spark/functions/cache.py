@@ -29,10 +29,11 @@ _CACHE_CHUNK_CONF = "spark.metrique.cache.chunkBytes"
 _CACHE_CHUNK_DEFAULT = 64 * 1024
 
 
-def _leaf_scan_bytes(df: DataFrame) -> int:
+def _leaf_scan_bytes(df: DataFrame, kinds: tuple[str, ...] = ()) -> int:
     """Summed byte statistics of the OPTIMIZED plan's DISTINCT leaf
     relations (file-listing numbers — reliable, no job), or -1 when any
-    leaf is unknown. Post-join/aggregate stats are useless for sizing (a
+    leaf is unknown, or, given ``kinds``, is a node of no kind named
+    there. Post-join/aggregate stats are useless for sizing (a
     multiplied estimate of 23 GB was measured for a 2 MB feature frame),
     so the leaves are the estimate — but they do NOT bound the
     materialized size of a frame built with ``explode``, which emits
@@ -45,7 +46,8 @@ def _leaf_scan_bytes(df: DataFrame) -> int:
     by the expansion factor, so in the small regime a partition can
     hold many times ``chunkBytes``; the core-count clamp keeps it
     perf-only. ``dedup._one_partition`` sizes the MinHash pass's
-    input, before any explode.
+    input, before any explode, from the leaves whose figure measures
+    their data (``kinds``).
     Distinct by (node, bytes): plans often scan the SAME relation through
     2–4 join branches, and counting it once per branch would quadruple
     the estimate (a same-sized different relation deduping wrongly only
@@ -56,10 +58,13 @@ def _leaf_scan_bytes(df: DataFrame) -> int:
         seen = set()
         for i in range(leaves.size()):
             leaf = leaves.apply(i)
+            name = leaf.nodeName()
+            if kinds and name not in kinds:
+                return -1
             s = int(leaf.stats().sizeInBytes())
             if s <= 0 or s >= (1 << 50):
                 return -1
-            seen.add((leaf.nodeName(), s))
+            seen.add((name, s))
         return sum(s for _, s in seen)
     except Exception:
         return -1
@@ -111,8 +116,11 @@ def local_checkpoint(df: DataFrame) -> DataFrame:
     returned frame writes its blocks and later reads share them — no
     job of its own, and a scan that keeps ``df``'s partition count.
     ``DataFrame.unpersist`` does not free those blocks, so the frame
-    carries its RDD for ``release`` to free. Once released, a plan
-    that reads the frame cannot run again."""
+    carries its RDD for ``release`` to free. The blocks are not fault
+    tolerant: Spark cannot recompute them, so a job that reads the
+    frame fails when the executor holding one is lost, and once
+    ``release`` frees them, acting on a plan that reads the frame
+    raises."""
     cp = df.localCheckpoint(eager=False)
     setattr(cp, _RDD, cp._jdf.queryExecution().analyzed().rdd())
     return cp
@@ -178,7 +186,7 @@ def release(result: DataFrame) -> int:
     scratch directories (idempotent; non-blocking). Returns the number
     of frames unpersisted. Call AFTER materializing — the plan
     recomputes from source if acted on again, except one that reads a
-    released ``local_checkpoint``, which cannot run again."""
+    released ``local_checkpoint``: acting on that raises."""
     owned = getattr(result, _ATTR, [])
     for f in owned:
         try:

@@ -14,10 +14,11 @@ Scale design:
 - candidate verification joins shingle sets back by id and computes
   exact Jaccard — so output precision is exact; recall is the usual LSH
   bound.
-- one plan, two widths: an input that fits one partition
-  (``_one_partition``, the rule commits use) runs the whole MinHash pass
-  and ``canonical_docs``' decoration there, with no shuffle exchange and
-  no broadcast; a larger one runs the same operators shuffled.
+- one plan, two widths: an input whose measured size is small
+  (``_one_partition``) runs the whole MinHash pass and
+  ``canonical_docs``' decoration in one partition, with no shuffle
+  exchange and no broadcast; a larger one, or one of unknown size, runs
+  the same operators shuffled.
 - SimHash packs token hashes into a 64-bit signature via a vectorized
   pandas UDF (bit-twiddling has no clean Column form); near-dup = hamming
   distance on the signature, again banded to avoid all-pairs.
@@ -348,23 +349,42 @@ def banded_hashes(sh: DataFrame, num_hashes: int = 64,
             .selectExpr("id", "inline(bb)"))
 
 
+# Leaves whose byte statistic measures their data: file scans (on-disk
+# bytes), checkpoints and caches (the statistic of the plan they hold). A
+# ``Range`` or a local relation counts a type's default size per row
+# (8 bytes a bigint, 20 a string), whatever text the plan builds.
+_SIZED_LEAVES = ("LogicalRelation", "HiveTableRelation",
+                 "DataSourceV2Relation", "DataSourceV2ScanRelation",
+                 "LogicalRDD", "InMemoryRelation")
+# Input bytes up to which the pass runs in one partition: the largest
+# measured size at which one partition still beat the shuffled plan on
+# wall time at both 2 and 4 task slots. Measured on a 4-vCPU host over
+# ``perfbench``'s 80-word corpus read from parquet (1.3 on-disk bytes
+# per text byte), warm MinHash pairs: at 1.7 MB one partition took
+# 0.68-0.87 s against 0.96-1.07 s shuffled at local[4] (0.71-0.91 s
+# against 1.06-1.74 s at local[2]); at 6.8 MB, 1.72-1.82 s against
+# 1.32-1.41 s at local[4] (1.66-2.46 s against 2.40-2.68 s at
+# local[2]). One partition used less engine CPU at every size up to
+# 27 MB.
+_ONE_PARTITION_BYTES = 2 << 20
+
+
 def _one_partition(df: DataFrame) -> bool:
     """Whether the MinHash pass (or ``canonical_docs``) over ``df`` runs
-    in ONE partition: True when its input — the optimized plan's leaf
-    bytes (``cache._leaf_scan_bytes``) — fits
-    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, the rule
-    ``Engine._one_partition`` applies to commits. There the signature
-    and bucket aggregates, the candidate ``distinct``, the verify join
-    and ``canonical_docs``' decoration plan with no shuffle exchange,
-    and the job AQE runs for each exchange's map stage goes with it.
-    An input of unknown size or a larger one keeps
-    ``spread_small_scan``'s width and the shuffled plan."""
-    from metrique_spark.engine import _byte_size
+    in ONE partition: True when the optimized plan's leaf bytes
+    (``cache._leaf_scan_bytes`` over ``_SIZED_LEAVES``) are at most
+    ``_ONE_PARTITION_BYTES``. There the signature and bucket
+    aggregates, the candidate ``distinct``, the verify join and
+    ``canonical_docs``' decoration plan with no shuffle exchange, and
+    the job AQE runs for each exchange's map stage goes with it. An
+    input of unknown size — any other leaf, a ``Range`` or a local
+    relation among them — or a larger one keeps ``spread_small_scan``'s
+    width and the shuffled plan. A leaf's bytes can still understate
+    the text: compressed parquet, or a checkpoint of a plan that
+    generated its text from a ``Range``."""
     from metrique_spark.functions.cache import _leaf_scan_bytes
 
-    size = _leaf_scan_bytes(df)
-    return 0 < size <= _byte_size(df.sparkSession.conf.get(
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    return 0 < _leaf_scan_bytes(df, _SIZED_LEAVES) <= _ONE_PARTITION_BYTES
 
 
 def _side(df: DataFrame, one: bool) -> DataFrame:
@@ -447,25 +467,30 @@ def minhash_dedup_pairs(
     curve. Verification only touches candidate ids: each candidate pair
     meets the shingle table once per side, never document text.
 
-    Width (``_one_partition``): an input that fits
-    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` is read into
-    one partition, where the whole pass plans with no shuffle exchange
-    and no broadcast, so materializing the result is one Spark job; a
-    larger one keeps ``spread_small_scan``'s width and the shuffled
+    Width (``_one_partition``): an input whose leaves measure at most
+    ``_ONE_PARTITION_BYTES`` is read into one partition, where the
+    whole pass plans with no shuffle exchange and no broadcast, so
+    materializing the result is one Spark job; a larger one, or one of
+    unknown size, keeps ``spread_small_scan``'s width and the shuffled
     plan. Either way the plan is built from a few SQL-text projections
     (a few hundred Py4J round trips) and runs no job until the caller
-    acts on it.
+    acts on it. Ids need not be unique: a pair whose id several input
+    rows share is verified once per pair of rows.
 
     The shingle table feeds two consumers (the signatures and the verify
     join); ``persist_shingles`` holds it — a lazy
     ``cache.local_checkpoint`` in one partition, a MEMORY_AND_DISK
     persist (spills rather than OOMs at scale) otherwise — so the first
     consumer tokenizes once and the other reads the blocks (measured
-    2.5-3× end-to-end at sf0.1, with three consumers). The result is
+    2.5-3× end-to-end at sf0.1, with three consumers). The one-partition
+    blocks are not fault tolerant: Spark cannot recompute a local
+    checkpoint, so losing the executor that holds them (preemption,
+    dynamic allocation) fails the job that reads the result, where the
+    persisted table would be recomputed. The result is
     ``cache``-tracked: call ``release(result)`` after materializing it
-    to free those blocks (a released one-partition result cannot be run
-    again); pass False for one-shot pipelines that must not hold the
-    shingle table in executor storage."""
+    to free those blocks; acting on a released one-partition result
+    raises, it does not recompute. Pass False for one-shot pipelines
+    that must not hold the shingle table in executor storage."""
     from pyspark import StorageLevel
 
     from metrique_spark.functions.cache import (local_checkpoint,
@@ -487,14 +512,20 @@ def minhash_dedup_pairs(
     # one join brings both shingle sets: each candidate meets the table
     # once per side and regroups, where a second join on id_b would have
     # a join below it, whose size the planner estimates as a product
-    # (an exchange even in one partition)
+    # (an exchange even in one partition). Each side keeps a list, so an
+    # id that several input rows share is verified once per pair of
+    # rows, as two joins would
     return track(
         cand.selectExpr("id_a", "id_b", "explode(array(id_a, id_b)) AS id")
         .join(_side(sh, one), "id")
-        .groupBy("id_a", "id_b").agg(F.expr("collect_list(sh) AS s"))
+        .groupBy("id_a", "id_b")
+        .agg(F.expr("collect_list(IF(id = id_a, sh, NULL)) AS sa"),
+             F.expr("collect_list(IF(id = id_b, sh, NULL)) AS sb"))
+        .selectExpr("id_a", "id_b", "explode(sa) AS a", "sb")
+        .selectExpr("id_a", "id_b", "a", "explode(sb) AS b")
         .selectExpr("id_a", "id_b",
-                    "round(size(array_intersect(s[0], s[1]))"
-                    " / size(array_union(s[0], s[1])), 4) AS jaccard")
+                    "round(size(array_intersect(a, b))"
+                    " / size(array_union(a, b)), 4) AS jaccard")
         .where(F.col("jaccard") >= threshold),
         *tracked,
     )

@@ -36,9 +36,12 @@ def tokens(text: Column | str) -> Column:
     the DuckDB oracles keep the extract-all form) and measured ~25%
     faster: split scans delimiter runs without per-match group
     extraction. This is the single hottest expression in the repo —
-    every shingle/dedup/quality/chunk path starts here."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.filter(F.split(F.lower(c), _TOKEN_DELIMS), lambda x: x != "")
+    every shingle/dedup/quality/chunk path starts here. A column name
+    builds it from ``tokens_sql``, the one SQL form."""
+    if isinstance(text, str):
+        return F.expr(tokens_sql(text))
+    return F.filter(F.split(F.lower(text), _TOKEN_DELIMS),
+                    lambda x: x != "")
 
 
 def token_count(text: Column | str) -> Column:

@@ -659,10 +659,10 @@ def test_minhash_index_band_hashes_are_pinned(spark, num_hashes, bands):
                    for b in range(bands)]
 
 
-def test_minhash_pass_one_partition_matches_the_shuffled_plan(spark,
-                                                              tmp_path):
-    """An input that fits ``advisoryPartitionSizeInBytes`` runs the
-    MinHash pass and ``canonical_docs`` with no exchange; below the
+def test_minhash_pass_one_partition_matches_the_shuffled_plan(
+        spark, tmp_path, monkeypatch):
+    """An input within ``_ONE_PARTITION_BYTES`` runs the MinHash pass
+    and ``canonical_docs`` with no exchange; with the bound below the
     input's size the shuffled plan runs. Both give the same candidates,
     pairs and keep/drop decisions, with and without a quality column."""
     rng = random.Random(3)
@@ -692,14 +692,84 @@ def test_minhash_pass_one_partition_matches_the_shuffled_plan(spark,
         return shuffled, out
 
     one_shuffled, one = run()
-    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    default = spark.conf.get(key)
-    spark.conf.set(key, "1k")
-    try:
-        many_shuffled, many = run()
-    finally:
-        spark.conf.set(key, default)
+    monkeypatch.setattr(dedup, "_ONE_PARTITION_BYTES", 1024)
+    many_shuffled, many = run()
     assert (one_shuffled, many_shuffled) == (False, True)
     assert one == many
     assert len(one[1]) == 16 and all(j >= 0.8 for _, _, j in one[1])
     assert sum(r[2] for r in one[2]) == 32
+
+
+@pytest.mark.parametrize("bound", [None, 0], ids=["one-partition",
+                                                  "shuffled"])
+def test_minhash_pairs_verify_every_row_of_a_shared_id(spark, tmp_path,
+                                                       monkeypatch, bound):
+    """Two input rows under one id are each verified against the other
+    side of a pair, one output row per pair of rows, at both widths."""
+    base = [f"w{i}" for i in range(30)]
+    near = base[:-1] + ["z"]                    # Jaccard 29/31 to base
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(1, " ".join(base)), (1, " ".join(near)), (2, " ".join(base)),
+         (3, " ".join(f"u{i}" for i in range(30)))],
+        "doc_id long, text string").write.parquet(path)
+    docs = spark.read.parquet(path)
+    if bound is not None:
+        monkeypatch.setattr(dedup, "_ONE_PARTITION_BYTES", bound)
+    assert dedup._one_partition(docs) == (bound is None)
+    pairs = dedup.minhash_dedup_pairs(docs)
+    got = sorted(map(tuple, pairs.collect()))
+    release(pairs)
+    assert got == [(1, 2, 0.9355), (1, 2, 1.0)]
+
+
+def test_one_partition_sizes_only_measured_leaves(spark, tmp_path):
+    """A parquet input and its checkpoint are sized from their bytes; a
+    frame built on ``Range`` or a local relation counts a default size
+    per row, so its size is unknown and the pass takes the shuffled
+    plan."""
+    import pandas as pd
+
+    path = str(tmp_path / "docs")
+    rows = [(i, "word " * 100) for i in range(50)]
+    spark.createDataFrame(rows, "doc_id long, text string") \
+        .write.parquet(path)
+    docs = spark.read.parquet(path)
+    assert dedup._one_partition(docs)
+    assert dedup._one_partition(docs.localCheckpoint(eager=True))
+    generated = spark.range(50).select(
+        F.col("id").alias("doc_id"),
+        F.repeat(F.lit("word "), 100).alias("text"))
+    local = spark.createDataFrame(pd.DataFrame(rows,
+                                               columns=["doc_id", "text"]))
+    assert not dedup._one_partition(generated)
+    assert not dedup._one_partition(local)
+
+
+def test_released_one_partition_pairs_raise(spark, tmp_path):
+    """The one-partition shingle table is a local checkpoint, which
+    Spark cannot recompute: once ``release`` frees it, acting on the
+    pairs again raises instead of re-reading the source."""
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(1, "a b c d e f g h"), (2, "a b c d e f g h i")],
+        "doc_id long, text string").write.parquet(path)
+    pairs = dedup.minhash_dedup_pairs(spark.read.parquet(path))
+    assert pairs.count() == 1
+    assert release(pairs) == 1
+    with pytest.raises(Exception, match="(?i)checkpoint"):
+        pairs.count()
+
+
+def test_tokens_name_and_column_forms_agree(spark):
+    """``tokens`` of a column name (built from ``tokens_sql``) and of a
+    Column give the same tokens, edge cases included."""
+    from metrique_spark.functions.text import tokens
+
+    df = spark.createDataFrame(
+        [("The quick_brown FOX, jumps!",), ("",), ("___ ...",), (None,),
+         ("Ünïcode wörds 42x",)], "t string")
+    got = df.select(tokens("t").alias("a"),
+                    tokens(F.col("t")).alias("b")).collect()
+    assert [r["a"] for r in got] == [r["b"] for r in got]
+    assert got[0]["a"] == ["the", "quick", "brown", "fox", "jumps"]
